@@ -20,7 +20,7 @@ object SparkEntry {
     // TIMESTAMP(NANOS)-as-long and native timestamp[us] (→ timestamp_ntz);
     // every query site expects the epoch-nanos long, so normalize at the
     // single load boundary (no-op projection for non-ts tables).
-    graft.ops.EventTime.normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
+    graft.ops.EventTime.normalizeTs(graft.sources.Tables.load(s, dir, name))
 
   /** Flagship: stats dashboard over lineitem — every reference aggregate in
     * one pass (single shuffle, all map-side combinable). */

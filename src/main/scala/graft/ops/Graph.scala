@@ -46,9 +46,12 @@ object Graph {
    * Scale shape: per iteration, one join of the (src, dst) edge list
    * against the O(|V|) rank table (both hash-partitioned on the join
    * key) + one dst-keyed sum — the classic two-shuffle PR round, no
-   * broadcast of anything unbounded. `localCheckpoint` truncates
-   * lineage per round (same as CC). Nodes outside `pairs` are excluded
-   * (an isolated node's rank is the constant 150 000 — uninformative).
+   * broadcast of anything unbounded. The edge list and its degree join
+   * are checkpointed once, before the loop; inside it [[ckptEvery]]
+   * truncates lineage only every 8th round, so the default iters=5 runs
+   * as one lazy plan with no barrier in the loop. Nodes outside `pairs`
+   * are excluded (an isolated node's rank is the constant 150 000 —
+   * uninformative).
    *
    * `pairs` (id1, id2) is treated UNDIRECTED: each pair contributes
    * both directed edges; deg(u) = #neighbors of u.

@@ -2530,10 +2530,9 @@ object TextOps {
     * drift). */
   def naiveBayesFromCounts(counts: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val cnts = counts
-    val tl = cnts.filter(col("kind") === "tok")
+    val tl = counts.filter(col("kind") === "tok")
       .select(col("label"), col("token"), col("c"))
-    val nd = cnts.filter(col("kind") === "docs")
+    val nd = counts.filter(col("kind") === "docs")
       .select(col("label"), col("c").as("nd"))
     val lt = tl.groupBy(col("label")).agg(sum(col("c")).as("n_l"))
     val v = tl.select(col("token")).distinct()

@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /**
  * Table IO for the graft engine: parquet loaders plus bucketed writes —
@@ -16,9 +18,83 @@ import org.apache.spark.sql.functions.col
  */
 object Tables {
 
-  /** Load one testdata table. */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /**
+   * Load the parquet table `dir/name.parquet` (one file or a directory of
+   * part files). This is graft's one parquet load boundary: every
+   * [[graft.SparkEntry]] gate and [[graft.api.TypedPipeline.load]] read
+   * their tables through it.
+   *
+   * It memoizes the inferred schema, so that a table costs one inference
+   * job per read of new files, not one per load. Spark infers a parquet
+   * schema with a job (a parallel footer read plus a Hadoop-conf
+   * broadcast), even for a one-file table, so a plain `spark.read.parquet`
+   * runs a job while the DataFrame is still being built. The first load of
+   * a key runs Spark's own inference, unchanged; every later load passes
+   * the memoized schema to `spark.read.schema(..)`, which runs no job.
+   *
+   * The memo key is:
+   *  - the qualified path;
+   *  - (path, length, mtime) of every file under it, from one driver-side
+   *    listing, so a rewritten table is inferred again;
+   *  - the session's values of the confs that change inference
+   *    (`InferenceConfs`), so a changed conf is inferred again.
+   *
+   * Only the `StructType` is kept. Each call still builds a fresh relation
+   * (fresh exprIds, fresh file index), so two loads of one table self-join
+   * and see new files exactly as two plain reads do.
+   */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path) // nothing there: Spark reports it
+      case Some(key) =>
+        schemas.synchronized(Option(schemas.get(key))) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.synchronized(schemas.put(key, df.schema))
+            df
+        }
+    }
+  }
+
+  /** The SQL confs that parquet schema inference reads. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** Memoized schemas kept; past it the least recently used goes. */
+  private val MaxSchemas = 256
+
+  private final case class SchemaKey(
+      path: String, files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private val schemas =
+    new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+        size() > MaxSchemas
+    }
+
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(SchemaKey(fs.makeQualified(p).toString, files.result().sortBy(_._1),
+        InferenceConfs.map(spark.conf.getOption)))
+    }
+  }
 
   /**
    * Write `df` as a bucketed, sorted parquet table registered in the

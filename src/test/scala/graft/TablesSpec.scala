@@ -7,6 +7,82 @@ import graft.sources.Tables
 
 class TablesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+  private val testdata = SparkTestSession.sf0001
+
+  private def plainRead(dir: String, name: String) =
+    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** The executed plan with expression ids blanked out. */
+  private def normalizedPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString.replaceAll("#\\d+", "#")
+
+  test("load: the first load infers the schema with a job, a second load runs none") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-load-jobs").toString
+    (1L to 100L).map(i => (i, s"v$i")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
+    val jobs = SparkTestSession.jobsPerKey(Seq("miss", "hit"))(_ =>
+      Tables.load(spark, dir, "t"))
+    assert(jobs("miss") >= 1, s"a first load runs Spark's inference: $jobs")
+    assert(jobs("hit") == 0, s"a memoized load must run no job: $jobs")
+  }
+
+  test("load: a memoized load equals spark.read.parquet in schema and plan") {
+    for (name <- Seq("lineitem", "events", "documents", "embeddings", "orders")) {
+      Tables.load(spark, testdata, name)
+      val hit = Tables.load(spark, testdata, name)
+      val plain = plainRead(testdata, name)
+      assert(hit.schema == plain.schema, name)
+      assert(normalizedPlan(hit) == normalizedPlan(plain), name)
+    }
+  }
+
+  test("load: two loads of one table carry disjoint expression ids") {
+    val a = Tables.load(spark, testdata, "orders")
+    val b = Tables.load(spark, testdata, "orders")
+    val ids = a.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert(b.queryExecution.analyzed.output.forall(e => !ids(e.exprId)))
+    val selfJoin = a.join(b, a("o_orderkey") === b("o_orderkey"))
+    assert(selfJoin.count() == plainRead(testdata, "orders").count())
+  }
+
+  test("load: a table rewritten in place is inferred again") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-load-rewrite").toString
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
+    Tables.load(spark, dir, "t")
+    assert(Tables.load(spark, dir, "t").schema.fieldNames.toSeq == Seq("id", "s"))
+    Seq((2, 3.0, true)).toDF("k", "x", "flag")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val after = Tables.load(spark, dir, "t")
+    assert(after.schema == plainRead(dir, "t").schema)
+    assert(after.schema.fieldNames.toSeq == Seq("k", "x", "flag"))
+    val rows = after.collect().toSeq
+    assert(rows.map(r => (r.getInt(0), r.getDouble(1), r.getBoolean(2))) == Seq((2, 3.0, true)))
+  }
+
+  test("load: the ts type of events follows the session's inference confs") {
+    val confs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.parquet.inferTimestampNTZ.enabled")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    def tsType(df: org.apache.spark.sql.DataFrame) = df.schema("ts").dataType
+    try {
+      val seen = for (nanosAsLong <- Seq("true", "false"); ntz <- Seq("true", "false")) yield {
+        spark.conf.set(confs(0), nanosAsLong)
+        spark.conf.set(confs(1), ntz)
+        Tables.load(spark, testdata, "events")
+        val hit = tsType(Tables.load(spark, testdata, "events"))
+        assert(hit == tsType(plainRead(testdata, "events")),
+          s"nanosAsLong=$nanosAsLong ntz=$ntz")
+        hit
+      }
+      // the confs do change the inferred type, so a memo that ignored
+      // them would have returned a stale one
+      assert(seen.distinct.size > 1, seen)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   test("cell-partitioned corpus: an IVF cell lookup prunes the scan to one partition") {
     import spark.implicits._
