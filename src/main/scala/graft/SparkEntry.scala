@@ -172,7 +172,16 @@ object SparkEntry {
           .otherwise(lit("")),
         lit("</body></html>")).as("html"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The gate maps are built through this instead of `Map(...)`, which
+    * silently keeps the last of two entries under one key. */
+  private[graft] def uniqueKeys[V](entries: (String, V)*): Map[String, V] = {
+    val repeated = entries.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
+    require(repeated.isEmpty,
+      s"defined more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = uniqueKeys(
     // ── reference surface ───────────────────────────────────────────────
     "q_mode_string" -> ((s, dir) =>
       t(s, dir, "lineitem").agg(
@@ -356,17 +365,6 @@ object SparkEntry {
             / 1000000.0).as("sum_disc_price"),
           round(sum(col("l_quantity")) / count(lit(1)), 6).as("avg_qty"),
           count(lit(1)).as("count_order"))),
-
-    "q_tpch_q6" -> ((s, dir) =>
-      // the classic pushdown anchor: every predicate reaches the parquet
-      // scan (PushedFilters), one partial-agg exchange, integer-cents sum
-      t(s, dir, "lineitem")
-        .filter(
-          col("l_shipdate") >= "1994-01-01" && col("l_shipdate") < "1995-01-01" &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg((sum(round(col("l_extendedprice") * col("l_discount") * 10000).cast("long")) / 10000.0)
-          .as("revenue"))),
 
     // ── dedup ───────────────────────────────────────────────────────────
     "q_dedup_exact" -> ((s, dir) =>
@@ -1423,32 +1421,6 @@ object SparkEntry {
         docs(s, dir).select(col("doc_id"), size(TextOps.tokens(col("text"))).as("ntok")),
         "doc_id", "ntok", budget = 128, shards = 8)),
 
-    "q_tpch_q3" -> ((s, dir) => {
-      // the shuffle-join anchor: both fact sides pre-filtered BEFORE the
-      // join (predicates push to the scans), the filtered dim broadcast
-      // (302/30k customers — provably shrinks with the filter), revenue
-      // summed in integer cents (order-free exact)
-      val cust = t(s, dir, "customer")
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"))
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_orderpriority"))
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") > lit("1997-01-01").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg((sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100)
-          .cast("long")) / 100.0).as("revenue"))
-        .select(col("l_orderkey"), to_date(col("o_orderdate")).as("odate"),
-          col("o_orderpriority").as("opriority"), col("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-
     "q_cube" -> ((s, dir) =>
       // full CUBE lattice in one pass (Expand + single shuffle) —
       // rollup's column-symmetric sibling
@@ -1719,49 +1691,6 @@ object SparkEntry {
           .cast("long")) / 1000000.0).as("revenue"))
     }),
 
-    "q_tpch_q14" -> ((s, dir) => {
-      // promo-revenue-share anchor: one month of lineitem (predicate
-      // pushed to the scan) broadcast-joined to part, ratio of two exact
-      // integer-micro sums in one combinable aggregate
-      val rev = sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000)
-        .cast("long"))
-      val promoRev = sum(when(col("p_type") === "PROMO",
-        round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000).cast("long"))
-        .otherwise(0L))
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-03-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-        .select(col("l_partkey"), col("l_extendedprice"), col("l_discount"))
-        .join(broadcast(t(s, dir, "part").select(col("p_partkey"), col("p_type"))),
-          col("l_partkey") === col("p_partkey"))
-        .agg(round(lit(100.0) * promoRev.cast("double") / rev.cast("double"), 6)
-          .as("promo_revenue"))
-    }),
-
-    "q_tpch_q10" -> ((s, dir) => {
-      // returned-item revenue by customer: facts filtered BEFORE the
-      // orderkey shuffle join, customer joined on custkey, tiny nation
-      // dim broadcast, top-20 via TakeOrderedAndProject
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
-        .select(col("o_orderkey"), col("o_custkey"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer")
-          .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        .agg((sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000)
-          .cast("long")) / 1000000.0).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
-
     "q_grouping_sets" -> ((s, dir) => {
       // explicit GROUPING SETS — the asymmetric lattice rollup/cube can't
       // express: per-flag, per-status, and grand total, one Expand pass
@@ -1832,24 +1761,6 @@ object SparkEntry {
       val li = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
       p.join(li, p("p_partkey") === li("l_partkey"), "left_anti")
         .select(col("p_partkey"), col("p_brand"))
-    }),
-
-    "q_tpch_q19" -> ((s, dir) => {
-      // TPC-H Q19 shape: disjunctive brand/size/quantity predicate over
-      // lineitem ⋈ part. part broadcasts; the common l_quantity <= 30
-      // bound and the join-key filter push into the lineitem scan
-      val li = t(s, dir, "lineitem")
-      val p = t(s, dir, "part")
-      val j = li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
-      val arm = (brand: String, szHi: Int, qLo: Int, qHi: Int) =>
-        col("p_brand") === brand && col("p_size").between(1, szHi) &&
-          col("l_quantity").between(qLo, qHi)
-      j.filter(arm("Brand#12", 15, 1, 11) || arm("Brand#23", 25, 10, 20) ||
-          arm("Brand#34", 35, 20, 30))
-        .agg(
-          (sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100).cast("long")) / 100.0)
-            .as("revenue"),
-          count(lit(1)).as("n_items"))
     }),
 
     "q_ewma" -> ((s, dir) => {
@@ -2214,13 +2125,15 @@ object SparkEntry {
       // the global top-10 (WindowGroupLimit keeps the sort partial);
       // ties broken (rev desc, date asc, orderkey asc) — the schema
       // here has no o_shippriority, the shape is the 3-table
-      // filter-join-topk
-      t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+      // filter-join-topk. The customer⋈orders side is the broadcast
+      // one: without CBO Spark sizes an inner join as the product of
+      // its inputs and would ship the lineitem slice instead
+      broadcast(t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey"))
         .join(t(s, dir, "orders")
           .filter(col("o_orderdate") < lit("1997-03-15").cast("timestamp"))
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
-          col("c_custkey") === col("o_custkey"))
+          col("c_custkey") === col("o_custkey")))
         .join(t(s, dir, "lineitem")
           .filter(col("l_shipdate") > lit("1997-03-15").cast("timestamp"))
           .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
@@ -4390,7 +4303,7 @@ object SparkEntry {
        |FROM $from""".stripMargin
   }
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql: Map[String, String] = uniqueKeys(
     "q_mode_string" ->
       """SELECT l_returnflag AS mode_returnflag FROM lineitem
         |GROUP BY l_returnflag ORDER BY count(*) DESC, l_returnflag ASC LIMIT 1""".stripMargin,
@@ -4539,12 +4452,6 @@ object SparkEntry {
         |  round(sum(l_quantity) / count(*), 6) AS avg_qty,
         |  count(*) AS count_order
         |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_tpch_q6" ->
-      """SELECT sum(CAST(round(l_extendedprice * l_discount * 10000) AS BIGINT)) / 10000.0 AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= '1994-01-01' AND l_shipdate < '1995-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
 
     "q_dedup_exact" ->
       """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS dup_cnt
@@ -6131,19 +6038,6 @@ object SparkEntry {
          |  FROM p JOIN t ON t.shard = p.shard AND t.rn = p.rn + 1)
          |SELECT doc_id, shard::INT AS shard, seq_idx::INT AS seq_idx FROM p""".stripMargin,
 
-    "q_tpch_q3" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS odate,
-        |  o_orderpriority AS opriority,
-        |  sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) / 100.0 AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_custkey = o_custkey AND o_orderkey = l_orderkey
-        |  AND c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND l_shipdate > TIMESTAMP '1997-01-01'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-
     "q_cube" ->
       """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
         |  coalesce(l_linestatus, 'ALL') AS lstatus,
@@ -6450,31 +6344,6 @@ object SparkEntry {
         |  AND o_orderdate < TIMESTAMP '1997-01-01'
         |GROUP BY n_name""".stripMargin,
 
-    "q_tpch_q14" ->
-      """SELECT round(100.0 *
-        |    sum(CASE WHEN p_type = 'PROMO'
-        |      THEN CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT)
-        |      ELSE 0 END)::DOUBLE
-        |    / sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT))::DOUBLE,
-        |  6) AS promo_revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-03-01'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin,
-
-    "q_tpch_q10" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |  sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT))
-        |    / 1000000.0 AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
-
     "q_grouping_sets" ->
       """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
         |  coalesce(l_linestatus, 'ALL') AS lstatus,
@@ -6550,14 +6419,6 @@ object SparkEntry {
         |FROM part
         |WHERE NOT EXISTS (SELECT 1 FROM lineitem
         |  WHERE l_partkey = p_partkey AND l_quantity >= 45)""".stripMargin,
-
-    "q_tpch_q19" ->
-      """SELECT sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) / 100.0 AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
 
     "q_ewma" -> {
       val terms = (0 until 10).map(j =>

@@ -193,8 +193,10 @@ object GraftFunctions {
         s"$name requires exactly 1 argument, got ${other.size}")
   }
 
-  /** Register every graft SQL function in the session registry. */
+  /** Register every graft SQL function in the session registry, and the
+    * [[graft.plans.ExactRound]] rewrite in its optimizer. */
   def registerAll(spark: SparkSession): Unit = {
+    ColumnBridge.addOptimizerRule(spark, graft.plans.ExactRound)
     val fns: Seq[(String, Expression => Expression)] = Seq(
       "graft_kurtosis" -> (e => GraftKurtosis(Cast(e, DoubleType))),
       "graft_kurtosis_pop" -> (e => GraftKurtosisPop(Cast(e, DoubleType))),

@@ -21,6 +21,13 @@ object ExtensionsProbe {
       """SELECT graft_vector_mean(v) AS m
         |FROM VALUES (array(1.0D, 3.0D)), (array(3.0D, 5.0D)) t(v)""".stripMargin)
       .collect().head
+    // the INJECTED optimizer rule: scale-0 round on a double is the
+    // allocation-free expression, HALF_UP like Spark's
+    // (over range, not VALUES: a local relation is folded before the rule)
+    val rq = spark.sql("SELECT round(id * 1.0D - 2.5D) AS r FROM range(0, 3)")
+    assert(rq.queryExecution.optimizedPlan.toString.contains("graft_round_half_up"),
+      s"injected round rewrite missing: ${rq.queryExecution.optimizedPlan}")
+    assert(rq.collect().map(_.getDouble(0)).toSeq == Seq(-3.0, -2.0, -1.0))
     // the INJECTED planner strategy (no per-session addStrategy call)
     // must plan a hand-built AsOfJoinNode
     import org.apache.spark.sql.graft.ColumnBridge

@@ -48,6 +48,15 @@ object ColumnBridge {
     if (!exp.extraStrategies.contains(s)) exp.extraStrategies ++= Seq(s)
   }
 
+  /** Append an experimental optimizer rule once (idempotent). */
+  def addOptimizerRule(
+      spark: SparkSession,
+      r: org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    if (!exp.extraOptimizations.contains(r)) exp.extraOptimizations ++= Seq(r)
+  }
+
   /**
    * Register a SQL function backed by a Catalyst expression builder in the
    * session's function registry (session-scoped, like the reference's

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the properties that matter at 100 TB must be
@@ -299,5 +302,18 @@ class PlanAuditSpec extends AnyFunSuite {
     // the index branch reads ONLY (text, source) — no doc ids or payload
     val scans = plan.linesIterator.filter(_.contains("ReadSchema")).toSeq
     assert(scans.exists(s => s.contains("text") && !s.contains("doc_id")), plan)
+  }
+
+  test("q_tpch_q3: the customer-orders side is broadcast, never the lineitem slice") {
+    val plan = SparkEntry.queries("q_tpch_q3")(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val shipped = plan.collect { case b: BroadcastExchangeExec =>
+      b.collect { case f: FileSourceScanExec => f.relation.location.rootPaths.mkString(",") }
+    }
+    assert(shipped.nonEmpty, plan)
+    assert(shipped.forall(_.forall(!_.contains("lineitem"))), plan)
+    assert(shipped.flatten.exists(_.contains("orders")), plan)
   }
 }
