@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,17 +12,48 @@ import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 
 /**
  * Bounded per-group KMV state: the k smallest DISTINCT 32-bit hash
- * values, kept in a sorted set capped at k (insert + evict-largest are
- * O(log k)).
+ * values. Held in a `long[]` of at most 2k entries whose first
+ * `sorted` entries are sorted and distinct; an insert appends the hash
+ * only if it is below the k-th smallest value held (once k are held),
+ * and a full array is sorted, de-duplicated and cut back to the k
+ * smallest. So an insert is an append and a compare; each compaction
+ * sorts at most 2k longs and leaves at least half the array free.
  */
 final class KmvBuffer(val k: Int) {
-  val set = new java.util.TreeSet[java.lang.Long]()
+  private var vals = new Array[Long](math.min(16, 2 * k))
+  private var n = 0
+  private var sorted = 0
+  // the k-th smallest value once k distinct values are held; an insert
+  // at or above it can change nothing
+  private var bound = Long.MaxValue
 
-  def insert(h: Long): Unit = {
-    if (set.size < k) { set.add(h); () }
-    else if (h < set.last()) {
-      if (set.add(h)) { set.pollLast(); () }
+  def insert(h: Long): Unit =
+    if (h < bound) {
+      if (n == vals.length) {
+        compact()
+        if (n >= vals.length / 2 && vals.length < 2 * k)
+          vals = java.util.Arrays.copyOf(vals, math.min(2 * vals.length, 2 * k))
+      }
+      if (h < bound) { vals(n) = h; n += 1 }
     }
+
+  /** The held values, sorted and distinct (at most k of them). */
+  def values: Array[Long] = {
+    compact()
+    java.util.Arrays.copyOf(vals, n)
+  }
+
+  private def compact(): Unit = if (sorted < n) {
+    java.util.Arrays.sort(vals, 0, n)
+    var w = 1
+    var r = 1
+    while (r < n && w < k) {
+      if (vals(r) != vals(w - 1)) { vals(w) = vals(r); w += 1 }
+      r += 1
+    }
+    n = w
+    sorted = w
+    if (n == k) bound = vals(k - 1)
   }
 }
 
@@ -73,6 +104,9 @@ case class KmvDistinctAgg(
   override def update(buf: KmvBuffer, input: InternalRow): KmvBuffer = {
     val v = child.eval(input)
     if (v != null) {
+      // Measured and dropped: hashing in place through getByteBuffer and
+      // the no-arg digest() gave this aggregate no clear gain
+      // (dev/bench_snaps/kernel_state.md).
       md.reset()
       val digest = md.digest(
         v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
@@ -85,36 +119,33 @@ case class KmvDistinctAgg(
   }
 
   override def merge(buf: KmvBuffer, other: KmvBuffer): KmvBuffer = {
-    val it = other.set.iterator()
-    while (it.hasNext) buf.insert(it.next())
+    other.values.foreach(buf.insert)
     buf
   }
 
   override def eval(buf: KmvBuffer): Any = {
-    val n = buf.set.size
+    val vals = buf.values
+    val n = vals.length
     if (n == 0) null
     // same operation order as the SQL replay: (k-1)·2^32 (exact dyadic
     // product), then ONE division
     else if (n < k) n.toDouble
-    else (k - 1).toDouble * 4294967296.0 / buf.set.last().toDouble
+    else (k - 1).toDouble * 4294967296.0 / vals(n - 1).toDouble
   }
 
+  // big-endian int count, then the values ascending
   override def serialize(buf: KmvBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.set.size)
-    val it = buf.set.iterator()
-    while (it.hasNext) out.writeLong(it.next())
-    out.flush()
-    bos.toByteArray
+    val vals = buf.values
+    val out = ByteBuffer.allocate(4 + 8 * vals.length).putInt(vals.length)
+    vals.foreach(out.putLong)
+    out.array()
   }
 
   override def deserialize(bytes: Array[Byte]): KmvBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
+    val in = ByteBuffer.wrap(bytes)
     val buf = new KmvBuffer(k)
-    var i = 0
-    while (i < n) { buf.insert(in.readLong()); i += 1 }
+    var i = in.getInt()
+    while (i > 0) { buf.insert(in.getLong()); i -= 1 }
     buf
   }
 

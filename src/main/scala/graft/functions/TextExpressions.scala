@@ -796,6 +796,9 @@ case class NfkcNormalize(child: Expression)
  * produces. Equal-run skipping keeps the count equal to
  * `size(array_intersect(a, b))` even if duplicates appear. Returns
  * null if either side is null (the builtin's null semantics).
+ * Elements compare with `binaryCompare`, the same order as
+ * `UTF8String.compareTo`, which in Spark 4.1 reads the environment on
+ * every call and throws when `spark.testing` is set.
  */
 case class SortedIntersectCount(left: Expression, right: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -828,7 +831,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     while (i < na && j < nb) {
       val x = a.getUTF8String(i)
       val y = b.getUTF8String(j)
-      val c = x.compareTo(y)
+      val c = x.binaryCompare(y)
       if (c < 0) i += 1
       else if (c > 0) j += 1
       else {
@@ -836,8 +839,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
         // skip equal runs so duplicate elements count once, matching
         // array_intersect's distinct semantics
         i += 1; j += 1
-        while (i < na && a.getUTF8String(i).compareTo(x) == 0) i += 1
-        while (j < nb && b.getUTF8String(j).compareTo(y) == 0) j += 1
+        while (i < na && a.getUTF8String(i).binaryCompare(x) == 0) i += 1
+        while (j < nb && b.getUTF8String(j).binaryCompare(y) == 0) j += 1
       }
     }
     n
@@ -868,13 +871,13 @@ case class SortedIntersectCount(left: Expression, right: Expression)
          |while ($i < $na && $j < $nb) {
          |  org.apache.spark.unsafe.types.UTF8String $x = $a.getUTF8String($i);
          |  org.apache.spark.unsafe.types.UTF8String $y = $b.getUTF8String($j);
-         |  int $c = $x.compareTo($y);
+         |  int $c = $x.binaryCompare($y);
          |  if ($c < 0) { $i++; }
          |  else if ($c > 0) { $j++; }
          |  else {
          |    $n++; $i++; $j++;
-         |    while ($i < $na && $a.getUTF8String($i).compareTo($x) == 0) $i++;
-         |    while ($j < $nb && $b.getUTF8String($j).compareTo($y) == 0) $j++;
+         |    while ($i < $na && $a.getUTF8String($i).binaryCompare($x) == 0) $i++;
+         |    while ($j < $nb && $b.getUTF8String($j).binaryCompare($y) == 0) $j++;
          |  }
          |}
          |${ev.value} = $n;

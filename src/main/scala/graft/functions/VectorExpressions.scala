@@ -30,17 +30,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
  * of `planes` md5-seeded hyperplane dot products over an
  * `array<double>` vector. Replaces `planes` separate [[DotProduct]]
  * expressions + a `concat` (each with its own per-row null/length
- * checks and literal-array handling) with ONE kernel holding the
- * weight matrix in a flat primitive array — same planes·dim
- * multiply-adds, a fraction of the expression overhead.
+ * checks and literal-array handling) with ONE kernel over the shared
+ * [[PlaneMatrix]].
  *
- * BIT-IDENTICAL contract: weights are
- * [[graft.ops.Similarity.planeWeight]] (md5-derived), each plane's dot
- * is the same ascending-index left fold as [[DotProduct]], sign is
- * `>= 0` — so signatures (and therefore LSH buckets, candidate pairs,
- * and the DuckDB oracle replay) are unchanged to the bit.
- * CodegenFallback: one eval call does all planes; the cost is the
- * arithmetic, not the dispatch.
+ * BIT-IDENTICAL contract: each plane's dot is the same ascending-index
+ * left fold as [[DotProduct]], sign is `>= 0` — so signatures (and
+ * therefore LSH buckets, candidate pairs, and the DuckDB oracle replay)
+ * are unchanged to the bit. CodegenFallback: one eval call does all
+ * planes, so dispatch is paid once per row, not per plane.
  */
 case class SrpSignature(child: Expression, planes: Int, dim: Int)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -59,41 +56,15 @@ case class SrpSignature(child: Expression, planes: Int, dim: Int)
       s"$prettyName requires array<double>, got ${other.catalogString}")
   }
 
-  // flat planes×dim weight matrix, computed once per executor instance
-  @transient private lazy val weights: Array[Double] = {
-    val w = new Array[Double](planes * dim)
-    var p = 0
-    while (p < planes) {
-      var d = 0
-      while (d < dim) {
-        w(p * dim + d) = graft.ops.Similarity.planeWeight(p, d)
-        d += 1
-      }
-      p += 1
-    }
-    w
-  }
+  @transient private lazy val weights = PlaneMatrix(planes, dim)
 
   override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val arr = v.asInstanceOf[ArrayData]
-    if (arr.numElements() != dim) {
-      throw new IllegalArgumentException(
-        s"$prettyName: vector length mismatch (${arr.numElements()} vs $dim)")
-    }
-    val x = arr.toDoubleArray()
+    val acc = PlaneMatrix.project(prettyName, child.eval(input), weights, planes, dim)
+    if (acc == null) return null
     val out = new Array[Byte](planes)
     var p = 0
     while (p < planes) {
-      var acc = 0.0
-      val base = p * dim
-      var d = 0
-      while (d < dim) {
-        acc += x(d) * weights(base + d)
-        d += 1
-      }
-      out(p) = if (acc >= 0) '1' else '0'
+      out(p) = if (acc(p) >= 0) '1' else '0'
       p += 1
     }
     org.apache.spark.unsafe.types.UTF8String.fromBytes(out)
@@ -480,8 +451,8 @@ case class VectorOuterSum(
 /**
  * Johnson-Lindenstrauss RANDOM PROJECTION to `planes` dimensions — the
  * continuous sibling of [[SrpSignature]]: the same md5-seeded
- * [[graft.ops.Similarity.planeWeight]] hyperplanes, but emitting the
- * raw dot products as an `array<double>` instead of their sign bits.
+ * [[PlaneMatrix]] hyperplanes, but emitting the raw dot products as
+ * an `array<double>` instead of their sign bits.
  * Reducing d → k before ANN/clustering shrinks a 100 TB embedding
  * table by d/k while approximately preserving pairwise distances
  * (JL lemma); downstream cosine/IVF then runs on the short vectors.
@@ -491,8 +462,7 @@ case class VectorOuterSum(
  * md5-derived weights, so any engine replays it exactly — rounding
  * and −0.0 normalization happen in the CALLER's projection
  * ([[graft.ops.Similarity.randomProject]]), mirrored in the oracle.
- * CodegenFallback: one eval does all planes; the cost is the
- * planes·dim multiply-adds, not dispatch.
+ * CodegenFallback: one eval does all planes.
  */
 case class RandomProjection(child: Expression, planes: Int, dim: Int)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -511,43 +481,11 @@ case class RandomProjection(child: Expression, planes: Int, dim: Int)
       s"$prettyName requires array<double>, got ${other.catalogString}")
   }
 
-  @transient private lazy val weights: Array[Double] = {
-    val w = new Array[Double](planes * dim)
-    var p = 0
-    while (p < planes) {
-      var d = 0
-      while (d < dim) {
-        w(p * dim + d) = graft.ops.Similarity.planeWeight(p, d)
-        d += 1
-      }
-      p += 1
-    }
-    w
-  }
+  @transient private lazy val weights = PlaneMatrix(planes, dim)
 
   override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
-    val arr = v.asInstanceOf[ArrayData]
-    if (arr.numElements() != dim) {
-      throw new IllegalArgumentException(
-        s"$prettyName: vector length mismatch (${arr.numElements()} vs $dim)")
-    }
-    val x = arr.toDoubleArray()
-    val out = new Array[Double](planes)
-    var p = 0
-    while (p < planes) {
-      var acc = 0.0
-      val base = p * dim
-      var d = 0
-      while (d < dim) {
-        acc += x(d) * weights(base + d)
-        d += 1
-      }
-      out(p) = acc
-      p += 1
-    }
-    new GenericArrayData(out)
+    val acc = PlaneMatrix.project(prettyName, child.eval(input), weights, planes, dim)
+    if (acc == null) null else new GenericArrayData(acc)
   }
 
   override protected def withNewChildInternal(newChild: Expression): RandomProjection =

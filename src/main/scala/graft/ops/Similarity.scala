@@ -1,8 +1,5 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -613,12 +610,7 @@ object Similarity {
   /** Deterministic pseudo-random hyperplane weight: first 8 hex chars of
     * md5("p_d") as a uint32, mapped to [-0.5, 0.5). Any engine can replay
     * this (md5 + hex arithmetic), so LSH buckets are reproducible. */
-  def planeWeight(p: Int, d: Int): Double = {
-    val md = MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"${p}_$d".getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 8), 16).toDouble / 4294967296.0 - 0.5
-  }
+  def planeWeight(p: Int, d: Int): Double = graft.functions.PlaneMatrix.weight(p, d)
 
   /** '0'/'1' bucket signature from `planes` random hyperplanes — ONE
     * native kernel ([[graft.functions.SrpSignature]]) instead of

@@ -158,11 +158,16 @@ class PropertySpec extends AnyFunSuite {
     val df = vecs.toDF("v").select(graft.ops.Similarity.toDouble($"v").as("v"))
     val native = df.select(graft.ops.Similarity.lshBucket($"v", 8, dim).as("sig"))
       .collect().map(_.getString(0))
-    // reference composition: per-plane left-fold dot, sign, concat
+    // reference composition: per-plane left-fold dot, sign, concat, over
+    // the weights' own definition (first 8 hex chars of md5("p_d"))
+    def weight(p: Int, d: Int): Double = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"${p}_$d".getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.substring(0, 8), 16).toDouble / 4294967296.0 - 0.5
+    }
     val expected = vecs.map { v =>
       (0 until 8).map { p =>
-        val acc = (0 until dim).foldLeft(0.0)((a, d) =>
-          a + v(d) * graft.ops.Similarity.planeWeight(p, d))
+        val acc = (0 until dim).foldLeft(0.0)((a, d) => a + v(d) * weight(p, d))
         if (acc >= 0) '1' else '0'
       }.mkString
     }
