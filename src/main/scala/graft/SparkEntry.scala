@@ -207,8 +207,7 @@ object SparkEntry {
     "q_mode_scalable" -> ((s, dir) =>
       // two-shuffle compositional mode — the unbounded-cardinality path
       // (l_partkey has ~20k distinct values per group at sf0.1)
-      GraftFunctions.modeBy(
-        t(s, dir, "lineitem"), Seq("l_returnflag"), "l_partkey", isStringTieMin = false)),
+      GraftFunctions.modeBy(t(s, dir, "lineitem"), Seq("l_returnflag"), "l_partkey")),
 
     "q_mode_float" -> ((s, dir) =>
       // Float64 mode (reference src/mode.rs:171-177; tests/main.rs:40):
@@ -2939,7 +2938,7 @@ object SparkEntry {
       // carrying ≥ 20% of a part's shipped quantity among ≥2 suppliers;
       // the share test is exact integer arithmetic (5·q_ps ≥ q_p)
       // r19: partkey-keyed fan-out — the (pk,sk) partial hash-aggregate
-      // ran in 3 scan tasks (JobProbe 0.75 s), and partitioning by
+      // ran in 3 scan tasks (per-job trace: 0.75 s), and partitioning by
       // l_partkey is a subset of BOTH groupBy keys, so the downstream
       // aggregates reuse the exchange instead of adding their own.
       val ps = Scale.fanOutSmallScan(t(s, dir, "lineitem"), col("l_partkey"))

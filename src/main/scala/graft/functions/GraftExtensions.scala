@@ -57,8 +57,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // allocation-free round(double) at scale 0, bit-identical to Spark's
     ext.injectOptimizerRule(_ => graft.plans.ExactRound)
-    // scalable two-phase mode rewrite, gated on spark.graft.mode.twoPhase
-    ext.injectOptimizerRule(_ => graft.plans.RewriteModeToTwoPhase)
     // whole-operator extension: plans AsOfJoinNode -> AsOfJoinExec
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -168,20 +168,24 @@ object GraftFunctions {
   }
 
   /**
-   * Scalable two-shuffle mode: groupBy(keys :+ value).count, then per keys
-   * pick the value with (max count, reference tie-break). O(1) state per
-   * reducer key — the 100 TB path for high-cardinality value columns.
-   * Tie-break matches GraftMode: strings → min value, else max value.
+   * Scalable two-phase mode: count per `(keys, value)`, then per `keys`
+   * pick the value with the greatest count — `max_by(x, (cnt, x))`, or
+   * `min_by(x, (−cnt, x))` for strings. O(1) state per reducer key in
+   * both shuffles: the 100 TB path for high-cardinality value columns.
+   * Same answer as [[mode_agg]]: ties go to the greatest value (the
+   * smallest for strings), nulls are ignored, and an all-null group
+   * gives NULL. Output columns: `keys`, then `mode_<value>`.
    */
-  def modeBy(df: DataFrame, keys: Seq[String], value: String, isStringTieMin: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val counted = df.filter(col(value).isNotNull)
-      .groupBy((keys :+ value).map(col): _*).agg(count(lit(1)).as("__cnt"))
-    val ord = if (isStringTieMin) col(value).asc else col(value).desc
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__cnt").desc, ord)
-    counted.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select((keys.map(col) :+ col(value).as(s"mode_$value")): _*)
+  def modeBy(df: DataFrame, keys: Seq[String], value: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{MaxBy, MinBy}
+    val (x, cnt) = (col(value), col("__cnt"))
+    // a NULL value gets a NULL ordering, which max_by/min_by skip
+    val pick = df.select(x).schema.head.dataType match {
+      case _: StringType => MinBy(ex(x), ex(when(x.isNotNull, struct(-cnt, x))))
+      case _ => MaxBy(ex(x), ex(when(x.isNotNull, struct(cnt, x))))
+    }
+    df.groupBy((keys :+ value).map(col): _*).agg(count(lit(1)).as("__cnt"))
+      .groupBy(keys.map(col): _*).agg(agg(pick).as(s"mode_$value"))
   }
 
   /** Arity-checked unary builder (matches the reference's exact Float64

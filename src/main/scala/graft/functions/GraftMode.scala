@@ -98,7 +98,7 @@ private[functions] final case class ValueCodec(
  * ObjectHashAggregateExec, which falls back to sort-based aggregation
  * under memory pressure). State is O(distinct values per group); for
  * very-high-cardinality columns at 100 TB prefer the two-shuffle
- * compositional form `GraftOps.modeBy`.
+ * compositional form [[GraftFunctions.modeBy]].
  *
  * Wire form of a buffer (big-endian), per entry: the value in its
  * physical width (a string or a wide decimal as a length and its bytes),

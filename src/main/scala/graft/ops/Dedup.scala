@@ -451,7 +451,7 @@ object Dedup {
     // columns, so column pruning cannot split the shared exchange.
     // r19 (guide §2.5, the crawlStages pattern): fan a small scan out
     // BEFORE the redact+quality regex chain — at sf1-shape inputs the
-    // chain ran in the 2 scan tasks (JobProbe: three 2-task jobs, 7.7 s
+    // chain ran in the 2 scan tasks (per-job trace: three 2-task jobs, 7.7 s
     // of 8.7 s total). The staging repartition below still dedups the
     // post-regex frame across the three consumers; this exchange
     // parallelizes the regex work itself. Identity on real scans.
@@ -644,7 +644,7 @@ object Dedup {
     // staged — their consumers fan out three ways each.
     // r18 (guide §2.5): fan a one-row-group scan out BEFORE the
     // extract+normalize regex chain — without it the whole chain ran in
-    // the single scan task (JobProbe: 1-task jobs of 1.4-2.0 s inside
+    // the single scan task (per-job trace: 1-task jobs of 1.4-2.0 s inside
     // this gate). Scale-adaptive: a real-scale input keeps its splits
     // and no exchange is added. This is NOT the r17 "staging
     // repartition" that measured 4× slower — that one exchanged the
@@ -823,7 +823,7 @@ object Dedup {
     // edges⋈labels join then reuses the stored layout — only the small
     // per-round label frame moves, instead of the r18 shape where the
     // planner re-BROADCAST the whole checkpointed edge list every
-    // round (EmbedProbe: a 46-task broadcast build per round; CC wall
+    // round (a 46-task broadcast build per round; CC wall
     // on the q_embed_clusters graph 6.9 → 3.8 s). At 100 TB the same
     // layout turns each round into a one-sided exchange — strictly
     // fewer bytes per round for one extra edge exchange at setup.
@@ -1091,6 +1091,44 @@ object Dedup {
    */
   def similarityJoinExact(docs: DataFrame, idCol: String, textCol: String,
       tNum: Int = 1, tDen: Int = 2): DataFrame = {
+    val (staged, prefixes) = ppjoinPrefixes(docs, idCol, textCol, tNum, tDen)
+    // length-compatibility bound (classic PPJoin companion filter):
+    // J ≥ t forces t·|y| ≤ |x| ≤ |y|/t, so size-incompatible pairs are
+    // pruned INSIDE the candidate join, before the distinct and the
+    // array verify (24% fewer candidates on the sf0.1 corpus; far more
+    // on corpora with real length spread).
+    // r18: plus the PPJoin POSITIONAL filter (Xiao et al. WWW 2008
+    // §3.2): a token matched at df-rank i of x and j of y bounds the
+    // overlap by 1 + min(|x|-i, |y|-j); Jaccard ≥ t needs overlap ≥
+    // ⌈t/(1+t)·(|x|+|y|)⌉, i.e. (1+min)·(tNum+tDen) ≥ tNum·(nx+ny).
+    // No false negatives (the bound is an upper bound on the true
+    // overlap), so the verified output is unchanged — measured 310k →
+    // 125k candidates on the sf0.1 corpus.
+    val cand = prefixes.as("a")
+      .join(prefixes.as("b"),
+        col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id") &&
+        col("a.n") * tDen >= col("b.n") * tNum &&
+        col("b.n") * tDen >= col("a.n") * tNum &&
+        (lit(1L) + least(col("a.n") - col("a.rn"), col("b.n") - col("b.rn"))) *
+          lit(tNum + tDen) >= (col("a.n") + col("b.n")) * lit(tNum))
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+      .distinct()
+    verifyJaccard(cand, staged, tNum, tDen)
+  }
+
+  /**
+   * The PPJoin front both exact joins share: tokenize each document
+   * into its distinct 3-shingles, rank them by ascending document
+   * frequency (ties on value), and keep each document's prefix of
+   * n − ⌈t·n⌉ + 1 tokens. Returns `(staged, prefixes)`:
+   *  - `staged`: one row per (doc_id, token) with the set size `n` and
+   *    the token's `df`, partitioned by doc_id;
+   *  - `prefixes`: the prefix rows (doc_id, token, n, rn), with `rn`
+   *    the token's 1-based df rank in its document, partitioned by
+   *    token for the candidate join.
+   */
+  private[graft] def ppjoinPrefixes(docs: DataFrame, idCol: String, textCol: String,
+      tNum: Int, tDen: Int): (DataFrame, DataFrame) = {
     require(tNum > 0 && tDen >= tNum, s"threshold must be in (0,1]: $tNum/$tDen")
     import org.apache.spark.sql.expressions.Window
     // r18 optimization (guide §2.3/§2.4): df via ONE window over a token
@@ -1124,27 +1162,15 @@ object Dedup {
     val prefixes = ranked.filter(col("rn") <= col("pfx_len"))
       .select(col("doc_id"), col("token"), col("n"), col("rn"))
       .repartition(col("token"))
-    // length-compatibility bound (classic PPJoin companion filter):
-    // J ≥ t forces t·|y| ≤ |x| ≤ |y|/t, so size-incompatible pairs are
-    // pruned INSIDE the candidate join, before the distinct and the
-    // array verify (24% fewer candidates on the sf0.1 corpus; far more
-    // on corpora with real length spread).
-    // r18: plus the PPJoin POSITIONAL filter (Xiao et al. WWW 2008
-    // §3.2): a token matched at df-rank i of x and j of y bounds the
-    // overlap by 1 + min(|x|-i, |y|-j); Jaccard ≥ t needs overlap ≥
-    // ⌈t/(1+t)·(|x|+|y|)⌉, i.e. (1+min)·(tNum+tDen) ≥ tNum·(nx+ny).
-    // No false negatives (the bound is an upper bound on the true
-    // overlap), so the verified output is unchanged — measured 310k →
-    // 125k candidates on the sf0.1 corpus.
-    val cand = prefixes.as("a")
-      .join(prefixes.as("b"),
-        col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id") &&
-        col("a.n") * tDen >= col("b.n") * tNum &&
-        col("b.n") * tDen >= col("a.n") * tNum &&
-        (lit(1L) + least(col("a.n") - col("a.rn"), col("b.n") - col("b.rn"))) *
-          lit(tNum + tDen) >= (col("a.n") + col("b.n")) * lit(tNum))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .distinct()
+    (staged, prefixes)
+  }
+
+  /** The exact verify both PPJoins end with: each candidate pair
+    * (id1, id2) joins both docs' sorted token sets from
+    * [[ppjoinPrefixes]]' `staged`, and survives iff tDen·inter ≥
+    * tNum·union. Output: (id1, id2, jaccard rounded to 6 dp). */
+  private[graft] def verifyJaccard(cand: DataFrame, staged: DataFrame,
+      tNum: Int, tDen: Int): DataFrame = {
     val sets = staged.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("token"))).as("toks"), count(lit(1)).as("n"))
     // r18: sorted-merge intersection count (allocation-free kernel)
@@ -1183,33 +1209,31 @@ object Dedup {
    */
   def similarityJoinExactCapped(docs: DataFrame, idCol: String, textCol: String,
       tNum: Int = 1, tDen: Int = 2, maxBlock: Int = 64): DataFrame = {
-    require(tNum > 0 && tDen >= tNum, s"threshold must be in (0,1]: $tNum/$tDen")
     require(maxBlock >= 2, s"maxBlock must be >= 2, got $maxBlock")
+    val (staged, prefixes) = ppjoinPrefixes(docs, idCol, textCol, tNum, tDen)
+    val c = cappedCandidates(prefixes, tNum, tDen, maxBlock)
+    verifyJaccard(c.small.unionByName(c.star).distinct(), staged, tNum, tDen)
+  }
+
+  /** [[similarityJoinExactCapped]]'s candidate frames, each a pair
+    * list (id1, id2) unless noted:
+    *  - `pairFirst`: small-block pairs before the positional filter,
+    *    with sizes n1, n2 and each side's first shared rank i, j;
+    *  - `floodMin`: per doc with a flooded prefix token, its first
+    *    flooded rank `fmin` (doc_id, fmin);
+    *  - `small`: `pairFirst` after the sound positional filter;
+    *  - `star`: hub × member pairs of the flooded blocks. */
+  private[graft] final case class CappedCandidates(
+      pairFirst: DataFrame, floodMin: DataFrame, small: DataFrame, star: DataFrame)
+
+  private[graft] def cappedCandidates(prefixes: DataFrame, tNum: Int, tDen: Int,
+      maxBlock: Int): CappedCandidates = {
     import org.apache.spark.sql.expressions.Window
-    // r18 optimization: same window-df / pre-explode-n / fan-out rewrite
-    // as [[similarityJoinExact]] (tokenize once, no freq join) — see there.
-    val dtok = Scale.fanOutSmallScan(
-        docs.select(col(idCol).as("doc_id"), col(textCol).as("__t")),
-        col("doc_id"))
-      .select(col("doc_id"),
-        array_distinct(TextOps.tokenShingles(col("__t"))).as("arr"))
-      .select(col("doc_id"), size(col("arr")).cast("long").as("n"),
-        explode(col("arr")).as("token"))
     val byTok = Window.partitionBy(col("token"))
-    val staged = dtok.repartition(col("token"))
-      .withColumn("df", count(lit(1)).over(byTok))
-      .repartition(col("doc_id"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    val ranked = staged
-      .withColumn("rn", row_number().over(byDoc.orderBy(col("df").asc, col("token").asc)))
-      .withColumn("pfx_len",
-        col("n") - expr(s"($tNum * n + ${tDen - 1}) div $tDen") + lit(1L))
-    val prefixes = ranked.filter(col("rn") <= col("pfx_len"))
-      .select(col("doc_id"), col("token"), col("n"), col("rn"))
-      .repartition(col("token"))
+    val blocks = prefixes
       .withColumn("m", count(lit(1)).over(byTok))
       .withColumn("hub", min(col("doc_id")).over(byTok))
-    val small = prefixes.filter(col("m") <= maxBlock)
+    val small = blocks.filter(col("m") <= maxBlock)
     // r19 (the r18 NOTE resolved): [[similarityJoinExact]]'s positional
     // filter is only sound at the pair's GLOBALLY-first shared prefix
     // token, and in the capped operator that token may live in a
@@ -1227,7 +1251,7 @@ object Dedup {
     // prefix rank; every other pair passes through unfiltered, and star
     // candidates are untouched. Pruned pairs provably verify below t,
     // so the verified output is unchanged.
-    val floodMin = prefixes.filter(col("m") > maxBlock)
+    val floodMin = blocks.filter(col("m") > maxBlock)
       .groupBy(col("doc_id")).agg(min(col("rn")).as("fmin"))
     val pairFirst = small.as("a").hint("merge")
       .join(small.as("b"),
@@ -1250,19 +1274,9 @@ object Dedup {
         (lit(1L) + least(col("n1") - col("i"), col("n2") - col("j"))) *
           lit(tNum + tDen) >= (col("n1") + col("n2")) * lit(tNum))
       .select(col("id1"), col("id2"))
-    val candStar = prefixes.filter(col("m") > maxBlock && col("doc_id") =!= col("hub"))
+    val candStar = blocks.filter(col("m") > maxBlock && col("doc_id") =!= col("hub"))
       .select(col("hub").as("id1"), col("doc_id").as("id2"))
-    val cand = candSmall.unionByName(candStar).distinct()
-    val sets = staged.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("token"))).as("toks"), count(lit(1)).as("n"))
-    val j = cand
-      .join(sets.select(col("doc_id").as("id1"), col("toks").as("t1"), col("n").as("n1")), "id1")
-      .join(sets.select(col("doc_id").as("id2"), col("toks").as("t2"), col("n").as("n2")), "id2")
-      .withColumn("inter", sortedIntersectCount(col("t1"), col("t2")))
-      .withColumn("un", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter") * tDen >= col("un") * tNum)
-    j.select(col("id1"), col("id2"),
-      round(col("inter").cast("double") / col("un").cast("double"), 6).as("jaccard"))
+    CappedCandidates(pairFirst, floodMin, candSmall, candStar)
   }
 
   /**
@@ -1303,7 +1317,7 @@ object Dedup {
     // r18 (guide §2.5): fan a one-row-group scan out before the
     // normalize+per-gram-md5 chain — a single parquet file plans as ONE
     // scan task, and without the fan-out the whole corpus hashed on one
-    // core (JobProbe: one 4 s task). Scale-adaptive: real inputs keep
+    // core (per-job trace: one 4 s task). Scale-adaptive: real inputs keep
     // their splits and no exchange is added; the gram-row exchange
     // below is unchanged (its AQE-coalesced reads size the window's
     // buffers on the post-explode bytes, the scale-safe direction).
@@ -1453,7 +1467,7 @@ object Dedup {
     // identity at real scale — the blk exchange below is unchanged)
     // r19: when the scan WAS small, pin the blk exchange to session
     // parallelism — AQE coalesces it to 1-3 read partitions by its
-    // tiny BYTES (JobProbe: a 0.4 s single-task job), but the per-block
+    // tiny BYTES (per-job trace: a 0.4 s single-task job), but the per-block
     // QUADRATIC levenshtein join above it is what actually costs; AQE
     // cannot see the explosion. Real-scale inputs keep the unpinned
     // advisory-sized exchange (flag false → identical r18 shape).

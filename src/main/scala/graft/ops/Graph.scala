@@ -305,7 +305,7 @@ object Graph {
     // frame is a bounded expression over the edge lists that folds into
     // its consumer's plan. Each dropped localCheckpoint drops a whole
     // QueryExecution (analysis + optimization + codegen at construction
-    // time): JobProbe measured this query's wall as ~60% DRIVER time,
+    // time): a per-job trace measured this query's wall as ~60% DRIVER time,
     // not task time. The old-edge subtree is shared once (oE) instead
     // of being re-planned for allE and oldSrc separately.
     val oE = norm(oldEdges).localCheckpoint(eager = false)

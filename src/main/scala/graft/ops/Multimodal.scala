@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -62,16 +61,6 @@ object Multimodal {
       (conv(substring(md5(col("payload")), 1, 4), 16, 10).cast("int") % 1024 + 1).as("width"),
       (conv(substring(md5(col("payload")), 5, 4), 16, 10).cast("int") % 1024 + 1).as("height"),
       md5(col("payload")).as("content_hash"))
-
-  /** STUB decoder — a real deployment replaces this with an image/audio
-    * codec call. Deterministic: dimensions derived from md5(payload). */
-  private[ops] def decodeStub(payload: Array[Byte]): (Int, Int, String) = {
-    val md = MessageDigest.getInstance("MD5")
-    val hex = md.digest(payload).map("%02x".format(_)).mkString
-    val w = Integer.parseInt(hex.substring(0, 4), 16) % 1024 + 1
-    val h = Integer.parseInt(hex.substring(4, 8), 16) % 1024 + 1
-    (w, h, hex)
-  }
 
   /**
    * The pluggable decoder seam: a real deployment implements this with

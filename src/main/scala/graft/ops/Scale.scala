@@ -39,9 +39,25 @@ object Scale {
    * bytes moved are the RAW rows — tiny exactly when this fires); when
    * the scan already has enough splits (any real-scale input), this is
    * the identity — no exchange is added at 100 TB.
+   *
+   * Several `keys` serve a downstream groupBy/join that clusters on the
+   * same tuple: EnsureRequirements then sees the individual columns (a
+   * single `struct(...)` key would NOT satisfy the clustering and a
+   * second exchange would be planned).
    */
-  def fanOutSmallScan(df: DataFrame, key: Column): DataFrame = {
-    if (df.isStreaming) return df // batch-only: .rdd is a batch planner call
+  def fanOutSmallScan(df: DataFrame, keys: Column*): DataFrame =
+    fanOutSmallScanFlag(df, keys: _*)._1
+
+  /** [[fanOutSmallScan]] that also RETURNS whether it fired — for
+    * operators whose expensive stage is a per-block QUADRATIC join
+    * ABOVE a later exchange: AQE sizes that exchange's reads by its
+    * input bytes (tiny exactly when the scan was tiny) and cannot see
+    * the explosion above it, so the caller pins the block exchange to
+    * session parallelism ONLY when the input scan was small. Real-scale
+    * inputs keep the unpinned, advisory-sized exchange. */
+  def fanOutSmallScanFlag(df: DataFrame, keys: Column*): (DataFrame, Boolean) = {
+    // batch-only: .rdd is a batch planner call
+    if (df.isStreaming) return (df, false)
     // r19 (ADVICE r18): probe ONLY scan-shaped inputs. df.rdd compiles a
     // physical plan, and under AQE that EXECUTES every exchange/broadcast
     // stage beneath the probed frame at DataFrame-construction time —
@@ -52,7 +68,7 @@ object Scale {
     // through untouched — they are already downstream of a real exchange,
     // so the one-row-group serial-kernel problem this helper fixes cannot
     // occur there anyway.
-    if (!scanShaped(df.queryExecution.analyzed)) return df
+    if (!scanShaped(df.queryExecution.analyzed)) return (df, false)
     val planned = df.rdd.getNumPartitions
     val target = df.sparkSession.sparkContext.defaultParallelism
     // EXPLICIT partition count: AQE coalescing sizes shuffle reads by
@@ -62,35 +78,7 @@ object Scale {
     // coalesce straight back to 1-2 read partitions. A user-specified
     // count is exempt from coalescing; it only ever applies when the
     // input is small (the guard), so it never constrains a real scan.
-    if (planned * 2 <= target) df.repartition(target, key) else df
-  }
-
-  /** [[fanOutSmallScan]] that also RETURNS whether it fired — for
-    * operators whose expensive stage is a per-block QUADRATIC join
-    * ABOVE a later exchange: AQE sizes that exchange's reads by its
-    * input bytes (tiny exactly when the scan was tiny) and cannot see
-    * the explosion above it, so the caller pins the block exchange to
-    * session parallelism ONLY when the input scan was small. Real-scale
-    * inputs keep the unpinned, advisory-sized exchange. */
-  def fanOutSmallScanFlag(df: DataFrame, key: Column): (DataFrame, Boolean) = {
-    if (df.isStreaming) return (df, false)
-    if (!scanShaped(df.queryExecution.analyzed)) return (df, false)
-    val planned = df.rdd.getNumPartitions
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (planned * 2 <= target) (df.repartition(target, key), true) else (df, false)
-  }
-
-  /** [[fanOutSmallScan]] keyed on SEVERAL columns — used when a
-    * downstream groupBy/join clusters on the same tuple, so its
-    * EnsureRequirements check sees the individual columns (a single
-    * `struct(...)` key would NOT satisfy the clustering and a second
-    * exchange would be planned). */
-  def fanOutSmallScanKeys(df: DataFrame, keys: Seq[Column]): DataFrame = {
-    if (df.isStreaming) return df
-    if (!scanShaped(df.queryExecution.analyzed)) return df
-    val planned = df.rdd.getNumPartitions
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (planned * 2 <= target) df.repartition(target, keys: _*) else df
+    if (planned * 2 <= target) (df.repartition(target, keys: _*), true) else (df, false)
   }
 
   /** True iff the plan is projections/filters/aliases over leaf

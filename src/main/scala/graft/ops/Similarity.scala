@@ -286,7 +286,7 @@ object Similarity {
    * disagree; [[nearDupPairs]] stays as the all-pairs truth the recall
    * spec audits against.
    *
-   * Cost model (measured, SimilarityProbe @ sf0.1, n=2000, dim=64): at a
+   * Cost model (measured at sf0.1, n=2000, dim=64): at a
    * threshold in the similarity BULK (0.4 on isotropic data) banding
    * emits 1.28M of the 2.0M possible pairs — 64% candidate density — so
    * the LSH path is inherently ≈ all-pairs work plus banding overhead

@@ -634,10 +634,10 @@ object Stats {
     // high-cardinality distinct-value partial aggregate otherwise runs
     // inside 1-3 scan tasks, and the keyed exchange is reused by the
     // groupBy itself (same clustering), so no extra shuffle is added.
-    val perVal = Scale.fanOutSmallScanKeys(df
+    val perVal = Scale.fanOutSmallScan(df
       .filter(col(valueCol).isNotNull && !isnan(col(valueCol).cast("double")))
       .select(keyCols :+ col(valueCol).cast("double").as("__v"): _*),
-      keyCols :+ col("__v"))
+      keyCols :+ col("__v"): _*)
       .groupBy(keyCols :+ col("__v"): _*)
       .agg(count(lit(1)).as("__c"))
     val rng = perVal.groupBy(keyCols: _*)
@@ -708,7 +708,7 @@ object Stats {
       s"reps must be a multiple of 4 in [4, 64], got $reps")
     val keyCols = keys.map(col)
     // r19: fan a one-row-group scan out BEFORE the PoissonWeights kernel
-    // and the 2·reps partial-aggregate expressions (JobProbe: the whole
+    // and the 2·reps partial-aggregate expressions (per-job trace: the whole
     // pass ran as ONE task, 1.6 s at sf0.1). Sums of longs/decimals are
     // order-independent, so the result is bit-identical.
     val clean = Scale.fanOutSmallScan(df
@@ -1317,7 +1317,7 @@ object Stats {
     val mics = cols.map(c => round(col(c) * 1000000).cast("long").as(s"__m_$c"))
     // r19: the decimal(38,0) products in the partial aggregate are the
     // dominant per-row cost, and a one-row-group input runs them in a
-    // single scan task (JobProbe: 1.8 s on 3 tasks at sf0.1). Fan the
+    // single scan task (per-job trace: 1.8 s on 3 tasks at sf0.1). Fan the
     // projected micros out first — the exchange carries k longs per row,
     // far cheaper than the serialized kernel; identity on real scans.
     // Keyed on the full value tuple: high-cardinality and deterministic.

@@ -1310,7 +1310,7 @@ object TextOps {
     // r19 (guide §2.5 + §2.4): the O(len)-md5 boundary kernel ran
     // SERIALLY in the one-row-group scan task, and TWICE — the chunk
     // frame feeds both the shared-hash pipeline and the per-doc stats
-    // (JobProbe: two 0.7 s single-task jobs). Fan the normalized text
+    // (per-job trace: two 0.7 s single-task jobs). Fan the normalized text
     // out first (identity on real scans), and materialize the bounded
     // (doc_id, hashes) frame once per invocation (lazy checkpoint).
     val base = graft.ops.Scale.fanOutSmallScan(

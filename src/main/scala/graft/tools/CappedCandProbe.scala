@@ -1,62 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
+import graft.ops.Dedup
 
-/** Dev probe (r19): candidate volume of similarityJoinExactCapped's
-  * pairwise branch WITHOUT vs WITH the sound per-pair positional
-  * filter — the evidence that the filter prunes (the verified output
-  * is oracle-pinned separately). */
+/** Dev probe: candidate volume of `Dedup.similarityJoinExactCapped`'s
+  * pairwise branch without vs with its sound per-pair positional filter
+  * — the evidence that the filter prunes (the verified output is
+  * oracle-pinned separately). Counts the operator's own frames.
+  *
+  * Usage: runMain graft.tools.CappedCandProbe <sfDir> */
 object CappedCandProbe {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local()
     val docs = spark.read.parquet(args(0) + "/documents.parquet")
-    import org.apache.spark.sql.expressions.Window
     val (tNum, tDen, maxBlock) = (1, 2, 64)
-    val dtok = docs.select(col("doc_id"),
-        array_distinct(graft.ops.TextOps.tokenShingles(col("text"))).as("arr"))
-      .select(col("doc_id"), size(col("arr")).cast("long").as("n"),
-        explode(col("arr")).as("token"))
-    val byTok = Window.partitionBy(col("token"))
-    val staged = dtok.repartition(col("token"))
-      .withColumn("df", count(lit(1)).over(byTok))
-      .repartition(col("doc_id"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    val ranked = staged
-      .withColumn("rn", row_number().over(byDoc.orderBy(col("df").asc, col("token").asc)))
-      .withColumn("pfx_len",
-        col("n") - expr(s"($tNum * n + ${tDen - 1}) div $tDen") + lit(1L))
-    val prefixes = ranked.filter(col("rn") <= col("pfx_len"))
-      .select(col("doc_id"), col("token"), col("n"), col("rn"))
-      .repartition(col("token"))
-      .withColumn("m", count(lit(1)).over(byTok))
-      .withColumn("hub", min(col("doc_id")).over(byTok))
-    val small = prefixes.filter(col("m") <= maxBlock).localCheckpoint()
-    val floodMin = prefixes.filter(col("m") > maxBlock)
-      .groupBy(col("doc_id")).agg(min(col("rn")).as("fmin")).localCheckpoint()
-    val pairFirst = small.as("a").hint("merge")
-      .join(small.as("b"),
-        col("a.token") === col("b.token") && col("a.doc_id") < col("b.doc_id") &&
-        col("a.n") * tDen >= col("b.n") * tNum &&
-        col("b.n") * tDen >= col("a.n") * tNum)
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        col("a.n").as("n1"), col("b.n").as("n2"),
-        col("a.rn").as("rn1"), col("b.rn").as("rn2"))
-      .groupBy(col("id1"), col("id2"), col("n1"), col("n2"))
-      .agg(min(col("rn1")).as("i"), min(col("rn2")).as("j"))
-      .localCheckpoint()
-    println("[cap] distinct small pairs (old candSmall) = " + pairFirst.count())
-    val kept = pairFirst
-      .join(floodMin.select(col("doc_id").as("id1"), col("fmin").as("f1")),
-        Seq("id1"), "left")
-      .join(floodMin.select(col("doc_id").as("id2"), col("fmin").as("f2")),
-        Seq("id2"), "left")
-      .filter(
-        col("i").cast("long") >= coalesce(col("f1").cast("long"), lit(Long.MaxValue)) ||
-        col("j").cast("long") >= coalesce(col("f2").cast("long"), lit(Long.MaxValue)) ||
-        (lit(1L) + least(col("n1") - col("i"), col("n2") - col("j"))) *
-          lit(tNum + tDen) >= (col("n1") + col("n2")) * lit(tNum))
-    println("[cap] after sound positional filter       = " + kept.count())
-    println("[cap] docs with flooded prefix (floodMin) = " + floodMin.count())
+    val (_, prefixes) = Dedup.ppjoinPrefixes(docs, "doc_id", "text", tNum, tDen)
+    val c = Dedup.cappedCandidates(prefixes, tNum, tDen, maxBlock)
+    println("[cap] distinct small pairs before the filter = " + c.pairFirst.count())
+    println("[cap] after sound positional filter          = " + c.small.count())
+    println("[cap] docs with flooded prefix (floodMin)    = " + c.floodMin.count())
     spark.stop()
   }
 }

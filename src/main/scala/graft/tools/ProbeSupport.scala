@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.TextOps
 
 /** Shared plumbing for the dev-only scale probes (ScaleStress,
-  * Scale100Probe, BudgetScaleProbe) and the specs that replay their
+  * Scale100Probe, Sf1Soak, RefitProbe) and the specs that replay their
   * reference implementations — one definition of wall-clock timing,
   * noop materialization, id-offset replication and the r11
   * single-window "naive" forms, instead of a copy per tool. */

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -38,28 +38,14 @@ object Sf1Soak {
       .select(col("doc_id"), col("source"), col("text"))
     val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
-    val reps = spark.range(10).select(col("id").cast("int").as("k"))
-
+    // the ×10 recipe of [[ScaleCurveProbe]]
+    import ScaleCurveProbe.{replicas, replicaEmbedding, replicaId, replicaText}
     val docs10 = ProbeSupport.materialize(spark,
       s"$workDir/documents_sf1.parquet",
-      docs1.crossJoin(reps).select(
-        (col("doc_id") + col("k").cast("long") * 10000000L).as("doc_id"),
-        col("source"),
-        when(col("k") === 0, col("text")).otherwise(
-          concat_ws(" ", transform(split(col("text"), " "), w =>
-            when(conv(substring(md5(concat(w, lit("_"),
-                col("k").cast("string"))), 1, 4), 16, 10) % 10 < 3,
-              concat(w, lit("q"), col("k").cast("string"))).otherwise(w))))
-          .as("text")))
+      replicas(docs1).select(replicaId("doc_id", 10000000L), col("source"), replicaText))
     val emb10 = ProbeSupport.materialize(spark,
       s"$workDir/embeddings_sf1.parquet",
-      emb1.crossJoin(reps).select(
-        (col("vec_id") + col("k").cast("long") * 10000000L).as("vec_id"),
-        when(col("k") === 0, col("embedding")).otherwise(
-          concat(
-            slice(col("embedding"), col("k") * 6 + 1, lit(64) - col("k") * 6),
-            slice(col("embedding"), lit(1), col("k") * 6)))
-          .as("embedding")))
+      replicas(emb1).select(replicaId("vec_id", 10000000L), replicaEmbedding))
     println(s"[sf1] docs 1x=${docs1.count()} 10x=${docs10.count()} " +
       s"emb 1x=${emb1.count()} 10x=${emb10.count()}")
 

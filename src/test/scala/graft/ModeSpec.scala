@@ -142,10 +142,30 @@ class ModeSpec extends AnyFunSuite {
 
   test("modeBy compositional form agrees with mode_agg") {
     val df = (1 to 2000).map(i => (i % 4, "v" + (i % 13))).toDF("g", "v")
-    val a = modeBy(df, Seq("g"), "v", isStringTieMin = true)
+    val a = modeBy(df, Seq("g"), "v")
       .orderBy($"g").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     val b = df.groupBy($"g").agg(mode_agg($"v").as("mode_v"))
       .orderBy($"g").collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(a == b)
+  }
+
+  test("modeBy: string tie -> smallest string, nulls ignored, all-null group -> NULL") {
+    val df = Seq(("g", "pear"), ("g", "apple"), ("g", "pear"), ("g", "apple"),
+      ("h", null), ("h", null), ("h", "kiwi"), ("n", null), ("n", null)).toDF("k", "v")
+    val got = modeBy(df, Seq("k"), "v").collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(got == Map("g" -> Some("apple"), "h" -> Some("kiwi"), "n" -> None))
+    val ref = df.groupBy($"k").agg(mode_agg($"v")).collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(got == ref)
+  }
+
+  test("modeBy: primitive tie -> greatest value, nulls ignored, all-null group -> NULL") {
+    val df = Seq(("a", Some(1)), ("a", Some(2)), ("a", Some(2)), ("a", Some(3)),
+      ("b", Some(5)), ("b", Some(5)), ("b", Some(4)), ("b", Some(4)), ("b", None), ("b", None),
+      ("b", None), ("z", None)).toDF("k", "v").repartition(3)
+    val got = modeBy(df, Seq("k"), "v").collect()
+      .map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
+    assert(got == Map("a" -> Some(2), "b" -> Some(5), "z" -> None))
   }
 }

@@ -251,7 +251,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // calls with long literal patterns) once per consumer, and the
     // funnel's four mark joins repeat the chain's subtree prints —
     // STRING size is structural there, not an expression explosion.
-    // Measured r17 (PerfProbe, sf0.1): first−second = 0.3–6.8 s of
+    // Measured r17 (first vs second run in one JVM, sf0.1): first−second = 0.3–6.8 s of
     // planning+Janino vs the psiMulti pathology's 14 s for ONE stage.
     // Budgets sit ~30% above the r17 sizes so real growth still trips.
     val widePlanAllowed = Map(

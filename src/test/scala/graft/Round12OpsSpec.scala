@@ -17,8 +17,8 @@ class Round12OpsSpec extends AnyFunSuite {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-  /** The r11 single-window reference implementations (shared with
-    * BudgetScaleProbe via ProbeSupport — one definition of the oracle). */
+  /** The r11 single-window reference implementations (kept in
+    * ProbeSupport — one definition of the oracle). */
   private def budgetNaive(budget: Long) =
     graft.tools.ProbeSupport.budgetNaive(docs, budget)
   private def shardNaive(nShards: Int) =

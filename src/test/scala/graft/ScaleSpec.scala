@@ -30,7 +30,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   // ---- crawl-chain DECADE CONTRACT (r18, the r15 verdict's #7): the
-  // ×10 soak lived only in a probe (BudgetScaleProbe); a shape
+  // ×10 soak lived only in a hand-run probe; a shape
   // regression in any stage (a stage that goes all-pairs, an exchange
   // that starts carrying page text) would surface as a future bench
   // timeout instead of a failing test. Pin it here: wall ratio across

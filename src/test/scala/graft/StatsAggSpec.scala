@@ -102,4 +102,32 @@ class StatsAggSpec extends AnyFunSuite {
       assert(math.abs(m.getDouble(1) - s1.getDouble(1)) < 1e-9)
     }
   }
+
+  test("SQL edge cases: arity, unsupported and odd input types, DISTINCT, FILTER, NaN") {
+    def err(q: String): Throwable = intercept[Throwable](spark.sql(q).collect())
+    def first(q: String) = spark.sql(q).collect().head
+    val arity2 = err("SELECT graft_kurtosis(x, x) FROM VALUES (1.0) t(x)")
+    assert(arity2.isInstanceOf[IllegalArgumentException])
+    assert(arity2.getMessage == "graft_kurtosis requires exactly 1 argument, got 2")
+    val arity0 = err("SELECT graft_mode() FROM VALUES (1.0) t(x)")
+    assert(arity0.getMessage == "graft_mode requires exactly 1 argument, got 0")
+    val arr = err("SELECT graft_mode(array(1,2)) FROM VALUES (1) t(x)")
+    assert(arr.isInstanceOf[org.apache.spark.sql.AnalysisException])
+    assert(arr.getMessage.contains("graft_mode does not support input type array<int>"))
+    assert(first("SELECT graft_mode(b) FROM VALUES (true),(true),(false) t(b)").getBoolean(0))
+    val dec = spark.sql("SELECT graft_mode(d) FROM VALUES (CAST(1.5 AS DECIMAL(5,2))), " +
+      "(CAST(1.5 AS DECIMAL(5,2))), (CAST(2.5 AS DECIMAL(5,2))) t(d)")
+    assert(dec.schema.head.dataType == org.apache.spark.sql.types.DecimalType(5, 2))
+    assert(dec.collect().head.getDecimal(0) == new java.math.BigDecimal("1.50"))
+    // the cast to double is ANSI: a malformed string fails the query
+    val str = err("SELECT graft_kurtosis(s) FROM VALUES ('1'),('2'),('3'),('4'),('oops') t(s)")
+    assert(str.getMessage.contains("CAST_INVALID_INPUT"), str.getMessage)
+    assert(first("SELECT graft_kurtosis(x) FROM VALUES (1.0),(2.0),(cast('NaN' as double)),(3.0),(4.0) t(x)")
+      .getDouble(0).isNaN)
+    // DISTINCT collapses every count to 1, so the tie-break picks the greatest
+    assert(first("SELECT graft_mode(DISTINCT x) FROM VALUES (1),(1),(2) t(x)").getInt(0) == 2)
+    val filtered = first("SELECT graft_kurtosis(x) FILTER (WHERE x < 100) " +
+      "FROM VALUES (1.0),(2.0),(3.0),(4.0),(5.0),(1000.0) t(x)").getDouble(0)
+    assert(math.abs(filtered - -1.2) < 1e-12, filtered)
+  }
 }
