@@ -2,58 +2,34 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /**
  * `SparkSessionExtensions` injection point — the deployment analogue of the
- * reference's `register_all_extra_functions(ctx)`
- * (/root/reference/src/lib.rs:56-70), but wired through Spark's config:
+ * reference's `register_all_extra_functions(ctx)`: it injects every graft
+ * SQL function [[GraftFunctions.registerAll]] registers (the one
+ * [[GraftFunctions.sqlFunctions]] table), the [[graft.plans.ExactRound]]
+ * rewrite and the as-of planner strategy.
  *
  * {{{
  *   spark.sql.extensions=graft.functions.GraftExtensions
  * }}}
  *
- * makes every graft SQL function available in EVERY session of the cluster
- * (no per-session registration call), which is how a shared 1000-executor
- * deployment would ship this library.
+ * Spark reads this static conf only from the SparkContext's conf, so it
+ * must be set before the first session (and with it the SparkContext)
+ * starts — in `spark-defaults.conf` or on `spark-submit` — and then every
+ * session of the application has the functions with no per-session
+ * registration call. A `SparkSession.builder().config(...)` made after a
+ * SparkContext is running injects nothing; there, build the session with
+ * `SparkSession.builder().withExtensions(new GraftExtensions)`, or call
+ * [[GraftFunctions.registerAll]] on it.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "agg_funcs", "4.1.0", "", "built-in")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-      ("graft_kurtosis", "sample bias-corrected excess kurtosis",
-        args => GraftKurtosis(Cast(args.head, DoubleType))),
-      ("graft_kurtosis_pop", "population excess kurtosis",
-        args => GraftKurtosisPop(Cast(args.head, DoubleType))),
-      ("graft_skewness", "sample bias-corrected skewness",
-        args => GraftSkewness(Cast(args.head, DoubleType))),
-      ("graft_mode", "most frequent value (reference tie-break)",
-        args => GraftMode(args.head)),
-      ("graft_vector_mean", "element-wise mean of array<double> vectors",
-        args => VectorMean(Cast(args.head,
-          org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = true)))),
-      ("graft_vector_outer_sum",
-        "exact covariance sufficient stats of quantized array<bigint> vectors",
-        args => VectorOuterSum(args.head)),
-      ("kurtosis_samp", "sample bias-corrected excess kurtosis",
-        args => GraftKurtosis(Cast(args.head, DoubleType))),
-      ("kurtosis_pop", "population excess kurtosis",
-        args => GraftKurtosisPop(Cast(args.head, DoubleType))),
-      ("skewness_samp", "sample bias-corrected skewness",
-        args => GraftSkewness(Cast(args.head, DoubleType)))
-    )
-    fns.foreach { case (name, usage, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        info(name, usage),
-        (args: Seq[Expression]) => {
-          require(args.size == 1, s"$name requires exactly 1 argument, got ${args.size}")
-          builder(args)
-        }))
+    GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
     }
     // allocation-free round(double) at scale 0, bit-identical to Spark's
     ext.injectOptimizerRule(_ => graft.plans.ExactRound)

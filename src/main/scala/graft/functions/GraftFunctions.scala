@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -188,200 +188,165 @@ object GraftFunctions {
       .groupBy(keys.map(col): _*).agg(agg(pick).as(s"mode_$value"))
   }
 
-  /** Arity-checked unary builder (matches the reference's exact Float64
-    * signature erroring on wrong arity). */
-  private def unary(name: String, f: Expression => Expression): Seq[Expression] => Expression = {
-    case Seq(e) => f(e)
-    case other =>
-      throw new IllegalArgumentException(
-        s"$name requires exactly 1 argument, got ${other.size}")
-  }
+  // ── SQL surface ──────────────────────────────────────────────────────
+  /** Builds a SQL function's expression from its argument expressions. */
+  private[graft] type Builder = Seq[Expression] => Expression
 
-  /** Register every graft SQL function in the session registry, and the
-    * [[graft.plans.ExactRound]] rewrite in its optimizer. */
-  def registerAll(spark: SparkSession): Unit = {
-    ColumnBridge.addOptimizerRule(spark, graft.plans.ExactRound)
-    val fns: Seq[(String, Expression => Expression)] = Seq(
-      "graft_kurtosis" -> (e => GraftKurtosis(Cast(e, DoubleType))),
-      "graft_kurtosis_pop" -> (e => GraftKurtosisPop(Cast(e, DoubleType))),
-      "graft_skewness" -> (e => GraftSkewness(Cast(e, DoubleType))),
-      "graft_mode" -> (e => GraftMode(e)),
-      "graft_vector_mean" -> (e => VectorMean(
-        Cast(e, org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = true)))),
-      "graft_vector_outer_sum" -> (e => VectorOuterSum(e)),
-      // parity aliases for the non-conflicting reference names
-      "kurtosis_pop" -> (e => GraftKurtosisPop(Cast(e, DoubleType))),
-      "kurtosis_samp" -> (e => GraftKurtosis(Cast(e, DoubleType))),
-      "skewness_samp" -> (e => GraftSkewness(Cast(e, DoubleType)))
-    )
-    fns.foreach { case (name, f) =>
-      ColumnBridge.registerFunction(spark, name, unary(name, f))
-    }
-    // graft_kmv(x, k) — k must be a foldable integer literal
-    ColumnBridge.registerFunction(spark, "graft_kmv", {
-      case Seq(x, kExpr) if kExpr.foldable =>
-        KmvDistinctAgg(Cast(x, org.apache.spark.sql.types.StringType),
-          kExpr.eval().asInstanceOf[Number].intValue())
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_kmv requires (value, k-literal), got ${other.size} args")
-    })
-    // graft_topk(id, score, k) — k must be a foldable integer literal
-    ColumnBridge.registerFunction(spark, "graft_topk", {
-      case Seq(id, score, kExpr) if kExpr.foldable =>
-        TopKBy(id, Cast(score, DoubleType),
-          kExpr.eval().asInstanceOf[Number].intValue())
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_topk requires (id, score, k-literal), got ${other.size} args")
-    })
-    // graft_path_prefix(ts, id, label, k) — the earliest-k journey
-    // aggregate in SQL (usable under session_window there too)
-    ColumnBridge.registerFunction(spark, "graft_path_prefix", {
-      case Seq(ts, id, label, kExpr) if kExpr.foldable =>
-        PathPrefix(ts, id, label,
-          kExpr.eval().asInstanceOf[Number].intValue())
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_path_prefix requires (ts, id, label, k-literal), got ${other.size} args")
-    })
-    // graft_hll(x, b) — b must be a foldable integer literal
-    ColumnBridge.registerFunction(spark, "graft_hll", {
-      case Seq(x, bExpr) if bExpr.foldable =>
-        HllSketchAgg(Cast(x, org.apache.spark.sql.types.StringType),
-          bExpr.eval().asInstanceOf[Number].intValue())
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_hll requires (value, b-literal), got ${other.size} args")
-    })
-    // graft_histogram(x, lo, hi, nbins) — fixed-grid bin counts;
-    // lo/hi/nbins must be foldable literals
-    ColumnBridge.registerFunction(spark, "graft_histogram", {
-      case Seq(x, loE, hiE, nbE) if loE.foldable && hiE.foldable && nbE.foldable =>
+  /** A SQL builder taking exactly `n` arguments; any other count fails
+    * with the reference's wrong-arity error. */
+  private def nary(name: String, n: Int)(f: Builder): Builder = args =>
+    if (args.size == n) f(args)
+    else throw new IllegalArgumentException(
+      s"$name requires exactly $n argument${if (n == 1) "" else "s"}, got ${args.size}")
+
+  private def unary(name: String, f: Expression => Expression): (String, Builder) =
+    name -> nary(name, 1)(args => f(args.head))
+
+  /** Lift a Column→Column pipeline function into a SQL function. */
+  private def unaryCol(name: String, f: Column => Column): (String, Builder) =
+    unary(name, e => ex(f(ColumnBridge.column(e))))
+
+  private def binaryCol(name: String, f: (Column, Column) => Column): (String, Builder) =
+    name -> nary(name, 2)(args =>
+      ex(f(ColumnBridge.column(args(0)), ColumnBridge.column(args(1)))))
+
+  /** A SQL function with literal arguments: `f` accepts the argument
+    * lists it can build; any other fails with
+    * `<name> requires (<shape>), got <n> args`. */
+  private def shaped(name: String, shape: String)(
+      f: PartialFunction[Seq[Expression], Expression]): (String, Builder) =
+    name -> (args => f.applyOrElse(args, (other: Seq[Expression]) =>
+      throw new IllegalArgumentException(
+        s"$name requires ($shape), got ${other.size} args")))
+
+  /** The Int value of a literal argument. */
+  private def intLit(e: Expression, what: String): Int =
+    if (e.foldable) e.eval().asInstanceOf[Number].intValue()
+    else throw new IllegalArgumentException(s"$what must be a literal")
+
+  /** The aggregates and sketches in SQL. */
+  private def aggregateFunctions: Seq[(String, Builder)] = Seq(
+    unary("graft_kurtosis", e => GraftKurtosis(d(e))),
+    unary("graft_kurtosis_pop", e => GraftKurtosisPop(d(e))),
+    unary("graft_skewness", e => GraftSkewness(d(e))),
+    unary("graft_mode", GraftMode(_)),
+    unary("graft_vector_mean", e => VectorMean(Cast(e, ArrayType(DoubleType, containsNull = true)))),
+    unary("graft_vector_outer_sum", VectorOuterSum(_)),
+    // parity aliases for the non-conflicting reference names
+    unary("kurtosis_pop", e => GraftKurtosisPop(d(e))),
+    unary("kurtosis_samp", e => GraftKurtosis(d(e))),
+    unary("skewness_samp", e => GraftSkewness(d(e))),
+    shaped("graft_kmv", "value, k-literal") {
+      case Seq(x, k) if k.foldable => KmvDistinctAgg(Cast(x, StringType), intLit(k, "k"))
+    },
+    shaped("graft_topk", "id, score, k-literal") {
+      case Seq(id, score, k) if k.foldable => TopKBy(id, d(score), intLit(k, "k"))
+    },
+    // the earliest-k journey aggregate (usable under session_window in SQL too)
+    shaped("graft_path_prefix", "ts, id, label, k-literal") {
+      case Seq(ts, id, label, k) if k.foldable => PathPrefix(ts, id, label, intLit(k, "k"))
+    },
+    shaped("graft_hll", "value, b-literal") {
+      case Seq(x, b) if b.foldable => HllSketchAgg(Cast(x, StringType), intLit(b, "b"))
+    },
+    // fixed-grid bin counts
+    shaped("graft_histogram", "value, lo, hi, nbins literals") {
+      case Seq(x, lo, hi, nb) if lo.foldable && hi.foldable && nb.foldable =>
         // SQL double literals fold to Decimal, not java.lang.Number
-        def d(e: Expression): Double = e.eval() match {
+        def bound(e: Expression): Double = e.eval() match {
           case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
           case n: Number => n.doubleValue()
           case other => throw new IllegalArgumentException(
             s"graft_histogram bound must be numeric, got $other")
         }
-        HistogramAgg(Cast(x, DoubleType), d(loE), d(hiE),
-          nbE.eval().asInstanceOf[Number].intValue())
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_histogram requires (value, lo, hi, nbins literals), got ${other.size} args")
-    })
-    // graft_bloom_build(x, mBits, k) / graft_bloom_hits(bits, grams, mBits, k)
-    // — the SQL face of the runtime-filter / decontamination pair;
-    // mBits and k must be foldable integer literals
-    def lit(e: Expression, what: String): Int =
-      if (e.foldable) e.eval().asInstanceOf[Number].intValue()
-      else throw new IllegalArgumentException(s"$what must be a literal")
-    ColumnBridge.registerFunction(spark, "graft_bloom_build", {
+        HistogramAgg(d(x), bound(lo), bound(hi), intLit(nb, "nbins"))
+    },
+    // the SQL face of the runtime-filter / decontamination pair
+    shaped("graft_bloom_build", "value, mBits, k") {
       case Seq(x, m, k) =>
-        BloomBitsAgg(Cast(x, org.apache.spark.sql.types.StringType),
-          lit(m, "mBits"), lit(k, "numHashes"))
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_bloom_build requires (value, mBits, k), got ${other.size} args")
-    })
-    ColumnBridge.registerFunction(spark, "graft_bloom_hits", {
+        BloomBitsAgg(Cast(x, StringType), intLit(m, "mBits"), intLit(k, "numHashes"))
+    },
+    shaped("graft_bloom_hits", "bits, grams, mBits, k") {
       case Seq(bits, grams, m, k) =>
-        BloomHitCount(bits, grams, lit(m, "mBits"), lit(k, "numHashes"))
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_bloom_hits requires (bits, grams, mBits, k), got ${other.size} args")
+        BloomHitCount(bits, grams, intLit(m, "mBits"), intLit(k, "numHashes"))
     })
-    registerTextFunctions(spark)
-  }
 
-  /** Lift a Column→Column pipeline function into a SQL builder. */
-  private def unaryCol(name: String, f: Column => Column): Seq[Expression] => Expression = {
-    case Seq(e) => ex(f(ColumnBridge.column(e)))
-    case other =>
-      throw new IllegalArgumentException(
-        s"$name requires exactly 1 argument, got ${other.size}")
-  }
-
-  /**
-   * SQL surface for the text-pipeline operators: everything in
-   * [[graft.ops.TextOps]] callable from `spark.sql` (so a pure-SQL user
-   * has the full pipeline, not just the aggregates). Registered by
-   * [[registerAll]].
-   */
-  def registerTextFunctions(spark: SparkSession): Unit = {
-    import graft.ops.TextOps
-    val fns: Seq[(String, Column => Column)] = Seq(
-      "graft_tokens" -> (TextOps.tokensNative(_)),
-      "graft_langid" -> (TextOps.langIdText(_)),
-      "graft_quality" -> (TextOps.qualityScore(_)),
-      "graft_text_stats" -> (TextOps.textStats(_)),
-      "graft_token_count_ws" -> (TextOps.tokenCountWs(_)),
-      "graft_token_count_bpe" -> (TextOps.tokenCountBpe(_)),
-      "graft_fingerprint" -> (TextOps.fingerprint(_)),
-      "graft_simhash" -> (c => TextOps.simhash64(TextOps.tokensNative(c))),
-      "graft_shingles" -> (TextOps.tokenShingles(_)),
-      // the r15-r17 crawl family — a pure-SQL user gets the whole
-      // page-cleaning chain, not just the classic text metrics
-      "graft_extract_html" -> (TextOps.extractHtmlText(_)),
-      "graft_normalize_text" -> (TextOps.normalizeUnicode(_)),
-      "graft_mojibake" -> (TextOps.mojibakeScore(_)),
-      "graft_langid_cjk" -> (TextOps.langIdCjk(_)),
-      "graft_token_count_cjk" -> (TextOps.tokenCountCjk(_)),
-      "graft_redact" -> (TextOps.redact(_)),
-      "graft_redact_pii" -> (TextOps.redactPii(_)),
-      "graft_gopher_keep" -> (TextOps.gopherKeep(_)),
-      "graft_canonical_url" -> (TextOps.canonicalUrl(_)),
+  /** The text-pipeline operators of [[graft.ops.TextOps]] and the
+    * pairwise similarities in SQL, so a pure-SQL user has the full
+    * pipeline, not just the aggregates. */
+  private def textFunctions: Seq[(String, Builder)] = {
+    import graft.ops.{Similarity, TextOps}
+    Seq(
+      unaryCol("graft_tokens", TextOps.tokensNative(_)),
+      unaryCol("graft_langid", TextOps.langIdText(_)),
+      unaryCol("graft_quality", TextOps.qualityScore(_)),
+      unaryCol("graft_text_stats", TextOps.textStats(_)),
+      unaryCol("graft_token_count_ws", TextOps.tokenCountWs(_)),
+      unaryCol("graft_token_count_bpe", TextOps.tokenCountBpe(_)),
+      unaryCol("graft_fingerprint", TextOps.fingerprint(_)),
+      unaryCol("graft_simhash", c => TextOps.simhash64(TextOps.tokensNative(c))),
+      unaryCol("graft_shingles", TextOps.tokenShingles(_)),
+      // the r15-r17 crawl family — the whole page-cleaning chain
+      unaryCol("graft_extract_html", TextOps.extractHtmlText(_)),
+      unaryCol("graft_normalize_text", TextOps.normalizeUnicode(_)),
+      unaryCol("graft_mojibake", TextOps.mojibakeScore(_)),
+      unaryCol("graft_langid_cjk", TextOps.langIdCjk(_)),
+      unaryCol("graft_token_count_cjk", TextOps.tokenCountCjk(_)),
+      unaryCol("graft_redact", TextOps.redact(_)),
+      unaryCol("graft_redact_pii", TextOps.redactPii(_)),
+      unaryCol("graft_gopher_keep", TextOps.gopherKeep(_)),
+      unaryCol("graft_canonical_url", TextOps.canonicalUrl(_)),
       // the r18 byte-level tokenizer family
-      "graft_pretokenize" -> (TextOps.preTokenize(_)),
-      "graft_byte_units" -> (c => TextOps.byteLevelUnits(TextOps.preTokenize(c))),
+      unaryCol("graft_pretokenize", TextOps.preTokenize(_)),
+      unaryCol("graft_byte_units", c => TextOps.byteLevelUnits(TextOps.preTokenize(c))),
       // the r19 link-graph family
-      "graft_extract_hrefs" -> (TextOps.extractHrefs(_))
-    )
-    fns.foreach { case (name, f) =>
-      ColumnBridge.registerFunction(spark, name, unaryCol(name, f))
-    }
-    ColumnBridge.registerFunction(spark, "graft_minhash", {
-      case Seq(e, Literal(k: Int, _)) =>
-        MinHashSignature(
-          ex(TextOps.tokenShingles(ColumnBridge.column(e))), k)
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_minhash requires (text, k int literal), got $other")
-    })
-    // pairwise similarity: cosine over embeddings, Jaccard over texts
-    def binaryCol(name: String, f: (Column, Column) => Column): Seq[Expression] => Expression = {
-      case Seq(a, b) => ex(f(ColumnBridge.column(a), ColumnBridge.column(b)))
-      case other => throw new IllegalArgumentException(
-        s"$name requires exactly 2 arguments, got ${other.size}")
-    }
-    ColumnBridge.registerFunction(spark, "graft_cosine", binaryCol("graft_cosine", (a, b) => {
-      import graft.ops.Similarity
-      val (ad, bd) = (Similarity.toDouble(a), Similarity.toDouble(b))
-      Similarity.dot(ad, bd) / (Similarity.l2norm(ad) * Similarity.l2norm(bd))
-    }))
-    ColumnBridge.registerFunction(spark, "graft_jaro_winkler",
-      binaryCol("graft_jaro_winkler", (a, b) => jaro_winkler(a, b)))
-    ColumnBridge.registerFunction(spark, "graft_jaccard", binaryCol("graft_jaccard", (a, b) => {
-      val sa = array_distinct(TextOps.shingles3(TextOps.tokens(a)))
-      val sb = array_distinct(TextOps.shingles3(TextOps.tokens(b)))
-      val inter = size(array_intersect(sa, sb)).cast("double")
-      inter / ((size(sa) + size(sb)).cast("double") - inter)
-    }))
-    // graft_srp(vec, planes, dim) — the SRP sign signature as SQL, so a
-    // pure-SQL user can band/bucket embeddings for LSH dedup/ANN the
-    // same way the Scala pipeline does (identical md5-seeded planes)
-    ColumnBridge.registerFunction(spark, "graft_srp", {
-      case Seq(v, p, d) if p.foldable && d.foldable =>
-        SrpSignature(
-          Cast(v, org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = true)),
-          p.eval().asInstanceOf[Number].intValue(),
-          d.eval().asInstanceOf[Number].intValue())
-      case other =>
-        throw new IllegalArgumentException(
-          s"graft_srp requires (vector, planes-literal, dim-literal), got ${other.size} args")
-    })
+      unaryCol("graft_extract_hrefs", TextOps.extractHrefs(_)),
+      shaped("graft_minhash", "text, k int literal") {
+        case Seq(e, Literal(k: Int, _)) =>
+          MinHashSignature(ex(TextOps.tokenShingles(ColumnBridge.column(e))), k)
+      },
+      // pairwise similarity: cosine over embeddings, Jaccard over texts
+      binaryCol("graft_cosine", (a, b) => {
+        val (ad, bd) = (Similarity.toDouble(a), Similarity.toDouble(b))
+        Similarity.dot(ad, bd) / (Similarity.l2norm(ad) * Similarity.l2norm(bd))
+      }),
+      binaryCol("graft_jaro_winkler", jaro_winkler),
+      binaryCol("graft_jaccard", (a, b) => {
+        val sa = array_distinct(TextOps.shingles3(TextOps.tokens(a)))
+        val sb = array_distinct(TextOps.shingles3(TextOps.tokens(b)))
+        val inter = size(array_intersect(sa, sb)).cast("double")
+        inter / ((size(sa) + size(sb)).cast("double") - inter)
+      }),
+      // the SRP sign signature, so a pure-SQL user can band/bucket
+      // embeddings for LSH dedup/ANN the same way the Scala pipeline
+      // does (identical md5-seeded planes)
+      shaped("graft_srp", "vector, planes-literal, dim-literal") {
+        case Seq(v, p, dim) if p.foldable && dim.foldable =>
+          SrpSignature(Cast(v, ArrayType(DoubleType, containsNull = true)),
+            intLit(p, "planes"), intLit(dim, "dim"))
+      })
   }
+
+  /** Every graft SQL function, name → builder, declared once:
+    * [[registerAll]] registers them in one session and
+    * [[GraftExtensions]] injects them into every session. */
+  private[graft] def sqlFunctions: Seq[(String, Builder)] =
+    aggregateFunctions ++ textFunctions
+
+  private def register(spark: SparkSession, fns: Seq[(String, Builder)]): Unit =
+    fns.foreach { case (name, f) => ColumnBridge.registerFunction(spark, name, f) }
+
+  /** Register every graft SQL function in the session registry, and the
+    * [[graft.plans.ExactRound]] rewrite in its optimizer. */
+  def registerAll(spark: SparkSession): Unit = {
+    ColumnBridge.addOptimizerRule(spark, graft.plans.ExactRound)
+    register(spark, sqlFunctions)
+  }
+
+  /** Register only the text-pipeline and pairwise-similarity SQL
+    * functions (a subset of [[registerAll]]). */
+  def registerTextFunctions(spark: SparkSession): Unit =
+    register(spark, textFunctions)
 
   /**
    * Drop-in compatibility with the reference's SQL names
@@ -399,27 +364,16 @@ object GraftFunctions {
    * MinBy/MaxBy nodes directly ([[max_by]]/[[min_by]]/[[max_by_det]]/
    * [[min_by_det]]), proven by the shadowed-session spec.
    */
-  def registerReferenceNames(spark: SparkSession): Unit = {
-    val fns: Seq[(String, Expression => Expression)] = Seq(
-      "mode" -> (e => GraftMode(e)),
-      "skewness" -> (e => GraftSkewness(Cast(e, DoubleType))),
-      "kurtosis" -> (e => GraftKurtosis(Cast(e, DoubleType))),
-      "kurtosis_pop" -> (e => GraftKurtosisPop(Cast(e, DoubleType)))
-    )
-    fns.foreach { case (name, f) =>
-      ColumnBridge.registerFunction(spark, name, unary(name, f))
-    }
-    // max_by/min_by differ from Spark's built-ins in the reference: a
-    // NULL ordering key WINS (last_value ... NULLS LAST rewrite,
-    // max_min_by.rs:99,196) — verbatim-migrated SQL gets the snapshot
-    // semantics via the *_ref builders, not the ignore-nulls built-ins
-    def binaryRef(name: String, f: (Column, Column) => Column): Unit =
-      ColumnBridge.registerFunction(spark, name, {
-        case Seq(x, y) => ex(f(ColumnBridge.column(x), ColumnBridge.column(y)))
-        case other => throw new IllegalArgumentException(
-          s"$name requires exactly 2 arguments, got ${other.size}")
-      })
-    binaryRef("max_by", max_by_ref)
-    binaryRef("min_by", min_by_ref)
-  }
+  def registerReferenceNames(spark: SparkSession): Unit =
+    register(spark, Seq(
+      unary("mode", GraftMode(_)),
+      unary("skewness", e => GraftSkewness(d(e))),
+      unary("kurtosis", e => GraftKurtosis(d(e))),
+      unary("kurtosis_pop", e => GraftKurtosisPop(d(e))),
+      // max_by/min_by differ from Spark's built-ins in the reference: a
+      // NULL ordering key WINS (last_value ... NULLS LAST rewrite,
+      // max_min_by.rs:99,196) — verbatim-migrated SQL gets the snapshot
+      // semantics via the *_ref builders, not the ignore-nulls built-ins
+      binaryCol("max_by", max_by_ref),
+      binaryCol("min_by", min_by_ref)))
 }

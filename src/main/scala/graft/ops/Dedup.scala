@@ -1312,6 +1312,21 @@ object Dedup {
    */
   def winnowPairs(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 24, w: Int = 8, minShared: Long = 2L): DataFrame = {
+    val tk = winnowFingerprints(docs, idCol, textCol, k, w)
+    tk.as("a")
+      .join(tk.as("b"),
+        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+      .groupBy(col("id1"), col("id2"))
+      .agg(count(lit(1)).as("shared_fp"))
+      .filter(col("shared_fp") >= minShared)
+  }
+
+  /** The fingerprint front of [[winnowPairs]] and [[winnowPairsCapped]]:
+    * distinct (doc_id, fp) winnowing fingerprints, repartitioned by fp
+    * for the self-join. */
+  private def winnowFingerprints(docs: DataFrame, idCol: String,
+      textCol: String, k: Int, w: Int): DataFrame = {
     require(k >= 2 && w >= 2, s"need k,w >= 2, got k=$k w=$w")
     import org.apache.spark.sql.expressions.Window
     // r18 (guide §2.5): fan a one-row-group scan out before the
@@ -1344,20 +1359,13 @@ object Dedup {
       .repartition(col("doc_id"))
     val byDoc = Window.partitionBy(col("doc_id"))
     val slide = byDoc.orderBy(col("p")).rowsBetween(0, w - 1)
-    val tk = hashed
+    hashed
       .withColumn("fp", min(col("h")).over(slide))
       // only windows fully inside the doc (a short doc keeps p=1: its
       // frame spans every hash — the single-window degenerate case)
       .filter(col("p") <= greatest(col("nh") - lit(w - 1), lit(1)))
       .select(col("doc_id"), col("fp")).distinct()
       .repartition(col("fp"))
-    tk.as("a")
-      .join(tk.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("shared_fp"))
-      .filter(col("shared_fp") >= minShared)
   }
 
   /**
@@ -1387,32 +1395,10 @@ object Dedup {
   def winnowPairsCapped(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 24, w: Int = 8, minShared: Long = 2L,
       maxBucket: Int = 64): DataFrame = {
-    require(k >= 2 && w >= 2, s"need k,w >= 2, got k=$k w=$w")
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     import org.apache.spark.sql.expressions.Window
-    // r18: scan fan-out + pre-explode nh — see [[winnowPairs]].
-    val nr = Scale.fanOutSmallScan(
-        docs.select(col(idCol).as("doc_id"), col(textCol).as("__raw")),
-        col("doc_id"))
-      .select(col("doc_id"),
-        regexp_replace(lower(col("__raw")), "\\s+", " ").as("nrm"))
-    val hashed = nr
-      .select(col("doc_id"), col("nrm"),
-        greatest(length(col("nrm")) - lit(k - 1), lit(1)).as("nh"),
-        explode(sequence(lit(1), greatest(length(col("nrm")) - lit(k - 1), lit(1))))
-          .as("p"))
-      .select(col("doc_id"), col("nh"), col("p"),
-        conv(substring(md5(expr(s"substr(nrm, p, $k)")), 1, 8), 16, 10)
-          .cast("long").as("h"))
-      .repartition(col("doc_id"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    val slide = byDoc.orderBy(col("p")).rowsBetween(0, w - 1)
     val byFp = Window.partitionBy(col("fp"))
-    val tk = hashed
-      .withColumn("fp", min(col("h")).over(slide))
-      .filter(col("p") <= greatest(col("nh") - lit(w - 1), lit(1)))
-      .select(col("doc_id"), col("fp")).distinct()
-      .repartition(col("fp"))
+    val tk = winnowFingerprints(docs, idCol, textCol, k, w)
       .withColumn("m", count(lit(1)).over(byFp))
       .withColumn("hub", min(col("doc_id")).over(byFp))
     val small = tk.filter(col("m") <= maxBucket)

@@ -135,9 +135,16 @@ object Events {
    * session_window end), vs sessionize's last-event end.
    */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    EventTime.normalizeTs(events)
+    sessionWindowAgg(EventTime.normalizeTs(events)
       .select(col("user_id"),
-        timestamp_micros(expr("ts div 1000L")).as("event_time"), col("value"))
+        timestamp_micros(expr("ts div 1000L")).as("event_time"), col("value")), gap)
+
+  /** The session aggregate of [[sessionWindows]] and its streaming twin
+    * [[graft.streaming.EventStreams.sessionWindowsStream]]: over rows
+    * with (user_id, event_time, value), one row per (user, session) —
+    * start_us, end_us, n_events and the micro-scaled `sum_value`. */
+  private[graft] def sessionWindowAgg(timed: DataFrame, gap: String): DataFrame =
+    timed
       .groupBy(col("user_id"), session_window(col("event_time"), gap).as("sw"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -162,17 +169,25 @@ object Events {
   def sessionPaths(events: DataFrame, maxSteps: Int = 5,
       gap: String = "30 minutes"): DataFrame = {
     require(maxSteps >= 1, s"maxSteps must be >= 1, got $maxSteps")
-    EventTime.normalizeTs(events)
+    sessionPathAgg(EventTime.normalizeTs(events)
       .select(col("user_id"), expr("ts div 1000L").as("tsu"),
         col("event_id"), col("event_type"))
-      .withColumn("event_time", timestamp_micros(col("tsu")))
+      .withColumn("event_time", timestamp_micros(col("tsu"))), maxSteps, gap)
+  }
+
+  /** The session aggregate of [[sessionPaths]] and its streaming twin
+    * [[graft.streaming.EventStreams.sessionPathsStream]]: over rows with
+    * (user_id, event_time, tsu, event_id, event_type), one row per
+    * (user, session) — start_us, the first-maxSteps path, n_events. */
+  private[graft] def sessionPathAgg(timed: DataFrame, maxSteps: Int,
+      gap: String): DataFrame =
+    timed
       .groupBy(col("user_id"), session_window(col("event_time"), gap).as("sw"))
       .agg(graft.functions.GraftFunctions.path_prefix(
           col("tsu"), col("event_id"), col("event_type"), maxSteps).as("path"),
         count(lit(1)).as("n_events"))
       .select(col("user_id"), unix_micros(col("sw.start")).as("start_us"),
         col("path"), col("n_events"))
-  }
 
   /**
    * AS-OF join, Spark-first: for every left row, the latest right row
@@ -193,16 +208,40 @@ object Events {
   def asOfJoin(
       left: DataFrame, right: DataFrame,
       keyCol: String, tsCol: String, valueCols: Seq[String]): DataFrame = {
-    // NULL right timestamps can never satisfy `right.ts <= left.ts`
-    // (SQL inequality semantics, same as the native operator and the
-    // ASOF oracle) — but nulls-first ordering would let the running
-    // `last(..., ignoreNulls)` carry a null-ts row's VALUES while
-    // skipping its null ts, emitting an inconsistent (null ts, value)
-    // pair. Filter them out up front. NULL LEFT ts rows sort first in
-    // their key group, so nothing precedes them and they carry nulls.
+    val (sides, leftCols) = asOfSides(left, right, keyCol, tsCol, valueCols)
+    val w = Window
+      .partitionBy(col(keyCol))
+      .orderBy(col(tsCol).asc, col("__side").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val carried = valueCols.foldLeft(sides) { (df, c) =>
+      df.withColumn(s"asof_$c", last(when(col("__side") === 0, col(c)), ignoreNulls = true).over(w))
+    }
+    val asofTs = last(when(col("__side") === 0, col(tsCol)), ignoreNulls = true).over(w)
+    carried
+      .withColumn(s"asof_$tsCol", asofTs)
+      .filter(col("__side") === 1)
+      .select(
+        (Seq(col(keyCol), col(tsCol)) ++ leftCols.map(col) ++
+          (s"asof_$tsCol" +: valueCols.map(c => s"asof_$c")).map(col)): _*)
+  }
+
+  /** The one stream both window as-of joins run over: left rows
+    * (`__side` 1) and right rows (`__side` 0) unioned by name, each side
+    * null-padded with the other's columns. Returns it with the left
+    * columns other than key and ts.
+    *
+    * NULL right timestamps can never satisfy `right.ts <= left.ts`
+    * (SQL inequality semantics, same as the native operator and the
+    * ASOF oracle) — but nulls-first ordering would let the running
+    * `last(..., ignoreNulls)` carry a null-ts row's VALUES while
+    * skipping its null ts, emitting an inconsistent (null ts, value)
+    * pair. They are filtered out up front. NULL LEFT ts rows sort first
+    * in their key group, so nothing precedes them and they carry nulls. */
+  private def asOfSides(left: DataFrame, right: DataFrame, keyCol: String,
+      tsCol: String, valueCols: Seq[String]): (DataFrame, Seq[String]) = {
     val leftN = EventTime.normalizeMicros(left, tsCol)
     val rightClean = EventTime.normalizeMicros(right, tsCol).filter(col(tsCol).isNotNull)
-    val leftCols = left.columns.filterNot(c => c == keyCol || c == tsCol)
+    val leftCols = left.columns.toSeq.filterNot(c => c == keyCol || c == tsCol)
     val l = leftN
       .withColumn("__side", lit(1))
       .select(
@@ -215,20 +254,7 @@ object Events {
         (Seq(col(keyCol), col(tsCol), col("__side")) ++
           leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
           valueCols.map(col)): _*)
-    val w = Window
-      .partitionBy(col(keyCol))
-      .orderBy(col(tsCol).asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = valueCols.foldLeft(l.unionByName(r)) { (df, c) =>
-      df.withColumn(s"asof_$c", last(when(col("__side") === 0, col(c)), ignoreNulls = true).over(w))
-    }
-    val asofTs = last(when(col("__side") === 0, col(tsCol)), ignoreNulls = true).over(w)
-    carried
-      .withColumn(s"asof_$tsCol", asofTs)
-      .filter(col("__side") === 1)
-      .select(
-        (Seq(col(keyCol), col(tsCol)) ++ leftCols.map(col) ++
-          (s"asof_$tsCol" +: valueCols.map(c => s"asof_$c")).map(col)): _*)
+    (l.unionByName(r), leftCols)
   }
 
   /**
@@ -266,28 +292,14 @@ object Events {
   def asOfJoinNearest(
       left: DataFrame, right: DataFrame,
       keyCol: String, tsCol: String, valueCols: Seq[String]): DataFrame = {
-    val leftN = EventTime.normalizeMicros(left, tsCol)
-    val rightClean = EventTime.normalizeMicros(right, tsCol).filter(col(tsCol).isNotNull)
-    val leftCols = left.columns.filterNot(c => c == keyCol || c == tsCol)
-    val l = leftN
-      .withColumn("__side", lit(1))
-      .select(
-        (Seq(col(keyCol), col(tsCol), col("__side")) ++
-          leftCols.map(col) ++
-          valueCols.map(c => lit(null).cast(right.schema(c).dataType).as(c))): _*)
-    val r = rightClean
-      .withColumn("__side", lit(0))
-      .select(
-        (Seq(col(keyCol), col(tsCol), col("__side")) ++
-          leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-          valueCols.map(col)): _*)
+    val (sides, leftCols) = asOfSides(left, right, keyCol, tsCol, valueCols)
     val wB = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol).asc, col("__side").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wF = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol).desc, col("__side").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withCarries = valueCols.foldLeft(l.unionByName(r)) { (df, c) =>
+    val withCarries = valueCols.foldLeft(sides) { (df, c) =>
       df.withColumn(s"__b_$c", last(when(col("__side") === 0, col(c)), ignoreNulls = true).over(wB))
         .withColumn(s"__f_$c", last(when(col("__side") === 0, col(c)), ignoreNulls = true).over(wF))
     }
@@ -1097,6 +1109,19 @@ object Events {
         round(col("__value") / col("n_touches"), 6).as("linear_credit"))
   }
 
+  /** The experiment arm (0 control, 1 treatment) of `user_id`: the low
+    * bit of its md5's first 32 bits — the same split in every engine. */
+  private def userArm: Column =
+    (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
+      .cast("long") % 2).cast("int")
+
+  /** Per user: arm and `sm`, the exact micro-unit sum of `value`. */
+  private def userSums(events: DataFrame): DataFrame =
+    EventTime.normalizeTs(events)
+      .groupBy(col("user_id"))
+      .agg(sum(round(col("value") * 1000000).cast("long")).as("sm"))
+      .withColumn("arm", userArm)
+
   /**
    * A/B EXPERIMENT READOUT: deterministic 50/50 arm assignment by md5
    * of the unit key (engine-replayable, stable under data growth —
@@ -1114,15 +1139,7 @@ object Events {
    * aggregation (map-side combinable) + one 1-row arm pivot; no
    * window, no sort. Arms with <2 users → NULL z (no ANSI throw).
    */
-  def abLift(events: DataFrame): DataFrame = {
-    val byUser = EventTime.normalizeTs(events)
-      .groupBy(col("user_id"))
-      .agg(sum(round(col("value") * 1000000).cast("long")).as("sm"))
-      .withColumn("arm",
-        (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 2).cast("int"))
-    armReadout(byUser)
-  }
+  def abLift(events: DataFrame): DataFrame = armReadout(userSums(events))
 
   /**
    * SEGMENTED experiment readout — [[abLift]] per user segment (the
@@ -1147,11 +1164,20 @@ object Events {
       .agg(sum(col("__vmic")).as("sm"),
         min_by(col("__seg"), struct(col("__tsu"), col("event_id")))
           .as("segment"))
-      .withColumn("arm",
-        (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 2).cast("int"))
+      .withColumn("arm", userArm)
     armReadout(byUser, Seq("segment"))
   }
+
+  /** Arm `s`'s mean in VALUE units from its exact moments (n_s, s1_s). */
+  private def armMean(s: String): Column =
+    col(s"s1_$s").cast("double") / col(s"n_$s") / 1e6
+
+  /** Arm `s`'s sample variance in VALUE units: (n·S2 − S1²) exact, then
+    * one double conversion, ÷ n(n−1) ÷ 1e12. */
+  private def armVariance(s: String): Column =
+    (col(s"n_$s") * col(s"s2_$s") - col(s"s1_$s") * col(s"s1_$s"))
+      .cast("double") /
+      (col(s"n_$s").cast("double") * (col(s"n_$s") - 1L).cast("double")) / 1e12
 
   /** The arm-moment fold shared by [[abLift]] (global) and
     * [[abLiftBy]] (per segment): exact integral moments, one Welch z
@@ -1169,25 +1195,18 @@ object Events {
     val aggs = armAgg(0, "c") ++ armAgg(1, "t")
     val keyCols = keys.map(col)
     val wide = byUser.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
-    def mean(s: String) = col(s"s1_$s").cast("double") / col(s"n_$s") / 1e6
-    // sample variance in VALUE units: (n·S2 − S1²) exact, then one
-    // double conversion, ÷ n(n−1) ÷ 1e12
-    def variance(s: String) =
-      (col(s"n_$s") * col(s"s2_$s") - col(s"s1_$s") * col(s"s1_$s"))
-        .cast("double") /
-        (col(s"n_$s").cast("double") * (col(s"n_$s") - 1L).cast("double")) / 1e12
     val ok = col("n_c") > 1L && col("n_t") > 1L
     val both = col("n_c") > 0L && col("n_t") > 0L
     wide.select(keyCols ++ Seq(
       col("n_c"), col("n_t"),
-      round(when(col("n_c") > 0L, mean("c")).otherwise(lit(null)), 6)
+      round(when(col("n_c") > 0L, armMean("c")).otherwise(lit(null)), 6)
         .as("mean_c"),
-      round(when(col("n_t") > 0L, mean("t")).otherwise(lit(null)), 6)
+      round(when(col("n_t") > 0L, armMean("t")).otherwise(lit(null)), 6)
         .as("mean_t"),
-      round(when(both, mean("t") - mean("c")).otherwise(lit(null)), 6)
+      round(when(both, armMean("t") - armMean("c")).otherwise(lit(null)), 6)
         .as("lift"),
-      round(when(ok, (mean("t") - mean("c")) /
-        sqrt(variance("t") / col("n_t") + variance("c") / col("n_c")))
+      round(when(ok, (armMean("t") - armMean("c")) /
+        sqrt(armVariance("t") / col("n_t") + armVariance("c") / col("n_c")))
         .otherwise(lit(null)), 6).as("z")): _*)
   }
 
@@ -1220,9 +1239,7 @@ object Events {
       .agg(
         sum(when(col("tsu") < cutoffMicros, col("vmic")).otherwise(0L)).as("x"),
         sum(when(col("tsu") >= cutoffMicros, col("vmic")).otherwise(0L)).as("y"))
-      .withColumn("arm",
-        (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 2).cast("int"))
+      .withColumn("arm", userArm)
     def dd(c: Column) = c.cast("decimal(19,0)")
     def prod(a: Column, b: Column) = (dd(a) * dd(b)).cast("decimal(38,0)")
     def moments(flt: Column => Column, s: String) = Seq(
@@ -1291,12 +1308,7 @@ object Events {
    * has < 2 users or zero variance.
    */
   def abPower(events: DataFrame): DataFrame = {
-    val byUser = EventTime.normalizeTs(events)
-      .groupBy(col("user_id"))
-      .agg(sum(round(col("value") * 1000000).cast("long")).as("sm"))
-      .withColumn("arm",
-        (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 2).cast("int"))
+    val byUser = userSums(events)
     def armAgg(a: Int, name: String) = Seq(
       sum(when(col("arm") === a, 1L).otherwise(0L)).as(s"n_$name"),
       sum(when(col("arm") === a, col("sm")).otherwise(0L))
@@ -1307,12 +1319,8 @@ object Events {
         .cast("decimal(38,0)").as(s"s2_$name"))
     val aggs = armAgg(0, "c") ++ armAgg(1, "t")
     val wide = byUser.agg(aggs.head, aggs.tail: _*)
-    def variance(s: String) =
-      (col(s"n_$s") * col(s"s2_$s") - col(s"s1_$s") * col(s"s1_$s"))
-        .cast("double") /
-        (col(s"n_$s").cast("double") * (col(s"n_$s") - 1L).cast("double")) / 1e12
-    val se = sqrt(variance("t") / col("n_t") + variance("c") / col("n_c"))
-    val meanC = col("s1_c").cast("double") / col("n_c") / 1e6
+    val se = sqrt(armVariance("t") / col("n_t") + armVariance("c") / col("n_c"))
+    val meanC = armMean("c")
     val ok = col("n_c") > 1L && col("n_t") > 1L
     wide.select(
       col("n_c"), col("n_t"),
@@ -1341,9 +1349,7 @@ object Events {
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === convType &&
         col("tsu") >= cutoffMicros, 1L).otherwise(0L)).as("conv"))
-      .withColumn("arm",
-        (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 2).cast("int"))
+      .withColumn("arm", userArm)
     val wide = byUser.agg(
       sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_c"),
       sum(when(col("arm") === 0, col("conv")).otherwise(0L)).as("x_c"),
@@ -1391,9 +1397,7 @@ object Events {
       .groupBy(col("user_id"))
       .agg(sum(when(col("tsu") >= cutoffMicros, col("vmic"))
         .otherwise(-col("vmic"))).as("d"))
-      .withColumn("arm",
-        (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 2).cast("int"))
+      .withColumn("arm", userArm)
     def armAgg(a: Int, name: String) = Seq(
       sum(when(col("arm") === a, 1L).otherwise(0L)).as(s"n_$name"),
       // decimal(38,0): s1² at cluster scale overflows a long (ANSI throw)
@@ -1405,23 +1409,18 @@ object Events {
         .cast("decimal(38,0)").as(s"s2_$name"))
     val aggs = armAgg(0, "c") ++ armAgg(1, "t")
     val wide = byUser.agg(aggs.head, aggs.tail: _*)
-    def mean(s: String) = col(s"s1_$s").cast("double") / col(s"n_$s") / 1e6
-    def variance(s: String) =
-      (col(s"n_$s") * col(s"s2_$s") - col(s"s1_$s") * col(s"s1_$s"))
-        .cast("double") /
-        (col(s"n_$s").cast("double") * (col(s"n_$s") - 1L).cast("double")) / 1e12
     val ok = col("n_c") > 1L && col("n_t") > 1L
     val both = col("n_c") > 0L && col("n_t") > 0L
     wide.select(
       col("n_c"), col("n_t"),
-      round(when(col("n_c") > 0L, mean("c")).otherwise(lit(null)), 6)
+      round(when(col("n_c") > 0L, armMean("c")).otherwise(lit(null)), 6)
         .as("delta_c"),
-      round(when(col("n_t") > 0L, mean("t")).otherwise(lit(null)), 6)
+      round(when(col("n_t") > 0L, armMean("t")).otherwise(lit(null)), 6)
         .as("delta_t"),
-      round(when(both, mean("t") - mean("c")).otherwise(lit(null)), 6)
+      round(when(both, armMean("t") - armMean("c")).otherwise(lit(null)), 6)
         .as("did"),
-      round(when(ok, (mean("t") - mean("c")) /
-        sqrt(variance("t") / col("n_t") + variance("c") / col("n_c")))
+      round(when(ok, (armMean("t") - armMean("c")) /
+        sqrt(armVariance("t") / col("n_t") + armVariance("c") / col("n_c")))
         .otherwise(lit(null)), 6).as("z"))
   }
 
@@ -1608,9 +1607,7 @@ object Events {
   def srmCheck(events: DataFrame): DataFrame = {
     val byUser = EventTime.normalizeTs(events)
       .select(col("user_id")).distinct()
-      .withColumn("arm",
-        (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 2).cast("int"))
+      .withColumn("arm", userArm)
     byUser.agg(
         sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_c"),
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_t"))

@@ -58,10 +58,7 @@ object Graph {
    */
   def pageRank(pairs: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
-      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = true)
+    val edges = symmetricEdges(pairs)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val withDeg = edges.join(deg, "src").localCheckpoint(eager = true)
     var rank = deg.select(col("src").as("doc_id"), lit(1000000L).as("r"))
@@ -76,6 +73,15 @@ object Graph {
     }
     rank.select(col("doc_id"), col("r").as("rank_micro"))
   }
+
+  /** Both directed edges (src, dst) of every undirected pair, distinct,
+    * checkpointed once — the edge list [[pageRank]] and
+    * [[labelPropagation]] join against every round. */
+  private def symmetricEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("id1").as("src"), col("id2").as("dst"))
+      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
+      .distinct()
+      .localCheckpoint(eager = true)
 
   /**
    * WEIGHTED DIRECTED PageRank (r19) — the real-crawl form of
@@ -92,23 +98,33 @@ object Graph {
    */
   def pageRankWeighted(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
+    val (e, outW) = weightedEdges(edges)
+    val withW = e.join(outW, "src").localCheckpoint(eager = true)
+    var rank = outW.select(col("src").as("node"), lit(1000000L).as("r"))
+    for (t <- 1 to iters) rank = weightedRound(withW, rank, t)
+    rank.select(col("node"), col("r").as("rank_micro"))
+  }
+
+  /** The weighted edge list every weighted PageRank starts from:
+    * (src, dst, w) with w cast to long and w > 0, checkpointed once, and
+    * its per-source out-weight (src, ow). */
+  private def weightedEdges(edges: DataFrame): (DataFrame, DataFrame) = {
     val e = edges
       .select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .filter(col("w") > 0)
       .localCheckpoint(eager = true)
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val withW = e.join(outW, "src").localCheckpoint(eager = true)
-    var rank = outW.select(col("src").as("node"), lit(1000000L).as("r"))
-    for (t <- 1 to iters) {
-      rank = ckptEvery(withW
-        .join(rank, withW("src") === rank("node"))
-        .select(col("dst"), expr("(r * 17L * w) div (20L * ow)").as("c"))
-        .groupBy(col("dst"))
-        .agg((lit(150000L) + sum(col("c"))).as("r"))
-        .select(col("dst").as("node"), col("r")), t)
-    }
-    rank.select(col("node"), col("r").as("rank_micro"))
+    (e, e.groupBy(col("src")).agg(sum(col("w")).as("ow")))
   }
+
+  /** One weighted PageRank round rₜ → rₜ₊₁ over the out-weight-joined
+    * edges (node, r) → (node, r), lineage cut by [[ckptEvery]]. */
+  private def weightedRound(withW: DataFrame, rank: DataFrame, t: Int): DataFrame =
+    ckptEvery(withW
+      .join(rank, withW("src") === rank("node"))
+      .select(col("dst"), expr("(r * 17L * w) div (20L * ow)").as("c"))
+      .groupBy(col("dst"))
+      .agg((lit(150000L) + sum(col("c"))).as("r"))
+      .select(col("dst").as("node"), col("r")), t)
 
   /**
    * [[pageRankWeighted]] keeping the FULL per-iteration rank history
@@ -122,11 +138,7 @@ object Graph {
    */
   def pageRankWeightedHistory(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val e = edges
-      .select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .filter(col("w") > 0)
-      .localCheckpoint(eager = true)
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
+    val (e, outW) = weightedEdges(edges)
     val withW = e.join(outW, "src").localCheckpoint(eager = true)
     var rank = outW.select(col("src").as("node"), lit(1000000L).as("r"))
     var hist = rank.withColumn("iter", lit(0))
@@ -134,12 +146,7 @@ object Graph {
       // rank_t is consumed twice (next round + the history union):
       // within the one output job ReuseExchange dedups the identical
       // aggregate exchange, so no per-round barrier is needed (r19)
-      rank = ckptEvery(withW
-        .join(rank, withW("src") === rank("node"))
-        .select(col("dst"), expr("(r * 17L * w) div (20L * ow)").as("c"))
-        .groupBy(col("dst"))
-        .agg((lit(150000L) + sum(col("c"))).as("r"))
-        .select(col("dst").as("node"), col("r")), t)
+      rank = weightedRound(withW, rank, t)
       hist = hist.unionByName(rank.withColumn("iter", lit(t)))
     }
     hist.select(col("node"), col("iter").cast("int").as("iter"), col("r"))
@@ -226,10 +233,7 @@ object Graph {
    */
   def labelPropagation(pairs: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
-      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = true)
+    val edges = symmetricEdges(pairs)
     var lab = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     for (t <- 1 to iters) {
@@ -265,11 +269,7 @@ object Graph {
   def pageRankPersonalized(edges: DataFrame, seeds: DataFrame,
       iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val e = edges
-      .select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .filter(col("w") > 0)
-      .localCheckpoint(eager = true)
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
+    val (e, outW) = weightedEdges(edges)
     val sd = seeds.select(col("node")).distinct().localCheckpoint(eager = true)
     val aug = e.join(outW, "src")
       .select(col("src"), col("dst"), col("w"), col("ow"),
@@ -397,24 +397,7 @@ object Graph {
    * cannot close anything), guarded, never an ANSI divide-by-zero.
    */
   def localClustering(pairs: DataFrame): DataFrame = {
-    val und = pairs
-      .select(least(col("id1"), col("id2")).as("a"),
-        greatest(col("id1"), col("id2")).as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull)
-      .distinct()
-      .localCheckpoint(eager = true)
-    val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val oriented = und
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("w")))
-          .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("e"))
-      .select(col("e.u").as("u"), col("e.w").as("w"))
-      .localCheckpoint(eager = true)
+    val (und, deg, oriented) = orientedEdges(pairs)
     val closed = oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.u") === col("e2.u") && col("e1.w") < col("e2.w"))
@@ -436,26 +419,7 @@ object Graph {
   }
 
   def triangleStats(pairs: DataFrame): DataFrame = {
-    // canonical undirected edges a < b; reused by the orientation, the
-    // closure probe and the edge count — checkpoint once
-    val und = pairs
-      .select(least(col("id1"), col("id2")).as("a"),
-        greatest(col("id1"), col("id2")).as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull)
-      .distinct()
-      .localCheckpoint(eager = true)
-    val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val oriented = und
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("w")))
-          .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("e"))
-      .select(col("e.u").as("u"), col("e.w").as("w"))
-      .localCheckpoint(eager = true)
+    val (und, deg, oriented) = orientedEdges(pairs)
     // out-pairs of each center, each unordered {x, y} once (id order —
     // any fixed order works, the center vertex is already unique per
     // triangle); closed iff the canonical edge {x, y} exists
@@ -481,6 +445,34 @@ object Graph {
         round(when(col("n_wedges").isNull || col("n_wedges") === 0L, lit(null))
           .otherwise((lit(3L) * col("n_triangles")).cast("double") /
             col("n_wedges").cast("double")), 6).as("clustering_coeff"))
+  }
+
+  /** The degree-ordered front of [[localClustering]] and
+    * [[triangleStats]]: `und` = canonical undirected edges (a < b, self
+    * loops and nulls dropped), checkpointed once because the
+    * orientation, the closure probe and the counts all reuse it; `deg` =
+    * (v, deg); `oriented` = (u, w), each edge pointing at its (deg,
+    * id)-larger endpoint, checkpointed once for the wedge self-join. */
+  private def orientedEdges(pairs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val und = pairs
+      .select(least(col("id1"), col("id2")).as("a"),
+        greatest(col("id1"), col("id2")).as("b"))
+      .filter(col("a") =!= col("b") && col("a").isNotNull)
+      .distinct()
+      .localCheckpoint(eager = true)
+    val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
+      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+    val oriented = und
+      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
+      .select(
+        when(col("da") < col("db") ||
+          (col("da") === col("db") && col("a") < col("b")),
+          struct(col("a").as("u"), col("b").as("w")))
+          .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("e"))
+      .select(col("e.u").as("u"), col("e.w").as("w"))
+      .localCheckpoint(eager = true)
+    (und, deg, oriented)
   }
 
   /**

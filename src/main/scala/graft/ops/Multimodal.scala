@@ -296,14 +296,7 @@ object Multimodal {
             }
             val avgs = Array.tabulate(64)(i =>
               if (counts(i) == 0) 0L else sums(i) / counts(i))
-            val mean = avgs.sum / 64
-            val bands = new Array[Int](4)
-            var i = 0
-            while (i < 64) {
-              if (avgs(i) >= mean) bands(i / 16) |= 1 << (15 - i % 16)
-              i += 1
-            }
-            bands
+            meanBands(avgs)
           } finally ais.close()
         }
       }
@@ -332,7 +325,13 @@ object Multimodal {
         }
         y += 1
       }
-      val avgs = Array.tabulate(64)(i => sums(i) / math.max(1, counts(i)))
+      meanBands(Array.tabulate(64)(i => sums(i) / math.max(1, counts(i))))
+    }
+
+    /** 64 block means → four 16-bit bands, MSB first: bit set where the
+      * block mean is ≥ the mean of all 64 — the last step of both the
+      * image and the audio hash. */
+    private def meanBands(avgs: Array[Long]): Array[Int] = {
       val mean = avgs.sum / 64
       val bands = new Array[Int](4)
       var i = 0

@@ -115,14 +115,24 @@ object Similarity {
    * vectors by cosine (desc), ties broken by smallest neighbor id.
    * `queries` is broadcast; corpus scan is shuffle-free.
    */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(
-      col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val scored = corpus
-      .join(broadcast(q), col("vec_id") =!= col("q_id"))
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topKByCos(queryCosines(corpus, queries), k)
+
+  /** Every (query, other corpus vector) pair with its rounded cosine:
+    * the query set broadcast, the corpus scan unshuffled. */
+  private def queryCosines(corpus: DataFrame, queries: DataFrame): DataFrame =
+    corpus
+      .join(broadcast(asQueries(queries)), col("vec_id") =!= col("q_id"))
       .select(
         col("q_id"), col("vec_id").as("neighbor_id"),
         cosine6(col("v"), col("nrm"), col("qv"), col("qnrm")).as("cos"))
+
+  /** A (vec_id, v, nrm) frame as the query side (q_id, qv, qnrm). */
+  private def asQueries(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
+
+  /** Per query, the k rows of greatest `cos`, ties to the smallest id. */
+  private def topKByCos(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
@@ -140,19 +150,10 @@ object Similarity {
    * hand the candidate slice to this exact ranker.
    */
   def hardNegatives(corpus: DataFrame, queries: DataFrame,
-      positives: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(
-      col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val scored = corpus
-      .join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(
-        col("q_id"), col("vec_id").as("neighbor_id"),
-        cosine6(col("v"), col("nrm"), col("qv"), col("qnrm")).as("cos"))
+      positives: DataFrame, k: Int): DataFrame =
+    topKByCos(queryCosines(corpus, queries)
       .join(positives.select(col("q_id"), col("neighbor_id")),
-        Seq("q_id", "neighbor_id"), "left_anti")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
+        Seq("q_id", "neighbor_id"), "left_anti"), k)
 
   /**
    * MARGIN-BASED parallel-pair mining (the bitext scorer of Artetxe &
@@ -173,8 +174,7 @@ object Similarity {
    */
   def marginMine(corpus: DataFrame, querySide: Column,
       minMargin: Double): DataFrame = {
-    val q = corpus.filter(querySide).select(
-      col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
+    val q = asQueries(corpus.filter(querySide))
     val scored = corpus.filter(!querySide)
       .join(broadcast(q), lit(true))
       .select(col("q_id"), col("vec_id").as("match_id"),
@@ -367,6 +367,64 @@ object Similarity {
   /** query/subvector side of the trick: x → x ++ [1.0]. */
   private def augQuery(sv: Column): Column = concat(sv, array(lit(1.0)))
 
+  /** Width of each of the m subvectors of a dim-wide vector. */
+  private def subDim(dim: Int, m: Int): Int = {
+    require(m >= 1 && dim % m == 0, s"dim ($dim) must be a multiple of m ($m)")
+    dim / m
+  }
+
+  /** The s-th `sub`-wide subvector of v. */
+  private def subv(v: Column, s: Int, sub: Int): Column = slice(v, s * sub + 1, sub)
+
+  /** PQ codebooks (s, cell, cw_scaled) folded into ONE broadcastable
+    * row: per subspace s, `cells_s` (its cell ids) and `<cwName>_s`
+    * (their micro-descaled codewords, each passed through `shape`). */
+  private def codebookRow(codebooks: DataFrame, m: Int, cwName: String = "cws",
+      shape: Column => Column = c => c): DataFrame =
+    codebooks
+      .agg(sort_array(collect_list(struct(col("s"), col("cell"),
+        col("cw_scaled")))).as("cb"))
+      .select((0 until m).flatMap { s =>
+        val mine = filter(col("cb"), x => x.getField("s") === s)
+        Seq(
+          transform(mine, x => x.getField("cell")).as(s"cells_$s"),
+          transform(mine, x =>
+            shape(transform(x.getField("cw_scaled"), e => e / 1000000.0)))
+            .as(s"${cwName}_$s"))
+      }: _*)
+
+  /** The subspace-s codeword a row's `code_s` names, looked up in the
+    * [[codebookRow]] columns. */
+  private def codeword(s: Int): Column =
+    element_at(col(s"cws_$s"),
+      array_position(col(s"cells_$s"), col(s"code_$s")).cast("int"))
+
+  /** Refit centroids as plain double vectors (cell, cvec) — kCells rows,
+    * broadcast wherever joined. */
+  private def cellCentroids(refit: DataFrame): DataFrame =
+    refit.select(col("cell"),
+      transform(col("centroid_scaled"), x => x / 1000000.0).as("cvec"))
+
+  /** The ADC tail of every PQ search: over candidate rows carrying the
+    * query (qv, qnrm) and the [[codebookRow]] columns, score each by
+    * q·x̃ / (|q|·|x̃|) with x̃'s s-th subvector `rec(s)`, drop zero-norm
+    * reconstructions (`__recnrm` — they have no cosine, and a null score
+    * would otherwise drop out of the top-k silently), and keep the top
+    * k per query by (score desc, id asc). */
+  private def adcTopK(cand: DataFrame, rec: Int => Column, m: Int, sub: Int,
+      k: Int): DataFrame = {
+    val num = (0 until m).map(s => dot(subv(col("qv"), s, sub), rec(s))).reduce(_ + _)
+    val recNrm = sqrt((0 until m).map(s => dot(rec(s), rec(s))).reduce(_ + _))
+    val scored = cand
+      .withColumn("__recnrm", recNrm)
+      .filter(col("__recnrm") > 0)
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        round(num / (col("qnrm") * col("__recnrm")), 6).as("score_pq"))
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("score_pq").desc, col("neighbor_id").asc)
+    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+  }
+
   /**
    * PRODUCT QUANTIZATION (Jégou et al., TPAMI 2011): split each d-dim
    * vector into `m` subspaces of d/m dims, train a k-codeword codebook
@@ -399,7 +457,6 @@ object Similarity {
       s"dim ($dim) must be a positive multiple of m ($m)")
     require(k >= 1 && k <= 256, s"k must be in [1,256] (one code byte), got $k")
     val sub = dim / m
-    def subv(v: Column, s: Int): Column = slice(v, s * sub + 1, sub)
     // r18: scan fan-out before the per-row m-subspace assignment and
     // encode kernels (see [[refitQuantizerFull]]); identity at scale
     val base = graft.ops.Scale.fanOutSmallScan(emb
@@ -417,7 +474,7 @@ object Similarity {
       .agg(sort_array(collect_list(struct(col("cell"), col("v")))).as("sl"))
       .select((0 until m).map { s =>
         transform(col("sl"), x =>
-          augSeed(subv(x.getField("v"), s))).as(s"svs_$s")
+          augSeed(subv(x.getField("v"), s, sub))).as(s"svs_$s")
       }: _*)
     def assignCols(matCol: Int => Column): Seq[Column] = (0 until m).map { s =>
       nearestSeedSub(col("v"), matCol(s), s * sub, sub).as(s"c_$s")
@@ -426,15 +483,14 @@ object Similarity {
       .select(col("vec_id") +: col("v") +: assignCols(s => col(s"svs_$s")): _*)
     // refit: one exchange, each vector once in m subvector pieces
     val exploded = assign1.select(col("vec_id"), explode(array((0 until m).map { s =>
-        struct(lit(s).as("s"), subv(col("v"), s).as("sv"), col(s"c_$s").as("cell"))
+        struct(lit(s).as("s"), subv(col("v"), s, sub).as("sv"), col(s"c_$s").as("cell"))
       }: _*)).as("e"))
       .select(col("e.s").as("s"), col("e.sv").as("sv"), col("e.cell").as("cell"))
     val codebooks = exploded
       .groupBy(col("s"), col("cell"))
       .agg(graft.functions.GraftFunctions.vector_mean(col("sv")).as("mean"))
       .select(col("s"), col("cell"),
-        transform(col("mean"), x => round(x * 1000000).cast("long"))
-          .as("cw_scaled"))
+        microScaled(col("mean")).as("cw_scaled"))
     // encode against the REFIT codewords (cells can be sparse — carry
     // the cell-id list per subspace and map kernel position -> cell);
     // the shared [[pqEncodeAgainst]] scan, so incremental appends are
@@ -461,44 +517,17 @@ object Similarity {
    */
   def annPq(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
       dim: Int, m: Int, k: Int): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim ($dim) must be a multiple of m ($m)")
-    val sub = dim / m
-    def subv(v: Column, s: Int): Column = slice(v, s * sub + 1, sub)
-    val cbRow = codebooks
-      .agg(sort_array(collect_list(struct(col("s"), col("cell"),
-        col("cw_scaled")))).as("cb"))
-      .select((0 until m).flatMap { s =>
-        val mine = filter(col("cb"), x => x.getField("s") === s)
-        Seq(
-          transform(mine, x => x.getField("cell")).as(s"cells_$s"),
-          transform(mine, x =>
-            transform(x.getField("cw_scaled"), e => e / 1000000.0))
-            .as(s"cws_$s"))
-      }: _*)
+    val sub = subDim(dim, m)
+    val cbRow = codebookRow(codebooks, m)
     // zero-norm guards (r17, closing the r14 ADVICE finding): a
     // zero-norm query or an all-zero reconstruction has no cosine — the
     // old plan let the null score drop SILENTLY out of the top-k. Both
     // sides now filter explicitly (the same nrm > 0 contract the
     // unit-corpus path applies), so exclusion is a stated rule, not a
     // null artifact.
-    val q = queries
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .withColumn("qnrm", l2norm(col("qv")))
-      .filter(col("qnrm") > 0)
-    def cw(s: Int): Column =
-      element_at(col(s"cws_$s"),
-        array_position(col(s"cells_$s"), col(s"code_$s")).cast("int"))
-    val num = (0 until m).map(s => dot(subv(col("qv"), s), cw(s))).reduce(_ + _)
-    val recNrm = sqrt((0 until m).map(s => dot(cw(s), cw(s))).reduce(_ + _))
-    val scored = codes.crossJoin(broadcast(cbRow))
-      .join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("__recnrm", recNrm)
-      .filter(col("__recnrm") > 0)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        round(num / (col("qnrm") * col("__recnrm")), 6).as("score_pq"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_pq").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    val q = normedQueries(queries)
+    adcTopK(codes.crossJoin(broadcast(cbRow))
+      .join(broadcast(q), col("vec_id") =!= col("q_id")), codeword, m, sub, k)
   }
 
   /**
@@ -512,25 +541,48 @@ object Similarity {
       queryFilter: Column, dim: Int, m: Int, kCodes: Int,
       topK: Int): DataFrame = {
     val corpus = prepared(emb, idCol, vecCol)
-    val exact = bruteForceTopK(corpus, corpus.filter(queryFilter), topK)
-      .select(col("q_id"), col("neighbor_id"))
+    val exact = exactTopK(corpus, queryFilter, topK)
     // quantize the UNIT-normalized corpus (standard for cosine
     // retrieval: codewords then spend their precision on direction,
     // which is all cosine ranks on — magnitude is divided out anyway)
-    val unit = corpus
-      .filter(col("nrm") > 0)
-      .select(col("vec_id"), arrayDiv(col("v"), col("nrm")).as("v"))
+    val unit = unitVectors(corpus)
     val (codes, codebooks) = quantizePq(unit, "vec_id", "v", dim, m, kCodes)
     val pq = annPq(codes, codebooks,
       unit.filter(queryFilter).select(col("vec_id"), col("v")),
       dim, m, topK)
       .select(col("q_id"), col("neighbor_id"))
-    exact.join(pq.withColumn("hit", lit(1L)), Seq("q_id", "neighbor_id"), "left_outer")
+    recallAgainst(exact, pq)
+  }
+
+  /** The exact side of every recall audit: (q_id, neighbor_id) of each
+    * query's brute-force top k. */
+  private def exactTopK(corpus: DataFrame, queryFilter: Column, k: Int): DataFrame =
+    bruteForceTopK(corpus, corpus.filter(queryFilter), k)
+      .select(col("q_id"), col("neighbor_id"))
+
+  /** Per query, how many of its [[exactTopK]] neighbors the candidate
+    * pairs `cand` (q_id, neighbor_id) contain: (q_id, k, n_hit, recall). */
+  private def recallAgainst(exact: DataFrame, cand: DataFrame): DataFrame =
+    exact.join(cand.withColumn("hit", lit(1L)), Seq("q_id", "neighbor_id"), "left_outer")
       .groupBy(col("q_id"))
       .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .select(col("q_id"), col("k"), col("n_hit"),
         round(col("n_hit").cast("double") / col("k").cast("double"), 6).as("recall"))
-  }
+
+  /** Unit-normalized (vec_id, v) of a [[prepared]] corpus; zero-norm
+    * vectors drop (they have no direction). */
+  private def unitVectors(corpus: DataFrame): DataFrame =
+    corpus
+      .filter(col("nrm") > 0)
+      .select(col("vec_id"), arrayDiv(col("v"), col("nrm")).as("v"))
+
+  /** A (vec_id, v) query batch as (q_id, qv, qnrm), zero-norm queries
+    * dropped: they have no cosine. */
+  private def normedQueries(queries: DataFrame): DataFrame =
+    queries
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+      .withColumn("qnrm", l2norm(col("qv")))
+      .filter(col("qnrm") > 0)
 
   /**
    * ADC RE-RANK refinement (r20, the r17 verdict's #4 — the FAISS
@@ -561,10 +613,7 @@ object Similarity {
       .select(col("vec_id").as("neighbor_id"), col("v").as("nv"))
       .withColumn("nnrm", l2norm(col("nv")))
       .filter(col("nnrm") > 0)
-    val q = queries
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .withColumn("qnrm", l2norm(col("qv")))
-      .filter(col("qnrm") > 0)
+    val q = normedQueries(queries)
     val rescored = full
       .join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(q), Seq("q_id"))
@@ -587,24 +636,14 @@ object Similarity {
       queryFilter: Column, dim: Int, m: Int, kCodes: Int,
       topK: Int, c: Int): DataFrame = {
     val corpus = prepared(emb, idCol, vecCol)
-    val exact = bruteForceTopK(corpus, corpus.filter(queryFilter), topK)
-      .select(col("q_id"), col("neighbor_id"))
-    val unit = corpus
-      .filter(col("nrm") > 0)
-      .select(col("vec_id"), arrayDiv(col("v"), col("nrm")).as("v"))
+    val exact = exactTopK(corpus, queryFilter, topK)
+    val unit = unitVectors(corpus)
     val (codes, codebooks) = quantizePq(unit, "vec_id", "v", dim, m, kCodes)
     val rr = annPqRerank(codes, codebooks, unit,
       unit.filter(queryFilter).select(col("vec_id"), col("v")),
       dim, m, topK, c)
       .select(col("q_id"), col("neighbor_id"))
-    exact
-      .join(rr.withColumn("hit", lit(1L)),
-        Seq("q_id", "neighbor_id"), "left_outer")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .select(col("q_id"), col("k"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("k").cast("double"), 6)
-          .as("recall"))
+    recallAgainst(exact, rr)
   }
 
   /** Deterministic pseudo-random hyperplane weight: first 8 hex chars of
@@ -620,6 +659,11 @@ object Similarity {
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.SrpSignature(
         org.apache.spark.sql.graft.ColumnBridge.expression(v), planes, dim))
+
+  /** A double vector as exact integer micro-units (×10⁶, rounded) —
+    * integral values are bit-identical across engines. */
+  private def microScaled(v: Column): Column =
+    transform(v, x => round(x * 1000000).cast("long"))
 
   /**
    * Element-wise mean vector per label — the IVF coarse-quantizer step.
@@ -642,8 +686,7 @@ object Similarity {
       .agg(graft.functions.GraftFunctions.vector_mean(col("v")).as("mean"))
       .select(
         col("label"),
-        transform(col("mean"), x => round(x * 1000000).cast("long"))
-          .as("centroid_scaled"))
+        microScaled(col("mean")).as("centroid_scaled"))
 
   /**
    * COMPAT variant — IVF ANN over a FROZEN label quantizer: assign each
@@ -678,8 +721,7 @@ object Similarity {
         col("label").as("c_label"),
         transform(col("centroid_scaled"), x => x / 1000000.0).as("cv"))
       .withColumn("cnrm", l2norm(col("cv")))
-    val q = c.filter(queryFilter)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
+    val q = asQueries(c.filter(queryFilter))
     val assignW = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("c_label").asc)
     val assigned = q.join(broadcast(cents))
       .select(
@@ -778,8 +820,7 @@ object Similarity {
       .groupBy(col("cell"))
       .agg(graft.functions.GraftFunctions.vector_mean(col("v")).as("mean"))
       .select(col("cell"),
-        transform(col("mean"), x => round(x * 1000000).cast("long"))
-          .as("centroid_scaled"))
+        microScaled(col("mean")).as("centroid_scaled"))
     (assignedFull, refit)
   }
 
@@ -838,9 +879,13 @@ object Similarity {
    */
   def annIvfSearch(index: DataFrame, refit: DataFrame,
       queryFilter: Column, nprobe: Int = 2): DataFrame = {
-    val q = index.filter(queryFilter)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val qCell = routeQueries(q, refit, nprobe)
+    nearestInCells(index, routeQueries(asQueries(index.filter(queryFilter)), refit, nprobe))
+  }
+
+  /** Per routed query, its nearest index member (cosine desc, id asc)
+    * among the cells it probes — the probe tail of [[annIvfSearch]] and
+    * [[annIvfSearchOnDisk]]. */
+  private def nearestInCells(index: DataFrame, qCell: DataFrame): DataFrame = {
     val searchW = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     index.join(broadcast(qCell),
@@ -871,20 +916,10 @@ object Similarity {
   def annIvfSearchOnDisk(spark: org.apache.spark.sql.SparkSession,
       path: String, queryFilter: Column, nprobe: Int = 2): DataFrame = {
     val (index, refit) = graft.sources.Tables.readIvfIndex(spark, path)
-    val q = index.filter(queryFilter)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
+    val q = asQueries(index.filter(queryFilter))
     val qCell = routeQueries(q, refit, nprobe)
     val probed = qCell.select(col("qcell")).distinct().collect().map(_.get(0))
-    val pruned = index.filter(col("cell").isin(probed.toSeq: _*))
-    val searchW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    pruned.join(broadcast(qCell),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("cell"), col("vec_id").as("neighbor_id"),
-        cosine6(col("v"), col("nrm"), col("qv"), col("qnrm")).as("cos"))
-      .withColumn("rn", row_number().over(searchW)).filter(col("rn") === 1)
-      .drop("rn")
+    nearestInCells(index.filter(col("cell").isin(probed.toSeq: _*)), qCell)
   }
 
   /** Query → probed-cell routing over the refit centroids: (q_id, qv,
@@ -958,13 +993,11 @@ object Similarity {
       .filter(col("v").isNotNull && size(col("v")) > 0)
       .withColumn("nrm", l2norm(col("v")))
     val seedW = Window.orderBy(col("h").asc, col("vec_id").asc)
-    val micro = (c: Column) =>
-      transform(c, x => round(x * 1000000).cast("long"))
     var cents: DataFrame = base
       .withColumn("h", md5(col("vec_id").cast("string")))
       .orderBy(col("h").asc, col("vec_id").asc).limit(k)
       .withColumn("cell", row_number().over(seedW) - 1)
-      .select(col("cell"), micro(col("v")).as("centroid_scaled"))
+      .select(col("cell"), microScaled(col("v")).as("centroid_scaled"))
     def assign(c: DataFrame): DataFrame = {
       val cRow = c
         .select(col("cell"),
@@ -986,7 +1019,7 @@ object Similarity {
       cents = assign(cents)
         .groupBy(col("cell"))
         .agg(graft.functions.GraftFunctions.vector_mean(col("v")).as("mean"))
-        .select(col("cell"), micro(col("mean")).as("centroid_scaled"))
+        .select(col("cell"), microScaled(col("mean")).as("centroid_scaled"))
         .localCheckpoint(true)
       i += 1
     }
@@ -1046,18 +1079,45 @@ object Similarity {
       dim: Int, m: Int, kCodes: Int, kCells: Int,
       queryFilter: Column, nprobe: Int, topK: Int,
       residual: Boolean): DataFrame = {
-    val corpus = prepared(emb, idCol, vecCol)
-    val unit = corpus.filter(col("nrm") > 0)
-      .select(col("vec_id"), arrayDiv(col("v"), col("nrm")).as("v"))
+    val (index, refit, cents, codebooks, codes) =
+      ivfPqEncode(emb, idCol, vecCol, dim, m, kCodes, kCells, residual)
+    val q = asQueries(index.filter(queryFilter))
+    val routed = routeQueries(q, refit, nprobe)
+    val sub = subDim(dim, m)
+    val cbRow = codebookRow(codebooks, m)
+    // reconstructed subvector: c_sub + r̃_sub for residual codes, the
+    // codeword itself for raw codes
+    def rec(s: Int): Column =
+      if (residual) zipAdd(subv(col("cvec"), s, sub), codeword(s))
+      else codeword(s)
+    // codes are already cell-tagged (the carry in [[ivfPqEncode]]) — no
+    // id re-join
+    val withCell =
+      if (residual) codes.join(broadcast(cents), "cell") else codes
+    // same zero-norm guard as [[annPq]] (queries here are unit-corpus
+    // members so qnrm > 0 holds by construction, but the explicit
+    // filter keeps the rule stated rather than incidental)
+    adcTopK(withCell.crossJoin(broadcast(cbRow))
+      .join(broadcast(routed),
+        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
+      .filter(col("qnrm") > 0), rec, m, sub, topK)
+  }
+
+  /** The IVFADC build front of [[annIvfPq]] and [[buildIvfPqIndex]]:
+    * unit-normalize, refit-quantize into kCells ([[buildIvfIndex]]),
+    * train PQ on the cell residuals x − c(cell) (on the unit vectors
+    * themselves when not `residual`) and encode them. Returns (index,
+    * refit, cell centroids, codebooks, codes); the codes keep `cell`.
+    * r18: `cell` rides alongside the encoded vectors
+    * ([[pqEncodeAgainst]]'s carry) — the old shape re-joined
+    * codes⋈index by vec_id just to get the cell back (two exchanges on
+    * the corpus-sized code table). */
+  private def ivfPqEncode(emb: DataFrame, idCol: String, vecCol: String,
+      dim: Int, m: Int, kCodes: Int, kCells: Int, residual: Boolean)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val unit = unitVectors(prepared(emb, idCol, vecCol))
     val (index, refit) = buildIvfIndex(unit, "vec_id", "v", kCells)
-    // cell centroids as plain double vectors (micro-descale): kCells
-    // rows, broadcast wherever joined
-    val cents = refit.select(col("cell"),
-      transform(col("centroid_scaled"), x => x / 1000000.0).as("cvec"))
-    // r18: keep `cell` alongside the residual vectors so the encoded
-    // codes come out already cell-tagged ([[pqEncodeAgainst]]'s carry)
-    // — the old shape re-joined codes⋈index by vec_id just to get the
-    // cell back (two exchanges on the corpus-sized code table).
+    val cents = cellCentroids(refit)
     val pqInput =
       if (residual)
         index.select(col("vec_id"), col("cell"), col("v"))
@@ -1068,50 +1128,7 @@ object Similarity {
     val (_, codebooks) =
       quantizePq(pqInput.select(col("vec_id"), col("v")), "vec_id", "v",
         dim, m, kCodes)
-    val codes = pqEncodeAgainst(pqInput, codebooks, dim, m)
-    val q = index.filter(queryFilter)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val routed = routeQueries(q, refit, nprobe)
-    val sub = dim / m
-    def subv(v: Column, s: Int): Column = slice(v, s * sub + 1, sub)
-    val cbRow = codebooks
-      .agg(sort_array(collect_list(struct(col("s"), col("cell"),
-        col("cw_scaled")))).as("cb"))
-      .select((0 until m).flatMap { s =>
-        val mine = filter(col("cb"), x => x.getField("s") === s)
-        Seq(
-          transform(mine, x => x.getField("cell")).as(s"cells_$s"),
-          transform(mine, x =>
-            transform(x.getField("cw_scaled"), e => e / 1000000.0))
-            .as(s"cws_$s"))
-      }: _*)
-    def cw(s: Int): Column =
-      element_at(col(s"cws_$s"),
-        array_position(col(s"cells_$s"), col(s"code_$s")).cast("int"))
-    // reconstructed subvector: c_sub + r̃_sub for residual codes, the
-    // codeword itself for raw codes
-    def rec(s: Int): Column =
-      if (residual) zipAdd(subv(col("cvec"), s), cw(s))
-      else cw(s)
-    val num = (0 until m).map(s => dot(subv(col("qv"), s), rec(s))).reduce(_ + _)
-    val recNrm = sqrt((0 until m).map(s => dot(rec(s), rec(s))).reduce(_ + _))
-    // codes are already cell-tagged (the carry above) — no id re-join
-    val withCell =
-      if (residual) codes.join(broadcast(cents), "cell") else codes
-    // same zero-norm guard as [[annPq]] (queries here are unit-corpus
-    // members so qnrm > 0 holds by construction, but the explicit
-    // filter keeps the rule stated rather than incidental)
-    val scored = withCell.crossJoin(broadcast(cbRow))
-      .join(broadcast(routed),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .filter(col("qnrm") > 0)
-      .withColumn("__recnrm", recNrm)
-      .filter(col("__recnrm") > 0)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        round(num / (col("qnrm") * col("__recnrm")), 6).as("score_pq"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_pq").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= topK)
+    (index, refit, cents, codebooks, pqEncodeAgainst(pqInput, codebooks, dim, m))
   }
 
   /**
@@ -1127,14 +1144,11 @@ object Similarity {
    * centroid table; the vector batch never shuffles.
    */
   def assignWithCentroids(emb: DataFrame, idCol: String, vecCol: String,
-      refit: DataFrame): DataFrame = {
-    val q = prepared(emb, idCol, vecCol).filter(col("nrm") > 0)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-    routeQueries(q, refit, 1)
+      refit: DataFrame): DataFrame =
+    routeQueries(asQueries(prepared(emb, idCol, vecCol).filter(col("nrm") > 0)),
+        refit, 1)
       .select(col("q_id").as("vec_id"), col("qv").as("v"),
         col("qnrm").as("nrm"), col("qcell").as("cell"))
-  }
 
   /**
    * PQ-encode vectors against an EXISTING codebook table (the encode
@@ -1151,20 +1165,8 @@ object Similarity {
    */
   private[graft] def pqEncodeAgainst(base: DataFrame, codebooks: DataFrame,
       dim: Int, m: Int): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim ($dim) must be a multiple of m ($m)")
-    val sub = dim / m
-    def subv(v: Column, s: Int): Column = slice(v, s * sub + 1, sub)
-    val cbRow = codebooks
-      .agg(sort_array(collect_list(struct(col("s"), col("cell"),
-        col("cw_scaled")))).as("cb"))
-      .select((0 until m).flatMap { s =>
-        val mine = filter(col("cb"), x => x.getField("s") === s)
-        Seq(
-          transform(mine, x => x.getField("cell")).as(s"cells_$s"),
-          transform(mine, x =>
-            augSeed(transform(x.getField("cw_scaled"), e => e / 1000000.0)))
-            .as(s"cvs_$s"))
-      }: _*)
+    val sub = subDim(dim, m)
+    val cbRow = codebookRow(codebooks, m, "cvs", augSeed)
     val carry = base.columns.filter(_ != "v").map(col).toSeq
     base.crossJoin(broadcast(cbRow))
       .select(carry ++ (0 until m).map { s =>
@@ -1213,23 +1215,8 @@ object Similarity {
   def buildIvfPqIndex(emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, kCodes: Int, kCells: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val corpus = prepared(emb, idCol, vecCol)
-    val unit = corpus.filter(col("nrm") > 0)
-      .select(col("vec_id"), arrayDiv(col("v"), col("nrm")).as("v"))
-    val (index, refit) = buildIvfIndex(unit, "vec_id", "v", kCells)
-    val cents = refit.select(col("cell"),
-      transform(col("centroid_scaled"), x => x / 1000000.0).as("cvec"))
-    // r18: carry cell through the encode (see [[annIvfPq]]) — the old
-    // codes⋈index id-join re-shuffled the code table just to re-attach
-    // the cell the residual input already had.
-    val pqInput = index.select(col("vec_id"), col("cell"), col("v"))
-      .join(broadcast(cents), "cell")
-      .select(col("vec_id"), col("cell"),
-        zipSub(col("v"), col("cvec")).as("v"))
-    val (_, codebooks) =
-      quantizePq(pqInput.select(col("vec_id"), col("v")), "vec_id", "v",
-        dim, m, kCodes)
-    val codes = pqEncodeAgainst(pqInput, codebooks, dim, m)
+    val (_, refit, _, codebooks, codes) =
+      ivfPqEncode(emb, idCol, vecCol, dim, m, kCodes, kCells, residual = true)
     (codes.select(("vec_id" +: (0 until m).map(s => s"code_$s") :+ "cell")
       .map(col): _*), refit, codebooks)
   }
@@ -1248,9 +1235,7 @@ object Similarity {
   def annIvfPqSearch(codes: DataFrame, refit: DataFrame,
       codebooks: DataFrame, queries: DataFrame, dim: Int, m: Int,
       nprobe: Int = 2, topK: Int = 1): DataFrame = {
-    val q = queries.select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .withColumn("qnrm", l2norm(col("qv")))
-      .filter(col("qnrm") > 0)
+    val q = normedQueries(queries)
     annIvfPqSearchRouted(codes, refit, codebooks,
       routeQueries(q, refit, nprobe), dim, m, topK)
   }
@@ -1263,40 +1248,14 @@ object Similarity {
   private def annIvfPqSearchRouted(codes: DataFrame, refit: DataFrame,
       codebooks: DataFrame, routed: DataFrame, dim: Int, m: Int,
       topK: Int): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim ($dim) must be a multiple of m ($m)")
-    val cents = refit.select(col("cell"),
-      transform(col("centroid_scaled"), x => x / 1000000.0).as("cvec"))
-    val sub = dim / m
-    def subv(v: Column, s: Int): Column = slice(v, s * sub + 1, sub)
-    val cbRow = codebooks
-      .agg(sort_array(collect_list(struct(col("s"), col("cell"),
-        col("cw_scaled")))).as("cb"))
-      .select((0 until m).flatMap { s =>
-        val mine = filter(col("cb"), x => x.getField("s") === s)
-        Seq(
-          transform(mine, x => x.getField("cell")).as(s"cells_$s"),
-          transform(mine, x =>
-            transform(x.getField("cw_scaled"), e => e / 1000000.0))
-            .as(s"cws_$s"))
-      }: _*)
-    def cw(s: Int): Column =
-      element_at(col(s"cws_$s"),
-        array_position(col(s"cells_$s"), col(s"code_$s")).cast("int"))
-    def rec(s: Int): Column =
-      zipAdd(subv(col("cvec"), s), cw(s))
-    val num = (0 until m).map(s => dot(subv(col("qv"), s), rec(s))).reduce(_ + _)
-    val recNrm = sqrt((0 until m).map(s => dot(rec(s), rec(s))).reduce(_ + _))
-    val scored = codes.join(broadcast(cents), "cell")
+    val sub = subDim(dim, m)
+    val cents = cellCentroids(refit)
+    val cbRow = codebookRow(codebooks, m)
+    adcTopK(codes.join(broadcast(cents), "cell")
       .crossJoin(broadcast(cbRow))
       .join(broadcast(routed),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("__recnrm", recNrm)
-      .filter(col("__recnrm") > 0)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        round(num / (col("qnrm") * col("__recnrm")), 6).as("score_pq"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score_pq").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= topK)
+        col("cell") === col("qcell") && col("vec_id") =!= col("q_id")),
+      s => zipAdd(subv(col("cvec"), s, sub), codeword(s)), m, sub, topK)
   }
 
   /**
@@ -1316,9 +1275,7 @@ object Similarity {
       nprobe: Int = 2, topK: Int = 1): DataFrame = {
     val (codes, refit, codebooks) =
       graft.sources.Tables.readIvfPqIndex(spark, path)
-    val q = queries.select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .withColumn("qnrm", l2norm(col("qv")))
-      .filter(col("qnrm") > 0)
+    val q = normedQueries(queries)
     // route ONCE: the routed frame is both the probed-cell set (a
     // bounded nprobe·|Q| collect that becomes a LITERAL partition
     // filter on the codes scan) and the scoring-side query frame —
@@ -1460,19 +1417,14 @@ object Similarity {
    */
   def annRecallAudit(corpus: DataFrame, queryFilter: Column, planes: Int,
       dim: Int, k: Int): DataFrame = {
-    val exact = bruteForceTopK(corpus, corpus.filter(queryFilter), k)
-      .select(col("q_id"), col("neighbor_id"))
+    val exact = exactTopK(corpus, queryFilter, k)
     val bucketed = corpus.withColumn("bucket", lshBucket(col("v"), planes, dim))
     val q = bucketed.filter(queryFilter).select(col("vec_id").as("q_id"), col("bucket"))
     val cand = bucketed.join(broadcast(q), Seq("bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"))
       .distinct()
-    exact.join(cand.withColumn("hit", lit(1L)), Seq("q_id", "neighbor_id"), "left_outer")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("k"), sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .select(col("q_id"), col("k"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("k").cast("double"), 6).as("recall"))
+    recallAgainst(exact, cand)
   }
 
   /**

@@ -77,6 +77,30 @@ object Sketches {
       .agg(sum(col("cnt")).as("c"))
   }
 
+  /** The fixed-grid bin of `__v`, clamped to [0, nbins) in the INTEGER
+    * domain: Spark's floor(double) is already a long while DuckDB's floor
+    * stays double — comparing after the cast keeps both engines in exact
+    * integer arithmetic. */
+  private def sketchBin(lo: Double, w: Double, nbins: Int): Column =
+    least(greatest(floor((col("__v") - lit(lo)) / lit(w)), lit(0L)),
+      lit((nbins - 1).toLong)).as("bin")
+
+  /** One aggregate per requested quantile over (bin, c, cum, n) rows —
+    * the interpolation est = lo + w·(bin + (t − cumBefore)/c) at the
+    * first bin whose cumulative count exceeds the target rank
+    * t = (n−1)·p: min_by over the qualifying suffix (null ordering
+    * values skipped). */
+  private def quantileEstimates(ps: Seq[(String, Double)], lo: Double,
+      w: Double): Seq[Column] =
+    ps.map { case (name, p) =>
+      val t = (col("n") - 1).cast("double") * lit(p)
+      val cumBefore = (col("cum") - col("c")).cast("double")
+      val est = lit(lo) + lit(w) *
+        (col("bin").cast("double") + (t - cumBefore) / col("c").cast("double"))
+      graft.functions.GraftFunctions.min_by(
+        round(est, 6), when(col("cum").cast("double") > t, col("bin"))).as(name)
+    }
+
   /**
    * Mergeable fixed-bin quantile sketch: bucket values into `nbins`
    * equal-width bins over [lo, hi) (out-of-range values clamp into the
@@ -99,9 +123,6 @@ object Sketches {
     require(nbins >= 2 && hi > lo, s"bad sketch dims [$lo,$hi)/$nbins")
     require(ps.nonEmpty, "at least one quantile required")
     val w = (hi - lo) / nbins
-    // clamp in the INTEGER domain: Spark's floor(double) is already a
-    // long while DuckDB's floor stays double — comparing after the cast
-    // keeps both engines in exact integer arithmetic
     // null/NaN are not quantile-rankable: greatest(null,0) would drop a
     // null into bin 0 and NaN (> every double) would clamp into the top
     // bin — both also inflating n and skewing every estimate. Filter
@@ -110,9 +131,7 @@ object Sketches {
       .select(col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull && !isnan(col("__v")))
     val bins = clean
-      .select(least(greatest(
-        floor((col("__v") - lit(lo)) / lit(w)), lit(0L)),
-        lit((nbins - 1).toLong)).as("bin"))
+      .select(sketchBin(lo, w, nbins))
       .groupBy(col("bin")).agg(count(lit(1)).as("c"))
     // nbins rows by construction → the unpartitioned running-sum window
     // and the final single-row aggregate are bounded regardless of input
@@ -123,16 +142,7 @@ object Sketches {
           .orderBy(col("bin"))
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
       .crossJoin(broadcast(clean.agg(count(lit(1)).as("n"))))
-    val aggs = ps.map { case (name, p) =>
-      val t = (col("n") - 1).cast("double") * lit(p)
-      val cumBefore = (col("cum") - col("c")).cast("double")
-      val est = lit(lo) + lit(w) *
-        (col("bin").cast("double") + (t - cumBefore) / col("c").cast("double"))
-      // first bin whose cumulative count exceeds the target rank:
-      // min_by over the qualifying suffix (null ordering values skipped)
-      graft.functions.GraftFunctions.min_by(
-        round(est, 6), when(col("cum").cast("double") > t, col("bin"))).as(name)
-    }
+    val aggs = quantileEstimates(ps, lo, w)
     cum.groupBy(col("n")).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -156,9 +166,7 @@ object Sketches {
       .select((keyCols :+ col(valueCol).cast("double").as("__v")): _*)
       .filter(col("__v").isNotNull && !isnan(col("__v")))
     val bins = clean
-      .select((keyCols :+ least(greatest(
-        floor((col("__v") - lit(lo)) / lit(w)), lit(0L)),
-        lit((nbins - 1).toLong)).as("bin")): _*)
+      .select((keyCols :+ sketchBin(lo, w, nbins)): _*)
       .groupBy((keyCols :+ col("bin")): _*).agg(count(lit(1)).as("c"))
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols: _*).orderBy(col("bin"))
@@ -166,14 +174,7 @@ object Sketches {
     val cum = bins
       .withColumn("cum", sum(col("c")).over(wk))
       .join(clean.groupBy(keyCols: _*).agg(count(lit(1)).as("n")), keys)
-    val aggs = ps.map { case (name, p) =>
-      val t = (col("n") - 1).cast("double") * lit(p)
-      val cumBefore = (col("cum") - col("c")).cast("double")
-      val est = lit(lo) + lit(w) *
-        (col("bin").cast("double") + (t - cumBefore) / col("c").cast("double"))
-      graft.functions.GraftFunctions.min_by(
-        round(est, 6), when(col("cum").cast("double") > t, col("bin"))).as(name)
-    }
+    val aggs = quantileEstimates(ps, lo, w)
     cum.groupBy((keyCols :+ col("n")): _*).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -359,9 +360,7 @@ object Sketches {
         col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull && !isnan(col("__v")))
     val binned = clean
-      .select(col("day"), least(greatest(
-        floor((col("__v") - lit(lo)) / lit(w)), lit(0L)),
-        lit((nbins - 1).toLong)).as("bin"))
+      .select(col("day"), sketchBin(lo, w, nbins))
       .groupBy(col("day"), col("bin")).agg(count(lit(1)).as("c"))
     val days = binned.select(col("day")).distinct()
     val merged = binned
@@ -375,14 +374,7 @@ object Sketches {
       .withColumn("cum", sum(col("c")).over(wd.orderBy(col("bin"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
       .withColumn("n", sum(col("c")).over(wd))
-    val aggs = ps.map { case (name, p) =>
-      val t = (col("n") - 1).cast("double") * lit(p)
-      val cumBefore = (col("cum") - col("c")).cast("double")
-      val est = lit(lo) + lit(w) *
-        (col("bin").cast("double") + (t - cumBefore) / col("c").cast("double"))
-      graft.functions.GraftFunctions.min_by(
-        round(est, 6), when(col("cum").cast("double") > t, col("bin"))).as(name)
-    }
+    val aggs = quantileEstimates(ps, lo, w)
     cum.groupBy(col("day"), col("n")).agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -431,6 +431,16 @@ object TextOps {
       .distinct()
     val srcDocs = docs.groupBy(col(sourceCol).as("source"))
       .agg(countDistinct(col(idCol)).as("n_docs"))
+    boilerSet(lineHashes, srcDocs, minDocFrac)
+  }
+
+  /** The per-source boilerplate set (source, bh) of [[boilerplateSets]]
+    * and [[boilerplateKept]]: from distinct (doc_id, source, lh) line
+    * hashes and per-source doc counts (source, n_docs), the sorted hashes
+    * that ≥ 2 docs and ≥ `minDocFrac` of the source's docs contain. */
+  private def boilerSet(lineHashes: org.apache.spark.sql.DataFrame,
+      srcDocs: org.apache.spark.sql.DataFrame,
+      minDocFrac: Double): org.apache.spark.sql.DataFrame =
     lineHashes
       .groupBy(col("source"), col("lh"))
       .agg(countDistinct(col("doc_id")).as("n_with"))
@@ -440,7 +450,6 @@ object TextOps {
           >= minDocFrac)
       .groupBy(col("source"))
       .agg(sort_array(collect_set(col("lh"))).as("bh"))
-  }
 
   /**
    * The APPLY half: filter each doc's lines against a prebuilt
@@ -494,17 +503,8 @@ object TextOps {
       .distinct()
     val srcDocs = lines.groupBy(col("source"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
-    val bset = lineHashes
-      .groupBy(col("source"), col("lh"))
-      .agg(countDistinct(col("doc_id")).as("n_with"))
-      .join(srcDocs, "source")
-      .filter(col("n_with") >= 2 &&
-        col("n_with").cast("double") / col("n_docs").cast("double")
-          >= minDocFrac)
-      .groupBy(col("source"))
-      .agg(sort_array(collect_set(col("lh"))).as("bh"))
     lines
-      .join(bset, Seq("source"), "left")
+      .join(boilerSet(lineHashes, srcDocs, minDocFrac), Seq("source"), "left")
       .withColumn("bh",
         coalesce(col("bh"), array().cast("array<string>")))
       .withColumn("kept",
@@ -1442,14 +1442,20 @@ object TextOps {
    * emitted token is a base unit or a merge output, so the lookup
    * can never miss.
    */
-  def byteLevelVocab(merges: Seq[(String, String)]): Map[String, Int] = {
-    val base = graft.functions.ByteLevelUnits.byteToChar.zipWithIndex
-      .map { case (c, b) => c.toString -> b }
+  def byteLevelVocab(merges: Seq[(String, String)]): Map[String, Int] =
+    mergeVocab(graft.functions.ByteLevelUnits.byteToChar.toSeq, merges)
+
+  /** Token → id for a byte-level BPE: the 256 base units in `base` order
+    * take ids 0..255, merge i's output takes 256 + i. Duplicate merge
+    * outputs are rejected. */
+  private[graft] def mergeVocab(base: Seq[Char],
+      merges: Seq[(String, String)]): Map[String, Int] = {
+    val units = base.zipWithIndex.map { case (c, b) => c.toString -> b }
     val outs = merges.zipWithIndex.map { case ((x, y), i) =>
       (x + y) -> (256 + i) }
     val dup = outs.groupBy(_._1).collect { case (t, vs) if vs.size > 1 => t }
     require(dup.isEmpty, s"merges produce duplicate outputs: $dup")
-    (base ++ outs).toMap
+    (units ++ outs).toMap
   }
 
   /** Byte-level BPE encode straight to integer token IDS —
@@ -2343,23 +2349,32 @@ object TextOps {
   private[graft] def linkEdges(pages: org.apache.spark.sql.DataFrame,
       urlCol: String, htmlCol: String,
       carry: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    val srcHost =
-      lower(regexp_extract(col(urlCol), "^[a-zA-Z]+://([^/:?#]+)", 1))
+    val srcHost = urlHost(col(urlCol))
     val exploded = pages
       .select(srcHost.as("src_host") +:
         explode(extractHrefs(col(htmlCol))).as("href") +:
         carry.map(col): _*)
       .filter(col("src_host") =!= "")
+    exploded
+      .select(col("src_host") +: hrefHost.as("dst_host") +: carry.map(col): _*)
+      .filter(col("dst_host").isNotNull && col("dst_host") =!= "")
+  }
+
+  /** The lowercased host of an absolute http(s) URL ('' when none). */
+  private def urlHost(url: Column): Column =
+    lower(regexp_extract(url, "^[a-zA-Z]+://([^/:?#]+)", 1))
+
+  /** The host an `href` on a page of `src_host` points at: an absolute
+    * URL's own host, a protocol-relative one's, NULL for other schemes
+    * (mailto:, javascript:), else the page's own host. */
+  private def hrefHost: Column = {
     val absHost = lower(
       regexp_extract(col("href"), "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)", 1))
     val protoRelHost = lower(regexp_extract(col("href"), "^//([^/:?#]+)", 1))
-    val dst = when(col("href").rlike("(?i)^https?://"), absHost)
+    when(col("href").rlike("(?i)^https?://"), absHost)
       .when(col("href").rlike("^//"), protoRelHost)
       .when(col("href").rlike("^[a-zA-Z][a-zA-Z0-9+.-]*:"), lit(null))
       .otherwise(col("src_host"))
-    exploded
-      .select(col("src_host") +: dst.as("dst_host") +: carry.map(col): _*)
-      .filter(col("dst_host").isNotNull && col("dst_host") =!= "")
   }
 
   /** (href, anchor-text) pair pattern — [[HrefPattern]] extended with
@@ -2382,8 +2397,7 @@ object TextOps {
    */
   def anchorTexts(pages: org.apache.spark.sql.DataFrame, urlCol: String,
       htmlCol: String): org.apache.spark.sql.DataFrame = {
-    val srcHost =
-      lower(regexp_extract(col(urlCol), "^[a-zA-Z]+://([^/:?#]+)", 1))
+    val srcHost = urlHost(col(urlCol))
     val hrefs = call_function(
       "regexp_extract_all", col(htmlCol), lit(AnchorPattern), lit(1))
     val anchors = call_function(
@@ -2396,14 +2410,7 @@ object TextOps {
       .select(col("src_host"), col("p.href").as("href"),
         lower(trim(col("p.anchor"))).as("anchor"))
       .filter(col("anchor") =!= "")
-    val absHost = lower(
-      regexp_extract(col("href"), "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)", 1))
-    val protoRelHost = lower(regexp_extract(col("href"), "^//([^/:?#]+)", 1))
-    val dst = when(col("href").rlike("(?i)^https?://"), absHost)
-      .when(col("href").rlike("^//"), protoRelHost)
-      .when(col("href").rlike("^[a-zA-Z][a-zA-Z0-9+.-]*:"), lit(null))
-      .otherwise(col("src_host"))
-    pairs.select(dst.as("dst_host"), col("anchor"))
+    pairs.select(hrefHost.as("dst_host"), col("anchor"))
       .filter(col("dst_host").isNotNull && col("dst_host") =!= "")
       .groupBy(col("dst_host"), col("anchor"))
       .agg(count(lit(1)).as("n"))

@@ -41,15 +41,8 @@ object Tokenizers {
   /** Token→id map in the REAL GPT-2 numbering (see object doc). Total
     * for byte-level encodes: every emitted token is a base unit or a
     * merge output. */
-  def gpt2Encoder(merges: Seq[(String, String)]): Map[String, Int] = {
-    val base = Gpt2ByteOrder.zipWithIndex.map { case (c, i) =>
-      c.toString -> i }
-    val outs = merges.zipWithIndex.map { case ((x, y), i) =>
-      (x + y) -> (256 + i) }
-    val dup = outs.groupBy(_._1).collect { case (t, vs) if vs.size > 1 => t }
-    require(dup.isEmpty, s"merges produce duplicate outputs: $dup")
-    (base ++ outs).toMap
-  }
+  def gpt2Encoder(merges: Seq[(String, String)]): Map[String, Int] =
+    graft.ops.TextOps.mergeVocab(Gpt2ByteOrder, merges)
 
   /** Ordered (x, y) merges from a [[graft.ops.TextOps.bpeTrainByteLevel]]
     * result frame (merge_rank, x, y, …). Driver-side by design — a
@@ -167,65 +160,19 @@ object Tokenizers {
     v
   }
 
-  /** Minimal parser for the flat {"token": int} object encoder.json
-    * is — string keys with standard JSON escapes, integer values. */
+  /** The flat {"token": int} object encoder.json is: [[parseJson]]
+    * plus the check that the root is an object whose values are all
+    * Int-ranged integers. */
   private[graft] def parseEncoderJson(s: String): Map[String, Int] = {
-    var i = 0
-    def err(msg: String) =
-      throw new IllegalArgumentException(s"encoder.json: $msg at char $i")
-    def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = {
-      ws(); if (i >= s.length || s(i) != c) err(s"expected '$c'"); i += 1
+    def err(msg: String) = throw new IllegalArgumentException(s"encoder.json: $msg")
+    parseJson(s) match {
+      case m: scala.collection.Map[_, _] =>
+        m.iterator.map {
+          case (k: String, v: Long) if v.isValidInt => k -> v.toInt
+          case (k, v) => err(s"value of \"$k\" is not an Int: $v")
+        }.toMap
+      case _ => err("root is not an object")
     }
-    def str(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (i < s.length && s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          if (i >= s.length) err("dangling escape")
-          s(i) match {
-            case '"' => sb += '"'; case '\\' => sb += '\\'
-            case '/' => sb += '/'; case 'b' => sb += '\b'
-            case 'f' => sb += '\f'; case 'n' => sb += '\n'
-            case 'r' => sb += '\r'; case 't' => sb += '\t'
-            case 'u' =>
-              if (i + 4 >= s.length) err("short \\u escape")
-              sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar
-              i += 4
-            case c => err(s"bad escape '\\$c'")
-          }
-        } else sb += s(i)
-        i += 1
-      }
-      expect('"')
-      sb.toString
-    }
-    def int(): Int = {
-      ws()
-      val start = i
-      if (i < s.length && s(i) == '-') i += 1
-      while (i < s.length && s(i).isDigit) i += 1
-      if (i == start) err("expected integer")
-      s.substring(start, i).toInt
-    }
-    val out = Map.newBuilder[String, Int]
-    expect('{')
-    ws()
-    if (i < s.length && s(i) == '}') { i += 1 }
-    else {
-      var more = true
-      while (more) {
-        val k = str(); expect(':'); val v = int()
-        out += (k -> v)
-        ws()
-        if (i < s.length && s(i) == ',') { i += 1 }
-        else { expect('}'); more = false }
-      }
-    }
-    ws()
-    if (i != s.length) err("trailing content")
-    out.result()
   }
 
   // ---- Hadoop-FS file IO ----

@@ -885,20 +885,14 @@ object EventStreams {
     * state, merges sessions ACROSS micro-batches, and emits a row
     * when the watermark passes session end + gap (append mode). No
     * flatMapGroupsWithState, no manual eviction — the engine owns the
-    * state lifecycle. Same inclusive exact-gap boundary as the batch
-    * [[graft.ops.Events.sessionWindows]] twin (spec-proven equal). */
+    * state lifecycle. The aggregate is the batch
+    * [[graft.ops.Events.sessionWindows]] twin's own
+    * ([[graft.ops.Events.sessionWindowAgg]]), so the two agree by
+    * construction, exact-gap boundary included. */
   def sessionWindowsStream(events: DataFrame, gap: String = "30 minutes",
       watermarkDelay: String = "10 minutes"): DataFrame =
-    withEventTime(events)
-      .withWatermark("event_time", watermarkDelay)
-      .groupBy(col("user_id"), session_window(col("event_time"), gap).as("sw"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(round(col("value") * 1000000).cast("long")) / 1000000.0, 6)
-          .as("sum_value"))
-      .select(col("user_id"),
-        unix_micros(col("sw.start")).as("start_us"),
-        unix_micros(col("sw.end")).as("end_us"),
-        col("n_events"), col("sum_value"))
+    graft.ops.Events.sessionWindowAgg(withEventTime(events)
+      .withWatermark("event_time", watermarkDelay), gap)
 
   /** STREAMING session journeys — the online twin of
     * [[graft.ops.Events.sessionPaths]]: per closed session, the
@@ -910,18 +904,13 @@ object EventStreams {
     * merge keeps the path correct under ANY arrival order in O(k)
     * state per open session — a rank-and-collect cannot run inside
     * streaming aggregation at all. Watermark closes and evicts
-    * sessions; rows emit append-mode on close. */
+    * sessions; rows emit append-mode on close. The aggregate is the
+    * batch twin's own ([[graft.ops.Events.sessionPathAgg]]). */
   def sessionPathsStream(events: DataFrame, maxSteps: Int = 5,
       gap: String = "30 minutes", watermarkDelay: String = "10 minutes"): DataFrame =
-    withEventTime(events)
+    graft.ops.Events.sessionPathAgg(withEventTime(events)
       .withColumn("tsu", expr("ts div 1000"))
-      .withWatermark("event_time", watermarkDelay)
-      .groupBy(col("user_id"), session_window(col("event_time"), gap).as("sw"))
-      .agg(graft.functions.GraftFunctions.path_prefix(
-          col("tsu"), col("event_id"), col("event_type"), maxSteps).as("path"),
-        count(lit(1)).as("n_events"))
-      .select(col("user_id"), unix_micros(col("sw.start")).as("start_us"),
-        col("path"), col("n_events"))
+      .withWatermark("event_time", watermarkDelay), maxSteps, gap)
 
   /** Baseline histogram for [[driftMonitor]]: ONE row holding the bin
     * counts of a historical batch — build it once offline, broadcast it

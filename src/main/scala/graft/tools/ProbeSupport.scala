@@ -1,16 +1,12 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.TextOps
-
 /** Shared plumbing for the dev-only scale probes (ScaleStress,
-  * Scale100Probe, Sf1Soak, RefitProbe) and the specs that replay their
-  * reference implementations — one definition of wall-clock timing,
-  * noop materialization, id-offset replication and the r11
-  * single-window "naive" forms, instead of a copy per tool. */
+  * Scale100Probe, Sf1Soak, RefitProbe) — one definition of wall-clock
+  * timing, noop materialization, id-offset replication and the
+  * build-once parquet cache, instead of a copy per tool. */
 object ProbeSupport {
 
   /** Wall-clock a block and print `[tag] label  N.NN s`. */
@@ -47,34 +43,5 @@ object ProbeSupport {
     if (!new java.io.File(path).exists())
       mk.write.mode("overwrite").parquet(path)
     spark.read.parquet(path)
-  }
-
-  /** The r11 single-window reference implementation of
-    * [[TextOps.budgetSelect]] — kept as the answer-identity oracle for
-    * the r12 bucket-decomposed rewrite (correct, but serializes each
-    * source through one sort partition; never use at scale). */
-  def budgetNaive(docs: DataFrame, budget: Long): DataFrame = {
-    val scored = docs.select(
-      col("source"), col("doc_id"),
-      TextOps.qualityScore(col("text")).as("quality"),
-      TextOps.tokenCountBpe(col("text")).cast("long").as("n_tokens"))
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("quality").desc, col("doc_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    scored
-      .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-      .filter(col("cum_tokens") <= budget)
-  }
-
-  /** The r11 single-window reference implementation of
-    * [[TextOps.shardAssign]] — same role as [[budgetNaive]]. */
-  def shardNaive(docs: DataFrame, nShards: Int): DataFrame = {
-    val scored = docs.select(
-      col("source").as("stratum"), col("doc_id"),
-      TextOps.tokenCountBpe(col("text")).cast("long").as("n_tokens"))
-    val w = Window.partitionBy(col("stratum"))
-      .orderBy(col("n_tokens").desc, col("doc_id").asc)
-    scored.withColumn("shard",
-      ((row_number().over(w) - 1) % nShards).cast("int"))
   }
 }

@@ -48,6 +48,26 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("graft_mode requires exactly 1 argument"), e.getMessage)
   }
 
+  test("every SQL function registerAll adds resolves in the extensions session") {
+    // the names registerAll adds: a fresh session's functions after the
+    // call, minus its functions before it
+    val fresh = SparkSession.builder().create()
+    SparkSession.setDefaultSession(SparkTestSession.spark)
+    SparkSession.setActiveSession(SparkTestSession.spark)
+    def names(s: SparkSession) = s.catalog.listFunctions().collect().map(_.name).toSet
+    val before = names(fresh)
+    graft.functions.GraftFunctions.registerAll(fresh)
+    val added = names(fresh) -- before
+    assert(added.size >= 40 && added("graft_kmv") && added("graft_cosine"), added)
+    val missing = added.toSeq.sorted.filterNot(n => spark.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not injected: $missing")
+    // and they build the same expressions: the SQL kernels answer alike
+    val q = """SELECT graft_kmv(x, 8), graft_hll(x, 6), graft_srp(array(1.0D, -2.0D), 4, 2),
+              |       graft_cosine(array(1.0D, 0.0D), array(1.0D, 1.0D)), graft_tokens('a b')
+              |FROM VALUES (1),(2),(2),(3) t(x)""".stripMargin
+    assert(spark.sql(q).collect().toSeq == fresh.sql(q).collect().toSeq)
+  }
+
   test("injected ExactRound rewrites scale-0 round on a double, HALF_UP") {
     // over range, not VALUES: a local relation is folded before the rule
     val q = spark.sql("SELECT round(id * 1.0D - 2.5D) AS r FROM range(0, 3)")

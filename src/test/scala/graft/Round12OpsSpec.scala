@@ -17,12 +17,34 @@ class Round12OpsSpec extends AnyFunSuite {
 
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-  /** The r11 single-window reference implementations (kept in
-    * ProbeSupport — one definition of the oracle). */
-  private def budgetNaive(budget: Long) =
-    graft.tools.ProbeSupport.budgetNaive(docs, budget)
-  private def shardNaive(nShards: Int) =
-    graft.tools.ProbeSupport.shardNaive(docs, nShards)
+  /** The r11 single-window reference implementation of
+    * [[TextOps.budgetSelect]] — the answer-identity oracle for the r12
+    * bucket-decomposed rewrite (correct, but serializes each source
+    * through one sort partition; never use at scale). */
+  private def budgetNaive(budget: Long) = {
+    val scored = docs.select(
+      col("source"), col("doc_id"),
+      TextOps.qualityScore(col("text")).as("quality"),
+      TextOps.tokenCountBpe(col("text")).cast("long").as("n_tokens"))
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("quality").desc, col("doc_id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    scored
+      .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
+      .filter(col("cum_tokens") <= budget)
+  }
+
+  /** The r11 single-window reference implementation of
+    * [[TextOps.shardAssign]] — same role as [[budgetNaive]]. */
+  private def shardNaive(nShards: Int) = {
+    val scored = docs.select(
+      col("source").as("stratum"), col("doc_id"),
+      TextOps.tokenCountBpe(col("text")).cast("long").as("n_tokens"))
+    val w = Window.partitionBy(col("stratum"))
+      .orderBy(col("n_tokens").desc, col("doc_id").asc)
+    scored.withColumn("shard",
+      ((row_number().over(w) - 1) % nShards).cast("int"))
+  }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] = {
     val names = df.columns.sorted

@@ -552,4 +552,22 @@ class Round19OpsSpec extends AnyFunSuite {
       }
     } finally rm(dir)
   }
+
+  test("encoder.json reader: only an object of Int-ranged integers parses") {
+    import graft.sources.Tokenizers
+    assert(Tokenizers.parseEncoderJson("""{"a": 1, "\u0120b": -2, "c\"": 2147483647}""")
+      == Map("a" -> 1, "\u0120b" -> -2, "c\"" -> Int.MaxValue))
+    assert(Tokenizers.parseEncoderJson(" { } ") == Map.empty)
+    for (bad <- Seq(
+        """{"a": 1.5}""", // a non-integer value
+        """{"a": "1"}""",
+        """{"a": 2147483648}""", // beyond the Int range
+        """{"a": -2147483649}""",
+        """[1, 2]""", // a non-object root
+        "7",
+        "{\"a\": }", // malformed
+        """{"a": 1} x""")) {
+      intercept[IllegalArgumentException](Tokenizers.parseEncoderJson(bad))
+    }
+  }
 }
