@@ -1,7 +1,12 @@
 #!/usr/bin/env python3
 """Dev-only mirror of the driver's correctness gate: run each oracle SQL in
 DuckDB against the sf parquet tables, compare (column-name-sorted,
-row-sorted) against the Spark parquet dumps from graft.Verify."""
+row-sorted) against the Spark parquet dumps from graft.Verify.
+
+    python3 dev/compare_oracle.py [sf dir] [verify out dir] [gate,gate,...]
+
+Exits 0 when every checked gate passes, 1 when one fails or none was
+checked, 2 when a named gate is not in the dump's oracle_sql.json."""
 import json
 import math
 import sys
@@ -37,6 +42,10 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    unknown = sorted(set(only or []) - set(oracle))
+    if unknown:
+        print(f"no such gate: {', '.join(unknown)}")
+        return 2
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
@@ -103,6 +112,9 @@ def main():
             for r in list(ss - so)[:3]:
                 print(f"    spark-only : {r}")
     print(f"== {n_pass} pass / {n_fail} fail ==")
+    if n_pass + n_fail == 0:
+        print("no gate was checked")
+        return 1
     return 1 if n_fail else 0
 
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
  * - shuffle.partitions sized to local cores here; on a real cluster this
  *   becomes ~2-3× total executor cores (AQE coalesces the excess).
  * - codegen cache sized for a MULTI-QUERY workload: the default 100
- *   compiled-class entries thrash under this library's ~200-query gate
+ *   compiled-class entries thrash under this library's 316-query gate
  *   (every interleaved bench sweep re-paid ~0.3s of janino compilation
  *   PER QUERY — measured 1.5× total inflation); a long-lived analytics
  *   session serving many distinct queries wants the cache to hold them
@@ -87,7 +87,7 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     // WindowExec's "No Partition Defined" warning fires once per
     // unpartitioned window per query — hundreds of lines across the
-    // ~290-query gate that buried the r15 bench's death. Every global
+    // 316-query gate that buried the r15 bench's death. Every global
     // frame in this library is arity-bounded by construction (seed
     // draws over limit(k) rows, #checks/#days/#ranks frames) and
     // audited in PlanAuditSpec, so the warning carries no information

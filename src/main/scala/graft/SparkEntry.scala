@@ -1,26 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.ops.{Dedup, Events, Multimodal, Packing, Scale, Similarity, Sketches, Stats, TextOps}
+import graft.gates._
+import graft.gates.Shared.t
 
 /**
  * Driver contract: every operator in SURVEY.md §2 is exposed as a named
  * query with a DuckDB oracle. Column names are aliased identically on both
  * sides; float aggregates are rounded to 6 dp on both sides; ties are made
  * deterministic on both sides (struct-ordered max_by / explicit ORDER BY).
+ *
+ * Each gate is declared once, as a [[graft.gates.Gate]] in the object of
+ * its family under `graft.gates`; `queries` and `oracleSql` are two views
+ * of that one table.
  */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    // normalizeTs: the driver's events.ts has shipped as both
-    // TIMESTAMP(NANOS)-as-long and native timestamp[us] (→ timestamp_ntz);
-    // every query site expects the epoch-nanos long, so normalize at the
-    // single load boundary (no-op projection for non-ts tables).
-    graft.ops.EventTime.normalizeTs(graft.sources.Tables.load(s, dir, name))
 
   /** Flagship: stats dashboard over lineitem — every reference aggregate in
     * one pass (single shuffle, all map-side combinable). */
@@ -38,140 +35,6 @@ object SparkEntry {
         GraftFunctions.max_by_det(col("l_orderkey"), col("l_extendedprice")).as("max_price_order"))
   }
 
-  // ── shared sub-plans ──────────────────────────────────────────────────
-  private val MinhashK = 8
-  private val MinhashBands = 4
-  private val LshPlanes = 16
-  private val EmbDim = 64
-  // PQ gate sizing: m=8 subspaces (32x vs float32), 32 codewords each
-  private val PqM = 8
-  private val PqK = 32
-  // SRP banding for near-dup candidate pairs: 64 planes cut into 16
-  // four-bit bands (recall 0.93 vs the all-pairs truth at cos ≥ 0.4 on
-  // the test corpus — audited in SimilaritySpec)
-  private val SrpPlanes = 64
-  private val SrpBandBits = 4
-  // Bloom decontamination filter: 2^18 bits (32 KB broadcast), 3 hashes —
-  // ~1-2% false-positive rate at gate-scale eval fill, replayed exactly
-  // by the oracle from the same md5 position family
-  private val BloomBits = 1 << 18
-  private val BloomHashes = 3
-
-  private def docs(s: SparkSession, dir: String) = t(s, dir, "documents")
-
-  /** The synthesized crawl the q_crawl_clean / q_crawl_funnel gates
-    * run on: each doc's text wrapped in a deterministic page template
-    * (comment, head/style/nav chrome stripped as containers; h1/p/div/
-    * table block structure; entities; a per-source "site notice" line
-    * and universal tail/cell lines that per-source boilerplate removal
-    * must catch), with body splices so every stage has real work: CJK
-    * prefixes (%20 slices) that language routing must drop, the PII
-    * splice (%11) that redaction must mask BEFORE the dedup hash, the
-    * mojibake junk (%9) that normalization must repair. The DuckDB
-    * side synthesizes the SAME html string (crawlChainSql). */
-  private def crawlPages(s: SparkSession, dir: String) = {
-    val id = col("doc_id").cast("string")
-    val body = concat(
-      when(col("doc_id") % 20 === 0, lit("日本語のテキストです "))
-        .when(col("doc_id") % 20 === 1, lit("한국어 텍스트 "))
-        .when(col("doc_id") % 20 === 2, lit("中文文本内容 "))
-        .otherwise(lit("")),
-      col("text"),
-      when(col("doc_id") % 11 === 0,
-        lit(" call 555-867-5309 or +1 (415) 555-2671 now, card" +
-          " 4111 1111 1111 1111, host 10.0.255.254, id 1234567890 stays"))
-        .otherwise(lit("")),
-      when(col("doc_id") % 9 === 0, lit(" " + NormJunk)).otherwise(lit("")))
-    val html = concat(
-      lit("<html><!-- crawl & chrome --><head><title>T"), id,
-      lit("</title><style>body { color: #000; }</style></head><body>" +
-        "<nav><ul><li>Home</li><li>Docs</li></ul></nav><h1>Doc "), id,
-      lit("</h1><p>"), body,
-      lit("</p><div>site notice "), col("source"),
-      lit("</div><div class=\"tail\">Tail &amp; entities &lt;b&gt;" +
-        " &quot;q&quot;&nbsp;end</div><table><tr><td>r"), id,
-      lit("</td><td>c2</td></tr></table>" +
-        "<footer>(c) example</footer></body></html>"))
-    docs(s, dir).select(col("doc_id"), col("source"), html.as("html"))
-  }
-
-  /** ONE chain invocation for the crawl capstone pair (r20, the r17
-    * verdict's #3): q_crawl_clean RECOMPUTES the stage frames each time
-    * it runs (sorting before q_crawl_funnel in every sweep, so the
-    * bench measures the chain exactly once per sweep) and persists the
-    * three multiply-consumed frames; q_crawl_funnel consumes the
-    * persisted frames when present — its per-source counts become
-    * aggregates over cache reads — and builds (+caches) standalone on a
-    * miss (subset Verify runs). Values are identical either way (the
-    * chain is deterministic), so the oracle gate is indifferent to the
-    * cache. Both gates now run the FULL synthesized crawl again: the
-    * r18/r19 complementary %2 half-slices existed only to halve the
-    * pair's 2× chain cost, and with one shared chain each gate alone
-    * covers every splice family (%20 CJK arms are even-id-only — a
-    * half-slice never saw ja/zh routing). */
-  private val crawlStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.CrawlStages]()
-  private def crawlStagesShared(s: SparkSession, dir: String,
-      recompute: Boolean): Dedup.CrawlStages = crawlStageCache.synchronized {
-    val cached = crawlStageCache.get(dir)
-    if (cached != null && !recompute) cached
-    else {
-      if (cached != null) cached.unpersistAll()
-      val st = Dedup.crawlStages(crawlPages(s, dir), "doc_id", "html",
-        "source", keepLangs = Seq("en"), boilerFrac = 0.4,
-        jaccardMax = 0.8, k = MinhashK, bands = MinhashBands,
-        persistFrames = true)
-      crawlStageCache.put(dir, st)
-      st
-    }
-  }
-
-  /** The synthesized URL frontier the q_url_dedup / q_crawl_schedule
-    * gates share: case/port/fragment/tracking-param/slash variants
-    * derived from real doc columns so both engines canonicalize the
-    * identical strings. Keeps every documents column (q_crawl_schedule
-    * uses n_chars as the fetch priority). */
-  private def synthUrls(s: SparkSession, dir: String) =
-    docs(s, dir).withColumn("url",
-      concat(
-        when(col("doc_id") % 2 === 0, lit("HTTPS://")).otherwise(lit("https://")),
-        when(col("doc_id") % 3 === 0, upper(col("source"))).otherwise(col("source")),
-        lit(".example.org"),
-        when(col("doc_id") % 5 === 0, lit(":443")).otherwise(lit("")),
-        lit("/"), col("lang"),
-        when(col("doc_id") % 2 === 0, lit("/")).otherwise(lit("")),
-        when(col("doc_id") % 4 === 0, lit("?utm_source=feed&b=2&a=1"))
-          .otherwise(when(col("doc_id") % 4 === 1, lit("?a=1&b=2"))
-            .otherwise(lit(""))),
-        when(col("doc_id") % 7 === 0, lit("#frag")).otherwise(lit(""))))
-  private def emb(s: SparkSession, dir: String) =
-    Similarity.prepared(t(s, dir, "embeddings"), "vec_id", "embedding")
-
-  /** The synthesized linked pages the q_link_graph gate runs on — a
-    * deterministic (url, html) frame whose hrefs exercise every
-    * resolution rule of [[TextOps.linkGraph]]; the DuckDB side
-    * synthesizes the SAME strings. */
-  private def linkPages(s: SparkSession, dir: String,
-      docFilter: Column = lit(true)) =
-    docs(s, dir).filter(docFilter).select(
-      concat(lit("https://"), col("source"), lit(".site.org/doc/"),
-        col("doc_id").cast("string")).as("url"),
-      concat(
-        lit("<html><body><a href=\"https://"), col("source"),
-        lit(".example.org/p"), (col("doc_id") % 7).cast("string"),
-        lit("\">x</a>"),
-        when(col("doc_id") % 3 === 0,
-          lit("<p>see <a href='/local/page'>here</a></p>"))
-          .otherwise(lit("")),
-        when(col("doc_id") % 5 === 0,
-          concat(lit("<A HREF=\"HTTPS://Mirror."), upper(col("source")),
-            lit(".ORG:443/z\">m</a>"))).otherwise(lit("")),
-        when(col("doc_id") % 4 === 0,
-          lit("<a href=\"mailto:a@ex.org\">mail</a>" +
-            "<a href=\"//cdn.shared.net/lib.js\">cdn</a>"))
-          .otherwise(lit("")),
-        lit("</body></html>")).as("html"))
-
   /** The gate maps are built through this instead of `Map(...)`, which
     * silently keeps the last of two entries under one key. */
   private[graft] def uniqueKeys[V](entries: (String, V)*): Map[String, V] = {
@@ -181,8817 +44,27 @@ object SparkEntry {
     entries.toMap
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = uniqueKeys(
-    // ── reference surface ───────────────────────────────────────────────
-    "q_mode_string" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        GraftFunctions.mode_agg(col("l_returnflag")).as("mode_returnflag"))),
-
-    "q_mode_int" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        GraftFunctions.mode_agg(col("l_linenumber")).as("mode_linenumber"))),
-
-    "q_mode_grouped" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(GraftFunctions.mode_agg(col("l_linenumber")).as("mode_linenumber"))),
-
-    "q_mode_date" -> ((s, dir) =>
-      // date-typed mode (reference supports date/time/timestamp inputs);
-      // output as ISO string: date/timestamp encodings are not
-      // hash-comparable across engines, strings are
-      t(s, dir, "lineitem").agg(
-        date_format(GraftFunctions.mode_agg(to_date(col("l_shipdate"))), "yyyy-MM-dd")
-          .as("mode_shipdate"))),
-
-    "q_mode_scalable" -> ((s, dir) =>
-      // two-shuffle compositional mode — the unbounded-cardinality path
-      // (l_partkey has ~20k distinct values per group at sf0.1)
-      GraftFunctions.modeBy(t(s, dir, "lineitem"), Seq("l_returnflag"), "l_partkey")),
-
-    "q_mode_float" -> ((s, dir) =>
-      // Float64 mode (reference src/mode.rs:171-177; tests/main.rs:40):
-      // l_quantity duplicates heavily; tie-break = greatest value
-      t(s, dir, "lineitem").agg(
-        round(GraftFunctions.mode_agg(col("l_quantity")), 6).as("mode_quantity"))),
-
-    "q_mode_ts" -> ((s, dir) =>
-      // Timestamp mode (reference src/mode.rs:178-199; tests/main.rs:97):
-      // hour-truncated event times give real repeats; output as epoch µs —
-      // timestamp encodings are not hash-comparable across engines
-      t(s, dir, "events")
-        .select(date_trunc("hour", timestamp_micros(expr("ts div 1000L"))).as("h"))
-        .agg(unix_micros(GraftFunctions.mode_agg(col("h"))).as("mode_hour_us"))),
-
-    "q_mode_byte" -> ((s, dir) =>
-      // Int8 mode (reference src/mode.rs:102-117 dispatches Int8/Int16;
-      // Spark's Byte/Short are the expressible subset — unsigned widths
-      // have no Spark analogue, see SURVEY §2)
-      t(s, dir, "lineitem")
-        .select((col("l_partkey") % 100).cast("byte").as("b"))
-        .agg(GraftFunctions.mode_agg(col("b")).as("mode_byte"))),
-
-    "q_mode_short" -> ((s, dir) =>
-      // Int16 mode over a SMALLINT-ranged projection
-      t(s, dir, "lineitem")
-        .select((col("l_partkey") % 1000).cast("short").as("h"))
-        .agg(GraftFunctions.mode_agg(col("h")).as("mode_short"))),
-
-    "q_mode_float32" -> ((s, dir) =>
-      // Float32 mode (reference src/mode.rs:171-177 Float32 arm): cast
-      // narrows double→float IEEE-identically in both engines; ties →
-      // greatest value as for Float64
-      t(s, dir, "lineitem")
-        .select(col("l_quantity").cast("float").as("q32"))
-        .agg(GraftFunctions.mode_agg(col("q32")).as("mode_qty_f32"))),
-
-    "q_mode_empty" -> ((s, dir) =>
-      // reference empty-input edge: a global mode over zero rows is one
-      // row of NULL (like the max_by/min_by twin), not zero rows
-      t(s, dir, "orders").filter(lit(false))
-        .agg(GraftFunctions.mode_agg(col("o_orderkey")).as("mode_orderkey"),
-          count(lit(1)).as("n"))),
-
-    "q_mode_nulls" -> ((s, dir) => {
-      // reference null edge (mode ignores NULL inputs; an all-NULL group
-      // yields NULL): one priority's values are nulled out entirely
-      val y = when(col("o_orderpriority") === "1-URGENT", lit(null).cast("long"))
-        .otherwise(col("o_orderkey"))
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(GraftFunctions.mode_agg(y).as("mode_y"))
-    }),
-
-    "q_max_by" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(GraftFunctions.max_by_det(col("o_orderkey"), col("o_totalprice")).as("best_orderkey"))),
-
-    "q_maxmin_by_nulls" -> ((s, dir) => {
-      // engine-convention null edge (Spark/DuckDB max_by both ignore
-      // null ordering keys): an all-NULL group → NULL, partially-null
-      // groups ignore the null rows. The REFERENCE's own snapshot
-      // behavior (null keys WIN, tests/main.rs:177-204) is replayed by
-      // q_maxmin_by_ref below.
-      val y = when(col("o_orderpriority") === "1-URGENT", lit(null).cast("double"))
-        .otherwise(col("o_totalprice"))
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          GraftFunctions.max_by_det(col("o_orderkey"), y).as("best_orderkey"),
-          GraftFunctions.min_by_det(col("o_orderkey"), y).as("worst_orderkey"))
-    }),
-
-    "q_maxmin_by_empty" -> ((s, dir) =>
-      // reference empty-input edge: a global aggregate over zero rows is
-      // one row of NULLs (count 0), not zero rows
-      t(s, dir, "orders")
-        .filter(lit(false))
-        .agg(
-          GraftFunctions.max_by_det(col("o_orderkey"), col("o_totalprice")).as("best_orderkey"),
-          GraftFunctions.min_by_det(col("o_orderkey"), col("o_totalprice")).as("worst_orderkey"),
-          count(lit(1)).as("n"))),
-
-    "q_maxmin_by_ref" -> ((s, dir) => {
-      // EXACT reference-snapshot null semantics (last_value ORDER BY y
-      // NULLS LAST, max_min_by.rs:99,196; tests/main.rs:177-204): a row
-      // whose ordering key is NULL beats every real value in BOTH
-      // max_by and min_by. Nulls sprinkled by orderkey mod 7 so every
-      // group exercises the null-wins path.
-      val y = when(col("o_orderkey") % 7 === 0, lit(null).cast("double"))
-        .otherwise(col("o_totalprice"))
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          GraftFunctions.max_by_ref(col("o_orderkey"), y).as("mx_ref"),
-          GraftFunctions.min_by_ref(col("o_orderkey"), y).as("mn_ref"))
-    }),
-
-    "q_min_by" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(GraftFunctions.min_by_det(col("o_orderkey"), col("o_totalprice")).as("best_orderkey"))),
-
-    "q_skewness" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(round(GraftFunctions.skewness_samp(col("l_extendedprice")), 6).as("skew"))),
-
-    "q_kurtosis" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(round(GraftFunctions.kurtosis_samp(col("l_quantity")), 6).as("kurt"))),
-
-    "q_kurtosis_pop" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(round(GraftFunctions.kurtosis_pop(col("l_quantity")), 6).as("kurt_pop"))),
-
-    "q_stats_edges" -> ((s, dir) => {
-      // reference edge semantics for the moment aggregates, checked over
-      // thousands of REAL tiny groups at once: nulls are skipped
-      // (l_linenumber=1 masked to null), skewness needs >= 3 non-null
-      // values, sample kurtosis >= 4, population kurtosis >= 2 — the
-      // per-group null-ness is classified by non-null count and counted,
-      // which is exact (no float comparisons cross the oracle)
-      val v = when(col("l_linenumber") === 1, lit(null).cast("double"))
-        .otherwise(col("l_extendedprice"))
-      t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(
-          count(v).as("nv"),
-          GraftFunctions.skewness_samp(v).as("sk"),
-          GraftFunctions.kurtosis_samp(v).as("ku"),
-          GraftFunctions.kurtosis_pop(v).as("kp"))
-        .groupBy(col("nv"))
-        .agg(
-          count(lit(1)).as("n_groups"),
-          count(col("sk")).as("sk_groups"),
-          count(col("ku")).as("ku_groups"),
-          count(col("kp")).as("kp_groups"))
-    }),
-
-    "q_tpch_q1" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 6).as("sum_qty"),
-          // exact integer-cents sums: double accumulation order is
-          // nondeterministic under partial aggregation; long sums are
-          // exact, order-free, and stay in whole-stage codegen
-          (sum(round(col("l_extendedprice") * 100).cast("long")) / 100.0).as("sum_base_price"),
-          (sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000).cast("long"))
-            / 1000000.0).as("sum_disc_price"),
-          round(sum(col("l_quantity")) / count(lit(1)), 6).as("avg_qty"),
-          count(lit(1)).as("count_order"))),
-
-    // ── dedup ───────────────────────────────────────────────────────────
-    "q_dedup_exact" -> ((s, dir) =>
-      Dedup.exactDedup(docs(s, dir), "doc_id", "text")),
-
-    "q_chunk_stride" -> ((s, dir) =>
-      // RAG-style overlapping chunk windows: 16-token chunks every 8
-      TextOps.chunkStride(docs(s, dir), "doc_id", "text", 16, 8)),
-
-    "q_chunk_dedup" -> ((s, dir) =>
-      // chunk-level (paragraph-shape) dedup: 8-token chunks, one global
-      // survivor per distinct chunk, per-doc survival counts
-      TextOps.chunkDedup(docs(s, dir), "doc_id", "text", chunkTokens = 8)),
-
-    "q_dedup_norm" -> ((s, dir) =>
-      // normalization-insensitive exact dedup: lowercase, collapse
-      // whitespace, strip punctuation before hashing
-      Dedup.exactDedup(
-        docs(s, dir).select(
-          col("doc_id"),
-          regexp_replace(
-            regexp_replace(trim(lower(col("text"))), "[^a-z0-9\\s]", ""),
-            "\\s+", " ").as("text")),
-        "doc_id", "text")),
-
-    "q_dedup_incremental" -> ((s, dir) => {
-      // daily-ingest shape: src0 is the historical corpus (fingerprint
-      // index), everything else is the new shard; survivors are absent
-      // from the index AND first within the shard
-      val d = docs(s, dir)
-      Dedup.dedupIncremental(
-        d.filter(col("source") =!= "src0"), "doc_id", "text",
-        d.filter(col("source") === "src0").select(md5(col("text")).as("fp")),
-        "fp")
-    }),
-
-    "q_neardup_incremental" -> ((s, dir) => {
-      // snapshot-ingest NEAR-dup: even doc_ids are the historical corpus
-      // (persisted LSH band-key index), odd doc_ids the new shard; a new
-      // doc is flagged iff it shares a band key with history
-      val d = docs(s, dir)
-      Dedup.neardupIncremental(
-        d.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        Dedup.bandKeyIndex(
-          d.filter(col("doc_id") % 2 === 0), "doc_id", "text", MinhashK, MinhashBands),
-        MinhashK, MinhashBands)
-    }),
-
-    "q_dedup_spans" -> ((s, dir) =>
-      // corpus-wide duplicated-span removal (n-gram-grained substring
-      // dedup): every non-first occurrence of a duplicated 8-token span
-      // is cut; per-doc stats + the cleaned normalized text
-      Dedup.dedupSpans(docs(s, dir), "doc_id", "text", gram = 8)),
-
-    "q_index_maintain" -> ((s, dir) => {
-      // snapshot maintenance of the LSH band index WITHOUT a rebuild:
-      // start = even ids, retire ids divisible by 10, add odd ids
-      val d = docs(s, dir)
-      Dedup.updateBandIndex(
-        Dedup.bandKeyIndex(
-          d.filter(col("doc_id") % 2 === 0), "doc_id", "text", MinhashK, MinhashBands),
-        d.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        d.filter(col("doc_id") % 10 === 0).select(col("doc_id")),
-        MinhashK, MinhashBands)
-    }),
-
-    "q_collocations" -> ((s, dir) =>
-      // PMI-ranked adjacent token pairs (min count 5, top 20): the
-      // independence-normalized phrase-candidate statistic
-      TextOps.collocations(docs(s, dir), "text", minCount = 5, k = 20)),
-
-    "q_negative_sample" -> ((s, dir) => {
-      // contrastive negatives: every 7th doc is a "query"; 3 md5-keyed
-      // negatives each, drawn from its hash bucket only (never a cross
-      // join), with (q, q+1) treated as the known positive pair
-      val ids = docs(s, dir).select(col("doc_id"))
-      val q = ids.filter(col("doc_id") % 7 === 0).select(col("doc_id").as("qid"))
-      val pool = ids.select(col("doc_id").as("did"))
-      val pos = q.select(col("qid"), (col("qid") + 1).as("did"))
-      TextOps.negativeSample(q, pool, pos, "qid", "did", k = 3, buckets = 8)
-    }),
-
-    "q_shard_assign" -> ((s, dir) =>
-      // balanced training shards: per source, deal docs ranked by token
-      // count descending round-robin over 8 shards (LPT greedy)
-      TextOps.shardAssign(docs(s, dir), "doc_id", "text", "source", 8)),
-
-    "q_corpus_diff" -> ((s, dir) => {
-      // dataset-versioning triage: src0/src1 is the old snapshot, the
-      // rest the new; per content hash added/removed/common counts
-      val d = docs(s, dir)
-      Dedup.corpusDiff(
-        d.filter(col("source").isin("src0", "src1")),
-        d.filter(!col("source").isin("src0", "src1")),
-        "doc_id", "text")
-    }),
-
-    "q_user_stats" -> ((s, dir) =>
-      // the reference aggregates composed in a real pipeline query
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("n"),
-          GraftFunctions.mode_agg(col("event_type")).as("mode_type"),
-          round(GraftFunctions.skewness_samp(col("value")), 6).as("skew_value"),
-          round(GraftFunctions.kurtosis_samp(col("value")), 6).as("kurt_value"),
-          GraftFunctions.max_by_det(col("event_type"), col("value")).as("top_type"))),
-
-    "q_minhash_signature" -> ((s, dir) =>
-      Dedup.minhashSignatures(docs(s, dir), "doc_id", "text", MinhashK)
-        .select(col("doc_id"),
-          concat_ws("|", transform(col("sig"), x => x.cast("string"))).as("sig"))),
-
-    "q_minhash_pairs" -> ((s, dir) =>
-      Dedup.candidatePairs(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands)),
-
-    "q_minhash_pairs_capped" -> ((s, dir) =>
-      // skew-proof LSH banding: buckets over maxBucket emit a min-id STAR
-      // (O(m) edges, CC-equivalent) instead of O(m²) all-pairs — the
-      // duplicate-heavy-corpus guard. maxBucket=2 here so the sf0.01
-      // 3-member buckets actually exercise the star branch.
-      Dedup.candidatePairsCapped(
-        Dedup.shingleSets(docs(s, dir), "doc_id", "text"),
-        MinhashK, MinhashBands, maxBucket = 2)),
-
-    "q_ngram_jaccard" -> ((s, dir) =>
-      Dedup.verifiedPairs(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands)),
-
-    "q_distinct_stats" -> ((s, dir) =>
-      // per-source corpus stats: docs, total tokens, distinct vocabulary
-      {
-        // two distinct families + a plain count in ONE agg would
-        // Expand-triplicate the exploded token stream (the largest
-        // frame in the query); three separate aggregations joined on
-        // the bounded source key shuffle strictly less
-        val base = docs(s, dir)
-          .select(col("source"), col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-        val nTok = base.groupBy(col("source")).agg(count(lit(1)).as("n_tokens"))
-        val nDocs = base.select(col("source"), col("doc_id")).distinct()
-          .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-        val vocab = base.select(col("source"), col("token")).distinct()
-          .groupBy(col("source")).agg(count(lit(1)).as("vocab"))
-        nDocs.join(nTok, "source").join(vocab, "source")
-          .select(col("source"), col("n_docs"), col("n_tokens"), col("vocab"))
-      }),
-
-    "q_unigram_logprob" -> ((s, dir) =>
-      TextOps.unigramLogProb(docs(s, dir), "doc_id", "text")),
-
-    "q_tfidf" -> ((s, dir) =>
-      TextOps.tfIdfTopTerms(docs(s, dir), "doc_id", "text", topN = 3)),
-
-    "q_sample_stratified" -> ((s, dir) =>
-      TextOps.stratifiedSample(
-        docs(s, dir).select(col("doc_id"), col("lang")), "lang", "doc_id", 20)),
-
-    "q_sample_weighted" -> ((s, dir) =>
-      // weight ∝ text length: longer docs drawn more often, per-language
-      TextOps.weightedSample(
-        docs(s, dir).select(col("doc_id"), col("lang"), length(col("text")).as("w")),
-        "lang", "doc_id", col("w"), 15)
-        .select(col("doc_id"), col("lang"))),
-
-    "q_split_assign" -> ((s, dir) =>
-      docs(s, dir).select(
-        col("doc_id"), TextOps.splitAssign(col("doc_id")).as("split"))),
-
-    "q_contamination" -> ((s, dir) => {
-      // treat src0 docs as the eval set, the rest as training data:
-      // flag train docs sharing >= 3 distinct 3-grams with any eval doc
-      val d = docs(s, dir)
-      Dedup.crossContamination(
-        d.filter(col("source") =!= "src0"), d.filter(col("source") === "src0"),
-        "doc_id", "text", minShared = 3)
-    }),
-
-    "q_corpus_clean" -> ((s, dir) =>
-      Dedup.cleanCorpus(docs(s, dir), "doc_id", "text",
-        qualityMin = 0.4, jaccardMax = 0.8, k = MinhashK, bands = MinhashBands)),
-
-    "q_crawl_clean" -> ((s, dir) =>
-      // THE COMPOSED CRAWL FRONT DOOR end to end over the synthesized
-      // crawl (see crawlPages: deterministic page template + CJK/PII/
-      // mojibake body splices so every stage has real work). Both
-      // engines synthesize the SAME html string, then replay the whole
-      // chain. FULL-size again since r20: the pair shares ONE chain
-      // invocation (crawlStagesShared — this gate recomputes + persists
-      // the stage frames, the funnel reads them), so full × 1 replaces
-      // the r18/r19 half-slices × 2 and each gate alone covers every
-      // splice family.
-      crawlStagesShared(s, dir, recompute = true).survivors
-        .select(col("doc_id"), col("lang"), col("text"))),
-
-    "q_dedup_paragraphs" -> ((s, dir) => {
-      // corpus-wide repeated-paragraph removal: two shared passages are
-      // spliced across overlapping doc slices (%6 / %10) so cross-doc
-      // repeats, within-corpus exact-dup bodies, and unique lines all
-      // exercise the first-occurrence-wins rule
-      val shareA = "this press release paragraph repeats verbatim across " +
-        "many mirror pages of the corpus"
-      val shareB = "standard licence text distributed with every bundled " +
-        "release of the archive"
-      val m = docs(s, dir).select(col("doc_id"), concat(col("text"),
-        when(col("doc_id") % 6 === 0, lit("\n" + shareA)).otherwise(lit("")),
-        when(col("doc_id") % 10 === 0, lit("\n" + shareB)).otherwise(lit("")))
-        .as("text"))
-      Dedup.dedupParagraphs(m, "doc_id", "text")
-    }),
-
-    "q_crawl_funnel" -> ((s, dir) =>
-      // the whole-chain observability twin: per source, how many pages
-      // survive each successive gate of the crawl chain. Consumes the
-      // SHARED persisted stage frames q_crawl_clean builds
-      // (crawlStagesShared) — the funnel is then four tiny per-source
-      // aggregates over cache reads, not a second chain derivation;
-      // on a cache miss (subset runs) it builds the chain itself.
-      Dedup.crawlFunnelFromStages(crawlPages(s, dir), "source",
-        crawlStagesShared(s, dir, recompute = false))),
-
-    "q_simhash" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"), TextOps.tokensNative(col("text")).as("toks"))
-        .select(col("doc_id"), TextOps.simhash64(col("toks")).as("simhash"))),
-
-    "q_simhash_pairs" -> ((s, dir) =>
-      // SimHash near-dup pairs: pigeonhole-banded bucket join + exact
-      // Hamming <= 3 on candidates only
-      Dedup.simhashPairs(docs(s, dir), "doc_id", "text", maxHamming = 3)),
-
-    // ── text analysis ───────────────────────────────────────────────────
-    "q_langid" -> ((s, dir) =>
-      // one-pass TextStats kernel — no token array is ever materialized
-      docs(s, dir)
-        .select(col("doc_id"), TextOps.langIdText(col("text")).as("lang_pred"))),
-
-    "q_langid_cjk" -> ((s, dir) => {
-      // multilingual twin of q_langid: deterministically splice CJK
-      // sentences onto a slice of docs so all three script arms (kana →
-      // ja, hangul → ko, Han-only → zh) AND the Latin stopword fallback
-      // are exercised; token counts switch to the char-as-token CJK
-      // estimate so budget math downstream stays sane
-      val mixed = docs(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 20 === 0,
-          concat(lit("日本語のテキストです "), col("text")))
-          .when(col("doc_id") % 20 === 1,
-            concat(lit("한국어 텍스트 "), col("text")))
-          .when(col("doc_id") % 20 === 2,
-            concat(lit("中文文本内容 "), col("text")))
-          .otherwise(col("text")).as("text"))
-      mixed.select(col("doc_id"),
-        TextOps.langIdCjk(col("text")).as("lang_pred"),
-        TextOps.tokenCountCjk(col("text")).as("n_tok"))
-    }),
-
-    "q_langid_spans" -> ((s, dir) => {
-      // per-paragraph language segmentation: splice deterministic
-      // multilingual paragraphs so single-span docs, multi-span
-      // code-switched docs, AND consecutive-same-lang collapse are all
-      // exercised (the ja splice is TWO lines -> one 2-line span)
-      val m = docs(s, dir).select(col("doc_id"), concat(
-        when(col("doc_id") % 10 === 0,
-          lit("日本語のテキストです\nこれは二行目の日本語\n")).otherwise(lit("")),
-        col("text"),
-        when(col("doc_id") % 10 === 1,
-          lit("\n한국어 텍스트 단락")).otherwise(lit("")),
-        when(col("doc_id") % 5 === 2,
-          lit("\nle texte est ici avec le la et les mots du jour"))
-          .otherwise(lit(""))).as("text"))
-      TextOps.langIdSpans(m, "doc_id", "text")
-    }),
-
-    "q_boilerplate" -> ((s, dir) => {
-      // CCNet-style boilerplate-line removal: deterministic nav headers
-      // (on ~half of each source's docs, frac >= 0.4) and per-source
-      // copyright footers (every doc) are spliced in so the threshold
-      // arm, the universal arm, and unique body lines are all exercised
-      val m = docs(s, dir).select(col("doc_id"), col("source"),
-        concat(
-          when(col("doc_id") % 2 === 0,
-            lit("NAV HOME ABOUT CONTACT\n")).otherwise(lit("")),
-          col("text"), lit("\ncopyright "), col("source")).as("text"))
-      TextOps.boilerplate(m, "doc_id", "text", "source", minDocFrac = 0.4)
-    }),
-
-    "q_boilerplate_clean" -> ((s, dir) => {
-      // the text-EMITTING boilerplate twin: same splice, same boiler
-      // sets, but the output is the cleaned text itself — what the
-      // pipeline feeds downstream (md5(clean_text) == q_boilerplate's
-      // clean_hash by construction, spec-pinned)
-      val m = docs(s, dir).select(col("doc_id"), col("source"),
-        concat(
-          when(col("doc_id") % 2 === 0,
-            lit("NAV HOME ABOUT CONTACT\n")).otherwise(lit("")),
-          col("text"), lit("\ncopyright "), col("source")).as("text"))
-      TextOps.boilerplateClean(m, "doc_id", "text", "source", minDocFrac = 0.4)
-    }),
-
-    "q_gopher_quality" -> ((s, dir) => {
-      // the Gopher filter battery: a deterministic slice of docs gets a
-      // bullet/symbol-heavy tail spliced in so the symbol, bullet and
-      // word-count arms all fire alongside clean passes
-      val m = docs(s, dir).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            lit("\n- alpha bullet\n* beta bullet\n" +
-              "##############################... ... ...")).otherwise(lit("")))
-          .as("text"))
-      TextOps.gopherQualityFlags(m, "doc_id", "text")
-    }),
-
-    "q_filter_report" -> ((s, dir) => {
-      // the corpus-ops dashboard over the Gopher gate: per source, how
-      // many docs each rule rejects and the overall keep rate — the
-      // readout that tells an operator WHICH crawl source is rotting
-      val d = docs(s, dir)
-      val m = d.select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            lit("\n- alpha bullet\n* beta bullet\n" +
-              "##############################... ... ...")).otherwise(lit("")))
-          .as("text"))
-      val flags = TextOps.gopherQualityFlags(m, "doc_id", "text")
-      def fails(c: String) = sum(when(!col(c), 1L).otherwise(0L))
-      flags.join(d.select(col("doc_id"), col("source")), "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          fails("pass_words").as("fail_words"),
-          fails("pass_mean_len").as("fail_mean_len"),
-          fails("pass_symbols").as("fail_symbols"),
-          fails("pass_bullets").as("fail_bullets"),
-          fails("pass_ellipsis").as("fail_ellipsis"),
-          fails("pass_alpha").as("fail_alpha"),
-          fails("pass_stopwords").as("fail_stopwords"),
-          round(sum(when(col("keep"), 1L).otherwise(0L)).cast("double") /
-            count(lit(1)).cast("double"), 6).as("keep_rate"))
-    }),
-
-    "q_quality" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), TextOps.qualityScore(col("text")).as("quality"))),
-
-    "q_fim_transform" -> ((s, dir) =>
-      // fill-in-middle rewrite of half the corpus (code-LLM infilling
-      // prep): decision + both character split points derive from
-      // md5(doc_id), so the rewrite replays identically anywhere
-      TextOps.fimTransform(docs(s, dir), "doc_id", "text", fimRate = 0.5)),
-
-    "q_quality_linear" -> ((s, dir) => {
-      // hashed-feature linear classifier SERVING (r18, the
-      // FineWeb-Edu deployment shape): the "trained model" is a
-      // deterministic 512-bucket weight frame both engines synthesize
-      // from md5 (w = uint32(md5('w_b'))/2^32 − 0.5), served through
-      // the real broadcast-join scoring path
-      val weights = s.range(512).select(col("id").as("bucket"),
-        (conv(substring(md5(concat(lit("w_"), col("id").cast("string"))),
-          1, 8), 16, 10).cast("double") / lit(4294967296.0) - 0.5).as("w"))
-      TextOps.scoreLinear(docs(s, dir), "doc_id", "text", weights,
-        numBuckets = 512, bias = 0.1)
-    }),
-
-    "q_token_count" -> ((s, dir) =>
-      docs(s, dir).select(
-        col("doc_id"),
-        TextOps.tokenCountWs(col("text")).as("n_ws"),
-        TextOps.tokenCountBpe(col("text")).as("n_bpe"))),
-
-    "q_bpe_encode" -> ((s, dir) => {
-      // REAL merges-table BPE encoding (vs q_token_count's regex
-      // ESTIMATE): per doc the true token count under the pinned gate
-      // vocabulary, the fertility vs word count, and the first 10
-      // tokens as a flattened sample — the numbers budget/fertility/
-      // packing math should run on
-      val d = Scale.fanOutSmallScan(docs(s, dir), col("doc_id"))
-        .select(col("doc_id"), TextOps.tokensNative(col("text")).as("toks"))
-        .select(col("doc_id"), size(col("toks")).as("n_words"),
-          TextOps.bpeEncode(col("toks"), TextOps.BpeGateMerges).as("enc"))
-      d.select(col("doc_id"), col("n_words"),
-        size(col("enc")).as("n_bpe_real"),
-        round(when(col("n_words") > 0,
-          size(col("enc")).cast("double") / col("n_words").cast("double")), 6)
-          .as("fertility"),
-        concat_ws(" ", slice(col("enc"), 1, 10)).as("sample"))
-    }),
-
-    "q_pretokenize" -> ((s, dir) =>
-      // the GPT-2-style pre-tokenizer boundary rule (r18): per doc the
-      // pre-token count, the whitespace-run count, and the md5 of the
-      // chr(1)-joined pre-token stream — ONE regex constant
-      // (TextOps.PreTokenPattern) feeds both engines verbatim
-      docs(s, dir)
-        .select(col("doc_id"), TextOps.preTokenize(
-          concat(col("text"), lit(TextOps.PreTokenProbe))).as("pt"))
-        .select(col("doc_id"),
-          size(col("pt")).as("n_pretoks"),
-          size(filter(col("pt"), t => t.rlike("^[ \\t\\r\\n\\f]+$")))
-            .as("n_ws_runs"),
-          md5(concat_ws("\u0001", col("pt"))).as("pt_md5"))),
-
-    "q_bpe_bytelevel" -> ((s, dir) => {
-      // BYTE-LEVEL BPE (r18): the real production path — pre-tokenize
-      // with the GPT-2-style regex, map UTF-8 bytes to the 256-unit
-      // alphabet, min-rank-encode under the pinned byte-level table.
-      // The gate projects text to printable ASCII minus '|' (the
-      // oracle's wrapped-symbol delimiter): on that domain the byte
-      // map is identity-except-space→'Ġ', which is what lets DuckDB
-      // replay the identical chain with plain string ops while the
-      // Spark side exercises the full ByteLevelUnits kernel.
-      val ascii = regexp_replace(
-        concat(col("text"), lit(TextOps.PreTokenProbe)), "[^ -~]|\\|", "")
-      val enc = TextOps.bpeEncodeByteLevel(ascii, TextOps.BpeByteGateMerges)
-      // r18: fan the one-row-group scan out — the encode kernel
-      // otherwise runs serially in the single scan task (guide §2.5)
-      Scale.fanOutSmallScan(docs(s, dir), col("doc_id"))
-        .select(col("doc_id"), enc.as("enc"))
-        .select(col("doc_id"), size(col("enc")).as("n_bpe"),
-          md5(concat_ws(" ", col("enc"))).as("toks_md5"))
-    }),
-
-    "q_bpe_token_ids" -> ((s, dir) => {
-      // the training-pipeline HANDOFF shape (r18): byte-level encode
-      // to GPT-2-convention integer ids (0..255 byte units, 256+rank
-      // per merge). Same ASCII-minus-'|' projection as q_bpe_bytelevel
-      // so the oracle can replay; per doc the id count, the exact id
-      // sum (an order-free integer checksum) and the md5 of the
-      // space-joined id stream (order-sensitive)
-      val ascii = regexp_replace(
-        concat(col("text"), lit(TextOps.PreTokenProbe)), "[^ -~]|\\|", "")
-      val ids = TextOps.bpeEncodeToIds(ascii, TextOps.BpeByteGateMerges)
-      Scale.fanOutSmallScan(docs(s, dir), col("doc_id")) // r18, see q_bpe_bytelevel
-        .select(col("doc_id"), ids.as("ids"))
-        .select(col("doc_id"), size(col("ids")).as("n_bpe"),
-          aggregate(col("ids"), lit(0L), (a, x) => a + x).as("ids_sum"),
-          md5(concat_ws(" ", transform(col("ids"), x => x.cast("string"))))
-            .as("ids_md5"))
-    }),
-
-    "q_bpe_specials" -> ((s, dir) => {
-      // SPECIAL-TOKEN-aware encode (r20): the production contract —
-      // '<|endoftext|>' separators come out as exactly ONE id each and
-      // BPE never merges across them. Composed per doc: ascii-projected
-      // text+probe, an eot, the uppercased ascii-projected 40-char
-      // prefix (a second segment sharing words with the first only up
-      // to case), then a DOUBLE eot (adjacent specials + empty-segment
-      // arm on every real row). The Spark side runs the generic
-      // split-encode-interleave; the oracle replays the segments by
-      // construction and injects id 256+|merges| between them —
-      // equality proves the generic splitter finds exactly the
-      // constructed boundaries.
-      val eot = "<|endoftext|>"
-      val seg1 = regexp_replace(
-        concat(col("text"), lit(TextOps.PreTokenProbe)), "[^ -~]|\\|", "")
-      val seg2 = upper(regexp_replace(
-        substring(col("text"), 1, 40), "[^ -~]|\\|", ""))
-      val composed = concat(seg1, lit(eot), seg2, lit(eot), lit(eot))
-      val ids = TextOps.bpeEncodeToIdsWithSpecials(
-        composed, TextOps.BpeByteGateMerges, Seq(eot))
-      Scale.fanOutSmallScan(docs(s, dir), col("doc_id")) // r18, see q_bpe_bytelevel
-        .select(col("doc_id"), ids.as("ids"))
-        .select(col("doc_id"), size(col("ids")).as("n_bpe"),
-          aggregate(col("ids"), lit(0L), (a, x) => a + x).as("ids_sum"),
-          md5(concat_ws(" ", transform(col("ids"), x => x.cast("string"))))
-            .as("ids_md5"))
-    }),
-
-    "q_bpe_budget_audit" -> ((s, dir) => {
-      // real-vs-estimate token accounting per source under the pinned
-      // gate vocabulary: the correction factor that tells budget math
-      // how far the regex ESTIMATE drifts — per source, because the
-      // drift is vocabulary-dependent and sources differ
-      val d = docs(s, dir)
-        .select(col("source"),
-          TextOps.tokensNative(col("text")).as("toks"),
-          TextOps.tokenCountBpe(col("text")).cast("long").as("nt_est"))
-        .select(col("source"), col("nt_est"),
-          size(TextOps.bpeEncode(col("toks"), TextOps.BpeGateMerges))
-            .cast("long").as("nt_real"))
-      d.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("nt_real")).as("tokens_real"),
-          sum(col("nt_est")).as("tokens_est"))
-        .withColumn("est_ratio", round(when(col("tokens_est") > 0,
-          col("tokens_real").cast("double") / col("tokens_est").cast("double")), 6))
-    }),
-
-    "q_fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))),
-
-    "q_redact" -> ((s, dir) =>
-      docs(s, dir).select(
-        col("doc_id"),
-        md5(TextOps.redact(col("text"))).as("redacted_hash"),
-        (length(col("text")) - length(TextOps.redact(col("text")))).as("len_delta"))),
-
-    "q_cdc_chunks" -> ((s, dir) => {
-      // content-defined chunking: a shared ~190-char passage is
-      // appended to one doc slice and PREPENDED to another (shifted!)
-      // so cross-doc shared chunks exist despite the offset — the case
-      // fixed-stride chunking structurally misses
-      val passage = "the shared press release body repeats verbatim " +
-        "across mirror sites with minor chrome and navigation " +
-        "differences around it while the core paragraph stays byte " +
-        "identical after whitespace normalization"
-      val m = docs(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 17 === 0, concat(col("text"), lit(" " + passage)))
-          .when(col("doc_id") % 17 === 1, concat(lit(passage + " "), col("text")))
-          .otherwise(col("text")).as("text"))
-      TextOps.cdcChunks(m, "doc_id", "text")
-    }),
-
-    "q_redact_pii" -> ((s, dir) => {
-      // extended PII scrub: a deterministic slice gets phone (both
-      // forms), grouped card, IPv4 AND a bare digit run that must
-      // survive (ids are not PII) spliced in; all arms fire
-      val m = docs(s, dir).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 11 === 0,
-            lit(" call 555-867-5309 or +1 (415) 555-2671 now, card" +
-              " 4111 1111 1111 1111, host 10.0.255.254, id 1234567890 stays"))
-            .otherwise(lit(""))).as("text"))
-      m.select(col("doc_id"),
-        md5(TextOps.redactPii(col("text"))).as("redacted_hash"),
-        (length(col("text")) - length(TextOps.redactPii(col("text"))))
-          .as("len_delta"),
-        regexp_count(col("text"), lit(TextOps.PiiPatterns(0)._1)).as("n_cc"),
-        regexp_count(col("text"), lit(TextOps.PiiPatterns(1)._1)).as("n_phone"),
-        regexp_count(col("text"), lit(TextOps.PiiPatterns(2)._1)).as("n_ip"))
-    }),
-
-    "q_normalize_text" -> ((s, dir) => {
-      // Unicode normalization + mojibake detection gate: a deterministic
-      // slice of docs gets the junk splice (zero-width chars, curly
-      // quotes, em dash, ellipsis, UTF-8-as-Latin1 artifacts, NBSP, a
-      // control char) so every normalization step and the mojibake
-      // counter fire; the rest pass through unchanged
-      val m = docs(s, dir).select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 9 === 0, lit(" " + NormJunk))
-            .otherwise(lit(""))).as("text"))
-      m.select(col("doc_id"),
-        md5(TextOps.normalizeUnicode(col("text"))).as("norm_hash"),
-        (length(col("text")) - length(TextOps.normalizeUnicode(col("text"))))
-          .as("len_delta"),
-        TextOps.mojibakeScore(col("text")).as("mojibake_hits"))
-    }),
-
-    "q_extract_html" -> ((s, dir) => {
-      // HTML→text extraction gate: wrap each doc's text in a
-      // deterministic page template (head/style/nav/script/footer
-      // chrome, entities, CDATA, a table) and recover the content.
-      // Both engines synthesize the SAME html string, so the hash
-      // compare exercises the full extraction pipeline end to end.
-      val id = col("doc_id").cast("string")
-      val html = concat(
-        lit("<html><!-- preview & <meta> --><head><title>T"), id,
-        lit("</title><style type=\"text/css\">body { color: #000; }" +
-          "</style></head><body>" +
-          "<nav><ul><li>Home</li><li>Docs</li></ul></nav>" +
-          "<script type=\"text/javascript\">var x = 1 < 2 && y > 0;" +
-          "</script><h1>Doc "), id,
-        lit("</h1><p>"), col("text"),
-        lit("</p><div class=\"tail\">Tail &amp; entities &lt;b&gt; " +
-          "&quot;q&quot; &#39;s&#39;&nbsp;end</div>" +
-          "<![CDATA[ raw <payload> ]]><table><tr><td>r"), id,
-        lit("</td><td>c2</td></tr></table>" +
-          "<footer>(c) example</footer></body></html>"))
-      docs(s, dir)
-        .select(col("doc_id"), length(html).as("n_html"),
-          TextOps.extractHtmlText(html).as("extracted"))
-        .withColumn("n_text", length(col("extracted")))
-    }),
-
-    "q_bigram_lm" -> ((s, dir) => {
-      // bigram-LM estimation: P(w2|w1) = c(w1 w2) / c(w1); top-20 bigrams.
-      // Bigrams via the fused TokenShingles(n=2) kernel; both count
-      // aggregations are map-side combinable; the unigram table joins in
-      // (AQE broadcasts it when small).
-      val d = docs(s, dir)
-      val bg = d.select(explode(TextOps.tokenShingles(col("text"), 2)).as("bigram"))
-        .filter(instr(col("bigram"), " ") > 0)
-        .groupBy(col("bigram")).agg(count(lit(1)).as("cnt"))
-      val ug = d.select(explode(TextOps.tokens(col("text"))).as("w1"))
-        .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-      bg.withColumn("w1", substring_index(col("bigram"), " ", 1))
-        .join(ug, "w1")
-        .select(col("bigram"), col("cnt"), round(col("cnt") / col("c1"), 6).as("cond_p"))
-        .orderBy(col("cnt").desc, col("bigram").asc).limit(20)
-    }),
-
-    "q_vocab_topk" -> ((s, dir) =>
-      // corpus-wide vocabulary: explode tokens -> count -> top 20
-      // (deterministic tie-break on token); the classic explode+combine
-      // shape — partial aggregation collapses counts map-side
-      docs(s, dir)
-        .select(explode(TextOps.tokens(col("text"))).as("token"))
-        .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token").asc)
-        .limit(20)),
-
-    "q_zipf_fit" -> ((s, dir) =>
-      // corpus-quality diagnostic: log-log Zipf slope over the top-50
-      // terms (natural text ≈ −1); integer-micro ln sums, decimal
-      // normal equations, one corpus pass
-      TextOps.zipfFit(docs(s, dir), "text", topK = 50)),
-
-    "q_containment" -> ((s, dir) =>
-      // asymmetric shingle containment on LSH candidates: catches a
-      // short doc embedded in a long one (Jaccard-invisible)
-      Dedup.containmentPairs(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands)),
-
-    "q_containment_dedup" -> ((s, dir) =>
-      // actionable form: drop the contained side of every >=0.9
-      // containment pair, keep supersets (mutual -> keep smallest id)
-      Dedup.containmentDedup(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands)),
-
-    "q_source_kl" -> ((s, dir) =>
-      // corpus-mix drift: per-source unigram KL vs the corpus blend
-      TextOps.sourceKlDivergence(docs(s, dir), "source", "text")),
-
-    "q_length_ks" -> ((s, dir) =>
-      // per-source length-distribution drift: exact binned KS statistic
-      TextOps.lengthKsDrift(docs(s, dir), "source", "text")),
-
-    "q_dsir_weights" -> ((s, dir) =>
-      // DSIR data selection: per-doc avg log-likelihood ratio of the
-      // src3-domain unigram LM vs the raw-corpus LM, integer micro-nats
-      TextOps.dsirWeights(docs(s, dir), "doc_id", "text", "source", "src3")),
-
-    "q_embed_clusters" -> ((s, dir) =>
-      // semantic near-dup clusters: connected components over the
-      // SRP-banded cosine pairs (no all-pairs join anywhere), with
-      // exact-duplicate vectors collapsed to representatives first —
-      // output-identical, and the duplicate-heavy scale guard (the
-      // uncollapsed form measured 32× wall on a 10×-duplicated corpus)
-      Dedup.embedClustersCollapsed(emb(s, dir), 0.4, SrpPlanes, SrpBandBits, EmbDim)),
-
-    "q_embed_clusters_auto" -> ((s, dir) =>
-      // the n-aware DEFAULT front door (r17): band arity from
-      // bandBitsFor(count) — 500 vecs at sf0.01 → 8-bit bands — so the
-      // default survives a scale-up instead of bending quadratic; the
-      // oracle recomputes the same arity from its own count(*)
-      Dedup.embedClustersAuto(emb(s, dir), 0.4, EmbDim)),
-
-    "q_session_window" -> ((s, dir) =>
-      // native session_window aggregation — the merge-in-aggregate
-      // session plan (no per-user full sort)
-      Events.sessionWindows(t(s, dir, "events"))),
-
-    "q_split_leakfree" -> ((s, dir) => {
-      // leakage-free train/val/test: every near-dup CLUSTER lands in
-      // one split (splitting by doc_id leaks near-dups across splits)
-      val d = docs(s, dir)
-      Dedup.connectedComponents(d.select(col("doc_id")), "doc_id",
-        Dedup.candidatePairs(d, "doc_id", "text", MinhashK, MinhashBands))
-        .select(col("doc_id"),
-          TextOps.splitAssign(col("cluster_id")).as("split"))
-    }),
-
-    "q_similarity_join" -> ((s, dir) =>
-      // EXACT shingle-set Jaccard >= 1/2 join via prefix filtering —
-      // the no-false-negative complement to the MinHash/LSH path; the
-      // oracle candidates come from ALL shared shingles, so a match
-      // proves the prefix filter lost nothing
-      Dedup.similarityJoinExact(docs(s, dir), "doc_id", "text", 1, 2)),
-
-    "q_winnow_pairs" -> ((s, dir) =>
-      // copied-SPAN detection via MOSS winnowing fingerprints: pairs
-      // sharing >= 2 window-min gram hashes (span guarantee >= 31
-      // chars at k=24, w=8)
-      Dedup.winnowPairs(docs(s, dir), "doc_id", "text")),
-
-    "q_winnow_pairs_capped" -> ((s, dir) =>
-      // flood-guarded winnowing: fingerprint buckets over maxBucket emit
-      // a min-id star (O(m) rows, CC-equivalent) instead of m²/2 pairs.
-      // maxBucket=2 so sf0.01's 3+-doc fingerprint buckets actually
-      // exercise the star branch.
-      Dedup.winnowPairsCapped(docs(s, dir), "doc_id", "text", maxBucket = 2)),
-
-    "q_similarity_join_capped" -> ((s, dir) =>
-      // flood-guarded exact PPJoin: prefix blocks over maxBlock emit star
-      // candidates, every candidate still exactly verified. maxBlock=2
-      // exercises the star on sf0.01.
-      Dedup.similarityJoinExactCapped(docs(s, dir), "doc_id", "text", 1, 2,
-        maxBlock = 2)),
-
-    // ── embedding similarity ────────────────────────────────────────────
-    "q_cosine_topk" -> ((s, dir) => {
-      val c = emb(s, dir)
-      Similarity.bruteForceTopK(c, c.filter(col("vec_id") < 10), 5)
-        .select(col("q_id"), col("neighbor_id"), col("cos"), col("rn"))
-    }),
-
-    "q_margin_mine" -> ((s, dir) =>
-      // margin-based parallel-pair mining: per query vector the best
-      // other-side match, kept only when it beats the runner-up by
-      // >= 0.02 cosine (hubness-proof, vs a plain cosine threshold);
-      // q_cosine_topk's broadcast shape, top-2 cut before the exchange
-      Similarity.marginMine(emb(s, dir), col("vec_id") < 10, 0.02)),
-
-    "q_hard_negatives" -> ((s, dir) => {
-      // contrastive HARD negatives: per query vector, the 3 most-similar
-      // pool vectors excluding itself and its known positive (q, q+10)
-      val c = emb(s, dir)
-      val q = c.filter(col("vec_id") < 10)
-      val pos = q.select(col("vec_id").as("q_id"),
-        (col("vec_id") + 10).as("neighbor_id"))
-      Similarity.hardNegatives(c, q, pos, 3)
-        .select(col("q_id"), col("neighbor_id"), col("cos"), col("rn"))
-    }),
-
-    "q_embed_neardup" -> ((s, dir) =>
-      // SRP-banded candidates + exact cosine on candidates only — the
-      // all-pairs corpus⋈corpus join never appears in the plan
-      Similarity.nearDupPairsLsh(emb(s, dir), 0.4, SrpPlanes, SrpBandBits, EmbDim)),
-
-    "q_ann_lsh" -> ((s, dir) =>
-      Similarity.annLsh(emb(s, dir), col("vec_id") < 10, LshPlanes, EmbDim)),
-
-    "q_ann_recall" -> ((s, dir) =>
-      // recall@5 audit of the LSH bucket path vs exact brute force —
-      // the bucket-width calibration read before trusting ANN at scale
-      Similarity.annRecallAudit(emb(s, dir), col("vec_id") < 10,
-        LshPlanes, EmbDim, k = 5)),
-
-    "q_pq_codes" -> ((s, dir) => {
-      // product-quantization encoding: every vector compressed to m=8
-      // one-byte codes (32x vs float32) against per-subspace codebooks
-      // trained on the unit-normalized corpus
-      val corpus = Similarity.prepared(t(s, dir, "embeddings"), "vec_id", "embedding")
-      val unit = corpus.filter(col("nrm") > 0)
-        .select(col("vec_id"), Similarity.arrayDiv(col("v"), col("nrm")).as("v"))
-      val (codes, _) = Similarity.quantizePq(unit, "vec_id", "v",
-        EmbDim, PqM, PqK)
-      codes.select(col("vec_id"),
-        concat_ws("|", (0 until PqM).map(i => col(s"code_$i")): _*).as("codes"))
-    }),
-
-    "q_kmeans" -> ((s, dir) =>
-      // spherical k-means, 2 full Lloyd iterations past the seed draw —
-      // the topic-bucketing / cluster-balanced-mixing primitive
-      // (refitQuantizer is exactly one iteration of this loop)
-      Similarity.sphericalKmeans(t(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 8, iters = 2)._1),
-
-    "q_ann_ivf_pq" -> ((s, dir) =>
-      // the COMPOSED billion-vector serving shape (IVFADC): route each
-      // query to its top-2 refit cells, ADC-score only those cells'
-      // PQ codes — candidate count (IVF) and width (PQ) both cut
-      Similarity.annIvfPq(t(s, dir, "embeddings"), "vec_id", "embedding",
-        EmbDim, PqM, PqK, kCells = 8, col("vec_id") < 10, nprobe = 2,
-        topK = 3)),
-
-    "q_ann_pq" -> ((s, dir) =>
-      // recall@5 audit of the PQ asymmetric-distance scan vs exact brute
-      // force — the m/k codebook-sizing read (the measured ladder on
-      // this near-uniform random corpus: m4k8/64x -> 0.04,
-      // m8k32/32x -> 0.16, m8k64/32x -> 0.32, m16k128/16x -> 0.60)
-      Similarity.annPqRecallAudit(t(s, dir, "embeddings"), "vec_id",
-        "embedding", col("vec_id") < 10, EmbDim, PqM, PqK, topK = 5)),
-
-    "q_ann_pq_rerank" -> ((s, dir) =>
-      // the FAISS refine stage on top of the same 32× index: ADC
-      // proposes top-c=20, candidates' full vectors re-rank by exact
-      // cosine — the recall ADC's compression dropped comes back for a
-      // bounded |Q|·c fetch (recall@5 pinned >= the raw-ADC 0.16 and
-      // monotone in c by spec)
-      Similarity.annPqRerankRecallAudit(t(s, dir, "embeddings"), "vec_id",
-        "embedding", col("vec_id") < 10, EmbDim, PqM, PqK, topK = 5,
-        c = 20)),
-
-    "q_ann_int8" -> ((s, dir) =>
-      // ANN over the quantized corpus: scale-free integer cosine
-      Similarity.annInt8TopK(t(s, dir, "embeddings"), "vec_id", "embedding",
-        col("vec_id") < 10, 5)
-        .select(col("q_id"), col("neighbor_id"), col("qcos"), col("rn"))),
-
-    "q_semantic_dedup" -> ((s, dir) =>
-      // embedding-space near-dup removal, greedy keep-smallest-id,
-      // over SRP-banded candidate pairs (no all-pairs join)
-      Similarity.semanticDedup(emb(s, dir), 0.4, SrpPlanes, SrpBandBits, EmbDim)),
-
-    "q_semantic_dedup_auto" -> ((s, dir) =>
-      // n-aware band arity (bandBitsFor) — the scale-safe default
-      Similarity.semanticDedupAuto(emb(s, dir), 0.4, EmbDim)),
-
-    "q_quantize_int8" -> ((s, dir) =>
-      Similarity.quantizeInt8(t(s, dir, "embeddings"), "vec_id", "embedding")
-        .select(col("vec_id"), col("scale"),
-          concat_ws("|", transform(col("qvec"), x => x.cast("string"))).as("qvec"))),
-
-    "q_centroids" -> ((s, dir) =>
-      // pipe-joined string: integral micro-units are engine-exact, and a
-      // scalar column avoids array-hashing differences in comparators
-      Similarity.centroids(t(s, dir, "embeddings"), "label", "embedding")
-        .select(col("label"),
-          concat_ws("|", transform(col("centroid_scaled"), x => x.cast("string")))
-            .as("centroid"))),
-
-    "q_ann_ivf" -> ((s, dir) =>
-      // the explicitly-named frozen-label COMPAT path (annIvf's
-      // deprecated shim delegates here; shim identity is spec-pinned)
-      Similarity.annIvfFrozenLabels(t(s, dir, "embeddings"), "vec_id",
-        "embedding", "label", col("vec_id") < 10)),
-
-    "q_ann_ivf_refit" -> ((s, dir) =>
-      // the scale fix for q_ann_ivf's frozen label quantizer: k
-      // deterministic seeds + one VectorMean Lloyd refit, so cells grow
-      // with the corpus instead of staying pinned at the label arity.
-      // nprobe pinned at 1 — this gate isolates the single-cell search
-      // shape; q_ann_ivf_probe2 covers the (default) multi-probe lever
-      Similarity.annIvfRefit(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 8, col("vec_id") < 10, nprobe = 1)),
-
-    "q_ann_ivf_probe2" -> ((s, dir) =>
-      // the IVF recall lever: probe the top-2 cells per query (a query
-      // near a cell boundary finds its true neighbor in cell #2)
-      Similarity.annIvfRefit(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 8, col("vec_id") < 10, nprobe = 2)),
-
-    "q_ivf_cell_drift" -> ((s, dir) =>
-      // the RETRAIN TRIGGER readout for incrementally-maintained IVF
-      // stores (r18): per-cell posting count vs the balanced N/k
-      // expectation — when appends concentrate (load_ratio >> 1) the
-      // hot cell degrades toward a linear scan and the codebook is due
-      // a rebuild. Runs over the same 8-cell build as q_ann_ivf_refit.
-      Similarity.ivfCellDrift(Similarity.buildIvfIndex(
-        t(s, dir, "embeddings"), "vec_id", "embedding", 8)._1)),
-
-    "q_semantic_decontam" -> ((s, dir) => {
-      // embedding-space benchmark decontamination: even-id vectors are
-      // the corpus, odd-id the benchmark; survivors have no benchmark
-      // vector at cosine >= 0.4 among the SRP-banded candidates
-      val pre = Similarity.prepared(t(s, dir, "embeddings"), "vec_id", "embedding")
-      Similarity.semanticDecontaminate(
-        pre.filter(col("vec_id") % 2 === 0),
-        pre.filter(col("vec_id") % 2 === 1),
-        threshold = 0.4, planes = SrpPlanes, bandBits = SrpBandBits, dim = 64)
-    }),
-
-    // ── events ──────────────────────────────────────────────────────────
-    "q_sessionize" -> ((s, dir) =>
-      Events.sessionize(t(s, dir, "events"))),
-
-    "q_funnel" -> ((s, dir) =>
-      // users completing view -> click -> purchase in order (greedy-earliest)
-      Events.funnel(
-        t(s, dir, "events").withColumn("tsu", expr("ts div 1000L")),
-        "user_id", "tsu", "event_type", Seq("view", "click", "purchase"))),
-
-    "q_funnel4" -> ((s, dir) =>
-      // 4-stage funnel (view -> click -> view -> purchase): repeated
-      // stage types exercise the greedy-earliest chain beyond 3 steps
-      Events.funnel(
-        t(s, dir, "events").withColumn("tsu", expr("ts div 1000L")),
-        "user_id", "tsu", "event_type", Seq("view", "click", "view", "purchase"))),
-
-    "q_range_join" -> ((s, dir) =>
-      // event pairs of the same user within 1 hour of each other
-      Events.rangeSelfJoin(
-        t(s, dir, "events").withColumn("tsu", expr("ts div 1000L")),
-        "user_id", "tsu", "event_id", 3600000000L)),
-
-    "q_range_join2" -> ((s, dir) => {
-      // two-table range join: every (click, purchase) of the same user
-      // within 30 minutes of each other
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      Events.rangeJoin(
-        e.filter(col("event_type") === "click"),
-        e.filter(col("event_type") === "purchase"),
-        "user_id", "tsu", Seq("event_id"), Seq("event_id"), 1800000000L)
-    }),
-
-    "q_asof" -> ((s, dir) => {
-      // for every click, the user's most recent purchase at-or-before it
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("tsu"))
-        .agg(round(max(col("value")), 6).as("pvalue"))
-      Events.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
-    }),
-
-    "q_asof_forward" -> ((s, dir) => {
-      // forward direction: the user's EARLIEST purchase at-or-after each
-      // click (merge_asof direction='forward')
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("tsu"))
-        .agg(round(max(col("value")), 6).as("pvalue"))
-      Events.asOfJoinForward(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
-    }),
-
-    "q_asof_native_forward" -> ((s, dir) => {
-      // the same forward as-of through the custom physical operator
-      // (time-negation mirror of the streaming sort-merge)
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("tsu"))
-        .agg(round(max(col("value")), 6).as("pvalue"))
-      Events.asOfJoinNativeForward(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
-    }),
-
-    "q_asof_nearest" -> ((s, dir) => {
-      // nearest direction: the purchase closest in time to each click,
-      // either side; equal distances resolve to the earlier purchase
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("tsu"))
-        .agg(round(max(col("value")), 6).as("pvalue"))
-      Events.asOfJoinNearest(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
-    }),
-
-    "q_asof_native" -> ((s, dir) => {
-      // same query as q_asof, planned through the custom AsOfJoinExec
-      // physical operator (LogicalPlan + Strategy + SparkPlan extension)
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("tsu"))
-        .agg(round(max(col("value")), 6).as("pvalue"))
-      Events.asOfJoinNative(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
-    }),
-
-    "q_asof_tolerance" -> ((s, dir) => {
-      // as-of with a 1-hour tolerance: matches older than the tolerance
-      // are treated as absent (pandas merge_asof semantics)
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("tsu"))
-        .agg(round(max(col("value")), 6).as("pvalue"))
-      Events.asOfJoinNative(clicks, purchases, "user_id", "tsu", Seq("pvalue"),
-        toleranceMicros = Some(3600000000L))
-    }),
-
-    "q_event_windows" -> ((s, dir) =>
-      Events.tumblingWindows(t(s, dir, "events"))),
-
-    // ── multimodal ──────────────────────────────────────────────────────
-    "q_multimodal" -> ((s, dir) =>
-      Multimodal.featureColumns(
-        Multimodal.asMediaTable(docs(s, dir), "doc_id", "text"))),
-
-    "q_frames" -> ((s, dir) =>
-      // deterministic 4-frame sampling of every payload (video-frame /
-      // audio-chunk plumbing; stub bytes, real offsets + hashing)
-      Multimodal.frameSample(
-        Multimodal.asMediaTable(docs(s, dir), "doc_id", "text"), 4)),
-
-    "q_resize" -> ((s, dir) =>
-      // decode -> resize to 224x224 (stubbed decode; deterministic
-      // derived identity) — the feature-extraction preprocessing shape
-      Multimodal.resize(
-        Multimodal.featureColumns(
-          Multimodal.asMediaTable(docs(s, dir), "doc_id", "text")), 224, 224)),
-
-    // ── distribution stats beyond the reference aggregates ─────────────
-    "q_percentiles" -> ((s, dir) =>
-      // exact interpolated quantiles by distributed rank (never a
-      // per-group array collect — Spark's builtin percentile holds each
-      // group in memory)
-      Stats.percentileExact(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_extendedprice", Seq("p50" -> 0.5, "p95" -> 0.95))),
-
-    "q_corr" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
-          round(covar_samp(col("l_quantity"), col("l_extendedprice")), 6).as("covar_s"),
-          round(covar_pop(col("l_quantity"), col("l_extendedprice")), 6).as("covar_p"),
-          round(stddev_samp(col("l_quantity")), 6).as("sd_qty"))),
-
-    "q_rollup" -> ((s, dir) =>
-      // hierarchical subtotals in ONE pass (Expand + single shuffle) —
-      // the multi-granularity dashboard query; integer-cents money sums
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          (sum(round(col("l_extendedprice") * 100).cast("long")) / 100.0).as("sum_price"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-          col("n"), col("sum_price"))),
-
-    "q_histogram" -> ((s, dir) =>
-      // fixed-width value histogram: integral bucketing, map-side
-      // combinable, one shuffle of (bucket, partials)
-      t(s, dir, "lineitem")
-        .groupBy(floor(col("l_extendedprice") / lit(10000.0)).as("bucket"))
-        .agg(
-          count(lit(1)).as("n"),
-          (sum(round(col("l_extendedprice") * 100).cast("long")) / 100.0).as("sum_price"))),
-
-    "q_histogram_agg" -> ((s, dir) =>
-      // the SAME histogram through the mergeable HistogramAgg (one
-      // O(nbins) array state instead of a (bucket, partials) shuffle —
-      // the carrier streaming windowed quantiles use); zero bins
-      // dropped to match the groupBy form's output
-      t(s, dir, "lineitem")
-        .agg(GraftFunctions.histogram(col("l_extendedprice"), 0.0, 120000.0, 24).as("hist"))
-        .select(posexplode(col("hist")).as(Seq("bin", "cnt")))
-        .filter(col("cnt") > 0)
-        .select(col("bin").cast("long").as("bin"), col("cnt"))),
-
-    // ── sketches ────────────────────────────────────────────────────────
-    "q_kmv_distinct" -> ((s, dir) => {
-      // KMV distinct-count sketch vs the exact count (l_partkey is the
-      // high-cardinality column: ~2k distinct per 60k rows at sf0.01)
-      val pk = t(s, dir, "lineitem").select(col("l_partkey").cast("string").as("pk"))
-      Sketches.kmvDistinct(pk, "pk", 256)
-        .crossJoin(broadcast(pk.agg(countDistinct(col("pk")).as("exact_distinct"))))
-    }),
-
-    "q_cms_topk" -> ((s, dir) => {
-      // count-min sketch point queries for the exact top-20 keys:
-      // est_cnt >= cnt always, equality unless the bucket collided
-      val tc = t(s, dir, "lineitem")
-        .select(col("l_partkey").cast("string").as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      val sketch = Sketches.cmsSketch(tc, "term", "cnt", depth = 4, width = 1024)
-      val top = tc.orderBy(col("cnt").desc, col("term").asc).limit(20)
-      Sketches.cmsEstimate(top, sketch, "term", depth = 4, width = 1024)
-    }),
-
-    // ── training-data pipeline: round-4 additions ───────────────────────
-    "q_repetition" -> ((s, dir) =>
-      docs(s, dir).select(
-        (col("doc_id") +: TextOps.repetitionMetrics(col("text"))): _*)),
-
-    "q_token_entropy" -> ((s, dir) =>
-      TextOps.tokenEntropy(docs(s, dir), "doc_id", "text")),
-
-    "q_bm25" -> ((s, dir) =>
-      TextOps.bm25(docs(s, dir), "doc_id", "text",
-        Seq("spark", "table", "fast", "query", "data"), topN = 25)),
-
-    "q_doc_clusters" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.connectedComponents(d.select(col("doc_id")), "doc_id",
-        Dedup.candidatePairs(d, "doc_id", "text", MinhashK, MinhashBands))
-    }),
-
-    "q_pack_sequences" -> ((s, dir) =>
-      Packing.packSequences(
-        docs(s, dir).select(col("doc_id"), size(TextOps.tokens(col("text"))).as("ntok")),
-        "doc_id", "ntok", budget = 128, shards = 8)),
-
-    "q_cube" -> ((s, dir) =>
-      // full CUBE lattice in one pass (Expand + single shuffle) —
-      // rollup's column-symmetric sibling
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          count(lit(1)).as("n"),
-          (sum(round(col("l_extendedprice") * 100).cast("long")) / 100.0).as("sum_price"))
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("rflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("lstatus"),
-          col("n"), col("sum_price"))),
-
-    "q_oov_rate" -> ((s, dir) =>
-      TextOps.oovRate(docs(s, dir), "doc_id", "text", vocabSize = 1000)),
-
-    "q_cluster_rep" -> ((s, dir) => {
-      // end of the dedup pipeline: pairs → clusters → one representative
-      // per cluster by quality (ties → smallest id)
-      val d = docs(s, dir)
-      val clusters = Dedup.connectedComponents(d.select(col("doc_id")), "doc_id",
-        Dedup.candidatePairs(d, "doc_id", "text", MinhashK, MinhashBands))
-      val quality = d.select(col("doc_id"), TextOps.qualityScore(col("text")).as("quality"))
-      Dedup.clusterRepresentatives(clusters, quality, "quality")
-    }),
-
-    "q_cluster_rep_priority" -> ((s, dir) => {
-      // the FineWeb convention: inside each near-dup cluster keep the
-      // copy from the most-TRUSTED source (deterministic per-source
-      // trust tier), ties -> smallest doc_id — same representative op,
-      // trust as the score instead of quality
-      val d = docs(s, dir)
-      val clusters = Dedup.connectedComponents(d.select(col("doc_id")), "doc_id",
-        Dedup.candidatePairs(d, "doc_id", "text", MinhashK, MinhashBands))
-      val trust = d.select(col("doc_id"),
-        (-expr("cast(substring(source, 4) as int) % 3")).as("trust"))
-      Dedup.clusterRepresentatives(clusters, trust, "trust")
-    }),
-
-    "q_topk_agg" -> ((s, dir) =>
-      // bounded top-k AGGREGATE: O(k) state per group, map-side combine —
-      // never the window sort of every group member the oracle runs
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(GraftFunctions.topk_by(col("l_orderkey"), col("l_extendedprice"), 5).as("top"))
-        .select(col("l_returnflag"), posexplode(col("top")))
-        .select(col("l_returnflag"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.id").as("id"), col("col.score").as("score"))),
-
-    "q_quantile_sketch" -> ((s, dir) =>
-      Sketches.quantileSketch(t(s, dir, "lineitem"), "l_extendedprice",
-        lo = QSketchLo, hi = QSketchHi, nbins = QSketchBins,
-        ps = Seq("p50" -> 0.5, "p95" -> 0.95, "p99" -> 0.99))),
-
-    "q_retention" -> ((s, dir) =>
-      Events.retention(t(s, dir, "events"), maxOffsetDays = 30)),
-
-    "q_salted_agg" -> ((s, dir) =>
-      // the skew-proof two-stage aggregation, pushed through the oracle
-      // gate: value pre-scaled to integer micros so BOTH stages sum longs
-      // (exact under any salt/partition assignment)
-      graft.ops.Scale.saltedSumCount(
-        t(s, dir, "events").select(col("event_type"),
-          round(col("value") * 1000000).cast("long").as("vmicro")),
-        Seq("event_type"), "vmicro", salts = 8)
-        .select(col("event_type"),
-          round(col("sum_vmicro") / 1000000.0, 6).as("sum_value"), col("n"))),
-
-    "q_running_total" -> ((s, dir) =>
-      // per-user running sum in event-time order (event_id tie-break):
-      // ONE hash exchange on user_id + per-partition sort; micros → exact
-      t(s, dir, "events")
-        .withColumn("vmicro", round(col("value") * 1000000).cast("long"))
-        .withColumn("running",
-          sum(col("vmicro")).over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id"))
-              .orderBy(expr("ts div 1000L"), col("event_id"))
-              .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-        .select(col("event_id"), col("user_id"),
-          round(col("running") / 1000000.0, 6).as("running_value"))),
-
-    "q_kmv_grouped" -> ((s, dir) => {
-      // per-group distinct estimate (bounded k-long state) next to the
-      // exact count it approximates — the 100 TB countDistinct
-      // replacement. The sketch and the exact audit are SEPARATE
-      // aggregations joined on the bounded group key: a mixed
-      // distinct/non-distinct agg makes Spark duplicate every input row
-      // per aggregate family (measured 1.6s vs 0.5s at sf0.1)
-      val li = t(s, dir, "lineitem")
-      val est = li.groupBy(col("l_returnflag"))
-        .agg(round(GraftFunctions.kmv_distinct(col("l_partkey"), 128), 6).as("est_distinct"))
-      val exact = li.select(col("l_returnflag"), col("l_partkey")).distinct()
-        .groupBy(col("l_returnflag")).agg(count(lit(1)).as("exact_distinct"))
-      est.join(exact, "l_returnflag")
-        .select(col("l_returnflag"), col("est_distinct"), col("exact_distinct"))
-    }),
-
-    "q_hll_distinct" -> ((s, dir) => {
-      // deterministic HyperLogLog (md5, 256 byte registers): O(m) state
-      // and shuffle bytes vs countDistinct's full distinct-set shuffle.
-      // HLL registers are max-merged, so the sketch over DISTINCT values
-      // is bit-identical to the sketch over the raw column — sketch and
-      // exact audit share ONE scan + ONE map-side-combined distinct
-      // shuffle, both computed in the same single-row aggregate (the r9
-      // split form re-scanned lineitem for the audit: 0.99s vs 0.47s)
-      t(s, dir, "lineitem").select(col("l_partkey")).distinct().agg(
-        round(GraftFunctions.hll_distinct(col("l_partkey"), 8), 2).as("est_distinct"),
-        count(lit(1)).as("exact_distinct"))
-    }),
-
-    "q_hll_grouped" -> ((s, dir) => {
-      // the grouped form — one 256-byte register bank per group per map
-      // task, merged by element-wise max; exact audit split out (see
-      // q_kmv_grouped)
-      val li = t(s, dir, "lineitem")
-      val est = li.groupBy(col("l_returnflag"))
-        .agg(round(GraftFunctions.hll_distinct(col("l_partkey"), 8), 2).as("est_distinct"))
-      val exact = li.select(col("l_returnflag"), col("l_partkey")).distinct()
-        .groupBy(col("l_returnflag")).agg(count(lit(1)).as("exact_distinct"))
-      est.join(exact, "l_returnflag")
-        .select(col("l_returnflag"), col("est_distinct"), col("exact_distinct"))
-    }),
-
-    "q_big_orders" -> ((s, dir) => {
-      // TPC-H Q18 shape: the fact aggregates FIRST (map-side combinable,
-      // integer-cents), the selective HAVING prunes before the join, and
-      // only surviving keys join back to orders
-      val qty = t(s, dir, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg((sum(round(col("l_quantity") * 100).cast("long")) / 100.0).as("sum_qty"))
-        .filter(col("sum_qty") > 250.0)
-      t(s, dir, "orders")
-        .join(qty, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_orderkey"), to_date(col("o_orderdate")).as("odate"),
-          col("o_totalprice"), col("sum_qty"))
-        .orderBy(col("sum_qty").desc, col("o_orderkey").asc)
-        .limit(100)
-    }),
-
-    // ── round-5 additions ───────────────────────────────────────────────
-    "q_moving_avg" -> ((s, dir) =>
-      // trailing 1-hour per-user moving average (RANGE frame on µs)
-      Events.movingAvg(t(s, dir, "events"), windowMicros = 3600000000L)),
-
-    "q_zscore" -> ((s, dir) =>
-      // per-type outliers beyond 2 population std-devs (exact moments)
-      Events.zscoreOutliers(t(s, dir, "events"), threshold = 2.0)),
-
-    "q_concurrency" -> ((s, dir) =>
-      // distributed sweep line over the sessionize output: max sessions
-      // simultaneously open, per day
-      Events.maxConcurrency(Events.sessionize(t(s, dir, "events")))),
-
-    "q_transitions" -> ((s, dir) =>
-      // first-order Markov matrix over per-user event sequences
-      Events.transitions(t(s, dir, "events"))),
-
-    "q_twa" -> ((s, dir) =>
-      // step-function time-weighted mean per user (gauge semantics)
-      Events.timeWeightedAvg(t(s, dir, "events"))),
-
-    "q_rolling_active" -> ((s, dir) =>
-      // DAU + trailing-7-day WAU, exact, via explode instead of self-join
-      Events.rollingDistinctUsers(t(s, dir, "events"), windowDays = 7)),
-
-    "q_rolling_active_hll" -> ((s, dir) => {
-      // sketch-merge DAU/WAU (one per-day HLL pass, tiny-frame window
-      // merge) with the exact pipeline joined back as the accuracy audit
-      val est = Events.rollingActiveHll(t(s, dir, "events"), windowDays = 7, b = 8)
-      val exact = Events.rollingDistinctUsers(t(s, dir, "events"), windowDays = 7)
-        .select(col("day"), col("wau").as("wau_exact"))
-      est.join(exact, Seq("day"))
-        .select(col("day"), col("dau_est"), col("wau_est"), col("wau_exact"),
-          round(abs(col("wau_est") - col("wau_exact")) / col("wau_exact"), 6)
-            .as("rel_err"))
-    }),
-
-    "q_rolling_quantile" -> ((s, dir) =>
-      // rolling 7-day p50/p90 of event values — per-day grid bins merged
-      // over the trailing window; events scanned ONCE, everything after
-      // the first aggregate bounded by calendar × grid
-      Sketches.rollingQuantileSketch(t(s, dir, "events"), "value",
-        windowDays = 7, lo = 0.0, hi = 500.0, nbins = 20,
-        ps = Seq("p50" -> 0.5, "p90" -> 0.9))),
-
-    "q_latest_value" -> ((s, dir) => {
-      // CDC latest-record-wins merge shape: the current value per
-      // (user, type) key — deterministic (ts, event_id) recency order,
-      // one keyed window shuffle, WindowGroupLimit prunes per-partition
-      val e = t(s, dir, "events").select(
-        col("user_id"), col("event_type"), col("event_id"),
-        expr("ts div 1000L").as("tsu"),
-        round(col("value"), 6).as("value"))
-      val w = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("tsu").desc, col("event_id").desc)
-      e.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("user_id"), col("event_type"), col("tsu"),
-          col("event_id"), col("value"))
-    }),
-
-    "q_fuzzy_pairs" -> ((s, dir) =>
-      // edit-distance near-dup pairs: prefix blocking + exact
-      // Levenshtein <= 5 on normalized 40-char prefixes
-      Dedup.fuzzyPairs(docs(s, dir), "doc_id", "text",
-        prefixLen = 40, blockLen = 8, maxDist = 5)),
-
-    "q_pivot" -> ((s, dir) =>
-      // pivot = grouped conditional aggregation (one pass, no join):
-      // order counts by priority × status; explicit value list keeps the
-      // plan static (no distinct-scan planning step at 100 TB)
-      t(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-        .select(col("o_orderpriority"),
-          coalesce(col("F"), lit(0L)).as("n_f"),
-          coalesce(col("O"), lit(0L)).as("n_o"),
-          coalesce(col("P"), lit(0L)).as("n_p"))),
-
-    "q_window_rank" -> ((s, dir) => {
-      // ranking-function anchor: ntile / percent_rank / lag share ONE
-      // window sort per partition key; deterministic tie-break on key
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      t(s, dir, "orders")
-        .filter(col("o_totalprice") > 450000.0)
-        .select(
-          col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"),
-          ntile(4).over(w).as("quartile"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          lag(col("o_totalprice"), 1).over(w).as("prev_price"))
-    }),
-
-    "q_json_extract" -> ((s, dir) =>
-      // semi-structured: pull $.k out of the JSON props column, aggregate
-      // per event type — extraction is codegen'd, narrow, pushdown-safe
-      t(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy(col("event_type"))
-        .agg(count(col("k")).as("n"), sum(col("k")).as("sum_k"),
-          countDistinct(col("k")).as("distinct_k"))),
-
-    "q_tpch_q5" -> ((s, dir) => {
-      // the 6-table join anchor: region/nation/supplier dims BROADCAST
-      // (provably bounded), facts pre-filtered before the shuffle join,
-      // revenue in exact integer units
-      val asiaNations = t(s, dir, "nation")
-        .join(broadcast(t(s, dir, "region").filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"))
-      val cust = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-        .select(col("o_orderkey"), col("o_custkey"))
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
-      val supp = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey") &&
-          col("s_nationkey") === col("c_nationkey"))
-        .join(broadcast(asiaNations), col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg((sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000)
-          .cast("long")) / 1000000.0).as("revenue"))
-    }),
-
-    "q_grouping_sets" -> ((s, dir) => {
-      // explicit GROUPING SETS — the asymmetric lattice rollup/cube can't
-      // express: per-flag, per-status, and grand total, one Expand pass
-      t(s, dir, "lineitem").createOrReplaceTempView("li_gs")
-      // 100.0D: Spark SQL parses a bare `100.0` literal as DECIMAL(3,1),
-      // which turns the division into decimal(27,6) — the oracle's is a
-      // plain DOUBLE divide
-      s.sql("""SELECT coalesce(l_returnflag, 'ALL') AS rflag,
-              |  coalesce(l_linestatus, 'ALL') AS lstatus,
-              |  count(*) AS n,
-              |  sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0D AS sum_price
-              |FROM li_gs
-              |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin)
-    }),
-
-    "q_sketch_grouped" -> ((s, dir) =>
-      Sketches.quantileSketchGrouped(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_extendedprice", lo = QSketchLo, hi = QSketchHi, nbins = QSketchBins,
-        ps = Seq("p50" -> 0.5, "p95" -> 0.95, "p99" -> 0.99))),
-
-    "q_jaccard_est" -> ((s, dir) => {
-      // sketch-accuracy audit: the MinHash-ESTIMATED Jaccard (matching
-      // signature components / k) next to the exact shingle Jaccard for
-      // every candidate pair — the shingle exchange is shared by the
-      // signature, banding, and both exact-verify sides
-      val sh = Dedup.shingleSets(docs(s, dir), "doc_id", "text")
-      val sigs = sh.select(col("doc_id"),
-        TextOps.minhashSignature(col("sh"), MinhashK).as("sig"))
-      val pairs = Dedup.candidatePairsFromShingles(sh, MinhashK, MinhashBands)
-      val exact = Dedup.jaccardVerifyFromShingles(sh, pairs)
-      val matches = aggregate(
-        zip_with(col("sig1"), col("sig2"), (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, x) => acc + x)
-      val est = pairs
-        .join(sigs.select(col("doc_id").as("id1"), col("sig").as("sig1")), "id1")
-        .join(sigs.select(col("doc_id").as("id2"), col("sig").as("sig2")), "id2")
-        .select(col("id1"), col("id2"),
-          round(matches.cast("double") / lit(MinhashK.toDouble), 6).as("est_jaccard"))
-      exact.join(est, Seq("id1", "id2"))
-    }),
-
-    "q_decontaminate_bloom" -> ((s, dir) => {
-      // zero-shuffle decontamination: src0 = eval suite → 32 KB Bloom
-      // filter broadcast; train corpus tested in its scan, no shuffle
-      val d = docs(s, dir)
-      Dedup.bloomDecontaminate(
-        d.filter(col("source") =!= "src0"), d.filter(col("source") === "src0"),
-        "doc_id", "text", mBits = BloomBits, numHashes = BloomHashes, minHits = 5L)
-    }),
-
-    "q_semi_join" -> ((s, dir) => {
-      // TPC-H Q4 shape: EXISTS → LEFT SEMI (orders with >=1 returned
-      // item, counted per priority). The semi join ships only the
-      // distinct join keys of the filtered lineitem side — never
-      // materializes the match multiplicity
-      val o = t(s, dir, "orders")
-      val li = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-      o.join(li, o("o_orderkey") === li("l_orderkey"), "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-    }),
-
-    "q_anti_join" -> ((s, dir) => {
-      // NOT EXISTS → LEFT ANTI: parts never shipped in bulk (no lineitem
-      // with quantity >= 45). Anti join broadcasts/ships distinct keys
-      // of the filtered probe side only
-      val p = t(s, dir, "part")
-      val li = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
-      p.join(li, p("p_partkey") === li("l_partkey"), "left_anti")
-        .select(col("p_partkey"), col("p_brand"))
-    }),
-
-    "q_ewma" -> ((s, dir) => {
-      // exponentially-decayed trailing sum (half-life = 1 event, depth
-      // 10) per user in event-time order. Dyadic weights 2^-j on integer
-      // micro-units make every term EXACT in double (vmic < 2^29 scaled
-      // by >= 2^-9), so the sum is order-free and engine-identical.
-      // One hash exchange on user_id + per-partition sort; the 10 lags
-      // share a single window frame
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(expr("ts div 1000L"), col("event_id"))
-      val terms = (0 until 10).map(j =>
-        coalesce(lag(col("vmic"), j).over(w), lit(0L)).cast("double") * lit(1.0 / (1L << j)))
-      t(s, dir, "events")
-        .withColumn("vmic", round(col("value") * 1000000).cast("long"))
-        // emit in micro-units WITHOUT dividing back: the sum is an exact
-        // multiple of 2^-9 (granularity 0.001953125, 9 decimals), so the
-        // value is bit-identical in every engine; a /1e6 rescale would
-        // reintroduce a half-point rounding ulp
-        .select(col("event_id"), col("user_id"),
-          terms.reduce(_ + _).as("ewma_micro"))
-    }),
-
-    "q_mad_robust" -> ((s, dir) =>
-      // robust center/spread per event type: median, MAD, 3-MAD outliers
-      Stats.madRobust(t(s, dir, "events"), Seq("event_type"), "value")),
-
-    "q_resample_locf" -> ((s, dir) =>
-      // irregular gauge → dense daily grid with last-obs-carried-forward
-      Events.resampleDailyLocf(t(s, dir, "events"))),
-
-    "q_bloom_fp_audit" -> ((s, dir) => {
-      // sketch-accuracy audit for the bloom filter: measured FP rate
-      // over train grams PROVABLY absent from the eval set, next to the
-      // (fill)^k theoretical rate from the exact set-bit count
-      val d = docs(s, dir)
-      def grams(src: org.apache.spark.sql.Column) = d.filter(src)
-        .select(explode(TextOps.tokenShingles(col("text"))).as("g")).distinct()
-      val evalG = grams(col("source") === "src0")
-      val cleanG = grams(col("source") =!= "src0").join(evalG, Seq("g"), "left_anti")
-      import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-      val bloom = evalG.agg(column(
-        graft.functions.BloomBitsAgg(expression(col("g")), BloomBits, BloomHashes)
-          .toAggregateExpression()).as("bits"))
-      val hit = column(graft.functions.BloomHitCount(
-        expression(col("bits")), expression(array(col("g"))), BloomBits, BloomHashes))
-      val probes = cleanG.crossJoin(broadcast(bloom))
-        .agg(count(lit(1)).as("n_probes"), sum(hit).as("n_fp"))
-      // exact set-bit count: the distinct K-M positions of the eval grams
-      val h1 = conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long")
-      val h2 = conv(substring(md5(col("g")), 9, 8), 16, 10).cast("long")
-      val nbits = evalG
-        .select(h1.as("h1"), h2.as("h2"),
-          explode(sequence(lit(0), lit(BloomHashes - 1))).as("i"))
-        .select(((col("h1") + col("i") * col("h2")) % BloomBits).as("p"))
-        .distinct().agg(count(lit(1)).as("n_set_bits"))
-      val fill = col("n_set_bits").cast("double") / lit(BloomBits.toDouble)
-      probes.crossJoin(broadcast(nbits))
-        .select(col("n_probes"), col("n_fp"),
-          round(col("n_fp") / col("n_probes"), 6).as("fp_rate"),
-          col("n_set_bits"),
-          round(fill * fill * fill, 6).as("theo_fp_rate"))
-    }),
-
-    "q_skew_profile" -> ((s, dir) =>
-      // the salting decision input: top keys by row share + cumulative
-      // concentration (distributed top-k cut before any global window)
-      Scale.keySkewProfile(t(s, dir, "lineitem"), "l_partkey", topN = 15)),
-
-    "q_window_suite" -> ((s, dir) => {
-      // ranking-analytics coverage in one pass: rank / percent_rank /
-      // cume_dist / running first over one (priority)-partitioned sort;
-      // WindowGroupLimit cuts to the top 3 per group before the shuffle
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"),
-          rank().over(w).as("rnk"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          round(cume_dist().over(w), 6).as("cume"),
-          first(col("o_orderkey")).over(w).as("best_order"))
-        .filter(col("rnk") <= 3)
-        .drop("o_totalprice")
-    }),
-
-    "q_profile" -> ((s, dir) =>
-      // one-scan data-quality audit: per-column null/distinct/extrema
-      // with the engine-replayable KMV sketch for distincts (no Expand)
-      graft.ops.Profile.profile(t(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"))),
-
-    "q_churn" -> ((s, dir) => {
-      // lapsed purchasers: users who purchased before day 19750 but not
-      // since — EXCEPT (distinct anti) of two pre-aggregated key sets,
-      // so only distinct user ids ever shuffle
-      val d = t(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), expr("ts div 86400000000000").as("day"))
-      d.filter(col("day") < 19750).select("user_id").distinct()
-        .except(d.filter(col("day") >= 19750).select("user_id").distinct())
-    }),
-
-    "q_pagerank" -> ((s, dir) =>
-      // duplication-centrality: integer-exact PageRank over the MinHash
-      // candidate-pair graph (two shuffles/iteration, bit-identical
-      // under any partitioning)
-      graft.ops.Graph.pageRank(
-        Dedup.candidatePairs(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands),
-        iters = 5)),
-
-    "q_label_prop" -> ((s, dir) =>
-      // label-propagation communities over the duplication graph (r20):
-      // the dense cores CC's reachability glues together — sync
-      // updates, 3 fixed iterations, min-label ties, so both engines
-      // replay it bit-identically
-      graft.ops.Graph.labelPropagation(
-        Dedup.candidatePairs(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands),
-        iters = 3)),
-
-    "q_local_clustering" -> ((s, dir) =>
-      // per-node clique-ness of the duplication graph: triangles(v) and
-      // 2T/(d(d-1)) — template families vs chain edits
-      graft.ops.Graph.localClustering(
-        Dedup.candidatePairs(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands))),
-
-    "q_triangles" -> ((s, dir) =>
-      // triangle census of the duplication graph: degree-ordered
-      // orientation bounds the wedge join at O(m^1.5) — the structural
-      // "how clique-y are dup clusters" complement of q_pagerank
-      graft.ops.Graph.triangleStats(
-        Dedup.candidatePairs(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands))),
-
-    "q_kcore" -> ((s, dir) =>
-      // dup-farm detector: bounded 2-core peel of the duplication graph
-      // — CC can't tell a dense farm from an accidental chain; the
-      // peel deletes every chain/leaf and keeps only mutually-dense mass
-      graft.ops.Graph.kCore(
-        Dedup.candidatePairs(docs(s, dir), "doc_id", "text", MinhashK, MinhashBands),
-        k = 2, iters = 4)),
-
-    "q_bloom_semi_join" -> ((s, dir) => {
-      // runtime-filter pattern: Brand#23 partkeys → KB-scale bloom
-      // broadcast prunes lineitem IN ITS SCAN; the exact semi join
-      // removes bloom false positives, so the result is plain EXISTS
-      val li = t(s, dir, "lineitem")
-      val p = t(s, dir, "part").filter(col("p_brand") === "Brand#23")
-        .select(col("p_partkey"))
-      Scale.bloomFilteredSemiJoin(li, p, "l_partkey", "p_partkey")
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("l_extendedprice") * 100).cast("long")).as("price_cents"))
-    }),
-
-    "q_quality_deciles" -> ((s, dir) => {
-      // curriculum binning: per-language length quartiles via ntile —
-      // the window partitions by lang (no global sort; each language
-      // ranks independently on its own reducer)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("lang")).orderBy(col("n_chars"), col("doc_id"))
-      docs(s, dir)
-        .select(col("lang"), col("n_chars"), ntile(4).over(w).as("quartile"))
-        .groupBy(col("lang"), col("quartile"))
-        .agg(count(lit(1)).as("n"),
-          min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
-    }),
-
-    "q_zorder" -> ((s, dir) => {
-      // z-order layout audit: Morton-interleave (user cell, day) per
-      // event and roll up per 2^8 key range — the file-level locality
-      // a zkey-sorted write would give both user- and time-range scans
-      val ev = t(s, dir, "events")
-        .withColumn("ucell", pmod(col("user_id"), lit(65536L)))
-        .withColumn("day", expr("(ts div 86400000000000) % 65536"))
-      ev.withColumn("zkey", Scale.zorderKey16(col("ucell"), col("day")))
-        .withColumn("zbucket", shiftright(col("zkey"), 8))
-        .groupBy(col("zbucket"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("user_id")).as("n_users"),
-          (max(col("day")) - min(col("day"))).as("day_span"))
-    }),
-
-    "q_tpch_q13" -> ((s, dir) => {
-      // TPC-H Q13 shape (customer order-count distribution incl. the
-      // zero-order customers): aggregate orders per custkey FIRST, then
-      // LEFT OUTER join customer — the join input shrinks from |orders|
-      // to |custkeys-with-orders| before any wide join, and customers
-      // with no orders surface via coalesce(cnt, 0)
-      val c = t(s, dir, "customer")
-      val ocnt = t(s, dir, "orders")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
-      c.join(ocnt, c("c_custkey") === ocnt("o_custkey"), "left_outer")
-        .select(coalesce(col("cnt"), lit(0L)).as("c_count"))
-        .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
-    }),
-
-    "q_doc_perplexity" -> ((s, dir) =>
-      // LM-based quality scoring: per-doc avg negative log-likelihood
-      // under the corpus bigram LM (add-one smoothed); one shared
-      // bigram exchange for LM build + scoring
-      TextOps.docPerplexity(docs(s, dir), "doc_id", "text")),
-
-    "q_inverted_index" -> ((s, dir) =>
-      // bounded-posting inverted index: df + 10 smallest doc ids per
-      // term with df >= 20; the cap lives inside the TopKBy aggregate.
-      // Postings are emitted as a comma-joined STRING in the gate (the
-      // driver's pandas harness cannot sort/hash array columns); the
-      // operator itself keeps the typed array API.
-      TextOps.invertedIndex(docs(s, dir), "doc_id", "text",
-        maxPostings = 10, minDf = 20L)
-        .withColumn("postings",
-          concat_ws(",", col("postings").cast("array<string>")))),
-
-    "q_url_stats" -> ((s, dir) => {
-      // web-corpus provenance roll-up: parse a URL into host/port/path/
-      // query (TextOps.urlParts — narrow regexp_extract) and aggregate
-      // per host. The URL is derived from real columns so the oracle
-      // parses the identical strings
-      val d = docs(s, dir).withColumn("url",
-        concat(lit("https://"), col("source"), lit(".example.org:8080/"),
-          col("lang"), lit("/"), col("doc_id"), lit("?ref="), col("source")))
-      d.select(Seq(col("url"), col("n_chars")) ++ TextOps.urlParts(col("url")): _*)
-        .groupBy(col("host"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          countDistinct(col("path")).as("n_paths"),
-          max(col("port")).as("port"),
-          sum(col("n_chars")).as("total_chars"))
-    }),
-
-    // ── round-8 additions ───────────────────────────────────────────────
-
-    "q_tpch_q7" -> ((s, dir) => {
-      // TPC-H Q7 shape (volume shipping between a nation PAIR, both
-      // directions, by ship year): both nation dims resolve through the
-      // bounded supplier/nation tables BEFORE touching the facts —
-      // supplier side broadcast (prunes lineitem to the two nations'
-      // suppliers first), customer pre-filtered to the pair so the
-      // custkey join also prunes; revenue in exact integer micros
-      val nations = t(s, dir, "nation")
-        .filter(col("n_name").isin("NATION_1", "NATION_2"))
-        .select(col("n_nationkey"), col("n_name"))
-      val supp = t(s, dir, "supplier")
-        .join(broadcast(nations), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val cust = t(s, dir, "customer")
-        .join(broadcast(nations), col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name").as("cust_nation"))
-      val li = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"),
-          col("l_extendedprice"), col("l_discount"))
-      li.join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .filter(col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).as("l_year"))
-        .agg((sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000)
-          .cast("long")) / 1000000.0).as("revenue"))
-    }),
-
-    "q_tpch_q8" -> ((s, dir) => {
-      // TPC-H Q8 shape (national market share of one part type inside one
-      // region's market, by order year): the part slice broadcast prunes
-      // lineitem first; region membership resolves on the bounded
-      // customer/nation side; share = ratio of two exact integer-micro
-      // sums in ONE combinable aggregate (no second pass)
-      val pt = t(s, dir, "part").filter(col("p_type") === "STANDARD")
-        .select(col("p_partkey"))
-      val regionCust = t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation").filter(col("n_regionkey") === 0)
-          .select(col("n_nationkey"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"))
-      val suppNation = t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val rev = round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000)
-        .cast("long")
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          col("l_extendedprice"), col("l_discount"))
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(regionCust, col("o_custkey") === col("c_custkey"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(round(
-          sum(when(col("supp_nation") === "NATION_5", rev).otherwise(0L)).cast("double") /
-            sum(rev).cast("double"), 6).as("mkt_share"))
-    }),
-
-    "q_tpch_q4" -> ((s, dir) => {
-      // TPC-H Q4 shape (order-priority checking): the correlated EXISTS
-      // becomes a LEFT-SEMI join whose non-equi lateness predicate
-      // (ship > order date + 60 days — this data has no commit/receipt
-      // dates, so lateness is ship-lag) rides the orderkey equi-join;
-      // the semi join cuts each order to one row BEFORE the map-side
-      // combinable count, and the order-window filter is pushed to the
-      // orders scan
-      val o = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      o.join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_shipdate")),
-          col("l_orderkey") === col("o_orderkey") &&
-            col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-    }),
-
-    "q_tpch_q18" -> ((s, dir) => {
-      // TPC-H Q18 shape (large-volume customers): the HAVING subquery
-      // is a pre-aggregated key set — quantities sum per order FIRST
-      // (integral longs, map-side combinable; facts never join wide),
-      // and only the qualifying orderkeys join back to orders and
-      // customer. Top-100 by (totalprice desc, orderdate, orderkey) —
-      // unique orderkey makes the LIMIT boundary deterministic.
-      val big = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"))
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast("long")).as("sum_qty"))
-        .filter(col("sum_qty") > 250)
-      big.join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          col("o_orderdate"), col("o_totalprice"), col("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderdate").asc,
-          col("o_orderkey").asc)
-        .limit(100)
-    }),
-
-    "q_tpch_q12" -> ((s, dir) =>
-      // TPC-H Q12 shape (priority-class line counts per line status for
-      // one ship year): the fact slice is pushed to the scan, the orders
-      // side ships only (orderkey, priority), counts are map-side
-      // combinable case-sums — one shuffle on orderkey, one on the
-      // 2-row group key
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_linestatus"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_linestatus"))
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L))
-            .as("high_line_count"),
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L).otherwise(1L))
-            .as("low_line_count"))),
-
-    "q_tpch_q3" -> ((s, dir) =>
-      // TPC-H Q3 shape (shipping-priority top-10): both date slices
-      // push to the scans, customer ships only its key after the
-      // segment filter, revenue aggregates in integer micros BEFORE
-      // the global top-10 (WindowGroupLimit keeps the sort partial);
-      // ties broken (rev desc, date asc, orderkey asc) — the schema
-      // here has no o_shippriority, the shape is the 3-table
-      // filter-join-topk. The customer⋈orders side is the broadcast
-      // one: without CBO Spark sizes an inner join as the product of
-      // its inputs and would ship the lineitem slice instead
-      broadcast(t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"))
-        .join(t(s, dir, "orders")
-          .filter(col("o_orderdate") < lit("1997-03-15").cast("timestamp"))
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
-          col("c_custkey") === col("o_custkey")))
-        .join(t(s, dir, "lineitem")
-          .filter(col("l_shipdate") > lit("1997-03-15").cast("timestamp"))
-          .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
-          col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"))
-        .agg(sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 1000000).cast("long")).as("rev_micro"))
-        .orderBy(col("rev_micro").desc, col("o_orderdate").asc,
-          col("l_orderkey").asc)
-        .limit(10)
-        .select(col("l_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"),
-          col("rev_micro"))),
-
-    "q_tpch_q6" -> ((s, dir) =>
-      // TPC-H Q6 shape (forecast revenue change): the pure
-      // scan-filter-aggregate — every predicate reaches PushedFilters,
-      // one map-side-combined 1-row sum in integer micros, zero joins
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg(sum(round(col("l_extendedprice") * col("l_discount") * 1000000)
-          .cast("long")).as("revenue_micro"),
-          count(lit(1)).as("n_lines"))),
-
-    "q_tpch_q10" -> ((s, dir) =>
-      // TPC-H Q10 shape (returned-item reporting, top-20 customers):
-      // the returnflag + quarter slices push to the fact scan, revenue
-      // pre-aggregates per customer before the dimension joins, nation
-      // broadcasts — ties broken (rev desc, custkey asc)
-      t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-        .join(t(s, dir, "orders")
-          .filter(col("o_orderdate") >= lit("1996-10-01").cast("timestamp") &&
-            col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-          .select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 1000000).cast("long")).as("rev_micro"))
-        .join(t(s, dir, "customer").select(col("c_custkey"), col("c_name"),
-          col("c_nationkey")), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation").select(col("n_nationkey"),
-          col("n_name"))), col("c_nationkey") === col("n_nationkey"))
-        .orderBy(col("rev_micro").desc, col("c_custkey").asc)
-        .limit(20)
-        .select(col("c_custkey"), col("c_name"), col("n_name"),
-          col("rev_micro"))),
-
-    "q_tpch_q14" -> ((s, dir) => {
-      // TPC-H Q14 shape (promotion-revenue share): one month of facts
-      // joined to part's type column only, both legs of the ratio as
-      // conditional integer-micro sums in ONE aggregation — no second
-      // scan, no second shuffle
-      val m = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-09-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-10-01").cast("timestamp"))
-        .select(col("l_partkey"), (round(col("l_extendedprice") *
-          (lit(1.0) - col("l_discount")) * 1000000).cast("long")).as("rm"))
-        .join(t(s, dir, "part").select(col("p_partkey"), col("p_type")),
-          col("l_partkey") === col("p_partkey"))
-      m.agg(
-        sum(when(col("p_type").startsWith("PROMO"), col("rm"))
-          .otherwise(0L)).as("promo_micro"),
-        sum(col("rm")).as("total_micro"))
-        .select(col("promo_micro"), col("total_micro"),
-          round(lit(100.0) * col("promo_micro").cast("double") /
-            col("total_micro").cast("double"), 6).as("promo_share"))
-    }),
-
-    "q_tpch_q19" -> ((s, dir) =>
-      // TPC-H Q19 shape (discounted revenue over a DISJUNCTION of
-      // brand/quantity/size conjunct groups): the OR-of-ANDs must not
-      // cartesian — it rides the partkey equi-join as a post-join
-      // filter with per-branch residuals; one integer-micro sum out.
-      // (This schema has no container/shipmode columns; brands and the
-      // qty/size ladders carry the disjunctive structure.)
-      t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_quantity"),
-          col("l_extendedprice"), col("l_discount"))
-        .join(t(s, dir, "part").select(col("p_partkey"), col("p_brand"),
-          col("p_size")), col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#13" && col("l_quantity").between(1, 11) &&
-            col("p_size").between(1, 5)) ||
-          (col("p_brand") === "Brand#20" && col("l_quantity").between(10, 20) &&
-            col("p_size").between(1, 10)) ||
-          (col("p_brand") === "Brand#22" && col("l_quantity").between(20, 30) &&
-            col("p_size").between(1, 15)))
-        .agg(sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 1000000).cast("long")).as("revenue_micro"),
-          count(lit(1)).as("n_lines"))),
-
-    "q_tpch_q15" -> ((s, dir) => {
-      // TPC-H Q15 shape (suppliers at the maximum quarterly revenue):
-      // revenue per supplier aggregated FIRST (facts never join wide),
-      // the scalar max is a 1-row broadcast cross join, and the equality
-      // is exact because revenue stays in integer micros until output
-      val rev = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000)
-          .cast("long")).as("rev_micro"))
-      val top = rev.agg(max(col("rev_micro")).as("max_rev"))
-      rev.join(broadcast(top), col("rev_micro") === col("max_rev"))
-        .join(broadcast(t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          (col("rev_micro") / 1000000.0).as("total_revenue"))
-    }),
-
-    "q_tpch_q16" -> ((s, dir) => {
-      // TPC-H Q16 shape (distinct supplier counts per part attribute
-      // group, excluding a supplier blacklist): the blacklist is a
-      // provably-bounded broadcast ANTI join probe-side of the scan, the
-      // part dim broadcasts, and only (attrs, suppkey) pairs shuffle
-      // into the distinct count
-      val blacklist = t(s, dir, "supplier").filter(col("s_acctbal") < 0.0)
-        .select(col("s_suppkey"))
-      val pt = t(s, dir, "part")
-        .filter(col("p_brand") =!= "Brand#1" && !col("p_type").startsWith("PROMO") &&
-          col("p_size").isin(1, 5, 9, 13, 17, 21, 25, 29))
-        .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-      t(s, dir, "lineitem").select(col("l_partkey"), col("l_suppkey"))
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(blacklist), col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-    }),
-
-    "q_tpch_q17" -> ((s, dir) => {
-      // TPC-H Q17 shape (revenue from small-quantity lines of one brand):
-      // the correlated per-part AVG becomes one partial-agg pass over the
-      // SAME pruned fact slice, joined back on partkey; the 20%-of-avg
-      // comparison is exact integer arithmetic (5·qty·cnt < Σqty in
-      // centi-units), so both engines cut identically
-      val brand = t(s, dir, "part").filter(col("p_brand") === "Brand#3")
-        .select(col("p_partkey"))
-      val li = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_quantity"), col("l_extendedprice"))
-        .join(broadcast(brand), col("l_partkey") === col("p_partkey"))
-      val avgq = li.groupBy(col("p_partkey").as("ap_partkey"))
-        .agg(sum(round(col("l_quantity") * 100).cast("long")).as("sum_qc"),
-          count(lit(1)).as("cnt"))
-      // avgq is a per-part frame (unbounded as parts scale) — AQE decides
-      li.join(avgq, col("p_partkey") === col("ap_partkey"))
-        .filter(round(col("l_quantity") * 100).cast("long") * col("cnt") * 5L < col("sum_qc"))
-        .agg(round(sum(round(col("l_extendedprice") * 100).cast("long"))
-          .cast("double") / 100.0 / 7.0, 6).as("avg_yearly"))
-    }),
-
-    "q_tpch_q22" -> ((s, dir) => {
-      // TPC-H Q22 shape (well-funded customers with no recent orders, by
-      // country code): the positive-balance average is a 1-row broadcast,
-      // the above-average test is exact rational arithmetic
-      // (bal_cents·cnt > Σcents), and the NOT EXISTS is a LEFT ANTI join
-      // that ships only distinct custkeys of the filtered orders side
-      val cust = t(s, dir, "customer")
-        .withColumn("cntrycode", pmod(col("c_nationkey"), lit(7)))
-        .withColumn("bal_cents", round(col("c_acctbal") * 100).cast("long"))
-      val avgBal = cust.filter(col("c_acctbal") > 0.0)
-        .agg(sum(col("bal_cents")).as("sum_cents"), count(lit(1)).as("cnt"))
-      val recent = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
-        .select(col("o_custkey"))
-      cust.join(broadcast(avgBal))
-        .filter(col("bal_cents") * col("cnt") > col("sum_cents"))
-        .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("cntrycode"))
-        .agg(count(lit(1)).as("numcust"),
-          (sum(col("bal_cents")) / 100.0).as("totacctbal"))
-    }),
-
-    "q_min_cost_supplier" -> ((s, dir) => {
-      // TPC-H Q2 shape (groupwise-min join-back: the cheapest supplier
-      // per part in a size/type slice): ONE aggregate finds the per-part
-      // minimum (price, suppkey) struct — deterministic tie-break on
-      // suppkey — so the facts never self-join; both dims broadcast
-      val pt = t(s, dir, "part")
-        .filter(col("p_size") <= 10 && col("p_type") === "SMALL")
-        .select(col("p_partkey"), col("p_name"))
-      val best = t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey"),
-          round(col("l_extendedprice") * 100).cast("long").as("pc"))
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_partkey"), col("p_name"))
-        .agg(min(struct(col("pc"), col("l_suppkey"))).as("m"))
-        .select(col("p_partkey"), col("p_name"),
-          (col("m.pc") / 100.0).as("min_price"), col("m.l_suppkey").as("l_suppkey"))
-      best.join(broadcast(t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))),
-        col("l_suppkey") === col("s_suppkey"))
-        .select(col("p_partkey"), col("p_name"), col("s_name"), col("min_price"))
-    }),
-
-    "q_ams_f2" -> ((s, dir) =>
-      // AMS tug-of-war F2 (self-join size / skew) sketch: 16 ±1 counters
-      // in ONE combinable pass, exact Σf² joined back as the audit
-      Sketches.amsF2(t(s, dir, "lineitem"), "l_partkey", counters = 16)),
-
-    "q_ams_f2_grouped" -> ((s, dir) =>
-      // the skew-TRIAGE view: per-flag F2 estimate next to its exact —
-      // which partitions of the data have self-join blowup
-      Sketches.amsF2Grouped(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_partkey", counters = 16)),
-
-    "q_agg_filter_clause" -> ((s, dir) => {
-      // SQL FILTER-clause composition over the custom aggregates — the
-      // reference forwards filter/distinct params through its rewrite
-      // (src/max_min_by.rs:104), so the Spark forms must compose too
-      GraftFunctions.registerAll(s)
-      t(s, dir, "lineitem").createOrReplaceTempView("li_f8")
-      s.sql("""SELECT
-              |  graft_mode(l_linenumber) FILTER (WHERE l_returnflag = 'R')
-              |    AS mode_r,
-              |  round(graft_skewness(l_extendedprice)
-              |    FILTER (WHERE l_linestatus = 'O'), 6) AS skew_o,
-              |  max_by(l_orderkey, struct(l_extendedprice, l_orderkey))
-              |    FILTER (WHERE l_quantity >= 25.0) AS best_hiqty
-              |FROM li_f8""".stripMargin)
-    }),
-
-    "q_kmv_overlap" -> ((s, dir) => {
-      // KMV vocabulary-overlap estimate between two corpus sources: the
-      // k-min cut of the hash UNION is a uniform sample of it, so the
-      // both-sides fraction estimates Jaccard; exact overlap rides the
-      // same membership exchange as the audit
-      val d = docs(s, dir)
-      def tokSet(src: String) = d.filter(col("source") === src)
-        .select(explode(TextOps.tokensNative(col("text"))).as("tok"))
-      Sketches.kmvOverlap(tokSet("src1"), tokSet("src2"), "tok", k = 256)
-    }),
-
-    "q_temperature_mix" -> ((s, dir) =>
-      // temperature-scaled data mixing (w ∝ n^0.5): integer-exact
-      // targets, md5-ranked deterministic per-source draw
-      TextOps.temperatureMix(docs(s, dir), "source", "doc_id", budget = 200L)),
-
-    "q_ngram_spectrum" -> ((s, dir) => {
-      // occurrence-frequency SPECTRUM of distinct 3-grams (how many
-      // n-grams appear exactly k times, k clamped at 10+): THE
-      // before/after-dedup diagnostic — span dedup moves mass from the
-      // heavy tail into k=1; only 16-byte gram hashes ever shuffle,
-      // two map-side-combinable counts
-      val grams = docs(s, dir)
-        .select(explode(TextOps.tokenShingles(col("text"))).as("g"))
-        .select(md5(col("g")).as("h"))
-        .groupBy(col("h")).agg(count(lit(1)).as("occ"))
-      grams
-        .select(least(col("occ"), lit(10L)).as("k"))
-        .groupBy(col("k")).agg(count(lit(1)).as("n_grams"))
-    }),
-
-    "q_epoch_mix" -> ((s, dir) =>
-      // data-constrained epoch allocation (water-filling): budget = 2×
-      // the corpus token mass, small sources repeat up to 4 epochs,
-      // large sources share the leftover ∝ √n — exact decimal
-      // cross-multiplied prefix test, integral floor allocations
-      TextOps.epochMixFrac(
-        docs(s, dir).groupBy(col("source"))
-          .agg(sum(col("n_chars")).as("toks")),
-        "source", "toks", budgetFrac = 2.0, maxRepeat = 4)),
-
-    "q_budget_select" -> ((s, dir) =>
-      // token-budget data selection: per source, greedily keep the
-      // highest-quality docs while the running BPE-token total stays
-      // within budget — integer cumsum, deterministic quality ranking
-      TextOps.budgetSelect(docs(s, dir), "doc_id", "text", "source", 800L)),
-
-    "q_token_budget_report" -> ((s, dir) => {
-      // training-mix accounting — the "data card" numbers a mixture
-      // designer reads before weighting: per-source docs/tokens, corpus
-      // token share, and the epochs a 1M-token budget implies per
-      // source. One map-side-combinable agg; the 1-row total broadcasts.
-      val perSrc = docs(s, dir)
-        .select(col("source"),
-          TextOps.tokenCountBpe(col("text")).cast("long").as("nt"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("n_tokens"))
-      val tot = perSrc.agg(sum(col("n_tokens")).as("tot"))
-      perSrc.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          // zero-token guards: ANSI division THROWS on a 0 denominator
-          // (it does not NULL); NULL is the contract, mirrored by the
-          // oracle's nullif
-          round(when(col("tot") > 0,
-            col("n_tokens").cast("double") / col("tot")), 6).as("token_share"),
-          round(when(col("n_tokens") > 0,
-            lit(1000000.0) / col("n_tokens")), 6).as("epochs_at_1m"))
-    }),
-
-    "q_seqlen_histogram" -> ((s, dir) =>
-      // sequence-length histogram in power-of-two buckets: bucket =
-      // bit-length of the BPE token count (length of its binary string
-      // — integer-exact boundaries, never a float log2, which rounds
-      // 2^k down on exact powers in IEEE ln-ratio form). The
-      // pre-packing profile that sizes max_seq_len and predicts
-      // padding waste. Token counts staged once (HOFs have no CSE).
-      docs(s, dir)
-        .select(TextOps.tokenCountBpe(col("text")).cast("long").as("nt"))
-        .select(length(bin(col("nt"))).as("len_bucket"), col("nt"))
-        .groupBy(col("len_bucket"))
-        .agg(count(lit(1)).as("n_docs"), min(col("nt")).as("min_tokens"),
-          max(col("nt")).as("max_tokens"), sum(col("nt")).as("sum_tokens"))),
-
-    "q_token_fertility" -> ((s, dir) =>
-      // tokenizer-fertility report: chars per BPE token by language —
-      // the metric that tells a tokenizer team which languages pay the
-      // highest token tax. Exact integer sums, one division at the end.
-      docs(s, dir)
-        .select(col("lang"), col("n_chars"),
-          TextOps.tokenCountBpe(col("text")).cast("long").as("nt"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(col("nt")).as("sum_tokens"))
-        .select(col("lang"), col("n_docs"), col("sum_chars"), col("sum_tokens"),
-          // ANSI-safe: a zero-token language reads NULL, not an error
-          round(when(col("sum_tokens") > 0,
-            col("sum_chars").cast("double") / col("sum_tokens")), 6)
-            .as("chars_per_token"))),
-
-    "q_dup_rate_by_source" -> ((s, dir) =>
-      // per-source exact-duplicate rate: distinct text hashes vs docs —
-      // which ingestion feeds are flooding the corpus. One partial-
-      // aggregable pass over (source, md5) then a count rollup.
-      docs(s, dir)
-        .select(col("source"), md5(col("text")).as("h"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), countDistinct(col("h")).as("n_unique"))
-        .select(col("source"), col("n_docs"), col("n_unique"),
-          round(lit(1.0) - col("n_unique").cast("double") / col("n_docs"), 6)
-            .as("dup_rate"))),
-
-    "q_expectations" -> ((s, dir) =>
-      // data-quality gate: six declarative checks in ONE aggregation
-      // pass (the Deequ/Great-Expectations shape, Spark-native). The
-      // in_set check intentionally excludes es/zh so a FAILING verdict
-      // row is exercised, not just the happy path.
-      graft.ops.Expect.run(docs(s, dir), Seq(
-        graft.ops.Expect.RowsBetween(1L, 10000000L),
-        graft.ops.Expect.NullRateAtMost("text", 0.01),
-        graft.ops.Expect.Unique("doc_id"),
-        graft.ops.Expect.InSet("lang", Seq("en", "de", "fr")),
-        graft.ops.Expect.MinAtLeast("n_chars", 1.0),
-        graft.ops.Expect.MaxAtMost("n_chars", 1000000.0)))),
-
-    "q_expectations_by_source" -> ((s, dir) =>
-      // per-feed quality gate: the grouped form that catches ONE bad
-      // ingestion source where the global rate still passes — per
-      // source: volume bounds, text null rate, key uniqueness, length
-      // floor; one keyed aggregation pass
-      graft.ops.Expect.runGrouped(docs(s, dir), "source", Seq(
-        graft.ops.Expect.RowsBetween(5L, 1000000L),
-        graft.ops.Expect.NullRateAtMost("text", 0.01),
-        graft.ops.Expect.Unique("doc_id"),
-        graft.ops.Expect.MinAtLeast("n_chars", 1.0)))),
-
-    "q_quality_calibrated" -> ((s, dir) => {
-      // cross-source score calibration: per doc, the fraction of its
-      // SOURCE strictly below its quality bin (bin-granular percentile
-      // — no per-source sort partition: the only ordered frame is the
-      // 1000-row bin histogram)
-      val scored = docs(s, dir).select(col("doc_id"), col("source"),
-        graft.ops.TextOps.qualityScore(col("text")).as("quality"))
-      graft.ops.Stats.histogramPercentile(scored, Seq("source"),
-        "quality", 0.0, 1.0, 1000)
-    }),
-
-    "q_expect_regex" -> ((s, dir) =>
-      // format-conformance gate: RLIKE rate checks in the same one-pass
-      // aggregation (lang must be a 2-letter code, source must match the
-      // feed-naming scheme; the capitalized-text check intentionally
-      // FAILS — rate 0 < 0.5 — so a failing verdict row is exercised)
-      graft.ops.Expect.run(docs(s, dir), Seq(
-        graft.ops.Expect.MatchesRegex("lang", "^[a-z]{2}$", 0.99),
-        graft.ops.Expect.MatchesRegex("source", "^src[0-9]+$", 1.0),
-        graft.ops.Expect.MatchesRegex("text", "^[A-Z]", 0.5)))),
-
-    "q_reconcile" -> ((s, dir) => {
-      // cross-table row reconciliation: a length-filter stage must obey
-      // rows(out) == rows(in) - rows(dropped). The 'filter_split' triple
-      // is the exact complement (passes); 'leaky_split' uses a
-      // mismatched drop predicate (< 190 vs >= 200) so the conservation
-      // check FAILS — both verdict paths exercised in one frame.
-      val d = docs(s, dir)
-      val kept = d.filter(col("n_chars") >= 200)
-      graft.ops.Expect.reconcile(d, kept, d.filter(col("n_chars") < 200))
-        .withColumn("stage", lit("filter_split"))
-        .unionByName(
-          graft.ops.Expect.reconcile(d, kept, d.filter(col("n_chars") < 190))
-            .withColumn("stage", lit("leaky_split")))
-    }),
-
-    "q_reconcile_by_source" -> ((s, dir) => {
-      // per-feed reconciliation: the same conservation law keyed by
-      // source, catching one feed leaking rows while global totals
-      // still balance; three keyed counts full-outer-joined
-      val d = docs(s, dir)
-      graft.ops.Expect.reconcileBy(d,
-        d.filter(col("n_chars") >= 200),
-        d.filter(col("n_chars") < 200), "source")
-    }),
-
-    "q_dup_cluster_sizes" -> ((s, dir) => {
-      // corpus-health: near-dup cluster SIZE distribution — how many
-      // docs sit in clusters of each size, i.e. what a dedup pass will
-      // reclaim (n_docs - n_clusters rows per size). Reuses the CC
-      // clustering; the two-level reaggregation is over cluster ids,
-      // never documents.
-      val d = docs(s, dir)
-      Dedup.connectedComponents(d.select(col("doc_id")), "doc_id",
-          Dedup.candidatePairs(d, "doc_id", "text", MinhashK, MinhashBands))
-        .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz").as("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .select(col("cluster_size"), col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).as("n_docs"))
-    }),
-
-    "q_bpe_merges" -> ((s, dir) =>
-      // BPE merge-candidate scoring: frequency-weighted adjacent char
-      // pairs over the vocabulary, deterministic top-20
-      TextOps.bpeMergeCandidates(docs(s, dir), "text", k = 20)),
-
-    "q_bpe_train" -> ((s, dir) =>
-      // FULL BPE training, 8 rounds end to end: per round re-encode
-      // the vocabulary under the merges so far, adopt the most
-      // frequent adjacent symbol pair (cnt desc, x, y). The oracle
-      // unrolls the same 8 rounds as chained CTEs (the q_kmeans
-      // unrolled-iterations discipline).
-      TextOps.bpeTrain(docs(s, dir), "text", nMerges = 8)),
-
-    "q_ngram_novelty" -> ((s, dir) =>
-      // per-doc novelty: fraction of distinct 3-grams with corpus df = 1;
-      // one shared gram exchange feeds df-count AND probe join
-      Dedup.ngramNovelty(docs(s, dir), "doc_id", "text")),
-
-    "q_dup_matrix" -> ((s, dir) =>
-      // which sources duplicate each other: verified near-dup pairs
-      // rolled up per order-normalized source pair, exact micro-sum mean
-      Dedup.dupMatrix(docs(s, dir), "doc_id", "text", "source",
-        k = MinhashK, bands = MinhashBands, minJaccard = 0.4)),
-
-    "q_tpch_q9" -> ((s, dir) => {
-      // TPC-H Q9 shape (product-line profit by supplier nation and order
-      // year; p_retailprice·qty stands in for ps_supplycost, which the
-      // synthetic schema omits): the part-name slice broadcast prunes
-      // lineitem first, profit = rev − cost entirely in integer micros
-      // (exact under any partitioning), nation/supplier dims broadcast
-      val pt = t(s, dir, "part")
-        .filter(col("p_name").contains("red"))
-        .select(col("p_partkey"), col("p_retailprice"))
-      val suppNation = t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name"))
-      val amountMicro =
-        round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1000000).cast("long") -
-          round(col("p_retailprice") * 1000000).cast("long") *
-            round(col("l_quantity")).cast("long")
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-        .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
-        .agg((sum(amountMicro) / 1000000.0).as("sum_profit"))
-    }),
-
-    "q_scd2" -> ((s, dir) =>
-      // SCD-2 validity intervals from the event stream: change points
-      // only, [valid_from, valid_to) attached, one keyed shuffle
-      Events.scd2Intervals(t(s, dir, "events"))),
-
-    "q_label_window" -> ((s, dir) => {
-      // supervised-label generation: for every click, the user's
-      // purchases within the strictly-future 24h window — count, first
-      // time, exact integer-micro sum (banded join, never a cross join)
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("tsu"), col("value"))
-      Events.labelWindow(clicks, purchases, "user_id", "tsu", "event_id",
-        "value", horizonMicros = 86400000000L)
-    }),
-
-    "q_time_to_convert" -> ((s, dir) => {
-      // conversion-lag percentiles: per user, the first click and the
-      // first purchase strictly after it; exact p50/p90 of the lag,
-      // grouped by the click's epoch-day mod 7 (an integer-exact
-      // weekday-class key — bounded groups, so the percentile rank
-      // window never sorts the whole population in one task)
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val firstClick = e.filter(col("event_type") === "click")
-        .groupBy(col("user_id")).agg(min(col("tsu")).as("click_us"))
-      val conv = firstClick
-        .join(e.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("tsu")), Seq("user_id"))
-        .filter(col("tsu") > col("click_us"))
-        .groupBy(col("user_id"), col("click_us"))
-        .agg(min(col("tsu")).as("conv_us"))
-        .select(expr("(click_us div 86400000000L) % 7").as("dow"),
-          (col("conv_us") - col("click_us")).as("lag_us"))
-      Stats.percentileExact(conv, Seq("dow"), "lag_us",
-        Seq("p50" -> 0.5, "p90" -> 0.9))
-    }),
-
-    "q_attribution" -> ((s, dir) => {
-      // multi-touch attribution: every purchase's credit spread over the
-      // same user's clicks in the strictly-before 24h lookback (linear
-      // model, first/last-touch flags); banded equi-join — the backward
-      // twin of q_label_window, never a per-user cross product
-      val e = t(s, dir, "events").withColumn("tsu", expr("ts div 1000L"))
-      val touches = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("tsu"), col("event_id"))
-      val convs = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("tsu"), col("event_id").as("conv_id"),
-          col("value"))
-      Events.attribution(touches, convs, "user_id", "tsu", "event_id",
-        "conv_id", "value", lookbackMicros = 86400000000L)
-    }),
-
-    "q_interarrival" -> ((s, dir) =>
-      // per-user burstiness profile: n/mean/p50/p90/max of the µs gaps
-      // between consecutive events — one user_id exchange, straddle-rank
-      // percentiles, no per-group array
-      Events.interArrival(t(s, dir, "events"))),
-
-    "q_level_shift" -> ((s, dir) =>
-      // sliding two-sample step detector on daily per-type volumes:
-      // next-7-observed-days mean minus previous-7 — full frames only
-      Events.levelShift(t(s, dir, "events"), w = 7)),
-
-    "q_top_paths" -> ((s, dir) =>
-      // journey mining: the 20 most common first-5-event session paths;
-      // the maxSteps cut lands BEFORE any per-session collection
-      Events.topPaths(t(s, dir, "events"), maxSteps = 5, k = 20)),
-
-    "q_ab_lift" -> ((s, dir) =>
-      // experiment readout: md5-deterministic 50/50 arms, per-user
-      // integer-micro metric, Welch z from exact n·S2−S1² state
-      Events.abLift(t(s, dir, "events"))),
-
-    "q_k_anonymity" -> ((s, dir) =>
-      // privacy audit: how much of the corpus sits in quasi-identifier
-      // classes smaller than k=5 over (lang, source, length-bucket)
-      Stats.kAnonymity(
-        docs(s, dir).withColumn("len_bucket", expr("n_chars div 100")),
-        Seq("lang", "source", "len_bucket"), k = 5)),
-
-    "q_hash_vectorize" -> ((s, dir) =>
-      // hashing-trick BoW: fixed-dim sparse features, zero vocab state,
-      // md5 buckets so collisions replay identically in any engine
-      TextOps.hashingVectorize(docs(s, dir), "doc_id", "text", 256)),
-
-    "q_bounce_rate" -> ((s, dir) =>
-      // single-event-session share per day on the compact session frame
-      Events.bounceRate(t(s, dir, "events"))),
-
-    "q_stickiness" -> ((s, dir) =>
-      // engagement ratio: DAU / trailing-28d MAU per observed day
-      Events.stickiness(t(s, dir, "events"), windowDays = 28)),
-
-    "q_feature_incremental" -> ((s, dir) => {
-      // feature-store maintenance: history lives as the stored day
-      // frame; the post-cutoff shard refreshes ONLY touched users —
-      // bit-equal to the full recompute restricted to them
-      // realistic shard: the FINAL day arrives; history is the stored
-      // day frame (the whole point: zero raw-history re-scan, and the
-      // re-window touches only that day's users)
-      val e = t(s, dir, "events")
-      val cutNs = 1706572800000000000L // 2024-01-30T00:00Z
-      Events.featureWindowsIncremental(
-        Events.featureDayFrame(
-          graft.ops.EventTime.normalizeTs(e).filter(col("ts") < cutNs)),
-        graft.ops.EventTime.normalizeTs(e).filter(col("ts") >= cutNs))
-    }),
-
-    "q_percentile_weighted" -> ((s, dir) =>
-      // volume-weighted price percentiles: a flood of small lines can't
-      // dominate the statistic the way it dominates the row count
-      Stats.percentileWeighted(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_extendedprice", "l_quantity",
-        Seq("p50" -> 0.5, "p90" -> 0.9))),
-
-    "q_ab_power" -> ((s, dir) =>
-      // experiment sizing: the MDE this population's variance allows at
-      // alpha=.05 / 80% power, from exact Welch moments
-      Events.abPower(t(s, dir, "events"))),
-
-    "q_ab_conversion" -> ((s, dir) =>
-      // binary-metric readout: post-cutoff purchase conversion, pooled
-      // two-proportion z on the md5 arms
-      Events.abConversion(t(s, dir, "events"), "purchase",
-        cutoffMicros = 1705363200000000L)),
-
-    "q_diff_in_diff" -> ((s, dir) =>
-      // trend-robust experiment readout: per-user signed post-minus-pre
-      // delta through abLift's exact Welch fold
-      Events.diffInDiff(t(s, dir, "events"),
-        cutoffMicros = 1705363200000000L)),
-
-    "q_l_diversity" -> ((s, dir) =>
-      // homogeneity audit: classes that are k-anonymous but carry < 2
-      // distinct languages still leak the language
-      Stats.lDiversity(
-        docs(s, dir).withColumn("len_bucket", expr("n_chars div 200")),
-        Seq("source", "len_bucket"), "lang", l = 2)),
-
-    "q_t_closeness" -> ((s, dir) =>
-      // third rung of the privacy ladder: per-class total-variation
-      // distance of the language distribution vs the corpus-wide one
-      // (a k-anonymous, l-diverse class with 19/20 rows in one lang
-      // still leaks) — integer-exact numerators, one final division
-      Stats.tCloseness(
-        docs(s, dir).withColumn("len_bucket", expr("n_chars div 200")),
-        Seq("source", "len_bucket"), "lang")),
-
-    "q_benford" -> ((s, dir) =>
-      // fabricated-numbers audit: first-digit distribution of extended
-      // price vs Benford, chi^2 as a digit-ordered left fold
-      Stats.benford(t(s, dir, "lineitem"), "l_extendedprice")),
-
-    "q_phash_dedup" -> ((s, dir) => {
-      // frame/image-level perceptual dedup plumbing: per-partition codec
-      // signatures -> 4x16-bit pigeonhole banding -> bit_count(xor)
-      // Hamming verify; payload bytes never leave their scan partitions
-      implicit val sp: SparkSession = s
-      import s.implicits._
-      // payload = each doc's leading 200 chars (the "thumbnail" frame):
-      // the corpus has no byte-identical full texts, but near-dup docs
-      // share their leading frame — exactly what frame-level dedup sees
-      Multimodal.perceptualDedup(
-        Multimodal.asMediaTable(
-          docs(s, dir).withColumn("text", substring(col("text"), 1, 200)),
-          "doc_id", "text")
-          .as[graft.ops.MediaRecord])
-    }),
-
-    "q_session_cooccur" -> ((s, dir) =>
-      // journey coupling: which event types share sessions more (or
-      // less) than independence predicts — distinct (session, type)
-      // reduction first, so bot sessions cost |types|, never length
-      Events.sessionCooccurrence(t(s, dir, "events"))),
-
-    "q_link_records" -> ((s, dir) => {
-      // entity resolution: best fuzzy name match per part via prefix
-      // blocking + codegen'd Jaro-Winkler scoring + top-1 arg-max
-      val p = t(s, dir, "part")
-      Dedup.linkRecords(p, p, "p_partkey", "p_name", "p_partkey", "p_name",
-        threshold = 0.88, blockPrefix = 9)
-    }),
-
-    "q_seasonal_error" -> ((s, dir) =>
-      // forecastability floor: seasonal-naive (lag-7-day) MAE/WAPE per
-      // type on the compact (type, day) frame, observed-day pairs only
-      Events.seasonalError(t(s, dir, "events"), periodDays = 7)),
-
-    "q_target_encode" -> ((s, dir) =>
-      // leakage-safe categorical feature: LOO smoothed target mean per
-      // event_type — category aggregate + one-row prior broadcast, no
-      // window, exact long numerators
-      Stats.targetEncode(t(s, dir, "events"), "event_id", "event_type",
-        "value", priorStrength = 10.0)),
-
-    "q_jaro_winkler" -> ((s, dir) => {
-      // record-linkage scoring: codegen'd byte-based Jaro-Winkler over
-      // adjacent-key part-name pairs (block first, score candidates —
-      // the fuzzy complement to levenshtein in q_fuzzy_pairs)
-      val p = t(s, dir, "part").select(col("p_partkey"), col("p_name"))
-      val nxt = p.select((col("p_partkey") - 1L).as("p_partkey"),
-        col("p_name").as("next_name"))
-      p.join(nxt, "p_partkey")
-        .select(col("p_partkey"),
-          round(GraftFunctions.jaro_winkler(col("p_name"), col("next_name")), 6)
-            .as("jw"))
-    }),
-
-    "q_ab_cuped" -> ((s, dir) =>
-      // CUPED variance-reduced readout: pre-cutoff activity as the
-      // control covariate, pooled theta from exact integer moments,
-      // adjusted Welch z + variance-reduction rho^2
-      Events.abCuped(t(s, dir, "events"),
-        cutoffMicros = 1705363200000000L)), // 2024-01-16T00:00Z
-
-    "q_session_paths" -> ((s, dir) =>
-      // per-session journey prefixes through the bounded PathPrefix
-      // aggregate under native session_window — O(maxSteps) state per
-      // session, no rank window, streaming-identical shape
-      Events.sessionPaths(t(s, dir, "events"), maxSteps = 5)),
-
-    "q_feature_windows" -> ((s, dir) =>
-      // trailing 1/7/28-day per-user features on one compact day-frame
-      // exchange — RANGE frames over the day number, recency lag
-      Events.featureWindows(t(s, dir, "events"))),
-
-    "q_concentration_users" -> ((s, dir) =>
-      // traffic-concentration diagnostic: Gini + top-1/top-10 shares of
-      // per-user event counts via the tied-rank closed form — no global
-      // key sort, the only unpartitioned window is over distinct COUNT
-      // values
-      graft.ops.Stats.concentration(t(s, dir, "events"), "user_id")),
-
-    "q_concentration_sources" -> ((s, dir) =>
-      // corpus-side twin: how unevenly documents spread over ingestion
-      // feeds
-      graft.ops.Stats.concentration(docs(s, dir), "source")),
-
-    "q_point_in_time" -> ((s, dir) => {
-      // leak-free feature lookup: each click reads the purchase-value
-      // SCD2 version valid AT THE CLICK'S OWN TIME (never the future)
-      val e = t(s, dir, "events")
-      val dim = Events.scd2Intervals(e).filter(col("event_type") === "purchase")
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), expr("ts div 1000").as("tsu"))
-      Events.pointInTimeJoin(clicks, dim, "user_id", "tsu", Seq("value"))
-        .select(col("event_id"), col("user_id"), col("tsu"), col("dim_value"))
-    }),
-
-    "q_resample_interp" -> ((s, dir) =>
-      // linear-interpolated daily resample (smooth-gauge twin of LOCF):
-      // four carry windows share one user exchange, per-user span grid
-      Events.resampleDailyInterp(t(s, dir, "events"))),
-
-    "q_cms_join_size" -> ((s, dir) => {
-      // plan-time join cardinality from two KB-scale CMS grids: the
-      // inner-product upper bound vs the exact join size audit
-      val li = t(s, dir, "lineitem")
-      Sketches.cmsJoinSize(
-        li.filter(col("l_returnflag") === "R"),
-        li.filter(col("l_linestatus") === "O"),
-        "l_partkey", depth = 4, width = 1024)
-    }),
-
-    "q_vocab_overlap_matrix" -> ((s, dir) =>
-      // pairwise source-vocabulary Jaccard: one hash-staged distinct
-      // frame feeds sizes and both self-join sides; hashes only
-      TextOps.vocabOverlapMatrix(docs(s, dir), "source", "text")),
-
-    "q_pmi_lang_source" -> ((s, dir) =>
-      // lang × source pointwise mutual information over the bounded
-      // cell frame — corpus-mix skew diagnostic
-      TextOps.pmiTable(docs(s, dir), "lang", "source")),
-
-    "q_winsorized" -> ((s, dir) =>
-      // robust location that keeps every row's magnitude: clamp into the
-      // exact [p5, p95] band, integer-micro sum, divide once
-      Stats.winsorizedMean(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_extendedprice", pLo = 0.05, pHi = 0.95)),
-
-    "q_monthly_trend" -> ((s, dir) => {
-      // calendar rollup + year-over-year: monthly revenue (exact cents)
-      // anchored by an EXPLICIT same-month-previous-year self-join, not
-      // lag(12) — lag is a row offset over months that APPEAR, so one
-      // zero-order calendar month would silently shift every later
-      // anchor to the wrong month. The join also replaces the
-      // single-task unpartitioned window: the bounded #months frame
-      // broadcasts.
-      val monthly = t(s, dir, "orders")
-        .groupBy(date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM")
-          .as("month"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("rev_cents"))
-      val prev = monthly.select(col("month").as("pm"),
-        col("rev_cents").as("prev_year_cents"))
-      monthly
-        .withColumn("anchor", concat(
-          (substring(col("month"), 1, 4).cast("int") - 1).cast("string"),
-          substring(col("month"), 5, 3)))
-        .join(broadcast(prev), col("anchor") === col("pm"), "left_outer")
-        .select(col("month"), col("n_orders"),
-          (col("rev_cents") / 100.0).as("revenue"),
-          round(col("rev_cents").cast("double") / col("prev_year_cents").cast("double"), 6)
-            .as("yoy_ratio"))
-    }),
-
-    "q_sample_weighted_agg" -> ((s, dir) => {
-      // the BOUNDED-STATE twin of q_sample_weighted: same E-S draw, but
-      // through the O(k)-heap TopKBy aggregate (map-side combinable)
-      // instead of a per-stratum window sort — the 100 TB form; both
-      // forms share one DuckDB oracle, so the gate proves them equal
-      val d = docs(s, dir)
-        .select(col("doc_id"), col("lang"), length(col("text")).as("w"))
-      val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("double") + lit(0.5)) / lit(4294967296.0)
-      val key = round(log(u) / greatest(col("w").cast("double"), lit(1e-300)), 6)
-      d.select(col("lang"), col("doc_id"), key.as("k"))
-        .groupBy(col("lang"))
-        .agg(GraftFunctions.topk_by(col("doc_id"), col("k"), 15).as("top"))
-        .select(col("lang"), explode(col("top")).as("e"))
-        .select(col("e.id").as("doc_id"), col("lang"))
-    }),
-
-    "q_dominant_supplier" -> ((s, dir) => {
-      // groupwise-share join-back (TPC-H Q20-adjacent): suppliers
-      // carrying ≥ 20% of a part's shipped quantity among ≥2 suppliers;
-      // the share test is exact integer arithmetic (5·q_ps ≥ q_p)
-      // r19: partkey-keyed fan-out — the (pk,sk) partial hash-aggregate
-      // ran in 3 scan tasks (per-job trace: 0.75 s), and partitioning by
-      // l_partkey is a subset of BOTH groupBy keys, so the downstream
-      // aggregates reuse the exchange instead of adding their own.
-      val ps = Scale.fanOutSmallScan(t(s, dir, "lineitem"), col("l_partkey"))
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(round(col("l_quantity") * 100).cast("long")).as("q_ps"))
-      val p = ps.groupBy(col("l_partkey").as("pk"))
-        .agg(sum(col("q_ps")).as("q_p"), count(lit(1)).as("n_supp"))
-      ps.join(p, col("l_partkey") === col("pk"))
-        .filter(col("q_ps") * 5 >= col("q_p") && col("n_supp") >= 2)
-        .select(col("l_partkey"), col("l_suppkey"), col("q_ps"), col("q_p"),
-          round(col("q_ps").cast("double") / col("q_p").cast("double"), 6).as("share"))
-    }),
-
-    // ── round-9 additions ───────────────────────────────────────────────
-
-    "q_tpch_q11" -> ((s, dir) => {
-      // TPC-H Q11 shape (important stock): per-part value for one
-      // nation-group's suppliers, HAVING value above a fraction of the
-      // GLOBAL total — the group-by-vs-global-aggregate-subquery join
-      // planner stress. Value is the exact integer product
-      // cents × centi-qty (summed in decimal(38,0): a Long sum wraps at
-      // corpus scale, DuckDB promotes to HUGEINT); the threshold test
-      // val·2000 > total is pure integer arithmetic. The supplier→nation
-      // dim chain broadcasts into the fact scan; the 1-row total
-      // broadcasts into the HAVING filter.
-      val supp = t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation").filter(col("n_regionkey") === 1)),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"))
-      val v = t(s, dir, "lineitem")
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .select(col("l_partkey"),
-          (round(col("l_extendedprice") * 100).cast("long") *
-            round(col("l_quantity") * 100).cast("long"))
-            .cast("decimal(38,0)").as("v_c4"))
-        .groupBy(col("l_partkey"))
-        .agg(sum(col("v_c4")).as("val"))
-      val total = v.agg(sum(col("val")).as("tot"))
-      v.crossJoin(broadcast(total))
-        .filter(col("val") * 2000 > col("tot"))
-        .select(col("l_partkey"),
-          round(col("val").cast("double") / 10000.0, 2).as("value"))
-    }),
-
-    "q_tpch_q20" -> ((s, dir) => {
-      // TPC-H Q20 shape (potential part promotion): a NESTED SEMI-JOIN
-      // chain — suppliers who DOMINATED (>50% of shipped qty) some
-      // 'small%' part in ship-year 1996, restricted to one region's
-      // nations. Both IN-subqueries become left_semi joins; the part
-      // filter and nation set are bounded broadcasts; only
-      // (partkey, suppkey, qty) aggregates shuffle.
-      val qps = t(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-        .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(sum(round(col("l_quantity") * 100).cast("long")).as("q_ps"))
-      val qp = qps.groupBy(col("l_partkey").as("pk")).agg(sum(col("q_ps")).as("q_p"))
-      val smallParts = t(s, dir, "part")
-        .filter(col("p_name").startsWith("small")).select(col("p_partkey"))
-      val dominantSupp = qps
-        .join(qp, col("l_partkey") === col("pk"))
-        .filter(col("q_ps") * 2 > col("q_p"))
-        .join(broadcast(smallParts), col("l_partkey") === col("p_partkey"), "left_semi")
-        .select(col("l_suppkey"))
-      val regionNations = t(s, dir, "nation").filter(col("n_regionkey") === 2)
-        .select(col("n_nationkey"))
-      t(s, dir, "supplier")
-        .join(dominantSupp, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .join(broadcast(regionNations),
-          col("s_nationkey") === col("n_nationkey"), "left_semi")
-        .select(col("s_suppkey"), col("s_name"))
-    }),
-
-    "q_tpch_q21" -> ((s, dir) => {
-      // TPC-H Q21 shape (suppliers who kept orders waiting): the
-      // exists + not-exists multi-way SELF-join on the fact table. This
-      // testdata has no commit/receipt dates, so "late" adapts to
-      // l_shipdate > o_orderdate + 1700 days (≈ the p95 ship delay —
-      // late is the exception, as in the original). A line counts iff
-      // ANOTHER supplier has a line in the same order (left_semi) and NO
-      // other supplier is late in it (left_anti) — both joins equi on
-      // orderkey with the supplier inequality as a residual condition.
-      val ord = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey"), col("o_orderdate"))
-      val late = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 1700 DAYS"))
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val others = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o2_key"), col("l_suppkey").as("o2_supp"))
-      val lateOthers = late
-        .select(col("l_orderkey").as("o3_key"), col("l_suppkey").as("o3_supp"))
-      late
-        .join(others,
-          col("l_orderkey") === col("o2_key") && col("l_suppkey") =!= col("o2_supp"),
-          "left_semi")
-        .join(lateOthers,
-          col("l_orderkey") === col("o3_key") && col("l_suppkey") =!= col("o3_supp"),
-          "left_anti")
-        .join(broadcast(t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_suppkey"), col("s_name"))
-        .agg(count(lit(1)).as("numwait"))
-    }),
-
-    "q_auc" -> ((s, dir) =>
-      // ranking quality: does `value` rank purchases above everything
-      // else? Exact Mann-Whitney AUC with average-rank ties, bucket-
-      // decomposed so no sort partition ever holds the full score range
-      Stats.aucRoc(
-        t(s, dir, "events").withColumn("label",
-          (col("event_type") === "purchase").cast("int")),
-        "value", "label")),
-
-    "q_psi" -> ((s, dir) =>
-      // drift monitor: PSI of the value distribution, weeks 3-4 vs the
-      // weeks 1-2 baseline, 10 baseline-frozen equal-width bins
-      Stats.psi(t(s, dir, "events"), "value",
-        col("ts") < lit(1705363200000000000L), bins = 10)),
-
-    "q_chi2" -> ((s, dir) =>
-      // independence audit: is the event-type mix uniform across the
-      // day of week? chi^2 + Cramer's V off one contingency aggregate
-      Stats.chi2Independence(
-        t(s, dir, "events")
-          .withColumn("dow", expr("(ts div 86400000000000L + 4) % 7")),
-        "event_type", "dow")),
-
-    "q_corr_matrix" -> ((s, dir) =>
-      // feature-redundancy screen: all pairwise Pearson correlations of
-      // the lineitem numerics from ONE pass of exact sufficient stats
-      Stats.corrMatrix(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
-
-    "q_srm" -> ((s, dir) =>
-      // experiment hygiene: do the md5 arms actually split 50/50?
-      // 1-dof chi^2 sample-ratio-mismatch gate at alpha = .01
-      Events.srmCheck(t(s, dir, "events"))),
-
-    "q_rolling_corr" -> ((s, dir) =>
-      // co-movement drift: trailing-28d correlation of daily click vs
-      // purchase volumes on the compact day frame
-      Events.rollingCorr(t(s, dir, "events"), "click", "purchase",
-        windowDays = 28, minDays = 7)),
-
-    "q_assign_ids" -> ((s, dir) =>
-      // dense surrogate keys in c_name order WITHOUT the single-task
-      // global row_number: one range exchange + per-partition stamps +
-      // a broadcast offset frame
-      Scale.assignIds(
-        t(s, dir, "customer").select(col("c_custkey"), col("c_name")),
-        Seq("c_name"))),
-
-    "q_auc_by" -> ((s, dir) =>
-      // segmented ranking quality: the same Mann-Whitney AUC, one row
-      // per day-of-week — every stage partitions by the segment too
-      Stats.aucRoc(
-        t(s, dir, "events")
-          .withColumn("label", (col("event_type") === "purchase").cast("int"))
-          .withColumn("dow", expr("(ts div 86400000000000L + 4) % 7")),
-        "value", "label", keys = Seq("dow"))),
-
-    "q_embed_cov" -> ((s, dir) =>
-      // PCA-prep: the full 64x64 embedding covariance matrix from ONE
-      // O(d^2)-state aggregate pass (never a d^2-row explode per vector)
-      Similarity.embedCovariance(t(s, dir, "embeddings"), "embedding")),
-
-    "q_project" -> ((s, dir) =>
-      // JL reduction 64 -> 16 before ANN: per-row md5-seeded projection
-      // kernel inside the scan stage — no shuffle, engine-replayable.
-      // Gate shape: posexploded to (vec_id, label, p, value) rows — the
-      // driver's pandas oracle cannot lexsort array cells (the round-9
-      // q_inverted_index rule), so the vector never leaves as an array.
-      Similarity.randomProject(
-          t(s, dir, "embeddings").filter(col("embedding").isNotNull),
-          "embedding", dim = 64, outDim = 16)
-        .select(col("vec_id"), col("label"),
-          posexplode(col("proj")).as(Seq("p", "value")))),
-
-    "q_cdf" -> ((s, dir) =>
-      // quantile-transform feature map: mid-rank empirical CDF of price
-      // within each return flag — the aucRoc bucket decomposition, so
-      // no sort partition ever holds a group's full value range
-      Stats.cdfNormalize(t(s, dir, "lineitem"), Seq("l_returnflag"),
-        "l_extendedprice")),
-
-    "q_ann_join" -> ((s, dir) => {
-      // cross-corpus retrieval: even-id vectors query the odd-id half —
-      // SRP bucket equi-join (never a cross product), cosine verify,
-      // top-3 per query
-      val all = Similarity.prepared(t(s, dir, "embeddings"), "vec_id", "embedding")
-      Similarity.annJoin(
-        all.filter(col("vec_id") % 2 === 0),
-        all.filter(col("vec_id") % 2 === 1),
-        planes = 8, dim = 64, minCos = 0.1, k = 3)
-    }),
-
-    "q_bootstrap_ci" -> ((s, dir) =>
-      // distribution-free CI of the mean event value: 32 deterministic
-      // Poisson(1) resamples in ONE aggregate pass, md5-replayable
-      Stats.bootstrapMeanCI(t(s, dir, "events"), "event_id", "value")),
-
-    "q_ab_lift_by" -> ((s, dir) =>
-      // heterogeneous treatment effects: the abLift readout per user
-      // segment (= the user's FIRST event type, the acquisition proxy)
-      Events.abLiftBy(t(s, dir, "events"), "event_type")),
-
-    "q_cohort_ltv" -> ((s, dir) =>
-      // LTV curves: cumulative purchase revenue per user by acquisition
-      // cohort (first active day) and age, exact integral micros
-      Events.cohortLtv(t(s, dir, "events"), "purchase", maxAgeDays = 28)),
-
-    "q_readability" -> ((s, dir) =>
-      // grade-level curation signal: FK readability from exact token /
-      // sentence-run / vowel-run counts, NULL (never a throw) on
-      // wordless docs
-      TextOps.readability(docs(s, dir), "doc_id", "text")),
-
-    "q_url_dedup" -> ((s, dir) =>
-      // crawl dedup: case/port/fragment/tracking-param/slash variants of
-      // the same page collapse to one canonical form (derived from real
-      // columns so the oracle canonicalizes the identical strings)
-      TextOps.urlDedup(synthUrls(s, dir), "doc_id", "url")),
-
-    "q_crawl_schedule" -> ((s, dir) =>
-      // per-host politeness waves over the same synthesized frontier:
-      // rank within host = the wave that may fetch the url (at most
-      // one per host per wave), n_queue = the hot-host diagnostic
-      TextOps.crawlSchedule(synthUrls(s, dir), "doc_id", "url", "n_chars")),
-
-    "q_link_graph" -> ((s, dir) =>
-      // the REAL crawl link graph (r19): WAT-style href extraction →
-      // host-level (src, dst, n_links) edges, over pages synthesized
-      // identically by both engines. The splices decide every
-      // resolution rule on real rows: an absolute link on every page,
-      // a relative link (%3 → self-edge), a case/port variant (%5 —
-      // host lowercased, :443 excluded by the host pattern), a mailto:
-      // (dropped) + a protocol-relative //cdn link (%4).
-      TextOps.linkGraph(linkPages(s, dir), "url", "html")),
-
-    "q_link_pagerank" -> ((s, dir) =>
-      // host centrality over the REAL link graph (r19): the same
-      // integer-exact PageRank as q_pagerank, fed by linkGraph's edge
-      // frame keyed by host STRINGS — what a crawl-ops user actually
-      // ranks hosts with
-      graft.ops.Graph.pageRank(
-        TextOps.linkGraph(linkPages(s, dir), "url", "html")
-          .select(col("src_host").as("id1"), col("dst_host").as("id2")),
-        iters = 5)
-        .select(col("doc_id").as("host"), col("rank_micro"))),
-
-    "q_link_pagerank_weighted" -> ((s, dir) =>
-      // the real-crawl centrality (r19): DIRECTED, n_links-weighted
-      // PageRank over the link-graph edges — heavy linkers donate
-      // proportionally, mass flows src → dst only
-      graft.ops.Graph.pageRankWeighted(
-        TextOps.linkGraph(linkPages(s, dir), "url", "html")
-          .select(col("src_host").as("src"), col("dst_host").as("dst"),
-            col("n_links").as("w")),
-        iters = 5)
-        .select(col("node").as("host"), col("rank_micro"))),
-
-    "q_link_pagerank_delta" -> ((s, dir) => {
-      // INCREMENTAL crawl ranking (r20): the even-doc link-graph batch
-      // is the standing crawl with persisted per-iteration rank
-      // history; the odd-doc batch arrives as a delta. The delta path
-      // recomputes only nodes within the delta's 5-hop out-reach and
-      // reads everything else back from the history — and the oracle
-      // replays the FULL recursion over the two-batch edge multiset,
-      // so equality proves the delta == a from-scratch rerank.
-      def ed(p: Int) = graft.ops.TextOps.linkGraph(
-          linkPages(s, dir, col("doc_id") % 2 === p), "url", "html")
-        .select(col("src_host").as("src"), col("dst_host").as("dst"),
-          col("n_links").as("w"))
-      val old = ed(0)
-      graft.ops.Graph.pageRankWeightedDelta(
-        old, graft.ops.Graph.pageRankWeightedHistory(old, iters = 5),
-        ed(1), iters = 5)
-        .select(col("node").as("host"), col("rank_micro"))
-    }),
-
-    "q_link_pagerank_seeded" -> ((s, dir) => {
-      // PERSONALIZED PageRank (r20): teleport restricted to the
-      // even-numbered source hosts — proximity-to-trusted-seeds
-      // ranking over the same real link graph; odd hosts appear only
-      // where seed mass actually reaches them
-      val edges = graft.ops.TextOps.linkGraph(linkPages(s, dir), "url", "html")
-        .select(col("src_host").as("src"), col("dst_host").as("dst"),
-          col("n_links").as("w"))
-      val seeds = edges.select(col("src").as("node")).distinct()
-        .filter(col("node").rlike("^src[0-9]*[02468]\\."))
-      graft.ops.Graph.pageRankPersonalized(edges, seeds, iters = 5)
-        .select(col("node").as("host"), col("rank_micro"))
-    }),
-
-    "q_anchor_text" -> ((s, dir) =>
-      // the anchor-text corpus (r19): what link text says about each
-      // TARGET host — same synthesized pages and host-resolution rules
-      // as q_link_graph; 'mail' vanishes with its mailto: target
-      TextOps.anchorTexts(linkPages(s, dir), "url", "html")),
-
-    "q_robots_parse" -> ((s, dir) => {
-      // distributed robots.txt parsing (r19): per host a deterministic
-      // REP body exercising comment stripping, the non-* agent block
-      // (excluded), empty-path no-ops (skipped), unknown keys
-      // (ignored), and an even-host-only extra rule
-      val robots = docs(s, dir)
-        .select(lower(col("source")).as("src")).distinct()
-        .select(concat(col("src"), lit(".example.org")).as("host"),
-          concat(
-            // CRLF on the /e rule line: the real-world robots.txt line
-            // ending the CR-strip must handle
-            lit("# synthetic robots\nUser-agent: special-bot\n" +
-              "Disallow: /private\nUser-agent: *\n" +
-              "Disallow: /e # keep out\r\nAllow: /en\n"),
-            when(regexp_extract(col("src"), "src([0-9]+)", 1)
-              .cast("int") % 2 === 0, lit("Disallow: /tmp\n"))
-              .otherwise(lit("")),
-            lit("Disallow:\nCrawl-delay: 10\n")).as("body"))
-      TextOps.parseRobots(robots, "host", "body")
-    }),
-
-    "q_langid_confusion" -> ((s, dir) =>
-      // router-accuracy readout (r19): gold label × heuristic langId
-      // confusion counts — the diagnostic that says how much corpus a
-      // keepLangs route would mis-route
-      docs(s, dir)
-        .groupBy(col("lang").as("lang_true"),
-          TextOps.langIdCjk(col("text")).as("lang_pred"))
-        .agg(count(lit(1)).as("n"))),
-
-    "q_nb_train" -> ((s, dir) =>
-      // multinomial Naive Bayes TRAINING (r19): the lang-routing
-      // classifier trained on the corpus itself — Laplace-smoothed
-      // micro-log weights, integer-exact
-      TextOps.trainNaiveBayes(docs(s, dir), "lang", "text")),
-
-    "q_nb_classify" -> ((s, dir) => {
-      // train → classify round trip on the same corpus: per doc the
-      // argmax label under integer micro-log scores (ties → label asc)
-      val model = TextOps.trainNaiveBayes(docs(s, dir), "lang", "text")
-      TextOps.classifyNaiveBayes(docs(s, dir), "doc_id", "text", model)
-    }),
-
-    "q_nb_incremental" -> ((s, dir) => {
-      // INCREMENTAL NB training (r20): per-slice sufficient statistics
-      // (integer counts) merged by summation, model derived from the
-      // merge — the oracle is the from-scratch full-corpus model, so
-      // equality proves the merge is exactly a batch retrain (counts
-      // are associative; batch arrival order can never matter)
-      val half = (p: Int) => TextOps.naiveBayesCounts(
-        docs(s, dir).filter(col("doc_id") % 2 === p), "lang", "text")
-      TextOps.naiveBayesFromCounts(
-        TextOps.mergeNaiveBayesCounts(half(0), half(1)))
-    }),
-
-    "q_sitemap_parse" -> ((s, dir) => {
-      // sitemap.xml → canonical frontier seeds (r19): per host a
-      // deterministic urlset whose locs exercise trimming, the
-      // scheme/port/tracking-param/trailing-slash canonical folds, a
-      // duplicate that must collapse (even hosts), and an empty loc
-      // that must drop
-      val sm = docs(s, dir)
-        .select(lower(col("source")).as("src")).distinct()
-        .select(concat(col("src"), lit(".example.org")).as("host"),
-          concat(
-            lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?><urlset>" +
-              "<url><loc>https://"), col("src"),
-            lit(".example.org/a</loc><lastmod>2024-01-01</lastmod></url>" +
-              "<url><loc>\n  HTTPS://"), col("src"),
-            lit(".example.org:443/b/?utm_source=feed&a=1  \n</loc></url>"),
-            when(regexp_extract(col("src"), "src([0-9]+)", 1)
-              .cast("int") % 2 === 0,
-              concat(lit("<url><loc>https://"), col("src"),
-                lit(".example.org/a</loc></url>"))).otherwise(lit("")),
-            lit("<url><loc></loc></url></urlset>")).as("body"))
-      TextOps.parseSitemap(sm, "host", "body")
-    }),
-
-    "q_robots_allow" -> ((s, dir) => {
-      // the REAL-INPUT frontier-consent chain (r19): robots.txt TEXT →
-      // parseRobots → crawlAllowFilter over the shared synthesized
-      // frontier. The even-host bodies encode exactly q_crawl_allow's
-      // rule ladder, so the oracle replays the ladder as VALUES — the
-      // gate proves text-parse ∘ filter == the ladder end to end
-      // (longest-prefix, tie-break, default-allow, absent-robots arms
-      // all decided by parsed rules, not synthetic frames)
-      val robots = docs(s, dir)
-        .select(lower(col("source")).as("src")).distinct()
-        .select(concat(col("src"), lit(".example.org")).as("host"),
-          concat(
-            lit("# robots\nUser-agent: special-bot\nDisallow: /secret\n"),
-            when(regexp_extract(col("src"), "src([0-9]+)", 1)
-              .cast("int") % 2 === 0,
-              lit("User-agent: *\nAllow: /\nDisallow: /e # trap\r\n" +
-                "Allow: /en\nDisallow: /f\nAllow: /f\nDisallow:\n"))
-              .otherwise(lit("")),
-            lit("Crawl-delay: 7\n")).as("body"))
-      TextOps.crawlAllowFilter(synthUrls(s, dir), "doc_id", "url",
-        TextOps.parseRobots(robots, "host", "body"))
-    }),
-
-    "q_crawl_allow" -> ((s, dir) => {
-      // robots-style allow/deny over the shared frontier: even-numbered
-      // hosts carry a rule ladder — '/' allow, '/e' deny, '/en' allow,
-      // plus a conflicting '/f' pair — so longest-prefix precedence
-      // (/en allowed THROUGH the /e deny), a mid-prefix deny (/es),
-      // the equal-length allow tie-break (/fr), the default-allow
-      // fallback (/de, /zh) and the absent-robots consent arm (odd
-      // hosts, rule_prefix null) all decide real rows. Canonical paths
-      // have trailing slashes stripped, so prefixes are slash-free.
-      val d = docs(s, dir)
-      val hosts = d
-        .select(concat(lower(col("source")), lit(".example.org")).as("host"))
-        .distinct()
-        .filter(regexp_extract(col("host"), "src([0-9]+)", 1)
-          .cast("int") % 2 === 0)
-      val rules = hosts.select(col("host"), explode(array(
-        struct(lit("/").as("prefix"), lit(true).as("allow")),
-        struct(lit("/e").as("prefix"), lit(false).as("allow")),
-        struct(lit("/en").as("prefix"), lit(true).as("allow")),
-        struct(lit("/f").as("prefix"), lit(false).as("allow")),
-        struct(lit("/f").as("prefix"), lit(true).as("allow")))).as("r"))
-        .select(col("host"), col("r.prefix").as("prefix"),
-          col("r.allow").as("allow"))
-      TextOps.crawlAllowFilter(synthUrls(s, dir), "doc_id", "url", rules)
-    }),
-
-    "q_bootstrap_lift" -> ((s, dir) => {
-      // assumption-free experiment interval: resample USERS (the md5
-      // arms' units) and read the lift CI off the sorted rep lifts
-      val byUser = t(s, dir, "events").groupBy(col("user_id"))
-        .agg((sum(round(col("value") * 1000000).cast("long"))
-          .cast("double") / 1e6).as("metric"))
-        .withColumn("arm",
-          (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long") % 2).cast("int"))
-      Stats.bootstrapLiftCI(byUser, "user_id", "arm", "metric")
-    }),
-
-    "q_psi_multi" -> ((s, dir) =>
-      // drift dashboard: PSI of all four lineitem numerics vs the
-      // pre-1996 baseline from ONE scan (staged bins, 80 count sums)
-      Stats.psiMulti(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-        col("l_shipdate") < lit("1996-01-01").cast("timestamp"), bins = 10)),
-
-    "q_survival" -> ((s, dir) =>
-      // time-to-first-purchase under right censoring: users who never
-      // purchased are censored at the corpus's last observed day —
-      // exactly the information each row carries, no optimistic drop
-      Stats.kaplanMeier(survivalFrame(s, dir), "duration", "event")),
-
-    "q_survival_by" -> ((s, dir) =>
-      // per-arm survival curves: the experiment view of time-to-convert
-      // (all windows additionally partitioned by the md5 arm)
-      Stats.kaplanMeier(survivalFrame(s, dir), "duration", "event",
-        keys = Seq("arm"))),
-
-    "q_logrank" -> ((s, dir) =>
-      // did treatment CHANGE the conversion-latency curve? The censored
-      // two-group comparison conversion RATES can't answer
-      Stats.logRank(survivalFrame(s, dir), "duration", "event", "arm")),
-
-    "q_trend_robust" -> ((s, dir) =>
-      // outlier-proof daily-volume trend: the median pairwise slope of
-      // click counts (one launch-spike day cannot move it, OLS tips)
-      Stats.theilSen(
-        t(s, dir, "events").filter(col("event_type") === "click")
-          .groupBy(expr("ts div 86400000000000L").as("day"))
-          .agg(count(lit(1)).as("n")),
-        "day", "n")),
-
-    "q_bh_adjust" -> ((s, dir) =>
-      // multiple-testing gate over a segment-readout table: BH step-up
-      // adjusted p-values (deterministic md5 pseudo-p's per segment so
-      // both engines rank the identical numbers)
-      Stats.bhAdjust(
-        docs(s, dir)
-          .select(concat(col("lang"), lit(":"), col("source")).as("tid"))
-          .distinct()
-          .withColumn("p",
-            conv(substring(md5(col("tid")), 1, 8), 16, 10).cast("double") /
-              lit(4294967296.0)),
-        "tid", "p", alpha = 0.2)),
-
-    "q_anomaly_bands" -> ((s, dir) =>
-      // robust daily volume anomalies: median +- 3*MAD of the trailing
-      // 14 observed days (today excluded), spikes inside the window
-      // cannot mask the next one
-      Events.anomalyBands(t(s, dir, "events"), k = 3.0,
-        windowDays = 14, minDays = 7)),
-
-    "q_bootstrap_ci_by" -> ((s, dir) =>
-      // per-segment mean intervals: the same one-pass Poisson bootstrap
-      // grouped by event type
-      Stats.bootstrapMeanCI(t(s, dir, "events"), "event_id", "value",
-        reps = 32, keys = Seq("event_type"))),
-
-    "q_split_quality" -> ((s, dir) =>
-      // feature-selection readout: how much does day-of-week reduce the
-      // purchase label's Gini impurity? gain = base - weighted split
-      Stats.splitQuality(
-        t(s, dir, "events")
-          .withColumn("dow", expr("(ts div 86400000000000L + 4) % 7"))
-          .withColumn("label", (col("event_type") === "purchase").cast("int")),
-        "dow", "label"))
-  )
-
-  /** Time-to-first-purchase frame shared by the survival-family gates:
-    * one row per user with (duration days, event 1/censored 0, md5 arm);
-    * never-purchasers censor at the corpus's last observed day. */
-  private def survivalFrame(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events")
-      .select(col("user_id"), expr("ts div 86400000000000L").as("day"),
-        col("event_type"))
-    val maxDay = e.agg(max(col("day")).as("__maxd"))
-    val byUser = e.groupBy(col("user_id"))
-      .agg(min(col("day")).as("__first"),
-        min(when(col("event_type") === "purchase", col("day"))).as("__fp"))
-    byUser.crossJoin(broadcast(maxDay)).select(
-      col("user_id"),
-      when(col("__fp").isNotNull, col("__fp") - col("__first"))
-        .otherwise(col("__maxd") - col("__first")).as("duration"),
-      when(col("__fp").isNotNull, lit(1)).otherwise(lit(0)).as("event"),
-      (conv(substring(md5(col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 2).cast("int").as("arm"))
+  /** Every gate, keyed by name; a name declared in two families (or twice
+    * in one) throws, naming it. */
+  private[graft] def table(families: Seq[Gate]*): Map[String, Gate] =
+    uniqueKeys(families.flatten.map(g => g.name -> g): _*)
+
+  /** Built once per JVM: perfbench looks a gate up inside every timed
+    * execution, and the table holds all 316 oracle strings. */
+  private[graft] lazy val gates: Map[String, Gate] = table(
+    ReferenceGates.gates, RelationalGates.gates, DedupGates.gates,
+    TextGates.gates, SimilarityGates.gates, EventGates.gates,
+    GraphGates.gates, StatsGates.gates, MultimodalGates.gates)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map { case (name, g) => name -> g.build }
+
+  lazy val oracleSql: Map[String, String] =
+    gates.map { case (name, g) => name -> g.oracle }
+
+  /** Throws, naming them, if any of `names` is not a gate. */
+  private[graft] def requireGates(names: Set[String]): Unit = {
+    val unknown = names -- gates.keySet
+    require(unknown.isEmpty, s"no such gate: ${unknown.toSeq.sorted.mkString(", ")}")
   }
-
-  // quantile-sketch grid shared by the query and its oracle (w must be
-  // the IDENTICAL double literal on both sides)
-  private val QSketchLo = 0.0
-  private val QSketchHi = 110000.0
-  private val QSketchBins = 1024
-  private val QSketchW = (QSketchHi - QSketchLo) / QSketchBins // 107.421875 (dyadic)
-
-  // ── DuckDB oracle mirrors ─────────────────────────────────────────────
-
-  /** The synthesized-page link-edge CTEs shared by q_link_graph /
-    * q_link_pagerank: the SQL twin of [[linkPages]] +
-    * [[graft.ops.TextOps.linkGraph]]'s resolution rules, ending at
-    * CTE `edges` (src_host, dst_host — pre-aggregation). */
-  private lazy val LinkEdgesSql: String = linkEdgesSql(batched = false)
-
-  /** `batched = true` carries `b = doc_id % 2` through pages → hrefs →
-    * edges — the two-segment multiset the q_link_pagerank_delta oracle
-    * needs (each batch's (src, dst) edges count SEPARATELY, matching
-    * the per-batch [[graft.ops.TextOps.linkGraph]] union the Spark
-    * delta path ranks). */
-  private def linkEdgesSql(batched: Boolean): String = {
-    val href = graft.ops.TextOps.HrefPattern.replace("'", "''")
-    val bp = if (batched) "doc_id % 2 AS b,\n       |    " else ""
-    val bc = if (batched) "b, " else ""
-    s"""WITH pages AS (SELECT
-       |    ${bp}'https://' || source || '.site.org/doc/' || doc_id::VARCHAR AS url,
-       |    '<html><body><a href="https://' || source || '.example.org/p'
-       |      || (doc_id % 7)::VARCHAR || '">x</a>'
-       |    || CASE WHEN doc_id % 3 = 0
-       |         THEN '<p>see <a href=''/local/page''>here</a></p>' ELSE '' END
-       |    || CASE WHEN doc_id % 5 = 0
-       |         THEN '<A HREF="HTTPS://Mirror.' || upper(source) || '.ORG:443/z">m</a>' ELSE '' END
-       |    || CASE WHEN doc_id % 4 = 0
-       |         THEN '<a href="mailto:a@ex.org">mail</a><a href="//cdn.shared.net/lib.js">cdn</a>' ELSE '' END
-       |    || '</body></html>' AS html
-       |  FROM documents),
-       |hrefs AS (SELECT $bc
-       |    lower(regexp_extract(url, '^[a-zA-Z]+://([^/:?#]+)', 1)) AS src_host,
-       |    unnest(regexp_extract_all(html, '$href', 1)) AS href
-       |  FROM pages),
-       |edges AS (SELECT ${bc}src_host,
-       |    CASE WHEN regexp_matches(href, '(?i)^https?://')
-       |      THEN lower(regexp_extract(href,
-       |        '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)', 1))
-       |    WHEN regexp_matches(href, '^//')
-       |      THEN lower(regexp_extract(href, '^//([^/:?#]+)', 1))
-       |    WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*:') THEN NULL
-       |    ELSE src_host END AS dst_host
-       |  FROM hrefs WHERE src_host <> '')
-       |""".stripMargin
-  }
-
-  /** The robots-ladder frontier-consent replay shared by q_crawl_allow
-    * (synthetic rules frame) and q_robots_allow (rules PARSED from
-    * robots.txt text — the even-host bodies encode this exact ladder,
-    * so one oracle serves both and equality proves the parse). */
-  private lazy val CrawlAllowOracleSql: String =
-    "WITH " + UrlSynthCanonSql + """,
-      |hosts AS (SELECT DISTINCT lower(source) || '.example.org' AS host
-      |  FROM documents
-      |  WHERE TRY_CAST(regexp_extract(lower(source), 'src([0-9]+)', 1)
-      |    AS INT) % 2 = 0),
-      |rules AS (SELECT host, r.prefix, r.allow FROM hosts,
-      |  (VALUES ('/', true), ('/e', false), ('/en', true),
-      |          ('/f', false), ('/f', true)) AS r(prefix, allow)),
-      |f AS (SELECT c.doc_id AS req_id, c.canonical_url,
-      |    regexp_extract(c.canonical_url, '^[a-z]+://([^/:?#]+)', 1) AS host,
-      |    coalesce(nullif(regexp_extract(c.canonical_url,
-      |      '^[a-z]+://[^/?#]*(/[^?#]*)', 1), ''), '/') AS path
-      |  FROM cu_c c),
-      |mt AS (SELECT f.req_id, r.prefix, r.allow,
-      |    row_number() OVER (PARTITION BY f.req_id
-      |      ORDER BY length(r.prefix) DESC, r.allow DESC, r.prefix ASC) AS rn
-      |  FROM f JOIN rules r ON f.host = r.host
-      |    AND starts_with(f.path, r.prefix)),
-      |b AS (SELECT req_id, prefix AS rule_prefix, allow FROM mt WHERE rn = 1)
-      |SELECT f.req_id, f.canonical_url, f.host, f.path,
-      |  coalesce(b.allow, true) AS allowed, b.rule_prefix
-      |FROM f LEFT JOIN b USING (req_id)""".stripMargin
-
-  /** Naive Bayes model CTEs (lang-labeled, over documents), ending at
-    * `model`(label, token, kind, w_micro) — the replay of
-    * [[graft.ops.TextOps.trainNaiveBayes]] shared by q_nb_train and
-    * q_nb_classify. */
-  private lazy val NbModelSql: String =
-    s"""WITH nb_dt AS (SELECT lang AS label, unnest($ToksSql) AS token
-       |  FROM documents),
-       |nb_tl AS (SELECT label, token, count(*)::BIGINT AS c
-       |  FROM nb_dt GROUP BY 1, 2),
-       |nb_lt AS (SELECT label, sum(c)::BIGINT AS n_l FROM nb_tl GROUP BY 1),
-       |nb_v AS (SELECT count(DISTINCT token)::BIGINT AS v FROM nb_tl),
-       |nb_nd AS (SELECT lang AS label, count(*)::BIGINT AS nd
-       |  FROM documents GROUP BY 1),
-       |nb_n AS (SELECT count(*)::BIGINT AS n FROM documents),
-       |model AS (
-       |  SELECT label, token, 'tok' AS kind,
-       |    round(ln((c + 1)::DOUBLE / (n_l + v)::DOUBLE) * 1e6)::BIGINT AS w_micro
-       |  FROM nb_tl JOIN nb_lt USING (label) CROSS JOIN nb_v
-       |  UNION ALL
-       |  SELECT label, '' AS token, 'unseen' AS kind,
-       |    round(ln(1.0 / (n_l + v)::DOUBLE) * 1e6)::BIGINT
-       |  FROM nb_lt CROSS JOIN nb_v
-       |  UNION ALL
-       |  SELECT label, '' AS token, 'prior' AS kind,
-       |    round(ln(nd::DOUBLE / n::DOUBLE) * 1e6)::BIGINT
-       |  FROM nb_nd CROSS JOIN nb_n)""".stripMargin
-
-  /** hex char → value, as DuckDB SQL. */
-  private def hexv(c: String) = s"(strpos('0123456789abcdef', $c) - 1)"
-
-  /** first `n` hex chars of md5 string expr `m` (1-based `off`) as BIGINT. */
-  private def hexToLong(m: String, off: Int, n: Int) =
-    s"list_sum(list_transform(range(1, ${n + 1}), i -> ${hexv(s"$m[i + ${off - 1}]")}::BIGINT * (1::BIGINT << (4*($n - i)))))"
-
-  /** Shared CTE chain of the boilerplate oracles: the deterministic
-    * nav/footer splice, per-source boiler-line sets, and the kept-line
-    * frame `j` — two finals read it (stats vs emitted text). */
-  /** DuckDB replay of [[graft.ops.TextOps.boilerplateClean]]'s shared
-    * frame over ANY prior CTE `src`(doc_id, source, text): emits CTEs
-    * `bp_d` (trimmed non-empty lines) … `bp_j` (doc_id, source, lines,
-    * kept). Parameterized (r17) so the composed crawl-prep oracle
-    * replays the SAME chain the standalone boilerplate gates pin. */
-  private def boilerplateCtesSql(src: String, minDocFrac: Double = 0.4): String =
-    s"""bp_d AS (SELECT doc_id, source,
-        |    list_filter(list_transform(string_split(text, chr(10)),
-        |      l -> trim(l)), l -> l <> '') AS lines
-        |  FROM $src),
-        |bp_lh AS (SELECT DISTINCT doc_id, source, lhash FROM bp_d,
-        |    unnest(list_transform(lines, l -> md5(l))) AS t(lhash)),
-        |bp_sd AS (SELECT source, count(DISTINCT doc_id) AS n_docs
-        |  FROM $src GROUP BY source),
-        |bp_bf AS (SELECT source, lhash, count(DISTINCT doc_id) AS n_with
-        |  FROM bp_lh GROUP BY source, lhash),
-        |bp_b AS (SELECT bp_bf.source, bp_bf.lhash FROM bp_bf JOIN bp_sd USING (source)
-        |  WHERE n_with >= 2
-        |    AND n_with::DOUBLE / n_docs::DOUBLE >= $minDocFrac),
-        |bp_bs AS (SELECT source, list(lhash) AS bh FROM bp_b GROUP BY source),
-        |bp_j AS (SELECT d.doc_id, d.source, d.lines,
-        |    list_filter(d.lines,
-        |      l -> NOT list_contains(coalesce(bs.bh, []), md5(l))) AS kept
-        |  FROM bp_d d LEFT JOIN bp_bs bs ON d.source = bs.source)""".stripMargin
-
-  private val BoilerplateChainSql =
-    """WITH m AS (SELECT doc_id, source,
-        |    CASE WHEN doc_id % 2 = 0 THEN 'NAV HOME ABOUT CONTACT' || chr(10)
-        |         ELSE '' END || text || chr(10) || 'copyright ' || source AS text
-        |  FROM documents),
-        |""".stripMargin + boilerplateCtesSql("m")
-
-  private val ToksSql = "regexp_extract_all(lower(text), '[a-z0-9]+')"
-  private val ShinglesSql =
-    """CASE WHEN len(toks) >= 3
-      | THEN list_transform(range(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-      | ELSE [array_to_string(toks, ' ')] END""".stripMargin
-  /** Kirsch-Mitzenmacher replay: a/b = unsigned 32-bit halves of md5(s)
-    * (hex chars 1-8 / 9-16); hash_j = (a + j*b) mod 2^32. Must equal
-    * [[graft.functions.MinHashSignature]] bit-for-bit. */
-  private val SigSql =
-    s"""list_transform(range(0, 8), j -> list_min(list_transform(sh,
-       | s -> (${hexToLong("md5(s)", 1, 8)} + j * ${hexToLong("md5(s)", 9, 8)}) & 4294967295)))""".stripMargin
-  private val BandsSql =
-    "list_transform(range(0, 4), b -> md5(b || ':' || sig[2*b+1]::VARCHAR || ',' || sig[2*b+2]::VARCHAR))"
-
-  /** 64-bit SimHash bit-vote over a `hashes` md5-hex list column — shared
-    * by q_simhash and q_simhash_pairs so the signature and the pairing
-    * can never drift apart. */
-  private val SimhashSigSql =
-    s"""array_to_string(list_transform(range(0, 64), b ->
-       |  CASE WHEN coalesce(list_sum(list_transform(hashes, h ->
-       |    2 * ((${hexv("h[(b // 4) + 1]")} // (CASE b % 4 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8 END)) % 2) - 1)), 0) >= 0
-       |  THEN '1' ELSE '0' END), '')""".stripMargin
-
-  private val PairsCte =
-    s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-       |sh_t AS (SELECT doc_id, $ShinglesSql AS sh FROM toks_t),
-       |sig_t AS (SELECT doc_id, $SigSql AS sig FROM sh_t),
-       |bands_t AS (SELECT doc_id, unnest($BandsSql) AS band_key FROM sig_t),
-       |pairs_t AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-       |  FROM bands_t a JOIN bands_t b ON a.band_key = b.band_key AND a.doc_id < b.doc_id)""".stripMargin
-
-  /** DuckDB: (vec_id, v double[], nrm) with left-fold norm. */
-  private val EmbCte =
-    """WITH c AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-      |n AS (SELECT vec_id, v,
-      |  sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x*x)), (a, x) -> a + x)) AS nrm
-      |  FROM c)""".stripMargin
-
-  /** DuckDB twin of [[graft.ops.TextOps.gopherQualityFlags]] over the
-    * q_gopher_quality splice — per-doc metrics + pass flags + keep;
-    * shared by q_gopher_quality (verbatim) and q_filter_report
-    * (aggregated per source). */
-  /** The Gopher battery over ANY prior CTE `src`(doc_id, text):
-    * parameterized (r17) CTE chain `gf_d` → `gf_s` → `gf_flags`
-    * (doc_id, metrics, pass flags, keep) — shared by the standalone
-    * [[GopherFlagsSql]] gate and the composed crawl-prep oracle so the
-    * rule formulas can never drift between the two. */
-  private def gopherCtesSql(src: String): String = {
-    val stops = TextOps.EN_STOP.map(w => s"'$w'").mkString("[", ", ", "]")
-    // rule bounds interpolated from the ONE shared constant set
-    // (TextOps.Gopher*) so the oracle can never drift from the frame
-    // and streaming-column ops (the r15 advice item)
-    val (mlMin, mlMax) = (TextOps.GopherMeanLenMin, TextOps.GopherMeanLenMax)
-    val (syMax, buMax) = (TextOps.GopherSymbolMax, TextOps.GopherBulletMax)
-    val (elMax, alMin) = (TextOps.GopherEllipsisMax, TextOps.GopherAlphaMin)
-    val stMin = TextOps.GopherStopwordsMin
-    s"""gf_d AS (SELECT doc_id, text,
-         |    list_filter(string_split_regex(text, '\\s+'), w -> w <> '') AS words,
-         |    list_filter(list_transform(string_split(text, chr(10)),
-         |      l -> trim(l)), l -> l <> '') AS lines
-         |  FROM $src),
-         |gf_s AS (SELECT doc_id,
-         |    len(words) AS n_words,
-         |    round(CASE WHEN len(words) > 0
-         |      THEN list_reduce(list_prepend(0::BIGINT,
-         |          list_transform(words, w -> length(w)::BIGINT)),
-         |        (a, b) -> a + b)::DOUBLE / len(words)::DOUBLE
-         |      ELSE 0.0 END, 6) AS mean_word_len,
-         |    round(CASE WHEN len(words) > 0
-         |      THEN ((length(text) - length(replace(text, '#', '')))
-         |        + (length(text) - length(replace(text, '...', ''))) / 3)::DOUBLE
-         |        / len(words)::DOUBLE
-         |      ELSE 0.0 END, 6) AS symbol_ratio,
-         |    round(CASE WHEN len(lines) > 0
-         |      THEN len(list_filter(lines, l -> starts_with(l, '-')
-         |          OR starts_with(l, '*') OR starts_with(l, '•')))::DOUBLE
-         |        / len(lines)::DOUBLE
-         |      ELSE 0.0 END, 6) AS bullet_ratio,
-         |    round(CASE WHEN len(lines) > 0
-         |      THEN len(list_filter(lines, l -> ends_with(l, '...')))::DOUBLE
-         |        / len(lines)::DOUBLE
-         |      ELSE 0.0 END, 6) AS ellipsis_ratio,
-         |    round(CASE WHEN len(words) > 0
-         |      THEN len(list_filter(words, w -> regexp_matches(w, '[a-zA-Z]')))::DOUBLE
-         |        / len(words)::DOUBLE
-         |      ELSE 0.0 END, 6) AS alpha_ratio,
-         |    len(list_intersect(list_distinct(list_transform(words, w -> lower(w))),
-         |      $stops)) AS n_stopwords
-         |  FROM gf_d),
-         |gf_flags AS (SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_ratio,
-         |  ellipsis_ratio, alpha_ratio, n_stopwords,
-         |  (n_words >= 20 AND n_words <= 100000) AS pass_words,
-         |  (mean_word_len >= $mlMin AND mean_word_len <= $mlMax) AS pass_mean_len,
-         |  (symbol_ratio <= $syMax) AS pass_symbols,
-         |  (bullet_ratio <= $buMax) AS pass_bullets,
-         |  (ellipsis_ratio <= $elMax) AS pass_ellipsis,
-         |  (alpha_ratio >= $alMin) AS pass_alpha,
-         |  (n_stopwords >= $stMin) AS pass_stopwords,
-         |  (n_words >= 20 AND n_words <= 100000
-         |    AND mean_word_len >= $mlMin AND mean_word_len <= $mlMax
-         |    AND symbol_ratio <= $syMax AND bullet_ratio <= $buMax
-         |    AND ellipsis_ratio <= $elMax AND alpha_ratio >= $alMin
-         |    AND n_stopwords >= $stMin) AS keep
-         |  FROM gf_s)""".stripMargin
-  }
-
-  private lazy val GopherFlagsSql: String =
-    s"""WITH m AS (SELECT doc_id,
-         |    text || CASE WHEN doc_id % 7 = 0
-         |      THEN chr(10) || '- alpha bullet' || chr(10) || '* beta bullet'
-         |        || chr(10) || '##############################... ... ...'
-         |      ELSE '' END AS text
-         |  FROM documents),
-         |""".stripMargin + gopherCtesSql("m") + "\nSELECT * FROM gf_flags"
-
-  // the \x{...} char classes are the SAME pattern text the Spark side
-  // compiles (Java regex and RE2 both accept them)
-  private val KanaSql = """[\x{3040}-\x{309F}\x{30A0}-\x{30FF}]"""
-  private val HangulSql = """[\x{1100}-\x{11FF}\x{3130}-\x{318F}\x{AC00}-\x{D7AF}]"""
-  private val HanSql = """[\x{3400}-\x{4DBF}\x{4E00}-\x{9FFF}\x{F900}-\x{FAFF}]"""
-  private val CjkSql = """[\x{1100}-\x{11FF}\x{3040}-\x{309F}\x{30A0}-\x{30FF}""" +
-    """\x{3130}-\x{318F}\x{3400}-\x{4DBF}\x{4E00}-\x{9FFF}""" +
-    """\x{AC00}-\x{D7AF}\x{F900}-\x{FAFF}]"""
-
-  /** DuckDB replay of [[graft.ops.TextOps.langIdCjk]] over ANY prior
-    * CTE `src`(doc_id, text): parameterized (r17) chain `lg_c` (script
-    * char counts + tokens) → `lg_s` (+ stopword votes) → `lg`
-    * (doc_id, lang) — shared by the standalone q_langid_cjk gate and
-    * the composed crawl-prep oracle. `lg_s` keeps text and the counts
-    * so consumers can derive the CJK-aware token count. */
-  private def langCjkCtesSql(src: String): String = {
-    def hits(words: Seq[String]) =
-      s"len(list_filter(toks, t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))"
-    s"""lg_c AS (SELECT doc_id, text,
-       |    length(text) - length(regexp_replace(text, '$KanaSql', '', 'g')) AS n_kana,
-       |    length(text) - length(regexp_replace(text, '$HangulSql', '', 'g')) AS n_hangul,
-       |    length(text) - length(regexp_replace(text, '$HanSql', '', 'g')) AS n_han,
-       |    length(text) - length(regexp_replace(text, '$CjkSql', '', 'g')) AS n_cjk,
-       |    $ToksSql AS toks
-       |  FROM $src),
-       |lg_s AS (SELECT doc_id, text, n_kana, n_hangul, n_han, n_cjk,
-       |  ${hits(TextOps.EN_STOP)} AS s_en, ${hits(TextOps.ES_STOP)} AS s_es,
-       |  ${hits(TextOps.FR_STOP)} AS s_fr, ${hits(TextOps.DE_STOP)} AS s_de
-       |  FROM lg_c),
-       |lg AS (SELECT doc_id, CASE
-       |  WHEN n_kana > 0 THEN 'ja'
-       |  WHEN n_hangul > 0 THEN 'ko'
-       |  WHEN n_han > 0 THEN 'zh'
-       |  WHEN s_en > 0 AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_de THEN 'en'
-       |  WHEN s_es > 0 AND s_es >= s_fr AND s_es >= s_de THEN 'es'
-       |  WHEN s_fr > 0 AND s_fr >= s_de THEN 'fr'
-       |  WHEN s_de > 0 THEN 'de'
-       |  ELSE 'und' END AS lang
-       |  FROM lg_s)""".stripMargin
-  }
-
-  /** DuckDB replay of [[graft.ops.TextOps.redactPii]] over a `text`
-    * expression: [[graft.ops.TextOps.redact]]'s email/URL masks, then
-    * the [[graft.ops.TextOps.PiiPatterns]] fold in declared order —
-    * shared by q_redact_pii and the composed crawl-prep oracle. */
-  private def piiRedactSql(e0: String): String = {
-    var e = s"regexp_replace(regexp_replace($e0, " +
-      "'[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-z]{2,}', '<EMAIL>', 'g'), " +
-      "'https?://[^\\s]+', '<URL>', 'g')"
-    graft.ops.TextOps.PiiPatterns.foreach { case (pat, repl) =>
-      e = s"regexp_replace($e, '$pat', '$repl', 'g')"
-    }
-    e
-  }
-
-  /** Shared URL-frontier synthesis + canonicalization (the
-    * q_url_dedup / q_crawl_schedule twin of [[synthUrls]] +
-    * [[graft.ops.TextOps.canonicalUrl]]): emits CTEs `cu_d` (doc_id,
-    * n_chars, url), `cu_p` (parsed parts) and `cu_c` (doc_id,
-    * canonical_url). */
-  private val UrlSynthCanonSql: String =
-    """cu_d AS (SELECT doc_id, n_chars,
-      |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END)
-      |    || (CASE WHEN doc_id % 3 = 0 THEN upper(source) ELSE source END)
-      |    || '.example.org'
-      |    || (CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END)
-      |    || '/' || lang
-      |    || (CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END)
-      |    || (CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed&b=2&a=1'
-      |        WHEN doc_id % 4 = 1 THEN '?a=1&b=2' ELSE '' END)
-      |    || (CASE WHEN doc_id % 7 = 0 THEN '#frag' ELSE '' END) AS url
-      |  FROM documents),
-      |cu_p AS (SELECT doc_id,
-      |    lower(regexp_extract(url, '^([a-zA-Z]+)://', 1)) AS scheme,
-      |    lower(regexp_extract(url, '^[a-zA-Z]+://([^/:?#]+)', 1)) AS host,
-      |    regexp_extract(url, '^[a-zA-Z]+://[^/:?#]+:([0-9]+)', 1) AS port,
-      |    regexp_replace(regexp_extract(url, '^[a-zA-Z]+://[^/?#]*([^?#]*)', 1),
-      |      '/+$', '') AS path,
-      |    regexp_extract(url, '\?([^#]*)', 1) AS query
-      |  FROM cu_d),
-      |cu_c AS (SELECT doc_id,
-      |    scheme || '://' || host
-      |    || (CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-      |        OR (scheme = 'https' AND port = '443') THEN ''
-      |        ELSE ':' || port END)
-      |    || path
-      |    || (CASE WHEN kq = '' THEN '' ELSE '?' || kq END) AS canonical_url
-      |  FROM (SELECT *, coalesce(array_to_string(list_sort(list_filter(
-      |      string_split(query, '&'),
-      |      q -> NOT regexp_matches(q, '^(utm_[^=]*|ref|fbclid|gclid)='))),
-      |      '&'), '') AS kq FROM cu_p))""".stripMargin
-
-  /** The composed crawl-chain oracle (shared by q_crawl_clean and
-    * q_crawl_funnel): the SAME page synthesis as the Spark gate
-    * ([[crawlPages]]), then extract → normalize → boilerplate →
-    * langId-route → Gopher-gate → PII → exact dedup → near-dup drop,
-    * each stage the parameterized twin of its standalone gate's
-    * fragment. Ends at CTE `fin` (the survivors); consumers append
-    * their own final SELECT. Assembled by CONCATENATION (not
-    * interpolation inside stripMargin: the gopher fragment has '||'
-    * continuation lines the outer margin strip would mangle — the
-    * q_filter_report note). */
-  /** Parameterized form: `docWhere` filters the documents feeding the
-    * synthesized pages. Since r20 both crawl gates run FULL-size
-    * (docWhere = "true"): the Spark side shares ONE chain invocation
-    * between them (crawlStagesShared), so the r18/r19 half-slices —
-    * which existed only to halve a 2× chain cost — are gone and each
-    * gate alone covers every splice family. */
-  private def crawlChainSql(docWhere: String): String =
-    s"""WITH pages AS (SELECT doc_id, source,
-       |  '<html><!-- crawl & chrome --><head><title>T' || doc_id::VARCHAR
-       |  || '</title><style>body { color: #000; }</style></head><body><nav><ul><li>Home</li><li>Docs</li></ul></nav><h1>Doc ' || doc_id::VARCHAR
-       |  || '</h1><p>'
-       |  || CASE WHEN doc_id % 20 = 0 THEN '日本語のテキストです '
-       |       WHEN doc_id % 20 = 1 THEN '한국어 텍스트 '
-       |       WHEN doc_id % 20 = 2 THEN '中文文本内容 ' ELSE '' END
-       |  || text
-       |  || CASE WHEN doc_id % 11 = 0 THEN ' call 555-867-5309 or +1 (415) 555-2671 now, card 4111 1111 1111 1111, host 10.0.255.254, id 1234567890 stays' ELSE '' END
-       |  || CASE WHEN doc_id % 9 = 0 THEN ' ' || '$NormJunk' ELSE '' END
-       |  || '</p><div>site notice ' || source
-       |  || '</div><div class="tail">Tail &amp; entities &lt;b&gt; &quot;q&quot;&nbsp;end</div><table><tr><td>r' || doc_id::VARCHAR
-       |  || '</td><td>c2</td></tr></table><footer>(c) example</footer></body></html>' AS html
-       |  FROM documents WHERE $docWhere),
-       |x AS (SELECT doc_id, source, ${extractHtmlSql("html")} AS t0 FROM pages),
-       |nrm AS (SELECT doc_id, source, ${normalizeSql("t0")} AS text FROM x),
-       |""".stripMargin +
-    boilerplateCtesSql("nrm") + ",\n" +
-    """bt AS (SELECT doc_id, coalesce(array_to_string(kept, chr(10)), '') AS text FROM bp_j),
-      |""".stripMargin +
-    langCjkCtesSql("bt") + ",\n" +
-    """keepl AS (SELECT lg.doc_id, lg.lang, bt.text FROM lg JOIN bt USING (doc_id)
-      |  WHERE lg.lang IN ('en')),
-      |""".stripMargin +
-    gopherCtesSql("keepl") + ",\n" +
-    s"""gated AS (SELECT k.doc_id, k.lang, k.text FROM keepl k
-       |  JOIN gf_flags f USING (doc_id) WHERE f.keep),
-       |pii AS (SELECT doc_id, lang, ${piiRedactSql("text")} AS text FROM gated),
-       |ew AS (SELECT min(doc_id) AS doc_id FROM pii GROUP BY md5(text)),
-       |surv AS (SELECT p.doc_id, p.lang, p.text FROM pii p JOIN ew ON p.doc_id = ew.doc_id),
-       |tk AS (SELECT doc_id, $ToksSql AS toks FROM surv),
-       |sh_t AS (SELECT doc_id, $ShinglesSql AS sh FROM tk),
-       |sig_t AS (SELECT doc_id, $SigSql AS sig FROM sh_t),
-       |bands_t AS (SELECT doc_id, unnest($BandsSql) AS band_key FROM sig_t),
-       |pairs_t AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-       |  FROM bands_t a JOIN bands_t b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-       |dsh AS (SELECT doc_id, list_distinct(sh) AS dsh FROM sh_t),
-       |drops AS (SELECT DISTINCT p.id2 AS doc_id
-       |  FROM pairs_t p JOIN dsh a ON p.id1 = a.doc_id JOIN dsh b ON p.id2 = b.doc_id
-       |  WHERE round(len(list_intersect(a.dsh, b.dsh))::DOUBLE /
-       |    (len(a.dsh) + len(b.dsh) - len(list_intersect(a.dsh, b.dsh)))::DOUBLE, 6) >= 0.8),
-       |fin AS (SELECT doc_id, lang, text FROM surv
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM drops))""".stripMargin
-
-  /** DuckDB twin of [[graft.ops.Similarity.annIvfRefit]]: deterministic
-    * md5-order seed draw, CROSS JOIN + row_number argmax assignment,
-    * per-cell avg refit (micro-rounded), top-`nprobe` routing, top-1
-    * in-probed-cells search. */
-  private def ivfRefitOracleSql(nprobe: Int): String =
-    s"""$EmbCte,
-       |nn AS (SELECT vec_id, v, nrm FROM n
-       |  WHERE v IS NOT NULL AND len(v) > 0),
-       |seeds AS (SELECT (row_number() OVER (
-       |      ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::INT AS cell,
-       |    v AS sv, nrm AS snrm
-       |  FROM (SELECT vec_id, v, nrm FROM nn
-       |        ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8)),
-       |sc AS (SELECT nn.vec_id, s.cell,
-       |    round(${dotSql("nn.v", "s.sv")} / (nn.nrm * s.snrm), 6) AS ccos
-       |  FROM nn CROSS JOIN seeds s),
-       |asg AS (SELECT vec_id, cell FROM (
-       |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-       |      ORDER BY ccos DESC, cell ASC) AS rn FROM sc)
-       |  WHERE rn = 1),
-       |e AS (SELECT a.cell, idx, avg(v[idx]) AS cx
-       |  FROM nn JOIN asg a ON nn.vec_id = a.vec_id,
-       |    unnest(range(1, len(v) + 1)) AS t(idx)
-       |  GROUP BY a.cell, idx),
-       |cent AS (SELECT cell AS c_cell,
-       |    list_transform(list(CAST(round(cx * 1000000) AS BIGINT)
-       |      ORDER BY idx), x -> x / 1000000.0) AS cv
-       |  FROM e GROUP BY cell),
-       |cvn AS (SELECT c_cell, cv,
-       |    sqrt(list_reduce(list_prepend(0.0, list_transform(cv, x -> x*x)),
-       |      (a, x) -> a + x)) AS cnrm
-       |  FROM cent),
-       |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM nn WHERE vec_id < 10),
-       |qc AS (SELECT q_id, qv, qnrm, c_cell AS qcell FROM (
-       |    SELECT q.q_id, q.qv, q.qnrm, cvn.c_cell,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY round(${dotSql("q.qv", "cvn.cv")} / (q.qnrm * cvn.cnrm), 6) DESC,
-       |          cvn.c_cell ASC) AS rn
-       |    FROM q CROSS JOIN cvn)
-       |  WHERE rn <= $nprobe),
-       |scored AS (SELECT qc.q_id, a.cell, nn.vec_id AS neighbor_id,
-       |    round(${dotSql("nn.v", "qc.qv")} / (nn.nrm * qc.qnrm), 6) AS cos
-       |  FROM nn JOIN asg a ON nn.vec_id = a.vec_id
-       |  JOIN qc ON a.cell = qc.qcell AND nn.vec_id <> qc.q_id)
-       |SELECT q_id, cell, neighbor_id, cos FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY q_id
-       |    ORDER BY cos DESC, neighbor_id ASC) AS rn
-       |  FROM scored)
-       |WHERE rn = 1""".stripMargin
-
-  /** Shared BPE oracle chain: ascending-rank replay of the pinned
-    * merges table (== graft.functions.BpeEncode's min-rank loop for any
-    * well-formed table). Each symbol is wrapped `|s|` — the string is a
-    * concatenation of wrapped symbols (`|a||a||a|`) — so ONE LTR
-    * non-overlapping replace of `|x||y|` → `|xy|` per rank IS the
-    * canonical leftmost-nonoverlapping merge-all pass: every symbol
-    * carries its own delimiters and back-to-back occurrences share
-    * nothing (the r16 singly-delimited two-pass form under-merged even
-    * self-pair runs ≥ 6). Encodes DISTINCT words once via a recursive
-    * CTE, joins back; ends with `agg` (doc_id → n_bpe_real, all_toks)
-    * and keeps `toks_t` visible. */
-  private def bpeChainSql: String = {
-    val mv = graft.ops.TextOps.BpeGateMerges.zipWithIndex
-      .map { case ((x, y), i) => s"($i, '$x', '$y')" }.mkString(", ")
-    val m = graft.ops.TextOps.BpeGateMerges.size
-    s"""WITH RECURSIVE mg(rank, x, y) AS (VALUES $mv),
-       |toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-       |wt AS (SELECT doc_id, toks[i] AS word, i AS ord
-       |  FROM toks_t, unnest(range(1, len(toks) + 1)) AS u(i)),
-       |w AS (SELECT DISTINCT word FROM wt),
-       |enc AS (
-       |  SELECT word,
-       |    '|' || array_to_string(list_transform(
-       |      range(1, len(word) + 1), i -> word[i]), '||') || '|' AS s,
-       |    0 AS r
-       |  FROM w
-       |  UNION ALL
-       |  SELECT enc.word,
-       |    replace(enc.s,
-       |      '|' || mg.x || '||' || mg.y || '|', '|' || mg.x || mg.y || '|'),
-       |    enc.r + 1
-       |  FROM enc JOIN mg ON mg.rank = enc.r),
-       |fin AS (SELECT word,
-       |    list_filter(string_split(s, '|'), t -> t <> '') AS wtoks
-       |  FROM enc WHERE r = $m),
-       |agg AS (SELECT doc_id,
-       |    sum(len(wtoks)) AS n_bpe_real,
-       |    string_agg(array_to_string(wtoks, ' '), ' ' ORDER BY ord) AS all_toks
-       |  FROM wt JOIN fin USING (word) GROUP BY doc_id)""".stripMargin
-  }
-
-  /** Byte-level twin of [[bpeChainSql]] (r18): the toks CTE is the
-    * GPT-2-style pre-tokenizer (the SAME PreTokenPattern constant,
-    * quote-escaped) over printable-ASCII-minus-'|' projected text,
-    * each pre-token byte-mapped (identity except space→'Ġ' on this
-    * domain), then the identical wrapped-symbol ascending-rank replay
-    * under the pinned BYTE-LEVEL merges. Ends with `agg`
-    * (doc_id → n_bpe, all_toks), keeps `toks_t` visible. */
-  /** The q_bpe_specials oracle: [[bpeByteReplaySql]]'s word-encode
-    * recursion over TWO constructed segments per doc (ascii text+probe;
-    * uppercased ascii 40-char prefix), assembled as
-    * seg1 ++ [E] ++ seg2 ++ [E, E] where E = 256 + |merges| is the
-    * special's id under the byteLevelVocabWithSpecials numbering. */
-  private def bpeByteSegSpecialsSql: String = {
-    val pat = graft.ops.TextOps.PreTokenPattern.replace("'", "''")
-    val probe = graft.ops.TextOps.PreTokenProbe.replace("'", "''")
-    val mv = graft.ops.TextOps.BpeByteGateMerges.zipWithIndex
-      .map { case ((x, y), i) => s"($i, '$x', '$y')" }.mkString(", ")
-    val m = graft.ops.TextOps.BpeByteGateMerges.size
-    val eotId = 256 + m
-    val vocab = graft.ops.TextOps
-      .byteLevelVocab(graft.ops.TextOps.BpeByteGateMerges)
-    val vv = vocab.toSeq.sortBy(_._2)
-      .map { case (t, i) => s"('${t.replace("'", "''")}', $i)" }
-      .mkString(", ")
-    s"""WITH RECURSIVE mg(rank, x, y) AS (VALUES $mv),
-       |vv(tok, id) AS (VALUES $vv),
-       |segs AS (
-       |  SELECT doc_id, 1 AS seg, list_transform(
-       |      regexp_extract_all(
-       |        regexp_replace(text || '$probe', '[^ -~]|\\|', '', 'g'),
-       |        '$pat', 0), t -> replace(t, ' ', 'Ġ')) AS toks
-       |    FROM documents
-       |  UNION ALL
-       |  SELECT doc_id, 2, list_transform(
-       |      regexp_extract_all(
-       |        upper(regexp_replace(text[1:40], '[^ -~]|\\|', '', 'g')),
-       |        '$pat', 0), t -> replace(t, ' ', 'Ġ'))
-       |    FROM documents),
-       |wt AS (SELECT doc_id, seg, toks[i] AS word, i AS ord
-       |  FROM segs, unnest(range(1, len(toks) + 1)) AS u(i)),
-       |w AS (SELECT DISTINCT word FROM wt),
-       |enc AS (
-       |  SELECT word,
-       |    '|' || array_to_string(list_transform(
-       |      range(1, len(word) + 1), i -> word[i]), '||') || '|' AS s,
-       |    0 AS r
-       |  FROM w
-       |  UNION ALL
-       |  SELECT enc.word,
-       |    replace(enc.s,
-       |      '|' || mg.x || '||' || mg.y || '|', '|' || mg.x || mg.y || '|'),
-       |    enc.r + 1
-       |  FROM enc JOIN mg ON mg.rank = enc.r),
-       |fin AS (SELECT word,
-       |    list_filter(string_split(s, '|'), t -> t <> '') AS wtoks
-       |  FROM enc WHERE r = $m),
-       |wtok AS (SELECT word, wtoks[i] AS tok, i AS tord
-       |  FROM fin, unnest(range(1, len(wtoks) + 1)) AS u(i)),
-       |wids AS (SELECT word, list(vv.id ORDER BY wtok.tord) AS ids
-       |  FROM wtok JOIN vv ON vv.tok = wtok.tok GROUP BY word),
-       |aggi AS (SELECT doc_id, seg,
-       |    flatten(list(ids ORDER BY ord)) AS ids
-       |  FROM wt JOIN wids USING (word) GROUP BY doc_id, seg),
-       |asm AS (SELECT d.doc_id, flatten([
-       |    coalesce(a1.ids, []::INT[]), [$eotId],
-       |    coalesce(a2.ids, []::INT[]), [$eotId, $eotId]]) AS ids
-       |  FROM documents d
-       |  LEFT JOIN aggi a1 ON a1.doc_id = d.doc_id AND a1.seg = 1
-       |  LEFT JOIN aggi a2 ON a2.doc_id = d.doc_id AND a2.seg = 2)
-       |SELECT doc_id, len(ids)::INT AS n_bpe,
-       |  list_reduce(list_prepend(0::BIGINT,
-       |    list_transform(ids, x -> x::BIGINT)), (a, b) -> a + b)::BIGINT
-       |    AS ids_sum,
-       |  md5(array_to_string(list_transform(ids, x -> x::VARCHAR), ' '))
-       |    AS ids_md5
-       |FROM asm""".stripMargin
-  }
-
-  private def bpeByteReplaySql: String = {
-    val pat = graft.ops.TextOps.PreTokenPattern.replace("'", "''")
-    val probe = graft.ops.TextOps.PreTokenProbe.replace("'", "''")
-    val mv = graft.ops.TextOps.BpeByteGateMerges.zipWithIndex
-      .map { case ((x, y), i) => s"($i, '$x', '$y')" }.mkString(", ")
-    val m = graft.ops.TextOps.BpeByteGateMerges.size
-    s"""WITH RECURSIVE mg(rank, x, y) AS (VALUES $mv),
-       |toks_t AS (SELECT doc_id, list_transform(
-       |    regexp_extract_all(
-       |      regexp_replace(text || '$probe', '[^ -~]|\\|', '', 'g'),
-       |      '$pat', 0), t -> replace(t, ' ', 'Ġ')) AS toks
-       |  FROM documents),
-       |wt AS (SELECT doc_id, toks[i] AS word, i AS ord
-       |  FROM toks_t, unnest(range(1, len(toks) + 1)) AS u(i)),
-       |w AS (SELECT DISTINCT word FROM wt),
-       |enc AS (
-       |  SELECT word,
-       |    '|' || array_to_string(list_transform(
-       |      range(1, len(word) + 1), i -> word[i]), '||') || '|' AS s,
-       |    0 AS r
-       |  FROM w
-       |  UNION ALL
-       |  SELECT enc.word,
-       |    replace(enc.s,
-       |      '|' || mg.x || '||' || mg.y || '|', '|' || mg.x || mg.y || '|'),
-       |    enc.r + 1
-       |  FROM enc JOIN mg ON mg.rank = enc.r),
-       |fin AS (SELECT word,
-       |    list_filter(string_split(s, '|'), t -> t <> '') AS wtoks
-       |  FROM enc WHERE r = $m),
-       |agg AS (SELECT doc_id,
-       |    sum(len(wtoks)) AS n_bpe,
-       |    string_agg(array_to_string(wtoks, ' '), ' ' ORDER BY ord) AS all_toks
-       |  FROM wt JOIN fin USING (word) GROUP BY doc_id)""".stripMargin
-  }
-
-  /** The deterministic junk splice the q_normalize_text gate appends to
-    * every ninth doc: zero-width space, curly quotes, em dash,
-    * ellipsis, 'Ã©'/'â€™' mojibake, 'Â'+NBSP, and a BEL control char.
-    * One Scala constant feeds BOTH engines so the bytes are identical. */
-  private val NormJunk =
-    "​smart “quotes” — dash… " +
-      "cafÃ© aâ€™b tailÂ end"
-
-  /** DuckDB replay of [[graft.ops.TextOps.normalizeUnicode]]: the same
-    * ordered step list, each a global regexp_replace; replacements via
-    * chr() where a literal would hit DuckDB's no-escape strings. */
-  private def normalizeSql(e0: String): String =
-    graft.ops.TextOps.UnicodeNormSteps.foldLeft(e0) { case (e, (pat, repl)) =>
-      val r = repl match {
-        case "\n" => "chr(10)"
-        case "'" => "chr(39)"
-        case other => s"'$other'"
-      }
-      s"regexp_replace($e, '$pat', $r, 'g')"
-    }
-
-  /** DuckDB replay of [[graft.ops.TextOps.extractHtmlText]]: the same
-    * ordered step list from [[graft.ops.TextOps.Html]], each a
-    * global-flag regexp_replace (RE2 — no backreferences, hence one
-    * literal pattern per container tag) or a plain replace for the
-    * entity decode (`&amp;` last). */
-  private def extractHtmlSql(e0: String): String = {
-    def rr(e: String, pat: String, repl: String) =
-      s"regexp_replace($e, '$pat', $repl, 'g')"
-    var e = rr(e0, "(?s)<!--.*?-->", "''")
-    e = rr(e, "(?s)<!\\[CDATA\\[.*?\\]\\]>", "''")
-    graft.ops.TextOps.Html.containerTags.foreach { t =>
-      e = rr(e, s"(?si)<$t\\b.*?</$t\\s*>", "''")
-    }
-    e = rr(e, graft.ops.TextOps.Html.blockTagPattern, "chr(10)")
-    // tag-shaped spans only (r17): bare '<'/'>' prose survives
-    e = rr(e, "</?[a-zA-Z][^>]*>", "''")
-    e = rr(e, "<![^>]*>", "''")
-    graft.ops.TextOps.Html.entities.foreach { case (k, v) =>
-      val repl = v match {
-        case "'" => "chr(39)"
-        case "\"" => "chr(34)"
-        case other => s"'$other'"
-      }
-      e = s"replace($e, '$k', $repl)"
-    }
-    e = rr(e, "[ \\t\\r]+", "' '")
-    e = rr(e, " ?\\n ?", "chr(10)")
-    e = rr(e, "\\n+", "chr(10)")
-    e = rr(e, "^[ \\n]+", "''")
-    rr(e, "[ \\n]+$", "''")
-  }
-
-  /** DuckDB replay of [[graft.ops.Similarity.quantizePq]] over the
-    * unit-normalized embeddings: CTE chain through `enc` (vec_id, s,
-    * code) and `cb` (s, c_cell, cw). The augmented dot replays the
-    * argmax-dot == argmin-L2 trick: dot(x_sub, c_sub) + (−(c·c)/2)
-    * appended in the SAME left-fold position as the kernel's
-    * concatenated arrays. */
-  private def pqChainSql: String =
-    s"""$EmbCte,
-       |u AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS v
-       |  FROM n WHERE nrm > 0),
-       |${pqChainOverSql("u")}""".stripMargin
-
-  /** The PQ train/encode chain (sub_t → seeds → ssub → asg → cbe → cb
-    * → enc) over any prior CTE `src`(vec_id, v) — shared by the raw
-    * chain ([[pqChainSql]], src = the unit corpus) and the residual
-    * IVFADC oracle (src = the per-cell residuals). */
-  private def pqChainOverSql(src: String): String = {
-    val sub = EmbDim / PqM
-    def dotAug(x: String, c: String) =
-      s"(${dotSql(x, c)} + (-(${dotSql(c, c)}) / 2.0))"
-    s"""sub_t AS (SELECT vec_id, s,
-       |    list_slice(v, s*$sub + 1, s*$sub + $sub) AS sv
-       |  FROM $src, unnest(range(0, $PqM)) AS t(s)),
-       |seeds AS (SELECT (row_number() OVER (
-       |      ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::INT AS cell, v
-       |  FROM (SELECT vec_id, v FROM $src
-       |        ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT $PqK)),
-       |ssub AS (SELECT cell, s,
-       |    list_slice(v, s*$sub + 1, s*$sub + $sub) AS sv
-       |  FROM seeds, unnest(range(0, $PqM)) AS t(s)),
-       |asg AS (SELECT vec_id, s, cell FROM (
-       |    SELECT sub_t.vec_id, sub_t.s, ssub.cell,
-       |      row_number() OVER (PARTITION BY sub_t.vec_id, sub_t.s
-       |        ORDER BY round(${dotAug("sub_t.sv", "ssub.sv")}, 6) DESC,
-       |          ssub.cell ASC) AS rn
-       |    FROM sub_t JOIN ssub ON sub_t.s = ssub.s)
-       |  WHERE rn = 1),
-       |cbe AS (SELECT a.s, a.cell, idx, avg(sv[idx]) AS cx
-       |  FROM sub_t JOIN asg a ON sub_t.vec_id = a.vec_id AND sub_t.s = a.s,
-       |    unnest(range(1, len(sv) + 1)) AS t(idx)
-       |  GROUP BY a.s, a.cell, idx),
-       |cb AS (SELECT s, cell AS c_cell,
-       |    list_transform(list(CAST(round(cx * 1000000) AS BIGINT)
-       |      ORDER BY idx), x -> x / 1000000.0) AS cw
-       |  FROM cbe GROUP BY s, cell),
-       |enc AS (SELECT vec_id, s, code FROM (
-       |    SELECT sub_t.vec_id, sub_t.s, cb.c_cell AS code,
-       |      row_number() OVER (PARTITION BY sub_t.vec_id, sub_t.s
-       |        ORDER BY round(${dotAug("sub_t.sv", "cb.cw")}, 6) DESC,
-       |          cb.c_cell ASC) AS rn
-       |    FROM sub_t JOIN cb ON sub_t.s = cb.s)
-       |  WHERE rn = 1)""".stripMargin
-  }
-
-  /** left-fold dot of duckdb list exprs `a`·`b` (same order as zip_with fold). */
-  private def dotSql(a: String, b: String) =
-    s"list_reduce(list_prepend(0.0, list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])), (acc, x) -> acc + x)"
-
-  /** LSH plane weight w(p,d): md5-derived uint32 → [-0.5, 0.5). `d` 0-based. */
-  private def planeWeightSql(p: String, d: String) =
-    s"(${hexToLong(s"md5($p || '_' || ($d))", 1, 8)}::DOUBLE / 4294967296.0 - 0.5)"
-
-  /** DuckDB twin of [[graft.ops.Stats.concentration]]: Gini of per-key
-    * row counts via the tied-rank closed form (rank only distinct count
-    * values; S2 doubles the rank identity so every term stays integral)
-    * plus top-1 / top-10 shares. NULLS FIRST mirrors Spark's asc
-    * null ordering on the top-k tie-break. */
-  private def concentrationSql(table: String, key: String): String =
-    s"""WITH pk AS (SELECT $key AS k, count(*) AS x FROM $table GROUP BY $key),
-       |bv AS (SELECT x, count(*) AS m FROM pk GROUP BY x),
-       |rk AS (SELECT x, m, coalesce(sum(m) OVER (ORDER BY x ASC
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS a FROM bv),
-       |f AS (SELECT sum(x * m * (2 * a + m + 1)) AS s2, sum(x * m) AS t,
-       |    sum(m) AS n FROM rk),
-       |tp AS (SELECT sum(x) AS topk_sum, max(x) AS top1 FROM
-       |  (SELECT x FROM pk ORDER BY x DESC, k ASC NULLS FIRST LIMIT 10))
-       |SELECT coalesce(n, 0)::BIGINT AS n_keys, coalesce(t, 0)::BIGINT AS n_rows,
-       |  round(CASE WHEN n IS NULL OR t = 0 THEN NULL
-       |    ELSE (s2::DOUBLE - (n + 1)::DOUBLE * t::DOUBLE)
-       |         / (n::DOUBLE * t::DOUBLE) END, 6) AS gini,
-       |  round(CASE WHEN t = 0 THEN NULL
-       |    ELSE top1::DOUBLE / t::DOUBLE END, 6) AS top1_share,
-       |  round(CASE WHEN t = 0 THEN NULL
-       |    ELSE topk_sum::DOUBLE / t::DOUBLE END, 6) AS topk_share
-       |FROM f, tp""".stripMargin
-
-  /** DuckDB twin of [[graft.ops.Similarity.srpCandidatePairs]] +
-    * candidate-only exact cosine: $EmbCte extended with the SRP sign
-    * string, band explode, band-equal candidate pairs and a `pairs`
-    * CTE holding (id1, id2, cos) for candidates only. */
-  private val SrpPairsCte =
-    s"""$EmbCte,
-       |sg AS (SELECT vec_id, array_to_string(list_transform(range(0, $SrpPlanes), p ->
-       |    CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
-       |      d -> v[d] * ${planeWeightSql("p", "d - 1")})), (acc, x) -> acc + x) >= 0
-       |    THEN '1' ELSE '0' END), '') AS sig
-       |  FROM n),
-       |bd AS (SELECT vec_id,
-       |    b::VARCHAR || ':' || substring(sig, b * $SrpBandBits + 1, $SrpBandBits) AS band_key
-       |  FROM sg, unnest(range(0, ${SrpPlanes / SrpBandBits})) AS t(b)),
-       |cand AS (SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-       |  FROM bd a JOIN bd b ON a.band_key = b.band_key AND a.vec_id < b.vec_id),
-       |pairs AS (SELECT c.id1, c.id2,
-       |    round(${dotSql("x.v", "y.v")} / (x.nrm * y.nrm), 6) AS cos
-       |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)""".stripMargin
-
-  /** [[SrpPairsCte]] with the band arity COMPUTED FROM count(*) — the
-    * DuckDB replay of [[graft.ops.Similarity.bandBitsFor]]: ceil(log2 n)
-    * via the binary-string length of n-1 (float log2 could round a
-    * power-of-two edge), raw = clamp(4, ceil(lg/2), 16), rounded up to
-    * the next divisor of 64 in {4, 8, 16}. Ends in the same `pairs`
-    * CTE as the fixed-arity form. */
-  private val SrpPairsAutoCte =
-    s"""$EmbCte,
-       |bb AS (SELECT CASE WHEN raw <= 4 THEN 4 WHEN raw <= 8 THEN 8
-       |    ELSE 16 END AS b
-       |  FROM (SELECT greatest(4, least(16,
-       |      (length(bin(greatest(n, 2) - 1)) + 1) // 2)) AS raw
-       |    FROM (SELECT count(*) AS n FROM n))),
-       |sg AS (SELECT vec_id, array_to_string(list_transform(range(0, $SrpPlanes), p ->
-       |    CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
-       |      d -> v[d] * ${planeWeightSql("p", "d - 1")})), (acc, x) -> acc + x) >= 0
-       |    THEN '1' ELSE '0' END), '') AS sig
-       |  FROM n),
-       |bd AS (SELECT vec_id,
-       |    t.b0::VARCHAR || ':' || substring(sig, t.b0 * bb.b + 1, bb.b) AS band_key
-       |  FROM sg, bb, unnest(range(0, $SrpPlanes // bb.b)) AS t(b0)),
-       |cand AS (SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-       |  FROM bd a JOIN bd b ON a.band_key = b.band_key AND a.vec_id < b.vec_id),
-       |pairs AS (SELECT c.id1, c.id2,
-       |    round(${dotSql("x.v", "y.v")} / (x.nrm * y.nrm), 6) AS cos
-       |  FROM cand c JOIN n x ON c.id1 = x.vec_id JOIN n y ON c.id2 = y.vec_id)""".stripMargin
-
-  /** Connected components of the MinHash pair graph by recursive
-    * reachability — ends in `clusters_t(doc_id, cluster_id)`. Must agree
-    * with [[graft.ops.Dedup.connectedComponents]]'s min-label fixpoint. */
-  private val ClustersCte =
-    s"""${PairsCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |e AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM pairs_t
-       |  UNION ALL SELECT id2, id1 FROM pairs_t),
-       |reach(node, r) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT reach.node, e.dst FROM reach JOIN e ON reach.r = e.src),
-       |clusters_t AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node)""".stripMargin
-
-  /** The q_quality scoring expression over a table with (doc_id, text,
-    * toks) columns — shared by q_quality and q_cluster_rep. */
-  private def qualitySelectSql(from: String, extraCols: String = "") = {
-    val enHits = s"len(list_filter(toks, t -> t IN (${TextOps.EN_STOP.map(w => s"'$w'").mkString(", ")})))"
-    s"""SELECT ${extraCols}doc_id, round(
-       |  0.3 * (least(len(toks)::DOUBLE, 100.0) / 100.0)
-       |  + 0.4 * (CASE WHEN len(toks) > 0 THEN $enHits::DOUBLE / len(toks)::DOUBLE ELSE 0.0 END)
-       |  + 0.3 * (1.0 - (length(text) - length(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')))::DOUBLE / nullif(length(text), 0)::DOUBLE)
-       |, 6) AS quality
-       |FROM $from""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = uniqueKeys(
-    "q_mode_string" ->
-      """SELECT l_returnflag AS mode_returnflag FROM lineitem
-        |GROUP BY l_returnflag ORDER BY count(*) DESC, l_returnflag ASC LIMIT 1""".stripMargin,
-
-    "q_mode_int" ->
-      """SELECT l_linenumber AS mode_linenumber FROM lineitem
-        |GROUP BY l_linenumber ORDER BY count(*) DESC, l_linenumber DESC LIMIT 1""".stripMargin,
-
-    "q_mode_empty" ->
-      """SELECT (SELECT o_orderkey FROM orders WHERE false
-        |   GROUP BY o_orderkey ORDER BY count(*) DESC, o_orderkey DESC LIMIT 1) AS mode_orderkey,
-        |  count(*) AS n
-        |FROM orders WHERE false""".stripMargin,
-
-    "q_mode_nulls" ->
-      """WITH y_t AS (SELECT o_orderpriority,
-        |    CASE WHEN o_orderpriority = '1-URGENT' THEN NULL ELSE o_orderkey END AS y
-        |  FROM orders),
-        |m AS (SELECT o_orderpriority, y FROM (
-        |  SELECT o_orderpriority, y,
-        |    row_number() OVER (PARTITION BY o_orderpriority ORDER BY count(*) DESC, y DESC) AS rn
-        |  FROM y_t WHERE y IS NOT NULL GROUP BY o_orderpriority, y) WHERE rn = 1),
-        |g AS (SELECT DISTINCT o_orderpriority FROM y_t)
-        |SELECT g.o_orderpriority, m.y AS mode_y
-        |FROM g LEFT JOIN m USING (o_orderpriority)""".stripMargin,
-
-    "q_mode_grouped" ->
-      """SELECT l_returnflag, l_linenumber AS mode_linenumber FROM (
-        |  SELECT l_returnflag, l_linenumber,
-        |         row_number() OVER (PARTITION BY l_returnflag ORDER BY count(*) DESC, l_linenumber DESC) AS rn
-        |  FROM lineitem GROUP BY l_returnflag, l_linenumber)
-        |WHERE rn = 1""".stripMargin,
-
-    "q_mode_date" ->
-      """SELECT strftime(d, '%Y-%m-%d') AS mode_shipdate FROM (
-        |  SELECT CAST(l_shipdate AS DATE) AS d FROM lineitem)
-        |GROUP BY d ORDER BY count(*) DESC, d DESC LIMIT 1""".stripMargin,
-
-    "q_mode_scalable" ->
-      """SELECT l_returnflag, l_partkey AS mode_l_partkey FROM (
-        |  SELECT l_returnflag, l_partkey,
-        |         row_number() OVER (PARTITION BY l_returnflag ORDER BY count(*) DESC, l_partkey DESC) AS rn
-        |  FROM lineitem GROUP BY l_returnflag, l_partkey)
-        |WHERE rn = 1""".stripMargin,
-
-    "q_mode_float" ->
-      """SELECT round(l_quantity, 6) AS mode_quantity FROM lineitem
-        |GROUP BY l_quantity ORDER BY count(*) DESC, l_quantity DESC LIMIT 1""".stripMargin,
-
-    "q_mode_ts" ->
-      """SELECT epoch_us(h) AS mode_hour_us FROM (
-        |  SELECT date_trunc('hour', ts) AS h FROM events)
-        |GROUP BY h ORDER BY count(*) DESC, h DESC LIMIT 1""".stripMargin,
-
-    "q_mode_byte" ->
-      """SELECT CAST(l_partkey % 100 AS TINYINT) AS mode_byte FROM lineitem
-        |GROUP BY 1 ORDER BY count(*) DESC, mode_byte DESC LIMIT 1""".stripMargin,
-
-    "q_mode_short" ->
-      """SELECT CAST(l_partkey % 1000 AS SMALLINT) AS mode_short FROM lineitem
-        |GROUP BY 1 ORDER BY count(*) DESC, mode_short DESC LIMIT 1""".stripMargin,
-
-    "q_mode_float32" ->
-      """SELECT CAST(l_quantity AS FLOAT4) AS mode_qty_f32 FROM lineitem
-        |GROUP BY 1 ORDER BY count(*) DESC, mode_qty_f32 DESC LIMIT 1""".stripMargin,
-
-    "q_max_by" ->
-      """SELECT o_orderpriority, o_orderkey AS best_orderkey FROM (
-        |  SELECT o_orderpriority, o_orderkey,
-        |         row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey DESC) AS rn
-        |  FROM orders)
-        |WHERE rn = 1""".stripMargin,
-
-    "q_maxmin_by_nulls" ->
-      """WITH y AS (SELECT o_orderpriority, o_orderkey,
-        |    CASE WHEN o_orderpriority = '1-URGENT' THEN NULL ELSE o_totalprice END AS yv
-        |  FROM orders),
-        |nn AS (SELECT o_orderpriority, o_orderkey,
-        |    row_number() OVER (PARTITION BY o_orderpriority ORDER BY yv DESC, o_orderkey DESC) AS rmax,
-        |    row_number() OVER (PARTITION BY o_orderpriority ORDER BY yv ASC, o_orderkey ASC) AS rmin
-        |  FROM y WHERE yv IS NOT NULL),
-        |g AS (SELECT DISTINCT o_orderpriority FROM orders)
-        |SELECT g.o_orderpriority,
-        |  mx.o_orderkey AS best_orderkey, mn.o_orderkey AS worst_orderkey
-        |FROM g
-        |LEFT JOIN (SELECT o_orderpriority, o_orderkey FROM nn WHERE rmax = 1) mx USING (o_orderpriority)
-        |LEFT JOIN (SELECT o_orderpriority, o_orderkey FROM nn WHERE rmin = 1) mn USING (o_orderpriority)""".stripMargin,
-
-    "q_maxmin_by_empty" ->
-      """SELECT arg_max(o_orderkey, o_totalprice) AS best_orderkey,
-        |  arg_min(o_orderkey, o_totalprice) AS worst_orderkey,
-        |  count(*) AS n
-        |FROM orders WHERE 1 = 0""".stripMargin,
-
-    "q_maxmin_by_ref" ->
-      """WITH y AS (SELECT o_orderpriority, o_orderkey,
-        |    CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_totalprice END AS yv
-        |  FROM orders),
-        |nn AS (SELECT o_orderpriority, o_orderkey,
-        |    row_number() OVER (PARTITION BY o_orderpriority ORDER BY yv DESC, o_orderkey DESC) AS rmax,
-        |    row_number() OVER (PARTITION BY o_orderpriority ORDER BY yv ASC, o_orderkey ASC) AS rmin
-        |  FROM y WHERE yv IS NOT NULL),
-        |nl AS (SELECT o_orderpriority, max(o_orderkey) AS nx, min(o_orderkey) AS nn_x
-        |  FROM y WHERE yv IS NULL GROUP BY o_orderpriority),
-        |g AS (SELECT DISTINCT o_orderpriority FROM orders)
-        |SELECT g.o_orderpriority,
-        |  COALESCE(nl.nx, mx.o_orderkey) AS mx_ref,
-        |  COALESCE(nl.nn_x, mn.o_orderkey) AS mn_ref
-        |FROM g
-        |LEFT JOIN nl USING (o_orderpriority)
-        |LEFT JOIN (SELECT o_orderpriority, o_orderkey FROM nn WHERE rmax = 1) mx USING (o_orderpriority)
-        |LEFT JOIN (SELECT o_orderpriority, o_orderkey FROM nn WHERE rmin = 1) mn USING (o_orderpriority)""".stripMargin,
-
-    "q_min_by" ->
-      """SELECT o_orderpriority, o_orderkey AS best_orderkey FROM (
-        |  SELECT o_orderpriority, o_orderkey,
-        |         row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice ASC, o_orderkey ASC) AS rn
-        |  FROM orders)
-        |WHERE rn = 1""".stripMargin,
-
-    "q_skewness" ->
-      "SELECT l_returnflag, round(skewness(l_extendedprice), 6) AS skew FROM lineitem GROUP BY l_returnflag",
-
-    "q_kurtosis" ->
-      "SELECT l_returnflag, round(kurtosis(l_quantity), 6) AS kurt FROM lineitem GROUP BY l_returnflag",
-
-    "q_kurtosis_pop" ->
-      "SELECT l_returnflag, round(kurtosis_pop(l_quantity), 6) AS kurt_pop FROM lineitem GROUP BY l_returnflag",
-
-    "q_stats_edges" ->
-      """WITH per AS (SELECT l_orderkey,
-        |    count(CASE WHEN l_linenumber = 1 THEN NULL ELSE l_extendedprice END) AS nv,
-        |    skewness(CASE WHEN l_linenumber = 1 THEN NULL ELSE l_extendedprice END) AS sk,
-        |    kurtosis(CASE WHEN l_linenumber = 1 THEN NULL ELSE l_extendedprice END) AS ku,
-        |    kurtosis_pop(CASE WHEN l_linenumber = 1 THEN NULL ELSE l_extendedprice END) AS kp
-        |  FROM lineitem GROUP BY l_orderkey)
-        |SELECT nv, count(*) AS n_groups, count(sk) AS sk_groups,
-        |  count(ku) AS ku_groups, count(kp) AS kp_groups
-        |FROM per GROUP BY nv""".stripMargin,
-
-    "q_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 6) AS sum_qty,
-        |  sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_base_price,
-        |  sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT)) / 1000000.0 AS sum_disc_price,
-        |  round(sum(l_quantity) / count(*), 6) AS avg_qty,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS dup_cnt
-        |FROM documents GROUP BY md5(text)""".stripMargin,
-
-    "q_dedup_norm" ->
-      """WITH n_t AS (SELECT doc_id,
-        |  regexp_replace(regexp_replace(trim(lower(text)), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g') AS norm
-        |  FROM documents)
-        |SELECT md5(norm) AS text_hash, min(doc_id) AS keep_id, count(*) AS dup_cnt
-        |FROM n_t GROUP BY md5(norm)""".stripMargin,
-
-    "q_dedup_incremental" ->
-      """WITH idx AS (SELECT md5(text) AS fp FROM documents WHERE source = 'src0'),
-        |nd AS (SELECT doc_id, md5(text) AS text_hash FROM documents WHERE source <> 'src0')
-        |SELECT min(doc_id) AS doc_id, text_hash FROM nd
-        |WHERE text_hash NOT IN (SELECT fp FROM idx)
-        |GROUP BY text_hash""".stripMargin,
-
-    "q_neardup_incremental" ->
-      s"""$PairsCte
-         |SELECT n.doc_id, min(e.doc_id) AS dup_of
-         |FROM bands_t n JOIN bands_t e ON n.band_key = e.band_key
-         |WHERE n.doc_id % 2 = 1 AND e.doc_id % 2 = 0
-         |GROUP BY n.doc_id""".stripMargin,
-
-    "q_index_maintain" ->
-      s"""$PairsCte
-         |SELECT doc_id, band_key FROM bands_t
-         |WHERE (doc_id % 2 = 0 AND doc_id % 10 <> 0) OR doc_id % 2 = 1""".stripMargin,
-
-    "q_collocations" ->
-      s"""WITH toks_t AS (SELECT $ToksSql AS toks FROM documents),
-         |bg0 AS (SELECT unnest(CASE WHEN len(toks) >= 2
-         |  THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-         |  ELSE [array_to_string(toks, ' ')] END) AS bigram FROM toks_t),
-         |bg AS (SELECT bigram, count(*) AS cnt FROM bg0
-         |  WHERE strpos(bigram, ' ') > 0 GROUP BY bigram),
-         |ug AS (SELECT w, count(*) AS c FROM
-         |  (SELECT unnest(toks) AS w FROM toks_t) GROUP BY w),
-         |nb_t AS (SELECT sum(cnt)::BIGINT AS nb FROM bg),
-         |nu_t AS (SELECT sum(c)::BIGINT AS nu FROM ug)
-         |SELECT bigram, cnt,
-         |  round(ln(cnt::DOUBLE * nu * nu / (nb::DOUBLE * u1.c * u2.c)), 6) AS pmi
-         |FROM bg CROSS JOIN nb_t CROSS JOIN nu_t
-         |JOIN ug u1 ON split_part(bigram, ' ', 1) = u1.w
-         |JOIN ug u2 ON split_part(bigram, ' ', 2) = u2.w
-         |WHERE cnt >= 5
-         |ORDER BY pmi DESC, bigram ASC LIMIT 20""".stripMargin,
-
-    "q_negative_sample" ->
-      s"""WITH q AS (SELECT doc_id AS qid,
-         |    (${hexToLong("md5(doc_id::VARCHAR)", 1, 8)}) % 8 AS b
-         |  FROM documents WHERE doc_id % 7 = 0),
-         |d AS (SELECT doc_id AS did,
-         |    (${hexToLong("md5(doc_id::VARCHAR)", 1, 8)}) % 8 AS b
-         |  FROM documents),
-         |cand AS (SELECT q.qid, d.did,
-         |    md5(q.qid::VARCHAR || '|' || d.did::VARCHAR) AS rk
-         |  FROM q JOIN d USING (b)
-         |  WHERE d.did <> q.qid AND d.did <> q.qid + 1),
-         |r AS (SELECT qid, did,
-         |    row_number() OVER (PARTITION BY qid ORDER BY rk ASC, did ASC) AS rn
-         |  FROM cand)
-         |SELECT qid, rn::INT AS rank, did FROM r WHERE rn <= 3""".stripMargin,
-
-    "q_shard_assign" ->
-      s"""WITH t AS (SELECT source AS stratum, doc_id,
-         |    len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\s]'))::BIGINT AS n_tokens
-         |  FROM documents)
-         |SELECT stratum, doc_id, n_tokens,
-         |  ((row_number() OVER (PARTITION BY stratum
-         |      ORDER BY n_tokens DESC, doc_id ASC) - 1) % 8)::INT AS shard
-         |FROM t""".stripMargin,
-
-    "q_corpus_diff" ->
-      """WITH o AS (SELECT md5(text) AS text_hash, count(*) AS n_old FROM documents
-        |  WHERE source IN ('src0', 'src1') GROUP BY md5(text)),
-        |n AS (SELECT md5(text) AS text_hash, count(*) AS n_new FROM documents
-        |  WHERE source NOT IN ('src0', 'src1') GROUP BY md5(text)),
-        |j AS (SELECT coalesce(o.text_hash, n.text_hash) AS h, o.n_old, n.n_new
-        |  FROM o FULL OUTER JOIN n ON o.text_hash = n.text_hash)
-        |SELECT CASE WHEN n_old IS NULL THEN 'added'
-        |            WHEN n_new IS NULL THEN 'removed'
-        |            ELSE 'common' END AS status,
-        |  count(*) AS n_texts,
-        |  sum(coalesce(n_old, 0))::BIGINT AS n_docs_old,
-        |  sum(coalesce(n_new, 0))::BIGINT AS n_docs_new
-        |FROM j GROUP BY 1""".stripMargin,
-
-    "q_dedup_spans" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-        |g AS (SELECT doc_id, s AS pos,
-        |    md5(array_to_string(tk[(s + 1):(s + 8)], ' ')) AS h
-        |  FROM toks, unnest(range(0, len(tk) - 8 + 1)) t(s)),
-        |r AS (SELECT doc_id, pos,
-        |    row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn FROM g),
-        |d AS (SELECT doc_id, pos FROM r WHERE rn > 1),
-        |cov AS (SELECT DISTINCT doc_id, pos + u AS i FROM d, unnest(range(0, 8)) v(u)),
-        |sp AS (SELECT doc_id,
-        |    sum(CASE WHEN prev_i IS NULL OR i - prev_i > 1 THEN 1 ELSE 0 END)::BIGINT AS n_spans
-        |  FROM (SELECT doc_id, i,
-        |      lag(i) OVER (PARTITION BY doc_id ORDER BY i) AS prev_i FROM cov)
-        |  GROUP BY doc_id),
-        |tp AS (SELECT doc_id, j - 1 AS i, tk[j] AS tok
-        |  FROM toks, unnest(range(1, len(tk) + 1)) t(j)),
-        |kept AS (SELECT tp.doc_id, tp.i, tp.tok FROM tp
-        |  LEFT JOIN cov ON tp.doc_id = cov.doc_id AND tp.i = cov.i
-        |  WHERE cov.i IS NULL),
-        |cl AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text
-        |  FROM kept GROUP BY doc_id),
-        |dc AS (SELECT doc_id, count(*)::BIGINT AS dup_tokens FROM cov GROUP BY doc_id)
-        |SELECT t.doc_id, len(t.tk)::BIGINT AS n_tokens,
-        |  coalesce(dc.dup_tokens, 0) AS dup_tokens,
-        |  coalesce(sp.n_spans, 0) AS n_spans,
-        |  coalesce(cl.clean_text, '') AS clean_text
-        |FROM toks t LEFT JOIN dc USING (doc_id) LEFT JOIN sp USING (doc_id)
-        |  LEFT JOIN cl ON t.doc_id = cl.doc_id""".stripMargin,
-
-    "q_chunk_stride" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents
-        |  WHERE len(regexp_extract_all(lower(text), '[a-z0-9]+')) >= 1)
-        |SELECT doc_id, (s // 8)::INT AS idx,
-        |  len(tk[(s + 1):least(s + 16, len(tk))])::INT AS n_tok,
-        |  array_to_string(tk[(s + 1):least(s + 16, len(tk))], ' ') AS chunk
-        |FROM toks, unnest(range(0, ((len(tk) - 1) // 8) * 8 + 1, 8)) t(s)""".stripMargin,
-
-    "q_chunk_dedup" ->
-      """WITH toks AS (SELECT doc_id,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS tk FROM documents),
-        |ch AS (SELECT doc_id, i AS idx,
-        |    md5(array_to_string(tk[(i * 8 + 1):((i + 1) * 8)], ' ')) AS h
-        |  FROM toks, unnest(range(0, len(tk) // 8)) t(i)),
-        |r AS (SELECT doc_id, idx,
-        |    row_number() OVER (PARTITION BY h ORDER BY doc_id, idx) AS rn FROM ch)
-        |SELECT doc_id, count(*) AS n_chunks,
-        |  sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END)::BIGINT AS n_kept
-        |FROM r GROUP BY doc_id""".stripMargin,
-
-    "q_user_stats" ->
-      """WITH m AS (SELECT user_id, event_type, count(*) AS c FROM events GROUP BY user_id, event_type),
-        |md_t AS (SELECT user_id, event_type AS mode_type FROM (
-        |  SELECT user_id, event_type, row_number() OVER (PARTITION BY user_id ORDER BY c DESC, event_type ASC) AS rn FROM m)
-        |  WHERE rn = 1),
-        |tp_t AS (SELECT user_id, event_type AS top_type FROM (
-        |  SELECT user_id, event_type, row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_type DESC) AS rn FROM events)
-        |  WHERE rn = 1),
-        |st_t AS (SELECT user_id, count(*) AS n, round(skewness(value), 6) AS skew_value,
-        |  round(kurtosis(value), 6) AS kurt_value FROM events GROUP BY user_id)
-        |SELECT st_t.user_id, st_t.n, md_t.mode_type, st_t.skew_value, st_t.kurt_value, tp_t.top_type
-        |FROM st_t JOIN md_t USING (user_id) JOIN tp_t USING (user_id)""".stripMargin,
-
-    "q_minhash_signature" ->
-      s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |sh_t AS (SELECT doc_id, $ShinglesSql AS sh FROM toks_t)
-         |SELECT doc_id, array_to_string(list_transform($SigSql, x -> x::VARCHAR), '|') AS sig
-         |FROM sh_t""".stripMargin,
-
-    "q_minhash_pairs" ->
-      s"$PairsCte\nSELECT id1, id2 FROM pairs_t",
-
-    "q_minhash_pairs_capped" ->
-      s"""$PairsCte,
-         |bstat_t AS (SELECT band_key, count(*) AS m, min(doc_id) AS hub
-         |  FROM bands_t GROUP BY band_key),
-         |bx_t AS (SELECT b.doc_id, b.band_key, s.m, s.hub
-         |  FROM bands_t b JOIN bstat_t s USING (band_key)),
-         |small_t AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bx_t a JOIN bx_t b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-         |  WHERE a.m <= 2),
-         |star_t AS (SELECT hub AS id1, doc_id AS id2 FROM bx_t
-         |  WHERE m > 2 AND doc_id <> hub)
-         |SELECT DISTINCT id1, id2 FROM
-         |  (SELECT id1, id2 FROM small_t UNION ALL SELECT id1, id2 FROM star_t)""".stripMargin,
-
-    "q_ngram_jaccard" ->
-      s"""$PairsCte,
-         |dsh_t AS (SELECT doc_id, list_distinct(sh) AS dsh FROM sh_t)
-         |SELECT p.id1, p.id2,
-         |  round(len(list_intersect(a.dsh, b.dsh))::DOUBLE /
-         |        (len(a.dsh) + len(b.dsh) - len(list_intersect(a.dsh, b.dsh)))::DOUBLE, 6) AS jaccard
-         |FROM pairs_t p JOIN dsh_t a ON p.id1 = a.doc_id JOIN dsh_t b ON p.id2 = b.doc_id""".stripMargin,
-
-    "q_distinct_stats" ->
-      """WITH tk AS (SELECT source, doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents)
-        |SELECT source, count(DISTINCT doc_id) AS n_docs, count(*) AS n_tokens,
-        |  count(DISTINCT token) AS vocab
-        |FROM tk GROUP BY source""".stripMargin,
-
-    "q_unigram_logprob" ->
-      """WITH tk AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents),
-        |v AS (SELECT token, count(*) AS cnt FROM tk GROUP BY token),
-        |tot AS (SELECT count(*)::DOUBLE AS t FROM tk)
-        |SELECT doc_id, round(sum(CAST(round(ln(cnt / (SELECT t FROM tot)) * 1000000) AS BIGINT)) / 1000000.0 / count(*), 6) AS logprob
-        |FROM tk JOIN v USING (token) GROUP BY doc_id""".stripMargin,
-
-    "q_tfidf" ->
-      """WITH tk AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents),
-        |tf_t AS (SELECT doc_id, token, count(*) AS tf FROM tk GROUP BY doc_id, token),
-        |nn AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-        |df_t AS (SELECT token, count(*) AS df FROM tf_t GROUP BY token)
-        |SELECT doc_id, rn, token, tfidf FROM (
-        |  SELECT tf_t.doc_id, tf_t.token,
-        |    round(tf_t.tf * ln((SELECT n FROM nn)::DOUBLE / df_t.df), 6) AS tfidf,
-        |    row_number() OVER (PARTITION BY tf_t.doc_id
-        |      ORDER BY round(tf_t.tf * ln((SELECT n FROM nn)::DOUBLE / df_t.df), 6) DESC, tf_t.token ASC) AS rn
-        |  FROM tf_t JOIN df_t USING (token))
-        |WHERE rn <= 3""".stripMargin,
-
-    "q_sample_stratified" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang ORDER BY md5(doc_id::VARCHAR) ASC, doc_id ASC) AS rn
-        |  FROM documents)
-        |WHERE rn <= 20""".stripMargin,
-
-    "q_sample_weighted" ->
-      s"""WITH k_t AS (SELECT doc_id, lang,
-         |  round(ln((${hexToLong("md5(doc_id::VARCHAR)", 1, 8)}::DOUBLE + 0.5) / 4294967296.0)
-         |    / greatest(length(text)::DOUBLE, 1e-300), 6) AS k
-         |  FROM documents)
-         |SELECT doc_id, lang FROM (
-         |  SELECT doc_id, lang,
-         |    row_number() OVER (PARTITION BY lang ORDER BY k DESC, doc_id ASC) AS rn
-         |  FROM k_t)
-         |WHERE rn <= 15""".stripMargin,
-
-    "q_split_assign" ->
-      s"""SELECT doc_id, CASE
-         |  WHEN (${hexToLong("md5(doc_id::VARCHAR)", 1, 8)}) % 100 < 80 THEN 'train'
-         |  WHEN (${hexToLong("md5(doc_id::VARCHAR)", 1, 8)}) % 100 < 90 THEN 'val'
-         |  ELSE 'test' END AS split
-         |FROM documents""".stripMargin,
-
-    "q_contamination" ->
-      s"""WITH toks_t AS (SELECT doc_id, source, $ToksSql AS toks FROM documents),
-         |sh_t AS (SELECT doc_id, source, $ShinglesSql AS sh FROM toks_t),
-         |g AS (SELECT DISTINCT doc_id, source, md5(unnest(sh)) AS gh FROM sh_t)
-         |SELECT a.doc_id AS train_id, b.doc_id AS eval_id, count(*) AS shared_ngrams
-         |FROM (SELECT doc_id, gh FROM g WHERE source <> 'src0') a
-         |JOIN (SELECT doc_id, gh FROM g WHERE source = 'src0') b USING (gh)
-         |GROUP BY a.doc_id, b.doc_id
-         |HAVING count(*) >= 3""".stripMargin,
-
-    "q_corpus_clean" -> {
-      val enHits = s"len(list_filter(toks, t -> t IN (${TextOps.EN_STOP.map(w => s"'$w'").mkString(", ")})))"
-      s"""WITH red AS (SELECT doc_id,
-         |  regexp_replace(regexp_replace(text,
-         |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-z]{2,}', '<EMAIL>', 'g'),
-         |    'https?://[^\\s]+', '<URL>', 'g') AS text
-         |  FROM documents),
-         |tk AS (SELECT doc_id, text, $ToksSql AS toks FROM red),
-         |quals AS (SELECT doc_id, text, toks FROM tk WHERE round(
-         |  0.3 * (least(len(toks)::DOUBLE, 100.0) / 100.0)
-         |  + 0.4 * (CASE WHEN len(toks) > 0 THEN $enHits::DOUBLE / len(toks)::DOUBLE ELSE 0.0 END)
-         |  + 0.3 * (1.0 - (length(text) - length(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g')))::DOUBLE / length(text)::DOUBLE)
-         |, 6) >= 0.4),
-         |ew AS (SELECT min(doc_id) AS doc_id FROM quals GROUP BY md5(text)),
-         |surv AS (SELECT q.doc_id, q.toks FROM quals q JOIN ew ON q.doc_id = ew.doc_id),
-         |sh_t AS (SELECT doc_id, $ShinglesSql AS sh FROM surv),
-         |sig_t AS (SELECT doc_id, $SigSql AS sig FROM sh_t),
-         |bands_t AS (SELECT doc_id, unnest($BandsSql) AS band_key FROM sig_t),
-         |pairs_t AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bands_t a JOIN bands_t b ON a.band_key = b.band_key AND a.doc_id < b.doc_id),
-         |dsh AS (SELECT doc_id, list_distinct(sh) AS dsh FROM sh_t),
-         |drops AS (SELECT DISTINCT p.id2 AS doc_id
-         |  FROM pairs_t p JOIN dsh a ON p.id1 = a.doc_id JOIN dsh b ON p.id2 = b.doc_id
-         |  WHERE round(len(list_intersect(a.dsh, b.dsh))::DOUBLE /
-         |    (len(a.dsh) + len(b.dsh) - len(list_intersect(a.dsh, b.dsh)))::DOUBLE, 6) >= 0.8)
-         |SELECT doc_id FROM surv WHERE doc_id NOT IN (SELECT doc_id FROM drops)""".stripMargin
-    },
-
-    // the composed crawl front door: the SAME page synthesis as the
-    // Spark gate, then the full extract → normalize → boilerplate →
-    // langId-route → Gopher-gate → PII → exact+near dedup chain
-    // (crawlChainSql, shared with q_crawl_funnel — complementary half
-    // slices, see the Spark gate comment).
-    // FULL-size again since r20 (both gates share ONE Spark-side chain
-    // invocation via crawlStagesShared, so the oracle replays the full
-    // corpus for each)
-    "q_crawl_clean" ->
-      (crawlChainSql("true") + "\nSELECT doc_id, lang, text FROM fin"),
-
-    // the whole-chain observability twin: per source, pages surviving
-    // each successive gate (keepl = language-routed, gated = Gopher
-    // pass, surv = exact-dup winners, fin = near-dup winners)
-    "q_crawl_funnel" -> (crawlChainSql("true") + "\n" +
-      """SELECT p.source, count(*)::BIGINT AS n_pages,
-        |  count(k.doc_id)::BIGINT AS n_routed,
-        |  count(g.doc_id)::BIGINT AS n_gated,
-        |  count(e.doc_id)::BIGINT AS n_exact,
-        |  count(f.doc_id)::BIGINT AS n_survivors
-        |FROM pages p
-        |LEFT JOIN keepl k ON p.doc_id = k.doc_id
-        |LEFT JOIN gated g ON p.doc_id = g.doc_id
-        |LEFT JOIN surv e ON p.doc_id = e.doc_id
-        |LEFT JOIN fin f ON p.doc_id = f.doc_id
-        |GROUP BY p.source""".stripMargin),
-
-    "q_dedup_paragraphs" ->
-      """WITH m AS (SELECT doc_id, text
-        |    || CASE WHEN doc_id % 6 = 0 THEN chr(10) || 'this press release paragraph repeats verbatim across many mirror pages of the corpus' ELSE '' END
-        |    || CASE WHEN doc_id % 10 = 0 THEN chr(10) || 'standard licence text distributed with every bundled release of the archive' ELSE '' END AS text
-        |  FROM documents),
-        |d AS (SELECT doc_id, list_filter(list_transform(
-        |    string_split(text, chr(10)), l -> trim(l)), l -> l <> '') AS lines
-        |  FROM m),
-        |l AS (SELECT doc_id, (i - 1)::INT AS pos, md5(lines[i]) AS lh
-        |  FROM d, unnest(range(1, len(lines) + 1)) AS t(i)),
-        |k AS (SELECT doc_id, pos FROM (
-        |    SELECT doc_id, pos, row_number() OVER (
-        |      PARTITION BY lh ORDER BY doc_id, pos) AS rn FROM l)
-        |  WHERE rn = 1),
-        |kp AS (SELECT doc_id, list(pos ORDER BY pos) AS kp FROM k GROUP BY doc_id)
-        |SELECT d.doc_id, len(d.lines) AS n_paras,
-        |  coalesce(len(kp.kp), 0) AS n_kept,
-        |  coalesce(array_to_string(list_transform(coalesce(kp.kp, []),
-        |    i -> d.lines[i + 1]), chr(10)), '') AS text
-        |FROM d LEFT JOIN kp USING (doc_id)""".stripMargin,
-
-    "q_simhash" ->
-      s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |h_t AS (SELECT doc_id, list_transform(toks, t -> md5(t)) AS hashes FROM toks_t)
-         |SELECT doc_id, $SimhashSigSql AS simhash
-         |FROM h_t""".stripMargin,
-
-    "q_simhash_pairs" ->
-      s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |h_t AS (SELECT doc_id, list_transform(toks, t -> md5(t)) AS hashes FROM toks_t),
-         |sig_t AS (SELECT doc_id, $SimhashSigSql AS sig FROM h_t),
-         |bb AS (SELECT doc_id, sig, unnest(range(0, 4)) AS band FROM sig_t),
-         |bb2 AS (SELECT doc_id, sig, band, substring(sig, band * 16 + 1, 16) AS bits FROM bb),
-         |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2, a.sig AS s1, b.sig AS s2
-         |  FROM bb2 a JOIN bb2 b ON a.band = b.band AND a.bits = b.bits AND a.doc_id < b.doc_id),
-         |scored AS (SELECT id1, id2,
-         |  len(list_filter(range(1, 65), i -> s1[i] <> s2[i])) AS hamming FROM cand)
-         |SELECT DISTINCT id1, id2, hamming FROM scored WHERE hamming <= 3""".stripMargin,
-
-    "q_langid" -> {
-      def hits(words: Seq[String]) =
-        s"len(list_filter(toks, t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))"
-      s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |s_t AS (SELECT doc_id,
-         |  ${hits(TextOps.EN_STOP)} AS s_en, ${hits(TextOps.ES_STOP)} AS s_es,
-         |  ${hits(TextOps.FR_STOP)} AS s_fr, ${hits(TextOps.DE_STOP)} AS s_de
-         |  FROM toks_t)
-         |SELECT doc_id, CASE
-         |  WHEN s_en > 0 AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_de THEN 'en'
-         |  WHEN s_es > 0 AND s_es >= s_fr AND s_es >= s_de THEN 'es'
-         |  WHEN s_fr > 0 AND s_fr >= s_de THEN 'fr'
-         |  WHEN s_de > 0 THEN 'de'
-         |  ELSE 'und' END AS lang_pred
-         |FROM s_t""".stripMargin
-    },
-
-    "q_gopher_quality" -> GopherFlagsSql,
-
-    // NOTE: the flags SQL is concatenated OUTSIDE the stripMargin —
-    // interpolating it into a margin-stripped string mangles its
-    // continuation lines that begin with '||'
-    "q_filter_report" -> (s"WITH g AS ($GopherFlagsSql)\n" +
-      """SELECT d.source, count(*)::BIGINT AS n_docs,
-         |  sum(CASE WHEN NOT pass_words THEN 1 ELSE 0 END)::BIGINT AS fail_words,
-         |  sum(CASE WHEN NOT pass_mean_len THEN 1 ELSE 0 END)::BIGINT AS fail_mean_len,
-         |  sum(CASE WHEN NOT pass_symbols THEN 1 ELSE 0 END)::BIGINT AS fail_symbols,
-         |  sum(CASE WHEN NOT pass_bullets THEN 1 ELSE 0 END)::BIGINT AS fail_bullets,
-         |  sum(CASE WHEN NOT pass_ellipsis THEN 1 ELSE 0 END)::BIGINT AS fail_ellipsis,
-         |  sum(CASE WHEN NOT pass_alpha THEN 1 ELSE 0 END)::BIGINT AS fail_alpha,
-         |  sum(CASE WHEN NOT pass_stopwords THEN 1 ELSE 0 END)::BIGINT AS fail_stopwords,
-         |  round(sum(CASE WHEN keep THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE, 6) AS keep_rate
-         |FROM g JOIN documents d USING (doc_id)
-         |GROUP BY d.source""".stripMargin),
-
-    "q_boilerplate" ->
-      s"""$BoilerplateChainSql
-        |SELECT doc_id, source, len(lines) AS n_lines,
-        |  (len(lines) - len(kept)) AS n_boiler,
-        |  round(CASE WHEN len(lines) > 0
-        |    THEN (len(lines) - len(kept))::DOUBLE / len(lines)::DOUBLE
-        |    ELSE 0.0 END, 6) AS boiler_ratio,
-        |  md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_hash
-        |FROM bp_j""".stripMargin,
-
-    "q_boilerplate_clean" ->
-      s"""$BoilerplateChainSql
-         |SELECT doc_id, source,
-         |  coalesce(array_to_string(kept, chr(10)), '') AS clean_text
-         |FROM bp_j""".stripMargin,
-
-    "q_langid_cjk" -> {
-      s"""WITH m AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 20 = 0 THEN '日本語のテキストです ' || text
-         |         WHEN doc_id % 20 = 1 THEN '한국어 텍스트 ' || text
-         |         WHEN doc_id % 20 = 2 THEN '中文文本内容 ' || text
-         |         ELSE text END AS text
-         |  FROM documents),
-         |${langCjkCtesSql("m")}
-         |SELECT lg.doc_id, lg.lang AS lang_pred,
-         |  s.n_cjk + len(string_split_regex(trim(
-         |    regexp_replace(s.text, '$CjkSql', ' ', 'g')), '\\s+')) AS n_tok
-         |FROM lg JOIN lg_s s USING (doc_id)""".stripMargin
-    },
-
-    "q_langid_spans" -> {
-      def hits(words: Seq[String]) =
-        s"len(list_filter(toks, t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))"
-      val kana = """[\x{3040}-\x{309F}\x{30A0}-\x{30FF}]"""
-      val hangul = """[\x{1100}-\x{11FF}\x{3130}-\x{318F}\x{AC00}-\x{D7AF}]"""
-      val han = """[\x{3400}-\x{4DBF}\x{4E00}-\x{9FFF}\x{F900}-\x{FAFF}]"""
-      s"""WITH m AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 10 = 0 THEN '日本語のテキストです' || chr(10)
-         |      || 'これは二行目の日本語' || chr(10) ELSE '' END
-         |    || text
-         |    || CASE WHEN doc_id % 10 = 1 THEN chr(10) || '한국어 텍스트 단락'
-         |       ELSE '' END
-         |    || CASE WHEN doc_id % 5 = 2 THEN chr(10)
-         |      || 'le texte est ici avec le la et les mots du jour'
-         |       ELSE '' END AS text
-         |  FROM documents),
-         |d AS (SELECT doc_id, list_filter(list_transform(
-         |    string_split(text, chr(10)), l -> trim(l)), l -> l <> '') AS lines
-         |  FROM m),
-         |l AS (SELECT doc_id, (i - 1)::INT AS pos, lines[i] AS line
-         |  FROM d, unnest(range(1, len(lines) + 1)) AS t(i)),
-         |c AS (SELECT doc_id, pos, line,
-         |    length(line) - length(regexp_replace(line, '$kana', '', 'g')) AS n_kana,
-         |    length(line) - length(regexp_replace(line, '$hangul', '', 'g')) AS n_hangul,
-         |    length(line) - length(regexp_replace(line, '$han', '', 'g')) AS n_han,
-         |    regexp_extract_all(lower(line), '[a-z0-9]+') AS toks
-         |  FROM l),
-         |s_t AS (SELECT doc_id, pos, line, n_kana, n_hangul, n_han,
-         |  ${hits(TextOps.EN_STOP)} AS s_en, ${hits(TextOps.ES_STOP)} AS s_es,
-         |  ${hits(TextOps.FR_STOP)} AS s_fr, ${hits(TextOps.DE_STOP)} AS s_de
-         |  FROM c),
-         |lg AS (SELECT doc_id, pos, line, CASE
-         |    WHEN n_kana > 0 THEN 'ja'
-         |    WHEN n_hangul > 0 THEN 'ko'
-         |    WHEN n_han > 0 THEN 'zh'
-         |    WHEN s_en > 0 AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_de THEN 'en'
-         |    WHEN s_es > 0 AND s_es >= s_fr AND s_es >= s_de THEN 'es'
-         |    WHEN s_fr > 0 AND s_fr >= s_de THEN 'fr'
-         |    WHEN s_de > 0 THEN 'de'
-         |    ELSE 'und' END AS lang
-         |  FROM s_t),
-         |isl AS (SELECT doc_id, pos, line, lang,
-         |    pos - row_number() OVER (PARTITION BY doc_id, lang
-         |      ORDER BY pos ASC) AS island
-         |  FROM lg),
-         |sp AS (SELECT doc_id, lang, island, min(pos) AS start_line,
-         |    count(*) AS n_lines, sum(length(line))::BIGINT AS n_chars
-         |  FROM isl GROUP BY doc_id, lang, island)
-         |SELECT doc_id,
-         |  (row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY start_line ASC))::INT AS span_idx,
-         |  lang, n_lines, n_chars, start_line
-         |FROM sp""".stripMargin
-    },
-
-    "q_quality" ->
-      s"""WITH toks_t AS (SELECT doc_id, text, $ToksSql AS toks FROM documents)
-         |${qualitySelectSql("toks_t")}""".stripMargin,
-
-    "q_quality_calibrated" ->
-      s"""WITH toks_t AS (SELECT doc_id, source, text, $ToksSql AS toks FROM documents),
-         |q AS (${qualitySelectSql("toks_t", "source, ")}),
-         |b AS (SELECT doc_id, source, quality,
-         |    CAST(least(greatest(floor((quality - 0.0) / (1.0 - 0.0) * 1000),
-         |      0.0), 999.0) AS BIGINT) AS bin FROM q),
-         |h AS (SELECT source, bin, count(*) AS m FROM b GROUP BY source, bin),
-         |c AS (SELECT source, bin,
-         |    coalesce(sum(m) OVER (PARTITION BY source ORDER BY bin ASC
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below,
-         |    sum(m) OVER (PARTITION BY source) AS n
-         |  FROM h)
-         |SELECT b.doc_id, b.source, b.quality,
-         |  round(c.below::DOUBLE / c.n::DOUBLE, 6) AS pct_below
-         |FROM b JOIN c ON b.source = c.source AND b.bin = c.bin""".stripMargin,
-
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  len(string_split_regex(trim(text), '\s+')) AS n_ws,
-        |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]')) AS n_bpe
-        |FROM documents""".stripMargin,
-
-    "q_bpe_encode" ->
-      s"""$bpeChainSql
-         |SELECT t.doc_id, len(t.toks) AS n_words,
-         |  coalesce(a.n_bpe_real, 0)::INT AS n_bpe_real,
-         |  round(CASE WHEN len(t.toks) > 0
-         |    THEN coalesce(a.n_bpe_real, 0)::DOUBLE / len(t.toks)::DOUBLE
-         |    END, 6) AS fertility,
-         |  coalesce(array_to_string(
-         |    list_slice(string_split(a.all_toks, ' '), 1, 10), ' '), '')
-         |    AS sample
-         |FROM toks_t t LEFT JOIN agg a USING (doc_id)""".stripMargin,
-
-    "q_pretokenize" -> {
-      val pat = graft.ops.TextOps.PreTokenPattern.replace("'", "''")
-      val probe = graft.ops.TextOps.PreTokenProbe.replace("'", "''")
-      s"""WITH p AS (SELECT doc_id,
-         |    regexp_extract_all(text || '$probe', '$pat', 0) AS pt
-         |  FROM documents)
-         |SELECT doc_id, len(pt)::INT AS n_pretoks,
-         |  len(list_filter(pt, t ->
-         |    regexp_matches(t, '^[ \\t\\r\\n\\f]+$$')))::INT AS n_ws_runs,
-         |  md5(coalesce(array_to_string(pt, chr(1)), '')) AS pt_md5
-         |FROM p""".stripMargin
-    },
-
-    "q_bpe_bytelevel" ->
-      s"""$bpeByteReplaySql
-         |SELECT t.doc_id, coalesce(a.n_bpe, 0)::INT AS n_bpe,
-         |  md5(coalesce(a.all_toks, '')) AS toks_md5
-         |FROM toks_t t LEFT JOIN agg a USING (doc_id)""".stripMargin,
-
-    // GPT-2-convention ids over the same replay: vocabulary VALUES
-    // (256 byte units in byte order, then 256+rank per merge), tokens
-    // joined back by position
-    "q_bpe_token_ids" -> {
-      val vocab = graft.ops.TextOps
-        .byteLevelVocab(graft.ops.TextOps.BpeByteGateMerges)
-      val vv = vocab.toSeq.sortBy(_._2)
-        .map { case (t, i) => s"('${t.replace("'", "''")}', $i)" }
-        .mkString(", ")
-      s"""$bpeByteReplaySql,
-         |vv(tok, id) AS (VALUES $vv),
-         |wtok AS (SELECT word, wtoks[i] AS tok, i AS tord
-         |  FROM fin, unnest(range(1, len(wtoks) + 1)) AS u(i)),
-         |wids AS (SELECT word, list(vv.id ORDER BY wtok.tord) AS ids
-         |  FROM wtok JOIN vv ON vv.tok = wtok.tok GROUP BY word),
-         |aggi AS (SELECT doc_id,
-         |    sum(len(ids))::INT AS n_bpe,
-         |    sum(list_reduce(list_prepend(0::BIGINT,
-         |      list_transform(ids, x -> x::BIGINT)), (a, b) -> a + b))::BIGINT
-         |      AS ids_sum,
-         |    string_agg(array_to_string(list_transform(ids,
-         |      x -> x::VARCHAR), ' '), ' ' ORDER BY ord) AS all_ids
-         |  FROM wt JOIN wids USING (word) GROUP BY doc_id)
-         |SELECT t.doc_id, coalesce(a.n_bpe, 0)::INT AS n_bpe,
-         |  coalesce(a.ids_sum, 0)::BIGINT AS ids_sum,
-         |  md5(coalesce(a.all_ids, '')) AS ids_md5
-         |FROM toks_t t LEFT JOIN aggi a USING (doc_id)""".stripMargin
-    },
-
-    // special-token replay: the byte-level word encode (same
-    // mg/enc/fin machinery as bpeByteReplaySql, keyed per segment),
-    // with the special's id 256+|merges| injected at the CONSTRUCTED
-    // boundaries — the Spark side has to find them generically
-    "q_bpe_specials" -> bpeByteSegSpecialsSql,
-
-    "q_bpe_budget_audit" ->
-      s"""$bpeChainSql,
-         |est AS (SELECT doc_id, source,
-         |    len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\s]'))::BIGINT AS nt_est
-         |  FROM documents)
-         |SELECT e.source, count(*)::BIGINT AS n_docs,
-         |  sum(coalesce(a.n_bpe_real, 0))::BIGINT AS tokens_real,
-         |  sum(e.nt_est)::BIGINT AS tokens_est,
-         |  round(CASE WHEN sum(e.nt_est) > 0
-         |    THEN sum(coalesce(a.n_bpe_real, 0))::DOUBLE / sum(e.nt_est)::DOUBLE
-         |    END, 6) AS est_ratio
-         |FROM est e LEFT JOIN agg a USING (doc_id)
-         |GROUP BY e.source""".stripMargin,
-
-    "q_fingerprint" ->
-      """WITH n_t AS (SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS nrm FROM documents)
-        |SELECT doc_id, list_reduce(
-        |  list_prepend(0::BIGINT, list_transform(range(1, length(nrm) + 1), i -> ascii(nrm[i])::BIGINT)),
-        |  (acc, c) -> (acc * 31 + c) % 1000000007) AS fp
-        |FROM n_t""".stripMargin,
-
-    "q_redact" ->
-      """SELECT doc_id,
-        |  md5(regexp_replace(regexp_replace(text,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-        |    'https?://[^\s]+', '<URL>', 'g')) AS redacted_hash,
-        |  length(text) - length(regexp_replace(regexp_replace(text,
-        |    '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-        |    'https?://[^\s]+', '<URL>', 'g')) AS len_delta
-        |FROM documents""".stripMargin,
-
-    "q_cdc_chunks" -> {
-      val passage = "the shared press release body repeats verbatim " +
-        "across mirror sites with minor chrome and navigation " +
-        "differences around it while the core paragraph stays byte " +
-        "identical after whitespace normalization"
-      s"""WITH m AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 17 = 0 THEN text || ' $passage'
-         |         WHEN doc_id % 17 = 1 THEN '$passage ' || text
-         |         ELSE text END AS text
-         |  FROM documents),
-         |b AS (SELECT doc_id,
-         |    regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS nrm
-         |  FROM m),
-         |hit AS (SELECT doc_id, i FROM (
-         |    SELECT doc_id, i, md5(substr(nrm, (i - 15)::INT, 16)) AS h
-         |    FROM b, unnest(range(16, len(nrm) + 1)) AS t(i))
-         |  WHERE ${hexToLong("h", 1, 8)} % 64 = 0),
-         |bnd AS (SELECT b.doc_id, b.nrm,
-         |    list_concat(list_concat([0::BIGINT],
-         |      coalesce(list(hit.i ORDER BY hit.i)
-         |        FILTER (WHERE hit.i IS NOT NULL), [])),
-         |      [len(b.nrm)::BIGINT]) AS bounds
-         |  FROM b LEFT JOIN hit USING (doc_id) GROUP BY b.doc_id, b.nrm),
-         |e AS (SELECT doc_id, list_transform(
-         |    list_filter(list_transform(range(1, len(bounds)), j ->
-         |      substr(nrm, (bounds[j] + 1)::INT,
-         |        (bounds[j + 1] - bounds[j])::INT)), c -> c <> ''),
-         |    c -> md5(c)) AS chs
-         |  FROM bnd),
-         |p AS (SELECT DISTINCT doc_id, ch FROM (
-         |    SELECT doc_id, unnest(chs) AS ch FROM e)),
-         |dc AS (SELECT ch, count(*) AS nd FROM p GROUP BY ch),
-         |sh AS (SELECT doc_id, count(*) AS n_shared
-         |  FROM p JOIN dc USING (ch) WHERE nd >= 2 GROUP BY doc_id)
-         |SELECT e.doc_id, len(chs)::INT AS n_chunks,
-         |  len(list_distinct(chs))::INT AS n_distinct,
-         |  coalesce(sh.n_shared, 0)::BIGINT AS n_shared,
-         |  round(CASE WHEN len(list_distinct(chs)) > 0
-         |    THEN coalesce(sh.n_shared, 0)::DOUBLE
-         |      / len(list_distinct(chs))::DOUBLE END, 6) AS shared_frac
-         |FROM e LEFT JOIN sh USING (doc_id)""".stripMargin
-    },
-
-    "q_redact_pii" -> {
-      val redactSql = piiRedactSql("text")
-      def cnt(i: Int) =
-        s"len(regexp_extract_all(text, '${graft.ops.TextOps.PiiPatterns(i)._1}'))::INT"
-      s"""WITH m AS (SELECT doc_id,
-         |    text || CASE WHEN doc_id % 11 = 0
-         |      THEN ' call 555-867-5309 or +1 (415) 555-2671 now, card 4111 1111 1111 1111, host 10.0.255.254, id 1234567890 stays'
-         |      ELSE '' END AS text
-         |  FROM documents)
-         |SELECT doc_id, md5($redactSql) AS redacted_hash,
-         |  length(text) - length($redactSql) AS len_delta,
-         |  ${cnt(0)} AS n_cc, ${cnt(1)} AS n_phone, ${cnt(2)} AS n_ip
-         |FROM m""".stripMargin
-    },
-
-    "q_normalize_text" ->
-      s"""WITH m AS (SELECT doc_id,
-         |    text || CASE WHEN doc_id % 9 = 0 THEN ' ' || '$NormJunk'
-         |      ELSE '' END AS text
-         |  FROM documents),
-         |n_t AS (SELECT doc_id, text, ${normalizeSql("text")} AS norm FROM m)
-         |SELECT doc_id, md5(norm) AS norm_hash,
-         |  length(text) - length(norm) AS len_delta,
-         |  len(regexp_extract_all(text,
-         |    '${graft.ops.TextOps.MojibakePattern}'))::INT AS mojibake_hits
-         |FROM n_t""".stripMargin,
-
-    "q_extract_html" ->
-      s"""WITH h AS (SELECT doc_id,
-         |  '<html><!-- preview & <meta> --><head><title>T' || doc_id::VARCHAR
-         |  || '</title><style type="text/css">body { color: #000; }</style></head><body><nav><ul><li>Home</li><li>Docs</li></ul></nav><script type="text/javascript">var x = 1 < 2 && y > 0;</script><h1>Doc ' || doc_id::VARCHAR
-         |  || '</h1><p>' || text
-         |  || '</p><div class="tail">Tail &amp; entities &lt;b&gt; &quot;q&quot; &#39;s&#39;&nbsp;end</div><![CDATA[ raw <payload> ]]><table><tr><td>r' || doc_id::VARCHAR
-         |  || '</td><td>c2</td></tr></table><footer>(c) example</footer></body></html>' AS html
-         |  FROM documents),
-         |x AS (SELECT doc_id, length(html) AS n_html,
-         |  ${extractHtmlSql("html")} AS extracted FROM h)
-         |SELECT doc_id, n_html, extracted, length(extracted) AS n_text
-         |FROM x""".stripMargin,
-
-    "q_bigram_lm" ->
-      s"""WITH toks_t AS (SELECT $ToksSql AS toks FROM documents),
-         |bg0 AS (SELECT unnest(CASE WHEN len(toks) >= 2
-         |  THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-         |  ELSE [array_to_string(toks, ' ')] END) AS bigram FROM toks_t),
-         |bg AS (SELECT bigram, count(*) AS cnt FROM bg0 WHERE strpos(bigram, ' ') > 0 GROUP BY bigram),
-         |ug AS (SELECT w1, count(*) AS c1 FROM (SELECT unnest(toks) AS w1 FROM toks_t) GROUP BY w1)
-         |SELECT bigram, cnt, round(cnt / c1, 6) AS cond_p
-         |FROM bg JOIN ug ON split_part(bigram, ' ', 1) = ug.w1
-         |ORDER BY cnt DESC, bigram ASC LIMIT 20""".stripMargin,
-
-    "q_vocab_topk" ->
-      """SELECT token, count(*) AS cnt FROM (
-        |  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents)
-        |GROUP BY token ORDER BY cnt DESC, token ASC LIMIT 20""".stripMargin,
-
-    "q_zipf_fit" ->
-      """WITH f AS (SELECT token, count(*) AS f FROM (
-        |    SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents)
-        |  GROUP BY token ORDER BY f DESC, token ASC LIMIT 50),
-        |r AS (SELECT f, row_number() OVER (ORDER BY f DESC, token ASC) AS rnk FROM f),
-        |m AS (SELECT CAST(round(ln(rnk::DOUBLE) * 1e6) AS BIGINT) AS x,
-        |    CAST(round(ln(f::DOUBLE) * 1e6) AS BIGINT) AS y FROM r)
-        |SELECT count(*)::BIGINT AS k,
-        |  round((count(*) * sum(x * y) - sum(x) * sum(y))::DOUBLE
-        |    / (count(*) * sum(x * x) - sum(x) * sum(x))::DOUBLE, 6) AS zipf_slope
-        |FROM m""".stripMargin,
-
-    "q_containment" ->
-      s"""$PairsCte,
-         |dsh_t AS (SELECT doc_id, list_distinct(sh) AS dsh FROM sh_t)
-         |SELECT p.id1, p.id2,
-         |  round(len(list_intersect(a.dsh, b.dsh))::DOUBLE / len(a.dsh)::DOUBLE, 6) AS c_fwd,
-         |  round(len(list_intersect(a.dsh, b.dsh))::DOUBLE / len(b.dsh)::DOUBLE, 6) AS c_rev
-         |FROM pairs_t p JOIN dsh_t a ON p.id1 = a.doc_id JOIN dsh_t b ON p.id2 = b.doc_id""".stripMargin,
-
-    "q_containment_dedup" ->
-      s"""$PairsCte,
-         |dsh_t AS (SELECT doc_id, list_distinct(sh) AS dsh FROM sh_t),
-         |vals AS (SELECT p.id1, p.id2,
-         |    round(len(list_intersect(a.dsh, b.dsh))::DOUBLE / len(a.dsh)::DOUBLE, 6) AS c_fwd,
-         |    round(len(list_intersect(a.dsh, b.dsh))::DOUBLE / len(b.dsh)::DOUBLE, 6) AS c_rev
-         |  FROM pairs_t p JOIN dsh_t a ON p.id1 = a.doc_id JOIN dsh_t b ON p.id2 = b.doc_id),
-         |drops AS (SELECT DISTINCT CASE
-         |    WHEN c_fwd >= 0.9 AND c_rev >= 0.9 THEN id2
-         |    WHEN c_fwd >= 0.9 THEN id1 ELSE id2 END AS doc_id
-         |  FROM vals WHERE c_fwd >= 0.9 OR c_rev >= 0.9)
-         |SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM drops)""".stripMargin,
-
-    "q_source_kl" ->
-      """WITH tk AS (SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents),
-        |st AS (SELECT source, token, count(*) AS c_st FROM tk GROUP BY source, token),
-        |g AS (SELECT token, sum(c_st)::BIGINT AS c_t FROM st GROUP BY token),
-        |ns AS (SELECT source, sum(c_st)::BIGINT AS n_s FROM st GROUP BY source),
-        |nn AS (SELECT sum(c_st)::BIGINT AS n FROM st)
-        |SELECT st.source, ns.n_s AS n_tokens,
-        |  round(sum(st.c_st * CAST(round(ln((st.c_st::DOUBLE * (SELECT n FROM nn)::DOUBLE)
-        |      / (ns.n_s::DOUBLE * g.c_t::DOUBLE)) * 1000000) AS BIGINT))::DOUBLE
-        |    / 1000000.0 / ns.n_s::DOUBLE, 6) AS kl_unigram
-        |FROM st JOIN g USING (token) JOIN ns USING (source)
-        |GROUP BY st.source, ns.n_s""".stripMargin,
-
-    "q_length_ks" ->
-      """WITH sl AS (SELECT source, least(length(text) // 64, 4095) AS b, count(*) AS c
-        |    FROM documents GROUP BY source, b),
-        |ns AS (SELECT source, sum(c)::BIGINT AS n_s FROM sl GROUP BY source),
-        |nn AS (SELECT sum(c)::BIGINT AS n FROM sl),
-        |grid AS (SELECT DISTINCT b FROM sl),
-        |dense AS (SELECT ns.source, ns.n_s, grid.b, coalesce(sl.c, 0)::BIGINT AS c
-        |  FROM ns CROSS JOIN grid LEFT JOIN sl ON sl.source = ns.source AND sl.b = grid.b),
-        |cs AS (SELECT source, n_s, b,
-        |  (sum(c) OVER (PARTITION BY source ORDER BY b))::BIGINT AS cum_s FROM dense),
-        |gl AS (SELECT b, sum(c)::BIGINT AS cb FROM sl GROUP BY b),
-        |cg AS (SELECT b, (sum(cb) OVER (ORDER BY b))::BIGINT AS cum_g FROM gl)
-        |SELECT cs.source, cs.n_s AS n_docs,
-        |  round(max(abs(cs.cum_s * (SELECT n FROM nn) - cg.cum_g * cs.n_s))::DOUBLE
-        |    / (cs.n_s * (SELECT n FROM nn))::DOUBLE, 6) AS ks
-        |FROM cs JOIN cg USING (b)
-        |GROUP BY cs.source, cs.n_s""".stripMargin,
-
-    "q_dsir_weights" ->
-      """WITH tk AS (SELECT doc_id, source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents),
-        |tf AS (SELECT doc_id, token, count(*) AS c_dt FROM tk GROUP BY doc_id, token),
-        |raw AS (SELECT token, count(*) AS c_t FROM tk GROUP BY token),
-        |tgt AS (SELECT token, count(*) AS c_tt FROM tk WHERE source = 'src3' GROUP BY token),
-        |st AS (SELECT (SELECT sum(c_t)::BIGINT FROM raw) AS n_raw,
-        |              (SELECT count(*)::BIGINT FROM raw) AS v,
-        |              (SELECT count(*)::BIGINT FROM tk WHERE source = 'src3') AS n_tgt),
-        |term AS (SELECT raw.token,
-        |  CAST(round(ln(((coalesce(tgt.c_tt, 0) + 1)::DOUBLE * st.n_raw::DOUBLE)
-        |    / ((st.n_tgt + st.v)::DOUBLE * raw.c_t::DOUBLE)) * 1000000) AS BIGINT) AS t_micro
-        |  FROM raw LEFT JOIN tgt USING (token) CROSS JOIN st)
-        |SELECT tf.doc_id, sum(tf.c_dt)::BIGINT AS n_tokens,
-        |  (sum(tf.c_dt * term.t_micro) // sum(tf.c_dt))::BIGINT AS dsir_micro
-        |FROM tf JOIN term USING (token)
-        |GROUP BY tf.doc_id""".stripMargin,
-
-    "q_embed_clusters" ->
-      s"""${SrpPairsCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |ee AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM pairs WHERE cos >= 0.4
-         |  UNION ALL SELECT id2, id1 FROM pairs WHERE cos >= 0.4),
-         |reach(node, r) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT reach.node, ee.dst FROM reach JOIN ee ON reach.r = ee.src),
-         |cl AS (SELECT node AS vec_id, min(r) AS cluster_id FROM reach GROUP BY node)
-         |SELECT vec_id, cluster_id FROM cl""".stripMargin,
-
-    "q_embed_clusters_auto" ->
-      s"""${SrpPairsAutoCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |ee AS MATERIALIZED (SELECT id1 AS src, id2 AS dst FROM pairs WHERE cos >= 0.4
-         |  UNION ALL SELECT id2, id1 FROM pairs WHERE cos >= 0.4),
-         |reach(node, r) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT reach.node, ee.dst FROM reach JOIN ee ON reach.r = ee.src),
-         |cl AS (SELECT node AS vec_id, min(r) AS cluster_id FROM reach GROUP BY node)
-         |SELECT vec_id, cluster_id FROM cl""".stripMargin,
-
-    "q_session_window" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu, value FROM events),
-        |l AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev FROM e),
-        |s AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev > 1800000000 THEN 1 ELSE 0 END AS is_new FROM l),
-        |c AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM s)
-        |SELECT user_id, min(tsu) AS start_us, max(tsu) + 1800000000 AS end_us,
-        |  count(*) AS n_events,
-        |  round(sum(CAST(round(value * 1000000) AS BIGINT)) / 1000000.0, 6) AS sum_value
-        |FROM c GROUP BY user_id, c.session_seq""".stripMargin,
-
-    "q_split_leakfree" ->
-      s"""$ClustersCte
-         |SELECT doc_id, CASE
-         |  WHEN (${hexToLong("md5(cluster_id::VARCHAR)", 1, 8)}) % 100 < 80 THEN 'train'
-         |  WHEN (${hexToLong("md5(cluster_id::VARCHAR)", 1, 8)}) % 100 < 90 THEN 'val'
-         |  ELSE 'test' END AS split
-         |FROM clusters_t""".stripMargin,
-
-    "q_similarity_join" ->
-      s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |sh0 AS (SELECT doc_id, $ShinglesSql AS sh FROM toks_t),
-         |tk AS (SELECT doc_id, unnest(list_distinct(sh)) AS g FROM sh0),
-         |sets AS (SELECT doc_id, count(*) AS n FROM tk GROUP BY doc_id),
-         |cand AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*)::BIGINT AS inter
-         |  FROM tk a JOIN tk b ON a.g = b.g AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         |v AS (SELECT cand.id1, cand.id2, cand.inter,
-         |    (x.n + y.n - cand.inter)::BIGINT AS un
-         |  FROM cand JOIN sets x ON cand.id1 = x.doc_id JOIN sets y ON cand.id2 = y.doc_id)
-         |SELECT id1, id2, round(inter::DOUBLE / un::DOUBLE, 6) AS jaccard
-         |FROM v WHERE inter * 2 >= un * 1""".stripMargin,
-
-    "q_winnow_pairs" ->
-      s"""WITH nr AS (SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS nrm FROM documents),
-         |hs AS (SELECT doc_id, CASE WHEN length(nrm) < 24 THEN [${hexToLong("md5(nrm)", 1, 8)}]
-         |  ELSE list_transform(range(1, length(nrm) - 22), p -> ${hexToLong("md5(substr(nrm, p, 24))", 1, 8)}) END AS hs FROM nr),
-         |fp AS (SELECT doc_id, CASE WHEN len(hs) <= 8 THEN [list_min(hs)]
-         |  ELSE list_distinct(list_transform(range(1, len(hs) - 6), j -> list_min(list_slice(hs, j, j + 7)))) END AS fps FROM hs),
-         |tk AS (SELECT doc_id, unnest(fps) AS fp FROM fp)
-         |SELECT a.doc_id AS id1, b.doc_id AS id2, count(*)::BIGINT AS shared_fp
-         |FROM tk a JOIN tk b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-
-    "q_winnow_pairs_capped" ->
-      s"""WITH nr AS (SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS nrm FROM documents),
-         |hs AS (SELECT doc_id, CASE WHEN length(nrm) < 24 THEN [${hexToLong("md5(nrm)", 1, 8)}]
-         |  ELSE list_transform(range(1, length(nrm) - 22), p -> ${hexToLong("md5(substr(nrm, p, 24))", 1, 8)}) END AS hs FROM nr),
-         |fp AS (SELECT doc_id, CASE WHEN len(hs) <= 8 THEN [list_min(hs)]
-         |  ELSE list_distinct(list_transform(range(1, len(hs) - 6), j -> list_min(list_slice(hs, j, j + 7)))) END AS fps FROM hs),
-         |tk AS (SELECT doc_id, unnest(fps) AS fp FROM fp),
-         |bstat AS (SELECT fp, count(*) AS m, min(doc_id) AS hub FROM tk GROUP BY fp),
-         |bx AS (SELECT tk.doc_id, tk.fp, s.m, s.hub FROM tk JOIN bstat s USING (fp)),
-         |pr AS (
-         |  SELECT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bx a JOIN bx b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |  WHERE a.m <= 2
-         |  UNION ALL
-         |  SELECT hub AS id1, doc_id AS id2 FROM bx WHERE m > 2 AND doc_id <> hub)
-         |SELECT id1, id2, count(*)::BIGINT AS shared_fp
-         |FROM pr GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
-
-    "q_similarity_join_capped" ->
-      s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |sh0 AS (SELECT doc_id, $ShinglesSql AS sh FROM toks_t),
-         |tk AS (SELECT doc_id, unnest(list_distinct(sh)) AS g FROM sh0),
-         |sets AS (SELECT doc_id, count(*) AS n FROM tk GROUP BY doc_id),
-         |freq AS (SELECT g, count(*) AS df FROM tk GROUP BY g),
-         |ranked AS (SELECT tk.doc_id, tk.g, s.n,
-         |    row_number() OVER (PARTITION BY tk.doc_id ORDER BY f.df ASC, tk.g ASC) AS rn
-         |  FROM tk JOIN freq f USING (g) JOIN sets s USING (doc_id)),
-         |pfx AS (SELECT doc_id, g, n FROM ranked WHERE rn <= n - ((1 * n + 1) // 2) + 1),
-         |bstat AS (SELECT g, count(*) AS m, min(doc_id) AS hub FROM pfx GROUP BY g),
-         |px AS (SELECT p.doc_id, p.g, p.n, s.m, s.hub FROM pfx p JOIN bstat s USING (g)),
-         |cand AS (SELECT DISTINCT id1, id2 FROM (
-         |    SELECT a.doc_id AS id1, b.doc_id AS id2
-         |    FROM px a JOIN px b ON a.g = b.g AND a.doc_id < b.doc_id
-         |      AND a.n * 2 >= b.n * 1 AND b.n * 2 >= a.n * 1
-         |    WHERE a.m <= 2
-         |    UNION ALL
-         |    SELECT hub AS id1, doc_id AS id2 FROM px WHERE m > 2 AND doc_id <> hub)),
-         |iv AS (SELECT c.id1, c.id2, count(*)::BIGINT AS inter
-         |  FROM cand c JOIN tk a ON a.doc_id = c.id1 JOIN tk b ON b.doc_id = c.id2 AND b.g = a.g
-         |  GROUP BY 1, 2),
-         |v AS (SELECT iv.id1, iv.id2, iv.inter, (x.n + y.n - iv.inter)::BIGINT AS un
-         |  FROM iv JOIN sets x ON iv.id1 = x.doc_id JOIN sets y ON iv.id2 = y.doc_id)
-         |SELECT id1, id2, round(inter::DOUBLE / un::DOUBLE, 6) AS jaccard
-         |FROM v WHERE inter * 2 >= un * 1""".stripMargin,
-
-    "q_cosine_topk" ->
-      s"""$EmbCte,
-         |scored AS (SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         |    round(${dotSql("q.v", "c.v")} / (q.nrm * c.nrm), 6) AS cos
-         |  FROM n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id < 10)
-         |SELECT q_id, neighbor_id, cos, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-         |  FROM scored)
-         |WHERE rn <= 5""".stripMargin,
-
-    "q_margin_mine" ->
-      s"""$EmbCte,
-         |scored AS (SELECT q.vec_id AS q_id, c.vec_id AS match_id,
-         |    round(${dotSql("q.v", "c.v")} / (q.nrm * c.nrm), 6) AS cos
-         |  FROM n q JOIN n c ON q.vec_id < 10 AND NOT c.vec_id < 10),
-         |rk AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY cos DESC, match_id ASC) AS rn FROM scored),
-         |agg AS (SELECT q_id,
-         |    max(CASE WHEN rn = 1 THEN match_id END) AS match_id,
-         |    max(CASE WHEN rn = 1 THEN cos END) AS cos_best,
-         |    max(CASE WHEN rn = 2 THEN cos END) AS cos_second
-         |  FROM rk WHERE rn <= 2 GROUP BY q_id)
-         |SELECT q_id, match_id, cos_best, cos_second,
-         |  round(cos_best - cos_second, 6) AS margin
-         |FROM agg WHERE round(cos_best - cos_second, 6) >= 0.02""".stripMargin,
-
-    "q_hard_negatives" ->
-      s"""$EmbCte,
-         |scored AS (SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         |    round(${dotSql("q.v", "c.v")} / (q.nrm * c.nrm), 6) AS cos
-         |  FROM n q JOIN n c ON c.vec_id <> q.vec_id AND c.vec_id <> q.vec_id + 10
-         |  WHERE q.vec_id < 10)
-         |SELECT q_id, neighbor_id, cos, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-         |  FROM scored)
-         |WHERE rn <= 3""".stripMargin,
-
-    "q_embed_neardup" ->
-      s"""$SrpPairsCte
-         |SELECT id1, id2, cos FROM pairs WHERE cos >= 0.4""".stripMargin,
-
-    "q_ann_lsh" ->
-      s"""$EmbCte,
-         |bk AS (SELECT vec_id, v, nrm, array_to_string(list_transform(range(0, $LshPlanes), p ->
-         |    CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
-         |      d -> v[d] * ${planeWeightSql("p", "d - 1")})), (acc, x) -> acc + x) >= 0
-         |    THEN '1' ELSE '0' END), '') AS bucket
-         |  FROM n),
-         |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm, bucket FROM bk WHERE vec_id < 10),
-         |scored AS (SELECT q.q_id, c.vec_id AS neighbor_id,
-         |    round(${dotSql("c.v", "q.qv")} / (c.nrm * q.qnrm), 6) AS cos
-         |  FROM bk c JOIN q ON c.bucket = q.bucket AND c.vec_id <> q.q_id)
-         |SELECT q_id, neighbor_id, cos FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-         |  FROM scored)
-         |WHERE rn = 1""".stripMargin,
-
-    "q_ann_recall" ->
-      s"""$EmbCte,
-         |ex AS (SELECT q_id, neighbor_id FROM (
-         |  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |      round(${dotSql("q.v", "c.v")} / (q.nrm * c.nrm), 6) DESC,
-         |      c.vec_id ASC) AS rn
-         |  FROM n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id < 10)
-         |  WHERE rn <= 5),
-         |bk AS (SELECT vec_id, array_to_string(list_transform(range(0, $LshPlanes), p ->
-         |    CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
-         |      d -> v[d] * ${planeWeightSql("p", "d - 1")})), (acc, x) -> acc + x) >= 0
-         |    THEN '1' ELSE '0' END), '') AS bucket
-         |  FROM n),
-         |cand AS (SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS neighbor_id
-         |  FROM bk c JOIN bk q ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-         |  WHERE q.vec_id < 10)
-         |SELECT ex.q_id, count(*) AS k,
-         |  sum(CASE WHEN cand.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-         |  round(sum(CASE WHEN cand.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*)::DOUBLE, 6) AS recall
-         |FROM ex LEFT JOIN cand
-         |  ON ex.q_id = cand.q_id AND ex.neighbor_id = cand.neighbor_id
-         |GROUP BY ex.q_id""".stripMargin,
-
-    "q_pq_codes" ->
-      s"""$pqChainSql
-         |SELECT vec_id, array_to_string(list(code ORDER BY s), '|') AS codes
-         |FROM enc GROUP BY vec_id""".stripMargin,
-
-    "q_kmeans" -> {
-      // unrolled 2-iteration Lloyd replay: seeds (micro-scaled) -> asg ->
-      // refit c1 -> asg -> refit c2 -> FINAL assignment. Each refit
-      // micro-rounds, so every iteration is engine-exact.
-      def asgSql(centCte: String): String =
-        s"""SELECT vec_id, cell FROM (
-           |    SELECT nn.vec_id, c.cell,
-           |      row_number() OVER (PARTITION BY nn.vec_id
-           |        ORDER BY round(${dotSql("nn.v", "c.cv")} / (nn.nrm * c.cnrm), 6) DESC,
-           |          c.cell ASC) AS rn
-           |    FROM nn CROSS JOIN $centCte c) WHERE rn = 1""".stripMargin
-      def refitSql(asgCte: String): String =
-        s"""SELECT cell, cv, sqrt(${dotSql("cv", "cv")}) AS cnrm FROM (
-           |  SELECT a.cell, list_transform(list(CAST(round(cx * 1000000) AS BIGINT)
-           |      ORDER BY idx), x -> x / 1000000.0) AS cv FROM (
-           |    SELECT a.cell, idx, avg(v[idx]) AS cx
-           |    FROM nn JOIN $asgCte a ON nn.vec_id = a.vec_id,
-           |      unnest(range(1, len(v) + 1)) AS t(idx)
-           |    GROUP BY a.cell, idx) a(cell, idx, cx)
-           |  GROUP BY cell)""".stripMargin
-      s"""$EmbCte,
-         |nn AS (SELECT vec_id, v,
-         |    sqrt(${dotSql("v", "v")}) AS nrm
-         |  FROM n WHERE v IS NOT NULL AND len(v) > 0),
-         |c0 AS (SELECT (row_number() OVER (
-         |      ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::INT AS cell,
-         |    list_transform(v, x -> CAST(round(x * 1000000) AS BIGINT) / 1000000.0) AS cv
-         |  FROM (SELECT vec_id, v FROM nn
-         |        ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8)),
-         |c0n AS (SELECT cell, cv, sqrt(${dotSql("cv", "cv")}) AS cnrm FROM c0),
-         |a1 AS (${asgSql("c0n")}),
-         |c1 AS (${refitSql("a1")}),
-         |a2 AS (${asgSql("c1")}),
-         |c2 AS (${refitSql("a2")})
-         |${asgSql("c2")}""".stripMargin
-    },
-
-    // residual IVFADC (r17, Jégou et al. TPAMI 2011 §IV): the IVF part
-    // (iseed → iasg → ie → icvn) runs FIRST, PQ trains/encodes the
-    // per-cell residuals res = v − c(cell), and scoring reconstructs
-    // rec = c_sub + r̃_sub per subspace before the ADC fold
-    "q_ann_ivf_pq" ->
-      s"""$EmbCte,
-         |u AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS v
-         |  FROM n WHERE nrm > 0),
-         |un AS (SELECT vec_id, v, sqrt(${dotSql("v", "v")}) AS nrm FROM u),
-         |iseed AS (SELECT (row_number() OVER (
-         |      ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::INT AS cell,
-         |    v AS sv, nrm AS snrm
-         |  FROM (SELECT vec_id, v, nrm FROM un
-         |        ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8)),
-         |iasg AS (SELECT vec_id, cell FROM (
-         |    SELECT un.vec_id, iseed.cell,
-         |      row_number() OVER (PARTITION BY un.vec_id
-         |        ORDER BY round(${dotSql("un.v", "iseed.sv")} / (un.nrm * iseed.snrm), 6) DESC,
-         |          iseed.cell ASC) AS rn
-         |    FROM un CROSS JOIN iseed) WHERE rn = 1),
-         |ie AS (SELECT a.cell, idx, avg(v[idx]) AS cx
-         |  FROM un JOIN iasg a ON un.vec_id = a.vec_id,
-         |    unnest(range(1, len(v) + 1)) AS t(idx)
-         |  GROUP BY a.cell, idx),
-         |icvn AS (SELECT cell AS c_cell, cv,
-         |    sqrt(${dotSql("cv", "cv")}) AS cnrm FROM (
-         |  SELECT cell, list_transform(list(CAST(round(cx * 1000000) AS BIGINT)
-         |      ORDER BY idx), x -> x / 1000000.0) AS cv
-         |  FROM ie GROUP BY cell)),
-         |res AS (SELECT un.vec_id,
-         |    list_transform(range(1, len(un.v) + 1), i -> un.v[i] - nc.cv[i]) AS v
-         |  FROM un JOIN iasg a ON un.vec_id = a.vec_id
-         |  JOIN icvn nc ON nc.c_cell = a.cell),
-         |${pqChainOverSql("res")},
-         |recs AS (SELECT e.vec_id, e.s,
-         |    list_transform(range(1, ${EmbDim / PqM} + 1),
-         |      j -> nc.cv[e.s * ${EmbDim / PqM} + j] + cb.cw[j]) AS rec
-         |  FROM enc e JOIN iasg a ON e.vec_id = a.vec_id
-         |  JOIN cb ON cb.s = e.s AND cb.c_cell = e.code
-         |  JOIN icvn nc ON nc.c_cell = a.cell),
-         |q2 AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm
-         |  FROM un WHERE vec_id < 10),
-         |qc AS (SELECT q_id, qv, qnrm, c_cell AS qcell FROM (
-         |    SELECT q2.q_id, q2.qv, q2.qnrm, icvn.c_cell,
-         |      row_number() OVER (PARTITION BY q2.q_id
-         |        ORDER BY round(${dotSql("q2.qv", "icvn.cv")} / (q2.qnrm * icvn.cnrm), 6) DESC,
-         |          icvn.c_cell ASC) AS rn
-         |    FROM q2 CROSS JOIN icvn)
-         |  WHERE rn <= 2),
-         |parts2 AS (SELECT qc.q_id, r.vec_id AS neighbor_id, r.s, qc.qnrm,
-         |    ${dotSql(s"list_slice(qc.qv, r.s*${EmbDim / PqM} + 1, r.s*${EmbDim / PqM} + ${EmbDim / PqM})", "r.rec")} AS part,
-         |    ${dotSql("r.rec", "r.rec")} AS cwsq
-         |  FROM qc JOIN iasg a ON a.cell = qc.qcell
-         |  JOIN recs r ON r.vec_id = a.vec_id AND r.vec_id <> qc.q_id),
-         |sc2 AS (SELECT q_id, neighbor_id,
-         |    round(list_reduce(list_prepend(0.0, list(part ORDER BY s)),
-         |        (a, b) -> a + b)
-         |      / (min(qnrm) * sqrt(list_reduce(list_prepend(0.0,
-         |        list(cwsq ORDER BY s)), (a, b) -> a + b))), 6) AS score_pq
-         |  FROM parts2 GROUP BY q_id, neighbor_id)
-         |SELECT q_id, neighbor_id, score_pq, rn FROM (
-         |  SELECT q_id, neighbor_id, score_pq,
-         |    (row_number() OVER (PARTITION BY q_id
-         |      ORDER BY score_pq DESC, neighbor_id ASC))::INT AS rn
-         |  FROM sc2)
-         |WHERE rn <= 3""".stripMargin,
-
-    "q_ann_pq" ->
-      s"""$pqChainSql,
-         |q AS (SELECT vec_id AS q_id, v AS qv,
-         |    sqrt(${dotSql("v", "v")}) AS qnrm
-         |  FROM u WHERE vec_id < 10),
-         |parts AS (SELECT q.q_id, e.vec_id AS neighbor_id, e.s, q.qnrm,
-         |    ${dotSql(s"list_slice(q.qv, e.s*${EmbDim / PqM} + 1, e.s*${EmbDim / PqM} + ${EmbDim / PqM})", "cb.cw")} AS part,
-         |    ${dotSql("cb.cw", "cb.cw")} AS cwsq
-         |  FROM q JOIN enc e ON e.vec_id <> q.q_id
-         |  JOIN cb ON cb.s = e.s AND cb.c_cell = e.code),
-         |sc AS (SELECT q_id, neighbor_id,
-         |    round(list_reduce(list_prepend(0.0, list(part ORDER BY s)),
-         |        (a, b) -> a + b)
-         |      / (min(qnrm) * sqrt(list_reduce(list_prepend(0.0,
-         |        list(cwsq ORDER BY s)), (a, b) -> a + b))), 6) AS score_pq
-         |  FROM parts GROUP BY q_id, neighbor_id),
-         |pq5 AS (SELECT q_id, neighbor_id FROM (
-         |    SELECT q_id, neighbor_id, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY score_pq DESC, neighbor_id ASC) AS rn FROM sc)
-         |  WHERE rn <= 5),
-         |ex AS (SELECT q_id, neighbor_id FROM (
-         |    SELECT qq.vec_id AS q_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY qq.vec_id ORDER BY
-         |        round(${dotSql("qq.v", "c.v")} / (qq.nrm * c.nrm), 6) DESC,
-         |        c.vec_id ASC) AS rn
-         |    FROM n qq JOIN n c ON c.vec_id <> qq.vec_id WHERE qq.vec_id < 10)
-         |  WHERE rn <= 5)
-         |SELECT ex.q_id, count(*) AS k,
-         |  sum(CASE WHEN pq5.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-         |  round(sum(CASE WHEN pq5.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*)::DOUBLE, 6) AS recall
-         |FROM ex LEFT JOIN pq5
-         |  ON ex.q_id = pq5.q_id AND ex.neighbor_id = pq5.neighbor_id
-         |GROUP BY ex.q_id""".stripMargin,
-
-    "q_ann_pq_rerank" ->
-      s"""$pqChainSql,
-         |q AS (SELECT vec_id AS q_id, v AS qv,
-         |    sqrt(${dotSql("v", "v")}) AS qnrm
-         |  FROM u WHERE vec_id < 10),
-         |parts AS (SELECT q.q_id, e.vec_id AS neighbor_id, e.s, q.qnrm,
-         |    ${dotSql(s"list_slice(q.qv, e.s*${EmbDim / PqM} + 1, e.s*${EmbDim / PqM} + ${EmbDim / PqM})", "cb.cw")} AS part,
-         |    ${dotSql("cb.cw", "cb.cw")} AS cwsq
-         |  FROM q JOIN enc e ON e.vec_id <> q.q_id
-         |  JOIN cb ON cb.s = e.s AND cb.c_cell = e.code),
-         |sc AS (SELECT q_id, neighbor_id,
-         |    round(list_reduce(list_prepend(0.0, list(part ORDER BY s)),
-         |        (a, b) -> a + b)
-         |      / (min(qnrm) * sqrt(list_reduce(list_prepend(0.0,
-         |        list(cwsq ORDER BY s)), (a, b) -> a + b))), 6) AS score_pq
-         |  FROM parts GROUP BY q_id, neighbor_id),
-         |cand AS (SELECT q_id, neighbor_id FROM (
-         |    SELECT q_id, neighbor_id, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY score_pq DESC, neighbor_id ASC) AS rn FROM sc)
-         |  WHERE rn <= 20),
-         |rr AS (SELECT q_id, neighbor_id FROM (
-         |    SELECT cand.q_id, cand.neighbor_id,
-         |      row_number() OVER (PARTITION BY cand.q_id ORDER BY
-         |        round(${dotSql("uq.v", "un.v")} /
-         |          (sqrt(${dotSql("uq.v", "uq.v")}) *
-         |           sqrt(${dotSql("un.v", "un.v")})), 6) DESC,
-         |        cand.neighbor_id ASC) AS rn
-         |    FROM cand JOIN u uq ON uq.vec_id = cand.q_id
-         |    JOIN u un ON un.vec_id = cand.neighbor_id)
-         |  WHERE rn <= 5),
-         |ex AS (SELECT q_id, neighbor_id FROM (
-         |    SELECT qq.vec_id AS q_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY qq.vec_id ORDER BY
-         |        round(${dotSql("qq.v", "c.v")} / (qq.nrm * c.nrm), 6) DESC,
-         |        c.vec_id ASC) AS rn
-         |    FROM n qq JOIN n c ON c.vec_id <> qq.vec_id WHERE qq.vec_id < 10)
-         |  WHERE rn <= 5)
-         |SELECT ex.q_id, count(*) AS k,
-         |  sum(CASE WHEN rr.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-         |  round(sum(CASE WHEN rr.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*)::DOUBLE, 6) AS recall
-         |FROM ex LEFT JOIN rr
-         |  ON ex.q_id = rr.q_id AND ex.neighbor_id = rr.neighbor_id
-         |GROUP BY ex.q_id""".stripMargin,
-
-    "q_ann_int8" ->
-      s"""WITH c AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-         |s AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS sc FROM c),
-         |q8 AS (SELECT vec_id, list_transform(v, x ->
-         |  (CASE WHEN sc > 0 THEN CAST(round(x / sc) AS INT) ELSE 0 END)::DOUBLE) AS qv FROM s),
-         |n AS (SELECT vec_id, qv,
-         |  sqrt(list_reduce(list_prepend(0.0, list_transform(qv, x -> x*x)), (a, x) -> a + x)) AS qnrm
-         |  FROM q8),
-         |scored AS (SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         |    round(${dotSql("c.qv", "q.qv")} / (c.qnrm * q.qnrm), 6) AS qcos
-         |  FROM n q JOIN n c ON c.vec_id <> q.vec_id WHERE q.vec_id < 10)
-         |SELECT q_id, neighbor_id, qcos, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, neighbor_id ASC) AS rn
-         |  FROM scored)
-         |WHERE rn <= 5""".stripMargin,
-
-    "q_semantic_dedup" ->
-      s"""$SrpPairsCte,
-         |drops AS (SELECT DISTINCT id2 AS vec_id FROM pairs WHERE cos >= 0.4)
-         |SELECT vec_id FROM n WHERE vec_id NOT IN (SELECT vec_id FROM drops)""".stripMargin,
-
-    "q_semantic_dedup_auto" ->
-      s"""$SrpPairsAutoCte,
-         |drops AS (SELECT DISTINCT id2 AS vec_id FROM pairs WHERE cos >= 0.4)
-         |SELECT vec_id FROM n WHERE vec_id NOT IN (SELECT vec_id FROM drops)""".stripMargin,
-
-    "q_quantize_int8" ->
-      """WITH c AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |s AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS sc FROM c)
-        |SELECT vec_id, round(sc, 6) AS scale,
-        |  array_to_string(list_transform(v, x ->
-        |    (CASE WHEN sc > 0 THEN CAST(round(x / sc) AS INT) ELSE 0 END)::VARCHAR), '|') AS qvec
-        |FROM s""".stripMargin,
-
-    "q_centroids" ->
-      """WITH c AS (SELECT label, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |e AS (SELECT label, idx, avg(v[idx]) AS cx
-        |  FROM c, unnest(range(1, len(v) + 1)) AS t(idx) GROUP BY label, idx)
-        |SELECT label, array_to_string(
-        |  list(CAST(round(cx * 1000000) AS BIGINT)::VARCHAR ORDER BY idx), '|') AS centroid
-        |FROM e GROUP BY label""".stripMargin,
-
-    "q_ann_ivf" ->
-      s"""$EmbCte,
-         |lbl AS (SELECT vec_id, label FROM embeddings),
-         |nl AS (SELECT n.vec_id, lbl.label, n.v, n.nrm FROM n JOIN lbl ON n.vec_id = lbl.vec_id),
-         |e AS (SELECT label, idx, avg(v[idx]) AS cx
-         |  FROM nl, unnest(range(1, len(v) + 1)) AS t(idx) GROUP BY label, idx),
-         |cent AS (SELECT label AS c_label,
-         |  list_transform(list(CAST(round(cx * 1000000) AS BIGINT) ORDER BY idx), x -> x / 1000000.0) AS cv
-         |  FROM e GROUP BY label),
-         |cvn AS (SELECT c_label, cv,
-         |  sqrt(list_reduce(list_prepend(0.0, list_transform(cv, x -> x*x)), (a, x) -> a + x)) AS cnrm
-         |  FROM cent),
-         |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM nl WHERE vec_id < 10),
-         |assign_t AS (SELECT q_id, qv, qnrm, cell FROM (
-         |  SELECT q.q_id, q.qv, q.qnrm, cvn.c_label AS cell,
-         |    row_number() OVER (PARTITION BY q.q_id
-         |      ORDER BY round(${dotSql("q.qv", "cvn.cv")} / (q.qnrm * cvn.cnrm), 6) DESC, cvn.c_label ASC) AS rn
-         |  FROM q CROSS JOIN cvn)
-         |  WHERE rn = 1),
-         |scored AS (SELECT a.q_id, a.cell, c.vec_id AS neighbor_id,
-         |    round(${dotSql("c.v", "a.qv")} / (c.nrm * a.qnrm), 6) AS cos
-         |  FROM nl c JOIN assign_t a ON c.label = a.cell AND c.vec_id <> a.q_id)
-         |SELECT q_id, cell, neighbor_id, cos FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-         |  FROM scored)
-         |WHERE rn = 1""".stripMargin,
-
-    "q_ann_ivf_refit" -> ivfRefitOracleSql(nprobe = 1),
-
-    // per-cell load vs balanced N/k over the SAME seed-assignment the
-    // refit oracle replays (nn -> seeds -> asg), then one count
-    "q_ivf_cell_drift" ->
-      s"""$EmbCte,
-         |nn AS (SELECT vec_id, v, nrm FROM n
-         |  WHERE v IS NOT NULL AND len(v) > 0),
-         |seeds AS (SELECT (row_number() OVER (
-         |      ORDER BY md5(vec_id::VARCHAR), vec_id) - 1)::INT AS cell,
-         |    v AS sv, nrm AS snrm
-         |  FROM (SELECT vec_id, v, nrm FROM nn
-         |        ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8)),
-         |sc AS (SELECT nn.vec_id, s.cell,
-         |    round(${dotSql("nn.v", "s.sv")} / (nn.nrm * s.snrm), 6) AS ccos
-         |  FROM nn CROSS JOIN seeds s),
-         |asg AS (SELECT vec_id, cell FROM (
-         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cell ASC) AS rn FROM sc)
-         |  WHERE rn = 1),
-         |cnt AS (SELECT cell, count(*)::BIGINT AS n_postings
-         |  FROM asg GROUP BY cell),
-         |tot AS (SELECT sum(n_postings)::BIGINT AS n, count(*)::BIGINT AS k
-         |  FROM cnt)
-         |SELECT cell, n_postings,
-         |  round(n_postings::DOUBLE / (tot.n::DOUBLE / tot.k::DOUBLE), 6)
-         |    AS load_ratio
-         |FROM cnt, tot""".stripMargin,
-
-    "q_ann_ivf_probe2" -> ivfRefitOracleSql(nprobe = 2),
-
-    "q_semantic_decontam" ->
-      s"""$EmbCte,
-         |sg AS (SELECT vec_id, array_to_string(list_transform(range(0, $SrpPlanes), p ->
-         |    CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
-         |      d -> v[d] * ${planeWeightSql("p", "d - 1")})), (acc, x) -> acc + x) >= 0
-         |    THEN '1' ELSE '0' END), '') AS sig
-         |  FROM n),
-         |bd AS (SELECT vec_id,
-         |    b::VARCHAR || ':' || substring(sig, b * $SrpBandBits + 1, $SrpBandBits) AS band_key
-         |  FROM sg, unnest(range(0, ${SrpPlanes / SrpBandBits})) AS t(b)),
-         |cand AS (SELECT DISTINCT ce.vec_id AS c_id, be.vec_id AS b_id
-         |  FROM bd ce JOIN bd be ON ce.band_key = be.band_key
-         |  WHERE ce.vec_id % 2 = 0 AND be.vec_id % 2 = 1),
-         |drops AS (SELECT DISTINCT c.c_id
-         |  FROM cand c JOIN n x ON c.c_id = x.vec_id JOIN n y ON c.b_id = y.vec_id
-         |  WHERE round(${dotSql("x.v", "y.v")} / (x.nrm * y.nrm), 6) >= 0.4)
-         |SELECT vec_id FROM n
-         |WHERE vec_id % 2 = 0 AND vec_id NOT IN (SELECT c_id FROM drops)""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu, value FROM events),
-        |l AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev FROM e),
-        |s AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev > 1800000000 THEN 1 ELSE 0 END AS is_new FROM l),
-        |c AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM s)
-        |SELECT user_id, session_seq::BIGINT AS session_seq, count(*) AS n_events,
-        |  min(tsu) AS start_us, max(tsu) AS end_us,
-        |  round(sum(CAST(round(value * 1000000) AS BIGINT)) / 1000000.0, 6) AS sum_value
-        |FROM c GROUP BY user_id, c.session_seq""".stripMargin,
-
-    "q_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tsu FROM events),
-        |f1 AS (SELECT user_id, min(tsu) AS t1 FROM e WHERE event_type = 'view' GROUP BY user_id),
-        |f2 AS (SELECT e.user_id, f1.t1, min(e.tsu) AS t2
-        |  FROM e JOIN f1 ON e.user_id = f1.user_id
-        |  WHERE e.event_type = 'click' AND e.tsu > f1.t1 GROUP BY e.user_id, f1.t1),
-        |f3 AS (SELECT e.user_id, f2.t1, f2.t2, min(e.tsu) AS t3
-        |  FROM e JOIN f2 ON e.user_id = f2.user_id
-        |  WHERE e.event_type = 'purchase' AND e.tsu > f2.t2 GROUP BY e.user_id, f2.t1, f2.t2)
-        |SELECT user_id, t1, t2, t3 FROM f3""".stripMargin,
-
-    "q_funnel4" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tsu FROM events),
-        |f1 AS (SELECT user_id, min(tsu) AS t1 FROM e WHERE event_type = 'view' GROUP BY user_id),
-        |f2 AS (SELECT e.user_id, f1.t1, min(e.tsu) AS t2
-        |  FROM e JOIN f1 ON e.user_id = f1.user_id
-        |  WHERE e.event_type = 'click' AND e.tsu > f1.t1 GROUP BY e.user_id, f1.t1),
-        |f3 AS (SELECT e.user_id, f2.t1, f2.t2, min(e.tsu) AS t3
-        |  FROM e JOIN f2 ON e.user_id = f2.user_id
-        |  WHERE e.event_type = 'view' AND e.tsu > f2.t2 GROUP BY e.user_id, f2.t1, f2.t2),
-        |f4 AS (SELECT e.user_id, f3.t1, f3.t2, f3.t3, min(e.tsu) AS t4
-        |  FROM e JOIN f3 ON e.user_id = f3.user_id
-        |  WHERE e.event_type = 'purchase' AND e.tsu > f3.t3 GROUP BY e.user_id, f3.t1, f3.t2, f3.t3)
-        |SELECT user_id, t1, t2, t3, t4 FROM f4""".stripMargin,
-
-    "q_range_join" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events)
-        |SELECT DISTINCT a.user_id,
-        |  least(a.event_id, b.event_id) AS id1,
-        |  greatest(a.event_id, b.event_id) AS id2,
-        |  abs(a.tsu - b.tsu) AS dt_us
-        |FROM e a JOIN e b
-        |  ON a.user_id = b.user_id AND a.event_id < b.event_id
-        |  AND abs(a.tsu - b.tsu) <= 3600000000""".stripMargin,
-
-    "q_range_join2" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu FROM events)
-        |SELECT c.user_id, c.tsu AS ts_l, p.tsu AS ts_r, abs(c.tsu - p.tsu) AS dt_us,
-        |  c.event_id AS l_event_id, p.event_id AS r_event_id
-        |FROM (SELECT * FROM e WHERE event_type = 'click') c
-        |JOIN (SELECT * FROM e WHERE event_type = 'purchase') p
-        |  ON c.user_id = p.user_id AND abs(c.tsu - p.tsu) <= 1800000000""".stripMargin,
-
-    "q_asof" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu, value FROM events),
-        |clicks AS (SELECT user_id, tsu, event_id FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, tsu AS ptsu, round(max(value), 6) AS pvalue
-        |  FROM e WHERE event_type = 'purchase' GROUP BY user_id, tsu)
-        |SELECT c.user_id, c.tsu, c.event_id, p.ptsu AS asof_tsu, p.pvalue AS asof_pvalue
-        |FROM clicks c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ptsu <= c.tsu""".stripMargin,
-
-    "q_asof_forward" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu, value FROM events),
-        |clicks AS (SELECT user_id, tsu, event_id FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, tsu AS ptsu, round(max(value), 6) AS pvalue
-        |  FROM e WHERE event_type = 'purchase' GROUP BY user_id, tsu)
-        |SELECT c.user_id, c.tsu, c.event_id, p.ptsu AS asof_tsu, p.pvalue AS asof_pvalue
-        |FROM clicks c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ptsu >= c.tsu""".stripMargin,
-
-    "q_asof_native_forward" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu, value FROM events),
-        |clicks AS (SELECT user_id, tsu, event_id FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, tsu AS ptsu, round(max(value), 6) AS pvalue
-        |  FROM e WHERE event_type = 'purchase' GROUP BY user_id, tsu)
-        |SELECT c.user_id, c.tsu, c.event_id, p.ptsu AS asof_tsu, p.pvalue AS asof_pvalue
-        |FROM clicks c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ptsu >= c.tsu""".stripMargin,
-
-    "q_asof_nearest" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu, value FROM events),
-        |clicks AS (SELECT user_id, tsu, event_id FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, tsu AS ptsu, round(max(value), 6) AS pvalue
-        |  FROM e WHERE event_type = 'purchase' GROUP BY user_id, tsu),
-        |b AS (SELECT c.user_id, c.tsu, c.event_id, p.ptsu AS btsu, p.pvalue AS bval
-        |  FROM clicks c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ptsu <= c.tsu),
-        |f AS (SELECT c.user_id, c.tsu, c.event_id, p.ptsu AS ftsu, p.pvalue AS fval
-        |  FROM clicks c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ptsu >= c.tsu)
-        |SELECT b.user_id, b.tsu, b.event_id,
-        |  CASE WHEN f.ftsu IS NULL OR (b.btsu IS NOT NULL AND b.tsu - b.btsu <= f.ftsu - f.tsu)
-        |    THEN b.btsu ELSE f.ftsu END AS asof_tsu,
-        |  CASE WHEN f.ftsu IS NULL OR (b.btsu IS NOT NULL AND b.tsu - b.btsu <= f.ftsu - f.tsu)
-        |    THEN b.bval ELSE f.fval END AS asof_pvalue
-        |FROM b JOIN f ON b.user_id = f.user_id AND b.tsu = f.tsu AND b.event_id = f.event_id""".stripMargin,
-
-    "q_asof_native" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu, value FROM events),
-        |clicks AS (SELECT user_id, tsu, event_id FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, tsu AS ptsu, round(max(value), 6) AS pvalue
-        |  FROM e WHERE event_type = 'purchase' GROUP BY user_id, tsu)
-        |SELECT c.user_id, c.tsu, c.event_id, p.ptsu AS asof_tsu, p.pvalue AS asof_pvalue
-        |FROM clicks c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ptsu <= c.tsu""".stripMargin,
-
-    "q_asof_tolerance" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tsu, value FROM events),
-        |clicks AS (SELECT user_id, tsu, event_id FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, tsu AS ptsu, round(max(value), 6) AS pvalue
-        |  FROM e WHERE event_type = 'purchase' GROUP BY user_id, tsu)
-        |SELECT c.user_id, c.tsu, c.event_id,
-        |  CASE WHEN c.tsu - p.ptsu <= 3600000000 THEN p.ptsu END AS asof_tsu,
-        |  CASE WHEN c.tsu - p.ptsu <= 3600000000 THEN p.pvalue END AS asof_pvalue
-        |FROM clicks c ASOF LEFT JOIN p ON c.user_id = p.user_id AND p.ptsu <= c.tsu""".stripMargin,
-
-    "q_event_windows" ->
-      """SELECT event_type, epoch_us(ts) // 300000000 AS window_id,
-        |  count(*) AS n,
-        |  round(sum(CAST(round(value * 1000000) AS BIGINT)) / 1000000.0, 6) AS sum_value
-        |FROM events GROUP BY event_type, epoch_us(ts) // 300000000""".stripMargin,
-
-    "q_multimodal" ->
-      s"""SELECT doc_id, 'image/stub' AS media_type,
-         |  octet_length(encode(text)) AS n_bytes,
-         |  (${hexToLong("md5(text)", 1, 4)} % 1024 + 1)::INT AS width,
-         |  (${hexToLong("md5(text)", 5, 4)} % 1024 + 1)::INT AS height,
-         |  md5(text) AS content_hash
-         |FROM documents""".stripMargin,
-
-    "q_frames" ->
-      """WITH m AS (SELECT doc_id, hex(encode(text)) AS hexp,
-        |    octet_length(encode(text)) AS n FROM documents),
-        |f AS (SELECT doc_id, hexp, n, unnest(range(0, 4)) AS i FROM m),
-        |g AS (SELECT doc_id, (i + 1)::INT AS frame_idx,
-        |    (i * n) // 4 AS off,
-        |    (CASE WHEN i = 3 THEN n ELSE ((i + 1) * n) // 4 END) - (i * n) // 4 AS flen,
-        |    md5(substring(hexp, ((i * n) // 4) * 2 + 1,
-        |      ((CASE WHEN i = 3 THEN n ELSE ((i + 1) * n) // 4 END) - (i * n) // 4) * 2)) AS frame_hash
-        |  FROM f)
-        |SELECT doc_id, frame_idx, off, flen, frame_hash FROM g WHERE flen > 0""".stripMargin,
-
-    "q_resize" ->
-      """SELECT doc_id, 'image/stub' AS media_type,
-        |  CAST(224 * 224 * 3 AS BIGINT) AS n_bytes,
-        |  224 AS width, 224 AS height,
-        |  md5(md5(text) || '_224x224') AS content_hash
-        |FROM documents""".stripMargin,
-
-    "q_percentiles" ->
-      """WITH rk AS (SELECT l_returnflag, l_extendedprice::DOUBLE AS v,
-        |    row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice::DOUBLE ASC) - 1 AS rn,
-        |    count(*) OVER (PARTITION BY l_returnflag) AS n
-        |  FROM lineitem),
-        |g AS (SELECT l_returnflag, n,
-        |    max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.5) THEN v END) AS lo50,
-        |    max(CASE WHEN rn = ceil((n - 1)::DOUBLE * 0.5) THEN v END) AS hi50,
-        |    max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.95) THEN v END) AS lo95,
-        |    max(CASE WHEN rn = ceil((n - 1)::DOUBLE * 0.95) THEN v END) AS hi95
-        |  FROM rk GROUP BY l_returnflag, n)
-        |SELECT l_returnflag,
-        |  round(lo50 + ((n - 1)::DOUBLE * 0.5 - floor((n - 1)::DOUBLE * 0.5)) * (hi50 - lo50), 6) AS p50,
-        |  round(lo95 + ((n - 1)::DOUBLE * 0.95 - floor((n - 1)::DOUBLE * 0.95)) * (hi95 - lo95), 6) AS p95
-        |FROM g""".stripMargin,
-
-    "q_corr" ->
-      """SELECT l_returnflag,
-        |  round(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
-        |  round(covar_samp(l_quantity, l_extendedprice), 6) AS covar_s,
-        |  round(covar_pop(l_quantity, l_extendedprice), 6) AS covar_p,
-        |  round(stddev_samp(l_quantity), 6) AS sd_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
-        |  coalesce(l_linestatus, 'ALL') AS lstatus,
-        |  count(*) AS n,
-        |  sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_price
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_histogram" ->
-      """SELECT CAST(floor(l_extendedprice / 10000.0) AS BIGINT) AS bucket,
-        |  count(*) AS n,
-        |  sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_price
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q_histogram_agg" ->
-      """SELECT CAST(LEAST(GREATEST(floor((l_extendedprice - 0.0) / 5000.0), 0), 23) AS BIGINT) AS bin,
-        |  count(*) AS cnt
-        |FROM lineitem WHERE l_extendedprice IS NOT NULL GROUP BY 1""".stripMargin,
-
-    "q_kmv_distinct" ->
-      s"""WITH h AS (SELECT DISTINCT ${hexToLong("md5(l_partkey::VARCHAR)", 1, 8)} AS h FROM lineitem),
-         |km AS (SELECT h FROM h ORDER BY h ASC LIMIT 256),
-         |agg AS (SELECT count(*) AS sample_k, max(h)::BIGINT AS kth_hash,
-         |  round(CASE WHEN count(*) < 256 THEN count(*)::DOUBLE
-         |    ELSE 255.0 * 4294967296.0 / max(h)::DOUBLE END, 6) AS est_distinct
-         |  FROM km),
-         |ex AS (SELECT count(DISTINCT l_partkey) AS exact_distinct FROM lineitem)
-         |SELECT agg.sample_k, agg.kth_hash, agg.est_distinct, ex.exact_distinct
-         |FROM agg CROSS JOIN ex""".stripMargin,
-
-    // HLL replay: same md5 slices, same integer-domain register sum
-    // S = Σ 2^(33−M[j]), same op order α·m·m·2^33/S, same linear-counting
-    // branch — bit-for-bit the aggregate's estimate
-    "q_hll_distinct" ->
-      s"""WITH vals AS (SELECT DISTINCT l_partkey::VARCHAR AS v FROM lineitem),
-         |h AS (SELECT ${hexToLong("md5(v)", 1, 8)} % 256 AS bucket,
-         |  ${hexToLong("md5(v)", 9, 8)} AS h2 FROM vals),
-         |regs AS (SELECT bucket,
-         |  max(CASE WHEN h2 = 0 THEN 33 ELSE 33 - length(bin(h2)) END) AS mr
-         |  FROM h GROUP BY bucket),
-         |fl AS (SELECT coalesce(regs.mr, 0) AS mr
-         |  FROM (SELECT unnest(range(0, 256)) AS b) t
-         |  LEFT JOIN regs ON t.b = regs.bucket),
-         |agg AS (SELECT sum((1::BIGINT << (33 - mr)))::BIGINT AS s,
-         |  sum(CASE WHEN mr = 0 THEN 1 ELSE 0 END)::BIGINT AS v FROM fl),
-         |est AS (SELECT v, (0.7213 / (1.0 + 1.079 / 256.0)) * 256.0 * 256.0
-         |    * 8589934592.0 / s::DOUBLE AS raw FROM agg),
-         |ex AS (SELECT count(DISTINCT l_partkey) AS exact_distinct FROM lineitem)
-         |SELECT round(CASE WHEN raw <= 640.0 AND v > 0
-         |    THEN 256.0 * ln(256.0 / v::DOUBLE)
-         |    WHEN raw >= 4294967296.0 THEN 4294967296.0
-         |    WHEN raw > 4294967296.0 / 30.0
-         |    THEN -4294967296.0 * ln(1.0 - raw / 4294967296.0)
-         |    ELSE raw END, 2) AS est_distinct,
-         |  ex.exact_distinct
-         |FROM est CROSS JOIN ex""".stripMargin,
-
-    "q_hll_grouped" ->
-      s"""WITH vals AS (SELECT DISTINCT l_returnflag AS g, l_partkey::VARCHAR AS v FROM lineitem),
-         |h AS (SELECT g, ${hexToLong("md5(v)", 1, 8)} % 256 AS bucket,
-         |  ${hexToLong("md5(v)", 9, 8)} AS h2 FROM vals),
-         |regs AS (SELECT g, bucket,
-         |  max(CASE WHEN h2 = 0 THEN 33 ELSE 33 - length(bin(h2)) END) AS mr
-         |  FROM h GROUP BY g, bucket),
-         |fl AS (SELECT gs.g AS g, coalesce(regs.mr, 0) AS mr
-         |  FROM (SELECT DISTINCT l_returnflag AS g FROM lineitem) gs
-         |  CROSS JOIN (SELECT unnest(range(0, 256)) AS b) t
-         |  LEFT JOIN regs ON t.b = regs.bucket AND gs.g = regs.g),
-         |agg AS (SELECT g, sum((1::BIGINT << (33 - mr)))::BIGINT AS s,
-         |  sum(CASE WHEN mr = 0 THEN 1 ELSE 0 END)::BIGINT AS v FROM fl GROUP BY g),
-         |est AS (SELECT g, v, (0.7213 / (1.0 + 1.079 / 256.0)) * 256.0 * 256.0
-         |    * 8589934592.0 / s::DOUBLE AS raw FROM agg),
-         |ex AS (SELECT l_returnflag AS g, count(DISTINCT l_partkey) AS exact_distinct
-         |  FROM lineitem GROUP BY 1)
-         |SELECT est.g AS l_returnflag,
-         |  round(CASE WHEN raw <= 640.0 AND v > 0
-         |    THEN 256.0 * ln(256.0 / v::DOUBLE)
-         |    WHEN raw >= 4294967296.0 THEN 4294967296.0
-         |    WHEN raw > 4294967296.0 / 30.0
-         |    THEN -4294967296.0 * ln(1.0 - raw / 4294967296.0)
-         |    ELSE raw END, 2) AS est_distinct,
-         |  ex.exact_distinct
-         |FROM est JOIN ex ON est.g = ex.g""".stripMargin,
-
-    "q_cms_topk" -> {
-      def bucket(jExpr: String) =
-        s"${hexToLong(s"md5($jExpr || ':' || term)", 1, 8)} % 1024"
-      s"""WITH tc AS (SELECT l_partkey::VARCHAR AS term, count(*) AS cnt FROM lineitem GROUP BY 1),
-         |grid AS (SELECT j, bucket, sum(cnt) AS c FROM (
-         |    SELECT term, cnt, j, ${bucket("j::VARCHAR")} AS bucket
-         |    FROM tc, unnest(range(0, 4)) AS t(j))
-         |  GROUP BY j, bucket),
-         |top AS (SELECT term, cnt FROM tc ORDER BY cnt DESC, term ASC LIMIT 20),
-         |probe AS (SELECT term, cnt, j, ${bucket("j::VARCHAR")} AS bucket
-         |  FROM top, unnest(range(0, 4)) AS t(j))
-         |SELECT term, cnt, min(c)::BIGINT AS est_cnt
-         |FROM probe JOIN grid USING (j, bucket)
-         |GROUP BY term, cnt""".stripMargin
-    },
-
-    "q_repetition" ->
-      s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |g AS (SELECT doc_id, toks,
-         |  CASE WHEN len(toks) >= 2
-         |    THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-         |    ELSE [array_to_string(toks, ' ')] END AS g2,
-         |  $ShinglesSql AS g3
-         |  FROM toks_t)
-         |SELECT doc_id,
-         |  CASE WHEN len(toks) > 0 THEN round((len(toks)::DOUBLE - len(list_distinct(toks))::DOUBLE) / len(toks)::DOUBLE, 6) ELSE 0.0 END AS dup_tok_frac,
-         |  CASE WHEN len(g2) > 0 THEN round((len(g2)::DOUBLE - len(list_distinct(g2))::DOUBLE) / len(g2)::DOUBLE, 6) ELSE 0.0 END AS dup_2gram_frac,
-         |  CASE WHEN len(g3) > 0 THEN round((len(g3)::DOUBLE - len(list_distinct(g3))::DOUBLE) / len(g3)::DOUBLE, 6) ELSE 0.0 END AS dup_3gram_frac
-         |FROM g""".stripMargin,
-
-    "q_token_entropy" ->
-      """WITH tk AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents),
-        |tf_t AS (SELECT doc_id, token, count(*) AS c FROM tk GROUP BY doc_id, token),
-        |wn AS (SELECT doc_id, c, sum(c) OVER (PARTITION BY doc_id) AS n FROM tf_t)
-        |SELECT doc_id,
-        |  round(-sum(CAST(round((c::DOUBLE / n::DOUBLE) * ln(c::DOUBLE / n::DOUBLE) * 1000000) AS BIGINT)) / 1000000.0, 6) AS entropy
-        |FROM wn GROUP BY doc_id""".stripMargin,
-
-    "q_bm25" ->
-      """WITH tk AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents),
-        |dl_t AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY doc_id),
-        |tf_t AS (SELECT doc_id, token, count(*) AS tf FROM tk
-        |  WHERE token IN ('spark', 'table', 'fast', 'query', 'data') GROUP BY doc_id, token),
-        |df_t AS (SELECT token, count(*) AS df FROM tf_t GROUP BY token),
-        |c AS (SELECT count(*) AS n_docs, sum(dl) AS tot_dl FROM dl_t)
-        |SELECT doc_id, round(sum(CAST(round(
-        |    ln(1.0 + (n_docs::DOUBLE - df::DOUBLE + 0.5) / (df::DOUBLE + 0.5))
-        |    * (tf::DOUBLE * (1.2 + 1.0))
-        |    / (tf::DOUBLE + 1.2 * ((1.0 - 0.75) + 0.75 * dl::DOUBLE / (tot_dl::DOUBLE / n_docs::DOUBLE)))
-        |    * 1000000) AS BIGINT)) / 1000000.0, 6) AS bm25
-        |FROM tf_t JOIN df_t USING (token) JOIN dl_t USING (doc_id) CROSS JOIN c
-        |GROUP BY doc_id
-        |ORDER BY bm25 DESC, doc_id ASC LIMIT 25""".stripMargin,
-
-    "q_doc_clusters" ->
-      s"$ClustersCte\nSELECT doc_id, cluster_id FROM clusters_t",
-
-    "q_pack_sequences" ->
-      s"""WITH RECURSIVE base AS (SELECT doc_id,
-         |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS ntok,
-         |    (${hexToLong("md5(doc_id::VARCHAR)", 1, 8)}) % 8 AS shard
-         |  FROM documents),
-         |t AS (SELECT doc_id, ntok, shard,
-         |    row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn FROM base),
-         |p AS (
-         |  SELECT doc_id, shard, ntok, rn, ntok AS running, 0 AS seq_idx FROM t WHERE rn = 1
-         |  UNION ALL
-         |  SELECT t.doc_id, t.shard, t.ntok, t.rn,
-         |    CASE WHEN p.running + t.ntok > 128 THEN t.ntok ELSE p.running + t.ntok END,
-         |    CASE WHEN p.running + t.ntok > 128 THEN p.seq_idx + 1 ELSE p.seq_idx END
-         |  FROM p JOIN t ON t.shard = p.shard AND t.rn = p.rn + 1)
-         |SELECT doc_id, shard::INT AS shard, seq_idx::INT AS seq_idx FROM p""".stripMargin,
-
-    "q_cube" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
-        |  coalesce(l_linestatus, 'ALL') AS lstatus,
-        |  count(*) AS n,
-        |  sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_price
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q_oov_rate" ->
-      """WITH tk AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token FROM documents),
-        |v AS (SELECT token, 1 AS iv FROM (
-        |  SELECT token, count(*) AS c FROM tk GROUP BY token
-        |  ORDER BY c DESC, token ASC LIMIT 1000))
-        |SELECT doc_id,
-        |  round(sum(CASE WHEN iv IS NULL THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE, 6) AS oov_rate
-        |FROM tk LEFT JOIN v USING (token)
-        |GROUP BY doc_id""".stripMargin,
-
-    "q_cluster_rep" ->
-      s"""$ClustersCte,
-         |qtoks_t AS (SELECT doc_id, text, $ToksSql AS toks FROM documents),
-         |q_t AS (${qualitySelectSql("qtoks_t")}),
-         |j AS (SELECT c.cluster_id, c.doc_id, q.quality
-         |  FROM clusters_t c JOIN q_t q USING (doc_id)),
-         |r AS (SELECT cluster_id, doc_id, quality,
-         |    row_number() OVER (PARTITION BY cluster_id ORDER BY quality DESC, doc_id ASC) AS rn,
-         |    count(*) OVER (PARTITION BY cluster_id) AS n_members
-         |  FROM j)
-         |SELECT cluster_id, doc_id AS rep_id, quality AS rep_quality, n_members
-         |FROM r WHERE rn = 1""".stripMargin,
-
-    "q_cluster_rep_priority" ->
-      s"""$ClustersCte,
-         |tr AS (SELECT doc_id,
-         |    -(CAST(substring(source, 4) AS INT) % 3) AS trust FROM documents),
-         |j AS (SELECT c.cluster_id, c.doc_id, tr.trust
-         |  FROM clusters_t c JOIN tr USING (doc_id)),
-         |r AS (SELECT cluster_id, doc_id, trust,
-         |    row_number() OVER (PARTITION BY cluster_id ORDER BY trust DESC, doc_id ASC) AS rn,
-         |    count(*) OVER (PARTITION BY cluster_id) AS n_members
-         |  FROM j)
-         |SELECT cluster_id, doc_id AS rep_id, trust AS rep_trust, n_members
-         |FROM r WHERE rn = 1""".stripMargin,
-
-    "q_topk_agg" ->
-      """SELECT l_returnflag, rank::INT AS rank, id, score FROM (
-        |  SELECT l_returnflag, l_orderkey AS id, l_extendedprice AS score,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice DESC, l_orderkey ASC) AS rank
-        |  FROM lineitem) WHERE rank <= 5""".stripMargin,
-
-    "q_quantile_sketch" -> {
-      def estSql(p: String) = {
-        val t = s"((n - 1)::DOUBLE * $p)"
-        s"""arg_min(round($QSketchLo + $QSketchW * (bin::DOUBLE + ($t - (cum - c)::DOUBLE) / c::DOUBLE), 6),
-           |    CASE WHEN cum::DOUBLE > $t THEN bin END)""".stripMargin
-      }
-      s"""WITH b AS (SELECT least(greatest(
-         |    CAST(floor((l_extendedprice::DOUBLE - $QSketchLo) / $QSketchW) AS BIGINT), 0), ${QSketchBins - 1}) AS bin
-         |  FROM lineitem),
-         |g AS (SELECT bin, count(*) AS c FROM b GROUP BY bin),
-         |cg AS (SELECT bin, c,
-         |    sum(c) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM g),
-         |n_t AS (SELECT count(*) AS n FROM lineitem)
-         |SELECT n, ${estSql("0.5")} AS p50, ${estSql("0.95")} AS p95, ${estSql("0.99")} AS p99
-         |FROM cg CROSS JOIN n_t GROUP BY n""".stripMargin
-    },
-
-    "q_retention" ->
-      """WITH days_t AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-        |cohort_t AS (SELECT user_id, min(day) AS cohort_day FROM days_t GROUP BY user_id)
-        |SELECT cohort_day, CAST(day - cohort_day AS INT) AS day_offset,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM days_t JOIN cohort_t USING (user_id)
-        |WHERE day - cohort_day <= 30
-        |GROUP BY cohort_day, day_offset""".stripMargin,
-
-    "q_salted_agg" ->
-      """SELECT event_type,
-        |  round(sum(CAST(round(value * 1000000) AS BIGINT)) / 1000000.0, 6) AS sum_value,
-        |  count(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q_running_total" ->
-      """SELECT event_id, user_id,
-        |  round(sum(CAST(round(value * 1000000) AS BIGINT)) OVER (
-        |    PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 1000000.0, 6) AS running_value
-        |FROM events""".stripMargin,
-
-    "q_kmv_grouped" ->
-      s"""WITH h AS (SELECT DISTINCT l_returnflag AS g, ${hexToLong("md5(l_partkey::VARCHAR)", 1, 8)} AS h FROM lineitem),
-         |r AS (SELECT g, h, row_number() OVER (PARTITION BY g ORDER BY h ASC) AS rn FROM h),
-         |km AS (SELECT g, count(*) AS sample_k, max(h) AS kth FROM r WHERE rn <= 128 GROUP BY g),
-         |ex AS (SELECT l_returnflag AS g, count(DISTINCT l_partkey) AS exact_distinct FROM lineitem GROUP BY 1)
-         |SELECT g AS l_returnflag,
-         |  round(CASE WHEN sample_k < 128 THEN sample_k::DOUBLE
-         |    ELSE 127.0 * 4294967296.0 / kth::DOUBLE END, 6) AS est_distinct,
-         |  exact_distinct
-         |FROM km JOIN ex USING (g)""".stripMargin,
-
-    "q_big_orders" ->
-      """WITH qty_t AS (
-        |  SELECT l_orderkey, sum(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty
-        |  FROM lineitem GROUP BY l_orderkey HAVING sum_qty > 250.0)
-        |SELECT o_orderkey, CAST(o_orderdate AS DATE) AS odate, o_totalprice, sum_qty
-        |FROM orders JOIN qty_t ON o_orderkey = l_orderkey
-        |ORDER BY sum_qty DESC, o_orderkey ASC
-        |LIMIT 100""".stripMargin,
-
-    // ── round-5 additions ───────────────────────────────────────────────
-    "q_moving_avg" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vmic FROM events)
-        |SELECT user_id, event_id, tsu,
-        |  count(*) OVER w AS n_win,
-        |  round((sum(vmic) OVER w)::BIGINT / ((count(vmic) OVER w) * 1000000.0), 6) AS avg_value
-        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu
-        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q_zscore" ->
-      """WITH e AS (SELECT event_id, event_type, value,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vmic FROM events),
-        |st AS (SELECT event_type, count(*) AS n, sum(vmic)::BIGINT AS s1,
-        |    sum(vmic::HUGEINT * vmic::HUGEINT) AS s2 FROM e GROUP BY event_type),
-        |z AS (SELECT e.event_id, e.event_type, e.value,
-        |    s2::DOUBLE / n::DOUBLE
-        |      - (s1::DOUBLE / n::DOUBLE) * (s1::DOUBLE / n::DOUBLE) AS vr,
-        |    (e.vmic::DOUBLE - s1::DOUBLE / n::DOUBLE)
-        |      / sqrt(s2::DOUBLE / n::DOUBLE
-        |             - (s1::DOUBLE / n::DOUBLE) * (s1::DOUBLE / n::DOUBLE)) AS zs
-        |  FROM e JOIN st USING (event_type))
-        |SELECT event_id, event_type, value, round(zs, 6) AS zscore
-        |FROM z WHERE vr > 0 AND abs(zs) > 2.0""".stripMargin,
-
-    "q_concurrency" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events),
-        |l AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS prev FROM e),
-        |sflag AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev > 1800000000 THEN 1 ELSE 0 END AS is_new FROM l),
-        |cse AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id ROWS UNBOUNDED PRECEDING) AS session_seq FROM sflag),
-        |sess AS (SELECT user_id, session_seq, min(tsu) AS start_us, max(tsu) AS end_us
-        |  FROM cse GROUP BY user_id, session_seq),
-        |d AS (SELECT start_us AS t, 1 AS d FROM sess
-        |  UNION ALL SELECT end_us + 1, -1 FROM sess),
-        |g AS (SELECT t, sum(d)::BIGINT AS d FROM d GROUP BY t),
-        |rng AS (SELECT min(t // 86400000000) AS d0, max(t // 86400000000) AS d1 FROM g),
-        |z AS (SELECT u.day * 86400000000 AS t, 0::BIGINT AS d
-        |  FROM rng, unnest(generate_series(d0, d1)) AS u(day)),
-        |a AS (SELECT t, sum(d)::BIGINT AS d
-        |  FROM (SELECT * FROM g UNION ALL SELECT * FROM z) GROUP BY t),
-        |r AS (SELECT t, t // 86400000000 AS day,
-        |    sum(d) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING) AS conc FROM a)
-        |SELECT day, max(conc)::BIGINT AS max_concurrency FROM r GROUP BY day""".stripMargin,
-
-    "q_transitions" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tsu, event_id FROM events),
-        |p AS (SELECT event_type AS src,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY tsu, event_id) AS dst
-        |  FROM e),
-        |c AS (SELECT src, dst, count(*) AS cnt FROM p WHERE dst IS NOT NULL GROUP BY src, dst)
-        |SELECT src, dst, cnt,
-        |  round(cnt / (sum(cnt) OVER (PARTITION BY src)), 6) AS p
-        |FROM c""".stripMargin,
-
-    "q_twa" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tsu, event_id,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vmic FROM events),
-        |seg AS (SELECT user_id, vmic,
-        |    lead(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) - tsu AS dur
-        |  FROM e)
-        |SELECT user_id, count(*) AS n_segments,
-        |  round(sum(vmic::HUGEINT * dur::HUGEINT)::DOUBLE
-        |    / (nullif(sum(dur), 0)::DOUBLE * 1000000.0), 6) AS twa_value
-        |FROM seg WHERE dur IS NOT NULL GROUP BY user_id""".stripMargin,
-
-    "q_rolling_active" ->
-      """WITH ud AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id FROM events),
-        |days AS (SELECT DISTINCT day FROM ud),
-        |ex AS (SELECT ud.day + t.j AS day, user_id, t.j AS off
-        |  FROM ud, unnest(range(0, 7)) AS t(j))
-        |SELECT ex.day AS day,
-        |  count(DISTINCT CASE WHEN off = 0 THEN user_id END) AS dau,
-        |  count(DISTINCT user_id) AS wau
-        |FROM ex JOIN days ON ex.day = days.day
-        |GROUP BY ex.day""".stripMargin,
-
-    "q_rolling_active_hll" ->
-      s"""WITH ud AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id FROM events),
-         |h AS (SELECT day, ${hexToLong("md5(user_id::VARCHAR)", 1, 8)} % 256 AS bucket,
-         |  ${hexToLong("md5(user_id::VARCHAR)", 9, 8)} AS h2 FROM ud),
-         |regs AS (SELECT day, bucket,
-         |    max(CASE WHEN h2 = 0 THEN 33 ELSE 33 - length(bin(h2)) END) AS mr
-         |  FROM h GROUP BY day, bucket),
-         |days AS (SELECT DISTINCT day FROM ud),
-         |win AS (SELECT d.day AS day, r.bucket,
-         |    max(r.mr) AS mw,
-         |    max(CASE WHEN r.day = d.day THEN r.mr ELSE 0 END) AS md
-         |  FROM days d JOIN regs r ON r.day BETWEEN d.day - 6 AND d.day
-         |  GROUP BY d.day, r.bucket),
-         |fl AS (SELECT d.day, coalesce(w.mw, 0) AS mw, coalesce(w.md, 0) AS md
-         |  FROM days d CROSS JOIN (SELECT unnest(range(0, 256)) AS b) t
-         |  LEFT JOIN win w ON w.day = d.day AND w.bucket = t.b),
-         |agg AS (SELECT day,
-         |    sum((1::BIGINT << (33 - mw)))::BIGINT AS sw,
-         |    sum(CASE WHEN mw = 0 THEN 1 ELSE 0 END)::BIGINT AS vw,
-         |    sum((1::BIGINT << (33 - md)))::BIGINT AS sd,
-         |    sum(CASE WHEN md = 0 THEN 1 ELSE 0 END)::BIGINT AS vd
-         |  FROM fl GROUP BY day),
-         |est AS (SELECT day, vw, vd,
-         |    (0.7213 / (1.0 + 1.079 / 256.0)) * 256.0 * 256.0 * 8589934592.0 / sw::DOUBLE AS raww,
-         |    (0.7213 / (1.0 + 1.079 / 256.0)) * 256.0 * 256.0 * 8589934592.0 / sd::DOUBLE AS rawd
-         |  FROM agg),
-         |e2 AS (SELECT day,
-         |    round(CASE WHEN rawd <= 640.0 AND vd > 0 THEN 256.0 * ln(256.0 / vd::DOUBLE)
-         |      WHEN rawd >= 4294967296.0 THEN 4294967296.0
-         |      WHEN rawd > 4294967296.0 / 30.0 THEN -4294967296.0 * ln(1.0 - rawd / 4294967296.0)
-         |      ELSE rawd END, 2) AS dau_est,
-         |    round(CASE WHEN raww <= 640.0 AND vw > 0 THEN 256.0 * ln(256.0 / vw::DOUBLE)
-         |      WHEN raww >= 4294967296.0 THEN 4294967296.0
-         |      WHEN raww > 4294967296.0 / 30.0 THEN -4294967296.0 * ln(1.0 - raww / 4294967296.0)
-         |      ELSE raww END, 2) AS wau_est
-         |  FROM est),
-         |exw AS (SELECT ud.day + t.j AS day, user_id FROM ud, unnest(range(0, 7)) AS t(j)),
-         |exact AS (SELECT exw.day AS day, count(DISTINCT user_id) AS wau_exact
-         |  FROM exw JOIN days ON exw.day = days.day GROUP BY exw.day)
-         |SELECT e2.day AS day, dau_est, wau_est, wau_exact,
-         |  round(abs(wau_est - wau_exact) / wau_exact, 6) AS rel_err
-         |FROM e2 JOIN exact ON e2.day = exact.day""".stripMargin,
-
-    "q_rolling_quantile" -> {
-      def estSql(p: String) = {
-        val t = s"((n - 1)::DOUBLE * $p)"
-        s"""arg_min(round(0.0 + 25.0 * (bin::DOUBLE + ($t - (cum - c)::DOUBLE) / c::DOUBLE), 6),
-           |    CASE WHEN cum::DOUBLE > $t THEN bin END)""".stripMargin
-      }
-      s"""WITH v AS (SELECT epoch_us(ts) // 86400000000 AS day, value::DOUBLE AS v
-         |  FROM events WHERE value IS NOT NULL AND NOT isnan(value::DOUBLE)),
-         |b AS (SELECT day, least(greatest(CAST(floor((v - 0.0) / 25.0) AS BIGINT), 0), 19) AS bin,
-         |    count(*) AS c FROM v GROUP BY day, bin),
-         |days AS (SELECT DISTINCT day FROM b),
-         |ex AS (SELECT b.day + t.j AS day, bin, c FROM b, unnest(range(0, 7)) AS t(j)),
-         |m AS (SELECT ex.day, bin, sum(c) AS c FROM ex JOIN days ON ex.day = days.day
-         |  GROUP BY ex.day, bin),
-         |cg AS (SELECT day, bin, c,
-         |    sum(c) OVER (PARTITION BY day ORDER BY bin
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         |    sum(c) OVER (PARTITION BY day) AS n FROM m)
-         |SELECT day, n::BIGINT AS n, ${estSql("0.5")} AS p50, ${estSql("0.9")} AS p90
-         |FROM cg GROUP BY day, n""".stripMargin
-    },
-
-    "q_latest_value" ->
-      """WITH e AS (SELECT user_id, event_type, event_id, epoch_us(ts) AS tsu,
-        |    round(value, 6) AS value FROM events),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-        |    ORDER BY tsu DESC, event_id DESC) AS rn FROM e)
-        |SELECT user_id, event_type, tsu, event_id, value FROM r WHERE rn = 1""".stripMargin,
-
-    "q_fuzzy_pairs" ->
-      """WITH n_t AS (SELECT doc_id,
-        |  substr(regexp_replace(regexp_replace(trim(lower(text)), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'), 1, 40) AS pfx
-        |  FROM documents),
-        |k AS (SELECT doc_id, pfx, substr(pfx, 1, 8) AS blk FROM n_t
-        |  WHERE length(pfx) >= 8)
-        |SELECT a.doc_id AS id1, b.doc_id AS id2,
-        |  levenshtein(a.pfx, b.pfx) AS edit_dist
-        |FROM k a JOIN k b ON a.blk = b.blk AND a.doc_id < b.doc_id
-        |WHERE levenshtein(a.pfx, b.pfx) <= 5""".stripMargin,
-
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-        |  count(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
-        |  count(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
-        |  count(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-
-    "q_window_rank" ->
-      """SELECT o_orderkey, o_orderpriority, o_totalprice,
-        |  ntile(4) OVER w AS quartile,
-        |  round(percent_rank() OVER w, 6) AS pct_rank,
-        |  lag(o_totalprice) OVER w AS prev_price
-        |FROM orders WHERE o_totalprice > 450000.0
-        |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)""".stripMargin,
-
-    "q_json_extract" ->
-      """SELECT event_type,
-        |  count(k) AS n, sum(k)::BIGINT AS sum_k, count(DISTINCT k) AS distinct_k
-        |FROM (SELECT event_type,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events)
-        |GROUP BY event_type""".stripMargin,
-
-    "q_tpch_q5" ->
-      """SELECT n_name,
-        |  sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT))
-        |    / 1000000.0 AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name""".stripMargin,
-
-    "q_grouping_sets" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS rflag,
-        |  coalesce(l_linestatus, 'ALL') AS lstatus,
-        |  count(*) AS n,
-        |  sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_price
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-
-    "q_sketch_grouped" -> {
-      def estSql(p: String) = {
-        val t = s"((n - 1)::DOUBLE * $p)"
-        s"""arg_min(round($QSketchLo + $QSketchW * (bin::DOUBLE + ($t - (cum - c)::DOUBLE) / c::DOUBLE), 6),
-           |    CASE WHEN cum::DOUBLE > $t THEN bin END)""".stripMargin
-      }
-      s"""WITH b AS (SELECT l_returnflag, least(greatest(
-         |    CAST(floor((l_extendedprice::DOUBLE - $QSketchLo) / $QSketchW) AS BIGINT), 0), ${QSketchBins - 1}) AS bin
-         |  FROM lineitem),
-         |g AS (SELECT l_returnflag, bin, count(*) AS c FROM b GROUP BY l_returnflag, bin),
-         |cg AS (SELECT l_returnflag, bin, c,
-         |    sum(c) OVER (PARTITION BY l_returnflag ORDER BY bin
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM g),
-         |n_t AS (SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag)
-         |SELECT l_returnflag, n, ${estSql("0.5")} AS p50, ${estSql("0.95")} AS p95, ${estSql("0.99")} AS p99
-         |FROM cg JOIN n_t USING (l_returnflag) GROUP BY l_returnflag, n""".stripMargin
-    },
-
-    "q_jaccard_est" ->
-      s"""$PairsCte,
-         |dsh_t AS (SELECT doc_id, list_distinct(sh) AS dsh FROM sh_t),
-         |ex AS (SELECT p.id1, p.id2,
-         |  round(len(list_intersect(a.dsh, b.dsh))::DOUBLE /
-         |        (len(a.dsh) + len(b.dsh) - len(list_intersect(a.dsh, b.dsh)))::DOUBLE, 6) AS jaccard
-         |  FROM pairs_t p JOIN dsh_t a ON p.id1 = a.doc_id JOIN dsh_t b ON p.id2 = b.doc_id),
-         |est AS (SELECT p.id1, p.id2,
-         |  round(list_sum(list_transform(range(1, 9),
-         |      i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END))::DOUBLE / 8.0, 6) AS est_jaccard
-         |  FROM pairs_t p JOIN sig_t a ON p.id1 = a.doc_id JOIN sig_t b ON p.id2 = b.doc_id)
-         |SELECT ex.id1, ex.id2, ex.jaccard, est.est_jaccard
-         |FROM ex JOIN est ON ex.id1 = est.id1 AND ex.id2 = est.id2""".stripMargin,
-
-    // Bloom replay: same md5 K-M position family as BloomBitsAgg/
-    // BloomHitCount — the DISTINCT eval positions ARE the set bits, a
-    // train gram hits iff none of its positions is missing (so oracle
-    // false positives == engine false positives, bit for bit)
-    "q_decontaminate_bloom" ->
-      s"""WITH tk AS (SELECT doc_id, source, $ToksSql AS toks FROM documents),
-         |sh0 AS (SELECT doc_id, source, $ShinglesSql AS sh FROM tk),
-         |g AS (SELECT DISTINCT doc_id, source, unnest(sh) AS g FROM sh0),
-         |hh AS (SELECT doc_id, source, g,
-         |    ${hexToLong("md5(g)", 1, 8)} AS ha, ${hexToLong("md5(g)", 9, 8)} AS hb FROM g),
-         |pos AS (SELECT doc_id, source, g, (ha + i * hb) % $BloomBits AS p
-         |  FROM hh, unnest(range(0, $BloomHashes)) AS t(i)),
-         |ep AS (SELECT DISTINCT p FROM pos WHERE source = 'src0'),
-         |tp AS (SELECT doc_id, g, p FROM pos WHERE source <> 'src0'),
-         |miss AS (SELECT DISTINCT doc_id, g FROM tp WHERE p NOT IN (SELECT p FROM ep)),
-         |hits AS (SELECT doc_id, g FROM (SELECT DISTINCT doc_id, g FROM tp)
-         |  EXCEPT SELECT doc_id, g FROM miss),
-         |ng AS (SELECT doc_id, count(*) AS n_grams FROM g WHERE source <> 'src0' GROUP BY doc_id),
-         |hc AS (SELECT doc_id, count(*) AS bloom_hits FROM hits GROUP BY doc_id)
-         |SELECT ng.doc_id, ng.n_grams, hc.bloom_hits
-         |FROM ng JOIN hc USING (doc_id) WHERE hc.bloom_hits >= 5""".stripMargin,
-
-    "q_semi_join" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT p_partkey, p_brand
-        |FROM part
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_partkey = p_partkey AND l_quantity >= 45)""".stripMargin,
-
-    "q_ewma" -> {
-      val terms = (0 until 10).map(j =>
-        s"coalesce(lag(vmic, $j) OVER w, 0)::DOUBLE * ${1.0 / (1L << j)}").mkString("\n|  + ")
-      s"""SELECT event_id, user_id,
-         |  $terms AS ewma_micro
-         |FROM (SELECT event_id, user_id, ts,
-         |    CAST(round(value * 1000000) AS BIGINT) AS vmic FROM events)
-         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)""".stripMargin
-    },
-
-    "q_mad_robust" -> {
-      def medCte(src: String, vcol: String, rk: String, g: String, out: String, as: String) =
-        s"""$rk AS (SELECT event_type, $vcol AS v,
-           |    row_number() OVER (PARTITION BY event_type ORDER BY $vcol ASC) - 1 AS rn,
-           |    count(*) OVER (PARTITION BY event_type) AS n
-           |  FROM $src),
-           |$g AS (SELECT event_type, n,
-           |    max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.5) THEN v END) AS lo,
-           |    max(CASE WHEN rn = ceil((n - 1)::DOUBLE * 0.5) THEN v END) AS hi
-           |  FROM $rk GROUP BY event_type, n),
-           |$out AS (SELECT event_type,
-           |    round(lo + ((n - 1)::DOUBLE * 0.5 - floor((n - 1)::DOUBLE * 0.5)) * (hi - lo), 6) AS $as
-           |  FROM $g)""".stripMargin
-      s"""WITH v1 AS (SELECT event_type, value::DOUBLE AS x FROM events),
-         |${medCte("v1", "x", "rk1", "g1", "medt", "med")},
-         |dev AS (SELECT v1.event_type, v1.x, medt.med, abs(v1.x - medt.med) AS adev
-         |  FROM v1 JOIN medt USING (event_type)),
-         |${medCte("dev", "adev", "rk2", "g2", "madt", "mad")}
-         |SELECT dev.event_type, max(dev.med) AS med, max(madt.mad) AS mad,
-         |  count(*) AS n,
-         |  sum(CASE WHEN dev.adev > 3.0 * madt.mad THEN 1 ELSE 0 END)::BIGINT AS n_outliers
-         |FROM dev JOIN madt USING (event_type)
-         |GROUP BY dev.event_type""".stripMargin
-    },
-
-    "q_resample_locf" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu, value FROM events),
-        |d AS (SELECT user_id, tsu // 86400000000 AS day, value,
-        |    row_number() OVER (PARTITION BY user_id, tsu // 86400000000
-        |      ORDER BY tsu DESC, event_id DESC) AS rn
-        |  FROM e),
-        |daily AS (SELECT user_id, day, value AS day_value FROM d WHERE rn = 1),
-        |g0 AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY user_id),
-        |grid AS (SELECT user_id, unnest(range(d0, d1 + 1)) AS day FROM g0),
-        |j AS (SELECT g.user_id, g.day, daily.day_value
-        |  FROM grid g LEFT JOIN daily USING (user_id, day))
-        |SELECT user_id, day,
-        |  last_value(day_value IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_locf,
-        |  CASE WHEN day_value IS NOT NULL THEN 1 ELSE 0 END AS observed
-        |FROM j""".stripMargin,
-
-    "q_bloom_fp_audit" -> {
-      val posExpr = s"(${hexToLong("md5(g)", 1, 8)} + i * ${hexToLong("md5(g)", 9, 8)}) % $BloomBits"
-      s"""WITH tk AS (SELECT doc_id, source, $ToksSql AS toks FROM documents),
-         |sh0 AS (SELECT doc_id, source, $ShinglesSql AS sh FROM tk),
-         |ag AS (SELECT DISTINCT source = 'src0' AS is_eval, unnest(sh) AS g FROM sh0),
-         |eg AS (SELECT DISTINCT g FROM ag WHERE is_eval),
-         |cg AS (SELECT DISTINCT g FROM ag WHERE NOT is_eval AND g NOT IN (SELECT g FROM eg)),
-         |ep AS (SELECT DISTINCT $posExpr AS p
-         |  FROM eg, unnest(range(0, $BloomHashes)) AS t(i)),
-         |cp AS (SELECT g, $posExpr AS p
-         |  FROM cg, unnest(range(0, $BloomHashes)) AS t(i)),
-         |miss AS (SELECT DISTINCT g FROM cp WHERE p NOT IN (SELECT p FROM ep)),
-         |stats AS (SELECT
-         |    (SELECT count(*) FROM cg) AS n_probes,
-         |    (SELECT count(*) FROM cg) - (SELECT count(*) FROM miss) AS n_fp,
-         |    (SELECT count(*) FROM ep) AS n_set_bits)
-         |SELECT n_probes, n_fp, round(n_fp / n_probes, 6) AS fp_rate, n_set_bits,
-         |  round((n_set_bits / $BloomBits.0) * (n_set_bits / $BloomBits.0) * (n_set_bits / $BloomBits.0), 6) AS theo_fp_rate
-         |FROM stats""".stripMargin
-    },
-
-    "q_skew_profile" ->
-      """WITH c AS (SELECT l_partkey::VARCHAR AS key, count(*) AS cnt
-        |  FROM lineitem GROUP BY 1),
-        |tot AS (SELECT sum(cnt)::BIGINT AS total FROM c),
-        |top AS (SELECT key, cnt FROM c ORDER BY cnt DESC, key ASC LIMIT 15),
-        |r AS (SELECT key, cnt,
-        |    row_number() OVER (ORDER BY cnt DESC, key ASC) AS rank,
-        |    sum(cnt) OVER (ORDER BY cnt DESC, key ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_cnt
-        |  FROM top)
-        |SELECT rank::INT AS rank, key, cnt,
-        |  round(cnt / (SELECT total FROM tot), 6) AS share,
-        |  round(cum_cnt / (SELECT total FROM tot), 6) AS cum_share
-        |FROM r""".stripMargin,
-
-    "q_window_suite" ->
-      """SELECT o_orderpriority, o_orderkey, rnk, pct_rank, cume, best_order FROM (
-        |  SELECT o_orderpriority, o_orderkey,
-        |    rank() OVER w AS rnk,
-        |    round(percent_rank() OVER w, 6) AS pct_rank,
-        |    round(cume_dist() OVER w, 6) AS cume,
-        |    first_value(o_orderkey) OVER w AS best_order
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_orderpriority
-        |    ORDER BY o_totalprice DESC, o_orderkey))
-        |WHERE rnk <= 3""".stripMargin,
-
-    "q_profile" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS "column", (SELECT count(*) FROM orders) AS n,
-           |  count($c) AS non_null,
-           |  (SELECT round(CASE WHEN count(*) < 256 THEN count(*)::DOUBLE
-           |     ELSE 255.0 * 4294967296.0 / max(h)::DOUBLE END, 6)
-           |   FROM (SELECT h FROM (SELECT DISTINCT ${hexToLong(s"md5($c::VARCHAR)", 1, 8)} AS h
-           |     FROM orders WHERE $c IS NOT NULL) ORDER BY h ASC LIMIT 256)) AS distinct_est,
-           |  min($c::VARCHAR) AS min_s, max($c::VARCHAR) AS max_s
-           |FROM orders""".stripMargin
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-        .map(one).mkString("\nUNION ALL\n")
-    },
-
-    "q_churn" ->
-      """WITH p AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT DISTINCT user_id FROM p WHERE day < 19750
-        |EXCEPT
-        |SELECT DISTINCT user_id FROM p WHERE day >= 19750""".stripMargin,
-
-    // label-propagation replay: the 3 sync iterations UNROLLED (lp1..3
-    // identical blocks), argmax per node via the window pick ORDER BY
-    // c DESC, label ASC — exactly max_by(label, struct(c, -label))
-    "q_label_prop" ->
-      s"""$PairsCte,
-         |lp_e AS (SELECT id1 AS src, id2 AS dst FROM pairs_t
-         |  UNION SELECT id2, id1 FROM pairs_t),
-         |lab0 AS (SELECT DISTINCT src AS id, src AS label FROM lp_e),
-         |c1 AS (SELECT e.dst AS id, l.label, count(*) AS c
-         |  FROM lp_e e JOIN lab0 l ON e.src = l.id GROUP BY 1, 2),
-         |lab1 AS (SELECT id, label FROM (SELECT id, label, row_number()
-         |    OVER (PARTITION BY id ORDER BY c DESC, label ASC) AS rn
-         |  FROM c1) WHERE rn = 1),
-         |c2 AS (SELECT e.dst AS id, l.label, count(*) AS c
-         |  FROM lp_e e JOIN lab1 l ON e.src = l.id GROUP BY 1, 2),
-         |lab2 AS (SELECT id, label FROM (SELECT id, label, row_number()
-         |    OVER (PARTITION BY id ORDER BY c DESC, label ASC) AS rn
-         |  FROM c2) WHERE rn = 1),
-         |c3 AS (SELECT e.dst AS id, l.label, count(*) AS c
-         |  FROM lp_e e JOIN lab2 l ON e.src = l.id GROUP BY 1, 2),
-         |lab3 AS (SELECT id, label FROM (SELECT id, label, row_number()
-         |    OVER (PARTITION BY id ORDER BY c DESC, label ASC) AS rn
-         |  FROM c3) WHERE rn = 1)
-         |SELECT id, label AS community FROM lab3""".stripMargin,
-
-    "q_pagerank" ->
-      s"""${PairsCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |e AS (SELECT id1 AS src, id2 AS dst FROM pairs_t
-         |  UNION SELECT id2, id1 FROM pairs_t),
-         |dg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-         |pr(iter, doc_id, r) AS (
-         |  SELECT 0, src, 1000000::BIGINT FROM dg
-         |  UNION ALL
-         |  SELECT pr.iter + 1, e.dst, 150000 + sum((pr.r * 17) // (20 * dg.deg))
-         |  FROM pr JOIN e ON pr.doc_id = e.src JOIN dg ON pr.doc_id = dg.src
-         |  WHERE pr.iter < 5
-         |  GROUP BY pr.iter, e.dst)
-         |SELECT doc_id, r AS rank_micro FROM pr WHERE iter = 5""".stripMargin,
-
-    "q_kcore" ->
-      s"""${PairsCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |sym AS (SELECT id1 AS src, id2 AS dst FROM pairs_t WHERE id1 <> id2
-         |  UNION SELECT id2, id1 FROM pairs_t WHERE id1 <> id2),
-         |kc(iter, src, dst) AS (
-         |  SELECT 0, src, dst FROM sym
-         |  UNION ALL
-         |  SELECT t.iter + 1, t.src, t.dst FROM (
-         |    SELECT kc.iter, kc.src, kc.dst,
-         |      count(*) OVER (PARTITION BY kc.src) AS dsrc,
-         |      count(*) OVER (PARTITION BY kc.dst) AS ddst
-         |    FROM kc WHERE kc.iter < 4) t
-         |  WHERE t.dsrc >= 2 AND t.ddst >= 2)
-         |SELECT src AS doc_id, count(*) AS deg
-         |FROM kc WHERE iter = 4 GROUP BY src""".stripMargin,
-
-    "q_local_clustering" ->
-      s"""$PairsCte,
-         |und AS (SELECT DISTINCT least(id1, id2) AS a, greatest(id1, id2) AS b
-         |  FROM pairs_t WHERE id1 <> id2),
-         |dg AS (SELECT v, count(*) AS deg FROM
-         |  (SELECT a AS v FROM und UNION ALL SELECT b FROM und) GROUP BY v),
-         |tri AS (SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3 FROM und e1
-         |  JOIN und e2 ON e2.a = e1.b
-         |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |pn AS (SELECT v, count(*) AS t FROM
-         |  (SELECT v1 AS v FROM tri UNION ALL SELECT v2 FROM tri
-         |   UNION ALL SELECT v3 FROM tri) GROUP BY v)
-         |SELECT dg.v AS node_id, dg.deg, coalesce(pn.t, 0)::BIGINT AS triangles,
-         |  round(CASE WHEN dg.deg < 2 THEN NULL
-         |    ELSE (2 * coalesce(pn.t, 0))::DOUBLE
-         |         / (dg.deg * (dg.deg - 1))::DOUBLE END, 6) AS local_cc
-         |FROM dg LEFT JOIN pn ON dg.v = pn.v""".stripMargin,
-
-    "q_triangles" ->
-      s"""$PairsCte,
-         |und AS (SELECT DISTINCT least(id1, id2) AS a, greatest(id1, id2) AS b
-         |  FROM pairs_t WHERE id1 <> id2),
-         |dg AS (SELECT v, count(*) AS deg FROM
-         |  (SELECT a AS v FROM und UNION ALL SELECT b FROM und) GROUP BY v),
-         |tri AS (SELECT count(*) AS t FROM und e1
-         |  JOIN und e2 ON e2.a = e1.b
-         |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |nd AS (SELECT count(*) AS n_nodes,
-         |  sum(deg * (deg - 1) // 2) AS wedges FROM dg),
-         |ed AS (SELECT count(*) AS n_edges FROM und)
-         |SELECT coalesce(n_nodes, 0)::BIGINT AS n_nodes,
-         |  n_edges::BIGINT AS n_edges, t::BIGINT AS n_triangles,
-         |  coalesce(wedges, 0)::BIGINT AS n_wedges,
-         |  round(CASE WHEN wedges IS NULL OR wedges = 0 THEN NULL
-         |    ELSE (3 * t)::DOUBLE / wedges::DOUBLE END, 6) AS clustering_coeff
-         |FROM nd, ed, tri""".stripMargin,
-
-    "q_bloom_semi_join" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  sum(CAST(round(l_extendedprice * 100) AS BIGINT))::BIGINT AS price_cents
-        |FROM lineitem
-        |WHERE EXISTS (SELECT 1 FROM part
-        |  WHERE p_partkey = l_partkey AND p_brand = 'Brand#23')
-        |GROUP BY l_returnflag""".stripMargin,
-
-    "q_quality_deciles" ->
-      """SELECT lang, quartile, count(*) AS n,
-        |  min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM (SELECT lang, n_chars,
-        |    ntile(4) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS quartile
-        |  FROM documents)
-        |GROUP BY lang, quartile""".stripMargin,
-
-    "q_zorder" -> {
-      def spread(x: String) =
-        s"""(SELECT x5 FROM (SELECT ($x) & 65535 AS x1) t1,
-           |  LATERAL (SELECT (x1 | (x1 << 8)) & 16711935 AS x2) t2,
-           |  LATERAL (SELECT (x2 | (x2 << 4)) & 252645135 AS x3) t3,
-           |  LATERAL (SELECT (x3 | (x3 << 2)) & 858993459 AS x4) t4,
-           |  LATERAL (SELECT (x4 | (x4 << 1)) & 1431655765 AS x5) t5)""".stripMargin
-      s"""WITH cells AS (SELECT user_id,
-         |    user_id % 65536 AS ucell,
-         |    (epoch_us(ts) // 86400000000) % 65536 AS day
-         |  FROM events),
-         |z AS (SELECT user_id, day,
-         |    (${spread("ucell")} | (${spread("day")} << 1)) >> 8 AS zbucket
-         |  FROM cells)
-         |SELECT zbucket, count(*) AS n, count(DISTINCT user_id) AS n_users,
-         |  max(day) - min(day) AS day_span
-         |FROM z GROUP BY zbucket""".stripMargin
-    },
-
-    "q_tpch_q13" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count""".stripMargin,
-
-    "q_doc_perplexity" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |bg0 AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 2
-         |  THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-         |  ELSE [array_to_string(toks, ' ')] END) AS bigram FROM tk),
-         |bg AS (SELECT doc_id, bigram FROM bg0 WHERE strpos(bigram, ' ') > 0),
-         |lm AS (SELECT bigram, count(*) AS cbg FROM bg GROUP BY bigram),
-         |u AS (SELECT unnest(toks) AS w1 FROM tk),
-         |ug AS (SELECT w1, count(*) AS c1 FROM u GROUP BY w1),
-         |vv AS (SELECT count(DISTINCT w1)::DOUBLE AS v FROM u)
-         |SELECT bg.doc_id, count(*) AS n_bigrams,
-         |  ((-sum(CAST(round(ln((lm.cbg + 1)::DOUBLE / (ug.c1::DOUBLE + (SELECT v FROM vv))) * 1000000) AS BIGINT))) // count(*))::BIGINT AS avg_nll_micro
-         |FROM bg JOIN lm USING (bigram)
-         |JOIN ug ON split_part(bg.bigram, ' ', 1) = ug.w1
-         |GROUP BY bg.doc_id""".stripMargin,
-
-    "q_inverted_index" ->
-      """WITH tk AS (SELECT DISTINCT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term FROM documents)
-        |SELECT term, count(*) AS df,
-        |  array_to_string(list_slice(list(doc_id ORDER BY doc_id ASC), 1, 10), ',') AS postings
-        |FROM tk GROUP BY term HAVING count(*) >= 20""".stripMargin,
-
-    "q_url_stats" ->
-      """WITH u AS (SELECT n_chars,
-        |    'https://' || source || '.example.org:8080/' || lang || '/' || doc_id || '?ref=' || source AS url
-        |  FROM documents),
-        |p AS (SELECT n_chars,
-        |    nullif(regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1), '') AS host,
-        |    CAST(nullif(regexp_extract(url, '^[a-z]+://[^/:?#]+:([0-9]+)', 1), '') AS INTEGER) AS port,
-        |    nullif(regexp_extract(url, '^[a-z]+://[^/?#]*(/[^?#]*)', 1), '') AS path
-        |  FROM u)
-        |SELECT host, count(*) AS n_docs, count(DISTINCT path) AS n_paths,
-        |  max(port) AS port, sum(n_chars)::BIGINT AS total_chars
-        |FROM p GROUP BY host""".stripMargin,
-
-    // ── round-8 additions ───────────────────────────────────────────────
-
-    "q_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  year(l_shipdate) AS l_year,
-        |  sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT))
-        |    / 1000000.0 AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE n1.n_name IN ('NATION_1', 'NATION_2')
-        |  AND n2.n_name IN ('NATION_1', 'NATION_2')
-        |  AND n1.n_name <> n2.n_name
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q_tpch_q8" ->
-      """SELECT year(o_orderdate) AS o_year,
-        |  round(
-        |    sum(CASE WHEN n1.n_name = 'NATION_5'
-        |      THEN CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT)
-        |      ELSE 0 END)::DOUBLE /
-        |    sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT))::DOUBLE,
-        |  6) AS mkt_share
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE p_type = 'STANDARD' AND n2.n_regionkey = 0
-        |GROUP BY 1""".stripMargin,
-
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, count(*)::BIGINT AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q_tpch_q18" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(CAST(l_quantity AS BIGINT))::BIGINT AS sum_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING sum(CAST(l_quantity AS BIGINT)) > 250)
-        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
-        |FROM big JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderdate ASC, o_orderkey ASC
-        |LIMIT 100""".stripMargin,
-
-    "q_tpch_q12" ->
-      """SELECT l_linestatus,
-        |  sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-        |  sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 0 ELSE 1 END)::BIGINT AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY l_linestatus""".stripMargin,
-
-    "q_tpch_q3" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
-        |  sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000)
-        |    AS BIGINT))::BIGINT AS rev_micro
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |  JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1997-03-15'
-        |  AND l_shipdate > TIMESTAMP '1997-03-15'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY rev_micro DESC, o_orderdate ASC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-
-    "q_tpch_q6" ->
-      """SELECT sum(CAST(round(l_extendedprice * l_discount * 1000000)
-        |    AS BIGINT))::BIGINT AS revenue_micro,
-        |  count(*)::BIGINT AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_tpch_q10" ->
-      """WITH rev AS (
-        |  SELECT o_custkey,
-        |    sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000)
-        |      AS BIGINT))::BIGINT AS rev_micro
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE l_returnflag = 'R'
-        |    AND o_orderdate >= TIMESTAMP '1996-10-01'
-        |    AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  GROUP BY o_custkey)
-        |SELECT c_custkey, c_name, n_name, rev_micro
-        |FROM rev JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY rev_micro DESC, c_custkey ASC
-        |LIMIT 20""".stripMargin,
-
-    "q_tpch_q14" ->
-      """WITH m AS (
-        |  SELECT p_type,
-        |    CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000)
-        |      AS BIGINT) AS rm
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1996-09-01'
-        |    AND l_shipdate < TIMESTAMP '1996-10-01')
-        |SELECT sum(CASE WHEN p_type LIKE 'PROMO%' THEN rm ELSE 0 END)::BIGINT
-        |    AS promo_micro,
-        |  sum(rm)::BIGINT AS total_micro,
-        |  round(100.0 * sum(CASE WHEN p_type LIKE 'PROMO%' THEN rm ELSE 0
-        |    END)::DOUBLE / sum(rm)::DOUBLE, 6) AS promo_share
-        |FROM m""".stripMargin,
-
-    "q_tpch_q19" ->
-      """SELECT sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000)
-        |    AS BIGINT))::BIGINT AS revenue_micro,
-        |  count(*)::BIGINT AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#13' AND l_quantity BETWEEN 1 AND 11
-        |    AND p_size BETWEEN 1 AND 5)
-        |  OR (p_brand = 'Brand#20' AND l_quantity BETWEEN 10 AND 20
-        |    AND p_size BETWEEN 1 AND 10)
-        |  OR (p_brand = 'Brand#22' AND l_quantity BETWEEN 20 AND 30
-        |    AND p_size BETWEEN 1 AND 15)""".stripMargin,
-
-    "q_tpch_q15" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT))
-        |      AS rev_micro
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, rev_micro / 1000000.0 AS total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE rev_micro = (SELECT max(rev_micro) FROM rev)""".stripMargin,
-
-    "q_tpch_q16" ->
-      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#1' AND p_type NOT LIKE 'PROMO%'
-        |  AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0)
-        |GROUP BY p_brand, p_type, p_size""".stripMargin,
-
-    "q_tpch_q17" ->
-      """WITH li AS (
-        |  SELECT l_partkey, l_quantity, l_extendedprice
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_brand = 'Brand#3'),
-        |a AS (SELECT l_partkey AS ap_partkey,
-        |    sum(CAST(round(l_quantity * 100) AS BIGINT)) AS sum_qc,
-        |    count(*) AS cnt
-        |  FROM li GROUP BY l_partkey)
-        |SELECT round(sum(CAST(round(l_extendedprice * 100) AS BIGINT))::DOUBLE
-        |    / 100.0 / 7.0, 6) AS avg_yearly
-        |FROM li JOIN a ON l_partkey = ap_partkey
-        |WHERE CAST(round(l_quantity * 100) AS BIGINT) * cnt * 5 < sum_qc""".stripMargin,
-
-    "q_tpch_q22" ->
-      """WITH c AS (SELECT c_custkey, c_nationkey % 7 AS cntrycode,
-        |    CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents, c_acctbal
-        |  FROM customer),
-        |a AS (SELECT sum(bal_cents) AS sum_cents, count(*) AS cnt
-        |  FROM c WHERE c_acctbal > 0.0)
-        |SELECT cntrycode, count(*) AS numcust,
-        |  sum(bal_cents) / 100.0 AS totacctbal
-        |FROM c, a
-        |WHERE bal_cents * cnt > sum_cents
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey
-        |      AND o_orderdate >= TIMESTAMP '1999-01-01')
-        |GROUP BY cntrycode""".stripMargin,
-
-    "q_min_cost_supplier" ->
-      """WITH li AS (
-        |  SELECT p_partkey, p_name, l_suppkey,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS pc
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_size <= 10 AND p_type = 'SMALL'),
-        |best AS (SELECT p_partkey, p_name, l_suppkey, pc,
-        |    row_number() OVER (PARTITION BY p_partkey ORDER BY pc, l_suppkey) AS rn
-        |  FROM li)
-        |SELECT p_partkey, p_name, s_name, pc / 100.0 AS min_price
-        |FROM best JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE rn = 1""".stripMargin,
-
-    // AMS replay: same md5-bit sign family, same Σ±1 counters, same
-    // mean-of-squares op order — the estimate matches bit for bit
-    "q_ams_f2" -> {
-      val s = (0 until 16).map(j =>
-        s"sum(CASE WHEN (h16 >> $j) & 1 = 1 THEN 1 ELSE -1 END)::BIGINT AS s$j")
-        .mkString(", ")
-      val sq = (0 until 16).map(j => s"s$j*s$j").mkString(" + ")
-      s"""WITH h AS (SELECT ${hexToLong("md5(l_partkey::VARCHAR)", 1, 4)} AS h16 FROM lineitem),
-         |s AS (SELECT $s FROM h),
-         |q AS (SELECT ($sq)::DOUBLE / 16.0 AS est_f2 FROM s),
-         |e AS (SELECT sum(f*f)::BIGINT AS exact_f2
-         |  FROM (SELECT count(*) AS f FROM lineitem GROUP BY l_partkey) t)
-         |SELECT round(q.est_f2, 6) AS est_f2, e.exact_f2,
-         |  round(abs(q.est_f2 - e.exact_f2::DOUBLE) / e.exact_f2::DOUBLE, 6) AS rel_err
-         |FROM q CROSS JOIN e""".stripMargin
-    },
-
-    "q_ams_f2_grouped" -> {
-      val s = (0 until 16).map(j =>
-        s"sum(CASE WHEN (h16 >> $j) & 1 = 1 THEN 1 ELSE -1 END)::BIGINT AS s$j")
-        .mkString(", ")
-      val sq = (0 until 16).map(j => s"s$j*s$j").mkString(" + ")
-      s"""WITH h AS (SELECT l_returnflag,
-         |    ${hexToLong("md5(l_partkey::VARCHAR)", 1, 4)} AS h16 FROM lineitem),
-         |s AS (SELECT l_returnflag, $s FROM h GROUP BY l_returnflag),
-         |q AS (SELECT l_returnflag, ($sq)::DOUBLE / 16.0 AS est_f2 FROM s),
-         |e AS (SELECT l_returnflag, sum(f*f)::BIGINT AS exact_f2
-         |  FROM (SELECT l_returnflag, count(*) AS f FROM lineitem
-         |    GROUP BY l_returnflag, l_partkey) t
-         |  GROUP BY l_returnflag)
-         |SELECT q.l_returnflag, round(q.est_f2, 6) AS est_f2, e.exact_f2,
-         |  round(abs(q.est_f2 - e.exact_f2::DOUBLE) / e.exact_f2::DOUBLE, 6) AS rel_err
-         |FROM q JOIN e USING (l_returnflag)""".stripMargin
-    },
-
-    "q_agg_filter_clause" ->
-      """SELECT
-        |  (SELECT l_linenumber FROM lineitem WHERE l_returnflag = 'R'
-        |    GROUP BY 1 ORDER BY count(*) DESC, l_linenumber DESC LIMIT 1) AS mode_r,
-        |  round(skewness(l_extendedprice)
-        |    FILTER (WHERE l_linestatus = 'O'), 6) AS skew_o,
-        |  (SELECT l_orderkey FROM lineitem WHERE l_quantity >= 25.0
-        |    ORDER BY l_extendedprice DESC, l_orderkey DESC LIMIT 1) AS best_hiqty
-        |FROM lineitem""".stripMargin,
-
-    "q_kmv_overlap" ->
-      s"""WITH ta AS (SELECT DISTINCT ${hexToLong("md5(tok)", 1, 8)} AS h
-         |  FROM (SELECT unnest($ToksSql) AS tok FROM documents WHERE source = 'src1') t),
-         |tb AS (SELECT DISTINCT ${hexToLong("md5(tok)", 1, 8)} AS h
-         |  FROM (SELECT unnest($ToksSql) AS tok FROM documents WHERE source = 'src2') t),
-         |u AS (SELECT h, max(in_a) AS in_a, max(in_b) AS in_b
-         |  FROM (SELECT h, 1 AS in_a, 0 AS in_b FROM ta
-         |    UNION ALL SELECT h, 0 AS in_a, 1 AS in_b FROM tb) z
-         |  GROUP BY h),
-         |ex AS (SELECT count(*) AS n_union, sum(in_a * in_b)::BIGINT AS n_both FROM u),
-         |km AS (SELECT in_a, in_b FROM u ORDER BY h ASC LIMIT 256),
-         |es AS (SELECT count(*) AS k_used, sum(in_a * in_b)::BIGINT AS k_both FROM km)
-         |SELECT es.k_used, es.k_both, ex.n_union, ex.n_both,
-         |  round(es.k_both::DOUBLE / es.k_used::DOUBLE, 6) AS est_jaccard,
-         |  round(ex.n_both::DOUBLE / ex.n_union::DOUBLE, 6) AS exact_jaccard
-         |FROM es CROSS JOIN ex""".stripMargin,
-
-    "q_temperature_mix" ->
-      """WITH c AS (SELECT source, count(*) AS n_docs,
-        |    CAST(round(pow(count(*)::DOUBLE, 0.5) * 1e6) AS BIGINT) AS w_micro
-        |  FROM documents GROUP BY source),
-        |tot AS (SELECT sum(w_micro)::BIGINT AS w_total FROM c),
-        |tg AS (SELECT source, n_docs,
-        |    round(w_micro::DOUBLE / w_total::DOUBLE, 6) AS weight,
-        |    (w_micro * 200) // w_total AS target_n
-        |  FROM c CROSS JOIN tot),
-        |r AS (SELECT source, doc_id,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY md5(doc_id::VARCHAR) ASC, doc_id ASC) AS rn
-        |  FROM documents),
-        |sm AS (SELECT r.source, count(*) AS sampled_n
-        |  FROM r JOIN tg ON r.source = tg.source WHERE r.rn <= tg.target_n
-        |  GROUP BY r.source)
-        |SELECT tg.source, tg.n_docs, tg.weight, tg.target_n,
-        |  coalesce(sm.sampled_n, 0)::BIGINT AS sampled_n
-        |FROM tg LEFT JOIN sm ON tg.source = sm.source""".stripMargin,
-
-    "q_ngram_spectrum" ->
-      s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |sh_t AS (SELECT doc_id, $ShinglesSql AS sh FROM toks_t),
-         |occ AS (SELECT md5(s) AS h, count(*) AS occ
-         |  FROM sh_t, unnest(sh) AS u(s) GROUP BY 1)
-         |SELECT least(occ, 10)::BIGINT AS k, count(*)::BIGINT AS n_grams
-         |FROM occ GROUP BY 1""".stripMargin,
-
-    // water-filling epoch allocation: prefix membership test
-    // cross-multiplied in HUGEINT (Spark: decimal(38,0)), floor
-    // division for the uncapped shares
-    "q_epoch_mix" ->
-      """WITH b0 AS (SELECT source, sum(n_chars)::BIGINT AS n_tokens
-        |  FROM documents GROUP BY 1 HAVING sum(n_chars) > 0),
-        |bt AS (SELECT floor(sum(n_tokens) * 2.0)::BIGINT AS b FROM b0),
-        |base AS (SELECT source, n_tokens,
-        |    CAST(round(pow(n_tokens::DOUBLE, 0.5) * 1e6) AS BIGINT) AS w,
-        |    n_tokens * 4 AS cap FROM b0),
-        |pre AS (SELECT *,
-        |    row_number() OVER (ORDER BY n_tokens ASC, source ASC) AS rn,
-        |    sum(cap) OVER (ORDER BY n_tokens ASC, source ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c,
-        |    coalesce(sum(w) OVER (ORDER BY n_tokens ASC, source ASC
-        |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), 0) AS wafter
-        |  FROM base),
-        |flags AS (SELECT pre.*,
-        |    (cap::HUGEINT * wafter <= (bt.b - c)::HUGEINT * w) AS f
-        |  FROM pre, bt),
-        |kk AS (SELECT coalesce(max(CASE WHEN f THEN rn END), 0) AS k
-        |  FROM flags),
-        |sums AS (SELECT
-        |    sum(CASE WHEN rn <= kk.k THEN cap ELSE 0 END)::BIGINT AS csum,
-        |    sum(CASE WHEN rn > kk.k THEN w ELSE 0 END)::BIGINT AS wsum
-        |  FROM flags, kk),
-        |alloc AS (SELECT fl.source, fl.n_tokens, fl.rn <= kk.k AS capped,
-        |    (CASE WHEN fl.rn <= kk.k THEN fl.cap::HUGEINT
-        |      ELSE (fl.w::HUGEINT * (bt.b - s.csum)) // s.wsum END) AS a
-        |  FROM flags fl, kk, sums s, bt)
-        |SELECT source, n_tokens, a::BIGINT AS alloc_tokens,
-        |  round(a::DOUBLE / n_tokens::DOUBLE, 6) AS epochs, capped
-        |FROM alloc""".stripMargin,
-
-    "q_budget_select" ->
-      s"""WITH toks_t AS (SELECT source, doc_id, text, $ToksSql AS toks FROM documents),
-         |q_t AS (${qualitySelectSql("toks_t",
-             "source, len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\s]'))::BIGINT AS n_tokens, ")}),
-         |c_t AS (SELECT source, doc_id, quality, n_tokens,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY source
-         |      ORDER BY quality DESC, doc_id ASC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM q_t)
-         |SELECT source, doc_id, quality, n_tokens, cum_tokens
-         |FROM c_t WHERE cum_tokens <= 800""".stripMargin,
-
-    "q_token_budget_report" ->
-      """WITH s_t AS (SELECT source, count(*) AS n_docs,
-        |    sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]')))::BIGINT AS n_tokens
-        |  FROM documents GROUP BY source),
-        |tot_t AS (SELECT sum(n_tokens)::BIGINT AS tot FROM s_t)
-        |SELECT source, n_docs, n_tokens,
-        |  round(n_tokens::DOUBLE / nullif(tot, 0), 6) AS token_share,
-        |  round(1000000.0 / nullif(n_tokens, 0), 6) AS epochs_at_1m
-        |FROM s_t, tot_t""".stripMargin,
-
-    "q_seqlen_histogram" ->
-      """WITH n_t AS (SELECT
-        |    len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]'))::BIGINT AS nt
-        |  FROM documents)
-        |SELECT length(bin(nt)) AS len_bucket, count(*) AS n_docs,
-        |  min(nt) AS min_tokens, max(nt) AS max_tokens,
-        |  sum(nt)::BIGINT AS sum_tokens
-        |FROM n_t GROUP BY len_bucket""".stripMargin,
-
-    "q_token_fertility" ->
-      """WITH d AS (SELECT lang, n_chars,
-        |    len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]'))::BIGINT AS nt
-        |  FROM documents)
-        |SELECT lang, count(*) AS n_docs,
-        |  sum(n_chars)::BIGINT AS sum_chars, sum(nt)::BIGINT AS sum_tokens,
-        |  round(sum(n_chars)::DOUBLE / nullif(sum(nt), 0), 6) AS chars_per_token
-        |FROM d GROUP BY lang""".stripMargin,
-
-    "q_expectations" ->
-      """WITH w AS (SELECT count(*) AS n,
-        |    count(text) AS m1,
-        |    count(doc_id) AS m2, count(DISTINCT doc_id) AS d2,
-        |    sum(CASE WHEN lang IS NULL OR lang IN ('en','de','fr')
-        |        THEN 0 ELSE 1 END) AS m3,
-        |    min(n_chars::DOUBLE) AS m4, max(n_chars::DOUBLE) AS m5
-        |  FROM documents)
-        |SELECT 0 AS ord, 'rows_between' AS check, NULL AS col_name,
-        |  n::DOUBLE AS metric, 1.0::DOUBLE AS lo, 10000000.0::DOUBLE AS hi,
-        |  (n >= 1 AND n <= 10000000) AS passed FROM w
-        |UNION ALL SELECT 1, 'null_rate_at_most', 'text',
-        |  round(CASE WHEN n = 0 THEN 0.0 ELSE (n - m1)::DOUBLE / n END, 6),
-        |  0.0, 0.01,
-        |  round(CASE WHEN n = 0 THEN 0.0 ELSE (n - m1)::DOUBLE / n END, 6) <= 0.01
-        |  FROM w
-        |UNION ALL SELECT 2, 'unique', 'doc_id', (m2 - d2)::DOUBLE, 0.0, 0.0,
-        |  m2 = d2 FROM w
-        |UNION ALL SELECT 3, 'in_set', 'lang', coalesce(m3, 0)::DOUBLE, 0.0, 0.0,
-        |  coalesce(m3, 0) = 0 FROM w
-        |UNION ALL SELECT 4, 'min_at_least', 'n_chars', m4, 1.0, NULL,
-        |  (m4 IS NULL OR m4 >= 1.0) FROM w
-        |UNION ALL SELECT 5, 'max_at_most', 'n_chars', m5, NULL, 1000000.0,
-        |  (m5 IS NULL OR m5 <= 1000000.0) FROM w""".stripMargin,
-
-    "q_expectations_by_source" ->
-      """WITH w AS (SELECT source AS group_key, count(*) AS n,
-        |    count(text) AS m1,
-        |    count(doc_id) AS m2, count(DISTINCT doc_id) AS d2,
-        |    min(n_chars::DOUBLE) AS m3
-        |  FROM documents GROUP BY source)
-        |SELECT group_key, 0 AS ord, 'rows_between' AS check,
-        |  NULL AS col_name, n::DOUBLE AS metric,
-        |  5.0::DOUBLE AS lo, 1000000.0::DOUBLE AS hi,
-        |  (n >= 5 AND n <= 1000000) AS passed FROM w
-        |UNION ALL SELECT group_key, 1, 'null_rate_at_most', 'text',
-        |  round(CASE WHEN n = 0 THEN 0.0 ELSE (n - m1)::DOUBLE / n END, 6),
-        |  0.0, 0.01,
-        |  round(CASE WHEN n = 0 THEN 0.0 ELSE (n - m1)::DOUBLE / n END, 6) <= 0.01
-        |  FROM w
-        |UNION ALL SELECT group_key, 2, 'unique', 'doc_id',
-        |  (m2 - d2)::DOUBLE, 0.0, 0.0, m2 = d2 FROM w
-        |UNION ALL SELECT group_key, 3, 'min_at_least', 'n_chars',
-        |  m3, 1.0, NULL, (m3 IS NULL OR m3 >= 1.0) FROM w""".stripMargin,
-
-    "q_expect_regex" ->
-      """WITH w AS (SELECT
-        |    count(lang) AS c0, sum(CASE WHEN lang IS NOT NULL
-        |      AND regexp_matches(lang, '^[a-z]{2}$') THEN 1 ELSE 0 END) AS m0,
-        |    count(source) AS c1, sum(CASE WHEN source IS NOT NULL
-        |      AND regexp_matches(source, '^src[0-9]+$') THEN 1 ELSE 0 END) AS m1,
-        |    count(text) AS c2, sum(CASE WHEN text IS NOT NULL
-        |      AND regexp_matches(text, '^[A-Z]') THEN 1 ELSE 0 END) AS m2
-        |  FROM documents)
-        |SELECT 0 AS ord, 'matches_regex' AS check, 'lang' AS col_name,
-        |  round(CASE WHEN c0 = 0 THEN 0.0 ELSE m0::DOUBLE / c0 END, 6) AS metric,
-        |  0.99::DOUBLE AS lo, NULL::DOUBLE AS hi,
-        |  (c0 = 0 OR round(CASE WHEN c0 = 0 THEN 0.0 ELSE m0::DOUBLE / c0 END, 6)
-        |    >= 0.99) AS passed FROM w
-        |UNION ALL SELECT 1, 'matches_regex', 'source',
-        |  round(CASE WHEN c1 = 0 THEN 0.0 ELSE m1::DOUBLE / c1 END, 6),
-        |  1.0, NULL,
-        |  (c1 = 0 OR round(CASE WHEN c1 = 0 THEN 0.0 ELSE m1::DOUBLE / c1 END, 6)
-        |    >= 1.0) FROM w
-        |UNION ALL SELECT 2, 'matches_regex', 'text',
-        |  round(CASE WHEN c2 = 0 THEN 0.0 ELSE m2::DOUBLE / c2 END, 6),
-        |  0.5, NULL,
-        |  (c2 = 0 OR round(CASE WHEN c2 = 0 THEN 0.0 ELSE m2::DOUBLE / c2 END, 6)
-        |    >= 0.5) FROM w""".stripMargin,
-
-    "q_reconcile" ->
-      """WITH c AS (SELECT count(*) AS n_in,
-        |    count(*) FILTER (WHERE n_chars >= 200) AS n_out,
-        |    count(*) FILTER (WHERE n_chars < 200) AS d1,
-        |    count(*) FILTER (WHERE n_chars < 190) AS d2
-        |  FROM documents)
-        |SELECT n_in AS rows_in, n_out AS rows_out, d1 AS rows_dropped,
-        |  (n_out = n_in - d1) AS passed, 'filter_split' AS stage FROM c
-        |UNION ALL SELECT n_in, n_out, d2, (n_out = n_in - d2),
-        |  'leaky_split' FROM c""".stripMargin,
-
-    "q_reconcile_by_source" ->
-      """WITH c AS (SELECT source AS group_key, count(*) AS rows_in,
-        |    count(*) FILTER (WHERE n_chars >= 200) AS rows_out,
-        |    count(*) FILTER (WHERE n_chars < 200) AS rows_dropped
-        |  FROM documents GROUP BY source)
-        |SELECT group_key, rows_in, rows_out, rows_dropped,
-        |  (rows_out = rows_in - rows_dropped) AS passed FROM c""".stripMargin,
-
-    "q_dup_rate_by_source" ->
-      """SELECT source, count(*) AS n_docs,
-        |  count(DISTINCT md5(text)) AS n_unique,
-        |  round(1.0 - count(DISTINCT md5(text))::DOUBLE / count(*), 6) AS dup_rate
-        |FROM documents GROUP BY source""".stripMargin,
-
-    "q_dup_cluster_sizes" ->
-      s"""$ClustersCte,
-         |sz_t AS (SELECT cluster_id, count(*) AS sz FROM clusters_t
-         |  GROUP BY cluster_id)
-         |SELECT sz AS cluster_size, count(*) AS n_clusters,
-         |  (sz * count(*))::BIGINT AS n_docs
-         |FROM sz_t GROUP BY sz""".stripMargin,
-
-    "q_time_to_convert" ->
-      """WITH fc AS (SELECT user_id, min(epoch_us(ts)) AS click_us FROM events
-        |  WHERE event_type = 'click' GROUP BY user_id),
-        |cv AS (SELECT fc.user_id, fc.click_us, min(epoch_us(p.ts)) AS conv_us
-        |  FROM fc JOIN events p ON p.user_id = fc.user_id
-        |    AND p.event_type = 'purchase' AND epoch_us(p.ts) > fc.click_us
-        |  GROUP BY fc.user_id, fc.click_us),
-        |lag_t AS (SELECT (click_us // 86400000000) % 7 AS dow,
-        |    (conv_us - click_us)::DOUBLE AS v FROM cv),
-        |rk AS (SELECT dow, v,
-        |    row_number() OVER (PARTITION BY dow ORDER BY v ASC) - 1 AS rn,
-        |    count(*) OVER (PARTITION BY dow) AS n
-        |  FROM lag_t),
-        |g AS (SELECT dow, n,
-        |    max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.5) THEN v END) AS lo50,
-        |    max(CASE WHEN rn = ceil((n - 1)::DOUBLE * 0.5) THEN v END) AS hi50,
-        |    max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.9) THEN v END) AS lo90,
-        |    max(CASE WHEN rn = ceil((n - 1)::DOUBLE * 0.9) THEN v END) AS hi90
-        |  FROM rk GROUP BY dow, n)
-        |SELECT dow,
-        |  round(lo50 + ((n - 1)::DOUBLE * 0.5 - floor((n - 1)::DOUBLE * 0.5)) * (hi50 - lo50), 6) AS p50,
-        |  round(lo90 + ((n - 1)::DOUBLE * 0.9 - floor((n - 1)::DOUBLE * 0.9)) * (hi90 - lo90), 6) AS p90
-        |FROM g""".stripMargin,
-
-    "q_attribution" ->
-      """WITH t AS (SELECT user_id, epoch_us(ts) AS tsu, event_id FROM events
-        |  WHERE event_type = 'click'),
-        |c AS (SELECT user_id, epoch_us(ts) AS ctsu, event_id AS conv_id,
-        |    round(value, 6) AS v FROM events WHERE event_type = 'purchase'),
-        |j AS (SELECT c.user_id, c.conv_id, c.ctsu AS conv_tsu,
-        |    t.event_id, t.tsu AS touch_tsu, c.v
-        |  FROM c JOIN t ON t.user_id = c.user_id
-        |    AND t.tsu < c.ctsu AND t.tsu >= c.ctsu - 86400000000)
-        |SELECT user_id, conv_id, conv_tsu, event_id, touch_tsu,
-        |  count(*) OVER (PARTITION BY conv_id) AS n_touches,
-        |  (row_number() OVER (PARTITION BY conv_id
-        |     ORDER BY touch_tsu ASC, event_id ASC) = 1) AS first_touch,
-        |  (row_number() OVER (PARTITION BY conv_id
-        |     ORDER BY touch_tsu DESC, event_id DESC) = 1) AS last_touch,
-        |  round(v / count(*) OVER (PARTITION BY conv_id), 6) AS linear_credit
-        |FROM j""".stripMargin,
-
-    "q_interarrival" ->
-      """WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events),
-        |g AS (SELECT user_id, tsu - lag(tsu) OVER (PARTITION BY user_id
-        |    ORDER BY tsu ASC, event_id ASC) AS gap_us FROM ev),
-        |rk AS (SELECT user_id, gap_us,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY gap_us ASC) - 1 AS rn,
-        |    count(*) OVER (PARTITION BY user_id) AS n
-        |  FROM g WHERE gap_us IS NOT NULL)
-        |SELECT user_id, n AS n_gaps,
-        |  sum(gap_us)::DOUBLE / n AS mean_gap_us,
-        |  max(CASE WHEN rn = floor((n-1)::DOUBLE * 0.5) THEN gap_us::DOUBLE END)
-        |    + ((n-1)::DOUBLE * 0.5 - floor((n-1)::DOUBLE * 0.5))
-        |    * (max(CASE WHEN rn = ceil((n-1)::DOUBLE * 0.5) THEN gap_us::DOUBLE END)
-        |       - max(CASE WHEN rn = floor((n-1)::DOUBLE * 0.5) THEN gap_us::DOUBLE END))
-        |    AS p50_gap_us,
-        |  max(CASE WHEN rn = floor((n-1)::DOUBLE * 0.9) THEN gap_us::DOUBLE END)
-        |    + ((n-1)::DOUBLE * 0.9 - floor((n-1)::DOUBLE * 0.9))
-        |    * (max(CASE WHEN rn = ceil((n-1)::DOUBLE * 0.9) THEN gap_us::DOUBLE END)
-        |       - max(CASE WHEN rn = floor((n-1)::DOUBLE * 0.9) THEN gap_us::DOUBLE END))
-        |    AS p90_gap_us,
-        |  max(gap_us) AS max_gap_us
-        |FROM rk GROUP BY user_id, n""".stripMargin,
-
-    "q_level_shift" ->
-      """WITH daily AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    count(*) AS n FROM events GROUP BY event_type, day),
-        |fr AS (SELECT event_type, day,
-        |    count(n) OVER b AS n_before, count(n) OVER a AS n_after,
-        |    sum(n) OVER b AS sum_before, sum(n) OVER a AS sum_after
-        |  FROM daily
-        |  WINDOW b AS (PARTITION BY event_type ORDER BY day ASC
-        |      ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING),
-        |    a AS (PARTITION BY event_type ORDER BY day ASC
-        |      ROWS BETWEEN CURRENT ROW AND 6 FOLLOWING))
-        |SELECT event_type, day,
-        |  round(sum_before::DOUBLE / 7, 6) AS before_avg,
-        |  round(sum_after::DOUBLE / 7, 6) AS after_avg,
-        |  round(sum_after::DOUBLE / 7 - sum_before::DOUBLE / 7, 6) AS shift
-        |FROM fr WHERE n_before = 7 AND n_after = 7""".stripMargin,
-
-    "q_concentration_users" -> concentrationSql("events", "user_id"),
-
-    "q_concentration_sources" -> concentrationSql("documents", "source"),
-
-    "q_ab_lift" ->
-      s"""WITH u AS (SELECT user_id,
-         |    sum(CAST(round(value * 1000000) AS BIGINT)) AS sm,
-         |    (${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2 AS arm
-         |  FROM events GROUP BY user_id),
-         |w AS (SELECT
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_c,
-         |    sum(CASE WHEN arm = 0 THEN sm ELSE 0 END)::HUGEINT AS s1_c,
-         |    sum(CASE WHEN arm = 0 THEN sm::HUGEINT * sm::HUGEINT
-         |      ELSE 0 END) AS s2_c,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_t,
-         |    sum(CASE WHEN arm = 1 THEN sm ELSE 0 END)::HUGEINT AS s1_t,
-         |    sum(CASE WHEN arm = 1 THEN sm::HUGEINT * sm::HUGEINT
-         |      ELSE 0 END) AS s2_t
-         |  FROM u)
-         |SELECT n_c, n_t,
-         |  round(CASE WHEN n_c > 0 THEN s1_c::DOUBLE / n_c / 1e6 END, 6) AS mean_c,
-         |  round(CASE WHEN n_t > 0 THEN s1_t::DOUBLE / n_t / 1e6 END, 6) AS mean_t,
-         |  round(CASE WHEN n_c > 0 AND n_t > 0
-         |    THEN s1_t::DOUBLE / n_t / 1e6 - s1_c::DOUBLE / n_c / 1e6 END, 6) AS lift,
-         |  round(CASE WHEN n_c > 1 AND n_t > 1 THEN
-         |    (s1_t::DOUBLE / n_t / 1e6 - s1_c::DOUBLE / n_c / 1e6)
-         |    / sqrt((n_t * s2_t - s1_t * s1_t)::DOUBLE
-         |        / (n_t::DOUBLE * (n_t - 1)::DOUBLE) / 1e12 / n_t
-         |      + (n_c * s2_c - s1_c * s1_c)::DOUBLE
-         |        / (n_c::DOUBLE * (n_c - 1)::DOUBLE) / 1e12 / n_c) END, 6) AS z
-         |FROM w""".stripMargin,
-
-    "q_k_anonymity" ->
-      """WITH c AS (SELECT lang, source, n_chars // 100 AS len_bucket,
-        |    count(*) AS n FROM documents GROUP BY 1, 2, 3)
-        |SELECT sum(n)::BIGINT AS n_rows, count(*) AS n_classes,
-        |  sum(CASE WHEN n < 5 THEN n ELSE 0 END)::BIGINT AS rows_below_k,
-        |  round(sum(CASE WHEN n < 5 THEN n ELSE 0 END)::DOUBLE
-        |    / sum(n)::DOUBLE, 6) AS share_below_k,
-        |  min(n) AS min_class, max(n) AS max_class
-        |FROM c""".stripMargin,
-
-    "q_hash_vectorize" ->
-      s"""WITH tk AS (SELECT doc_id,
-         |    unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-         |  FROM documents)
-         |SELECT doc_id,
-         |  ((${hexToLong("md5(token)", 1, 8)}) % 256)::BIGINT AS bucket,
-         |  count(*) AS n
-         |FROM tk GROUP BY 1, 2""".stripMargin,
-
-    "q_fim_transform" ->
-      s"""WITH b AS (SELECT doc_id, text AS t, length(text) AS n,
-         |    (${hexToLong("md5(doc_id::VARCHAR)", 1, 8)}) AS d1,
-         |    (${hexToLong("md5(doc_id::VARCHAR)", 9, 8)}) AS d2,
-         |    (${hexToLong("md5(doc_id::VARCHAR)", 17, 8)}) AS d3
-         |  FROM documents),
-         |c AS (SELECT doc_id, t,
-         |    ((d1 % 1000000)::DOUBLE / 1000000.0 < 0.5 AND n >= 3) AS ap,
-         |    CASE WHEN n >= 3
-         |      THEN least(d2 % (n - 1) + 1, d3 % (n - 1) + 1)::INT END AS lo,
-         |    CASE WHEN n >= 3
-         |      THEN greatest(d2 % (n - 1) + 1, d3 % (n - 1) + 1)::INT END AS hi
-         |  FROM b)
-         |SELECT doc_id, ap AS fim_applied,
-         |  CASE WHEN ap THEN '<PRE>' || substring(t, 1, lo)
-         |      || '<SUF>' || substring(t, hi + 1)
-         |      || '<MID>' || substring(t, lo + 1, hi - lo)
-         |    ELSE t END AS text
-         |FROM c""".stripMargin,
-
-    "q_quality_linear" ->
-      s"""WITH wt AS (SELECT b AS bucket,
-         |    (${hexToLong("md5('w_' || b::VARCHAR)", 1, 8)})::DOUBLE
-         |      / 4294967296.0 - 0.5 AS w
-         |  FROM (SELECT unnest(range(0, 512)) AS b)),
-         |tk AS (SELECT doc_id, unnest($ToksSql) AS token FROM documents),
-         |tb AS (SELECT doc_id,
-         |    ((${hexToLong("md5(token)", 1, 8)}) % 512)::BIGINT AS bucket
-         |  FROM tk),
-         |sums AS (SELECT doc_id, count(*)::BIGINT AS n_tokens,
-         |    sum(coalesce(round(w.w * 1000000)::BIGINT, 0))::BIGINT AS lm
-         |  FROM tb LEFT JOIN wt w USING (bucket) GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  coalesce(s.n_tokens, 0)::BIGINT AS n_tokens,
-         |  (coalesce(s.lm, 0) + 100000)::BIGINT AS logit_micro,
-         |  round(1.0 / (1.0 + exp(-(coalesce(s.lm, 0) + 100000)::DOUBLE
-         |    / 1000000.0)), 6) AS score
-         |FROM documents d LEFT JOIN sums s USING (doc_id)""".stripMargin,
-
-    "q_bounce_rate" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events),
-        |l AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id) AS prev FROM e),
-        |s AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev > 1800000000
-        |    THEN 1 ELSE 0 END AS is_new FROM l),
-        |c AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM s),
-        |g AS (SELECT user_id, session_seq, count(*) AS n_events,
-        |    min(tsu) // 86400000000 AS day
-        |  FROM c GROUP BY 1, 2)
-        |SELECT day, count(*) AS n_sessions,
-        |  sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END)::BIGINT AS n_bounces,
-        |  round(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END)::DOUBLE
-        |    / count(*)::DOUBLE, 6) AS bounce_rate
-        |FROM g GROUP BY day""".stripMargin,
-
-    "q_stickiness" ->
-      """WITH ud AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day,
-        |    user_id FROM events),
-        |days AS (SELECT DISTINCT day FROM ud),
-        |ex AS (SELECT ud.day + t.j AS day, user_id, t.j AS off
-        |  FROM ud, unnest(range(0, 28)) AS t(j))
-        |SELECT ex.day AS day,
-        |  count(DISTINCT CASE WHEN off = 0 THEN user_id END) AS dau,
-        |  count(DISTINCT user_id) AS mau,
-        |  round(count(DISTINCT CASE WHEN off = 0 THEN user_id END)::DOUBLE
-        |    / count(DISTINCT user_id)::DOUBLE, 6) AS stickiness
-        |FROM ex JOIN days ON ex.day = days.day
-        |GROUP BY ex.day""".stripMargin,
-
-    "q_feature_incremental" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vmic,
-        |    epoch_us(ts) AS tsu FROM events),
-        |t AS (SELECT DISTINCT user_id FROM e
-        |  WHERE tsu >= 1706572800000000),
-        |d AS (SELECT e.user_id, day, count(*) AS n_1d, sum(vmic) AS vm
-        |  FROM e JOIN t ON t.user_id = e.user_id GROUP BY 1, 2)
-        |SELECT user_id, day, n_1d,
-        |  CAST(sum(n_1d) OVER w7 AS BIGINT) AS n_7d,
-        |  CAST(sum(n_1d) OVER w28 AS BIGINT) AS n_28d,
-        |  round(CAST(sum(vm) OVER w7 AS DOUBLE) / 1000000.0, 6) AS v_7d,
-        |  day - lag(day) OVER (PARTITION BY user_id ORDER BY day)
-        |    AS days_since_prev
-        |FROM d
-        |WINDOW w7 AS (PARTITION BY user_id ORDER BY day
-        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW),
-        |  w28 AS (PARTITION BY user_id ORDER BY day
-        |    RANGE BETWEEN 27 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q_percentile_weighted" ->
-      """WITH r AS (SELECT l_returnflag,
-        |    CAST(l_extendedprice AS DOUBLE) AS v,
-        |    CAST(l_quantity AS BIGINT) AS w FROM lineitem),
-        |c AS (SELECT *, sum(w) OVER (PARTITION BY l_returnflag ORDER BY v
-        |      RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |    sum(w) OVER (PARTITION BY l_returnflag) AS tw FROM r)
-        |SELECT l_returnflag,
-        |  round(min(CASE WHEN cw::DOUBLE >= 0.5 * tw::DOUBLE THEN v END), 6)
-        |    AS p50,
-        |  round(min(CASE WHEN cw::DOUBLE >= 0.9 * tw::DOUBLE THEN v END), 6)
-        |    AS p90
-        |FROM c GROUP BY l_returnflag""".stripMargin,
-
-    "q_ab_power" ->
-      s"""WITH u AS (SELECT user_id,
-         |    sum(CAST(round(value * 1000000) AS BIGINT)) AS sm,
-         |    (${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2 AS arm
-         |  FROM events GROUP BY user_id),
-         |w AS (SELECT
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_c,
-         |    sum(CASE WHEN arm = 0 THEN sm ELSE 0 END)::HUGEINT AS s1_c,
-         |    sum(CASE WHEN arm = 0 THEN sm::HUGEINT * sm::HUGEINT
-         |      ELSE 0 END) AS s2_c,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_t,
-         |    sum(CASE WHEN arm = 1 THEN sm ELSE 0 END)::HUGEINT AS s1_t,
-         |    sum(CASE WHEN arm = 1 THEN sm::HUGEINT * sm::HUGEINT
-         |      ELSE 0 END) AS s2_t
-         |  FROM u),
-         |m AS (SELECT *,
-         |    sqrt((n_t * s2_t - s1_t * s1_t)::DOUBLE
-         |        / (n_t::DOUBLE * (n_t - 1)::DOUBLE) / 1e12 / n_t
-         |      + (n_c * s2_c - s1_c * s1_c)::DOUBLE
-         |        / (n_c::DOUBLE * (n_c - 1)::DOUBLE) / 1e12 / n_c) AS se,
-         |    s1_c::DOUBLE / n_c / 1e6 AS mean_c
-         |  FROM w)
-         |SELECT n_c, n_t,
-         |  round(CASE WHEN n_c > 1 AND n_t > 1 THEN se END, 6) AS se,
-         |  round(CASE WHEN n_c > 1 AND n_t > 1
-         |    THEN (1.959964 + 0.841621) * se END, 6) AS mde_abs,
-         |  round(CASE WHEN n_c > 1 AND n_t > 1 AND mean_c <> 0.0
-         |    THEN (1.959964 + 0.841621) * se / mean_c END, 6) AS mde_rel
-         |FROM m""".stripMargin,
-
-    "q_ab_conversion" ->
-      s"""WITH u AS (SELECT user_id,
-         |    max(CASE WHEN event_type = 'purchase'
-         |      AND epoch_us(ts) >= 1705363200000000 THEN 1 ELSE 0 END) AS conv,
-         |    (${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2 AS arm
-         |  FROM events GROUP BY user_id),
-         |w AS (SELECT
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_c,
-         |    sum(CASE WHEN arm = 0 THEN conv ELSE 0 END)::BIGINT AS x_c,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_t,
-         |    sum(CASE WHEN arm = 1 THEN conv ELSE 0 END)::BIGINT AS x_t
-         |  FROM u)
-         |SELECT n_c, x_c, n_t, x_t,
-         |  round(CASE WHEN n_c > 0 THEN x_c::DOUBLE / n_c::DOUBLE END, 6)
-         |    AS rate_c,
-         |  round(CASE WHEN n_t > 0 THEN x_t::DOUBLE / n_t::DOUBLE END, 6)
-         |    AS rate_t,
-         |  round(CASE WHEN n_c > 0 AND n_t > 0
-         |    THEN x_t::DOUBLE / n_t::DOUBLE - x_c::DOUBLE / n_c::DOUBLE END, 6)
-         |    AS lift,
-         |  round(CASE WHEN n_c > 0 AND n_t > 0 AND x_c + x_t > 0
-         |      AND x_c + x_t < n_c + n_t
-         |    THEN (x_t::DOUBLE / n_t::DOUBLE - x_c::DOUBLE / n_c::DOUBLE)
-         |      / sqrt((x_c + x_t)::DOUBLE / (n_c + n_t)::DOUBLE
-         |        * (1.0 - (x_c + x_t)::DOUBLE / (n_c + n_t)::DOUBLE)
-         |        * (1.0 / n_c::DOUBLE + 1.0 / n_t::DOUBLE)) END, 6) AS z
-         |FROM w""".stripMargin,
-
-    "q_diff_in_diff" ->
-      s"""WITH u AS (SELECT user_id,
-         |    sum(CASE WHEN epoch_us(ts) >= 1705363200000000
-         |      THEN CAST(round(value * 1000000) AS BIGINT)
-         |      ELSE -CAST(round(value * 1000000) AS BIGINT) END) AS d,
-         |    (${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2 AS arm
-         |  FROM events GROUP BY user_id),
-         |w AS (SELECT
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_c,
-         |    sum(CASE WHEN arm = 0 THEN d ELSE 0 END)::HUGEINT AS s1_c,
-         |    sum(CASE WHEN arm = 0 THEN d::HUGEINT * d::HUGEINT
-         |      ELSE 0 END) AS s2_c,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_t,
-         |    sum(CASE WHEN arm = 1 THEN d ELSE 0 END)::HUGEINT AS s1_t,
-         |    sum(CASE WHEN arm = 1 THEN d::HUGEINT * d::HUGEINT
-         |      ELSE 0 END) AS s2_t
-         |  FROM u)
-         |SELECT n_c, n_t,
-         |  round(CASE WHEN n_c > 0 THEN s1_c::DOUBLE / n_c / 1e6 END, 6)
-         |    AS delta_c,
-         |  round(CASE WHEN n_t > 0 THEN s1_t::DOUBLE / n_t / 1e6 END, 6)
-         |    AS delta_t,
-         |  round(CASE WHEN n_c > 0 AND n_t > 0
-         |    THEN s1_t::DOUBLE / n_t / 1e6 - s1_c::DOUBLE / n_c / 1e6 END, 6)
-         |    AS did,
-         |  round(CASE WHEN n_c > 1 AND n_t > 1 THEN
-         |    (s1_t::DOUBLE / n_t / 1e6 - s1_c::DOUBLE / n_c / 1e6)
-         |    / sqrt((n_t * s2_t - s1_t * s1_t)::DOUBLE
-         |        / (n_t::DOUBLE * (n_t - 1)::DOUBLE) / 1e12 / n_t
-         |      + (n_c * s2_c - s1_c * s1_c)::DOUBLE
-         |        / (n_c::DOUBLE * (n_c - 1)::DOUBLE) / 1e12 / n_c) END, 6) AS z
-         |FROM w""".stripMargin,
-
-    "q_l_diversity" ->
-      """WITH c AS (SELECT source, n_chars // 200 AS len_bucket,
-        |    count(*) AS n, count(DISTINCT lang) AS n_sensitive
-        |  FROM documents GROUP BY 1, 2)
-        |SELECT sum(n)::BIGINT AS n_rows, count(*) AS n_classes,
-        |  sum(CASE WHEN n_sensitive < 2 THEN n ELSE 0 END)::BIGINT
-        |    AS rows_below_l,
-        |  round(sum(CASE WHEN n_sensitive < 2 THEN n ELSE 0 END)::DOUBLE
-        |    / sum(n)::DOUBLE, 6) AS share_below_l,
-        |  min(n_sensitive) AS min_diversity
-        |FROM c""".stripMargin,
-
-    "q_t_closeness" ->
-      """WITH cls AS (SELECT source, n_chars // 200 AS len_bucket,
-        |    count(*) AS nc FROM documents GROUP BY 1, 2),
-        |vals AS (SELECT lang AS v, count(*) AS nv FROM documents GROUP BY 1),
-        |cv AS (SELECT source, n_chars // 200 AS len_bucket, lang AS v,
-        |    count(*) AS ncv FROM documents GROUP BY 1, 2, 3),
-        |tot AS (SELECT count(*) AS n FROM documents),
-        |grid AS (SELECT c.source, c.len_bucket, c.nc, v.v, v.nv,
-        |    coalesce(cv.ncv, 0) AS ncv
-        |  FROM cls c CROSS JOIN vals v
-        |  LEFT JOIN cv ON cv.source = c.source
-        |    AND cv.len_bucket = c.len_bucket AND cv.v = v.v)
-        |SELECT g.source, g.len_bucket, g.nc::BIGINT AS n,
-        |  round(sum(abs(g.ncv * t.n - g.nv * g.nc))::DOUBLE
-        |    / (2.0 * g.nc::DOUBLE * t.n::DOUBLE), 6) AS t_dist
-        |FROM grid g, tot t GROUP BY g.source, g.len_bucket, g.nc, t.n""".stripMargin,
-
-    "q_benford" ->
-      """WITH v AS (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS m
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |    AND CAST(round(l_extendedprice * 100) AS BIGINT) > 0),
-        |d AS (SELECT CAST(substr(CAST(m AS VARCHAR), 1, 1) AS INT) AS d,
-        |    count(*) AS n FROM v GROUP BY 1),
-        |tt AS (SELECT sum(n)::BIGINT AS t FROM d),
-        |f AS (SELECT round(list_reduce(list(
-        |      ((n::DOUBLE - tt.t::DOUBLE * log10(1.0 + 1.0 / d))
-        |       * (n::DOUBLE - tt.t::DOUBLE * log10(1.0 + 1.0 / d)))
-        |      / (tt.t::DOUBLE * log10(1.0 + 1.0 / d))
-        |      ORDER BY d), (a, b) -> a + b), 6) AS chi2
-        |  FROM d CROSS JOIN tt)
-        |SELECT d.d, d.n, round(d.n::DOUBLE / tt.t::DOUBLE, 6) AS observed,
-        |  round(log10(1.0 + 1.0 / d.d), 6) AS expected, f.chi2
-        |FROM d CROSS JOIN tt CROSS JOIN f""".stripMargin,
-
-    "q_phash_dedup" ->
-      s"""WITH sg AS (SELECT doc_id,
-         |    ${hexToLong("md5(substr(text, 1, 200))", 1, 4)} AS b0,
-         |    ${hexToLong("md5(substr(text, 1, 200))", 5, 4)} AS b1,
-         |    ${hexToLong("md5(substr(text, 1, 200))", 9, 4)} AS b2,
-         |    ${hexToLong("md5(substr(text, 1, 200))", 13, 4)} AS b3
-         |  FROM documents),
-         |bd AS (SELECT doc_id, 0 AS band_idx, b0 AS band_val FROM sg
-         |  UNION ALL SELECT doc_id, 1, b1 FROM sg
-         |  UNION ALL SELECT doc_id, 2, b2 FROM sg
-         |  UNION ALL SELECT doc_id, 3, b3 FROM sg),
-         |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bd a JOIN bd b ON a.band_idx = b.band_idx
-         |    AND a.band_val = b.band_val AND a.doc_id < b.doc_id),
-         |h AS (SELECT id1, id2,
-         |    (bit_count(xor(s1.b0, s2.b0)) + bit_count(xor(s1.b1, s2.b1))
-         |     + bit_count(xor(s1.b2, s2.b2))
-         |     + bit_count(xor(s1.b3, s2.b3)))::BIGINT AS hamming
-         |  FROM cand JOIN sg s1 ON s1.doc_id = cand.id1
-         |    JOIN sg s2 ON s2.doc_id = cand.id2)
-         |SELECT id1, id2, hamming FROM h WHERE hamming <= 3""".stripMargin,
-
-    "q_session_cooccur" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS tsu FROM events),
-        |l AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id) AS prev FROM e),
-        |s AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev > 1800000000
-        |    THEN 1 ELSE 0 END AS is_new FROM l),
-        |c AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM s),
-        |st AS (SELECT DISTINCT user_id, session_seq, event_type FROM c),
-        |ns AS (SELECT count(*) AS s FROM
-        |  (SELECT DISTINCT user_id, session_seq FROM st)),
-        |ta AS (SELECT event_type, count(*) AS n FROM st GROUP BY 1),
-        |p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |    count(*) AS n_ab
-        |  FROM st a JOIN st b ON a.user_id = b.user_id
-        |    AND a.session_seq = b.session_seq
-        |    AND a.event_type < b.event_type
-        |  GROUP BY 1, 2)
-        |SELECT type_a, type_b, n_ab,
-        |  round((n_ab::DOUBLE * ns.s::DOUBLE) / (ta.n::DOUBLE * tb.n::DOUBLE), 6)
-        |    AS lift
-        |FROM p JOIN ta ON ta.event_type = p.type_a
-        |  JOIN ta tb ON tb.event_type = p.type_b
-        |  CROSS JOIN ns""".stripMargin,
-
-    "q_link_records" ->
-      """WITH l AS (SELECT p_partkey AS lid, p_name AS lname,
-        |    lower(substr(p_name, 1, 9)) AS blk FROM part),
-        |r AS (SELECT p_partkey AS rid, p_name AS rname,
-        |    lower(substr(p_name, 1, 9)) AS blk FROM part),
-        |c AS (SELECT lid, rid,
-        |    jaro_winkler_similarity(lname, rname) AS jw
-        |  FROM l JOIN r USING (blk) WHERE lid <> rid),
-        |f AS (SELECT lid, rid, jw, row_number() OVER (PARTITION BY lid
-        |    ORDER BY jw DESC, rid) AS rn FROM c WHERE jw >= 0.88)
-        |SELECT lid, rid, round(jw, 6) AS jw FROM f WHERE rn = 1""".stripMargin,
-
-    "q_seasonal_error" ->
-      """WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    count(*) AS n FROM events GROUP BY 1, 2),
-        |j AS (SELECT d.event_type, d.n, p.n AS pred
-        |  FROM d JOIN d p ON p.event_type = d.event_type
-        |    AND p.day + 7 = d.day)
-        |SELECT event_type, count(*) AS n_days,
-        |  round(sum(abs(n - pred))::DOUBLE / count(*), 6) AS mae,
-        |  round(sum(abs(n - pred))::DOUBLE / sum(pred)::DOUBLE, 6) AS wape
-        |FROM j GROUP BY event_type""".stripMargin,
-
-    "q_target_encode" ->
-      """WITH e AS (SELECT event_id, event_type,
-        |    CAST(round(value * 1000000) AS BIGINT) AS t FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL),
-        |g AS (SELECT sum(t)::DOUBLE / count(*) AS prior FROM e),
-        |c AS (SELECT event_type, count(*) AS n_c, sum(t)::BIGINT AS s_c
-        |  FROM e GROUP BY 1)
-        |SELECT e.event_id, e.event_type,
-        |  round(CASE WHEN (c.n_c - 1)::DOUBLE + 10.0 > 0
-        |    THEN ((c.s_c - e.t)::DOUBLE + 10.0 * g.prior)
-        |      / ((c.n_c - 1)::DOUBLE + 10.0) / 1e6 END, 6) AS enc
-        |FROM e JOIN c USING (event_type) CROSS JOIN g""".stripMargin,
-
-    "q_jaro_winkler" ->
-      """SELECT p1.p_partkey,
-        |  round(jaro_winkler_similarity(p1.p_name, p2.p_name), 6) AS jw
-        |FROM part p1 JOIN part p2 ON p2.p_partkey = p1.p_partkey + 1""".stripMargin,
-
-    "q_ab_cuped" ->
-      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS tsu,
-         |    CAST(round(value * 1000000) AS BIGINT) AS vmic FROM events),
-         |u AS (SELECT user_id,
-         |    sum(CASE WHEN tsu < 1705363200000000 THEN vmic ELSE 0 END) AS x,
-         |    sum(CASE WHEN tsu >= 1705363200000000 THEN vmic ELSE 0 END) AS y,
-         |    (${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2 AS arm
-         |  FROM e GROUP BY user_id),
-         |w AS (SELECT count(*)::BIGINT AS n,
-         |    sum(x)::HUGEINT AS sx, sum(y)::HUGEINT AS sy,
-         |    sum(x::HUGEINT * x::HUGEINT) AS sxx,
-         |    sum(x::HUGEINT * y::HUGEINT) AS sxy,
-         |    sum(y::HUGEINT * y::HUGEINT) AS syy,
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_c,
-         |    sum(CASE WHEN arm = 0 THEN x ELSE 0 END)::HUGEINT AS sx_c,
-         |    sum(CASE WHEN arm = 0 THEN y ELSE 0 END)::HUGEINT AS sy_c,
-         |    sum(CASE WHEN arm = 0 THEN x::HUGEINT * x::HUGEINT ELSE 0 END) AS sxx_c,
-         |    sum(CASE WHEN arm = 0 THEN x::HUGEINT * y::HUGEINT ELSE 0 END) AS sxy_c,
-         |    sum(CASE WHEN arm = 0 THEN y::HUGEINT * y::HUGEINT ELSE 0 END) AS syy_c,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_t,
-         |    sum(CASE WHEN arm = 1 THEN x ELSE 0 END)::HUGEINT AS sx_t,
-         |    sum(CASE WHEN arm = 1 THEN y ELSE 0 END)::HUGEINT AS sy_t,
-         |    sum(CASE WHEN arm = 1 THEN x::HUGEINT * x::HUGEINT ELSE 0 END) AS sxx_t,
-         |    sum(CASE WHEN arm = 1 THEN x::HUGEINT * y::HUGEINT ELSE 0 END) AS sxy_t,
-         |    sum(CASE WHEN arm = 1 THEN y::HUGEINT * y::HUGEINT ELSE 0 END) AS syy_t
-         |  FROM u),
-         |m AS (SELECT *,
-         |    (n * sxx - sx * sx) AS vxx, (n * sxy - sx * sy) AS vxy,
-         |    (n * syy - sy * sy) AS vyy,
-         |    CASE WHEN (n * sxx - sx * sx) > 0
-         |      THEN (n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)::DOUBLE
-         |      ELSE 0.0 END AS theta,
-         |    sx::DOUBLE / n / 1e6 AS mxp
-         |  FROM w),
-         |f AS (SELECT *,
-         |    sy_c::DOUBLE / n_c / 1e6
-         |      - theta * (sx_c::DOUBLE / n_c / 1e6 - mxp) AS madj_c,
-         |    sy_t::DOUBLE / n_t / 1e6
-         |      - theta * (sx_t::DOUBLE / n_t / 1e6 - mxp) AS madj_t,
-         |    ((n_c * syy_c - sy_c * sy_c)::DOUBLE
-         |      - 2 * theta * (n_c * sxy_c - sx_c * sy_c)::DOUBLE
-         |      + theta * theta * (n_c * sxx_c - sx_c * sx_c)::DOUBLE)
-         |      / (n_c::DOUBLE * (n_c - 1)::DOUBLE) / 1e12 AS va_c,
-         |    ((n_t * syy_t - sy_t * sy_t)::DOUBLE
-         |      - 2 * theta * (n_t * sxy_t - sx_t * sy_t)::DOUBLE
-         |      + theta * theta * (n_t * sxx_t - sx_t * sx_t)::DOUBLE)
-         |      / (n_t::DOUBLE * (n_t - 1)::DOUBLE) / 1e12 AS va_t
-         |  FROM m)
-         |SELECT n_c, n_t, round(theta, 6) AS theta,
-         |  round(CASE WHEN n_c > 0 AND n_t > 0
-         |    THEN sy_t::DOUBLE / n_t / 1e6 - sy_c::DOUBLE / n_c / 1e6 END, 6)
-         |    AS lift_raw,
-         |  round(CASE WHEN n_c > 0 AND n_t > 0
-         |    THEN madj_t - madj_c END, 6) AS lift_adj,
-         |  round(CASE WHEN n_c > 1 AND n_t > 1
-         |      AND va_t / n_t + va_c / n_c > 0
-         |    THEN (madj_t - madj_c) / sqrt(va_t / n_t + va_c / n_c) END, 6)
-         |    AS z_adj,
-         |  round(CASE WHEN vxx > 0 AND vyy > 0
-         |    THEN (vxy::DOUBLE * vxy::DOUBLE) / (vxx::DOUBLE * vyy::DOUBLE)
-         |    END, 6) AS rho2
-         |FROM f""".stripMargin,
-
-    "q_session_paths" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS tsu FROM events),
-        |l AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id) AS prev FROM e),
-        |s AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev > 1800000000
-        |    THEN 1 ELSE 0 END AS is_new FROM l),
-        |c AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM s),
-        |r AS (SELECT user_id, session_seq, event_type, tsu,
-        |    row_number() OVER (PARTITION BY user_id, session_seq
-        |      ORDER BY tsu, event_id) AS rn FROM c)
-        |SELECT user_id, min(tsu) AS start_us,
-        |  string_agg(CASE WHEN rn <= 5 THEN event_type END, '>' ORDER BY rn)
-        |    AS path,
-        |  count(*) AS n_events
-        |FROM r GROUP BY user_id, session_seq""".stripMargin,
-
-    "q_feature_windows" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vmic FROM events),
-        |d AS (SELECT user_id, day, count(*) AS n_1d, sum(vmic) AS vm
-        |  FROM e GROUP BY 1, 2)
-        |SELECT user_id, day, n_1d,
-        |  CAST(sum(n_1d) OVER w7 AS BIGINT) AS n_7d,
-        |  CAST(sum(n_1d) OVER w28 AS BIGINT) AS n_28d,
-        |  round(CAST(sum(vm) OVER w7 AS DOUBLE) / 1000000.0, 6) AS v_7d,
-        |  day - lag(day) OVER (PARTITION BY user_id ORDER BY day)
-        |    AS days_since_prev
-        |FROM d
-        |WINDOW w7 AS (PARTITION BY user_id ORDER BY day
-        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW),
-        |  w28 AS (PARTITION BY user_id ORDER BY day
-        |    RANGE BETWEEN 27 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q_top_paths" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |    epoch_us(ts) AS tsu FROM events),
-        |l AS (SELECT *, lag(tsu) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id) AS prev FROM e),
-        |s AS (SELECT *, CASE WHEN prev IS NULL OR tsu - prev > 1800000000
-        |    THEN 1 ELSE 0 END AS is_new FROM l),
-        |c AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id ROWS UNBOUNDED PRECEDING) AS session_seq
-        |  FROM s),
-        |r AS (SELECT user_id, session_seq, event_type,
-        |    row_number() OVER (PARTITION BY user_id, session_seq
-        |      ORDER BY tsu, event_id) AS rn FROM c),
-        |p AS (SELECT user_id, session_seq,
-        |    string_agg(event_type, '>' ORDER BY rn) AS path
-        |  FROM r WHERE rn <= 5 GROUP BY user_id, session_seq)
-        |SELECT path, count(*) AS n_sessions FROM p GROUP BY path
-        |ORDER BY n_sessions DESC, path ASC LIMIT 20""".stripMargin,
-
-    "q_bpe_merges" ->
-      s"""WITH w AS (SELECT unnest($ToksSql) AS w FROM documents),
-         |wc AS (SELECT w, count(*) AS f FROM w GROUP BY w HAVING length(w) >= 2),
-         |p AS (SELECT unnest(list_transform(range(1, length(w)),
-         |    i -> substring(w, i::INTEGER, 2))) AS pair, f FROM wc),
-         |pc AS (SELECT pair, sum(f)::BIGINT AS cnt FROM p GROUP BY pair)
-         |SELECT pair, cnt FROM pc ORDER BY cnt DESC, pair ASC LIMIT 20""".stripMargin,
-
-    // full BPE training replay, 8 rounds unrolled: round r encodes the
-    // vocabulary by ascending-rank wrapped-symbol replaces of the
-    // previous rounds' picks (scalar 1-row CTEs cross-joined in), then
-    // picks the heaviest adjacent symbol pair. Ascending replay ==
-    // the kernel's min-rank greedy because trained tables are
-    // well-formed by construction (each pick's parts are current
-    // symbols). DuckDB lists are 1-based like the bpeChainSql replay.
-    "q_bpe_train" -> {
-      val n = 8
-      val rounds = (1 to n).map { r =>
-        val joins = (1 until r).map(i => s" CROSS JOIN m_$i").mkString
-        var enc = "'|' || array_to_string(list_transform(" +
-          "range(1, length(w) + 1), i -> w[i]), '||') || '|'"
-        (1 until r).foreach { i =>
-          enc = s"replace($enc, '|' || m_$i.x || '||' || m_$i.y || '|', " +
-            s"'|' || m_$i.x || m_$i.y || '|')"
-        }
-        s"""enc_$r AS (SELECT f, list_filter(string_split($enc, '|'), t -> t <> '') AS syms
-           |  FROM wc$joins),
-           |p_$r AS (SELECT syms[i] AS x, syms[i + 1] AS y, sum(f)::BIGINT AS cnt
-           |  FROM enc_$r, unnest(range(1, len(syms))) AS u(i)
-           |  WHERE len(syms) >= 2 GROUP BY 1, 2),
-           |m_$r AS (SELECT x, y, cnt FROM p_$r ORDER BY cnt DESC, x ASC, y ASC LIMIT 1)""".stripMargin
-      }
-      s"""WITH w0 AS (SELECT unnest($ToksSql) AS w FROM documents),
-         |wc AS (SELECT w, count(*)::BIGINT AS f FROM w0 GROUP BY w),
-         |${rounds.mkString(",\n")}
-         |${(1 to n).map(r =>
-           s"SELECT $r AS merge_rank, x, y, cnt FROM m_$r").mkString("\nUNION ALL\n")}""".stripMargin
-    },
-
-    "q_ngram_novelty" ->
-      s"""WITH tk AS (SELECT doc_id, $ToksSql AS toks FROM documents),
-         |sh0 AS (SELECT doc_id, $ShinglesSql AS sh FROM tk),
-         |g AS (SELECT DISTINCT doc_id, md5(unnest(sh)) AS gh FROM sh0),
-         |dfc AS (SELECT gh, count(*) AS df FROM g GROUP BY gh)
-         |SELECT doc_id, count(*) AS n_grams,
-         |  sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)::BIGINT AS n_unique,
-         |  round(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)::DOUBLE
-         |    / count(*)::DOUBLE, 6) AS novelty
-         |FROM g JOIN dfc USING (gh) GROUP BY doc_id""".stripMargin,
-
-    "q_dup_matrix" ->
-      s"""$PairsCte,
-         |dsh_t AS (SELECT doc_id, list_distinct(sh) AS dsh FROM sh_t),
-         |jm AS (SELECT p.id1, p.id2,
-         |  CAST(round(round(len(list_intersect(a.dsh, b.dsh))::DOUBLE /
-         |    (len(a.dsh) + len(b.dsh) - len(list_intersect(a.dsh, b.dsh)))::DOUBLE, 6)
-         |    * 1e6) AS BIGINT) AS j_micro
-         |  FROM pairs_t p JOIN dsh_t a ON p.id1 = a.doc_id JOIN dsh_t b ON p.id2 = b.doc_id),
-         |sp AS (SELECT jm.j_micro,
-         |    least(da.source, db.source) AS source_a,
-         |    greatest(da.source, db.source) AS source_b
-         |  FROM jm JOIN documents da ON jm.id1 = da.doc_id
-         |  JOIN documents db ON jm.id2 = db.doc_id
-         |  WHERE jm.j_micro >= 400000)
-         |SELECT source_a, source_b, count(*) AS n_pairs,
-         |  round(sum(j_micro)::DOUBLE / count(*)::DOUBLE / 1e6, 6) AS avg_jaccard
-         |FROM sp GROUP BY source_a, source_b""".stripMargin,
-
-    "q_tpch_q9" ->
-      """SELECT n_name AS nation, year(o_orderdate) AS o_year,
-        |  sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000) AS BIGINT)
-        |    - CAST(round(p_retailprice * 1000000) AS BIGINT)
-        |      * CAST(round(l_quantity) AS BIGINT))
-        |    / 1000000.0 AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%red%'
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q_scd2" ->
-      """WITH e AS (SELECT user_id, event_type, event_id, epoch_us(ts) AS tsu,
-        |    round(value, 6) AS value FROM events),
-        |c AS (SELECT *,
-        |    lag(value) OVER w AS prev,
-        |    row_number() OVER w AS rn
-        |  FROM e WINDOW w AS (PARTITION BY user_id, event_type
-        |    ORDER BY tsu ASC, event_id ASC)),
-        |ch AS (SELECT user_id, event_type, event_id, tsu, value FROM c
-        |  WHERE rn = 1 OR value IS DISTINCT FROM prev)
-        |SELECT user_id, event_type, value,
-        |  tsu AS valid_from_us,
-        |  lead(tsu) OVER (PARTITION BY user_id, event_type
-        |    ORDER BY tsu ASC, event_id ASC) AS valid_to_us
-        |FROM ch""".stripMargin,
-
-    "q_label_window" ->
-      """WITH clicks AS (SELECT user_id, epoch_us(ts) AS tsu, event_id FROM events
-        |  WHERE event_type = 'click'),
-        |p AS (SELECT user_id, epoch_us(ts) AS tsu,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vmicro FROM events
-        |  WHERE event_type = 'purchase'),
-        |lab AS (SELECT c.event_id,
-        |    count(*) AS n_outcomes,
-        |    min(p.tsu) AS first_outcome_us,
-        |    sum(p.vmicro)::BIGINT AS outcome_sum_micro
-        |  FROM clicks c JOIN p ON c.user_id = p.user_id
-        |    AND p.tsu > c.tsu AND p.tsu <= c.tsu + 86400000000
-        |  GROUP BY c.event_id)
-        |SELECT c.event_id, c.user_id, c.tsu,
-        |  coalesce(lab.n_outcomes, 0) AS n_outcomes,
-        |  lab.first_outcome_us,
-        |  coalesce(lab.outcome_sum_micro, 0) AS outcome_sum_micro
-        |FROM clicks c LEFT JOIN lab USING (event_id)""".stripMargin,
-
-    "q_point_in_time" ->
-      """WITH e AS (SELECT user_id, event_type, event_id, epoch_us(ts) AS tsu,
-        |    round(value, 6) AS value FROM events),
-        |c AS (SELECT *,
-        |    lag(value) OVER w AS prev,
-        |    row_number() OVER w AS rn
-        |  FROM e WINDOW w AS (PARTITION BY user_id, event_type
-        |    ORDER BY tsu ASC, event_id ASC)),
-        |ch AS (SELECT user_id, event_type, event_id, tsu, value FROM c
-        |  WHERE rn = 1 OR value IS DISTINCT FROM prev),
-        |scd AS (SELECT user_id, value,
-        |    tsu AS valid_from_us,
-        |    lead(tsu) OVER (PARTITION BY user_id, event_type
-        |      ORDER BY tsu ASC, event_id ASC) AS valid_to_us
-        |  FROM ch WHERE event_type = 'purchase'),
-        |clicks AS (SELECT event_id, user_id, epoch_us(ts) AS tsu FROM events
-        |  WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.tsu, s.value AS dim_value
-        |FROM clicks c LEFT JOIN scd s ON c.user_id = s.user_id
-        |  AND c.tsu >= s.valid_from_us
-        |  AND (s.valid_to_us IS NULL OR c.tsu < s.valid_to_us)""".stripMargin,
-
-    "q_resample_interp" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu,
-        |    round(value, 6) AS v FROM events WHERE value IS NOT NULL),
-        |d0 AS (SELECT user_id, tsu // 86400000000 AS day, v,
-        |    row_number() OVER (PARTITION BY user_id, tsu // 86400000000
-        |      ORDER BY tsu DESC, event_id DESC) AS rn
-        |  FROM e),
-        |d1 AS (SELECT user_id, day, v FROM d0 WHERE rn = 1),
-        |sp AS (SELECT user_id, min(day) AS dmin, max(day) AS dmax
-        |  FROM d1 GROUP BY user_id),
-        |g AS (SELECT user_id, unnest(range(dmin, dmax + 1)) AS day FROM sp),
-        |j AS (SELECT g.user_id, g.day, d1.v
-        |  FROM g LEFT JOIN d1 ON g.user_id = d1.user_id AND g.day = d1.day),
-        |f AS (SELECT user_id, day, v,
-        |    last_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
-        |      OVER wb AS pd,
-        |    last_value(v IGNORE NULLS) OVER wb AS pv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
-        |      OVER wf AS nd,
-        |    first_value(v IGNORE NULLS) OVER wf AS nv
-        |  FROM j
-        |  WINDOW wb AS (PARTITION BY user_id ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |    wf AS (PARTITION BY user_id ORDER BY day
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT user_id, day,
-        |  round(CASE WHEN pd = nd THEN pv
-        |    ELSE pv + (nv - pv) * (day - pd)::DOUBLE / (nd - pd)::DOUBLE END, 6)
-        |    AS value_interp,
-        |  CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END AS observed
-        |FROM f""".stripMargin,
-
-    "q_cms_join_size" -> {
-      def bucket(jExpr: String) =
-        s"${hexToLong(s"md5($jExpr || ':' || term)", 1, 8)} % 1024"
-      s"""WITH ta AS (SELECT l_partkey::VARCHAR AS term, count(*) AS cnt
-         |  FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1),
-         |tb AS (SELECT l_partkey::VARCHAR AS term, count(*) AS cnt
-         |  FROM lineitem WHERE l_linestatus = 'O' GROUP BY 1),
-         |ga AS (SELECT j, bucket, sum(cnt) AS ca FROM (
-         |    SELECT term, cnt, j, ${bucket("j::VARCHAR")} AS bucket
-         |    FROM ta, unnest(range(0, 4)) AS t(j))
-         |  GROUP BY j, bucket),
-         |gb AS (SELECT j, bucket, sum(cnt) AS cb FROM (
-         |    SELECT term, cnt, j, ${bucket("j::VARCHAR")} AS bucket
-         |    FROM tb, unnest(range(0, 4)) AS t(j))
-         |  GROUP BY j, bucket),
-         |ip AS (SELECT j, sum(ca * cb) AS ip FROM ga JOIN gb USING (j, bucket)
-         |  GROUP BY j),
-         |es AS (SELECT min(ip)::BIGINT AS est_join_size FROM ip),
-         |ex AS (SELECT sum(ta.cnt * tb.cnt)::BIGINT AS exact_join_size
-         |  FROM ta JOIN tb USING (term))
-         |SELECT es.est_join_size, ex.exact_join_size,
-         |  round((es.est_join_size - ex.exact_join_size)::DOUBLE
-         |    / ex.exact_join_size::DOUBLE, 6) AS rel_err
-         |FROM es CROSS JOIN ex""".stripMargin
-    },
-
-    "q_vocab_overlap_matrix" ->
-      s"""WITH st AS (SELECT DISTINCT source, md5(tok) AS h
-         |  FROM (SELECT source, unnest($ToksSql) AS tok FROM documents) t),
-         |sz AS (SELECT source, count(*) AS n FROM st GROUP BY source),
-         |iv AS (SELECT a.source AS source_a, b.source AS source_b, count(*) AS n_common
-         |  FROM st a JOIN st b ON a.h = b.h AND a.source < b.source
-         |  GROUP BY 1, 2)
-         |SELECT source_a, source_b, sa.n AS n_a, sb.n AS n_b, n_common,
-         |  round(n_common::DOUBLE / (sa.n + sb.n - n_common)::DOUBLE, 6) AS jaccard
-         |FROM iv JOIN sz sa ON source_a = sa.source
-         |JOIN sz sb ON source_b = sb.source""".stripMargin,
-
-    "q_pmi_lang_source" ->
-      """WITH j AS (SELECT lang, source, count(*) AS c
-        |  FROM documents GROUP BY lang, source)
-        |SELECT lang, source, c,
-        |  round(ln(c::DOUBLE * (sum(c) OVER ())::DOUBLE /
-        |    ((sum(c) OVER (PARTITION BY lang))::DOUBLE
-        |      * (sum(c) OVER (PARTITION BY source))::DOUBLE)), 6) AS pmi
-        |FROM j""".stripMargin,
-
-    "q_monthly_trend" ->
-      """WITH m AS (SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-        |    count(*) AS n_orders,
-        |    sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev_cents
-        |  FROM orders GROUP BY 1)
-        |SELECT m.month, m.n_orders, m.rev_cents / 100.0 AS revenue,
-        |  round(m.rev_cents::DOUBLE / p.rev_cents::DOUBLE, 6) AS yoy_ratio
-        |FROM m LEFT JOIN m p
-        |  ON p.month = (substr(m.month, 1, 4)::INT - 1)::VARCHAR || substr(m.month, 5, 3)""".stripMargin,
-
-    // identical draw to q_sample_weighted — the bounded-state aggregate
-    // and the window sort MUST produce the same sample
-    "q_sample_weighted_agg" ->
-      s"""WITH k_t AS (SELECT doc_id, lang,
-         |  round(ln((${hexToLong("md5(doc_id::VARCHAR)", 1, 8)}::DOUBLE + 0.5) / 4294967296.0)
-         |    / greatest(length(text)::DOUBLE, 1e-300), 6) AS k
-         |  FROM documents)
-         |SELECT doc_id, lang FROM (
-         |  SELECT doc_id, lang,
-         |    row_number() OVER (PARTITION BY lang ORDER BY k DESC, doc_id ASC) AS rn
-         |  FROM k_t)
-         |WHERE rn <= 15""".stripMargin,
-
-    "q_winsorized" -> {
-      def pct(p: String, as: String) =
-        s"""max(CASE WHEN rn = floor((n - 1)::DOUBLE * $p) THEN v END)
-           |      + ((n - 1)::DOUBLE * $p - floor((n - 1)::DOUBLE * $p))
-           |        * (max(CASE WHEN rn = ceil((n - 1)::DOUBLE * $p) THEN v END)
-           |          - max(CASE WHEN rn = floor((n - 1)::DOUBLE * $p) THEN v END))""".stripMargin
-      s"""WITH rk AS (SELECT l_returnflag, l_extendedprice::DOUBLE AS v,
-         |    row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice ASC) - 1 AS rn,
-         |    count(*) OVER (PARTITION BY l_returnflag) AS n
-         |  FROM lineitem),
-         |b AS (SELECT l_returnflag, n,
-         |    round(${pct("0.05", "lo")}, 6) AS lo,
-         |    round(${pct("0.95", "hi")}, 6) AS hi
-         |  FROM rk GROUP BY l_returnflag, n)
-         |SELECT rk.l_returnflag, count(*) AS n,
-         |  max(b.lo) AS p_lo, max(b.hi) AS p_hi,
-         |  round(sum(CAST(round(least(greatest(rk.v, b.lo), b.hi) * 1e6) AS BIGINT))::DOUBLE
-         |    / count(*)::DOUBLE / 1e6, 6) AS winsorized_mean,
-         |  sum(CASE WHEN rk.v < b.lo OR rk.v > b.hi THEN 1 ELSE 0 END)::BIGINT AS n_clamped
-         |FROM rk JOIN b USING (l_returnflag)
-         |GROUP BY rk.l_returnflag""".stripMargin
-    },
-
-    "q_dominant_supplier" ->
-      """WITH ps AS (SELECT l_partkey, l_suppkey,
-        |    sum(CAST(round(l_quantity * 100) AS BIGINT)) AS q_ps
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey),
-        |p AS (SELECT l_partkey AS pk, sum(q_ps) AS q_p, count(*) AS n_supp
-        |  FROM ps GROUP BY l_partkey)
-        |SELECT l_partkey, l_suppkey, q_ps::BIGINT AS q_ps, q_p::BIGINT AS q_p,
-        |  round(q_ps::DOUBLE / q_p::DOUBLE, 6) AS share
-        |FROM ps JOIN p ON l_partkey = pk
-        |WHERE q_ps * 5 >= q_p AND n_supp >= 2""".stripMargin,
-
-    // ── round-9 additions ───────────────────────────────────────────────
-
-    "q_tpch_q11" ->
-      """WITH v AS (SELECT l_partkey,
-        |    sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-        |      * CAST(round(l_quantity * 100) AS BIGINT)) AS val
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_regionkey = 1
-        |  GROUP BY l_partkey),
-        |t AS (SELECT sum(val) AS tot FROM v)
-        |SELECT l_partkey, round(val::DOUBLE / 10000.0, 2) AS value
-        |FROM v, t WHERE val * 2000 > tot""".stripMargin,
-
-    "q_tpch_q20" ->
-      """WITH qps AS (SELECT l_partkey, l_suppkey,
-        |    sum(CAST(round(l_quantity * 100) AS BIGINT)) AS q_ps
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  GROUP BY l_partkey, l_suppkey),
-        |qp AS (SELECT l_partkey AS pk, sum(q_ps) AS q_p FROM qps GROUP BY l_partkey)
-        |SELECT s_suppkey, s_name FROM supplier
-        |WHERE s_suppkey IN (
-        |    SELECT l_suppkey FROM qps JOIN qp ON l_partkey = pk
-        |    WHERE q_ps * 2 > q_p
-        |      AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%'))
-        |  AND s_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)""".stripMargin,
-
-    "q_tpch_q21" ->
-      """WITH late AS (SELECT l_orderkey, l_suppkey
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |    AND l_shipdate > o_orderdate + INTERVAL 1700 DAY)
-        |SELECT s_suppkey, s_name, count(*) AS numwait
-        |FROM late l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-        |WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM late l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey)
-        |GROUP BY s_suppkey, s_name""".stripMargin,
-
-    "q_auc" ->
-      """WITH v AS (SELECT value AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-        |g AS (SELECT s,
-        |    sum(CASE WHEN y = 1 THEN 1 ELSE 0 END)::BIGINT AS np,
-        |    sum(CASE WHEN y = 0 THEN 1 ELSE 0 END)::BIGINT AS nn
-        |  FROM v GROUP BY s),
-        |c AS (SELECT np, nn, coalesce(sum(nn) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS negbelow
-        |  FROM g),
-        |f AS (SELECT sum(np::HUGEINT * (2 * negbelow + nn)) AS u2,
-        |    sum(np)::BIGINT AS p, sum(nn)::BIGINT AS n FROM c)
-        |SELECT coalesce(p, 0) AS n_pos, coalesce(n, 0) AS n_neg,
-        |  round(CASE WHEN p > 0 AND n > 0
-        |    THEN u2::DOUBLE / (2.0 * p::DOUBLE * n::DOUBLE) END, 6) AS auc
-        |FROM f""".stripMargin,
-
-    "q_psi" ->
-      """WITH v AS (SELECT value AS val,
-        |    (epoch_us(ts) < 1705363200000000) AS b
-        |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-        |r AS (SELECT min(val) AS lo, max(val) AS hi FROM v WHERE b),
-        |binned AS (SELECT CASE WHEN r.hi = r.lo THEN 0
-        |    ELSE least(9, greatest(0, floor((val - r.lo) / (r.hi - r.lo) * 10)))::BIGINT
-        |    END AS bin, b
-        |  FROM v CROSS JOIN r),
-        |c AS (SELECT bin,
-        |    sum(CASE WHEN b THEN 1 ELSE 0 END)::BIGINT AS n_base,
-        |    sum(CASE WHEN NOT b THEN 1 ELSE 0 END)::BIGINT AS n_cur
-        |  FROM binned GROUP BY bin),
-        |dense AS (SELECT gs.bin, coalesce(c.n_base, 0)::BIGINT AS n_base,
-        |    coalesce(c.n_cur, 0)::BIGINT AS n_cur
-        |  FROM (SELECT unnest(range(0, 10))::BIGINT AS bin) gs
-        |  LEFT JOIN c USING (bin)),
-        |t AS (SELECT sum(n_base)::BIGINT AS tb, sum(n_cur)::BIGINT AS tc FROM dense),
-        |f AS (SELECT round(list_reduce(list(
-        |      ((n_cur::DOUBLE + 0.5) / (t.tc::DOUBLE + 5.0)
-        |       - (n_base::DOUBLE + 0.5) / (t.tb::DOUBLE + 5.0))
-        |      * ln(((n_cur::DOUBLE + 0.5) / (t.tc::DOUBLE + 5.0))
-        |           / ((n_base::DOUBLE + 0.5) / (t.tb::DOUBLE + 5.0)))
-        |      ORDER BY bin), (a, b) -> a + b), 6) AS psi
-        |  FROM dense CROSS JOIN t)
-        |SELECT dense.bin, dense.n_base, dense.n_cur,
-        |  round((dense.n_base::DOUBLE + 0.5) / (t.tb::DOUBLE + 5.0), 6) AS p_base,
-        |  round((dense.n_cur::DOUBLE + 0.5) / (t.tc::DOUBLE + 5.0), 6) AS p_cur,
-        |  f.psi
-        |FROM dense CROSS JOIN t CROSS JOIN f""".stripMargin,
-
-    "q_chi2" ->
-      """WITH e AS (SELECT event_type::VARCHAR AS a,
-        |    (((epoch_us(ts) // 86400000000) + 4) % 7)::VARCHAR AS b FROM events),
-        |c AS (SELECT a, b, count(*)::BIGINT AS n FROM e GROUP BY 1, 2),
-        |ma AS (SELECT a, sum(n)::BIGINT AS na FROM c GROUP BY 1),
-        |mb AS (SELECT b, sum(n)::BIGINT AS nb FROM c GROUP BY 1),
-        |j AS (SELECT c.a, c.b, c.n, ma.na, mb.nb
-        |  FROM c JOIN ma USING (a) JOIN mb USING (b)),
-        |tt AS (SELECT count(DISTINCT a)::BIGINT AS ka,
-        |    count(DISTINCT b)::BIGINT AS kb, sum(n)::BIGINT AS n FROM j),
-        |f AS (SELECT round(list_reduce(list(
-        |      (j.n::DOUBLE * j.n::DOUBLE)
-        |      / (j.na::DOUBLE * j.nb::DOUBLE / tt.n::DOUBLE)
-        |      ORDER BY j.a NULLS FIRST, j.b NULLS FIRST), (x, y) -> x + y)
-        |    - any_value(tt.n)::DOUBLE, 6) AS chi2
-        |  FROM j CROSS JOIN tt)
-        |SELECT tt.n AS n_rows, tt.ka AS n_a, tt.kb AS n_b,
-        |  CASE WHEN tt.ka > 0 THEN (tt.ka - 1) * (tt.kb - 1) END AS dof,
-        |  f.chi2,
-        |  round(CASE WHEN tt.n > 0 AND tt.ka > 1 AND tt.kb > 1
-        |    THEN sqrt(f.chi2 / (tt.n::DOUBLE * (least(tt.ka, tt.kb) - 1)::DOUBLE))
-        |    END, 6) AS cramers_v
-        |FROM tt CROSS JOIN f""".stripMargin,
-
-    "q_corr_matrix" -> {
-      val defs = Seq("q" -> "l_quantity", "e" -> "l_extendedprice",
-        "d" -> "l_discount", "t" -> "l_tax")
-      val names = defs.toMap
-      val pairs = for (i <- defs.indices; j <- defs.indices if i < j)
-        yield (defs(i)._1, defs(j)._1)
-      val arms = pairs.map { case (a, b) =>
-        s"""SELECT '${names(a)}' AS col_a, '${names(b)}' AS col_b, n,
-           |  round(CASE WHEN (n*s_$a$a - s_$a*s_$a) > 0 AND (n*s_$b$b - s_$b*s_$b) > 0
-           |    THEN (n*s_$a$b - s_$a*s_$b)::DOUBLE
-           |      / (sqrt((n*s_$a$a - s_$a*s_$a)::DOUBLE) * sqrt((n*s_$b$b - s_$b*s_$b)::DOUBLE))
-           |    END, 6) AS corr FROM w""".stripMargin
-      }.mkString("\n  UNION ALL\n  ")
-      val sums = defs.map { case (k, _) =>
-        s"sum($k)::HUGEINT AS s_$k" }.mkString(", ") + ",\n  " +
-        (for (i <- defs.indices; j <- defs.indices if i <= j)
-          yield s"sum(${defs(i)._1}::HUGEINT * ${defs(j)._1}) AS s_${defs(i)._1}${defs(j)._1}")
-          .mkString(", ")
-      s"""WITH m AS (SELECT ${defs.map { case (k, c) =>
-            s"CAST(round($c * 1000000) AS BIGINT) AS $k" }.mkString(", ")}
-         |  FROM lineitem),
-         |w AS (SELECT count(*)::BIGINT AS n, $sums FROM m)
-         |SELECT col_a, col_b, n, corr FROM (
-         |  $arms
-         |)""".stripMargin
-    },
-
-    "q_srm" ->
-      s"""WITH u AS (SELECT DISTINCT user_id FROM events),
-         |a AS (SELECT (${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2 AS arm
-         |  FROM u),
-         |w AS (SELECT
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_c,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_t FROM a),
-         |f AS (SELECT n_c, n_t,
-         |    round(CASE WHEN n_c + n_t > 0
-         |      THEN n_t::DOUBLE / (n_c + n_t)::DOUBLE END, 6) AS ratio_t,
-         |    round(CASE WHEN n_c + n_t > 0
-         |      THEN ((n_c - n_t) * (n_c - n_t))::DOUBLE / (n_c + n_t)::DOUBLE
-         |      END, 6) AS chi2
-         |  FROM w)
-         |SELECT n_c, n_t, ratio_t, chi2,
-         |  coalesce(chi2 > 6.635, false) AS srm FROM f""".stripMargin,
-
-    "q_rolling_corr" ->
-      """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
-        |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS x,
-        |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS y
-        |  FROM events WHERE event_type IN ('click', 'purchase') GROUP BY 1),
-        |s AS (SELECT day, x, y,
-        |    count(*) OVER w AS k,
-        |    sum(x) OVER w AS sx, sum(y) OVER w AS sy,
-        |    sum(x::HUGEINT * y) OVER w AS sxy,
-        |    sum(x::HUGEINT * x) OVER w AS sxx,
-        |    sum(y::HUGEINT * y) OVER w AS syy
-        |  FROM d WINDOW w AS (ORDER BY day
-        |    RANGE BETWEEN 27 PRECEDING AND CURRENT ROW))
-        |SELECT day, x AS n_a, y AS n_b, k::BIGINT AS n_days,
-        |  round(CASE WHEN k >= 7 AND (k * sxx - sx::HUGEINT * sx) > 0
-        |      AND (k * syy - sy::HUGEINT * sy) > 0
-        |    THEN (k * sxy - sx::HUGEINT * sy)::DOUBLE
-        |      / (sqrt((k * sxx - sx::HUGEINT * sx)::DOUBLE)
-        |         * sqrt((k * syy - sy::HUGEINT * sy)::DOUBLE)) END, 6) AS corr
-        |FROM s""".stripMargin,
-
-    "q_assign_ids" ->
-      """SELECT c_custkey, c_name,
-        |  row_number() OVER (ORDER BY c_name) AS uid
-        |FROM customer""".stripMargin,
-
-    "q_auc_by" ->
-      """WITH v AS (SELECT
-        |    ((epoch_us(ts) // 86400000000) + 4) % 7 AS dow, value AS s,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-        |g AS (SELECT dow, s,
-        |    sum(CASE WHEN y = 1 THEN 1 ELSE 0 END)::BIGINT AS np,
-        |    sum(CASE WHEN y = 0 THEN 1 ELSE 0 END)::BIGINT AS nn
-        |  FROM v GROUP BY dow, s),
-        |c AS (SELECT dow, np, nn, coalesce(sum(nn) OVER (PARTITION BY dow
-        |    ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |    0) AS negbelow
-        |  FROM g)
-        |SELECT dow, sum(np)::BIGINT AS n_pos, sum(nn)::BIGINT AS n_neg,
-        |  round(CASE WHEN sum(np) > 0 AND sum(nn) > 0
-        |    THEN sum(np::HUGEINT * (2 * negbelow + nn))::DOUBLE
-        |      / (2.0 * sum(np)::DOUBLE * sum(nn)::DOUBLE) END, 6) AS auc
-        |FROM c GROUP BY dow""".stripMargin,
-
-    "q_embed_cov" ->
-      """WITH m AS (SELECT list_transform(CAST(embedding AS DOUBLE[]),
-        |    x -> CAST(round(x * 1000) AS BIGINT)) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |p AS (SELECT i, j FROM range(1, 65) t1(i), range(1, 65) t2(j)
-        |  WHERE i <= j),
-        |s AS (SELECT i, j, count(*)::BIGINT AS n,
-        |    sum(v[i])::HUGEINT AS si, sum(v[j])::HUGEINT AS sj,
-        |    sum(v[i]::HUGEINT * v[j])::HUGEINT AS sij
-        |  FROM m, p GROUP BY i, j)
-        |SELECT (i - 1)::INT AS i, (j - 1)::INT AS j, n,
-        |  round((n * sij - si * sj)::DOUBLE / (n::DOUBLE * n::DOUBLE)
-        |    / (1000.0 * 1000.0), 6) + 0.0 AS cov
-        |FROM s""".stripMargin,
-
-    "q_project" ->
-      s"""WITH m AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings WHERE embedding IS NOT NULL)
-         |SELECT vec_id, label, p::INT AS p,
-         |  round(list_reduce(list_transform(range(1, 65),
-         |      d -> v[d] * ${planeWeightSql("p", "d - 1")}),
-         |    (a, b) -> a + b), 6) + 0.0 AS value
-         |FROM m, unnest(range(0, 16)) AS t(p)""".stripMargin,
-
-    "q_cdf" ->
-      """WITH g AS (SELECT l_returnflag, l_extendedprice AS v,
-        |    count(*)::BIGINT AS c
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |  GROUP BY 1, 2),
-        |s AS (SELECT l_returnflag, v, c,
-        |    coalesce(sum(c) OVER (PARTITION BY l_returnflag ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below,
-        |    sum(c) OVER (PARTITION BY l_returnflag) AS n
-        |  FROM g)
-        |SELECT l_returnflag, v AS l_extendedprice, c AS n_eq,
-        |  round((2 * below + c)::DOUBLE / (2.0 * n::DOUBLE), 6) AS cdf
-        |FROM s""".stripMargin,
-
-    "q_ann_join" ->
-      s"""$EmbCte,
-         |bk AS (SELECT vec_id, v, nrm, array_to_string(list_transform(range(0, 8), p ->
-         |    CASE WHEN list_reduce(list_prepend(0.0, list_transform(range(1, len(v) + 1),
-         |      d -> v[d] * ${planeWeightSql("p", "d - 1")})), (acc, x) -> acc + x) >= 0
-         |    THEN '1' ELSE '0' END), '') AS bucket
-         |  FROM n),
-         |l AS (SELECT vec_id AS l_id, v AS lv, nrm AS lnrm, bucket
-         |  FROM bk WHERE vec_id % 2 = 0),
-         |r AS (SELECT vec_id AS r_id, v AS rv, nrm AS rnrm, bucket
-         |  FROM bk WHERE vec_id % 2 = 1),
-         |scored AS (SELECT l_id, r_id,
-         |    round(${dotSql("lv", "rv")} / (lnrm * rnrm), 6) AS cos
-         |  FROM l JOIN r USING (bucket)),
-         |flt AS (SELECT * FROM scored WHERE cos >= 0.1)
-         |SELECT l_id, r_id, cos, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY l_id
-         |    ORDER BY cos DESC, r_id ASC) AS rn FROM flt)
-         |WHERE rn <= 3""".stripMargin,
-
-    "q_bootstrap_ci" -> {
-      // Poisson(1) CDF ladder shared with Stats.bootstrapMeanCI
-      val cdf = Seq(0.36787944117144233, 0.7357588823428847,
-        0.9196986029286058, 0.9810118431238463, 0.9963401531726563,
-        0.9994058151824183, 0.999916758850712, 0.9999897508033253)
-      def weight(r: Int): String = {
-        val u = s"((${hexToLong(s"md5(id || '_${r / 4}')", 1 + 8 * (r % 4), 8)})::DOUBLE + 0.5) / 4294967296.0"
-        cdf.zipWithIndex.foldRight("8::BIGINT") { case ((t, k), rest) =>
-          s"CASE WHEN $u < $t THEN ${k}::BIGINT ELSE $rest END"
-        }
-      }
-      val sums = (0 until 32).map { r =>
-        s"sum(${weight(r)})::BIGINT AS w_$r, " +
-          s"sum((${weight(r)})::HUGEINT * vmic) AS wx_$r"
-      }.mkString(",\n  ")
-      val means = (0 until 32).map { r =>
-        s"CASE WHEN w_$r > 0 THEN wx_$r::DOUBLE / w_$r::DOUBLE / 1e6 END"
-      }.mkString(", ")
-      s"""WITH v AS (SELECT event_id::VARCHAR AS id,
-         |    CAST(round(value * 1000000) AS BIGINT) AS vmic
-         |  FROM events WHERE event_id IS NOT NULL AND value IS NOT NULL),
-         |w AS (SELECT count(*)::BIGINT AS n, sum(vmic)::HUGEINT AS sx,
-         |  $sums
-         |  FROM v),
-         |m AS (SELECT n, sx, list_sort([$means]) AS ms FROM w)
-         |SELECT n,
-         |  round(CASE WHEN n > 0 THEN sx::DOUBLE / n::DOUBLE / 1e6 END, 6) AS mean,
-         |  round(ms[2], 6) AS ci_lo, round(ms[31], 6) AS ci_hi
-         |FROM m""".stripMargin
-    },
-
-    "q_bootstrap_ci_by" -> {
-      val cdf = Seq(0.36787944117144233, 0.7357588823428847,
-        0.9196986029286058, 0.9810118431238463, 0.9963401531726563,
-        0.9994058151824183, 0.999916758850712, 0.9999897508033253)
-      def weight(r: Int): String = {
-        val u = s"((${hexToLong(s"md5(id || '_${r / 4}')", 1 + 8 * (r % 4), 8)})::DOUBLE + 0.5) / 4294967296.0"
-        cdf.zipWithIndex.foldRight("8::BIGINT") { case ((t, k), rest) =>
-          s"CASE WHEN $u < $t THEN ${k}::BIGINT ELSE $rest END"
-        }
-      }
-      val sums = (0 until 32).map { r =>
-        s"sum(${weight(r)})::BIGINT AS w_$r, " +
-          s"sum((${weight(r)})::HUGEINT * vmic) AS wx_$r"
-      }.mkString(",\n  ")
-      val means = (0 until 32).map { r =>
-        s"CASE WHEN w_$r > 0 THEN wx_$r::DOUBLE / w_$r::DOUBLE / 1e6 END"
-      }.mkString(", ")
-      s"""WITH v AS (SELECT event_type, event_id::VARCHAR AS id,
-         |    CAST(round(value * 1000000) AS BIGINT) AS vmic
-         |  FROM events WHERE event_id IS NOT NULL AND value IS NOT NULL),
-         |w AS (SELECT event_type, count(*)::BIGINT AS n,
-         |    sum(vmic)::HUGEINT AS sx,
-         |  $sums
-         |  FROM v GROUP BY event_type),
-         |m AS (SELECT event_type, n, sx, list_sort([$means]) AS ms FROM w)
-         |SELECT event_type, n,
-         |  round(CASE WHEN n > 0 THEN sx::DOUBLE / n::DOUBLE / 1e6 END, 6) AS mean,
-         |  round(ms[2], 6) AS ci_lo, round(ms[31], 6) AS ci_hi
-         |FROM m""".stripMargin
-    },
-
-    "q_split_quality" ->
-      """WITH e AS (SELECT
-        |    (((epoch_us(ts) // 86400000000) + 4) % 7)::VARCHAR AS value,
-        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-        |  FROM events),
-        |c AS (SELECT value, count(*)::BIGINT AS n,
-        |    sum(y)::BIGINT AS n_pos FROM e GROUP BY 1),
-        |t AS (SELECT sum(n)::BIGINT AS N, sum(n_pos)::BIGINT AS P FROM c),
-        |f AS (SELECT
-        |    round(1.0 - (t.P::DOUBLE / t.N::DOUBLE) * (t.P::DOUBLE / t.N::DOUBLE)
-        |      - (1.0 - t.P::DOUBLE / t.N::DOUBLE)
-        |        * (1.0 - t.P::DOUBLE / t.N::DOUBLE), 6) AS base_gini,
-        |    round(list_reduce(list_prepend(0.0, list(
-        |      (c.n::DOUBLE / t.N::DOUBLE)
-        |      * (1.0 - (c.n_pos::DOUBLE / c.n::DOUBLE)
-        |                * (c.n_pos::DOUBLE / c.n::DOUBLE)
-        |         - (1.0 - c.n_pos::DOUBLE / c.n::DOUBLE)
-        |           * (1.0 - c.n_pos::DOUBLE / c.n::DOUBLE))
-        |      ORDER BY c.value NULLS FIRST)), (a, b) -> a + b), 6) AS weighted_gini
-        |  FROM c CROSS JOIN t GROUP BY t.N, t.P)
-        |SELECT c.value, c.n, c.n_pos,
-        |  round(1.0 - (c.n_pos::DOUBLE / c.n::DOUBLE) * (c.n_pos::DOUBLE / c.n::DOUBLE)
-        |    - (1.0 - c.n_pos::DOUBLE / c.n::DOUBLE)
-        |      * (1.0 - c.n_pos::DOUBLE / c.n::DOUBLE), 6) AS gini,
-        |  f.base_gini, f.weighted_gini,
-        |  round(f.base_gini - f.weighted_gini, 6) AS gain
-        |FROM c CROSS JOIN f""".stripMargin,
-
-    "q_ab_lift_by" ->
-      s"""WITH e AS (SELECT user_id, event_id, event_type,
-         |    epoch_us(ts) AS tsu,
-         |    CAST(round(value * 1000000) AS BIGINT) AS vmic FROM events),
-         |fe AS (SELECT user_id, event_type AS segment, row_number() OVER (
-         |    PARTITION BY user_id ORDER BY tsu, event_id) AS rn FROM e),
-         |seg AS (SELECT user_id, segment FROM fe WHERE rn = 1),
-         |us AS (SELECT user_id, sum(vmic) AS sm,
-         |    (${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2 AS arm
-         |  FROM e GROUP BY user_id),
-         |u AS (SELECT us.*, seg.segment FROM us JOIN seg USING (user_id)),
-         |w AS (SELECT segment,
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS n_c,
-         |    sum(CASE WHEN arm = 0 THEN sm ELSE 0 END)::HUGEINT AS s1_c,
-         |    sum(CASE WHEN arm = 0 THEN sm::HUGEINT * sm ELSE 0 END) AS s2_c,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS n_t,
-         |    sum(CASE WHEN arm = 1 THEN sm ELSE 0 END)::HUGEINT AS s1_t,
-         |    sum(CASE WHEN arm = 1 THEN sm::HUGEINT * sm ELSE 0 END) AS s2_t
-         |  FROM u GROUP BY segment)
-         |SELECT segment, n_c, n_t,
-         |  round(CASE WHEN n_c > 0 THEN s1_c::DOUBLE / n_c / 1e6 END, 6) AS mean_c,
-         |  round(CASE WHEN n_t > 0 THEN s1_t::DOUBLE / n_t / 1e6 END, 6) AS mean_t,
-         |  round(CASE WHEN n_c > 0 AND n_t > 0
-         |    THEN s1_t::DOUBLE / n_t / 1e6 - s1_c::DOUBLE / n_c / 1e6 END, 6) AS lift,
-         |  round(CASE WHEN n_c > 1 AND n_t > 1 THEN
-         |    (s1_t::DOUBLE / n_t / 1e6 - s1_c::DOUBLE / n_c / 1e6)
-         |    / sqrt((n_t * s2_t - s1_t * s1_t)::DOUBLE
-         |        / (n_t::DOUBLE * (n_t - 1)::DOUBLE) / 1e12 / n_t
-         |      + (n_c * s2_c - s1_c * s1_c)::DOUBLE
-         |        / (n_c::DOUBLE * (n_c - 1)::DOUBLE) / 1e12 / n_c) END, 6) AS z
-         |FROM w""".stripMargin,
-
-    "q_cohort_ltv" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |    event_type, CAST(round(value * 1000000) AS BIGINT) AS vmic
-        |  FROM events),
-        |f AS (SELECT user_id, min(day) AS cohort_day FROM e GROUP BY 1),
-        |cs AS (SELECT cohort_day, count(*)::BIGINT AS n_users FROM f GROUP BY 1),
-        |r AS (SELECT f.cohort_day, (e.day - f.cohort_day)::INT AS age,
-        |    sum(vmic)::BIGINT AS rev
-        |  FROM e JOIN f USING (user_id)
-        |  WHERE event_type = 'purchase' AND e.day - f.cohort_day <= 28
-        |  GROUP BY 1, 2),
-        |c AS (SELECT cohort_day, age, sum(rev) OVER (PARTITION BY cohort_day
-        |    ORDER BY age ROWS UNBOUNDED PRECEDING) AS cum FROM r)
-        |SELECT c.cohort_day, c.age, cs.n_users,
-        |  round(c.cum::DOUBLE / 1e6 / cs.n_users::DOUBLE, 6) AS ltv_per_user
-        |FROM c JOIN cs USING (cohort_day)""".stripMargin,
-
-    "q_readability" ->
-      """WITH t AS (SELECT doc_id,
-        |    len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w,
-        |    len(regexp_extract_all(text, '[.!?]+')) AS sr,
-        |    len(regexp_extract_all(lower(text), '[aeiouy]+')) AS vr
-        |  FROM documents)
-        |SELECT doc_id, w::INT AS n_words,
-        |  (CASE WHEN w > 0 THEN greatest(sr, 1) ELSE 0 END)::INT AS n_sentences,
-        |  (CASE WHEN w > 0 THEN greatest(vr, w) ELSE 0 END)::INT AS n_syllables,
-        |  round(CASE WHEN w > 0 THEN
-        |    0.39 * (w::DOUBLE / greatest(sr, 1)::DOUBLE)
-        |    + 11.8 * (greatest(vr, w)::DOUBLE / w::DOUBLE) - 15.59 END, 6)
-        |    AS fk_grade
-        |FROM t""".stripMargin,
-
-    "q_url_dedup" ->
-      ("WITH " + UrlSynthCanonSql + """
-        |SELECT canonical_url, count(*)::BIGINT AS n_dups,
-        |  min(doc_id) AS rep_id
-        |FROM cu_c GROUP BY 1""".stripMargin),
-
-    // per-host politeness waves over the shared synthesized frontier
-    "q_crawl_schedule" ->
-      ("WITH " + UrlSynthCanonSql + """,
-        |h AS (SELECT c.doc_id AS req_id, c.canonical_url,
-        |    d.n_chars AS priority,
-        |    regexp_extract(c.canonical_url, '^[a-z]+://([^/:?#]+)', 1) AS host
-        |  FROM cu_c c JOIN cu_d d USING (doc_id))
-        |SELECT req_id, canonical_url, priority, host,
-        |  row_number() OVER (PARTITION BY host
-        |    ORDER BY priority DESC, canonical_url ASC, req_id ASC) AS wave,
-        |  count(*) OVER (PARTITION BY host) AS n_queue
-        |FROM h""".stripMargin),
-
-    // the real crawl link graph: the SAME page synthesis, href regex
-    // and host-resolution rules as the Spark gate (HrefPattern is the
-    // ONE shared constant)
-    "q_link_graph" ->
-      (LinkEdgesSql +
-        """SELECT src_host, dst_host, count(*)::BIGINT AS n_links
-          |FROM edges WHERE dst_host IS NOT NULL AND dst_host <> ''
-          |GROUP BY 1, 2""".stripMargin),
-
-    // weighted directed PageRank replay: the aggregated edges carry
-    // n_links weights; contribution floored per edge inside the sum,
-    // exactly as the Spark op
-    "q_link_pagerank_weighted" ->
-      (LinkEdgesSql.replaceFirst("WITH ", "WITH RECURSIVE ").stripTrailing() +
-        """,
-          |ew AS (SELECT src_host AS src, dst_host AS dst,
-          |    count(*)::BIGINT AS w FROM edges
-          |  WHERE dst_host IS NOT NULL AND dst_host <> ''
-          |  GROUP BY 1, 2),
-          |ow AS (SELECT src, sum(w) AS ow FROM ew GROUP BY src),
-          |pr(iter, node, r) AS (
-          |  SELECT 0, src, 1000000::BIGINT FROM ow
-          |  UNION ALL
-          |  SELECT pr.iter + 1, e.dst,
-          |    150000 + sum((pr.r * 17 * e.w) // (20 * o.ow))
-          |  FROM pr JOIN ew e ON pr.node = e.src JOIN ow o ON pr.node = o.src
-          |  WHERE pr.iter < 5
-          |  GROUP BY pr.iter, e.dst)
-          |SELECT node AS host, r AS rank_micro FROM pr WHERE iter = 5"""
-          .stripMargin),
-
-    // personalized replay: teleport as synthetic seed self-edges in an
-    // augmented edge list — a single-reference recursion both engines
-    // run identically (the CASE guards the tele rows' zero divisors)
-    "q_link_pagerank_seeded" ->
-      (LinkEdgesSql.replaceFirst("WITH ", "WITH RECURSIVE ").stripTrailing() +
-        """,
-          |ew AS (SELECT src_host AS src, dst_host AS dst,
-          |    count(*)::BIGINT AS w FROM edges
-          |  WHERE dst_host IS NOT NULL AND dst_host <> ''
-          |  GROUP BY 1, 2),
-          |ow AS (SELECT src, sum(w) AS ow FROM ew GROUP BY src),
-          |sd AS (SELECT DISTINCT src AS node FROM ew
-          |  WHERE regexp_matches(src, '^src[0-9]*[02468]\.')),
-          |aug AS (SELECT src, dst, w, ow, false AS tele
-          |    FROM ew JOIN ow USING (src)
-          |  UNION ALL
-          |  SELECT node, node, 0, 0, true FROM sd),
-          |pr(iter, node, r) AS (
-          |  SELECT 0, node, 1000000::BIGINT FROM sd
-          |  UNION ALL
-          |  SELECT pr.iter + 1, a.dst,
-          |    sum(CASE WHEN a.tele THEN 150000
-          |      ELSE (pr.r * 17 * a.w) // (20 * a.ow) END)::BIGINT
-          |  FROM pr JOIN aug a ON pr.node = a.src
-          |  WHERE pr.iter < 5
-          |  GROUP BY pr.iter, a.dst)
-          |SELECT node AS host, r AS rank_micro FROM pr WHERE iter = 5"""
-          .stripMargin),
-
-    // incremental rerank oracle: the SAME weighted recursion, but over
-    // the TWO-batch edge multiset (b = doc_id % 2 carried through the
-    // edge CTEs; each batch's (src, dst) edges count separately — the
-    // per-edge floored contribution makes parallel rows ≠ merged
-    // weights, and the Spark side ranks exactly this per-batch union).
-    // The oracle is a from-scratch recompute; the Spark side is the
-    // history-reading delta path — equality proves delta exactness.
-    "q_link_pagerank_delta" ->
-      (linkEdgesSql(batched = true)
-        .replaceFirst("WITH ", "WITH RECURSIVE ").stripTrailing() +
-        """,
-          |ew AS (SELECT src_host AS src, dst_host AS dst, b,
-          |    count(*)::BIGINT AS w FROM edges
-          |  WHERE dst_host IS NOT NULL AND dst_host <> ''
-          |  GROUP BY 1, 2, 3),
-          |ow AS (SELECT src, sum(w) AS ow FROM ew GROUP BY src),
-          |pr(iter, node, r) AS (
-          |  SELECT 0, src, 1000000::BIGINT FROM ow
-          |  UNION ALL
-          |  SELECT pr.iter + 1, e.dst,
-          |    150000 + sum((pr.r * 17 * e.w) // (20 * o.ow))
-          |  FROM pr JOIN ew e ON pr.node = e.src JOIN ow o ON pr.node = o.src
-          |  WHERE pr.iter < 5
-          |  GROUP BY pr.iter, e.dst)
-          |SELECT node AS host, r AS rank_micro FROM pr WHERE iter = 5"""
-          .stripMargin),
-
-    // anchor-text corpus over the same synthesized pages: the pair
-    // pattern's two capture groups extracted as parallel lists and
-    // zipped by position (both engines return matches in document
-    // order)
-    "q_anchor_text" -> {
-      val apat = graft.ops.TextOps.AnchorPattern.replace("'", "''")
-      LinkEdgesSql.stripTrailing() +
-        s""",
-           |pr AS (SELECT
-           |    lower(regexp_extract(url, '^[a-zA-Z]+://([^/:?#]+)', 1)) AS src_host,
-           |    regexp_extract_all(html, '$apat', 1) AS hs,
-           |    regexp_extract_all(html, '$apat', 2) AS ts
-           |  FROM pages),
-           |apairs AS (SELECT src_host, hs[i] AS href,
-           |    lower(trim(ts[i])) AS anchor
-           |  FROM pr, unnest(range(1, len(hs) + 1)) AS u(i)
-           |  WHERE src_host <> ''),
-           |res AS (SELECT anchor,
-           |    CASE WHEN regexp_matches(href, '(?i)^https?://')
-           |      THEN lower(regexp_extract(href,
-           |        '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)', 1))
-           |    WHEN regexp_matches(href, '^//')
-           |      THEN lower(regexp_extract(href, '^//([^/:?#]+)', 1))
-           |    WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*:') THEN NULL
-           |    ELSE src_host END AS dst_host
-           |  FROM apairs WHERE anchor <> '')
-           |SELECT dst_host, anchor, count(*)::BIGINT AS n
-           |FROM res WHERE dst_host IS NOT NULL AND dst_host <> ''
-           |GROUP BY 1, 2""".stripMargin
-    },
-
-    // host centrality over the real link graph: the q_pagerank
-    // integer-exact replay, keyed by host STRINGS (no id mapping to
-    // drift between engines)
-    "q_link_pagerank" ->
-      (LinkEdgesSql.replaceFirst("WITH ", "WITH RECURSIVE ").stripTrailing() +
-        """,
-          |ed AS (SELECT DISTINCT src_host, dst_host FROM edges
-          |  WHERE dst_host IS NOT NULL AND dst_host <> ''),
-          |e AS (SELECT DISTINCT * FROM (
-          |  SELECT src_host AS src, dst_host AS dst FROM ed
-          |  UNION ALL SELECT dst_host, src_host FROM ed)),
-          |dg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-          |pr(iter, host, r) AS (
-          |  SELECT 0, src, 1000000::BIGINT FROM dg
-          |  UNION ALL
-          |  SELECT pr.iter + 1, e.dst, 150000 + sum((pr.r * 17) // (20 * dg.deg))
-          |  FROM pr JOIN e ON pr.host = e.src JOIN dg ON pr.host = dg.src
-          |  WHERE pr.iter < 5
-          |  GROUP BY pr.iter, e.dst)
-          |SELECT host, r AS rank_micro FROM pr WHERE iter = 5""".stripMargin),
-
-    // robots-style allow/deny: longest matching prefix wins, ties ->
-    // allow, no rule -> allowed
-    "q_crawl_allow" -> CrawlAllowOracleSql,
-
-    // the real-input chain: the Spark side PARSES the rule ladder out
-    // of robots.txt text; the oracle replays the ladder as VALUES —
-    // equality proves parse ∘ filter end to end
-    "q_robots_allow" -> CrawlAllowOracleSql,
-
-    // gold × predicted language confusion counts (langCjk replay over
-    // the raw documents)
-    "q_langid_confusion" ->
-      s"""WITH ${langCjkCtesSql("documents")}
-         |SELECT d.lang AS lang_true, lg.lang AS lang_pred,
-         |  count(*)::BIGINT AS n
-         |FROM documents d JOIN lg USING (doc_id)
-         |GROUP BY 1, 2""".stripMargin,
-
-    // Naive Bayes training replay: the same two count aggregations +
-    // micro-log rounding
-    "q_nb_train" ->
-      (NbModelSql + "\nSELECT label, token, kind, w_micro FROM model"),
-
-    // incremental-training oracle: the from-scratch full-corpus model —
-    // the Spark side merges per-slice sufficient statistics, so
-    // equality proves count-merge + derive == batch retrain exactly
-    "q_nb_incremental" ->
-      (NbModelSql + "\nSELECT label, token, kind, w_micro FROM model"),
-
-    // classify replay: per (doc, label) the exact integer micro-log
-    // sum with the unseen fallback, argmax with label-asc tie-break
-    "q_nb_classify" ->
-      (NbModelSql + s""",
-        |nb_toks AS (SELECT doc_id, unnest($ToksSql) AS token FROM documents),
-        |nb_pri AS (SELECT label, w_micro AS prior FROM model WHERE kind = 'prior'),
-        |nb_uns AS (SELECT label, w_micro AS w_unseen FROM model WHERE kind = 'unseen'),
-        |nb_tw AS (SELECT label, token, w_micro FROM model WHERE kind = 'tok'),
-        |nb_sc AS (SELECT t.doc_id, p.label,
-        |    sum(coalesce(tw.w_micro, u.w_unseen))::BIGINT AS s
-        |  FROM nb_toks t CROSS JOIN (SELECT label FROM nb_pri) p
-        |  LEFT JOIN nb_tw tw ON tw.label = p.label AND tw.token = t.token
-        |  JOIN nb_uns u ON u.label = p.label
-        |  GROUP BY 1, 2),
-        |nb_fin AS (SELECT doc_id, label, s + prior AS score_micro,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY s + prior DESC, label ASC) AS rn
-        |  FROM nb_sc JOIN nb_pri USING (label))
-        |SELECT doc_id, label AS predicted, score_micro
-        |FROM nb_fin WHERE rn = 1""".stripMargin),
-
-    // sitemap seed replay: loc extraction + the canonicalUrl fold
-    // chain (same steps as UrlSynthCanonSql's cu_p/cu_c, keyed by host)
-    "q_sitemap_parse" -> {
-      val pat = graft.ops.TextOps.SitemapLocPattern.replace("'", "''")
-      s"""WITH hosts AS (SELECT DISTINCT lower(source) AS src,
-         |    lower(source) || '.example.org' AS host FROM documents),
-         |b AS (SELECT host,
-         |    '<?xml version="1.0" encoding="UTF-8"?><urlset><url><loc>https://'
-         |    || src || '.example.org/a</loc><lastmod>2024-01-01</lastmod></url>'
-         |    || '<url><loc>' || chr(10) || '  HTTPS://' || src
-         |    || '.example.org:443/b/?utm_source=feed&a=1  ' || chr(10) || '</loc></url>'
-         |    || CASE WHEN TRY_CAST(regexp_extract(src, 'src([0-9]+)', 1) AS INT) % 2 = 0
-         |         THEN '<url><loc>https://' || src || '.example.org/a</loc></url>'
-         |         ELSE '' END
-         |    || '<url><loc></loc></url></urlset>' AS body
-         |  FROM hosts),
-         |locs AS (SELECT host,
-         |    regexp_replace(unnest(regexp_extract_all(body, '$pat', 1)),
-         |      '^[ \\t\\r\\n]+|[ \\t\\r\\n]+$$', '', 'g') AS url FROM b),
-         |p AS (SELECT host,
-         |    lower(regexp_extract(url, '^([a-zA-Z]+)://', 1)) AS scheme,
-         |    lower(regexp_extract(url, '^[a-zA-Z]+://([^/:?#]+)', 1)) AS uhost,
-         |    regexp_extract(url, '^[a-zA-Z]+://[^/:?#]+:([0-9]+)', 1) AS port,
-         |    regexp_replace(regexp_extract(url, '^[a-zA-Z]+://[^/?#]*([^?#]*)', 1),
-         |      '/+$$', '') AS path,
-         |    regexp_extract(url, '\\?([^#]*)', 1) AS query
-         |  FROM locs),
-         |c AS (SELECT host,
-         |    scheme || '://' || uhost
-         |    || (CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-         |        OR (scheme = 'https' AND port = '443') THEN ''
-         |        ELSE ':' || port END)
-         |    || path
-         |    || (CASE WHEN kq = '' THEN '' ELSE '?' || kq END) AS canonical_url
-         |  FROM (SELECT *, coalesce(array_to_string(list_sort(list_filter(
-         |      string_split(query, '&'),
-         |      q -> NOT regexp_matches(q, '^(utm_[^=]*|ref|fbclid|gclid)='))),
-         |      '&'), '') AS kq FROM p))
-         |SELECT DISTINCT host, canonical_url FROM c
-         |WHERE regexp_matches(canonical_url, '^[a-z]+://.')""".stripMargin
-    },
-
-    // distributed robots.txt parse replay: same line/comment/agent/
-    // empty-path rules as TextOps.parseRobots
-    "q_robots_parse" ->
-      """WITH hosts AS (SELECT DISTINCT lower(source) AS src,
-        |    lower(source) || '.example.org' AS host FROM documents),
-        |b AS (SELECT host,
-        |    '# synthetic robots' || chr(10) || 'User-agent: special-bot'
-        |    || chr(10) || 'Disallow: /private' || chr(10) || 'User-agent: *'
-        |    || chr(10) || 'Disallow: /e # keep out' || chr(13) || chr(10) || 'Allow: /en' || chr(10)
-        |    || CASE WHEN TRY_CAST(regexp_extract(src, 'src([0-9]+)', 1) AS INT) % 2 = 0
-        |         THEN 'Disallow: /tmp' || chr(10) ELSE '' END
-        |    || 'Disallow:' || chr(10) || 'Crawl-delay: 10' || chr(10) AS body
-        |  FROM hosts),
-        |ls AS (SELECT host, string_split(body, chr(10)) AS ls FROM b),
-        |l AS (SELECT host, i AS pos,
-        |    trim(regexp_replace(replace(ls[i], chr(13), ''), '#.*$', '')) AS l
-        |  FROM ls, unnest(range(1, len(ls) + 1)) AS u(i)),
-        |t AS (SELECT host, pos,
-        |    lower(regexp_extract(l, '(?i)^(user-agent|allow|disallow)[ \t]*:', 1)) AS k,
-        |    trim(regexp_extract(l, '(?i)^(?:user-agent|allow|disallow)[ \t]*:[ \t]*([^ \t]*)', 1)) AS v
-        |  FROM l WHERE regexp_matches(l, '(?i)^(user-agent|allow|disallow)[ \t]*:')),
-        |a AS (SELECT host, pos, k, v,
-        |    last_value(CASE WHEN k = 'user-agent' THEN v END IGNORE NULLS)
-        |      OVER (PARTITION BY host ORDER BY pos
-        |        ROWS UNBOUNDED PRECEDING) AS agent
-        |  FROM t)
-        |SELECT DISTINCT host, v AS prefix, (k = 'allow') AS allow
-        |FROM a WHERE k IN ('allow', 'disallow') AND agent = '*' AND v <> ''"""
-        .stripMargin,
-
-    "q_bootstrap_lift" -> {
-      val cdf = Seq(0.36787944117144233, 0.7357588823428847,
-        0.9196986029286058, 0.9810118431238463, 0.9963401531726563,
-        0.9994058151824183, 0.999916758850712, 0.9999897508033253)
-      def weight(r: Int): String = {
-        val u = s"((${hexToLong(s"md5(id || '_${r / 4}')", 1 + 8 * (r % 4), 8)})::DOUBLE + 0.5) / 4294967296.0"
-        cdf.zipWithIndex.foldRight("8::BIGINT") { case ((t, k), rest) =>
-          s"CASE WHEN $u < $t THEN ${k}::BIGINT ELSE $rest END"
-        }
-      }
-      val sums = (0 until 32).map { r =>
-        s"""sum(CASE WHEN arm = 0 THEN ${weight(r)} ELSE 0 END)::BIGINT AS wc_$r,
-           |  sum(CASE WHEN arm = 0 THEN (${weight(r)})::HUGEINT * vmic ELSE 0 END) AS wxc_$r,
-           |  sum(CASE WHEN arm = 1 THEN ${weight(r)} ELSE 0 END)::BIGINT AS wt_$r,
-           |  sum(CASE WHEN arm = 1 THEN (${weight(r)})::HUGEINT * vmic ELSE 0 END) AS wxt_$r""".stripMargin
-      }.mkString(",\n  ")
-      val lifts = (0 until 32).map { r =>
-        s"""CASE WHEN wc_$r > 0 AND wt_$r > 0
-           |  THEN wxt_$r::DOUBLE / wt_$r::DOUBLE / 1e6
-           |     - wxc_$r::DOUBLE / wc_$r::DOUBLE / 1e6 END""".stripMargin
-      }.mkString(", ")
-      s"""WITH u AS (SELECT user_id::VARCHAR AS id,
-         |    sum(CAST(round(value * 1000000) AS BIGINT)) AS vmic,
-         |    ((${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2)::INT AS arm
-         |  FROM events GROUP BY user_id),
-         |-- mirror the engine's bootstrapLiftCI contract EXACTLY: users
-         |-- with a NULL id or all-NULL metric are excluded from n_c/n_t
-         |-- and from every rep's weight denominator
-         |uc AS (SELECT * FROM u WHERE id IS NOT NULL AND vmic IS NOT NULL),
-         |w AS (SELECT
-         |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT AS nc,
-         |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT AS nt,
-         |    sum(CASE WHEN arm = 0 THEN vmic ELSE 0 END)::HUGEINT AS sc,
-         |    sum(CASE WHEN arm = 1 THEN vmic ELSE 0 END)::HUGEINT AS st,
-         |  $sums
-         |  FROM uc),
-         |m AS (SELECT nc, nt, sc, st, list_sort([$lifts]) AS ls FROM w)
-         |SELECT nc AS n_c, nt AS n_t,
-         |  round(CASE WHEN nc > 0 AND nt > 0
-         |    THEN st::DOUBLE / nt::DOUBLE / 1e6 - sc::DOUBLE / nc::DOUBLE / 1e6
-         |    END, 6) AS lift,
-         |  round(ls[2], 6) AS ci_lo, round(ls[31], 6) AS ci_hi
-         |FROM m""".stripMargin
-    },
-
-    "q_psi_multi" -> {
-      val feats = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      feats.map { c =>
-        s"""SELECT '$c' AS feature, bin, n_base, n_cur,
-           |  round((n_base::DOUBLE + 0.5) / (tb::DOUBLE + 5.0), 6) AS p_base,
-           |  round((n_cur::DOUBLE + 0.5) / (tc::DOUBLE + 5.0), 6) AS p_cur,
-           |  psi
-           |FROM (
-           |  WITH v AS (SELECT $c::DOUBLE AS val,
-           |      (l_shipdate < TIMESTAMP '1996-01-01') AS b
-           |    FROM lineitem WHERE $c IS NOT NULL AND NOT isnan($c::DOUBLE)),
-           |  r AS (SELECT min(val) AS lo, max(val) AS hi FROM v WHERE b),
-           |  binned AS (SELECT CASE WHEN r.hi = r.lo THEN 0
-           |      ELSE least(9, greatest(0, floor((val - r.lo) / (r.hi - r.lo) * 10)))::BIGINT
-           |      END AS bin, b
-           |    FROM v CROSS JOIN r),
-           |  cnt AS (SELECT bin,
-           |      sum(CASE WHEN b THEN 1 ELSE 0 END)::BIGINT AS n_base,
-           |      sum(CASE WHEN NOT b THEN 1 ELSE 0 END)::BIGINT AS n_cur
-           |    FROM binned GROUP BY bin),
-           |  dense AS (SELECT gs.bin, coalesce(cnt.n_base, 0)::BIGINT AS n_base,
-           |      coalesce(cnt.n_cur, 0)::BIGINT AS n_cur
-           |    FROM (SELECT unnest(range(0, 10))::BIGINT AS bin) gs
-           |    LEFT JOIN cnt USING (bin)),
-           |  t AS (SELECT sum(n_base)::BIGINT AS tb, sum(n_cur)::BIGINT AS tc
-           |    FROM dense),
-           |  f AS (SELECT round(list_reduce(list(
-           |        ((n_cur::DOUBLE + 0.5) / (t.tc::DOUBLE + 5.0)
-           |         - (n_base::DOUBLE + 0.5) / (t.tb::DOUBLE + 5.0))
-           |        * ln(((n_cur::DOUBLE + 0.5) / (t.tc::DOUBLE + 5.0))
-           |             / ((n_base::DOUBLE + 0.5) / (t.tb::DOUBLE + 5.0)))
-           |        ORDER BY bin), (a, b) -> a + b), 6) AS psi
-           |    FROM dense CROSS JOIN t)
-           |  SELECT dense.bin, dense.n_base, dense.n_cur, t.tb, t.tc, f.psi
-           |  FROM dense CROSS JOIN t CROSS JOIN f)""".stripMargin
-      }.mkString("\nUNION ALL\n")
-    },
-
-    "q_survival" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |    event_type FROM events),
-        |mx AS (SELECT max(day) AS maxd FROM e),
-        |u AS (SELECT user_id, min(day) AS fd,
-        |    min(CASE WHEN event_type = 'purchase' THEN day END) AS fp
-        |  FROM e GROUP BY 1),
-        |dur AS (SELECT
-        |    CASE WHEN fp IS NOT NULL THEN fp - fd ELSE mx.maxd - fd END AS t,
-        |    CASE WHEN fp IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM u CROSS JOIN mx),
-        |pt AS (SELECT t,
-        |    sum(CASE WHEN ev = 1 THEN 1 ELSE 0 END)::BIGINT AS d,
-        |    sum(CASE WHEN ev = 0 THEN 1 ELSE 0 END)::BIGINT AS c
-        |  FROM dur GROUP BY t),
-        |tot AS (SELECT sum(d + c)::BIGINT AS n FROM pt),
-        |r AS (SELECT pt.t, pt.d, pt.c,
-        |    (tot.n - coalesce(sum(pt.d + pt.c) OVER (ORDER BY pt.t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT
-        |      AS n_at_risk
-        |  FROM pt CROSS JOIN tot)
-        |SELECT t, n_at_risk, d, c,
-        |  CASE WHEN max(CASE WHEN d = n_at_risk THEN 1 ELSE 0 END)
-        |      OVER thr = 1 THEN 0.0
-        |    ELSE round(exp(sum(CASE WHEN d < n_at_risk
-        |      THEN ln(1.0 - d::DOUBLE / n_at_risk::DOUBLE) ELSE 0.0 END)
-        |      OVER thr), 6) END AS survival
-        |FROM r
-        |WINDOW thr AS (ORDER BY t
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q_survival_by" ->
-      s"""WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    event_type FROM events),
-         |mx AS (SELECT max(day) AS maxd FROM e),
-         |u AS (SELECT user_id, min(day) AS fd,
-         |    min(CASE WHEN event_type = 'purchase' THEN day END) AS fp
-         |  FROM e GROUP BY 1),
-         |dur AS (SELECT
-         |    ((${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2)::INT AS arm,
-         |    CASE WHEN fp IS NOT NULL THEN fp - fd ELSE mx.maxd - fd END AS t,
-         |    CASE WHEN fp IS NOT NULL THEN 1 ELSE 0 END AS ev
-         |  FROM u CROSS JOIN mx),
-         |pt AS (SELECT arm, t,
-         |    sum(CASE WHEN ev = 1 THEN 1 ELSE 0 END)::BIGINT AS d,
-         |    sum(CASE WHEN ev = 0 THEN 1 ELSE 0 END)::BIGINT AS c
-         |  FROM dur GROUP BY arm, t),
-         |r AS (SELECT arm, t, d, c,
-         |    (sum(d + c) OVER (PARTITION BY arm)
-         |     - coalesce(sum(d + c) OVER (PARTITION BY arm ORDER BY t
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT
-         |      AS n_at_risk
-         |  FROM pt)
-         |SELECT arm, t, n_at_risk, d, c,
-         |  CASE WHEN max(CASE WHEN d = n_at_risk THEN 1 ELSE 0 END)
-         |      OVER thr = 1 THEN 0.0
-         |    ELSE round(exp(sum(CASE WHEN d < n_at_risk
-         |      THEN ln(1.0 - d::DOUBLE / n_at_risk::DOUBLE) ELSE 0.0 END)
-         |      OVER thr), 6) END AS survival
-         |FROM r
-         |WINDOW thr AS (PARTITION BY arm ORDER BY t
-         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q_logrank" ->
-      s"""WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-         |    event_type FROM events),
-         |mx AS (SELECT max(day) AS maxd FROM e),
-         |u AS (SELECT user_id, min(day) AS fd,
-         |    min(CASE WHEN event_type = 'purchase' THEN day END) AS fp
-         |  FROM e GROUP BY 1),
-         |dur AS (SELECT
-         |    ((${hexToLong("md5(user_id::VARCHAR)", 1, 8)}) % 2)::INT AS g,
-         |    CASE WHEN fp IS NOT NULL THEN fp - fd ELSE mx.maxd - fd END AS t,
-         |    CASE WHEN fp IS NOT NULL THEN 1 ELSE 0 END AS ev
-         |  FROM u CROSS JOIN mx),
-         |pt AS (SELECT t,
-         |    sum(CASE WHEN g = 1 AND ev = 1 THEN 1 ELSE 0 END)::BIGINT AS d1,
-         |    sum(CASE WHEN g = 1 THEN 1 ELSE 0 END)::BIGINT AS a1,
-         |    sum(CASE WHEN g = 0 AND ev = 1 THEN 1 ELSE 0 END)::BIGINT AS d0,
-         |    sum(CASE WHEN g = 0 THEN 1 ELSE 0 END)::BIGINT AS a0
-         |  FROM dur GROUP BY t),
-         |r AS (SELECT t, d1, d0,
-         |    (sum(a1) OVER () - coalesce(sum(a1) OVER (ORDER BY t
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT AS n1,
-         |    (sum(a0) OVER () - coalesce(sum(a0) OVER (ORDER BY t
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT AS n0
-         |  FROM pt),
-         |f AS (SELECT * FROM r WHERE d1 + d0 > 0),
-         |w AS (SELECT sum(d1)::BIGINT AS o1,
-         |    list_reduce(list_prepend(0.0, list(
-         |      (d1 + d0)::DOUBLE * n1::DOUBLE / (n1 + n0)::DOUBLE
-         |      ORDER BY t)), (a, b) -> a + b) AS e1,
-         |    list_reduce(list_prepend(0.0, list(
-         |      CASE WHEN n1 + n0 > 1 THEN
-         |        (d1 + d0)::DOUBLE * (n1::DOUBLE / (n1 + n0)::DOUBLE)
-         |        * (1.0 - n1::DOUBLE / (n1 + n0)::DOUBLE)
-         |        * ((n1 + n0 - d1 - d0)::DOUBLE / (n1 + n0 - 1)::DOUBLE)
-         |      ELSE 0.0 END ORDER BY t)), (a, b) -> a + b) AS v
-         |  FROM f)
-         |SELECT coalesce(o1, 0) AS observed_1, round(e1, 6) AS expected_1,
-         |  round(CASE WHEN v > 0 THEN (o1::DOUBLE - e1) * (o1::DOUBLE - e1) / v
-         |    END, 6) AS chi2,
-         |  coalesce(round(CASE WHEN v > 0
-         |      THEN (o1::DOUBLE - e1) * (o1::DOUBLE - e1) / v END, 6) > 3.841,
-         |    false) AS significant
-         |FROM w""".stripMargin,
-
-    "q_trend_robust" ->
-      """WITH d AS (SELECT (epoch_us(ts) // 86400000000)::DOUBLE AS x,
-        |    count(*)::DOUBLE AS y
-        |  FROM events WHERE event_type = 'click' GROUP BY 1),
-        |p AS (SELECT (b.y - a.y) / (b.x - a.x) AS s
-        |  FROM d a JOIN d b ON a.x < b.x),
-        |rk AS (SELECT s, row_number() OVER (ORDER BY s ASC) - 1 AS rn,
-        |    count(*) OVER () AS n FROM p),
-        |ms AS (SELECT round(
-        |    max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.5) THEN s END)
-        |    + ((n - 1)::DOUBLE * 0.5 - floor((n - 1)::DOUBLE * 0.5))
-        |      * (max(CASE WHEN rn = ceil((n - 1)::DOUBLE * 0.5) THEN s END)
-        |         - max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.5) THEN s END)),
-        |    6) AS slope FROM rk GROUP BY n),
-        |res AS (SELECT d.y - ms.slope * d.x AS r, ms.slope
-        |  FROM d CROSS JOIN ms),
-        |rk2 AS (SELECT r, slope, row_number() OVER (ORDER BY r ASC) - 1 AS rn,
-        |    count(*) OVER () AS n FROM res),
-        |mi AS (SELECT any_value(slope) AS slope, round(
-        |    max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.5) THEN r END)
-        |    + ((n - 1)::DOUBLE * 0.5 - floor((n - 1)::DOUBLE * 0.5))
-        |      * (max(CASE WHEN rn = ceil((n - 1)::DOUBLE * 0.5) THEN r END)
-        |         - max(CASE WHEN rn = floor((n - 1)::DOUBLE * 0.5) THEN r END)),
-        |    6) AS intercept FROM rk2 GROUP BY n)
-        |SELECT (SELECT count(*) FROM d)::BIGINT AS n_points,
-        |  mi.slope, mi.intercept
-        |FROM mi""".stripMargin,
-
-    "q_bh_adjust" ->
-      s"""WITH t AS (SELECT DISTINCT lang || ':' || source AS test_id
-         |  FROM documents),
-         |pv AS (SELECT test_id,
-         |    (${hexToLong("md5(test_id)", 1, 8)})::DOUBLE / 4294967296.0 AS p
-         |  FROM t),
-         |r AS (SELECT test_id, p,
-         |    row_number() OVER (ORDER BY p ASC, test_id ASC) AS rank,
-         |    count(*) OVER () AS m FROM pv),
-         |a AS (SELECT test_id, p, rank,
-         |    round(least(1.0, min(m::DOUBLE * p / rank::DOUBLE)
-         |      OVER (ORDER BY p DESC, test_id DESC
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6) AS p_adj
-         |  FROM r)
-         |SELECT test_id, round(p, 6) AS p, rank::INT AS rank, p_adj,
-         |  p_adj <= 0.2 AS reject
-         |FROM a""".stripMargin,
-
-    "q_anomaly_bands" -> {
-      val interp = (arr: String) =>
-        s"""$arr[(floor((len($arr) - 1)::DOUBLE * 0.5))::INT + 1]
-           |      + ((len($arr) - 1)::DOUBLE * 0.5
-           |         - floor((len($arr) - 1)::DOUBLE * 0.5))
-           |      * ($arr[(ceil((len($arr) - 1)::DOUBLE * 0.5))::INT + 1]
-           |         - $arr[(floor((len($arr) - 1)::DOUBLE * 0.5))::INT + 1])""".stripMargin
-      s"""WITH d AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-         |    count(*)::DOUBLE AS n FROM events GROUP BY 1, 2),
-         |h AS (SELECT event_type, day, n,
-         |    list_sort(coalesce(list(n) OVER (PARTITION BY event_type
-         |      ORDER BY day RANGE BETWEEN 14 PRECEDING AND 1 PRECEDING),
-         |      []::DOUBLE[])) AS hist
-         |  FROM d),
-         |m AS (SELECT *, len(hist)::INT AS n_hist,
-         |    CASE WHEN len(hist) > 0 THEN ${interp("hist")} END AS med
-         |  FROM h),
-         |m2 AS (SELECT *,
-         |    list_sort(list_transform(hist, x -> abs(x - med))) AS dh FROM m),
-         |m3 AS (SELECT *,
-         |    CASE WHEN len(dh) > 0 THEN ${interp("dh")} END AS mad FROM m2)
-         |SELECT event_type, day, n::BIGINT AS n, n_hist,
-         |  round(CASE WHEN n_hist >= 7 THEN med END, 6) AS expected,
-         |  round(CASE WHEN n_hist >= 7 THEN mad END, 6) AS mad,
-         |  coalesce(n_hist >= 7 AND abs(n - med) > 3.0 * mad, false)
-         |    AS anomaly
-         |FROM m3""".stripMargin
-    }
-  )
 }

@@ -10,6 +10,8 @@ object Verify {
     // the driver always runs the full map)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // a misspelled name would otherwise dump nothing and look like a pass
+    only.foreach(names => SparkEntry.requireGates(names))
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
  *  - `DateType` — midnight UTC of that day.
  *  - narrower integrals — widened (assumed already in the declared unit).
  *
- * Applied at the [[graft.SparkEntry]] load boundary and at every
+ * Applied at the gates' load boundary ([[graft.gates.Shared.t]]) and at every
  * [[Events]] / [[graft.streaming.EventStreams]] public entry point, so
  * library users can pass either representation. Works on streaming
  * DataFrames too (pure projection, no state).

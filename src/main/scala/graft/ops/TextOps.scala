@@ -259,7 +259,7 @@ object TextOps {
   /** The five non-parameterized Gopher rule bounds (Rae et al. 2021
     * App. A) — ONE copy consumed by the frame op, the streaming
     * column op AND the DuckDB oracle fragment
-    * (SparkEntry.gopherCtesSql), so a bound change cannot drift
+    * (graft.gates.Shared.gopherCtesSql), so a bound change cannot drift
     * between the gate and its twins (the r15 advice item: three
     * hardcoded copies, only minWords/maxWords spec-pinned). */
   val GopherMeanLenMin = 3.0

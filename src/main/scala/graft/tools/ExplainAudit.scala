@@ -8,6 +8,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val which = if (args.length > 1) args(1).split(",").toSet else Set.empty[String]
+    SparkEntry.requireGates(which)
     val spark = GraftSession.local()
     SparkEntry.queries
       .filter { case (n, _) => which.isEmpty || which(n) }

@@ -15,9 +15,7 @@ class ConstructionSpec extends AnyFunSuite {
 
   /** The reference aggregates' gates. */
   private def aggregateGates: Seq[String] =
-    SparkEntry.queries.keys.filter(g => g.startsWith("q_mode_") ||
-      g.startsWith("q_kurtosis") ||
-      Set("q_skewness", "q_max_by", "q_min_by")(g)).toSeq
+    graft.gates.ReferenceGates.gates.map(_.name)
 
   test("building a gate runs no Spark job once its tables have been loaded") {
     val gates = (gateMix ++ aggregateGates).distinct.sorted
