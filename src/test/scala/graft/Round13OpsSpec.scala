@@ -935,6 +935,26 @@ class Round13OpsSpec extends AnyFunSuite {
     assert(out == "a>c") // earliest 2 by (ts, id), joined in time order
   }
 
+  test("graft_path_prefix: equals sort-then-take on random ts ties, k in {1, 2, 7}, at 1 and 5 partitions") {
+    import graft.functions.GraftFunctions
+    val rnd = new scala.util.Random(13L)
+    // few distinct ts values (ties broken by the unique id), some null labels
+    val rows = (0 until 3000).map { i =>
+      (rnd.nextInt(6), rnd.nextInt(20).toLong, i.toLong,
+        if (rnd.nextInt(8) == 0) null else s"l${rnd.nextInt(50)}")
+    }
+    val df = rnd.shuffle(rows).toDF("g", "ts", "id", "label")
+    for (k <- Seq(1, 2, 7); parts <- Seq(1, 5)) {
+      val got = df.repartition(parts).groupBy($"g")
+        .agg(GraftFunctions.path_prefix($"ts", $"id", $"label", k).as("p"))
+        .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> rs.sortBy(r => (r._2, r._3)).take(k).map(_._4).filter(_ != null).mkString(">")
+      }
+      assert(got == want, s"k=$k partitions=$parts")
+    }
+  }
+
   test("sessionPaths: maxSteps=1 degenerates to the session's first event type") {
     val got = Events.sessionPaths(events, maxSteps = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getString(2)).toMap

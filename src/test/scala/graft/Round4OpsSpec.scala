@@ -250,6 +250,24 @@ class Round4OpsSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  test("topk_by: equals sort-then-take on random ties, k in {1, 2, 7}, at 1 and 5 partitions") {
+    import graft.functions.GraftFunctions
+    val rnd = new scala.util.Random(4L)
+    // few distinct scores and repeated ids: ties on score and whole-pair duplicates
+    val rows = (0 until 3000).map(_ => (rnd.nextInt(6), rnd.nextInt(400).toLong, rnd.nextInt(9) * 0.5))
+    val df = rows.toDF("g", "id", "score")
+    for (k <- Seq(1, 2, 7); parts <- Seq(1, 5)) {
+      val got = df.repartition(parts).groupBy($"g")
+        .agg(GraftFunctions.topk_by($"id", $"score", k).as("top"))
+        .collect().map(x => x.getInt(0) ->
+          x.getSeq[org.apache.spark.sql.Row](1).map(s => (s.getLong(0), s.getDouble(1)))).toMap
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> rs.map(r => (r._2, r._3)).sortBy(r => (-r._2, r._1)).take(k)
+      }
+      assert(got == want, s"k=$k partitions=$parts")
+    }
+  }
+
   test("topk_by: SQL-registered graft_topk agrees with the Column form") {
     val df = Seq((1L, 5.0), (2L, 9.0), (3L, 7.0)).toDF("id", "score")
     df.createOrReplaceTempView("topk_in")
