@@ -4,7 +4,8 @@
     python3 dev/dup_runs.py src/main/scala/graft/SparkEntry.scala \
         src/main/scala/graft/gates/*.scala
 
-The files are read in the order given. A line counts as repeated when the
+The files are read in the order given. `package` and `import` lines are
+headers, not bodies: they are skipped. A line counts as repeated when the
 WINDOW (6) whitespace-stripped lines starting at it, blank lines included,
 already occurred earlier; no window crosses a file boundary. Prints each
 maximal repeated run with the place it repeats, then the number of
@@ -13,13 +14,15 @@ repeated lines. Exit status is 0 when there are none, 1 otherwise.
 import sys
 
 WINDOW = 6
+HEADERS = ("package ", "import ")
 
 
 def main(paths):
     lines = []  # (path, line number, stripped text)
     for p in paths:
         with open(p, encoding="utf-8") as f:
-            lines += [(p, i, l.strip()) for i, l in enumerate(f.read().split("\n"), 1)]
+            lines += [(p, i, l.strip()) for i, l in enumerate(f.read().split("\n"), 1)
+                      if not l.strip().startswith(HEADERS)]
     first = {}
     runs = []  # [start, end, first start] over window starts
     for k in range(len(lines) - WINDOW + 1):

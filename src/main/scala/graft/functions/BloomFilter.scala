@@ -7,34 +7,21 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType, ArrayType}
-
-/**
- * Shared md5 → Kirsch-Mitzenmacher position family for the Bloom filter:
- * `a`/`b` are the unsigned 32-bit big-endian halves of md5(s) (= hex
- * chars 1-8 / 9-16), position_i = (a + i·b) mod mBits. Identical hash
- * family to [[MinHashSignature]], so the DuckDB oracle replays every
- * position from `md5(g)` hex arithmetic — the filter's bit pattern
- * (including its false positives) is bit-identical across engines.
- */
-private[graft] object BloomHash {
-  def halves(md: MessageDigest, s: Array[Byte]): (Long, Long) = {
-    md.reset()
-    val d = md.digest(s)
-    val a = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    val b = ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-      ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-    (a, b)
-  }
-}
 
 /**
  * Bloom-filter BUILD as an aggregate: the state is an `mBits`-bit array;
  * each input string sets `numHashes` positions. Output is the packed
  * bit array (BinaryType, little-endian 64-bit words).
+ *
+ * Positions (Kirsch-Mitzenmacher, the hash family of
+ * [[MinHashSignature]]): `a`/`b` are the unsigned 32-bit big-endian
+ * words of md5(s) (= hex chars 1-8 / 9-16), position_i = (a + i·b) mod
+ * mBits. The DuckDB oracle replays every position from `md5(g)` hex
+ * arithmetic, so the filter's bit pattern (false positives included) is
+ * bit-identical across engines.
  *
  * Why an aggregate: benchmark decontamination at 100 TB must not shuffle
  * the corpus. The eval set's n-grams reduce to this fixed-size bitset
@@ -65,11 +52,8 @@ case class BloomBitsAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "graft_bloom_build"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringInput.check(prettyName, child.dataType)
 
   @transient private lazy val md = MessageDigest.getInstance("MD5")
 
@@ -78,7 +62,10 @@ case class BloomBitsAgg(
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val (a, b) = BloomHash.halves(md, v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
+      md.reset()
+      val d = md.digest(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
+      val a = Md5.u32(d, 0)
+      val b = Md5.u32(d, 4)
       var i = 0
       while (i < numHashes) {
         val pos = ((a + i * b) % mBits).toInt
@@ -147,6 +134,8 @@ case class BloomHitCount(left: Expression, right: Expression, mBits: Int, numHas
 
   override def nullSafeEval(bitsAny: Any, gramsAny: Any): Any = {
     val bytes = bitsAny.asInstanceOf[Array[Byte]]
+    require(bytes.length == mBits / 8,
+      s"$prettyName: filter length ${bytes.length} bytes does not match mBits/8 = ${mBits / 8}")
     val grams = gramsAny.asInstanceOf[ArrayData]
     val seen = new java.util.HashSet[String]()
     var hits = 0L
@@ -156,7 +145,10 @@ case class BloomHitCount(left: Expression, right: Expression, mBits: Int, numHas
       if (!grams.isNullAt(i)) {
         val s = grams.getUTF8String(i)
         if (seen.add(s.toString)) {
-          val (a, b) = BloomHash.halves(md, s.getBytes)
+          md.reset()
+          val d = md.digest(s.getBytes)
+          val a = Md5.u32(d, 0)
+          val b = Md5.u32(d, 4)
           var all = true
           var j = 0
           while (all && j < numHashes) {

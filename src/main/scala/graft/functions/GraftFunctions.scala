@@ -219,10 +219,17 @@ object GraftFunctions {
       throw new IllegalArgumentException(
         s"$name requires ($shape), got ${other.size} args")))
 
-  /** The Int value of a literal argument. */
+  /** The Int value of an integral literal argument in Int range; a
+    * string, fraction (SQL folds it to Decimal), NULL or wider value
+    * fails naming the argument. */
   private def intLit(e: Expression, what: String): Int =
-    if (e.foldable) e.eval().asInstanceOf[Number].intValue()
-    else throw new IllegalArgumentException(s"$what must be a literal")
+    if (!e.foldable) throw new IllegalArgumentException(s"$what must be a literal")
+    else e.eval() match {
+      case n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long)
+          if n.asInstanceOf[Number].longValue.isValidInt => n.asInstanceOf[Number].intValue
+      case other => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $other (${e.dataType.catalogString})")
+    }
 
   /** The aggregates and sketches in SQL. */
   private def aggregateFunctions: Seq[(String, Builder)] = Seq(

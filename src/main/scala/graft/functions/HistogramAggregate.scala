@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /**
  * Fixed-grid histogram aggregate: bin counts over [lo, hi) with
@@ -41,11 +41,8 @@ case class HistogramAgg(
   override def nullable: Boolean = false
   override def prettyName: String = "graft_histogram"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires double input, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.DoubleInput.check(prettyName, child.dataType)
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](nbins)
 

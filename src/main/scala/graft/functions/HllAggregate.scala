@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * HyperLogLog distinct-count sketch as a Spark aggregate — the
@@ -43,21 +44,42 @@ case class HllSketchAgg(
     b: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
-
-  require(b >= 4 && b <= 14, s"b must be in [4, 14], got $b")
-  private val m = 1 << b
+  extends HllRegisterState {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_hll"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${other.catalogString}")
-  }
+  override def eval(buf: Array[Byte]): Any = HllEstimator.estimate(buf)
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): HllSketchAgg =
+    copy(mutableAggBufferOffset = newOffset)
+
+  override def withNewInputAggBufferOffset(newOffset: Int): HllSketchAgg =
+    copy(inputAggBufferOffset = newOffset)
+
+  override protected def withNewChildInternal(newChild: Expression): HllSketchAgg =
+    copy(child = newChild)
+}
+
+/**
+ * The state of the three HLL aggregates: m = 2^b byte registers, a
+ * string input hashed into them (see [[HllSketchAgg]]), merged by
+ * element-wise max and serialized as the register array itself.
+ */
+private[graft] abstract class HllRegisterState
+  extends TypedImperativeAggregate[Array[Byte]]
+  with UnaryLike[Expression] with Serializable {
+  // Serializable: a task deserializes the aggregate without running this
+  // constructor, whose require would read `b` before it is restored
+
+  def b: Int
+
+  require(b >= 4 && b <= 14, s"b must be in [4, 14], got $b")
+  protected val m: Int = 1 << b
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringInput.check(prettyName, child.dataType)
 
   @transient private lazy val md = MessageDigest.getInstance("MD5")
 
@@ -67,16 +89,10 @@ case class HllSketchAgg(
     val v = child.eval(input)
     if (v != null) {
       md.reset()
-      val digest = md.digest(
-        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
-      // unsigned big-endian 32-bit slices = hex chars 1-8 / 9-16 of md5
-      val h1 = ((digest(0) & 0xffL) << 24) | ((digest(1) & 0xffL) << 16) |
-        ((digest(2) & 0xffL) << 8) | (digest(3) & 0xffL)
-      val h2 = ((digest(4) & 0xffL) << 24) | ((digest(5) & 0xffL) << 16) |
-        ((digest(6) & 0xffL) << 8) | (digest(7) & 0xffL)
-      val bucket = (h1 % m).toInt
+      val digest = md.digest(v.asInstanceOf[UTF8String].getBytes)
+      val bucket = (Md5.u32(digest, 0) % m).toInt
       // rho = 33 − bitlength(h2); nlz of the 32-bit pattern + 1 (h2=0 → 33)
-      val rho = (Integer.numberOfLeadingZeros(h2.toInt) + 1).toByte
+      val rho = (Integer.numberOfLeadingZeros(Md5.u32(digest, 4).toInt) + 1).toByte
       if (rho > buf(bucket)) buf(bucket) = rho
     }
     buf
@@ -91,20 +107,9 @@ case class HllSketchAgg(
     buf
   }
 
-  override def eval(buf: Array[Byte]): Any = HllEstimator.estimate(buf)
-
   override def serialize(buf: Array[Byte]): Array[Byte] = buf
 
   override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-
-  override def withNewInputAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-
-  override protected def withNewChildInternal(newChild: Expression): HllSketchAgg =
-    copy(child = newChild)
 }
 
 /** The shared HLL estimator (see [[HllSketchAgg]] for the formula and
@@ -132,7 +137,7 @@ object HllEstimator {
 }
 
 /**
- * The REGISTERS of an HLL sketch as a value: identical update/merge to
+ * The REGISTERS of an HLL sketch as a value: the update/merge of
  * [[HllSketchAgg]], but eval emits the m-byte register array instead of
  * the estimate. This is the materialization half of the two-phase
  * rolling-distinct pattern: per-bucket sketches are tiny (2^b bytes),
@@ -144,57 +149,14 @@ case class HllRegistersAgg(
     b: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
+  extends HllRegisterState {
 
-  require(b >= 4 && b <= 14, s"b must be in [4, 14], got $b")
-  private val m = 1 << b
-
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
+  override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
   override def prettyName: String = "graft_hll_registers"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${other.catalogString}")
-  }
-
-  @transient private lazy val md = MessageDigest.getInstance("MD5")
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      md.reset()
-      val digest = md.digest(
-        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
-      val h1 = ((digest(0) & 0xffL) << 24) | ((digest(1) & 0xffL) << 16) |
-        ((digest(2) & 0xffL) << 8) | (digest(3) & 0xffL)
-      val h2 = ((digest(4) & 0xffL) << 24) | ((digest(5) & 0xffL) << 16) |
-        ((digest(6) & 0xffL) << 8) | (digest(7) & 0xffL)
-      val bucket = (h1 % m).toInt
-      val rho = (Integer.numberOfLeadingZeros(h2.toInt) + 1).toByte
-      if (rho > buf(bucket)) buf(bucket) = rho
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < m) {
-      if (other(i) > buf(i)) buf(i) = other(i)
-      i += 1
-    }
-    buf
-  }
-
   // copy: the mutable buffer must not escape into the output row
   override def eval(buf: Array[Byte]): Any = buf.clone()
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HllRegistersAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -217,23 +179,14 @@ case class HllMergeAgg(
     b: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]]
-  with UnaryLike[Expression] {
-
-  require(b >= 4 && b <= 14, s"b must be in [4, 14], got $b")
-  private val m = 1 << b
+  extends HllRegisterState {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_hll_merge"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary (hll registers) input, got ${other.catalogString}")
-  }
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.HllRegisters.check(prettyName, child.dataType)
 
   override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
     val v = child.eval(input)
@@ -245,19 +198,7 @@ case class HllMergeAgg(
     } else buf
   }
 
-  override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < m) {
-      if (other(i) > buf(i)) buf(i) = other(i)
-      i += 1
-    }
-    buf
-  }
-
   override def eval(buf: Array[Byte]): Any = HllEstimator.estimate(buf)
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
     copy(mutableAggBufferOffset = newOffset)

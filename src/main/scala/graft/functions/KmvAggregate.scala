@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /**
  * Bounded per-group KMV state: the k smallest DISTINCT 32-bit hash
@@ -91,11 +91,8 @@ case class KmvDistinctAgg(
   override def nullable: Boolean = true
   override def prettyName: String = "graft_kmv_distinct"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringInput.check(prettyName, child.dataType)
 
   @transient private lazy val md = MessageDigest.getInstance("MD5")
 
@@ -110,10 +107,7 @@ case class KmvDistinctAgg(
       md.reset()
       val digest = md.digest(
         v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
-      // unsigned big-endian 32-bit = first 8 hex chars of md5(s)
-      val h = ((digest(0) & 0xffL) << 24) | ((digest(1) & 0xffL) << 16) |
-        ((digest(2) & 0xffL) << 8) | (digest(3) & 0xffL)
-      buf.insert(h)
+      buf.insert(Md5.u32(digest, 0))
     }
     buf
   }

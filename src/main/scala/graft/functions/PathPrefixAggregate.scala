@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -11,48 +9,25 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Bounded earliest-k state of [[PathPrefix]]: a heap of (ts, id, label)
- * triples with the LATEST entry at the root, so an earlier-arriving
- * triple replaces it in O(log k) — the k EARLIEST rows by (ts, id)
- * survive regardless of arrival order or partitioning.
+ * Bounded earliest-k state of [[PathPrefix]]: (ts, id, label) triples,
+ * the LATEST by (ts, id) at the root, so the k EARLIEST rows survive
+ * regardless of arrival order or partitioning.
  */
-final class PathPrefixBuffer(val k: Int) {
+final class PathPrefixBuffer(capacity: Int) extends BoundedHeap(capacity) {
   val ts: Array[Long] = new Array[Long](k)
   val ids: Array[Long] = new Array[Long](k)
   val labels: Array[UTF8String] = new Array[UTF8String](k)
-  var size: Int = 0
 
-  /** is entry (t1,id1) LATER than (t2,id2)? (the heap root is the latest) */
+  /** is entry (t1,id1) LATER than (t2,id2)? */
   @inline private def later(t1: Long, id1: Long, t2: Long, id2: Long): Boolean =
     t1 > t2 || (t1 == t2 && id1 > id2)
 
-  private def swap(i: Int, j: Int): Unit = {
+  protected def worse(i: Int, j: Int): Boolean = later(ts(i), ids(i), ts(j), ids(j))
+
+  protected def swap(i: Int, j: Int): Unit = {
     val tt = ts(i); ts(i) = ts(j); ts(j) = tt
     val ti = ids(i); ids(i) = ids(j); ids(j) = ti
     val tl = labels(i); labels(i) = labels(j); labels(j) = tl
-  }
-
-  private def siftUp(i0: Int): Unit = {
-    var i = i0
-    while (i > 0) {
-      val p = (i - 1) >> 1
-      if (later(ts(i), ids(i), ts(p), ids(p))) { swap(i, p); i = p }
-      else return
-    }
-  }
-
-  private def siftDown(i0: Int): Unit = {
-    var i = i0
-    while (true) {
-      val l = 2 * i + 1
-      val r = l + 1
-      var latest = i
-      if (l < size && later(ts(l), ids(l), ts(latest), ids(latest))) latest = l
-      if (r < size && later(ts(r), ids(r), ts(latest), ids(latest))) latest = r
-      if (latest == i) return
-      swap(i, latest)
-      i = latest
-    }
   }
 
   def insert(t: Long, id: Long, label: UTF8String): Unit = {
@@ -67,9 +42,7 @@ final class PathPrefixBuffer(val k: Int) {
 
   /** labels in (ts, id) ascending order — the journey prefix. */
   def orderedLabels(): Array[UTF8String] = {
-    val idx = Array.range(0, size).sortWith { (i, j) =>
-      later(ts(j), ids(j), ts(i), ids(i))
-    }
+    val idx = Array.range(0, size).sortWith((i, j) => worse(j, i))
     idx.map(labels)
   }
 }
@@ -142,9 +115,7 @@ case class PathPrefix(
     UTF8String.fromString(parts.mkString(">"))
   }
 
-  override def serialize(buf: PathPrefixBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  override def serialize(buf: PathPrefixBuffer): Array[Byte] = Serde.write { out =>
     out.writeInt(buf.size)
     var i = 0
     while (i < buf.size) {
@@ -159,12 +130,10 @@ case class PathPrefix(
       }
       i += 1
     }
-    out.flush()
-    bos.toByteArray
   }
 
   override def deserialize(bytes: Array[Byte]): PathPrefixBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val in = Serde.reader(bytes)
     val n = in.readInt()
     val buf = new PathPrefixBuffer(k)
     var i = 0

@@ -24,9 +24,7 @@ object PlaneMatrix {
 
   private def weight(md: MessageDigest, p: Int, d: Int): Double = {
     val b = md.digest(s"${p}_$d".getBytes(StandardCharsets.UTF_8))
-    val u = ((b(0) & 0xffL) << 24) | ((b(1) & 0xffL) << 16) |
-      ((b(2) & 0xffL) << 8) | (b(3) & 0xffL)
-    u.toDouble / 4294967296.0 - 0.5
+    Md5.u32(b, 0).toDouble / 4294967296.0 - 0.5
   }
 
   private val matrices =
@@ -47,8 +45,8 @@ object PlaneMatrix {
   }
 
   /**
-   * The `planes` dot products of the row's vector with the hyperplanes,
-   * or null for a null vector. Each is the ascending-d left fold
+   * The `planes` dot products of the vector `v` with the hyperplanes.
+   * Each is the ascending-d left fold
    * `acc += x(d) * w(p, d)` from 0.0, as in [[DotProduct]] (Java never
    * fuses the multiply-add), so the result is bit-identical to a
    * per-plane loop. The loop runs d-major, updating every plane's
@@ -56,7 +54,6 @@ object PlaneMatrix {
    * instead of waiting on one accumulator's latency.
    */
   def project(name: String, v: Any, w: Array[Double], planes: Int, dim: Int): Array[Double] = {
-    if (v == null) return null
     val arr = v.asInstanceOf[ArrayData]
     if (arr.numElements() != dim) {
       throw new IllegalArgumentException(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -60,10 +60,7 @@ object PoissonWeightsKernel {
       val h = d.digest()
       var k = 0
       while (k < 4 && g * 4 + k < reps) {
-        val o = 4 * k
-        val v = ((h(o) & 0xffL) << 24) | ((h(o + 1) & 0xffL) << 16) |
-          ((h(o + 2) & 0xffL) << 8) | (h(o + 3) & 0xffL)
-        val u = (v.toDouble + 0.5) / 4294967296.0
+        val u = (Md5.u32(h, 4 * k).toDouble + 0.5) / 4294967296.0
         var w = 0
         while (w < 8 && !(u < Cdf(w))) w += 1
         out(g * 4 + k) = w.toLong
@@ -90,11 +87,8 @@ case class PoissonWeights(child: Expression, reps: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_poisson_weights"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringArg.check(prettyName, child.dataType)
 
   override protected def nullSafeEval(id: Any): Any =
     PoissonWeightsKernel.compute(id.asInstanceOf[UTF8String], reps)

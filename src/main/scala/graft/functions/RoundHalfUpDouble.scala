@@ -54,9 +54,7 @@ case class RoundHalfUpDouble(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_round_half_up"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires double, got ${child.dataType.catalogString}")
+    InputType.DoubleArg.check(prettyName, child.dataType)
 
   override protected def nullSafeEval(x: Any): Any =
     RoundHalfUpKernel.round(x.asInstanceOf[Double])

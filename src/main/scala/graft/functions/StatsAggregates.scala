@@ -54,6 +54,16 @@ abstract class PowerSumAggregate extends DeclarativeAggregate
     aggBufferAttributes.map(a => a.left + a.right)
 
   protected def nullD: Expression = Literal.create(null, DoubleType)
+
+  /** The (m4, m2) central moments of the kurtosis forms, from the sums. */
+  protected def kurtosisMoments: (Expression, Expression) = {
+    val t1 = Literal(1.0) / n
+    val m4 = t1 * (s4 - Literal(4.0) * s3 * s1 * t1 +
+      Literal(6.0) * s2 * s1 * s1 * t1 * t1 -
+      Literal(3.0) * s1 * s1 * s1 * s1 * t1 * t1 * t1)
+    val m2 = (s2 - s1 * s1 * t1) * t1
+    (m4, m2)
+  }
 }
 
 /**
@@ -67,11 +77,7 @@ case class GraftKurtosis(child: Expression) extends PowerSumAggregate {
   override def prettyName: String = "graft_kurtosis"
 
   override lazy val evaluateExpression: Expression = {
-    val t1 = Literal(1.0) / n
-    val m4 = t1 * (s4 - Literal(4.0) * s3 * s1 * t1 +
-      Literal(6.0) * s2 * s1 * s1 * t1 * t1 -
-      Literal(3.0) * s1 * s1 * s1 * s1 * t1 * t1 * t1)
-    val m2 = (s2 - s1 * s1 * t1) * t1
+    val (m4, m2) = kurtosisMoments
     val num = (n - Literal(1.0)) *
       ((n + Literal(1.0)) * m4 / (m2 * m2) - Literal(3.0) * (n - Literal(1.0)))
     val den = (n - Literal(2.0)) * (n - Literal(3.0))
@@ -92,11 +98,7 @@ case class GraftKurtosisPop(child: Expression) extends PowerSumAggregate {
   override def prettyName: String = "graft_kurtosis_pop"
 
   override lazy val evaluateExpression: Expression = {
-    val t1 = Literal(1.0) / n
-    val m4 = t1 * (s4 - Literal(4.0) * s3 * s1 * t1 +
-      Literal(6.0) * s2 * s1 * s1 * t1 * t1 -
-      Literal(3.0) * s1 * s1 * s1 * s1 * t1 * t1 * t1)
-    val m2 = (s2 - s1 * s1 * t1) * t1
+    val (m4, m2) = kurtosisMoments
     If(n < Literal(1.0), nullD,
       If(m2 <= Literal(0.0), nullD, m4 / (m2 * m2) - Literal(3.0)))
   }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -32,17 +31,12 @@ case class MinHashSignature(child: Expression, k: Int)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_minhash"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.Strings.check(prettyName, child.dataType)
 
   @transient private lazy val md = MessageDigest.getInstance("MD5")
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     if (n == 0) return null
@@ -55,11 +49,8 @@ case class MinHashSignature(child: Expression, k: Int)
       seen += 1
       md.reset()
       val digest = md.digest(arr.getUTF8String(i).getBytes)
-      // unsigned big-endian 32-bit halves == hex chars 1-8 / 9-16 of md5(s)
-      val a = ((digest(0) & 0xffL) << 24) | ((digest(1) & 0xffL) << 16) |
-        ((digest(2) & 0xffL) << 8) | (digest(3) & 0xffL)
-      val b = ((digest(4) & 0xffL) << 24) | ((digest(5) & 0xffL) << 16) |
-        ((digest(6) & 0xffL) << 8) | (digest(7) & 0xffL)
+      val a = Md5.u32(digest, 0)
+      val b = Md5.u32(digest, 4)
       var j = 0
       while (j < k) {
         val h = (a + j * b) & 0xffffffffL
@@ -97,17 +88,12 @@ case class SimHash64(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_simhash64"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.Strings.check(prettyName, child.dataType)
 
   @transient private lazy val md = MessageDigest.getInstance("MD5")
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val votes = new Array[Int](64)
@@ -161,15 +147,10 @@ case class Fingerprint(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_fingerprint"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringArg.check(prettyName, child.dataType)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val s = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
     var acc = 0L
     var i = 0
@@ -224,15 +205,10 @@ case class TextStats(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_text_stats"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringArg.check(prettyName, child.dataType)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val s = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
     // the declarative twin lowercases the WHOLE string first
     // (`lower(text)`) and computes the punct count as
@@ -293,15 +269,10 @@ case class Tokenize(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_tokenize"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringArg.check(prettyName, child.dataType)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     new GenericArrayData(TextKernels.tokenize(TextKernels.lowerLikeSql(
       v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString))
       .map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray[Any])
@@ -327,15 +298,10 @@ case class TokenShingles(child: Expression, n: Int = 3)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_token_shingles"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringArg.check(prettyName, child.dataType)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val toks = TextKernels.tokenize(TextKernels.lowerLikeSql(
       v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString))
     val out =
@@ -472,11 +438,8 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
   override def nullable: Boolean = true
   override def prettyName: String = "graft_bpe_encode"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.Strings.check(prettyName, child.dataType)
 
   @transient private lazy val rank: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](merges.size * 2)
@@ -534,9 +497,7 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
     syms
   }
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -589,30 +550,13 @@ case class CdcChunkHashes(child: Expression, window: Int, maskBits: Int)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_cdc_chunks"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringArg.check(prettyName, child.dataType)
 
   @transient private lazy val md = MessageDigest.getInstance("MD5")
   private val mask = (1L << maskBits) - 1L
 
-  private def hex(digest: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
-    val out = new Array[Byte](32)
-    val hexc = "0123456789abcdef".getBytes
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = hexc((digest(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexc(digest(i) & 0xf)
-      i += 1
-    }
-    org.apache.spark.unsafe.types.UTF8String.fromBytes(out)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val s = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
     val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     // code-point index -> byte offset (substr semantics are
@@ -636,10 +580,7 @@ case class CdcChunkHashes(child: Expression, window: Int, maskBits: Int)
     while (i <= nCp) {
       md.reset()
       md.update(bytes, off(i - window), off(i) - off(i - window))
-      val d = md.digest()
-      val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-      if ((h & mask) == 0L) bounds += i
+      if ((Md5.u32(md.digest(), 0) & mask) == 0L) bounds += i
       i += 1
     }
     if (bounds.last != nCp) bounds += nCp
@@ -650,7 +591,7 @@ case class CdcChunkHashes(child: Expression, window: Int, maskBits: Int)
       if (b > a) {
         md.reset()
         md.update(bytes, off(a), off(b) - off(a))
-        out += hex(md.digest())
+        out += org.apache.spark.unsafe.types.UTF8String.fromBytes(Md5.hexBytes(md.digest()))
       }
       j += 1
     }
@@ -683,15 +624,10 @@ case class ByteLevelUnits(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_byte_units"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.Strings.check(prettyName, child.dataType)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val out = new Array[Any](n)
@@ -762,19 +698,12 @@ case class NfkcNormalize(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_nfkc"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.StringArg.check(prettyName, child.dataType)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else org.apache.spark.unsafe.types.UTF8String.fromString(
-      java.text.Normalizer.normalize(v.toString,
-        java.text.Normalizer.Form.NFKC))
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    org.apache.spark.unsafe.types.UTF8String.fromString(
+      java.text.Normalizer.normalize(v.toString, java.text.Normalizer.Form.NFKC))
 
   override protected def withNewChildInternal(newChild: Expression): NfkcNormalize =
     copy(child = newChild)
@@ -816,11 +745,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
           s"(${l.catalogString}, ${r.catalogString})")
     }
 
-  override def eval(input: InternalRow): Any = {
-    val lv = left.eval(input)
-    if (lv == null) return null
-    val rv = right.eval(input)
-    if (rv == null) return null
+  override protected def nullSafeEval(lv: Any, rv: Any): Any = {
     val a = lv.asInstanceOf[ArrayData]
     val b = rv.asInstanceOf[ArrayData]
     val na = a.numElements()
@@ -850,7 +775,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   // PPJoin verify projection, the hottest loop of the similarity-join
   // family; as CodegenFallback it severed the WholeStageCodegen span
   // around it (every input row boxed through an InternalRow). The
-  // generated merge is the eval() loop verbatim.
+  // generated merge is the nullSafeEval() loop verbatim.
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -11,46 +9,61 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
 /**
- * Bounded top-k state of [[TopKBy]]: a binary heap of (id, score) pairs
- * with the WORST entry at the root (smallest score; ties → largest id),
- * so a better candidate replaces the root in O(log k).
+ * An array-backed binary heap of at most `k` entries with the WORST
+ * entry at the root, so a better candidate replaces the root in
+ * O(log k). A buffer keeps its entries in parallel arrays; it says which
+ * of two slots holds the worse entry and swaps two slots, and owns its
+ * insert and its output order.
  */
-final class TopKBuffer(val k: Int) {
-  val ids: Array[Long] = new Array[Long](k)
-  val scores: Array[Double] = new Array[Double](k)
+private[functions] abstract class BoundedHeap(val k: Int) {
   var size: Int = 0
 
-  /** is (id1,s1) a BETTER result than (id2,s2)? (score desc, id asc) */
-  @inline private def better(id1: Long, s1: Double, id2: Long, s2: Double): Boolean =
-    s1 > s2 || (s1 == s2 && id1 < id2)
+  /** does slot i hold a worse entry than slot j? */
+  protected def worse(i: Int, j: Int): Boolean
+  protected def swap(i: Int, j: Int): Unit
 
-  private def swap(i: Int, j: Int): Unit = {
-    val ti = ids(i); ids(i) = ids(j); ids(j) = ti
-    val ts = scores(i); scores(i) = scores(j); scores(j) = ts
-  }
-
-  private def siftUp(i0: Int): Unit = {
+  protected final def siftUp(i0: Int): Unit = {
     var i = i0
     while (i > 0) {
       val p = (i - 1) >> 1
-      // parent must be worse-or-equal than child (min-heap on "goodness")
-      if (better(ids(p), scores(p), ids(i), scores(i))) { swap(i, p); i = p }
+      // a parent is never better than its child
+      if (worse(i, p)) { swap(i, p); i = p }
       else return
     }
   }
 
-  private def siftDown(i0: Int): Unit = {
+  protected final def siftDown(i0: Int): Unit = {
     var i = i0
     while (true) {
       val l = 2 * i + 1
       val r = l + 1
       var worst = i
-      if (l < size && better(ids(worst), scores(worst), ids(l), scores(l))) worst = l
-      if (r < size && better(ids(worst), scores(worst), ids(r), scores(r))) worst = r
+      if (l < size && worse(l, worst)) worst = l
+      if (r < size && worse(r, worst)) worst = r
       if (worst == i) return
       swap(i, worst)
       i = worst
     }
+  }
+}
+
+/**
+ * Bounded top-k state of [[TopKBy]]: (id, score) pairs, the worst
+ * (smallest score; ties → largest id) at the root.
+ */
+final class TopKBuffer(capacity: Int) extends BoundedHeap(capacity) {
+  val ids: Array[Long] = new Array[Long](k)
+  val scores: Array[Double] = new Array[Double](k)
+
+  /** is (id1,s1) a BETTER result than (id2,s2)? (score desc, id asc) */
+  @inline private def better(id1: Long, s1: Double, id2: Long, s2: Double): Boolean =
+    s1 > s2 || (s1 == s2 && id1 < id2)
+
+  protected def worse(i: Int, j: Int): Boolean = better(ids(j), scores(j), ids(i), scores(i))
+
+  protected def swap(i: Int, j: Int): Unit = {
+    val ti = ids(i); ids(i) = ids(j); ids(j) = ti
+    val ts = scores(i); scores(i) = scores(j); scores(j) = ts
   }
 
   def insert(id: Long, score: Double): Unit = {
@@ -146,9 +159,7 @@ case class TopKBy(
     }.toArray[Any])
   }
 
-  override def serialize(buf: TopKBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  override def serialize(buf: TopKBuffer): Array[Byte] = Serde.write { out =>
     out.writeInt(buf.size)
     var i = 0
     while (i < buf.size) {
@@ -156,12 +167,10 @@ case class TopKBy(
       out.writeDouble(buf.scores(i))
       i += 1
     }
-    out.flush()
-    bos.toByteArray
   }
 
   override def deserialize(bytes: Array[Byte]): TopKBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val in = Serde.reader(bytes)
     val n = in.readInt()
     val buf = new TopKBuffer(k)
     var i = 0

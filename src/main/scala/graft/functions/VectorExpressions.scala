@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -11,20 +9,32 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/**
- * Codegen'd left-fold dot product over two `array<double>` columns.
- *
- * Why a custom Catalyst expression: the equivalent
- * `aggregate(zip_with(a, b, (x,y) -> x*y), 0d, (acc,x) -> acc+x)` is a
- * higher-order expression — interpreted per element, boxed, and excluded
- * from whole-stage codegen. For ANN scans that evaluate millions of pairs
- * (the reference's workload at 100 TB is exactly that), the generated
- * tight `for` loop below is 1-2 orders of magnitude faster and keeps the
- * surrounding filter/project inside one WholeStageCodegen span.
- *
- * Summation is a strict left fold in element order — bit-identical to the
- * HOF form and to the DuckDB oracle's `list_reduce` replay.
- */
+/** The `planes` md5-seeded hyperplane dot products of an
+  * `array<double>` of length `dim`, shared by [[SrpSignature]] and
+  * [[RandomProjection]]. */
+private[graft] abstract class PlaneProjection
+  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
+  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback with Serializable {
+  // Serializable: a task deserializes the kernel without running this
+  // constructor, whose requires would read the fields before they are restored
+
+  def planes: Int
+  def dim: Int
+
+  require(planes > 0 && planes <= 1024, s"planes must be in [1,1024], got $planes")
+  require(dim > 0 && dim <= 65536, s"dim must be in [1,65536], got $dim")
+
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.Doubles.check(prettyName, child.dataType)
+
+  @transient private lazy val weights = PlaneMatrix(planes, dim)
+
+  protected final def project(v: Any): Array[Double] =
+    PlaneMatrix.project(prettyName, v, weights, planes, dim)
+}
+
 /**
  * One-pass signed-random-projection signature: the '0'/'1' sign string
  * of `planes` md5-seeded hyperplane dot products over an
@@ -40,27 +50,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
  * planes, so dispatch is paid once per row, not per plane.
  */
 case class SrpSignature(child: Expression, planes: Int, dim: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  require(planes > 0 && planes <= 1024, s"planes must be in [1,1024], got $planes")
-  require(dim > 0 && dim <= 65536, s"dim must be in [1,65536], got $dim")
+  extends PlaneProjection {
 
   override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_srp_signature"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${other.catalogString}")
-  }
-
-  @transient private lazy val weights = PlaneMatrix(planes, dim)
-
-  override def eval(input: InternalRow): Any = {
-    val acc = PlaneMatrix.project(prettyName, child.eval(input), weights, planes, dim)
-    if (acc == null) return null
+  override protected def nullSafeEval(v: Any): Any = {
+    val acc = project(v)
     val out = new Array[Byte](planes)
     var p = 0
     while (p < planes) {
@@ -74,6 +70,20 @@ case class SrpSignature(child: Expression, planes: Int, dim: Int)
     copy(child = newChild)
 }
 
+/**
+ * Codegen'd left-fold dot product over two `array<double>` columns.
+ *
+ * Why a custom Catalyst expression: the equivalent
+ * `aggregate(zip_with(a, b, (x,y) -> x*y), 0d, (acc,x) -> acc+x)` is a
+ * higher-order expression — interpreted per element, boxed, and excluded
+ * from whole-stage codegen. For ANN scans that evaluate millions of pairs
+ * (the reference's workload at 100 TB is exactly that), the generated
+ * tight `for` loop below is 1-2 orders of magnitude faster and keeps the
+ * surrounding filter/project inside one WholeStageCodegen span.
+ *
+ * Summation is a strict left fold in element order — bit-identical to the
+ * HOF form and to the DuckDB oracle's `list_reduce` replay.
+ */
 case class DotProduct(left: Expression, right: Expression)
   extends BinaryExpression {
 
@@ -134,6 +144,22 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+private[functions] object DenseVector {
+  /** Rejects a vector with a null element, which the vector aggregates
+    * cannot add. */
+  def requireNoNulls(kernel: String, arr: ArrayData): Unit = {
+    var i = 0
+    val n = arr.numElements()
+    while (i < n) {
+      if (arr.isNullAt(i)) {
+        throw new IllegalArgumentException(
+          s"$kernel: null element at position $i — dense vectors required")
+      }
+      i += 1
+    }
+  }
+}
+
 /** Mutable (element-wise sums, row count) state of [[VectorMean]]. */
 final class VectorMeanBuffer(var sums: Array[Double], var n: Long)
 
@@ -162,11 +188,8 @@ case class VectorMean(
   override def nullable: Boolean = true
   override def prettyName: String = "graft_vector_mean"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.Doubles.check(prettyName, child.dataType)
 
   override def createAggregationBuffer(): VectorMeanBuffer =
     new VectorMeanBuffer(null, 0L)
@@ -193,19 +216,11 @@ case class VectorMean(
       // null ELEMENTS are rejected loudly (a partial vector has no
       // well-defined mean contribution; a silent skip would bias the
       // centroid) — null VECTORS are skipped like avg over absent rows
-      var i = 0
-      val n = arr.numElements()
-      while (i < n) {
-        if (arr.isNullAt(i)) {
-          throw new IllegalArgumentException(
-            s"$prettyName: null element at position $i — dense vectors required")
-        }
-        i += 1
-      }
+      DenseVector.requireNoNulls(prettyName, arr)
       // empty arrays contribute nothing (like posexplode of an empty
       // list) rather than seeding a zero-dim buffer that would trip the
       // mismatch check against real vectors
-      if (n > 0) addInto(buf, arr.toDoubleArray(), 1L)
+      if (arr.numElements() > 0) addInto(buf, arr.toDoubleArray(), 1L)
     }
     buf
   }
@@ -223,9 +238,7 @@ case class VectorMean(
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: VectorMeanBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  override def serialize(buf: VectorMeanBuffer): Array[Byte] = Serde.write { out =>
     if (buf.sums == null) out.writeInt(-1)
     else {
       out.writeInt(buf.sums.length)
@@ -233,12 +246,10 @@ case class VectorMean(
       var i = 0
       while (i < buf.sums.length) { out.writeDouble(buf.sums(i)); i += 1 }
     }
-    out.flush()
-    bos.toByteArray
   }
 
   override def deserialize(bytes: Array[Byte]): VectorMeanBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val in = Serde.reader(bytes)
     val dim = in.readInt()
     if (dim < 0) new VectorMeanBuffer(null, 0L)
     else {
@@ -313,13 +324,8 @@ case class VectorOuterSum(
   override def nullable: Boolean = true
   override def prettyName: String = "graft_vector_outer_sum"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.LongType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint> (quantize first), got " +
-        other.catalogString)
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputType.QuantizedLongs.check(prettyName, child.dataType)
 
   override def createAggregationBuffer(): VectorOuterBuffer =
     new VectorOuterBuffer(0, 0L, null, null)
@@ -335,14 +341,7 @@ case class VectorOuterSum(
     if (v != null) {
       val arr = v.asInstanceOf[ArrayData]
       val d = arr.numElements()
-      var i = 0
-      while (i < d) {
-        if (arr.isNullAt(i)) {
-          throw new IllegalArgumentException(
-            s"$prettyName: null element at position $i — dense vectors required")
-        }
-        i += 1
-      }
+      DenseVector.requireNoNulls(prettyName, arr)
       if (d > 0) {
         if (buf.s == null) init(buf, d)
         else if (buf.d != d) {
@@ -350,7 +349,7 @@ case class VectorOuterSum(
             s"$prettyName: vector length mismatch (${buf.d} vs $d)")
         }
         val x = arr.toLongArray()
-        i = 0
+        var i = 0
         var k = 0
         while (i < d) {
           buf.s(i) = Math.addExact(buf.s(i), x(i))
@@ -406,9 +405,7 @@ case class VectorOuterSum(
       new GenericArrayData(prods))
   }
 
-  override def serialize(buf: VectorOuterBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  override def serialize(buf: VectorOuterBuffer): Array[Byte] = Serde.write { out =>
     if (buf.s == null) out.writeInt(-1)
     else {
       out.writeInt(buf.d)
@@ -418,12 +415,10 @@ case class VectorOuterSum(
       i = 0
       while (i < buf.p.length) { out.writeLong(buf.p(i)); i += 1 }
     }
-    out.flush()
-    bos.toByteArray
   }
 
   override def deserialize(bytes: Array[Byte]): VectorOuterBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val in = Serde.reader(bytes)
     val d = in.readInt()
     if (d < 0) new VectorOuterBuffer(0, 0L, null, null)
     else {
@@ -465,28 +460,12 @@ case class VectorOuterSum(
  * CodegenFallback: one eval does all planes.
  */
 case class RandomProjection(child: Expression, planes: Int, dim: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  require(planes > 0 && planes <= 1024, s"planes must be in [1,1024], got $planes")
-  require(dim > 0 && dim <= 65536, s"dim must be in [1,65536], got $dim")
+  extends PlaneProjection {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "graft_random_projection"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got ${other.catalogString}")
-  }
-
-  @transient private lazy val weights = PlaneMatrix(planes, dim)
-
-  override def eval(input: InternalRow): Any = {
-    val acc = PlaneMatrix.project(prettyName, child.eval(input), weights, planes, dim)
-    if (acc == null) null else new GenericArrayData(acc)
-  }
+  override protected def nullSafeEval(v: Any): Any = new GenericArrayData(project(v))
 
   override protected def withNewChildInternal(newChild: Expression): RandomProjection =
     copy(child = newChild)
@@ -818,10 +797,7 @@ case class ArrayDivScalar(left: Expression, right: Expression)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, s) => {
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
@@ -891,10 +867,9 @@ case class ZipArith(left: Expression, right: Expression, add: Boolean)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+  // the template stays apart from ArrayDivScalar's: one template with
+  // hooks for the second array would make the generated Java harder to read
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")

@@ -5,6 +5,8 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Md5
+
 /** A multimodal record: opaque media bytes + typed metadata. */
 case class MediaRecord(doc_id: Long, media_type: String, payload: Array[Byte])
 
@@ -118,7 +120,7 @@ object Multimodal {
         private val md = MessageDigest.getInstance("MD5")
         def decode(mediaType: String, payload: Array[Byte]): Decoded = {
           md.reset()
-          val hex = md.digest(payload).map("%02x".format(_)).mkString
+          val hex = Md5.hex(md.digest(payload))
           Decoded(
             Integer.parseInt(hex.substring(0, 4), 16) % 1024 + 1,
             Integer.parseInt(hex.substring(4, 8), 16) % 1024 + 1,
@@ -160,7 +162,7 @@ object Multimodal {
             s"payload is not a decodable image (media_type=$mediaType, " +
               s"n_bytes=${payload.length})")
           md.reset()
-          val hex = md.digest(payload).map("%02x".format(_)).mkString
+          val hex = Md5.hex(md.digest(payload))
           Decoded(img.getWidth, img.getHeight, hex)
         }
 
@@ -226,7 +228,7 @@ object Multimodal {
                 ais.readAllBytes().length.toLong / fs
               }
             md.reset()
-            val hex = md.digest(payload).map("%02x".format(_)).mkString
+            val hex = Md5.hex(md.digest(payload))
             Decoded(
               math.min(frames, Int.MaxValue.toLong).toInt,
               fmt.getChannels, hex)
@@ -372,7 +374,7 @@ object Multimodal {
         def decode(mediaType: String, payload: Array[Byte]): Decoded = {
           val avi = parseAvi(payload)
           md.reset()
-          val hex = md.digest(payload).map("%02x".format(_)).mkString
+          val hex = Md5.hex(md.digest(payload))
           Decoded(avi.width, avi.height, hex)
         }
 
