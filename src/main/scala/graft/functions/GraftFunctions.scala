@@ -284,14 +284,14 @@ object GraftFunctions {
   private def textFunctions: Seq[(String, Builder)] = {
     import graft.ops.{Similarity, TextOps}
     Seq(
-      unaryCol("graft_tokens", TextOps.tokensNative(_)),
+      unaryCol("graft_tokens", TextOps.tokens(_)),
       unaryCol("graft_langid", TextOps.langIdText(_)),
       unaryCol("graft_quality", TextOps.qualityScore(_)),
       unaryCol("graft_text_stats", TextOps.textStats(_)),
       unaryCol("graft_token_count_ws", TextOps.tokenCountWs(_)),
       unaryCol("graft_token_count_bpe", TextOps.tokenCountBpe(_)),
       unaryCol("graft_fingerprint", TextOps.fingerprint(_)),
-      unaryCol("graft_simhash", c => TextOps.simhash64(TextOps.tokensNative(c))),
+      unaryCol("graft_simhash", c => TextOps.simhash64(TextOps.tokens(c))),
       unaryCol("graft_shingles", TextOps.tokenShingles(_)),
       // the r15-r17 crawl family — the whole page-cleaning chain
       unaryCol("graft_extract_html", TextOps.extractHtmlText(_)),
@@ -319,8 +319,9 @@ object GraftFunctions {
       }),
       binaryCol("graft_jaro_winkler", jaro_winkler),
       binaryCol("graft_jaccard", (a, b) => {
-        val sa = array_distinct(TextOps.shingles3(TextOps.tokens(a)))
-        val sb = array_distinct(TextOps.shingles3(TextOps.tokens(b)))
+        // a NULL text shingles like an empty one: one empty shingle
+        val sa = array_distinct(TextOps.tokenShingles(coalesce(a, lit(""))))
+        val sb = array_distinct(TextOps.tokenShingles(coalesce(b, lit(""))))
         val inter = size(array_intersect(sa, sb)).cast("double")
         inter / ((size(sa) + size(sb)).cast("double") - inter)
       }),

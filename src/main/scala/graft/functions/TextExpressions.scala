@@ -4,9 +4,10 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * One-pass k-element MinHash signature over an `array<string>` of shingles.
@@ -75,7 +76,7 @@ case class MinHashSignature(child: Expression, k: Int)
  * 64-bit SimHash over an `array<string>` of tokens, returned as a 64-char
  * '0'/'1' string (bit b = sign of Σ_tokens ±1 votes; bit b of a token =
  * bit b%4 of hex digit b/4 of md5(token) — identical to the declarative
- * [[graft.ops.TextOps.simhash64FromHashes]] and to the DuckDB oracle).
+ * HOF form the specs check it against, and to the DuckDB oracle).
  *
  * One md5 digest per token, votes accumulated from the digest BYTES
  * (hex char 2c is the high nibble of byte c) — no hex strings, no
@@ -256,14 +257,14 @@ case class TextStats(child: Expression)
 }
 
 /**
- * One-pass tokenizer: maximal `[a-z0-9]+` runs of the lowercased text —
- * exactly `regexp_extract_all(lower(text), '[a-z0-9]+')`, without the
- * regex engine or the intermediate lowered copy. Lowercasing is
- * a full-string `toLowerCase` (identical to `lower()`, multi-char case
- * mappings included).
+ * The word tokenizer: maximal `[a-z0-9]+` runs of the lowercased text —
+ * exactly `regexp_extract_all(lower(text), '[a-z0-9]+')` (spec-checked),
+ * without the regex engine or a lowered copy of ASCII text. Its one body
+ * is [[TextKernels.words]]: the interpreted `eval` and the generated code
+ * both call it, so a projection that tokenizes keeps its whole-stage
+ * codegen span.
  */
-case class Tokenize(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+case class Tokenize(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
@@ -272,11 +273,11 @@ case class Tokenize(child: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     InputType.StringArg.check(prettyName, child.dataType)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    new GenericArrayData(TextKernels.tokenize(TextKernels.lowerLikeSql(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString))
-      .map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray[Any])
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    TextKernels.words(v.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.words($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Tokenize =
     copy(child = newChild)
@@ -284,13 +285,12 @@ case class Tokenize(child: Expression)
 
 /**
  * Fused tokenize + word-n-shingle kernel: one pass from raw text to the
- * shingle array — for n=3 exactly `shingles3(tokens(text))` (n-grams
- * joined by spaces; documents with <n tokens fall back to one shingle of
- * the whole token list), without the regex scan or the interpreted
- * transform/element_at walk per n-gram.
+ * shingle array — the words of [[Tokenize]], every run of `n` of them
+ * joined by single spaces; documents with fewer than `n` words give one
+ * shingle of the whole word list (`""` for none). Its one body is
+ * [[TextKernels.shingles]], called by `eval` and by the generated code.
  */
-case class TokenShingles(child: Expression, n: Int = 3)
-  extends UnaryExpression with CodegenFallback {
+case class TokenShingles(child: Expression, n: Int = 3) extends UnaryExpression {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
@@ -301,33 +301,11 @@ case class TokenShingles(child: Expression, n: Int = 3)
   override def checkInputDataTypes(): TypeCheckResult =
     InputType.StringArg.check(prettyName, child.dataType)
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val toks = TextKernels.tokenize(TextKernels.lowerLikeSql(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString))
-    val out =
-      if (toks.length >= n) {
-        val m = toks.length - n + 1
-        val arr = new Array[Any](m)
-        val sb = new java.lang.StringBuilder(16 * n)
-        var i = 0
-        while (i < m) {
-          sb.setLength(0)
-          var j = 0
-          while (j < n) {
-            if (j > 0) sb.append(' ')
-            sb.append(toks(i + j))
-            j += 1
-          }
-          arr(i) = org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString)
-          i += 1
-        }
-        arr
-      } else {
-        Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(
-          toks.mkString(" ")))
-      }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    TextKernels.shingles(v.asInstanceOf[UTF8String], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.shingles($c, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): TokenShingles =
     copy(child = newChild)
@@ -351,25 +329,98 @@ private[functions] object TextKernels {
     if (asciiNoUpper) s else s.toLowerCase(java.util.Locale.ROOT)
   }
 
-  /** maximal [a-z0-9]+ runs of an ALREADY-LOWERCASED string. */
-  def tokenize(lowered: String): scala.collection.mutable.ArrayBuffer[String] = {
-    val toks = new scala.collection.mutable.ArrayBuffer[String](16)
-    val tok = new java.lang.StringBuilder(16)
+  /** [[Tokenize]]'s body: the words of `text`. */
+  def words(text: UTF8String): ArrayData = {
+    val w = new Words(text)
+    val out = new Array[Any](w.count)
     var i = 0
-    val len = lowered.length
-    while (i < len) {
-      val c = lowered.charAt(i)
-      if ((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')) {
-        tok.append(c)
-      } else if (tok.length() > 0) {
-        toks += tok.toString
-        tok.setLength(0)
-      }
+    while (i < w.count) {
+      out(i) = w.join(i, 1)
       i += 1
     }
-    if (tok.length() > 0) toks += tok.toString
-    toks
+    new GenericArrayData(out)
   }
+
+  /** [[TokenShingles]]'s body: the word `n`-grams of `text`, or one
+    * shingle of all its words when it has fewer than `n`. */
+  def shingles(text: UTF8String, n: Int): ArrayData = {
+    val w = new Words(text)
+    val out =
+      if (w.count >= n) {
+        val arr = new Array[Any](w.count - n + 1)
+        var i = 0
+        while (i < arr.length) {
+          arr(i) = w.join(i, n)
+          i += 1
+        }
+        arr
+      } else Array[Any](w.join(0, w.count))
+    new GenericArrayData(out)
+  }
+
+  /** The words of one text, as byte spans of its lowercased UTF-8.
+    * `lower()` maps ASCII to ASCII, and no byte of a UTF-8 multi-byte
+    * sequence is ASCII, so the words of an ASCII text are its alnum byte
+    * runs with A-Z folded to a-z, read in place. Any other text is
+    * lowered whole first, as `lower()` does: a few non-ASCII letters
+    * lower to ASCII ones (U+212A 'K' → "k", U+0130 'İ' → "i̇"). */
+  private final class Words(text: UTF8String) {
+    private val src: UTF8String =
+      if (text.isFullAscii) text
+      else UTF8String.fromString(lowerLikeSql(text.toString))
+    private var spans = new Array[Int](32) // start, end byte offset per word
+    var count = 0
+    scan()
+
+    private def scan(): Unit = {
+      val len = src.numBytes
+      var start = -1
+      var i = 0
+      while (i < len) {
+        if (isWordByte(src.getByte(i))) { if (start < 0) start = i }
+        else if (start >= 0) { add(start, i); start = -1 }
+        i += 1
+      }
+      if (start >= 0) add(start, len)
+    }
+
+    private def add(from: Int, until: Int): Unit = {
+      if (2 * count + 2 > spans.length) spans = java.util.Arrays.copyOf(spans, 2 * spans.length)
+      spans(2 * count) = from
+      spans(2 * count + 1) = until
+      count += 1
+    }
+
+    /** Words `from` until `from + k`, lowercased and joined by single
+      * spaces. */
+    def join(from: Int, k: Int): UTF8String = {
+      var size = math.max(k - 1, 0)
+      var w = from
+      while (w < from + k) {
+        size += spans(2 * w + 1) - spans(2 * w)
+        w += 1
+      }
+      val out = new Array[Byte](size)
+      var o = 0
+      w = from
+      while (w < from + k) {
+        if (w > from) { out(o) = ' '; o += 1 }
+        var b = spans(2 * w)
+        val end = spans(2 * w + 1)
+        while (b < end) {
+          val c = src.getByte(b)
+          out(o) = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+          o += 1
+          b += 1
+        }
+        w += 1
+      }
+      UTF8String.fromBytes(out)
+    }
+  }
+
+  private def isWordByte(c: Byte): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || (c >= 'A' && c <= 'Z')
 }
 
 object TextStats {

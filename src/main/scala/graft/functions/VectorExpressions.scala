@@ -536,9 +536,9 @@ case class NearestSeed(
       case (ArrayType(DoubleType, _), DoubleType,
             ArrayType(ArrayType(DoubleType, _), _), ArrayType(DoubleType, _)) =>
         TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
+      case _ => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires (array<double>, double, array<array<double>>, " +
-          s"array<double>), got $other")
+          s"array<double>), got ${children.map(_.dataType.catalogString).mkString(", ")}")
     }
 
   /** Spark Round(_, 6) on a double: BigDecimal HALF_UP for finite

@@ -763,9 +763,10 @@ private[graft] object DedupGates {
     * their own final SELECT. Assembled by CONCATENATION (not
     * interpolation inside stripMargin: the gopher fragment has '||'
     * continuation lines the outer margin strip would mangle — the
-    * q_filter_report note). */
-  /** Parameterized form: `docWhere` filters the documents feeding the
-    * synthesized pages. Since r20 both crawl gates run FULL-size
+    * q_filter_report note).
+    *
+    * `docWhere` filters the documents feeding the synthesized pages.
+    * Since r20 both crawl gates run FULL-size
     * (docWhere = "true"): the Spark side shares ONE chain invocation
     * between them (crawlStagesShared), so the r18/r19 half-slices —
     * which existed only to halve a 2× chain cost — are gone and each

@@ -119,9 +119,6 @@ private[graft] object Shared {
   def hexToLong(m: String, off: Int, n: Int) =
     s"list_sum(list_transform(range(1, ${n + 1}), i -> ${hexv(s"$m[i + ${off - 1}]")}::BIGINT * (1::BIGINT << (4*($n - i)))))"
 
-  /** Shared CTE chain of the boilerplate oracles: the deterministic
-    * nav/footer splice, per-source boiler-line sets, and the kept-line
-    * frame `j` — two finals read it (stats vs emitted text). */
   /** DuckDB replay of [[graft.ops.TextOps.boilerplateClean]]'s shared
     * frame over ANY prior CTE `src`(doc_id, source, text): emits CTEs
     * `bp_d` (trimmed non-empty lines) … `bp_j` (doc_id, source, lines,

@@ -352,7 +352,7 @@ private[graft] object StatsGates {
       // same membership exchange as the audit
       val d = docs(s, dir)
       def tokSet(src: String) = d.filter(col("source") === src)
-        .select(explode(TextOps.tokensNative(col("text"))).as("tok"))
+        .select(explode(TextOps.tokens(col("text"))).as("tok"))
       Sketches.kmvOverlap(tokSet("src1"), tokSet("src2"), "tok", k = 256)
     },
       s"""WITH ta AS (SELECT DISTINCT ${hexToLong("md5(tok)", 1, 8)} AS h

@@ -170,7 +170,7 @@ private[graft] object TextGates {
 
     Gate("q_simhash", (s, dir) =>
       docs(s, dir)
-        .select(col("doc_id"), TextOps.tokensNative(col("text")).as("toks"))
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
         .select(col("doc_id"), TextOps.simhash64(col("toks")).as("simhash")),
       s"""WITH toks_t AS (SELECT doc_id, $ToksSql AS toks FROM documents),
          |h_t AS (SELECT doc_id, list_transform(toks, t -> md5(t)) AS hashes FROM toks_t)
@@ -471,7 +471,7 @@ private[graft] object TextGates {
       // tokens as a flattened sample — the numbers budget/fertility/
       // packing math should run on
       val d = Scale.fanOutSmallScan(docs(s, dir), col("doc_id"))
-        .select(col("doc_id"), TextOps.tokensNative(col("text")).as("toks"))
+        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
         .select(col("doc_id"), size(col("toks")).as("n_words"),
           TextOps.bpeEncode(col("toks"), TextOps.BpeGateMerges).as("enc"))
       d.select(col("doc_id"), col("n_words"),
@@ -614,7 +614,7 @@ private[graft] object TextGates {
       // drift is vocabulary-dependent and sources differ
       val d = docs(s, dir)
         .select(col("source"),
-          TextOps.tokensNative(col("text")).as("toks"),
+          TextOps.tokens(col("text")).as("toks"),
           TextOps.tokenCountBpe(col("text")).cast("long").as("nt_est"))
         .select(col("source"), col("nt_est"),
           size(TextOps.bpeEncode(col("toks"), TextOps.BpeGateMerges))

@@ -376,7 +376,7 @@ object Dedup {
     val bands = maxHamming + 1
     val width = 64 / bands // last band absorbs the remainder
     val sigs = docs
-      .select(col(idCol).as("doc_id"), TextOps.tokensNative(col(textCol)).as("toks"))
+      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("toks"))
       .select(col("doc_id"), TextOps.simhash64(col("toks")).as("sig"))
       // the bit-string packed into two 32-bit longs: Hamming distance
       // becomes codegen'd xor + bit_count. SimHash band bits are

@@ -361,30 +361,6 @@ object Graph {
   }
 
   /**
-   * Triangle census of an undirected pair graph: node/edge counts,
-   * exact triangle count, wedge (open-triple) count and the global
-   * clustering coefficient 3·T / wedges — "how clique-y are the
-   * duplicate clusters" (boilerplate families triangle densely; chain
-   * duplications don't), the structural complement of [[pageRank]]'s
-   * centrality.
-   *
-   * Scale shape is the degree-ordered orientation (the standard
-   * distributed-triangle trick): each canonical edge points at its
-   * (deg, id)-larger endpoint, making the edge set a DAG where every
-   * triangle has EXACTLY ONE vertex with both out-edges — wedges
-   * enumerate per out-pair of that low-degree center, so the wedge
-   * join costs Σ outdeg² ≤ O(m^1.5) instead of the unoriented Σ deg²
-   * (a single celebrity hub with degree d would otherwise emit d²
-   * wedges; oriented, a hub is everyone ELSE's target and emits ~0).
-   * Closure is one equi semi-join back to the canonical edge set.
-   * All joins are hash-partitioned equi joins; the three 1-row stat
-   * frames cross-join at the end.
-   *
-   * Counts are exact integers; the coefficient is the only double
-   * (|GCC| ≤ 1, 6-dp round engine-safe). Empty graph → zero counts,
-   * NULL coefficient, no ANSI throw.
-   */
-  /**
    * PER-NODE triangle counts + local clustering coefficient
    * 2·T(v) / (deg(v)·(deg(v)−1)) — which nodes sit inside cliques
    * (template/boilerplate families) vs chains (incremental edits).
@@ -418,6 +394,30 @@ object Graph {
             (col("deg") * (col("deg") - 1L)).cast("double")), 6))
   }
 
+  /**
+   * Triangle census of an undirected pair graph: node/edge counts,
+   * exact triangle count, wedge (open-triple) count and the global
+   * clustering coefficient 3·T / wedges — "how clique-y are the
+   * duplicate clusters" (boilerplate families triangle densely; chain
+   * duplications don't), the structural complement of [[pageRank]]'s
+   * centrality.
+   *
+   * Scale shape is the degree-ordered orientation (the standard
+   * distributed-triangle trick): each canonical edge points at its
+   * (deg, id)-larger endpoint, making the edge set a DAG where every
+   * triangle has EXACTLY ONE vertex with both out-edges — wedges
+   * enumerate per out-pair of that low-degree center, so the wedge
+   * join costs Σ outdeg² ≤ O(m^1.5) instead of the unoriented Σ deg²
+   * (a single celebrity hub with degree d would otherwise emit d²
+   * wedges; oriented, a hub is everyone ELSE's target and emits ~0).
+   * Closure is one equi semi-join back to the canonical edge set.
+   * All joins are hash-partitioned equi joins; the three 1-row stat
+   * frames cross-join at the end.
+   *
+   * Counts are exact integers; the coefficient is the only double
+   * (|GCC| ≤ 1, 6-dp round engine-safe). Empty graph → zero counts,
+   * NULL coefficient, no ANSI throw.
+   */
   def triangleStats(pairs: DataFrame): DataFrame = {
     val (und, deg, oriented) = orientedEdges(pairs)
     // out-pairs of each center, each unordered {x, y} once (id order —

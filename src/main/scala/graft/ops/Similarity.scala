@@ -207,26 +207,6 @@ object Similarity {
   }
 
   /**
-   * Banded SRP (signed-random-projection) candidate pairs: each vector is
-   * signed against `planes` md5-seeded hyperplanes in ONE narrow
-   * projection, the sign string is cut into `planes / bandBits` bands,
-   * and candidates are the id pairs agreeing exactly on at least one
-   * band. Only (vec_id, band_key) rows shuffle — both self-join sides
-   * hang off the SAME repartition(band_key) exchange (ReuseExchange), so
-   * the signature pipeline runs once and the vectors themselves never
-   * move. A pair colliding in several bands is deduped.
-   *
-   * Scale: per band the join cost is Σ bucket², with 2^bandBits buckets
-   * per band — bounded cells, embarrassingly parallel, linear shuffle
-   * volume. The recall/pruning trade is set by (planes, bandBits) against
-   * the dup threshold: at cos ≥ 0.9 a 4-bit band agrees with
-   * p=(1-acos(.9)/π)⁴≈0.57 and the bulk near cos 0 with p≈0.06 — strong
-   * pruning; at a threshold deep in the bulk (0.4 on isotropic data) no
-   * sublinear scheme discriminates and recall must be bought with bands
-   * (64/4 here ⇒ measured 0.93 on the test corpus — see SimilaritySpec's
-   * recall audit vs the all-pairs truth).
-   */
-  /**
    * n-AWARE SRP BAND ARITY — the bucket-occupancy lever sized to the
    * corpus, so the near-dup/clustering family's DEFAULT survives a
    * scale-up instead of bending quadratic (the r16 sf1 soak measured
@@ -258,6 +238,26 @@ object Similarity {
           s"planes=$planes has no band arity in [4,16]")))
   }
 
+  /**
+   * Banded SRP (signed-random-projection) candidate pairs: each vector is
+   * signed against `planes` md5-seeded hyperplanes in ONE narrow
+   * projection, the sign string is cut into `planes / bandBits` bands,
+   * and candidates are the id pairs agreeing exactly on at least one
+   * band. Only (vec_id, band_key) rows shuffle — both self-join sides
+   * hang off the SAME repartition(band_key) exchange (ReuseExchange), so
+   * the signature pipeline runs once and the vectors themselves never
+   * move. A pair colliding in several bands is deduped.
+   *
+   * Scale: per band the join cost is Σ bucket², with 2^bandBits buckets
+   * per band — bounded cells, embarrassingly parallel, linear shuffle
+   * volume. The recall/pruning trade is set by (planes, bandBits) against
+   * the dup threshold: at cos ≥ 0.9 a 4-bit band agrees with
+   * p=(1-acos(.9)/π)⁴≈0.57 and the bulk near cos 0 with p≈0.06 — strong
+   * pruning; at a threshold deep in the bulk (0.4 on isotropic data) no
+   * sublinear scheme discriminates and recall must be bought with bands
+   * (64/4 here ⇒ measured 0.93 on the test corpus — see SimilaritySpec's
+   * recall audit vs the all-pairs truth).
+   */
   def srpCandidatePairs(corpus: DataFrame, planes: Int, bandBits: Int, dim: Int): DataFrame = {
     require(planes % bandBits == 0, s"planes $planes not a multiple of bandBits $bandBits")
     val bands = planes / bandBits
@@ -1428,30 +1428,6 @@ object Similarity {
   }
 
   /**
-   * EMBEDDING COVARIANCE MATRIX — the PCA/whitening prep step of an
-   * embedding pipeline (which dimensions carry variance? which are
-   * redundant? what rotation decorrelates them?): the population
-   * covariance cov(i, j) = (n·Σxᵢxⱼ − Σxᵢ·Σxⱼ)/n² for every i ≤ j of a
-   * d-dim vector column, in long form (i, j, n, cov).
-   *
-   * Elements are quantized to exact integers by SQL `round(x·scale)`
-   * (default millis; the quantization is the documented resolution —
-   * and the overflow headroom lever: at scale 10³ and unit-range
-   * embeddings, exact long sums survive ~10¹³ rows per dimension
-   * pair). All sums accumulate in ONE
-   * [[graft.functions.VectorOuterSum]] pass — O(d²) state per map
-   * task, never a d²-row explode per vector — and the covariance forms
-   * n·Σxᵢxⱼ − Σxᵢ·Σxⱼ entirely in exact decimal(38,0) before one
-   * fixed-order double division chain: engine-replayable to the bit.
-   * The d×d matrix itself is tiny (d ≤ a few hundred); eigen-solving
-   * it for the actual PCA rotation is a driver-side afterstep on
-   * d(d+1)/2 rows, not a distributed concern.
-   *
-   * Null vectors are ignored; empty input → empty output; a dimension
-   * mismatch between rows throws (the [[graft.functions.VectorMean]]
-   * contract).
-   */
-  /**
    * Cross-table ANN JOIN — "for every vector in LEFT, its best
    * matches from RIGHT": the retrieval-augmentation / cross-corpus
    * alignment shape (queries against a knowledge base, candidates
@@ -1525,6 +1501,30 @@ object Similarity {
       .drop(tmp, vecCol)
   }
 
+  /**
+   * EMBEDDING COVARIANCE MATRIX — the PCA/whitening prep step of an
+   * embedding pipeline (which dimensions carry variance? which are
+   * redundant? what rotation decorrelates them?): the population
+   * covariance cov(i, j) = (n·Σxᵢxⱼ − Σxᵢ·Σxⱼ)/n² for every i ≤ j of a
+   * d-dim vector column, in long form (i, j, n, cov).
+   *
+   * Elements are quantized to exact integers by SQL `round(x·scale)`
+   * (default millis; the quantization is the documented resolution —
+   * and the overflow headroom lever: at scale 10³ and unit-range
+   * embeddings, exact long sums survive ~10¹³ rows per dimension
+   * pair). All sums accumulate in ONE
+   * [[graft.functions.VectorOuterSum]] pass — O(d²) state per map
+   * task, never a d²-row explode per vector — and the covariance forms
+   * n·Σxᵢxⱼ − Σxᵢ·Σxⱼ entirely in exact decimal(38,0) before one
+   * fixed-order double division chain: engine-replayable to the bit.
+   * The d×d matrix itself is tiny (d ≤ a few hundred); eigen-solving
+   * it for the actual PCA rotation is a driver-side afterstep on
+   * d(d+1)/2 rows, not a distributed concern.
+   *
+   * Null vectors are ignored; empty input → empty output; a dimension
+   * mismatch between rows throws (the [[graft.functions.VectorMean]]
+   * contract).
+   */
   def embedCovariance(df: DataFrame, vecCol: String,
       scale: Int = 1000): DataFrame = {
     require(scale >= 1, s"scale must be >= 1, got $scale")

@@ -18,34 +18,26 @@ import org.apache.spark.sql.functions._
  */
 object TextOps {
 
-  /** Lowercase alnum word tokens. `regexp_extract_all` is codegen'd. */
+  /** Lowercase alnum word tokens: maximal `[a-z0-9]+` runs of
+    * `lower(text)` — graft's one word tokenizer, the codegen'd
+    * [[graft.functions.Tokenize]] kernel. */
   def tokens(text: Column): Column =
-    call_function("regexp_extract_all", lower(text), lit("[a-z0-9]+"), lit(0))
-
-  /** One-pass native tokenizer — identical output to [[tokens]]
-    * (spec-checked), ~3× faster per row; see
-    * [[graft.functions.Tokenize]]. */
-  def tokensNative(text: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.Tokenize(
         org.apache.spark.sql.graft.ColumnBridge.expression(text)))
 
-  /** Fused tokenize+n-shingle kernel — for n=3 identical output to
-    * `shingles3(tokens(text))` (spec-checked); one string walk instead of
-    * a regex scan plus an interpreted per-n-gram HOF. */
+  /** Alias of [[tokens]], kept because the benchmark harness
+    * (`perfbench`'s `Kernels`) calls it; no graft code does. */
+  def tokensNative(text: Column): Column = tokens(text)
+
+  /** Word n-shingles of [[tokens]] in one string walk: every run of `n`
+    * words joined by single spaces; documents with fewer than `n` words
+    * fall back to one shingle of the whole word list (so short docs still
+    * dedup). See [[graft.functions.TokenShingles]]. */
   def tokenShingles(text: Column, n: Int = 3): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.TokenShingles(
         org.apache.spark.sql.graft.ColumnBridge.expression(text), n))
-
-  /** Word 3-shingles; documents with <3 tokens fall back to one shingle of
-    * the whole token list (so short docs still dedup). */
-  def shingles3(toks: Column): Column = {
-    val tri = transform(
-      sequence(lit(1), size(toks) - 2),
-      i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))
-    when(size(toks) >= 3, tri).otherwise(array(concat_ws(" ", toks)))
-  }
 
   /** k-element MinHash signature (array of uint32-range longs) via the
     * one-md5-per-shingle Kirsch-Mitzenmacher family — see
@@ -71,42 +63,13 @@ object TextOps {
    * 64-bit SimHash as a 64-char '0'/'1' string (portable: no unsigned-long
    * headaches in any engine). Bit b is the sign of the vote
    * Σ_tokens (bit b of md5(token) set ? +1 : -1); bit b lives in hex digit
-   * b/4 (0-based) at bit position b%4. md5 is computed once per token; the
-   * per-bit work is substring + integer arithmetic only.
+   * b/4 (0-based) at bit position b%4. One md5 per token, in one pass —
+   * see [[graft.functions.SimHash64]].
    */
-  /** Native one-pass implementation — see [[graft.functions.SimHash64]];
-    * bit-identical to [[simhash64FromHashes]] (spec-checked). */
   def simhash64(toks: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.SimHash64(
         org.apache.spark.sql.graft.ColumnBridge.expression(toks)))
-
-  /** SimHash from a pre-materialized md5-hex array column. Callers should
-    * stage the hash array as its own projection: the 64 bit-votes each
-    * walk this expression, and HOFs get no codegen CSE — an attribute
-    * reference is O(1), an inline md5-map is a 64× recompute. */
-  def simhash64FromHashes(hashes: Column): Column = {
-    val bits = transform(sequence(lit(0), lit(63)), b => {
-      val pos = (b / 4).cast("int") + 1 // 1-based hex digit index
-      val bitPos = b % 4
-      // 2^bitPos without a dynamic shift (shiftright needs a literal)
-      val pow = when(bitPos === 0, 1).when(bitPos === 1, 2).when(bitPos === 2, 4).otherwise(8)
-      val vote = aggregate(
-        hashes,
-        lit(0),
-        (acc, h) => {
-          val digit = conv(h.substr(pos, lit(1)), 16, 10).cast("int")
-          val bit = (digit / pow).cast("int") % 2
-          acc + (bit * 2 - 1)
-        })
-      when(vote >= 0, lit("1")).otherwise(lit("0"))
-    })
-    concat_ws("", bits)
-  }
-
-  /** Stopword hit count (duplicates counted) — building block of langId. */
-  def stopwordHits(toks: Column, stopwords: Seq[String]): Column =
-    size(filter(toks, t => t.isin(stopwords: _*)))
 
   /** One-pass text statistics struct (token count, per-language stopword
     * hits, char/punct counts) — see [[graft.functions.TextStats]]. One
@@ -122,19 +85,10 @@ object TextOps {
   val FR_STOP: Seq[String] = Seq("le", "la", "de", "et", "les", "des", "en", "un", "du", "une")
   val DE_STOP: Seq[String] = Seq("der", "die", "und", "den", "das", "von", "zu", "mit", "sich", "des")
 
-  /** Stopword-voting language ID: argmax hit-count with fixed preference
-    * order en > es > fr > de; zero hits everywhere → "und". Declarative
-    * token-array form — [[langIdText]] is the one-pass kernel twin. */
-  def langId(toks: Column): Column = {
-    val en = stopwordHits(toks, EN_STOP)
-    val es = stopwordHits(toks, ES_STOP)
-    val fr = stopwordHits(toks, FR_STOP)
-    val de = stopwordHits(toks, DE_STOP)
-    langVote(en, es, fr, de)
-  }
-
-  /** langId straight from the text via the one-pass [[textStats]] kernel
-    * (identical result to `langId(tokens(text))`, spec-checked). */
+  /** Stopword-voting language ID straight from the text: argmax
+    * stopword hit count (duplicates counted) over the one-pass
+    * [[textStats]] kernel, with fixed preference order en > es > fr > de;
+    * zero hits everywhere → "und". */
   def langIdText(text: Column): Column = {
     val st = textStats(text)
     langVote(
@@ -169,7 +123,7 @@ object TextOps {
     length(text) - length(regexp_replace(text, cls, ""))
 
   /**
-   * CJK-aware language ID — the multilingual-crawl fix for [[langId]]:
+   * CJK-aware language ID — the multilingual-crawl fix for [[langIdText]]:
    * European-stopword voting classifies every CJK document `und` (and
    * whitespace tokenization gives it garbage token counts), which
    * poisons quality scores, budget selection and fertility reports
@@ -241,6 +195,20 @@ object TextOps {
     charClassCount(text, CjkClass) +
       tokenCountWs(regexp_replace(text, CjkClass, " "))
 
+  /** The five non-parameterized Gopher rule bounds (Rae et al. 2021
+    * App. A) — ONE copy consumed by the frame op, the streaming
+    * column op AND the DuckDB oracle fragment
+    * (graft.gates.Shared.gopherCtesSql), so a bound change cannot drift
+    * between the gate and its twins (the r15 advice item: three
+    * hardcoded copies, only minWords/maxWords spec-pinned). */
+  val GopherMeanLenMin = 3.0
+  val GopherMeanLenMax = 10.0
+  val GopherSymbolMax = 0.1
+  val GopherBulletMax = 0.9
+  val GopherEllipsisMax = 0.3
+  val GopherAlphaMin = 0.8
+  val GopherStopwordsMin = 2
+
   /**
    * GOPHER QUALITY-RULE battery (Rae et al. 2021, Appendix A) — the
    * standard per-document filter set run BEFORE dedup on a raw crawl;
@@ -256,20 +224,6 @@ object TextOps {
    * per-row codegen'd string work in the scan stage — no shuffle, no
    * state, every metric 6-dp rounded and engine-replayable.
    */
-  /** The five non-parameterized Gopher rule bounds (Rae et al. 2021
-    * App. A) — ONE copy consumed by the frame op, the streaming
-    * column op AND the DuckDB oracle fragment
-    * (graft.gates.Shared.gopherCtesSql), so a bound change cannot drift
-    * between the gate and its twins (the r15 advice item: three
-    * hardcoded copies, only minWords/maxWords spec-pinned). */
-  val GopherMeanLenMin = 3.0
-  val GopherMeanLenMax = 10.0
-  val GopherSymbolMax = 0.1
-  val GopherBulletMax = 0.9
-  val GopherEllipsisMax = 0.3
-  val GopherAlphaMin = 0.8
-  val GopherStopwordsMin = 2
-
   def gopherQualityFlags(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, minWords: Int = 20,
       maxWords: Int = 100000): org.apache.spark.sql.DataFrame = {
@@ -541,7 +495,7 @@ object TextOps {
 
   /**
    * HTML→TEXT extraction — the FIRST stage of a crawl pipeline, before
-   * any of [[boilerplate]]/[[gopherQualityFlags]]/[[langId]] applies:
+   * any of [[boilerplate]]/[[gopherQualityFlags]]/[[langIdText]] applies:
    * strip comments and CDATA, remove script/style/head/nav/footer/
    * aside WITH their contents (the main-content heuristic), turn
    * block-level tags into line breaks, drop remaining tags, decode the
@@ -601,20 +555,6 @@ object TextOps {
     // last; budgetSelect's -1 bucket).
     val punctRatio = when(st.getField("n_chars") > 0,
       st.getField("removed").cast("double") / st.getField("n_chars").cast("double"))
-    val lenScore = least(nToks, lit(100.0)) / lit(100.0)
-    round(lit(0.3) * lenScore + lit(0.4) * stopRatio + lit(0.3) * (lit(1.0) - punctRatio), 6)
-  }
-
-  /** The pre-kernel declarative quality score (regexp + HOF form) — kept
-    * as the parity reference for [[qualityScore]]'s spec. */
-  def qualityScoreDeclarative(text: Column): Column = {
-    val toks = tokens(text)
-    val nToks = size(toks).cast("double")
-    val stopRatio = when(nToks > 0, stopwordHits(toks, EN_STOP).cast("double") / nToks).otherwise(lit(0.0))
-    val cleaned = regexp_replace(lower(text), "[^a-z0-9\\s]", "")
-    // same ANSI-safe empty-text guard as the kernel form (spec parity)
-    val punctRatio = when(length(text) > 0,
-      (length(text) - length(cleaned)).cast("double") / length(text).cast("double"))
     val lenScore = least(nToks, lit(100.0)) / lit(100.0)
     round(lit(0.3) * lenScore + lit(0.4) * stopRatio + lit(0.3) * (lit(1.0) - punctRatio), 6)
   }
@@ -1009,7 +949,7 @@ object TextOps {
   def vocabOverlapMatrix(df: org.apache.spark.sql.DataFrame, stratumCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
     val st = df
-      .select(col(stratumCol).as("src"), explode(tokensNative(col(textCol))).as("tok"))
+      .select(col(stratumCol).as("src"), explode(tokens(col(textCol))).as("tok"))
       .select(col("src"), md5(col("tok")).as("h"))
       // repartition BEFORE the distinct: HashPartitioning(h) satisfies
       // the (src, h) clustering, so the dedup is partition-local on the
@@ -1076,7 +1016,7 @@ object TextOps {
       k: Int = 20): org.apache.spark.sql.DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val vocab = df
-      .select(explode(tokensNative(col(textCol))).as("w"))
+      .select(explode(tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
       // sequence(1, len-1) would run DESCENDING for 1-char words — guard
       .filter(length(col("w")) >= 2)
@@ -1119,7 +1059,7 @@ object TextOps {
   def bpeTrain(docs: org.apache.spark.sql.DataFrame, textCol: String,
       nMerges: Int): org.apache.spark.sql.DataFrame =
     bpeTrainFromWords(docs.select(
-      explode(tokensNative(col(textCol))).as("w")), nMerges)
+      explode(tokens(col(textCol))).as("w")), nMerges)
 
   /**
    * BYTE-LEVEL BPE training (GPT-2 family) — [[bpeTrain]] with the
@@ -1196,7 +1136,7 @@ object TextOps {
         .otherwise(lit(0.0))
     }
     Seq(
-      dupFrac(tokensNative(text)).as("dup_tok_frac"),
+      dupFrac(tokens(text)).as("dup_tok_frac"),
       dupFrac(tokenShingles(text, 2)).as("dup_2gram_frac"),
       dupFrac(tokenShingles(text, 3)).as("dup_3gram_frac"))
   }
@@ -1633,7 +1573,7 @@ object TextOps {
    *
    * The exploded (doc_id, token) stream feeds BOTH the vocab branch and
    * the per-doc join; without a staging exchange each consumer re-runs
-   * the scan + regex tokenize + explode (the cleanCorpus disease). One
+   * the scan + tokenize + explode (the cleanCorpus disease). One
    * token repartition makes the second consumer a ReusedExchange read —
    * tokenize runs once — and doubles as the vocab groupBy's own
    * partitioning, so it costs no extra shuffle at all. The vocab count
@@ -1660,23 +1600,6 @@ object TextOps {
   }
 
   /**
-   * Chunk-level dedup — the paragraph/boilerplate-removal shape: split
-   * each document into fixed `chunkTokens`-token chunks, hash each
-   * chunk, keep ONE occurrence of each distinct chunk corpus-wide
-   * (global keep-first by (doc_id, idx) — repeated boilerplate survives
-   * exactly once, including within-document repeats), and report per
-   * document how many of its chunks survive. Returns
-   * (doc_id, n_chunks, n_kept); documents shorter than one chunk are
-   * dropped (mirrored by the oracle's empty range).
-   *
-   * Scale shape: chunk rows are (doc_id, idx, md5) — the TEXT never
-   * shuffles. One repartition(h) stages the chunk stream for BOTH the
-   * winner aggregate (which needs no further exchange) and the
-   * co-partitioned join back (ReusedExchange), then one combinable
-   * per-doc count. Winner selection is min(struct(doc_id, idx)) —
-   * deterministic under any partitioning.
-   */
-  /**
    * Overlapping chunk windows with stride — the RAG/context-prep
    * chunker: token windows of `chunkTokens` starting every `stride`
    * tokens (stride < chunkTokens ⇒ overlap), one row per chunk with
@@ -1684,7 +1607,7 @@ object TextOps {
    * doc with fewer than `stride` tokens yields exactly one chunk.
    * The token array materializes ONCE per doc before the Generate
    * (same staging as [[chunkDedup]] — verified not inlined), so the
-   * tokenizer regex never re-runs per chunk; everything downstream is
+   * tokenizer never re-runs per chunk; everything downstream is
    * codegen'd slicing. Contract: starts = 0, stride, 2·stride … < n.
    */
   def chunkStride(docs: org.apache.spark.sql.DataFrame, idCol: String,
@@ -1702,6 +1625,23 @@ object TextOps {
         expr(s"array_join(slice(tk, start + 1, $chunkTokens), ' ')").as("chunk"))
   }
 
+  /**
+   * Chunk-level dedup — the paragraph/boilerplate-removal shape: split
+   * each document into fixed `chunkTokens`-token chunks, hash each
+   * chunk, keep ONE occurrence of each distinct chunk corpus-wide
+   * (global keep-first by (doc_id, idx) — repeated boilerplate survives
+   * exactly once, including within-document repeats), and report per
+   * document how many of its chunks survive. Returns
+   * (doc_id, n_chunks, n_kept); documents shorter than one chunk are
+   * dropped (mirrored by the oracle's empty range).
+   *
+   * Scale shape: chunk rows are (doc_id, idx, md5) — the TEXT never
+   * shuffles. One repartition(h) stages the chunk stream for BOTH the
+   * winner aggregate (which needs no further exchange) and the
+   * co-partitioned join back (ReusedExchange), then one combinable
+   * per-doc count. Winner selection is min(struct(doc_id, idx)) —
+   * deterministic under any partitioning.
+   */
   def chunkDedup(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, chunkTokens: Int): org.apache.spark.sql.DataFrame = {
     require(chunkTokens >= 1, s"chunkTokens must be >= 1, got $chunkTokens")
@@ -2086,11 +2026,6 @@ object TextOps {
           x => x.getField("id")).as("postings"))
       .filter(col("df") >= minDf)
 
-  /** URL decomposition for web-corpus provenance stats — host (without
-    * port), port (null if absent), path, query string. Pure
-    * regexp_extract (codegen'd, narrow, oracle-replayable); empty
-    * captures → null to match SQL NULLIF semantics. Per-domain grouping
-    * over these is the CCNet-style provenance roll-up. */
   /**
    * Zipf rank-frequency fit over the corpus vocabulary: the log-log
    * regression slope of frequency against rank for the top-K terms — a
@@ -2512,7 +2447,7 @@ object TextOps {
     // this kernel weight; the train/classify wins came from the
     // trainNaiveBayes checkpoint and the classify-side fan-out instead.
     val tl = docs.select(col(labelCol).as("label"),
-        explode(tokensNative(col(textCol))).as("token"))
+        explode(tokens(col(textCol))).as("token"))
       .groupBy(col("label"), col("token"))
       .agg(count(lit(1)).as("c"))
       .select(col("label"), col("token"), lit("tok").as("kind"), col("c"))
@@ -2585,7 +2520,7 @@ object TextOps {
     // the ×|labels| scoring joins (identity on real scans)
     val dt = graft.ops.Scale.fanOutSmallScan(docs, col(idCol))
       .select(col(idCol).as("doc_id"),
-        explode(tokensNative(col(textCol))).as("token"))
+        explode(tokens(col(textCol))).as("token"))
     val scored = dt
       .crossJoin(broadcast(priors.select(col("label"))))
       .join(tokW, Seq("label", "token"), "left")
@@ -2632,6 +2567,11 @@ object TextOps {
       .filter(col("canonical_url").rlike("^[a-z]+://."))
       .distinct()
 
+  /** URL decomposition for web-corpus provenance stats — host (without
+    * port), port (null if absent), path, query string. Pure
+    * regexp_extract (codegen'd, narrow, oracle-replayable); empty
+    * captures → null to match SQL NULLIF semantics. Per-domain grouping
+    * over these is the CCNet-style provenance roll-up. */
   def urlParts(url: Column): Seq[Column] = {
     def part(re: String, as: String) =
       nullif(regexp_extract(url, re, 1), lit("")).as(as)
@@ -2674,13 +2614,6 @@ object TextOps {
       when(keptQuery === "", lit("")).otherwise(concat(lit("?"), keptQuery)))
   }
 
-  /**
-   * URL-level dedup over [[canonicalUrl]]: one row per canonical form
-   * with its duplicate count and representative (min id) — the crawl
-   * frontier's "have I fetched this page already" reduction. One
-   * map-side-combinable aggregate; the canonicalization runs inside
-   * the scan stage. Null URLs are excluded by contract.
-   */
   /**
    * CRAWL FETCH SCHEDULING — per-domain politeness waves: a frontier
    * that fetches more than one URL per host per scheduling round
@@ -2763,6 +2696,13 @@ object TextOps {
         col("rule_prefix"))
   }
 
+  /**
+   * URL-level dedup over [[canonicalUrl]]: one row per canonical form
+   * with its duplicate count and representative (min id) — the crawl
+   * frontier's "have I fetched this page already" reduction. One
+   * map-side-combinable aggregate; the canonicalization runs inside
+   * the scan stage. Null URLs are excluded by contract.
+   */
   def urlDedup(df: org.apache.spark.sql.DataFrame, idCol: String,
       urlCol: String): org.apache.spark.sql.DataFrame =
     df.filter(col(urlCol).isNotNull)

@@ -330,7 +330,6 @@ object Warc {
           org.apache.spark.sql.types.BinaryType))))
       .load(path))
 
-  /** Shared batch/streaming parse body: binaryFile rows → records. */
   /** HTTP status from a response's header block's first line
     * ("HTTP/1.1 200 OK" → 200); -1 when absent (non-response records,
     * headerless captures, unparseable status lines). */
@@ -343,6 +342,7 @@ object Warc {
   private val StatusLine =
     java.util.regex.Pattern.compile("HTTP/[0-9.]+[ \\t]+([0-9]{3}).*")
 
+  /** Shared batch/streaming parse body: binaryFile rows → records. */
   private def recordsFrom(spark: SparkSession, files: DataFrame): DataFrame = {
     import spark.implicits._
     val parsed = files.select(col("path"), col("content"))

@@ -81,7 +81,7 @@ object BpeVocabProbe {
     // production-vocabulary fertility + budget-audit shapes on the REAL corpus
     val d = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("source"),
-        TextOps.tokensNative(col("text")).as("toks"),
+        TextOps.tokens(col("text")).as("toks"),
         TextOps.tokenCountBpe(col("text")).cast("long").as("nt_est"))
       .select(col("source"), col("nt_est"), size(col("toks")).as("n_words"),
         size(TextOps.bpeEncode(col("toks"), full)).cast("long").as("nt_real"))

@@ -3,10 +3,13 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Events
+
 /** Shared plumbing for the dev-only scale probes (ScaleStress,
   * Scale100Probe, Sf1Soak, RefitProbe) — one definition of wall-clock
-  * timing, noop materialization, id-offset replication and the
-  * build-once parquet cache, instead of a copy per tool. */
+  * timing, noop materialization, id-offset replication, the build-once
+  * parquet cache, the case filter and the event-join cases, instead of
+  * a copy per tool. */
 object ProbeSupport {
 
   /** Wall-clock a block and print `[tag] label  N.NN s`. */
@@ -44,4 +47,53 @@ object ProbeSupport {
       mk.write.mode("overwrite").parquet(path)
     spark.read.parquet(path)
   }
+
+  /** A named probe case over one input frame. */
+  private[tools] type Case = (String, DataFrame => DataFrame)
+
+  /** `cases` narrowed to the comma-separated case names of a probe's
+    * optional third argument; all of them when it is absent. */
+  private[tools] def keep[A](args: Array[String], cases: Seq[(String, A)]): Seq[(String, A)] =
+    if (args.length <= 2) cases
+    else {
+      val only = args(2).split(",").toSet
+      cases.filter { case (n, _) => only(n) }
+    }
+
+  /** The event-join cases of the ×10 and ×100 probes, clicks against
+    * purchases on µs time: the as-of join, the forward label window, the
+    * SCD2 point-in-time join and the backward banded attribution with
+    * its bounded per-conversion windows. */
+  private[tools] val eventJoinCases: Seq[Case] = Seq(
+    "asof_join" -> (e => {
+      val c = e.filter(col("event_type") === "click")
+        .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
+      val p = e.filter(col("event_type") === "purchase")
+        .groupBy(col("user_id"), expr("ts div 1000L").as("tsu"))
+        .agg(round(max(col("value")), 6).as("pvalue"))
+      Events.asOfJoin(c, p, "user_id", "tsu", Seq("pvalue"))
+    }),
+    "label_window" -> (e => {
+      val c = e.filter(col("event_type") === "click")
+        .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
+      val p = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("value"))
+      Events.labelWindow(c, p, "user_id", "tsu", "event_id", "value",
+        86400000000L)
+    }),
+    "point_in_time" -> (e => {
+      val dim = Events.scd2Intervals(e).filter(col("event_type") === "purchase")
+      val c = e.filter(col("event_type") === "click")
+        .select(col("event_id"), col("user_id"), expr("ts div 1000L").as("tsu"))
+      Events.pointInTimeJoin(c, dim, "user_id", "tsu", Seq("value"))
+    }),
+    "attribution" -> (e => {
+      val touches = e.filter(col("event_type") === "click")
+        .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
+      val convs = e.filter(col("event_type") === "purchase")
+        .select(col("user_id"), expr("ts div 1000L").as("tsu"),
+          col("event_id").as("conv_id"), col("value"))
+      Events.attribution(touches, convs, "user_id", "tsu", "event_id",
+        "conv_id", "value", 86400000000L)
+    }))
 }

@@ -28,10 +28,8 @@ object Scale100Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_scale100"
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
-    def keep[A](cs: Seq[(String, A)]): Seq[(String, A)] =
-      if (only.isEmpty) cs else cs.filter { case (n, _) => only(n) }
+    // optional third argument: comma-separated case names to run
+    def keep[A](cs: Seq[(String, A)]): Seq[(String, A)] = ProbeSupport.keep(args, cs)
     val spark = GraftSession.local()
 
     def replicate(df: DataFrame, idCols: Seq[String], n: Int): DataFrame =
@@ -68,41 +66,11 @@ object Scale100Probe {
       ProbeSupport.time("scale100", label)(f)
     def noop(df: DataFrame): Unit = ProbeSupport.noop(df)
 
-    val eventCases: Seq[(String, DataFrame => DataFrame)] = Seq(
-      "sessionize" -> (e => Events.sessionize(e)),
-      "asof_join" -> (e => {
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
-        val p = e.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), expr("ts div 1000L").as("tsu"))
-          .agg(round(max(col("value")), 6).as("pvalue"))
-        Events.asOfJoin(c, p, "user_id", "tsu", Seq("pvalue"))
-      }),
-      "label_window" -> (e => {
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
-        val p = e.filter(col("event_type") === "purchase")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("value"))
-        Events.labelWindow(c, p, "user_id", "tsu", "event_id", "value",
-          86400000000L)
-      }),
-      "point_in_time" -> (e => {
-        val dim = Events.scd2Intervals(e).filter(col("event_type") === "purchase")
-        val c = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), expr("ts div 1000L").as("tsu"))
-        Events.pointInTimeJoin(c, dim, "user_id", "tsu", Seq("value"))
-      }),
-      // r13 wave: backward banded join; key-partitioned gap windows;
-      // path mining with the pre-collection cut
-      "attribution" -> (e => {
-        val touches = e.filter(col("event_type") === "click")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
-        val convs = e.filter(col("event_type") === "purchase")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"),
-            col("event_id").as("conv_id"), col("value"))
-        Events.attribution(touches, convs, "user_id", "tsu", "event_id",
-          "conv_id", "value", 86400000000L)
-      }),
+    val eventCases: Seq[(String, DataFrame => DataFrame)] = Seq[ProbeSupport.Case](
+      "sessionize" -> (e => Events.sessionize(e))) ++
+      ProbeSupport.eventJoinCases ++ Seq[ProbeSupport.Case](
+      // r13 wave: key-partitioned gap windows; path mining with the
+      // pre-collection cut
       "interarrival" -> (e => Events.interArrival(e)),
       "top_paths" -> (e => Events.topPaths(e)),
       // r13 wave 3: the session aggregate's per-partition session sort

@@ -19,11 +19,8 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_scale"
-    // optional: comma-separated case names — run only those probes
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
-    def keep[A](cs: Seq[(String, A)]): Seq[(String, A)] =
-      if (only.isEmpty) cs else cs.filter { case (n, _) => only(n) }
+    // optional third argument: comma-separated case names to run
+    def keep[A](cs: Seq[(String, A)]): Seq[(String, A)] = ProbeSupport.keep(args, cs)
     val spark = GraftSession.local()
     import spark.implicits._
 
@@ -189,7 +186,7 @@ object ScaleStress {
     // event-time suite on 10× USERS (same per-key density): these are
     // all key-partitioned windows / banded equi-joins, so wall should
     // track input, never key-count² — the r10-broken suite's scale proof
-    val eventCases: Seq[(String, DataFrame => DataFrame)] = Seq(
+    val eventCases: Seq[(String, DataFrame => DataFrame)] = Seq[ProbeSupport.Case](
       // r14: distinct-score collapse + bucket-partitioned rank windows
       "auc" -> (e => graft.ops.Stats.aucRoc(
         e.withColumn("label", (col("event_type") === "purchase").cast("int")),
@@ -227,40 +224,8 @@ object ScaleStress {
       "anomaly_bands" -> (e => graft.ops.Events.anomalyBands(e, 3.0, 14, 7)),
       // r14: user first-day agg + user equi-join + (cohort, age) frame
       "cohort_ltv" -> (e => graft.ops.Events.cohortLtv(e, "purchase", 28)),
-      "sessionize" -> (e => graft.ops.Events.sessionize(e)),
-      "asof_join" -> (e => {
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
-        val p = e.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), expr("ts div 1000L").as("tsu"))
-          .agg(round(max(col("value")), 6).as("pvalue"))
-        graft.ops.Events.asOfJoin(c, p, "user_id", "tsu", Seq("pvalue"))
-      }),
-      "label_window" -> (e => {
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
-        val p = e.filter(col("event_type") === "purchase")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("value"))
-        graft.ops.Events.labelWindow(c, p, "user_id", "tsu", "event_id",
-          "value", 86400000000L)
-      }),
-      "point_in_time" -> (e => {
-        val dim = graft.ops.Events.scd2Intervals(e)
-          .filter(col("event_type") === "purchase")
-        val c = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), expr("ts div 1000L").as("tsu"))
-        graft.ops.Events.pointInTimeJoin(c, dim, "user_id", "tsu", Seq("value"))
-      }),
-      // r13: backward banded join + bounded per-conversion windows
-      "attribution" -> (e => {
-        val touches = e.filter(col("event_type") === "click")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"), col("event_id"))
-        val convs = e.filter(col("event_type") === "purchase")
-          .select(col("user_id"), expr("ts div 1000L").as("tsu"),
-            col("event_id").as("conv_id"), col("value"))
-        graft.ops.Events.attribution(touches, convs, "user_id", "tsu",
-          "event_id", "conv_id", "value", 86400000000L)
-      }),
+      "sessionize" -> (e => graft.ops.Events.sessionize(e))) ++
+      ProbeSupport.eventJoinCases ++ Seq[ProbeSupport.Case](
       // r13: one user exchange for lag + rank + agg
       "interarrival" -> (e => graft.ops.Events.interArrival(e)),
       // r13: maxSteps cut BEFORE collection is what 10× users exercises

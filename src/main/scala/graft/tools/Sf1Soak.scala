@@ -28,10 +28,8 @@ object Sf1Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
-    def keep[A](cs: Seq[(String, A)]): Seq[(String, A)] =
-      if (only.isEmpty) cs else cs.filter { case (n, _) => only(n) }
+    // optional third argument: comma-separated case names to run
+    def keep[A](cs: Seq[(String, A)]): Seq[(String, A)] = ProbeSupport.keep(args, cs)
     val spark = GraftSession.local()
 
     val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")

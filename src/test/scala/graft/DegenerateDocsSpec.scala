@@ -31,7 +31,7 @@ class DegenerateDocsSpec extends AnyFunSuite {
     val out = zoo.select(
         col("doc_id"),
         TextOps.qualityScore(col("text")).as("q"),
-        TextOps.qualityScoreDeclarative(col("text")).as("qd"),
+        DeclarativeText.qualityScoreDeclarative(col("text")).as("qd"),
         TextOps.langIdText(col("text")).as("lang"),
         TextOps.tokenCountWs(col("text")).as("tws"),
         TextOps.tokenCountBpe(col("text")).as("tbpe"),

@@ -88,7 +88,7 @@ class KernelTypeCheckSpec extends AnyFunSuite {
       Seq(RandomProjection(dbls, 4, 2), RandomProjection(dblsNoNull, 4, 2))),
     (NearestSeed(dbls, dbl, int, dbls),
       "graft_nearest_seed requires (array<double>, double, array<array<double>>, array<double>), " +
-        "got (ArrayType(DoubleType,true),DoubleType,IntegerType,ArrayType(DoubleType,true))",
+        "got array<double>, double, int, array<double>",
       Seq(NearestSeed(dbls, dbl, of(ArrayType(ArrayType(DoubleType))), dbls))),
     (ArrayDivScalar(dbls, int), "graft_array_div requires (array<double>, double), got array<double>, int",
       Seq(ArrayDivScalar(dbls, dbl))),

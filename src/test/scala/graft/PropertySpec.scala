@@ -97,7 +97,7 @@ class PropertySpec extends AnyFunSuite {
       val text = Seq.fill(1 + rnd.nextInt(30))(randWord()).mkString(" ")
       val got = Seq(text).toDF("text")
         .select(graft.ops.TextOps.minhashSignature(
-          graft.ops.TextOps.shingles3(graft.ops.TextOps.tokens($"text")), 8).as("sig"))
+          DeclarativeText.shingles3(graft.ops.TextOps.tokens($"text")), 8).as("sig"))
         .collect().head.getSeq[Long](0)
       assert(got == sigOf(text), s"text=$text")
     }
@@ -108,26 +108,41 @@ class PropertySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val alphabet = "abcXYZ0189 \t\n.,;!?-_@#ñé€()[]\"'"
     def randText() = Seq.fill(rnd.nextInt(120))(alphabet(rnd.nextInt(alphabet.length))).mkString
-    val texts = Seq.fill(60)(randText()).filter(_.nonEmpty)
-    val r = texts.toDF("text").select(
-      TextOps.tokensNative($"text").as("tn"),
-      TextOps.tokens($"text").as("td"),
-      TextOps.tokenShingles($"text").as("s3n"),
-      TextOps.shingles3(TextOps.tokens($"text")).as("s3d"),
-      TextOps.tokenShingles($"text", 2).as("s2n"),
-      TextOps.qualityScore($"text").as("qk"),
-      TextOps.qualityScoreDeclarative($"text").as("qd"),
-      TextOps.langIdText($"text").as("lk"),
-      TextOps.langId(TextOps.tokens($"text")).as("ld")).collect()
-    r.foreach { row =>
+    val texts = Seq.fill(60)(randText()).filter(_.nonEmpty) ++ Seq(
+      null, "", "\u212Aelvin 5\u212A", "Straße ß", "ΣΑΣ abc", "１２ 12", "emoji😀mid 🙂x",
+      ("Alpha beta GAMMA 42, " * 5000).take(100000),
+      ("Straße İx \u212Ay 😀 " * 7000).take(100000))
+    val modes = SparkTestSession.inCodegenModes {
+      spark.sparkContext.parallelize(texts, 3).toDF("text")
+        .select($"text", DeclarativeText.tokens($"text").as("td"))
+        // staged: a tokenizer inlined into the HOF's lambda re-runs per element
+        .select(
+        TextOps.tokens($"text").as("tn"),
+        $"td",
+        TextOps.tokenShingles($"text").as("s3n"),
+        DeclarativeText.shingles3($"td").as("s3d"),
+        TextOps.tokenShingles($"text", 2).as("s2n"),
+        TextOps.qualityScore($"text").as("qk"),
+        DeclarativeText.qualityScoreDeclarative($"text").as("qd"),
+        TextOps.langIdText($"text").as("lk"),
+        DeclarativeText.langId(DeclarativeText.tokens($"text")).as("ld"),
+        $"text").collect().toSeq
+    }
+    assert(modes(0) == modes(1), "generated and interpreted results differ")
+    modes.flatten.foreach { row =>
       assert(row.getSeq[String](0) == row.getSeq[String](1), s"tokens: $row")
-      assert(row.getSeq[String](2) == row.getSeq[String](3), s"shingles3: $row")
-      val toks = row.getSeq[String](0)
-      val bigrams = if (toks.size >= 2) toks.sliding(2).map(_.mkString(" ")).toSeq
-        else Seq(toks.mkString(" "))
-      assert(row.getSeq[String](4) == bigrams, s"bigrams: $row")
-      assert(row.getDouble(5) == row.getDouble(6), s"quality: $row")
-      assert(row.getString(7) == row.getString(8), s"langid: $row")
+      assert(row.get(5) == row.get(6), s"quality: $row")
+      assert(row.get(7) == row.get(8), s"langid: $row")
+      if (row.isNullAt(9)) {
+        // NULL in, NULL out; the HOF form makes one empty shingle
+        assert(row.isNullAt(2) && row.isNullAt(4) && row.getSeq[String](3) == Seq(""), s"NULL: $row")
+      } else {
+        assert(row.getSeq[String](2) == row.getSeq[String](3), s"shingles3: $row")
+        val toks = row.getSeq[String](0)
+        val bigrams = if (toks.size >= 2) toks.sliding(2).map(_.mkString(" ")).toSeq
+          else Seq(toks.mkString(" "))
+        assert(row.getSeq[String](4) == bigrams, s"bigrams: $row")
+      }
     }
   }
 

@@ -46,4 +46,17 @@ object SparkTestSession {
     } finally sc.removeSparkListener(listener)
     keys.map(k => k -> Option(counts.get(k)).fold(0)(_.get)).toMap
   }
+
+  /** `body`'s result with generated code only (whole-stage codegen on),
+    * then interpreted only (whole-stage codegen off), as RoundRewriteSpec
+    * runs its cases. Build the input from an RDD: a projection over a
+    * local relation is folded by the optimizer, which always interprets. */
+  def inCodegenModes[T](body: => T): Seq[T] =
+    Seq(true, false).map { codegen =>
+      val conf = Seq(
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
+        "spark.sql.codegen.wholeStage" -> codegen.toString)
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
 }

@@ -19,7 +19,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("shingles3: trigrams, short-doc fallback") {
     val df = Seq("a b c d", "a b").toDF("text")
-      .select(TextOps.shingles3(TextOps.tokens($"text")).as("sh"))
+      .select(DeclarativeText.shingles3(TextOps.tokens($"text")).as("sh"))
     val rows = df.collect().map(_.getSeq[String](0))
     assert(rows(0) == Seq("a b c", "b c d"))
     assert(rows(1) == Seq("a b"))
@@ -27,7 +27,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("minhash signature: Kirsch-Mitzenmacher family from md5 halves") {
     val df = Seq("x y z w").toDF("text")
-      .select(TextOps.minhashSignature(TextOps.shingles3(TextOps.tokens($"text")), 4).as("sig"))
+      .select(TextOps.minhashSignature(DeclarativeText.shingles3(TextOps.tokens($"text")), 4).as("sig"))
     val sig = one(df).getSeq[Long](0)
     assert(sig.length == 4)
     // replay: a/b = unsigned 32-bit halves of md5(s); h_j = (a + j*b) & 2^32-1
@@ -51,7 +51,7 @@ class TextOpsSpec extends AnyFunSuite {
       (3L, "completely unrelated words about database engines and shuffles")).toDF("id", "text")
     val sh = docs
       .select($"id", TextOps.tokens($"text").as("toks"))
-      .select($"id", TextOps.simhash64FromHashes(transform($"toks", t => md5(t))).as("s"))
+      .select($"id", DeclarativeText.simhash64FromHashes(transform($"toks", t => md5(t))).as("s"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(sh.values.forall(s => s.length == 64 && s.forall(c => c == '0' || c == '1')))
     def ham(a: String, b: String) = a.zip(b).count { case (x, y) => x != y }
@@ -66,7 +66,7 @@ class TextOpsSpec extends AnyFunSuite {
       .select(TextOps.tokens($"text").as("toks"))
     val both = docs.select(
       TextOps.simhash64($"toks").as("native"),
-      TextOps.simhash64FromHashes(transform($"toks", t => md5(t))).as("hof"))
+      DeclarativeText.simhash64FromHashes(transform($"toks", t => md5(t))).as("hof"))
     both.collect().foreach(r => assert(r.getString(0) == r.getString(1)))
   }
 
@@ -77,7 +77,7 @@ class TextOpsSpec extends AnyFunSuite {
       "le chat et le chien dans les des maisons du",
       "der hund und die katze von den das haus",
       "zzz qqq xxx").toDF("text")
-      .select(TextOps.langId(TextOps.tokens($"text")).as("l"))
+      .select(DeclarativeText.langId(TextOps.tokens($"text")).as("l"))
     assert(df.collect().map(_.getString(0)).toSeq == Seq("en", "es", "fr", "de", "und"))
   }
 
@@ -252,11 +252,11 @@ class TextOpsSpec extends AnyFunSuite {
     val df = texts.toDF("text")
     val r = df.select(
       TextOps.qualityScore($"text").as("qk"),
-      TextOps.qualityScoreDeclarative($"text").as("qd"),
+      DeclarativeText.qualityScoreDeclarative($"text").as("qd"),
       TextOps.langIdText($"text").as("lk"),
-      TextOps.langId(TextOps.tokens($"text")).as("ld"),
+      DeclarativeText.langId(DeclarativeText.tokens($"text")).as("ld"),
       TextOps.textStats($"text").getField("n_toks").as("nt"),
-      size(TextOps.tokens($"text")).as("ntd")).collect()
+      size(DeclarativeText.tokens($"text")).as("ntd")).collect()
     r.foreach { row =>
       assert(row.getDouble(0) == row.getDouble(1), s"quality mismatch: $row")
       assert(row.getString(2) == row.getString(3), s"langid mismatch: $row")
@@ -270,18 +270,38 @@ class TextOpsSpec extends AnyFunSuite {
       "one two",
       "x",
       "",
+      null,
       "  punct...only!!!  ",
       "İstanbul DİX", // multi-char lowercase mapping İ → i̇
-      "a b c d e f g h")
-    val df = texts.toDF("text")
-    val r = df.select(
-      TextOps.tokensNative($"text").as("tn"),
-      TextOps.tokens($"text").as("td"),
-      TextOps.tokenShingles($"text").as("sn"),
-      TextOps.shingles3(TextOps.tokens($"text")).as("sd")).collect()
-    r.foreach { row =>
-      assert(row.getSeq[String](0) == row.getSeq[String](1), s"tokens mismatch: $row")
-      assert(row.getSeq[String](2) == row.getSeq[String](3), s"shingles mismatch: $row")
+      "\u212Aelvin 5\u212A", // the Kelvin sign lowercases to ASCII k
+      "Straße STRASSE ß",
+      "ΣΑΣ ΟΔΟΣ abc", // final-sigma lowering
+      "１２ 12 ab１２cd", // fullwidth digits are not [0-9]
+      "emoji😀mid 🙂x \uD83D\uDE00", // surrogate pairs
+      "a b c d e f g h",
+      ("Alpha beta GAMMA 42, " * 5000).take(100000),
+      ("Straße İx \u212Ay 😀 " * 7000).take(100000))
+    val modes = SparkTestSession.inCodegenModes {
+      spark.sparkContext.parallelize(texts, 3).toDF("text").select(
+        $"text",
+        TextOps.tokens($"text").as("tn"),
+        DeclarativeText.tokens($"text").as("td"),
+        TextOps.tokenShingles($"text").as("sn"))
+        // staged: a tokenizer inlined into the HOF's lambda re-runs per element
+        .select($"*", DeclarativeText.shingles3($"td").as("sd")).collect().toSeq
+    }
+    assert(modes(0) == modes(1), "generated and interpreted results differ")
+    modes.foreach { r =>
+      assert(r.map(_.getString(0)) == texts)
+      r.foreach { row =>
+        assert(row.getSeq[String](1) == row.getSeq[String](2), s"tokens mismatch: $row")
+        if (row.isNullAt(0)) {
+          // NULL in, NULL out; the HOF form makes one empty shingle
+          assert(row.isNullAt(3) && row.getSeq[String](4) == Seq(""), s"NULL text: $row")
+        } else {
+          assert(row.getSeq[String](3) == row.getSeq[String](4), s"shingles mismatch: $row")
+        }
+      }
     }
     // n=2 bigrams, incl. the <n fallback
     val bg = Seq("a b c", "only").toDF("text")
