@@ -6,9 +6,19 @@ row-sorted) against the Spark parquet dumps from graft.Verify.
     python3 dev/compare_oracle.py [sf dir] [verify out dir] [gate,gate,...]
 
 Exits 0 when every checked gate passes, 1 when one fails or none was
-checked, 2 when a named gate is not in the dump's oracle_sql.json."""
+checked, 2 when a named gate is not in the dump's oracle_sql.json.
+
+    python3 dev/compare_oracle.py [sf dir] <verify out dir> --against <other verify out dir> [gate,...]
+
+compares two Verify dumps instead (say, of a change and of its parent),
+with no oracle run and the sf dir unread: each gate's rows go through the
+same `canon` on both sides. It prints one line per gate whose columns or
+rows differ, or that only one side dumped, and exits 0 when every gate
+dumped on either side holds the same rows, 1 otherwise (or when no gate
+was compared), 2 on a usage error or an unknown gate name."""
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -34,7 +44,63 @@ def canon(rows, cols):
     return sorted(out), [cols[i] for i in order]
 
 
+def dump_rows(con, out_dir, name):
+    """(canonical rows, sorted columns) of one gate's Verify dump."""
+    d = con.execute(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
+    return canon(d.fetchall(), [c[0] for c in d.description])
+
+
+def against_main(args):
+    i = args.index("--against")
+    if i + 1 >= len(args):
+        print("--against needs a Verify output dir")
+        return 2
+    other = args[i + 1]
+    pos = args[:i] + args[i + 2:]
+    if not 1 <= len(pos) <= 3:
+        print("usage: compare_oracle.py [sf dir] <verify out dir> "
+              "--against <other verify out dir> [gate,...]")
+        return 2
+    out_dir = pos[1] if len(pos) > 1 else pos[0]
+    only = pos[2].split(",") if len(pos) > 2 else None
+    names = set()
+    for d in (out_dir, other):
+        names |= set(json.load(open(f"{d}/oracle_sql.json")))
+    unknown = sorted(set(only or []) - names)
+    if unknown:
+        print(f"no such gate: {', '.join(unknown)}")
+        return 2
+    con = duckdb.connect()
+    n_same = n_diff = 0
+    for name in sorted(set(only) if only else names):
+        dumped = [os.path.isdir(f"{d}/{name}") for d in (out_dir, other)]
+        if not any(dumped):
+            continue
+        if not all(dumped):
+            side = out_dir if dumped[0] else other
+            print(f"DIFF {name}: dumped in {side} only")
+            n_diff += 1
+            continue
+        (a, acols), (b, bcols) = (dump_rows(con, d, name) for d in (out_dir, other))
+        if acols != bcols:
+            print(f"DIFF {name}: columns differ {acols} vs {bcols}")
+            n_diff += 1
+        elif a != b:
+            print(f"DIFF {name}: rows differ ({len(a)} vs {len(b)} rows, "
+                  f"{len(set(a) ^ set(b))} distinct rows on one side only)")
+            n_diff += 1
+        else:
+            n_same += 1
+    print(f"== {n_same} same / {n_diff} differ ==")
+    if n_same + n_diff == 0:
+        print("no gate was compared")
+        return 1
+    return 1 if n_diff else 0
+
+
 def main():
+    if "--against" in sys.argv:
+        return against_main(sys.argv[1:])
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
     only = sys.argv[3].split(",") if len(sys.argv) > 3 else None

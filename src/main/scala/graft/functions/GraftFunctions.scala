@@ -319,11 +319,12 @@ object GraftFunctions {
       }),
       binaryCol("graft_jaro_winkler", jaro_winkler),
       binaryCol("graft_jaccard", (a, b) => {
-        // a NULL text shingles like an empty one: one empty shingle
-        val sa = array_distinct(TextOps.tokenShingles(coalesce(a, lit(""))))
-        val sb = array_distinct(TextOps.tokenShingles(coalesce(b, lit(""))))
+        val sa = array_distinct(TextOps.tokenShingles(a))
+        val sb = array_distinct(TextOps.tokenShingles(b))
         val inter = size(array_intersect(sa, sb)).cast("double")
-        inter / ((size(sa) + size(sb)).cast("double") - inter)
+        // NULL in, NULL out: with ANSI off, size(NULL) is -1, not NULL
+        when(a.isNotNull && b.isNotNull,
+          inter / ((size(sa) + size(sb)).cast("double") - inter))
       }),
       // the SRP sign signature, so a pure-SQL user can band/bucket
       // embeddings for LSH dedup/ANN the same way the Scala pipeline

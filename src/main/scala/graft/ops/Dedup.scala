@@ -852,6 +852,8 @@ object Dedup {
     // hop-only has clearly stalled (a long-chain graph) — then it takes
     // the remaining distance in O(log diameter).
     val jumpAfter = 6
+    // not Graph's fixed-round driver: this loop runs an action every
+    // round and throws if it has not converged by maxIter
     while (!converged && iter < maxIter) {
       val propagated = sym
         .join(labels.withColumnRenamed("node", "src"), "src")

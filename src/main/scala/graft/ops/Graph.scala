@@ -14,21 +14,33 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   /**
-   * In-loop lineage control for FIXED-iteration loops (r19). The r18
-   * form eagerly localCheckpoint'ed EVERY round's rank frame — but an
-   * eager checkpoint is a synchronous driver barrier (one serial job +
-   * materialization per round), and q_link_pagerank_delta paid ~20 such
-   * barriers per run (driver bench 2.9-4.1 s for a tiny host graph).
-   * With no driver-side action inside these loops (unlike CC's
-   * fixpoint probe), the rounds can stay ONE lazy plan: Catalyst plans
-   * 5 chained join+agg rounds fine, and AQE's ReuseExchange dedups the
-   * double-consumed per-round aggregates (history union + next round).
-   * The checkpoint returns only every `every`-th round, bounding plan
-   * depth for the iters→50 contract without serializing the common
-   * iters=5 case (5 % 8 != 0 → zero in-loop barriers).
+   * The one fixed-round driver of the PageRank and label-propagation
+   * family. It checks `iters` before `setUp` runs (a set-up's eager
+   * checkpoints are Spark jobs), then applies the set-up's round
+   * (previous frame, round number) `iters` times to its first frame and
+   * returns every round's frame: index t is the frame after round t,
+   * index 0 the first frame.
+   *
+   * Lineage (r19): an eager checkpoint is a synchronous driver barrier
+   * (one serial job + materialization per round), and the r18 form that
+   * checkpointed every round cost q_link_pagerank_delta ~20 such
+   * barriers per run. With no driver-side action inside these loops
+   * (unlike CC's fixpoint probe), the rounds can stay ONE lazy plan:
+   * Catalyst plans 5 chained join+agg rounds fine, and AQE's
+   * ReuseExchange dedups a round consumed twice (history union + next
+   * round). So only every 8th round's frame is checkpointed, bounding
+   * plan depth for the iters→50 contract without serializing the common
+   * iters=5 case (zero in-loop barriers).
    */
-  private def ckptEvery(df: DataFrame, t: Int, every: Int = 8): DataFrame =
-    if (t % every == 0) df.localCheckpoint(eager = true) else df
+  private def fixedRounds(iters: Int)(
+      setUp: => (DataFrame, (DataFrame, Int) => DataFrame)): IndexedSeq[DataFrame] = {
+    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
+    val (first, round) = setUp
+    (1 to iters).scanLeft(first) { (prev, t) =>
+      val next = round(prev, t)
+      if (t % 8 == 0) next.localCheckpoint(eager = true) else next
+    }
+  }
 
   /**
    * Fixed-iteration PageRank in EXACT INTEGER micro-units, damping
@@ -43,45 +55,28 @@ object Graph {
    * counter), unlike double-accumulated PageRank where neighbor sum
    * order changes low bits.
    *
-   * Scale shape: per iteration, one join of the (src, dst) edge list
-   * against the O(|V|) rank table (both hash-partitioned on the join
-   * key) + one dst-keyed sum — the classic two-shuffle PR round, no
-   * broadcast of anything unbounded. The edge list and its degree join
-   * are checkpointed once, before the loop; inside it [[ckptEvery]]
-   * truncates lineage only every 8th round, so the default iters=5 runs
-   * as one lazy plan with no barrier in the loop. Nodes outside `pairs`
-   * are excluded (an isolated node's rank is the constant 150 000 —
-   * uninformative).
+   * It is [[pageRankWeighted]] over both directed edges of every pair,
+   * each of weight 1: then a node's out-weight is its degree and the
+   * weighted contribution (r·17·1) div (20·deg) is the one above, bit
+   * for bit. So it shares that op's scale shape and lineage control
+   * ([[fixedRounds]]). Nodes outside `pairs` are excluded (an isolated
+   * node's rank is the constant 150 000 — uninformative).
    *
    * `pairs` (id1, id2) is treated UNDIRECTED: each pair contributes
    * both directed edges; deg(u) = #neighbors of u.
    */
-  def pageRank(pairs: DataFrame, iters: Int = 5): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val edges = symmetricEdges(pairs)
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = edges.join(deg, "src").localCheckpoint(eager = true)
-    var rank = deg.select(col("src").as("doc_id"), lit(1000000L).as("r"))
-    for (t <- 1 to iters) {
-      rank = ckptEvery(withDeg
-        .join(rank, withDeg("src") === rank("doc_id"))
-        // `div` = integer division (Column./ would be a double divide)
-        .select(col("dst"), expr("(r * 17L) div (20L * deg)").as("c"))
-        .groupBy(col("dst"))
-        .agg((lit(150000L) + sum(col("c"))).as("r"))
-        .select(col("dst").as("doc_id"), col("r")), t)
-    }
-    rank.select(col("doc_id"), col("r").as("rank_micro"))
-  }
+  def pageRank(pairs: DataFrame, iters: Int = 5): DataFrame =
+    pageRankWeighted(symmetricEdges(pairs).withColumn("w", lit(1L)), iters)
+      .select(col("node").as("doc_id"), col("rank_micro"))
 
   /** Both directed edges (src, dst) of every undirected pair, distinct,
-    * checkpointed once — the edge list [[pageRank]] and
-    * [[labelPropagation]] join against every round. */
+    * as a lazy frame: each user checkpoints it once, after its own
+    * projection — [[pageRank]] in [[pageRankWeighted]]'s edge front,
+    * [[labelPropagation]] and [[kCore]] before their loops. */
   private def symmetricEdges(pairs: DataFrame): DataFrame =
     pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
       .distinct()
-      .localCheckpoint(eager = true)
 
   /**
    * WEIGHTED DIRECTED PageRank (r19) — the real-crawl form of
@@ -93,17 +88,25 @@ object Graph {
    * the sum — the oracle replays the identical recursion). Same
    * conventions as the unweighted op: seeds = nodes with out-edges,
    * a node drops from the rank frame the round nobody links to it
-   * (isolated rank is the uninformative constant), same two-shuffle
-   * round and lineage truncation.
+   * (isolated rank is the uninformative constant).
+   *
+   * Scale shape: the edge list and its out-weight join are
+   * checkpointed once, in the set-up; per round, one join of that list
+   * against the O(|V|) rank table (both hash-partitioned on the join
+   * key) + one dst-keyed sum — the classic two-shuffle PR round, no
+   * broadcast of anything unbounded.
    */
-  def pageRankWeighted(edges: DataFrame, iters: Int = 5): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val (e, outW) = weightedEdges(edges)
-    val withW = e.join(outW, "src").localCheckpoint(eager = true)
-    var rank = outW.select(col("src").as("node"), lit(1000000L).as("r"))
-    for (t <- 1 to iters) rank = weightedRound(withW, rank, t)
-    rank.select(col("node"), col("r").as("rank_micro"))
-  }
+  def pageRankWeighted(edges: DataFrame, iters: Int = 5): DataFrame =
+    weightedRanks(edges, iters).last.select(col("node"), col("r").as("rank_micro"))
+
+  /** Every round's (node, r) frame of [[pageRankWeighted]], 0..iters. */
+  private def weightedRanks(edges: DataFrame, iters: Int): IndexedSeq[DataFrame] =
+    fixedRounds(iters) {
+      val (e, outW) = weightedEdges(edges)
+      val withW = e.join(outW, "src").localCheckpoint(eager = true)
+      (outW.select(col("src").as("node"), lit(1000000L).as("r")),
+        (rank, _) => weightedRound(withW, rank))
+    }
 
   /** The weighted edge list every weighted PageRank starts from:
     * (src, dst, w) with w cast to long and w > 0, checkpointed once, and
@@ -116,15 +119,22 @@ object Graph {
     (e, e.groupBy(col("src")).agg(sum(col("w")).as("ow")))
   }
 
-  /** One weighted PageRank round rₜ → rₜ₊₁ over the out-weight-joined
-    * edges (node, r) → (node, r), lineage cut by [[ckptEvery]]. */
-  private def weightedRound(withW: DataFrame, rank: DataFrame, t: Int): DataFrame =
-    ckptEvery(withW
+  /** The one weighted PageRank round rₜ → rₜ₊₁: (node, r) → (node, r)
+    * over out-weight-joined edges (src, dst, w, ow). */
+  private def weightedRound(withW: DataFrame, rank: DataFrame): DataFrame =
+    withW
       .join(rank, withW("src") === rank("node"))
       .select(col("dst"), expr("(r * 17L * w) div (20L * ow)").as("c"))
       .groupBy(col("dst"))
       .agg((lit(150000L) + sum(col("c"))).as("r"))
-      .select(col("dst").as("node"), col("r")), t)
+      .select(col("dst").as("node"), col("r"))
+
+  /** Every round's frame, tagged with its round: (node, iter, r). */
+  private def withIter(frames: IndexedSeq[DataFrame]): DataFrame =
+    frames.zipWithIndex
+      .map { case (f, t) => f.withColumn("iter", lit(t)) }
+      .reduce(_ unionByName _)
+      .select(col("node"), col("iter").cast("int").as("iter"), col("r"))
 
   /**
    * [[pageRankWeighted]] keeping the FULL per-iteration rank history
@@ -134,23 +144,13 @@ object Graph {
    * UNAFFECTED in-neighbors' intermediate ranks, not just their final
    * ones. `iter = iters` rows are exactly [[pageRankWeighted]]'s
    * output. O(iters·|V|) rows of (key, long, long) — the natural thing
-   * to write next to the edge list, partitioned by `iter`.
+   * to write next to the edge list, partitioned by `iter`. Each round's
+   * frame is consumed twice (next round + the history union): within
+   * the one output job ReuseExchange dedups the identical aggregate
+   * exchange, so no per-round barrier is needed (r19).
    */
-  def pageRankWeightedHistory(edges: DataFrame, iters: Int = 5): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val (e, outW) = weightedEdges(edges)
-    val withW = e.join(outW, "src").localCheckpoint(eager = true)
-    var rank = outW.select(col("src").as("node"), lit(1000000L).as("r"))
-    var hist = rank.withColumn("iter", lit(0))
-    for (t <- 1 to iters) {
-      // rank_t is consumed twice (next round + the history union):
-      // within the one output job ReuseExchange dedups the identical
-      // aggregate exchange, so no per-round barrier is needed (r19)
-      rank = weightedRound(withW, rank, t)
-      hist = hist.unionByName(rank.withColumn("iter", lit(t)))
-    }
-    hist.select(col("node"), col("iter").cast("int").as("iter"), col("r"))
-  }
+  def pageRankWeightedHistory(edges: DataFrame, iters: Int = 5): DataFrame =
+    withIter(weightedRanks(edges, iters))
 
   /**
    * INCREMENTAL weighted PageRank (r20) — exact delta maintenance for
@@ -188,8 +188,7 @@ object Graph {
    */
   def pageRankWeightedDelta(oldEdges: DataFrame, history: DataFrame,
       deltaEdges: DataFrame, iters: Int = 5): DataFrame =
-    deltaCore(oldEdges, history, deltaEdges, iters, keepHistory = false)
-      .filter(col("iter") === iters)
+    deltaRanks(oldEdges, history, deltaEdges, iters).last
       .select(col("node"), col("r").as("rank_micro"))
 
   /**
@@ -204,7 +203,7 @@ object Graph {
    */
   def pageRankWeightedDeltaHistory(oldEdges: DataFrame, history: DataFrame,
       deltaEdges: DataFrame, iters: Int = 5): DataFrame =
-    deltaCore(oldEdges, history, deltaEdges, iters, keepHistory = true)
+    withIter(deltaRanks(oldEdges, history, deltaEdges, iters))
 
   /**
    * LABEL-PROPAGATION community detection (r20; Raghavan et al. 2007,
@@ -227,26 +226,23 @@ object Graph {
    * Scale shape: per iteration one (src ⋈ label) hash join + a
    * two-level aggregation — (dst, label) counts with map-side partials,
    * then the per-dst `max_by(label, (count, -label))` argmax; no
-   * windows over unbounded partitions, lineage truncated per round.
-   * Long ids by contract (string keys: densify first via
+   * windows over unbounded partitions, lineage truncated by
+   * [[fixedRounds]]. Long ids by contract (string keys: densify first via
    * [[Scale.denseIds]]).
    */
-  def labelPropagation(pairs: DataFrame, iters: Int = 3): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val edges = symmetricEdges(pairs)
-    var lab = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-    for (t <- 1 to iters) {
-      lab = ckptEvery(edges
-        .join(lab, edges("src") === lab("id"))
-        .groupBy(col("dst"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("dst"))
-        .agg(expr("max_by(label, struct(c, -label))").as("label"))
-        .select(col("dst").as("id"), col("label")), t)
-    }
-    lab.select(col("id"), col("label").as("community"))
-  }
+  def labelPropagation(pairs: DataFrame, iters: Int = 3): DataFrame =
+    fixedRounds(iters) {
+      val edges = symmetricEdges(pairs).localCheckpoint(eager = true)
+      (edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label")),
+        (lab, _) => edges
+          .join(lab, edges("src") === lab("id"))
+          .groupBy(col("dst"), col("label"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy(col("dst"))
+          .agg(expr("max_by(label, struct(c, -label))").as("label"))
+          .select(col("dst").as("id"), col("label")))
+    }.last.select(col("id"), col("label").as("community"))
 
   /**
    * PERSONALIZED (topic-sensitive) weighted PageRank (r20) — the
@@ -267,98 +263,78 @@ object Graph {
    * frame only when mass first reaches it; seeds self-perpetuate.
    */
   def pageRankPersonalized(edges: DataFrame, seeds: DataFrame,
-      iters: Int = 5): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    val (e, outW) = weightedEdges(edges)
-    val sd = seeds.select(col("node")).distinct().localCheckpoint(eager = true)
-    val aug = e.join(outW, "src")
-      .select(col("src"), col("dst"), col("w"), col("ow"),
-        lit(false).as("tele"))
-      .unionByName(sd.select(col("node").as("src"), col("node").as("dst"),
-        lit(0L).as("w"), lit(0L).as("ow"), lit(true).as("tele")))
-      .localCheckpoint(eager = true)
-    var rank = sd.select(col("node"), lit(1000000L).as("r"))
-    for (t <- 1 to iters) {
-      rank = ckptEvery(aug
-        .join(rank, aug("src") === rank("node"))
-        .select(col("dst"),
-          when(col("tele"), lit(150000L))
-            .otherwise(expr("(r * 17L * w) div (20L * ow)")).as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("r"))
-        .select(col("dst").as("node"), col("r")), t)
-    }
-    rank.select(col("node"), col("r").as("rank_micro"))
-  }
+      iters: Int = 5): DataFrame =
+    fixedRounds(iters) {
+      val (e, outW) = weightedEdges(edges)
+      val sd = seeds.select(col("node")).distinct().localCheckpoint(eager = true)
+      val aug = e.join(outW, "src")
+        .select(col("src"), col("dst"), col("w"), col("ow"),
+          lit(false).as("tele"))
+        .unionByName(sd.select(col("node").as("src"), col("node").as("dst"),
+          lit(0L).as("w"), lit(0L).as("ow"), lit(true).as("tele")))
+        .localCheckpoint(eager = true)
+      (sd.select(col("node"), lit(1000000L).as("r")),
+        (rank, _) => aug
+          .join(rank, aug("src") === rank("node"))
+          .select(col("dst"),
+            when(col("tele"), lit(150000L))
+              .otherwise(expr("(r * 17L * w) div (20L * ow)")).as("c"))
+          .groupBy(col("dst"))
+          .agg(sum(col("c")).as("r"))
+          .select(col("dst").as("node"), col("r")))
+    }.last.select(col("node"), col("r").as("rank_micro"))
 
-  /** Shared delta-maintenance loop. Returns (node, iter, r): all
-    * iterations when `keepHistory`, else only `iter = iters` rows
-    * (tagged, so both wrappers read one shape). */
-  private def deltaCore(oldEdges: DataFrame, history: DataFrame,
-      deltaEdges: DataFrame, iters: Int, keepHistory: Boolean): DataFrame = {
-    require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    def norm(df: DataFrame) = df
-      .select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .filter(col("w") > 0)
-    // r19 barrier diet: of the old 5 eager setup checkpoints only withW
-    // (the per-round join probe) keeps a checkpoint — every other setup
-    // frame is a bounded expression over the edge lists that folds into
-    // its consumer's plan. Each dropped localCheckpoint drops a whole
-    // QueryExecution (analysis + optimization + codegen at construction
-    // time): a per-job trace measured this query's wall as ~60% DRIVER time,
-    // not task time. The old-edge subtree is shared once (oE) instead
-    // of being re-planned for allE and oldSrc separately.
-    val oE = norm(oldEdges).localCheckpoint(eager = false)
-    val dE = norm(deltaEdges).localCheckpoint(eager = false)
-    val allE = oE.unionByName(dE)
-    val outW = allE.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-    val withW = allE.join(outW, "src").localCheckpoint(eager = true)
-    val touched = dE.select(col("src")).distinct()
-      .localCheckpoint(eager = false)
-    // the history side is read once per round (filter iter = t): pin it
-    // ONCE so those six reads scan materialized rows instead of each
-    // replaying the full upstream history recursion (r19 — its producer
-    // no longer checkpoints per round either)
-    val hist0 = history.localCheckpoint(eager = false)
-    // A_0 = NEW seeds (sources that did not exist before): their
-    // rank_0 = 1 000 000 is new frame membership, nothing else moves
-    // at iter 0.
-    val oldSrc = oE.select(col("src")).distinct()
-    var affSet = touched.join(oldSrc, Seq("src"), "left_anti")
-      .select(col("src").as("node")).localCheckpoint(eager = false)
-    var affRank = affSet.select(col("node"), lit(1000000L).as("r"))
-    def merged(t: Int): DataFrame = {
-      val histT = hist0.filter(col("iter") === t).select(col("node"), col("r"))
-      affRank.unionByName(histT.join(affSet, Seq("node"), "left_anti"))
+  /** The delta-maintenance rounds: every round's updated rank frame
+    * (node, r), 0..iters — recomputed values where affected, stored
+    * history everywhere else (a node in A_t absent from the recomputed
+    * frame stays absent — membership is part of the set). */
+  private def deltaRanks(oldEdges: DataFrame, history: DataFrame,
+      deltaEdges: DataFrame, iters: Int): IndexedSeq[DataFrame] =
+    fixedRounds(iters) {
+      def norm(df: DataFrame) = df
+        .select(col("src"), col("dst"), col("w").cast("long").as("w"))
+        .filter(col("w") > 0)
+      // r19 barrier diet: of the old 5 eager setup checkpoints only withW
+      // (the per-round join probe) keeps a checkpoint — every other setup
+      // frame is a bounded expression over the edge lists that folds into
+      // its consumer's plan. Each dropped localCheckpoint drops a whole
+      // QueryExecution (analysis + optimization + codegen at construction
+      // time): a per-job trace measured this query's wall as ~60% DRIVER
+      // time, not task time. The old-edge subtree is shared once (oE)
+      // instead of being re-planned for allE and oldSrc separately.
+      val oE = norm(oldEdges).localCheckpoint(eager = false)
+      val dE = norm(deltaEdges).localCheckpoint(eager = false)
+      val allE = oE.unionByName(dE)
+      val outW = allE.groupBy(col("src")).agg(sum(col("w")).as("ow"))
+      val withW = allE.join(outW, "src").localCheckpoint(eager = true)
+      val touched = dE.select(col("src")).distinct()
+        .localCheckpoint(eager = false)
+      // the history side is read once per round (filter iter = t): pin it
+      // ONCE so those reads scan materialized rows instead of each
+      // replaying the full upstream history recursion (r19 — its producer
+      // no longer checkpoints per round either)
+      val hist0 = history.localCheckpoint(eager = false)
+      // A_0 = NEW seeds (sources that did not exist before): their
+      // rank_0 = 1 000 000 is new frame membership, nothing else moves
+      // at iter 0.
+      val oldSrc = oE.select(col("src")).distinct()
+      val aff0 = touched.join(oldSrc, Seq("src"), "left_anti")
+        .select(col("src").as("node")).localCheckpoint(eager = false)
+      // A_t = outNeighbors(T ∪ A_{t-1}) depends on the edges only, so
+      // the affected sets are rounds of their own
+      val aff = fixedRounds(iters)((aff0, (a, _) => withW
+        .join(touched.unionByName(a.select(col("node").as("src"))).distinct(), "src")
+        .select(col("dst").as("node")).distinct()))
+      def merged(affRank: DataFrame, t: Int): DataFrame = {
+        val histT = hist0.filter(col("iter") === t).select(col("node"), col("r"))
+        affRank.unionByName(histT.join(aff(t), Seq("node"), "left_anti"))
+      }
+      // round t recomputes the ranks of A_t only: the edges into A_t,
+      // over the updated rank_{t-1}
+      (merged(aff0.select(col("node"), lit(1000000L).as("r")), 0),
+        (prev, t) => merged(weightedRound(
+          withW.join(aff(t), withW("dst") === aff(t)("node"), "left_semi"), prev), t))
     }
-    var out =
-      if (keepHistory) merged(0).withColumn("iter", lit(0)) else null: DataFrame
-    for (t <- 1 to iters) {
-      // updated rank_{t-1}: recomputed values where affected, stored
-      // history everywhere else (a node in A_{t-1} absent from the
-      // recomputed frame stays absent — membership is part of the set)
-      val prevRank = merged(t - 1)
-      val frontier = touched
-        .unionByName(affSet.select(col("node").as("src"))).distinct()
-      // r19: the per-round affected set/rank are multiply consumed
-      // (next frontier, the merged anti-join, the semi-join) — every
-      // 2nd round gets a real barrier to bound the chained plan depth,
-      // the others stay lazy (ReuseExchange dedups within the job)
-      val affT = ckptEvery(withW.join(frontier, "src")
-        .select(col("dst").as("node")).distinct(), t, 8)
-      affRank = ckptEvery(withW
-        .join(affT, withW("dst") === affT("node"), "left_semi")
-        .join(prevRank, withW("src") === prevRank("node"))
-        .select(col("dst"), expr("(r * 17L * w) div (20L * ow)").as("c"))
-        .groupBy(col("dst"))
-        .agg((lit(150000L) + sum(col("c"))).as("r"))
-        .select(col("dst").as("node"), col("r")), t, 8)
-      affSet = affT
-      if (keepHistory) out = out.unionByName(merged(t).withColumn("iter", lit(t)))
-    }
-    val res = if (keepHistory) out else merged(iters).withColumn("iter", lit(iters))
-    res.select(col("node"), col("iter").cast("int").as("iter"), col("r"))
-  }
 
   /**
    * PER-NODE triangle counts + local clustering coefficient
@@ -492,19 +468,17 @@ object Graph {
    * carrying the iteration counter). Each round is one map-side
    * degree aggregate + two semi-joins of the edge list against the
    * survivor set — all equi-joins hash-partitioned on the node id,
-   * nothing quadratic, no broadcast of anything unbounded;
-   * `localCheckpoint` truncates lineage per round (the [[pageRank]]
-   * idiom). Output: surviving node → its degree in the surviving
-   * subgraph.
+   * nothing quadratic, no broadcast of anything unbounded. An eager
+   * `localCheckpoint` truncates lineage every round. Output: surviving
+   * node → its degree in the surviving subgraph.
    */
   def kCore(pairs: DataFrame, k: Int, iters: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
-    var e = pairs.select(col("id1").as("src"), col("id2").as("dst"))
-      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    var e = symmetricEdges(pairs).filter(col("src") =!= col("dst"))
       .localCheckpoint(eager = true)
+    // not [[fixedRounds]]: a round reads its edge state three times (the
+    // degree count and both semi-joins), so it must truncate every round
     for (_ <- 1 to iters) {
       val surv = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("kid"))

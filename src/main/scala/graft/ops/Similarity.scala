@@ -364,9 +364,6 @@ object Similarity {
   private def augSeed(sv: Column): Column =
     concat(sv, array(-dot(sv, sv) / lit(2.0)))
 
-  /** query/subvector side of the trick: x → x ++ [1.0]. */
-  private def augQuery(sv: Column): Column = concat(sv, array(lit(1.0)))
-
   /** Width of each of the m subvectors of a dim-wide vector. */
   private def subDim(dim: Int, m: Int): Int = {
     require(m >= 1 && dim % m == 0, s"dim ($dim) must be a multiple of m ($m)")
@@ -1015,6 +1012,9 @@ object Similarity {
             .as("cell"))
     }
     var i = 0
+    // not Graph's fixed-round driver: both returned frames read the last
+    // centroids, so each round's k rows are materialized once instead of
+    // every round being replayed by each of the two outputs
     while (i < iters) {
       cents = assign(cents)
         .groupBy(col("cell"))

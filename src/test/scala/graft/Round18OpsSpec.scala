@@ -731,6 +731,63 @@ class Round18OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("removeFromIvfPqIndex: removed ids leave the codes, only their cells are rewritten, an emptied cell is deleted, search == in-memory over the survivors") {
+    import graft.ops.Similarity
+    import graft.sources.Tables
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq-rm").toFile
+    val path = new java.io.File(dir, "ivfpq").getAbsolutePath
+    def cellFiles(): Map[String, Set[String]] =
+      new java.io.File(s"$path/codes").listFiles()
+        .filter(_.getName.startsWith("cell=")).map(f => (f.getName,
+          f.listFiles().map(_.getName).toSet)).toMap
+    try {
+      val (codes, refit, codebooks) = Similarity.buildIvfPqIndex(
+        embFrame(0 until 200), "vec_id", "embedding", 16, 4, 16, 8)
+      Tables.writeIvfPqIndex(codes, refit, codebooks, path)
+      // the whole smallest cell, plus two ids of the largest one
+      val bySize = codes.groupBy("cell").count()
+        .orderBy(col("count").asc, col("cell").asc).collect().map(_.get(0))
+      val (victim, partial) = (bySize.head, bySize.last)
+      val rmIds = codes.filter(col("cell") === victim).select("vec_id")
+        .union(codes.filter(col("cell") === partial).select("vec_id")
+          .orderBy("vec_id").limit(2))
+        .as[Long].collect().toSeq
+      val before = cellFiles()
+      Tables.removeFromIvfPqIndex(spark, path, rmIds.toDF("vec_id"))
+      val rm = rmIds.toDF("vec_id")
+      val remaining = spark.read.parquet(s"$path/codes")
+      assert(remaining.join(rm, Seq("vec_id"), "left_semi").count() == 0)
+      assert(remaining.count() == 200 - rmIds.size)
+      val after = cellFiles()
+      assert(!after.contains(s"cell=$victim"),
+        "an emptied cell directory must be deleted, not left stale")
+      assert(after(s"cell=$partial") != before(s"cell=$partial"),
+        "a cell that lost ids must be rewritten")
+      (before.keySet - s"cell=$victim" - s"cell=$partial").foreach { cellDir =>
+        assert(after(cellDir) == before(cellDir),
+          s"$cellDir was rewritten by a removal that did not affect it")
+      }
+      val queries = Similarity.prepared(embFrame(0 until 200), "vec_id", "embedding")
+        .filter(col("nrm") > 0)
+        .select(col("vec_id"),
+          org.apache.spark.sql.functions.transform(col("v"),
+            x => x / col("nrm")).as("v"))
+        .filter(col("vec_id") % 25 === 4)
+      val disk = sortedRows(Similarity.annIvfPqSearchOnDisk(spark, path, queries,
+        16, 4, nprobe = 2, topK = 3))
+      assert(disk.nonEmpty && disk == sortedRows(Similarity.annIvfPqSearch(
+          codes.join(rm, Seq("vec_id"), "left_anti"), refit, codebooks,
+          queries, 16, 4, nprobe = 2, topK = 3)),
+        "the store after removal must be search-equal to the in-memory survivors")
+    } finally {
+      def rmDir(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rmDir); f.delete()
+      }
+      rmDir(dir)
+    }
+  }
+
   test("readWarcStream: newly-landed segment files parse exactly once per file, equal to the batch reader") {
     val dir = java.nio.file.Files.createTempDirectory("warc-stream").toFile
     val ckpt = java.nio.file.Files.createTempDirectory("warc-ckpt").toFile

@@ -176,20 +176,29 @@ class TextOpsSpec extends AnyFunSuite {
     assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 0.0)
     assert(r.getDouble(2) == 1.0)
     assert(r.getDouble(3) == 0.5) // shingles {abc,bcd,cde} vs {abc,bcd,cdx}: 2/4
-    // edges: a NULL text shingles like an empty one (one empty shingle),
-    // texts of fewer than three tokens give one whole-list shingle, and
-    // both sides lowercase like `lower()` (İ → "i̇")
-    val e = spark.sql(
-      """SELECT graft_jaccard(CAST(NULL AS STRING), 'a b c') AS n1,
-        |       graft_jaccard(CAST(NULL AS STRING), '') AS n2,
-        |       graft_jaccard('', '') AS ee,
-        |       graft_jaccard('Solo', 'solo!') AS t1,
-        |       graft_jaccard('solo', 'solo duo') AS t12,
-        |       graft_jaccard('one two', 'ONE, two') AS t2,
-        |       graft_jaccard('one two', 'two one') AS t2r,
-        |       graft_jaccard('İstanbul', 'i̇stanbul') AS ist
-        |""".stripMargin).collect().head
-    assert((0 until 8).map(e.getDouble) == Seq(0.0, 1.0, 1.0, 1.0, 0.0, 1.0, 0.0, 1.0), e)
+    // edges: a NULL text gives NULL, as SQL functions do, under either
+    // ANSI setting (with ANSI off, size(NULL) is -1); an empty text is one
+    // empty shingle, texts of fewer than three tokens give one whole-list
+    // shingle, and both sides lowercase like `lower()` (İ → "i̇")
+    val ansiWas = spark.conf.get("spark.sql.ansi.enabled")
+    for (ansi <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      val e = try spark.sql(
+        """SELECT graft_jaccard(CAST(NULL AS STRING), 'a b c') AS n1,
+          |       graft_jaccard(CAST(NULL AS STRING), '') AS n2,
+          |       graft_jaccard(CAST(NULL AS STRING), CAST(NULL AS STRING)) AS nn,
+          |       graft_jaccard('', '') AS ee,
+          |       graft_jaccard('Solo', 'solo!') AS t1,
+          |       graft_jaccard('solo', 'solo duo') AS t12,
+          |       graft_jaccard('one two', 'ONE, two') AS t2,
+          |       graft_jaccard('one two', 'two one') AS t2r,
+          |       graft_jaccard('İstanbul', 'i̇stanbul') AS ist
+          |""".stripMargin).collect().head
+      finally spark.conf.set("spark.sql.ansi.enabled", ansiWas)
+      assert((0 until 3).forall(e.isNullAt), s"ansi=$ansi: $e")
+      assert((3 until 9).map(e.getDouble) == Seq(1.0, 1.0, 0.0, 1.0, 0.0, 1.0),
+        s"ansi=$ansi: $e")
+    }
   }
 
   test("graft_histogram SQL: clamped bin counts") {
