@@ -93,8 +93,8 @@ object Graph {
    * Scale shape: the edge list and its out-weight join are
    * checkpointed once, in the set-up; per round, one join of that list
    * against the O(|V|) rank table (both hash-partitioned on the join
-   * key) + one dst-keyed sum — the classic two-shuffle PR round, no
-   * broadcast of anything unbounded.
+   * key) + one dst-keyed sum — the classic two-shuffle PageRank round,
+   * no broadcast of anything unbounded.
    */
   def pageRankWeighted(edges: DataFrame, iters: Int = 5): DataFrame =
     weightedRanks(edges, iters).last.select(col("node"), col("r").as("rank_micro"))
