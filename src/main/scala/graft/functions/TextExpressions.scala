@@ -733,34 +733,6 @@ object ByteLevelUnits {
 }
 
 /**
- * Unicode NFKC normalization — the tokenizer-facing compatibility fold
- * (full-width → ASCII, ligatures ﬁ → fi, circled digits → digits,
- * half-width kana composed) that the hand-rolled mojibake/quote step
- * list (TextOps.normalizeUnicode) deliberately does NOT do. Wraps the
- * JDK's java.text.Normalizer (ICU-equivalent tables, in every JRE).
- * No DuckDB replay exists (DuckDB ships NFC only), so the op is
- * spec-graded: known compatibility foldings + idempotence are pinned
- * in Round18OpsSpec. CodegenFallback: the JDK call dominates.
- */
-case class NfkcNormalize(child: Expression)
-  extends UnaryExpression with CodegenFallback {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_nfkc"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    InputType.StringArg.check(prettyName, child.dataType)
-
-  override protected def nullSafeEval(v: Any): Any =
-    org.apache.spark.unsafe.types.UTF8String.fromString(
-      java.text.Normalizer.normalize(v.toString, java.text.Normalizer.Form.NFKC))
-
-  override protected def withNewChildInternal(newChild: Expression): NfkcNormalize =
-    copy(child = newChild)
-}
-
-/**
  * Intersection CARDINALITY of two SORTED, duplicate-free string arrays
  * via a single linear merge — the verify kernel of the exact PPJoin
  * family ([[graft.ops.Dedup.similarityJoinExact]]), where it replaces

@@ -906,8 +906,9 @@ object Dedup {
    * Input is a [[Similarity.prepared]] corpus; output (vec_id,
    * cluster_id) for every input row.
    *
-   * SCALE CONTRACT (measured, Sf1Soak r16 — the DISTINCT-corpus
-   * decade): `bandBits` is the bucket-occupancy lever, exactly like
+   * SCALE CONTRACT (measured in r16: `ScaleProbe` cases
+   * `embed_cluster_ids` and `embed_clusters_b8` on the distinct ×10 of
+   * sf0.1): `bandBits` is the bucket-occupancy lever, exactly like
    * IVF's k. 2^bandBits band values must grow with the corpus:
    * bandBits=4 (16 values) on a 20k unstructured corpus measured
    * 36.5× wall at ×10 rows (per-band occupancy n/16 ⇒ ~n² candidate

@@ -697,7 +697,8 @@ object Similarity {
    * with the corpus bucketed by cell
    * ([[graft.sources.Tables.writeBucketed]]) even the scan prunes.
    *
-   * SCALE CONTRACT (measured, Scale100Probe): per-query work is one
+   * SCALE CONTRACT (measured: `ScaleProbe` case `ann_ivf` on flood
+   * ×10 and ×100 copies of sf0.1): per-query work is one
    * cell's slice, |corpus| / |cells|. Growing corpus and query set ×N
    * under this fixed quantizer is ~N² candidate work by construction
    * (measured: 38× wall at ×100/×100, decade 22.5× — the
@@ -850,7 +851,8 @@ object Similarity {
    * corpus payload shuffles once (the quantizer's id-join), then the
    * search rides broadcasts — at ×100 corpus growth, k grows with N
    * and per-query candidate work stays ~N/k (measured vs the fixed
-   * quantizer's quadratic bend: see PLANS.md Scale100Probe). For
+   * quantizer's quadratic bend: `ScaleProbe` cases `ann_ivf_refit`
+   * and `ann_ivf` on flood ×10 and ×100; PLANS.md Round-12). For
    * repeated query batches, build the index once with
    * [[buildIvfIndex]] and call [[annIvfSearch]] directly.
    */

@@ -1339,16 +1339,6 @@ object TextOps {
     * gates' projection. */
   val PreTokenProbe: String = " Hello, world!! (don't #42); e.g. $3.50?"
 
-  /** Unicode NFKC normalization ([[graft.functions.NfkcNormalize]]) —
-    * the compatibility fold real tokenizers apply before BPE
-    * (full-width → ASCII, ligatures, circled digits, half-width kana
-    * composed); complements [[normalizeUnicode]]'s mojibake/quote
-    * step list. Spec-graded (DuckDB ships NFC only — no oracle). */
-  def nfkc(text: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.NfkcNormalize(
-        org.apache.spark.sql.graft.ColumnBridge.expression(text)))
-
   /** Pre-token array of `text` under [[PreTokenPattern]] — a plain
     * codegen'd regexp_extract_all, engine-replayable verbatim. */
   def preTokenize(text: Column): Column =
@@ -1925,7 +1915,8 @@ object TextOps {
    * per-query positive count — and SCALE buckets WITH the pool: the
    * total work is |Q|·|pool|/buckets, so a pinned bucket count makes
    * a joint 10× query+pool growth cost ~100× (measured 25× wall in
-   * ScaleStress before its probe scaled buckets; 2.7× after).
+   * `ScaleProbe` case `negative_sample` on a flood ×10 with the buckets
+   * pinned; 2.7× with them scaled, as the case does now).
    */
   def negativeSample(queryIds: org.apache.spark.sql.DataFrame,
       poolIds: org.apache.spark.sql.DataFrame,

@@ -14,6 +14,10 @@ class GateMapsSpec extends AnyFunSuite {
     assert(SparkEntry.uniqueKeys("q_a" -> 1, "q_b" -> 2) == Map("q_a" -> 1, "q_b" -> 2))
   }
 
+  test("the flagship entry query returns rows") {
+    assert(SparkEntry.entry(SparkTestSession.spark).count() > 0)
+  }
+
   test("the gate table is built once per JVM") {
     assert(SparkEntry.queries eq SparkEntry.queries)
     assert(SparkEntry.oracleSql eq SparkEntry.oracleSql)

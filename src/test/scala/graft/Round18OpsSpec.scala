@@ -332,34 +332,6 @@ class Round18OpsSpec extends AnyFunSuite {
     Seq(900L, 901L, 902L).foreach(id => assert(!out(id)._1))
   }
 
-  test("nfkc: compatibility foldings pinned, idempotent, null-safe") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val in = Seq(
-      "ﬁle ﬂow",          // latin ligatures
-      "Ｆｕｌｌｗｉｄｔｈ １２３", // full-width forms
-      "①②③",              // circled digits
-      "ﾊﾟｽﾜｰﾄﾞ",           // half-width kana + voicing marks
-      "²³ ¼",              // super/subscripts and fractions
-      "plain ascii stays")
-    val out = in.toDF("t")
-      .select(TextOps.nfkc(col("t")).as("n")).collect().map(_.getString(0))
-    assert(out(0) == "file flow")
-    assert(out(1) == "Fullwidth 123")
-    assert(out(2) == "123")
-    assert(out(3) == "パスワード")
-    assert(out(4) == "23 1⁄4") // FRACTION SLASH, per NFKC tables
-    assert(out(5) == "plain ascii stays")
-    // idempotence: NFKC(NFKC(x)) == NFKC(x)
-    val twice = in.toDF("t")
-      .select(TextOps.nfkc(TextOps.nfkc(col("t"))).as("n"))
-      .collect().map(_.getString(0))
-    assert(twice.toSeq == out.toSeq)
-    // null-safe
-    assert(Seq[String](null).toDF("t").select(TextOps.nfkc(col("t")))
-      .collect()(0).isNullAt(0))
-  }
-
   test("clusterBuilder encodes the 100TB operating point (skew join, partition sizing, no master)") {
     val opts = GraftSession.clusterBuilder(totalExecutorCores = 1000)
     // inspect via a throwaway config dump: build against the running
