@@ -50,7 +50,7 @@ object SparkEntry {
     uniqueKeys(families.flatten.map(g => g.name -> g): _*)
 
   /** Built once per JVM: perfbench looks a gate up inside every timed
-    * execution, and the table holds all 316 oracle strings. */
+    * execution, and the table holds all 314 oracle strings. */
   private[graft] lazy val gates: Map[String, Gate] = table(
     ReferenceGates.gates, RelationalGates.gates, DedupGates.gates,
     TextGates.gates, SimilarityGates.gates, EventGates.gates,

@@ -95,14 +95,6 @@ private[graft] object EventGates {
     },
       asOfSql(">=")),
 
-    Gate("q_asof_native_forward", (s, dir) => {
-      // the same forward as-of through the custom physical operator
-      // (time-negation mirror of the streaming sort-merge)
-      val (clicks, purchases) = clicksAndPurchases(s, dir)
-      Events.asOfJoinNativeForward(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
-    },
-      asOfSql(">=")),
-
     Gate("q_asof_nearest", (s, dir) => {
       // nearest direction: the purchase closest in time to each click,
       // either side; equal distances resolve to the earlier purchase
@@ -121,19 +113,11 @@ private[graft] object EventGates {
         |    THEN b.bval ELSE f.fval END AS asof_pvalue
         |FROM b JOIN f ON b.user_id = f.user_id AND b.tsu = f.tsu AND b.event_id = f.event_id""".stripMargin),
 
-    Gate("q_asof_native", (s, dir) => {
-      // same query as q_asof, planned through the custom AsOfJoinExec
-      // physical operator (LogicalPlan + Strategy + SparkPlan extension)
-      val (clicks, purchases) = clicksAndPurchases(s, dir)
-      Events.asOfJoinNative(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
-    },
-      asOfSql("<=")),
-
     Gate("q_asof_tolerance", (s, dir) => {
       // as-of with a 1-hour tolerance: matches older than the tolerance
       // are treated as absent (pandas merge_asof semantics)
       val (clicks, purchases) = clicksAndPurchases(s, dir)
-      Events.asOfJoinNative(clicks, purchases, "user_id", "tsu", Seq("pvalue"),
+      Events.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"),
         toleranceMicros = Some(3600000000L))
     },
       s"""$AsOfInputs

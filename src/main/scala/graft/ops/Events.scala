@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /**
  * Batch event analytics over the `events` table. `ts` arrives as an
@@ -190,87 +191,43 @@ object Events {
         col("path"), col("n_events"))
 
   /**
-   * AS-OF join, Spark-first: for every left row, the latest right row
-   * with `right.ts <= left.ts` in the same key group — without any join
-   * operator. Both sides union into one stream ordered by
-   * (key, ts, side) with the right side sorting FIRST at equal ts
-   * (<= semantics); a running `last(..., ignoreNulls)` carries the most
-   * recent right values onto each left row. ONE window shuffle total —
-   * at 100 TB this beats any join-shaped formulation, which would need
-   * a range join or an exploded equi-key.
+   * AS-OF join: for every left row, the latest right row with
+   * `right.ts <= left.ts` in the same key group, or nulls if none
+   * (LEFT-asof semantics, DuckDB's `ASOF LEFT JOIN`). Planned as the
+   * streaming sort-merge [[graft.plans.AsOfJoinExec]]: both sides
+   * clustered on the key and sorted by (key, ts), then one pass per
+   * partition with one carried row of state.
    *
-   * `left`/`right` must both have `keyCol` and `tsCol` (integral µs);
-   * `valueCols` are taken from `right` and carried onto left rows
-   * (null until the first right row — LEFT-asof semantics).
-   * Right rows must be unique per (key, ts) for determinism —
-   * pre-aggregate if needed.
+   * `left`/`right` must both have `keyCol` and `tsCol` (integral µs, or
+   * any [[EventTime.normalizeMicros]]-accepted type). The output is the
+   * left columns, then `asof_<tsCol>` and `asof_<c>` for each of
+   * `valueCols`, taken from `right`. A NULL key or ts on either side
+   * matches nothing. With `toleranceMicros`, a match more than that
+   * far from the left row is treated as absent (pandas `merge_asof`
+   * semantics). Right rows must be unique per (key, ts) for
+   * determinism — pre-aggregate if needed.
    */
   def asOfJoin(
       left: DataFrame, right: DataFrame,
-      keyCol: String, tsCol: String, valueCols: Seq[String]): DataFrame = {
-    val (sides, leftCols) = asOfSides(left, right, keyCol, tsCol, valueCols)
-    val w = Window
-      .partitionBy(col(keyCol))
-      .orderBy(col(tsCol).asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = valueCols.foldLeft(sides) { (df, c) =>
-      df.withColumn(s"asof_$c", last(when(col("__side") === 0, col(c)), ignoreNulls = true).over(w))
-    }
-    val asofTs = last(when(col("__side") === 0, col(tsCol)), ignoreNulls = true).over(w)
-    carried
-      .withColumn(s"asof_$tsCol", asofTs)
-      .filter(col("__side") === 1)
-      .select(
-        (Seq(col(keyCol), col(tsCol)) ++ leftCols.map(col) ++
-          (s"asof_$tsCol" +: valueCols.map(c => s"asof_$c")).map(col)): _*)
-  }
-
-  /** The one stream both window as-of joins run over: left rows
-    * (`__side` 1) and right rows (`__side` 0) unioned by name, each side
-    * null-padded with the other's columns. Returns it with the left
-    * columns other than key and ts.
-    *
-    * NULL right timestamps can never satisfy `right.ts <= left.ts`
-    * (SQL inequality semantics, same as the native operator and the
-    * ASOF oracle) — but nulls-first ordering would let the running
-    * `last(..., ignoreNulls)` carry a null-ts row's VALUES while
-    * skipping its null ts, emitting an inconsistent (null ts, value)
-    * pair. They are filtered out up front. NULL LEFT ts rows sort first
-    * in their key group, so nothing precedes them and they carry nulls. */
-  private def asOfSides(left: DataFrame, right: DataFrame, keyCol: String,
-      tsCol: String, valueCols: Seq[String]): (DataFrame, Seq[String]) = {
-    val leftN = EventTime.normalizeMicros(left, tsCol)
-    val rightClean = EventTime.normalizeMicros(right, tsCol).filter(col(tsCol).isNotNull)
-    val leftCols = left.columns.toSeq.filterNot(c => c == keyCol || c == tsCol)
-    val l = leftN
-      .withColumn("__side", lit(1))
-      .select(
-        (Seq(col(keyCol), col(tsCol), col("__side")) ++
-          leftCols.map(col) ++
-          valueCols.map(c => lit(null).cast(right.schema(c).dataType).as(c))): _*)
-    val r = rightClean
-      .withColumn("__side", lit(0))
-      .select(
-        (Seq(col(keyCol), col(tsCol), col("__side")) ++
-          leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-          valueCols.map(col)): _*)
-    (l.unionByName(r), leftCols)
-  }
+      keyCol: String, tsCol: String, valueCols: Seq[String],
+      toleranceMicros: Option[Long] = None): DataFrame =
+    asOfMerge(left, right, keyCol, tsCol, valueCols, toleranceMicros, nearest = false)
 
   /**
    * FORWARD as-of join: for every left row, the EARLIEST right row with
    * `right.ts >= left.ts` in the same key group (pandas
    * `merge_asof(direction='forward')`). Implemented as the exact mirror
    * of [[asOfJoin]] under time negation — run the backward join on −ts —
-   * so the one-window-shuffle plan shape, null handling and equal-ts
-   * INCLUSIVE boundary all carry over unchanged.
+   * so the plan shape, null handling, tolerance and equal-ts INCLUSIVE
+   * boundary all carry over unchanged.
    */
   def asOfJoinForward(
       left: DataFrame, right: DataFrame,
-      keyCol: String, tsCol: String, valueCols: Seq[String]): DataFrame = {
+      keyCol: String, tsCol: String, valueCols: Seq[String],
+      toleranceMicros: Option[Long] = None): DataFrame = {
     val nl = EventTime.normalizeMicros(left, tsCol).withColumn(tsCol, -col(tsCol))
     val nr = EventTime.normalizeMicros(right, tsCol).withColumn(tsCol, -col(tsCol))
-    asOfJoin(nl, nr, keyCol, tsCol, valueCols)
+    asOfJoin(nl, nr, keyCol, tsCol, valueCols, toleranceMicros)
       .withColumn(tsCol, -col(tsCol))
       .withColumn(s"asof_$tsCol", -col(s"asof_$tsCol"))
   }
@@ -279,67 +236,33 @@ object Events {
    * NEAREST as-of join: for every left row, the right row in the same
    * key group whose ts is CLOSEST (either direction); ties — equal
    * distance before and after — resolve to the earlier (backward) row,
-   * deterministically. Same output schema as [[asOfJoin]].
-   *
-   * Plan shape: both directional carries run over ONE union frame and
-   * one key-partition exchange — the ascending window computes the
-   * latest right ≤ ts, the descending window the earliest right ≥ ts
-   * (right rows sort before the left row at equal ts in BOTH passes:
-   * inclusive boundaries). Two sorts, one shuffle — cheaper than
-   * joining the backward and forward results (which would need a
-   * unique left row id and a third shuffle).
+   * deterministically. Same output schema and plan shape as
+   * [[asOfJoin]]: the merge's carried row is the backward candidate and
+   * the next right row of the key the forward one.
    */
   def asOfJoinNearest(
       left: DataFrame, right: DataFrame,
-      keyCol: String, tsCol: String, valueCols: Seq[String]): DataFrame = {
-    val (sides, leftCols) = asOfSides(left, right, keyCol, tsCol, valueCols)
-    val wB = Window.partitionBy(col(keyCol))
-      .orderBy(col(tsCol).asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wF = Window.partitionBy(col(keyCol))
-      .orderBy(col(tsCol).desc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withCarries = valueCols.foldLeft(sides) { (df, c) =>
-      df.withColumn(s"__b_$c", last(when(col("__side") === 0, col(c)), ignoreNulls = true).over(wB))
-        .withColumn(s"__f_$c", last(when(col("__side") === 0, col(c)), ignoreNulls = true).over(wF))
-    }
-      .withColumn("__b_ts", last(when(col("__side") === 0, col(tsCol)), ignoreNulls = true).over(wB))
-      .withColumn("__f_ts", last(when(col("__side") === 0, col(tsCol)), ignoreNulls = true).over(wF))
-    // choose backward when forward is absent, or both exist and the
-    // backward distance is <= the forward distance (tie → earlier)
-    val chooseB = col("__f_ts").isNull ||
-      (col("__b_ts").isNotNull &&
-        (col(tsCol) - col("__b_ts")) <= (col("__f_ts") - col(tsCol)))
-    withCarries
-      .filter(col("__side") === 1)
-      .select(
-        (Seq(col(keyCol), col(tsCol)) ++ leftCols.map(col) ++
-          (when(chooseB, col("__b_ts")).otherwise(col("__f_ts")).as(s"asof_$tsCol") +:
-            valueCols.map(c =>
-              when(chooseB, col(s"__b_$c")).otherwise(col(s"__f_$c")).as(s"asof_$c")))): _*)
-  }
+      keyCol: String, tsCol: String, valueCols: Seq[String]): DataFrame =
+    asOfMerge(left, right, keyCol, tsCol, valueCols, None, nearest = true)
 
-  /**
-   * AS-OF join via the custom physical operator
-   * ([[graft.plans.AsOfJoinExec]]): same semantics and output columns as
-   * [[asOfJoin]] (spec-checked equal), but planned as a streaming
-   * sort-merge with O(1) reducer state instead of a union + running-last
-   * window. Registers [[graft.plans.AsOfJoinStrategy]] in the session on
-   * first use.
-   */
-  def asOfJoinNative(
-      left: DataFrame, right: DataFrame,
-      keyCol: String, tsCol: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long] = None): DataFrame = {
+  /** The as-of joins' one plan: an [[graft.plans.AsOfJoinNode]] over the
+    * µs-normalized sides, with [[graft.plans.AsOfJoinStrategy]]
+    * registered in the session on first use. */
+  private def asOfMerge(left: DataFrame, right: DataFrame, keyCol: String,
+      tsCol: String, valueCols: Seq[String], toleranceMicros: Option[Long],
+      nearest: Boolean): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     val spark = left.sparkSession
     ColumnBridge.addStrategy(spark, graft.plans.AsOfJoinStrategy)
-    val node = graft.plans.AsOfJoinNode(
-      ColumnBridge.analyzed(EventTime.normalizeMicros(left, tsCol)),
-      ColumnBridge.analyzed(EventTime.normalizeMicros(right, tsCol)),
-      keyCol, tsCol, valueCols, outPrefix = "asof_",
-      toleranceMicros = toleranceMicros)
-    ColumnBridge.ofRows(spark, node)
+    // the merge reads ts as a long; narrower integral µs are widened
+    def side(df: DataFrame) = {
+      val n = EventTime.normalizeMicros(df, tsCol)
+      ColumnBridge.analyzed(
+        if (n.schema(tsCol).dataType == LongType) n
+        else n.withColumn(tsCol, col(tsCol).cast(LongType)))
+    }
+    ColumnBridge.ofRows(spark, graft.plans.AsOfJoinNode(side(left), side(right),
+      keyCol, tsCol, valueCols, outPrefix = "asof_", toleranceMicros, nearest))
   }
 
   /**
@@ -365,21 +288,6 @@ object Events {
           (col("valid_to_us").isNull || col(tsCol) < col("valid_to_us")),
         "left_outer")
       .drop("__dk")
-  }
-
-  /** FORWARD as-of through the native operator — [[asOfJoinForward]]
-    * semantics on the [[asOfJoinNative]] physical plan, by the same
-    * time-negation mirror (the streaming sort-merge and its O(1)
-    * reducer state are direction-agnostic under −ts). */
-  def asOfJoinNativeForward(
-      left: DataFrame, right: DataFrame,
-      keyCol: String, tsCol: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long] = None): DataFrame = {
-    val nl = EventTime.normalizeMicros(left, tsCol).withColumn(tsCol, -col(tsCol))
-    val nr = EventTime.normalizeMicros(right, tsCol).withColumn(tsCol, -col(tsCol))
-    asOfJoinNative(nl, nr, keyCol, tsCol, valueCols, toleranceMicros)
-      .withColumn(tsCol, -col(tsCol))
-      .withColumn(s"asof_$tsCol", -col(s"asof_$tsCol"))
   }
 
   /**

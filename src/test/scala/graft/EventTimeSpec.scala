@@ -83,10 +83,9 @@ class EventTimeSpec extends AnyFunSuite {
       .toDF("k", "tsu", "lab")
     val asTs = (df: org.apache.spark.sql.DataFrame) =>
       df.withColumn("tsu", timestamp_micros(col("tsu")))
-    val expected = rows(Events.asOfJoin(looksL, clicksL, "k", "tsu", Seq("tag")))
+    val expected = rows(DeclarativeAsOf.asOfJoin(looksL, clicksL, "k", "tsu", Seq("tag")))
+    assert(rows(Events.asOfJoin(looksL, clicksL, "k", "tsu", Seq("tag"))) == expected)
     assert(rows(Events.asOfJoin(asTs(looksL), asTs(clicksL), "k", "tsu", Seq("tag")))
-      == expected)
-    assert(rows(Events.asOfJoinNative(asTs(looksL), asTs(clicksL), "k", "tsu", Seq("tag")))
       == expected)
   }
 

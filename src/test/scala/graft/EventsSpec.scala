@@ -74,19 +74,24 @@ class EventsSpec extends AnyFunSuite {
     assert(n("c9") == (300L, 9.0))
   }
 
+  // Titles naming "asOfJoinNative" keep the name of the merge operator's
+  // former entry point: they now run Events.asOfJoin / asOfJoinForward,
+  // which plan that operator (AsOfJoinExec), and "window form" is the
+  // DeclarativeAsOf reference.
   test("asOfJoinNative: custom AsOfJoinExec == window form, and is planned") {
     val clicks = Seq((1L, 100L, "c1"), (1L, 200L, "c2"), (1L, 50L, "c0"), (2L, 100L, "c9"))
       .toDF("user_id", "tsu", "tag")
     val purchases = Seq((1L, 100L, 10.0), (1L, 150L, 20.0), (2L, 300L, 9.0))
       .toDF("user_id", "tsu", "pvalue")
-    val native = Events.asOfJoinNative(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
-    assert(native.queryExecution.executedPlan.toString.contains("AsOfJoin"),
-      "custom operator not in the physical plan")
+    val native = Events.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
+    val plan = native.queryExecution.executedPlan.toString
+    assert(plan.contains("AsOfJoin"), "custom operator not in the physical plan")
+    assert(!plan.contains("Window"), plan)
     val key = (r: org.apache.spark.sql.Row) => (
       r.getLong(0), r.getLong(1), r.getString(2),
       if (r.isNullAt(3)) -1L else r.getLong(3),
       if (r.isNullAt(4)) -1.0 else r.getDouble(4))
-    val window = Events.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
+    val window = DeclarativeAsOf.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
     assert(native.collect().map(key).toSet == window.collect().map(key).toSet)
     assert(native.columns.toSeq == window.columns.toSeq)
   }
@@ -105,10 +110,10 @@ class EventsSpec extends AnyFunSuite {
       r.getLong(0), r.getLong(1), r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3),
       if (r.isNullAt(4)) -1.0 else r.getDouble(4))
-    val want = Events.asOfJoin(left, right, "user_id", "tsu", Seq("pvalue"))
+    val want = DeclarativeAsOf.asOfJoin(left, right, "user_id", "tsu", Seq("pvalue"))
       .collect().map(key).sortBy(x => (x._1, x._2, x._3)).toSeq
     for (parts <- Seq(1, 3, 8)) {
-      val got = Events.asOfJoinNative(
+      val got = Events.asOfJoin(
         left.repartition(parts), right.repartition(parts + 1), "user_id", "tsu", Seq("pvalue"))
         .collect().map(key).sortBy(x => (x._1, x._2, x._3)).toSeq
       assert(got == want, s"mismatch at parts=$parts")
@@ -128,10 +133,10 @@ class EventsSpec extends AnyFunSuite {
       r.getLong(0), r.getLong(1), r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3),
       if (r.isNullAt(4)) -1.0 else r.getDouble(4))
-    val want = Events.asOfJoinForward(left, right, "user_id", "tsu", Seq("pvalue"))
+    val want = DeclarativeAsOf.asOfJoinForward(left, right, "user_id", "tsu", Seq("pvalue"))
       .collect().map(key).sortBy(x => (x._1, x._2, x._3)).toSeq
     for (parts <- Seq(1, 5)) {
-      val got = Events.asOfJoinNativeForward(
+      val got = Events.asOfJoinForward(
         left.repartition(parts), right.repartition(parts + 1), "user_id", "tsu", Seq("pvalue"))
         .collect().map(key).sortBy(x => (x._1, x._2, x._3)).toSeq
       assert(got == want, s"mismatch at parts=$parts")
@@ -171,7 +176,7 @@ class EventsSpec extends AnyFunSuite {
   test("asOfJoinNative: tolerance voids matches older than the bound") {
     val clicks = Seq((1L, 100L, 5L), (1L, 500L, 6L)).toDF("user_id", "tsu", "event_id")
     val purchases = Seq((1L, 90L, 1.5)).toDF("user_id", "tsu", "pvalue")
-    val r = Events.asOfJoinNative(
+    val r = Events.asOfJoin(
       clicks, purchases, "user_id", "tsu", Seq("pvalue"), toleranceMicros = Some(50L))
       .collect().map(x => x.getLong(2) -> x.isNullAt(3)).toMap
     assert(!r(5L)) // 100-90=10 <= 50: match kept
@@ -190,9 +195,9 @@ class EventsSpec extends AnyFunSuite {
       r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3),
       if (r.isNullAt(4)) -1.0 else r.getDouble(4))
-    val w = Events.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
+    val w = DeclarativeAsOf.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
       .collect().map(key).toSet
-    val n = Events.asOfJoinNative(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
+    val n = Events.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
       .collect().map(key).toSet
     val expect = Set((5L, 90L, 1.5), (6L, -1L, -1.0))
     assert(w == expect, s"window form: $w")
@@ -202,7 +207,7 @@ class EventsSpec extends AnyFunSuite {
   test("asOfJoinNative: empty right side carries nulls for every left row") {
     val clicks = Seq((1L, 100L, 5L), (2L, 200L, 6L)).toDF("user_id", "tsu", "event_id")
     val purchases = Seq.empty[(Long, Long, Double)].toDF("user_id", "tsu", "pvalue")
-    val r = Events.asOfJoinNative(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
+    val r = Events.asOfJoin(clicks, purchases, "user_id", "tsu", Seq("pvalue"))
       .collect()
     assert(r.length == 2)
     assert(r.forall(row => row.isNullAt(3) && row.isNullAt(4)))
@@ -227,9 +232,9 @@ class EventsSpec extends AnyFunSuite {
       r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1), r.getLong(2),
       if (r.isNullAt(3)) -1L else r.getLong(3),
       if (r.isNullAt(4)) -1.0 else r.getDouble(4))
-    val window = Events.asOfJoin(left, right, "user_id", "tsu", Seq("pvalue"))
+    val window = DeclarativeAsOf.asOfJoin(left, right, "user_id", "tsu", Seq("pvalue"))
       .collect().map(key)
-    val native = Events.asOfJoinNative(
+    val native = Events.asOfJoin(
       left.repartition(7), right.repartition(3), "user_id", "tsu", Seq("pvalue"))
       .collect().map(key)
     assert(native.sorted.toSeq == window.sorted.toSeq)
@@ -238,10 +243,66 @@ class EventsSpec extends AnyFunSuite {
     val expectTol = window.map { case (u, t, id, at, av) =>
       if (at >= 0 && t - at <= T) (u, t, id, at, av) else (u, t, id, -1L, -1.0)
     }
-    val nativeTol = Events.asOfJoinNative(
+    val nativeTol = Events.asOfJoin(
       left, right, "user_id", "tsu", Seq("pvalue"), toleranceMicros = Some(T))
       .collect().map(key)
     assert(nativeTol.sorted.toSeq == expectTol.sorted.toSeq)
+  }
+
+  test("asOfJoinNearest: random data with ties and NULLs equals window form") {
+    val rnd = new scala.util.Random(2027)
+    // ~3% null keys and ts on each side; a 300-wide ts range over 15
+    // keys makes equal before/after distances (the backward tie) common
+    def maybe(v: Long): Option[Long] = if (rnd.nextInt(33) == 0) None else Some(v)
+    val left = (1 to 3000).map(i =>
+      (maybe(rnd.nextInt(15).toLong), maybe(rnd.nextInt(300).toLong), i.toLong))
+      .toDF("user_id", "tsu", "event_id")
+    // unique (key, ts) among the right rows that can match
+    val right = rnd.shuffle((0 until 15).flatMap(u =>
+      (1 to 40).map(_ => (u.toLong, rnd.nextInt(300).toLong))).distinct)
+      .map { case (u, t) => (maybe(u), maybe(t), u * 1000.0 + t) }
+      .toDF("user_id", "tsu", "pvalue")
+    val key = (r: org.apache.spark.sql.Row) => (
+      r.getLong(2), if (r.isNullAt(3)) -1L else r.getLong(3),
+      if (r.isNullAt(4)) -1.0 else r.getDouble(4))
+    val want = DeclarativeAsOf.asOfJoinNearest(left, right, "user_id", "tsu", Seq("pvalue"))
+      .collect().map(key).sorted.toSeq
+    assert(want.count(_._2 >= 0) > 2500, "too few matches to exercise the merge")
+    for (parts <- Seq(1, 5)) {
+      val got = Events.asOfJoinNearest(
+        left.repartition(parts), right.repartition(parts + 1), "user_id", "tsu", Seq("pvalue"))
+      assert(!got.queryExecution.executedPlan.toString.contains("Window"))
+      assert(got.collect().map(key).sorted.toSeq == want, s"mismatch at parts=$parts")
+    }
+  }
+
+  test("asOfJoin: a NULL key matches nothing, in every direction and under a tolerance") {
+    // event 6's NULL key must not pick up the NULL-key purchases (DuckDB's
+    // ASOF LEFT JOIN gives it NULLs); event 7's NULL ts matches nothing
+    val clicks = Seq[(Option[Long], Option[Long], Long)](
+      (Some(1L), Some(100L), 5L), (None, Some(100L), 6L), (Some(1L), None, 7L))
+      .toDF("user_id", "tsu", "event_id")
+    val purchases = Seq[(Option[Long], Long, Double)](
+      (Some(1L), 90L, 1.5), (Some(1L), 130L, 2.5), (None, 100L, 200.0), (None, 95L, 300.0))
+      .toDF("user_id", "tsu", "pvalue")
+    def m(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => (x.getLong(2), (
+        if (x.isNullAt(3)) -1L else x.getLong(3),
+        if (x.isNullAt(4)) -1.0 else x.getDouble(4)))).toMap
+    def want(match5: (Long, Double)) = Map(5L -> match5, 6L -> (-1L, -1.0), 7L -> (-1L, -1.0))
+    type AsOf = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+      String, String, Seq[String]) => org.apache.spark.sql.DataFrame
+    def run(op: AsOf) = m(op(clicks, purchases, "user_id", "tsu", Seq("pvalue")))
+    val tol: Option[Long] = Some(20L)
+    assert(run(Events.asOfJoin(_, _, _, _, _)) == want((90L, 1.5)))
+    assert(run(Events.asOfJoin(_, _, _, _, _, tol)) == want((90L, 1.5)))
+    assert(run(Events.asOfJoinForward(_, _, _, _, _)) == want((130L, 2.5)))
+    assert(run(Events.asOfJoinForward(_, _, _, _, _, tol)) == want((-1L, -1.0)))
+    assert(run(Events.asOfJoinNearest) == want((90L, 1.5)))
+    // the window reference filters the same rows
+    assert(run(DeclarativeAsOf.asOfJoin) == want((90L, 1.5)))
+    assert(run(DeclarativeAsOf.asOfJoinForward) == want((130L, 2.5)))
+    assert(run(DeclarativeAsOf.asOfJoinNearest) == want((90L, 1.5)))
   }
 
   test("funnel: greedy-earliest ordered matching; non-converters drop out") {

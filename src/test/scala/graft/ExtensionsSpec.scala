@@ -81,7 +81,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val r = spark.sql("SELECT * FROM VALUES (1L, 90L, 2.5D) t(k, ts, v)")
     val df = ColumnBridge.ofRows(spark, graft.plans.AsOfJoinNode(
       ColumnBridge.analyzed(l), ColumnBridge.analyzed(r),
-      "k", "ts", Seq("v"), outPrefix = "asof_"))
+      "k", "ts", Seq("v"), outPrefix = "asof_", toleranceMicros = None, nearest = false))
     assert(df.queryExecution.executedPlan.toString.contains("AsOfJoin"),
       df.queryExecution.executedPlan.toString)
     assert(df.collect().head.getDouble(4) == 2.5)

@@ -99,16 +99,18 @@ class PlanAuditSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.maxMetadataStringLength", prev)
   }
 
-  test("q_asof_native: custom AsOfJoinExec planned with one exchange per side") {
-    val plan = planOf("q_asof_native")
-    assert(plan.contains("AsOfJoin"), plan)
-    // EnsureRequirements inserts the two (user_id) co-partitioning
-    // exchanges; the purchase pre-aggregation keys on (user_id, tsu) so
-    // its exchange cannot double as the key-only clustering — 3 total,
-    // the same count the window-form as-of pays
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 3, plan)
-    // both sides sorted (key, ts) as the merge requires
-    assert("Sort \\[user_id".r.findAllIn(plan).size == 2, plan)
+  test("q_asof*: custom AsOfJoinExec planned with one exchange per side, no Window") {
+    for (q <- Seq("q_asof", "q_asof_forward", "q_asof_nearest", "q_asof_tolerance")) {
+      val plan = planOf(q)
+      assert(plan.contains("AsOfJoin") && !plan.contains("Window"), s"$q: $plan")
+      // EnsureRequirements inserts the two (user_id) co-partitioning
+      // exchanges; the purchase pre-aggregation keys on (user_id, tsu) so
+      // its exchange cannot double as the key-only clustering — 3 total,
+      // where the union + window form paid 2
+      assert("Exchange hashpartitioning".r.findAllIn(plan).size == 3, s"$q: $plan")
+      // both sides sorted (key, ts) as the merge requires
+      assert("Sort \\[user_id".r.findAllIn(plan).size == 2, s"$q: $plan")
+    }
   }
 
   test("q_centroids: VectorMean aggregates with ONE exchange and partial combine") {
